@@ -162,17 +162,17 @@ class Indices(spark: SparkSession, root: String, numShards: Int = 8) {
   }
 
   // per-name serving state, built once per Indices instance: a fresh
-  // Searcher/MultiSearcher per CALL would re-read segment catalogs +
+  // Searcher per CALL would re-read segment catalogs +
   // per-segment stats on every query (round-7 review). A new index
   // appearing under the root is picked up by a new Indices instance
   // (same contract as MultiSearcher's segment snapshot).
   private val searchers =
-    new java.util.concurrent.ConcurrentHashMap[String, Either[Searcher, MultiSearcher]]()
-  private def searcherFor(name: String): Either[Searcher, MultiSearcher] =
+    new java.util.concurrent.ConcurrentHashMap[String, Searcher]()
+  private def searcherFor(name: String): Searcher =
     searchers.computeIfAbsent(name, { n =>
       val dir = new Path(root, n).toString
-      if (isSegmented(n)) Right(new MultiSearcher(spark, dir))
-      else Left(new Searcher(spark, dir, numShards))
+      if (isSegmented(n)) new MultiSearcher(spark, dir)
+      else new Searcher(spark, dir, numShards)
     })
 
   /** Is `name` a streaming (seg-*) index? */
@@ -185,11 +185,9 @@ class Indices(spark: SparkSession, root: String, numShards: Int = 8) {
 
   /** Per-index top-k under the index's OWN stats. */
   private def topK(name: String, query: String, k: Int,
-      conjunctive: Boolean): Array[Scored] = searcherFor(name) match {
-    case Right(ms) =>
-      if (conjunctive) ms.searchConjunctive(query, k) else ms.search(query, k)
-    case Left(s) =>
-      if (conjunctive) s.searchConjunctive(query, k) else s.search(query, k)
+      conjunctive: Boolean): Array[Scored] = {
+    val s = searcherFor(name)
+    if (conjunctive) s.searchConjunctive(query, k) else s.search(query, k)
   }
 
   /** Multi-index BM25 top-k (`GET name1,idx-*,alias/_search` shape):
@@ -239,11 +237,7 @@ class Indices(spark: SparkSession, root: String, numShards: Int = 8) {
   def counts(expr: String, query: String): DataFrame = {
     import spark.implicits._
     parallel(resolve(expr)) { n =>
-      val c = searcherFor(n) match {
-        case Right(ms) => ms.matchCount(query)
-        case Left(s) => s.matchCount(query)
-      }
-      (n, c)
+      (n, searcherFor(n).matchCount(query))
     }.toDF("index", "n_docs")
   }
 
@@ -268,10 +262,7 @@ class Indices(spark: SparkSession, root: String, numShards: Int = 8) {
     // the round-8 search/counts fan-out; the merged plan still executes
     // as ONE job)
     val frames = parallel(resolve(expr)) { n =>
-      searcherFor(n) match {
-        case Right(ms) => ms.facetCounts(query, field)
-        case Left(s) => s.facetCounts(query, field)
-      }
+      searcherFor(n).facetCounts(query, field)
     }
     require(frames.nonEmpty, s"expression '$expr' matched no index under $root")
     val merged = frames.reduce(_ unionByName _)
@@ -293,10 +284,7 @@ class Indices(spark: SparkSession, root: String, numShards: Int = 8) {
   def fieldStats(expr: String, query: String, field: String): DataFrame = {
     // concurrent per-index plan construction (see facetCounts)
     val frames = parallel(resolve(expr)) { n =>
-      searcherFor(n) match {
-        case Right(ms) => ms.fieldStats(query, field)
-        case Left(s) => s.fieldStats(query, field)
-      }
+      searcherFor(n).fieldStats(query, field)
     }
     require(frames.nonEmpty, s"expression '$expr' matched no index under $root")
     frames.reduce(_ unionByName _)
@@ -318,10 +306,7 @@ class Indices(spark: SparkSession, root: String, numShards: Int = 8) {
   private def matchedUnion(expr: String, query: String, field: String): DataFrame = {
     // concurrent per-index plan construction (see facetCounts)
     val frames = parallel(resolve(expr)) { n =>
-      searcherFor(n) match {
-        case Right(ms) => ms.matchedField(query, field)
-        case Left(s) => s.matchedField(query, field)
-      }
+      searcherFor(n).matchedField(query, field)
     }
     require(frames.nonEmpty, s"expression '$expr' matched no index under $root")
     frames.reduce(_ unionByName _)

@@ -1,2253 +1,21 @@
 package graft.query
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.SparkSession
 
-import graft.analysis.Analyzer
-import graft.index.{Codec, FieldTerms, SegmentCatalog, Tombstones}
-import graft.model.{IndexStats, PostingBlock, Scored, TermStats}
+import graft.index.SegmentCatalog
 
-/** Cross-segment BM25 search with GLOBAL corpus statistics — the query
-  * side of streaming ingest (StreamingIngest appends each micro-batch as
-  * an independent `seg-<id>` index; reference behavior is one shared
-  * index with shared stats, NeoFinderToES.java:184-192 append runs, so
-  * queries must see the union as ONE corpus). Serves the FULL search
-  * surface a compacted single-segment `Searcher` serves — OR / AND /
-  * phrase / bool (filter, must_not, terms, range, numeric-trie range,
-  * should + minimum_should_match) / prefix / wildcard / fuzzy / facets /
-  * histogram & stats aggs / field sort / hit count / resolve +
-  * highlight / pagination — so pre-compaction streams are never
-  * second-class (round-3 review "What's missing #4").
-  *
-  * Statistics merge associatively: N = Σ nᵢ, Σdl = Σ (nᵢ·avgdlᵢ)
-  * (dl sums are integer-valued and < 2^52, so the per-segment product
-  * rounds back to the exact integer sum), df(term) = Σ dfᵢ(term).
-  * Per-segment docId ranges are disjoint by construction (appendSegment
-  * offsets each batch past the current max docId), so per-(segment,
-  * bucket) WAND results merge with a plain top-k.
-  *
-  * LAST-WRITE-WINS across segments: docs superseded by a later
-  * re-ingest of their (conv_id, turn_idx) key — or explicitly deleted —
-  * are listed in the index's tombstone store ([[Tombstones]]); every
-  * query path excludes tombstoned docIds, and NO query-path structure
-  * scales with tombstone volume on the driver (round-5): WAND excludes
-  * via per-(segment, bucket) delta-encoded docId blocks that ride the
-  * same pruned scan as the posting blocks (an ordinary membership
-  * cursor per group), the doc-store paths anti-join the distinct
-  * tombstone frame, and the per-term df corrections live in a persisted
-  * DISTRIBUTED frame filtered to each query's terms (driver-cached only
-  * when bounded). Global statistics are ADJUSTED EXACTLY: the
-  * superseded docs still sit in their segments' doc stores, so one
-  * bounded job (docId-range-pruned scan of the affected segments;
-  * re-tokenize cost ∝ tombstone volume) re-derives their N / Σdl /
-  * per-field / per-term contributions and subtracts them — scores are
-  * therefore bit-identical to an index that never contained the old
-  * versions, unlike Lucene's deleted-doc model where IDF counts
-  * deletes until merge. Segment membership resolves through the
-  * [[SegmentCatalog]] pointer, so a mid-compaction crash never yields a
-  * doubled or empty corpus.
-  *
-  * Stored per-block maxScore / dictionary maxScore encode the SEGMENT's
-  * build-time stats and are not valid bounds under merged stats; block
-  * bounds are re-derived from the stored stats-independent maxTf as
-  * score(maxTf, dl = 0) (exact upper bound — BM25 is increasing in tf,
-  * decreasing in dl). Exact per-posting rescoring from the stored
-  * (tf, dl) streams with the global stats makes results rank-identical
-  * to an exhaustive oracle over the LWW-deduped union (StreamingSpec).
+/** The [[Searcher]] of a streaming dir: the live `seg-*` sub-indexes
+  * (resolved through the [[SegmentCatalog]] pointer, so a mid-compaction
+  * crash never yields a doubled or empty corpus) and the dir's
+  * tombstones, queried as one corpus under global LWW statistics.
   */
-/** Driver-resolved execution state of one batched query (serializable —
-  * rides the task closure of [[MultiSearcher.searchManyBool]]'s single
-  * job): all term lists are restricted to GLOBALLY-found terms; the
-  * per-group emptiness rules re-check bucket-local presence.
-  */
-private[query] object MultiSearcherOps {
-  /** Sentinel termId of tombstone-exclusion blocks in a unioned block
-    * scan (real termIds are non-negative).
-    */
-  val TombTermId = -1L
+class MultiSearcher(spark: SparkSession, indexDir: String)
+    extends Searcher(spark, indexDir, 0, MultiSearcher.liveSegments(spark, indexDir))
 
-  /** Split a (seg, bucket) group's rows into (tombstone blocks, posting
-    * rows). Lives in a companion-style object so task closures never
-    * capture a MultiSearcher instance.
-    */
-  def splitTomb(rows: Array[(Int, Int, PostingBlock)])
-      : (Array[PostingBlock], Array[(Int, Int, PostingBlock)]) = {
-    val (tombRows, postRows) = rows.partition(_._3.termId == TombTermId)
-    (tombRows.map(_._3), postRows)
+private object MultiSearcher {
+  def liveSegments(spark: SparkSession, indexDir: String): Seq[String] = {
+    val segs = SegmentCatalog.liveSegments(spark, indexDir)
+    require(segs.nonEmpty, s"no live seg-* sub-indexes under $indexDir")
+    segs
   }
-
-  /** A FRESH membership-only exclude cursor over the group's tombstone
-    * blocks (cursors are mutable — one per consumer, the engine-wide
-    * rule): the same nextGEQ block machinery as any posting list.
-    */
-  def tombCursorOf(blocks: Array[PostingBlock]): Seq[Wand.DocCursor] =
-    if (blocks.isEmpty) Nil
-    else Seq(new Wand.TermIterator("", blocks, 0.0, 1L, 1L, 1.0))
-
-  /** One (segment, bucket) group's WAND dispatch — THE shared execution
-    * body of every cross-segment query path (distributed flatMapGroups
-    * closures AND the warm in-process path), so the two are identical
-    * by construction. `byTerm` maps each present query term to its
-    * blocks + merged LWW df; every role gets a FRESH iterator (cursors
-    * are mutable); `%field:` terms score under their field's merged
-    * stats; bounds derive from the stats-independent maxTf.
-    */
-  def runGroup(
-      byTerm: Map[String, (Array[PostingBlock], Long)],
-      tombBlks: Array[PostingBlock],
-      w: MsSpecWork,
-      k: Int,
-      nG: Long,
-      avgdlG: Double,
-      fsMap: Map[String, (Long, Double)],
-      after: Scored,
-      /** true when the blocks' stored maxScore was RE-DERIVED under the
-        * merged stats (the warm-local path rescores at collect time) —
-        * pruning then uses the tight exact bounds a compacted index
-        * enjoys instead of the loose maxTf/dl=0 fallback.
-        */
-      exactBounds: Boolean = false
-  ): Iterator[Scored] = {
-    def iterOfG(t: String, scored: Boolean, g: Int): Option[Wand.TermIterator] =
-      byTerm.get(t).map { case (bs, df) =>
-        val (nn, ad) = FieldTerms.textFieldOf(t).flatMap(fsMap.get).getOrElse((nG, avgdlG))
-        val boost = w.boosts.getOrElse(t, 1.0)
-        val ub =
-          if (!scored) 0.0
-          else if (exactBounds) boost * bs.iterator.map(_.maxScore).max
-          else boost * bs.iterator.map(b => Bm25.score(b.maxTf, df, 0, nn, ad)).max
-        new Wand.TermIterator(t, bs, ub, df, nn, ad,
-          staleBlockMax = !exactBounds, boost = boost, groupOrdinal = g)
-      }
-    def iterOf(t: String, scored: Boolean): Option[Wand.TermIterator] =
-      iterOfG(t, scored, Int.MinValue)
-    // shared-term dis_max: one FRESH iterator per (group, term)
-    val iters =
-      if (w.bestFields != null && w.bestFields.groupsOf != null)
-        w.scored.flatMap(t => w.bestFields.groupsOf.getOrElse(t, Seq(-1))
-          .flatMap(g => iterOfG(t, scored = true, g)))
-      else w.scored.flatMap(t => iterOf(t, scored = true))
-    val shoulds = w.shoulds.flatMap(t => iterOf(t, scored = true))
-    // match_phrase_prefix last slot: union of the expansions present in
-    // this group (score 0 — membership only); none here ⇒ no hits
-    val prefixMembers: Seq[Wand.TermIterator] =
-      if (w.prefixExpansions == null) null
-      else w.prefixExpansions.flatMap(t => iterOf(t, scored = false))
-    val clauseCursors: Seq[Option[Wand.DocCursor]] = w.clauses.map { clause =>
-      val members = clause.flatMap(t => iterOf(t, scored = false))
-      if (members.isEmpty) None
-      else if (members.size == 1) Some(members.head)
-      else Some(new Wand.UnionCursor(members))
-    }
-    val filters = clauseCursors.flatten
-    val excludes: Seq[Wand.DocCursor] =
-      w.excludes.flatMap(t => iterOf(t, scored = false)) ++ tombCursorOf(tombBlks)
-    // AND/phrase: every scored term must be present; filter context: a
-    // group where a clause has NO member value has no matching docs; a
-    // required-group term present globally but absent here ⇒ no hits
-    if ((w.scored.nonEmpty && iters.isEmpty) ||
-      (iters.isEmpty && shoulds.isEmpty && prefixMembers == null) ||
-      ((w.conjunctive || w.slots != null) && iters.size < w.scored.size) ||
-      shoulds.size < w.minShould ||
-      clauseCursors.exists(_.isEmpty) ||
-      (prefixMembers != null && prefixMembers.isEmpty)) Iterator.empty
-    else {
-      val phraseLists: Seq[Wand.PosCursor] =
-        if (prefixMembers == null) iters
-        else iters :+ new Wand.UnionPosIterator(Searcher.PrefixSlot, prefixMembers.toArray)
-      val top =
-        if (w.slots != null)
-          Wand.topKPhrase(phraseLists, w.slots, k, filters, excludes, shoulds, w.minShould,
-            after, w.slop, w.spanFirstEnd)
-        else if (w.conjunctive)
-          Wand.topKConjunctive(iters, k, filters, excludes, shoulds, w.minShould, after)
-        else Wand.topK(iters, k, filters, excludes, shoulds, w.minShould, after,
-          w.bestFields)
-      top.iterator
-    }
-  }
-}
-
-private[query] final case class MsSpecWork(
-    idx: Int,
-    scored: Seq[String],
-    shoulds: Seq[String],
-    clauses: Seq[Seq[String]],
-    excludes: Seq[String],
-    conjunctive: Boolean,
-    slots: Seq[String],
-    minShould: Int,
-    slop: Int,
-    /** Per-term score multipliers (multi_match field boosts, keyed by
-      * namespaced term) — per SPEC, so heterogeneous batches mix
-      * boosted and plain queries.
-      */
-    boosts: Map[String, Double] = Map.empty,
-    /** non-null = best_fields combination ([[Wand.BestFields]]) — ES's
-      * default multi_match mode; null = most_fields (one sum).
-      */
-    bestFields: Wand.BestFields = null,
-    /** non-null = `match_phrase_prefix`: the expanded terms of the
-      * phrase's LAST slot (`slots` ends with [[Searcher.PrefixSlot]]) —
-      * same semantics as the single-index searcher.
-      */
-    prefixExpansions: Seq[String] = null,
-    /** ≥ 0 = `span_first`: the phrase must occur with span end ≤ this
-      * bound ([[Wand.topKPhrase]]). −1 = off.
-      */
-    spanFirstEnd: Int = -1)
-
-class MultiSearcher(spark: SparkSession, indexDir: String) {
-  import spark.implicits._
-
-  private val fs = new Path(indexDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** LIVE seg-* sub-index directories (pointer-resolved, sorted). */
-  val segments: Seq[String] = SegmentCatalog.liveSegments(fs, indexDir)
-  require(segments.nonEmpty, s"no live seg-* sub-indexes under $indexDir")
-
-  /** Every live segment stores exists markers (format ≥ 2)? A mixed-
-    * generation index fails `exists`/`missing` loudly — one legacy
-    * segment would silently invert results for its docs (round-6
-    * review).
-    */
-  private lazy val allSegsHaveExistsMarkers: Boolean =
-    segments.forall(s =>
-      graft.index.IndexFormat.version(fs, s) >= graft.index.IndexFormat.Version)
-  private def guardExists(exists: Seq[String], missing: Seq[String]): Unit =
-    graft.index.IndexFormat.requireExistsMarkers(
-      allSegsHaveExistsMarkers, indexDir, exists, missing)
-
-  private val segStats: Seq[IndexStats] =
-    segments.map(s => spark.read.parquet(s"$s/stats").as[IndexStats].head())
-
-  // ONE DataFrame per segment store, shared by every query path: a
-  // `warm()`ed searcher persists these, and Spark's cache manager then
-  // serves every pruned scan from the in-memory relation (plan-level
-  // cache matching on the shared analyzed plan)
-  private val segDicts: Seq[DataFrame] =
-    segments.map(s => spark.read.parquet(s"$s/dict"))
-  private val segBlocks: Seq[DataFrame] =
-    // bind the CANONICAL PostingBlock columns at the read (name-based
-    // select): segments built by different writer revisions may carry
-    // extra build-internal columns (e.g. the round-9 `nbytes` partials
-    // feed), and cross-segment unionByName requires a stable schema
-    segments.map(s => spark.read.parquet(s"$s/blocks")
-      .select("termId", "shard", "bucket", "blockId", "firstDocId", "lastDocId",
-        "count", "docs", "tfs", "dls", "poss", "maxTf", "maxScore"))
-  private val segDocs: Seq[DataFrame] =
-    segments.map(s => spark.read.parquet(s"$s/docs"))
-
-  // driver-local in-process serving state (populated by warm() when the
-  // index fits the byte/term budgets — mirrors Searcher.localIdx, so a
-  // PRE-COMPACTION stream serves at the same ~1-2 ms p50 instead of the
-  // per-query Spark job floor; round-4 review "What's missing #6"):
-  // (segIdx, bucket) → (termId → blocks, that group's tombstone blocks)
-  @volatile private var localSegs
-      : Map[(Int, Int), (Map[Long, Array[PostingBlock]], Array[PostingBlock])] = _
-  // term → per-segment dictionary rows (driver lookup, zero jobs)
-  @volatile private var localDict: Map[String, Seq[(Int, TermStats)]] = _
-
-  /** Same conservative encoded-bytes → heap expansion factor as the
-    * single-index searcher.
-    */
-  private val LocalHeapExpansion = 4L
-
-  /** Pin every segment's dictionary and blocks in executor memory (the
-    * warm serving state for a streaming dir that is queried repeatedly
-    * between compactions — spills to disk if larger than memory), and —
-    * when the whole index fits `maxLocalBlockBytes` (estimated heap) —
-    * additionally collect blocks + tombstone blocks + dictionaries to
-    * the driver so queries run fully in-process with ZERO Spark jobs.
-    * Results are identical on every path (runGroup is shared verbatim;
-    * test-pinned).
-    */
-  def warm(maxDriverDictTerms: Long = 5_000_000L,
-      maxLocalBlockBytes: Long = 1L << 30): this.type = {
-    (segDicts ++ segBlocks).foreach { df =>
-      if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df.count()
-    }
-    if (maxLocalBlockBytes > 0) {
-      val bytes = segBlocks.map(_.agg(coalesce(sum(
-        (length(col("docs")) + length(col("tfs")) + length(col("dls"))
-          + length(col("poss")) + lit(64)) * lit(LocalHeapExpansion)), lit(0L)))
-        .head().getLong(0)).sum
-      if (bytes <= maxLocalBlockBytes) {
-        val postByGroup: Map[(Int, Int), Map[Long, Array[PostingBlock]]] =
-          segBlocks.zipWithIndex.flatMap { case (b, i) =>
-            b.as[PostingBlock].collect().map(pb => (i, pb))
-          }.groupBy { case (i, pb) => (i, pb.bucket) }
-            .view.mapValues(xs => xs.map(_._2).toArray.groupBy(_.termId)).toMap
-        val tombByGroup: Map[(Int, Int), Array[PostingBlock]] =
-          tombBlocks.map(_.collect().groupBy(r => (r._1, r._2))
-            .view.mapValues(_.map(_._3)).toMap).getOrElse(Map.empty)
-        localSegs = (postByGroup.keySet ++ tombByGroup.keySet).map { gk =>
-          gk -> (postByGroup.getOrElse(gk, Map.empty[Long, Array[PostingBlock]]),
-            tombByGroup.getOrElse(gk, Array.empty[PostingBlock]))
-        }.toMap
-      }
-    }
-    if (segDicts.map(_.count()).sum <= maxDriverDictTerms)
-      localDict = segDicts.zipWithIndex.flatMap { case (d, i) =>
-        d.as[TermStats].collect().map(ts => (i, ts))
-      }.groupBy(_._2.term).view.mapValues(_.toSeq).toMap
-    rescoreLocalBounds()
-    this
-  }
-
-  /** Whether the warm-local blocks carry EXACT per-block maxima under
-    * the merged stats (set by [[rescoreLocalBounds]]); false keeps the
-    * sound-but-loose maxTf-derived fallback.
-    */
-  @volatile private var localExactBounds: Boolean = false
-
-  /** One decode pass over the collected warm-local blocks re-deriving
-    * each block's maxScore EXACTLY under the merged LWW statistics
-    * (global or per-field) — the warm path then prunes as tightly as a
-    * compacted index, instead of the maxTf/dl=0 fallback bounds that
-    * make cross-segment WAND decode more blocks (measured: the
-    * ms_warm_p50 gap vs single-index serving). Requires the driver
-    * dictionary and (under tombstones) the bounded removed-df cache;
-    * skipped otherwise — results are identical either way, only
-    * pruning differs. The rescored bound ranges over tombstoned
-    * postings too, which only loosens it — still sound.
-    */
-  private def rescoreLocalBounds(): Unit = {
-    if (localSegs == null || localDict == null) return
-    if (hasTombstones && removedDfSmall.isEmpty) return
-    val rm = removedDfSmall.getOrElse(Map.empty)
-    val mergedDf: Map[String, Long] = localDict.map { case (t, xs) =>
-      t -> (xs.map(_._2.df).sum - rm.getOrElse(t, 0L))
-    }.filter(_._2 > 0L)
-    val tidToTerm: Map[Int, Map[Long, String]] = localDict.toSeq
-      .flatMap { case (t, xs) => xs.map { case (i, ts) => (i, ts.termId, t) } }
-      .groupBy(_._1)
-      .map { case (i, xs) => i -> xs.map(x => x._2 -> x._3).toMap }
-    val nG = n
-    val adG = avgdl
-    val fs = fieldStatsMap
-    localSegs = localSegs.map { case (gk @ (segIdx, _), (byTerm, tomb)) =>
-      val t2t = tidToTerm.getOrElse(segIdx, Map.empty)
-      val rescored = byTerm.map { case (tid, bs) =>
-        val exact = for { t <- t2t.get(tid); df <- mergedDf.get(t) } yield {
-          val (nn, ad) = FieldTerms.textFieldOf(t).flatMap(fs.get).getOrElse((nG, adG))
-          bs.map { b =>
-            val dec = Codec.decodeBlock(b)
-            var mx = Double.NegativeInfinity
-            var i = 0
-            while (i < dec.docIds.length) {
-              val s = Bm25.score(dec.tfs(i), df, dec.dls(i), nn, ad)
-              if (s > mx) mx = s
-              i += 1
-            }
-            b.copy(maxScore = mx)
-          }
-        }
-        tid -> exact.getOrElse(bs)
-      }
-      gk -> (rescored, tomb)
-    }
-    localExactBounds = true
-  }
-
-  private val rawN: Long = segStats.map(_.n).sum
-  private val rawSumDl: Long = segStats.map(st => math.round(st.avgdl * st.n)).sum
-
-  /** Per-SEGMENT field stats (field → (docCount, Σdl)) — kept per
-    * segment so dead-doc subtraction can be gated on whether a segment
-    * actually INDEXED a field: a segment built without `textFieldCols`
-    * may still carry a doc-store column of the same name, and its dead
-    * docs must not subtract from field stats they never contributed to
-    * (round-5 ADVICE).
-    */
-  private val segFieldStats: Seq[Map[String, (Long, Long)]] =
-    segments.map { s =>
-      val p = new Path(s"$s/fieldstats")
-      if (!fs.exists(p)) Map.empty[String, (Long, Long)]
-      else spark.read.parquet(s"$s/fieldstats")
-        .select(col("field"), col("ndocs"), col("sumdl"))
-        .as[(String, Long, Long)].collect().map(r => r._1 -> (r._2, r._3)).toMap
-    }
-
-  /** Per-field (docCount, Σdl) of the additional analyzed text fields,
-    * summed over segments (sums are associative like N / Σdl); empty for
-    * indexes whose segments carry no `fieldstats/`.
-    */
-  private val rawFieldStats: Map[String, (Long, Long)] =
-    segFieldStats.foldLeft(Map.empty[String, (Long, Long)]) { (acc, m) =>
-      m.foldLeft(acc) { case (a, (f, (n1, s1))) =>
-        val (n0, s0) = a.getOrElse(f, (0L, 0L))
-        a.updated(f, (n0 + n1, s0 + s1))
-      }
-    }
-  private val fieldNames: Seq[String] = rawFieldStats.keys.toSeq.sorted
-
-  /** Tombstone store present? One filesystem check per searcher — every
-    * tombstone-dependent structure below is gated on it, so the
-    * no-tombstone case (the common one) costs nothing.
-    */
-  private val hasTombstones: Boolean = Tombstones.exists(spark, indexDir)
-  private def tombDF: DataFrame = Tombstones.loadDF(spark, indexDir)
-
-  /** Tombstone block size: exclusion blocks carry no payload worth
-    * splitting finely — bigger blocks = fewer rows through the scan.
-    */
-  private val TombBlockSize = 4096
-
-  /** Driver-cache cap for the removed-df correction map: below it the
-    * corrections collect to a driver map (zero extra jobs per query);
-    * above it they stay a persisted DISTRIBUTED frame filtered per
-    * lookup — bounded driver memory at ANY tombstone volume (round-4
-    * review "What's wrong #1").
-    */
-  private[graft] var maxDriverRemovedTerms: Int = 200000
-
-  /** Disjoint (lo, hi, seg, bucket) docId intervals of every (segment,
-    * bucket), from the blocks themselves (min firstDocId / max
-    * lastDocId — manifest-independent, so compacted and foreign
-    * segments resolve correctly). Sorted by lo for binary search. A
-    * docId outside every interval has no postings anywhere and can
-    * never be a WAND candidate, so it needs no exclusion block.
-    */
-  private lazy val bucketRanges: Array[(Long, Long, Int, Int)] =
-    segBlocks.zipWithIndex.map { case (b, i) =>
-      b.groupBy(col("bucket"))
-        .agg(min(col("firstDocId")).as("lo"), max(col("lastDocId")).as("hi"))
-        .select(lit(i).as("seg"), col("bucket"), col("lo"), col("hi"))
-    }.reduce(_ unionByName _)
-      .as[(Int, Int, Long, Long)].collect()
-      .map { case (seg, bucket, lo, hi) => (lo, hi, seg, bucket) }
-      .sortBy(_._1)
-
-  /** Tombstoned docIds as per-(segment, bucket) delta-encoded docId
-    * blocks (termId = [[TombTermId]]) that ride the SAME pruned scan as
-    * the posting blocks: each WAND group excludes via an ordinary block
-    * cursor — NEVER a driver-side sorted array or a broadcast ∝
-    * tombstone volume (the round-4 perf-weak component). Built once per
-    * searcher (one distributed encode job), persisted for reuse.
-    */
-  private lazy val tombBlocks: Option[org.apache.spark.sql.Dataset[(Int, Int, PostingBlock)]] = {
-    if (!hasTombstones) None
-    else {
-      val ranges = bucketRanges
-      val los = ranges.map(_._1)
-      val tbs = TombBlockSize
-      val assigned = tombDF.as[Long]
-        .flatMap { d =>
-          var a = 0
-          var b = los.length
-          while (a < b) { val m = (a + b) >>> 1; if (los(m) <= d) a = m + 1 else b = m }
-          val i = a - 1
-          if (i >= 0 && d <= ranges(i)._2) Some((ranges(i)._3, ranges(i)._4, d)) else None
-        }
-        .toDF("seg", "bucket", "docId")
-      val enc = assigned
-        .repartition(col("seg"), col("bucket"))
-        .sortWithinPartitions(col("seg"), col("bucket"), col("docId"))
-        .as[(Int, Int, Long)]
-        .mapPartitions { it =>
-          // run-grouped streaming encode: ≤ TombBlockSize ids in memory
-          val buf = it.buffered
-          new Iterator[(Int, Int, PostingBlock)] {
-            override def hasNext: Boolean = buf.hasNext
-            override def next(): (Int, Int, PostingBlock) = {
-              val (seg, bucket, _) = buf.head
-              val ids = new scala.collection.mutable.ArrayBuffer[Long](256)
-              while (buf.hasNext && buf.head._1 == seg && buf.head._2 == bucket &&
-                ids.length < tbs) ids += buf.next()._3
-              val arr = ids.toArray
-              val k = arr.length
-              val blk = Codec.encodeBlocks(MultiSearcherOps.TombTermId, 0, bucket, arr,
-                Array.fill(k)(1), Array.fill(k)(0), Array.fill(k)(0.0),
-                Array.fill(k)(Array.emptyByteArray), tbs).next()
-              (seg, bucket, blk)
-            }
-          }
-        }
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      enc.count()
-      Some(enc)
-    }
-  }
-
-  /** Union `base` (a pruned posting-block scan keyed (seg, bucket))
-    * with the tombstone exclusion blocks.
-    */
-  private def withTombBlocks(base: org.apache.spark.sql.Dataset[(Int, Int, PostingBlock)])
-      : org.apache.spark.sql.Dataset[(Int, Int, PostingBlock)] =
-    tombBlocks.map(base.union(_)).getOrElse(base)
-
-
-  /** Exact statistic contributions of the tombstoned docs — (count,
-    * Σdl, per-term df over their DISTINCT terms), re-derived from the
-    * doc stores in one range-pruned job (scan cost ∝ segments the
-    * tombstone docId range touches; tokenize cost ∝ tombstone volume).
-    * Subtracting them makes
-    * every stat exact over the LWW-visible corpus, so scores match a
-    * never-contained-the-old-versions index bit-for-bit (StreamingSpec
-    * pins this against the exhaustive oracle AND the compacted index).
-    * The df map's vocabulary is the tombstoned docs' own — driver-
-    * bounded by the same compaction-cadence argument as the docId list.
-    */
-  private final case class RemovedStats(n: Long, sumDl: Long,
-      fieldN: Map[String, Long], fieldSumDl: Map[String, Long])
-
-  /** The tombstoned docs themselves (docId-range-pruned semi-join of the
-    * doc stores: pushed bounds let parquet row-group stats skip
-    * unaffected segments), with field columns normalized — shared by the
-    * scalar-stats aggregate and the removed-df frame. Persisted once per
-    * searcher; only evaluated when tombstones exist.
-    */
-  private lazy val deadDocs: DataFrame = {
-    val r = tombDF.agg(min(col("docId")), max(col("docId"))).head()
-    val lo = r.getLong(0)
-    val hi = r.getLong(1)
-    val union = segDocs.zipWithIndex.map { case (d, i) =>
-      // a field column counts ONLY for segments that actually indexed
-      // the field (own fieldstats entry) — a same-named doc-store
-      // column in a segment built without it contributed nothing to the
-      // field's stats and must subtract nothing (round-5 ADVICE)
-      val fcols = fieldNames.map { f =>
-        (if (segFieldStats(i).contains(f) && d.columns.contains(f)) col(f).cast("string")
-         else lit(null).cast("string")).as(s"__f_$f")
-      }
-      d.select(Seq(col("docId"), col("dl"), col("text")) ++ fcols: _*)
-        .filter(col("docId") >= lit(lo) && col("docId") <= lit(hi))
-    }.reduce(_ unionByName _)
-    union.join(tombDF, Seq("docId"), "left_semi")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-  }
-
-  private lazy val removedStats: RemovedStats = {
-    if (!hasTombstones) RemovedStats(0L, 0L, Map.empty, Map.empty)
-    else {
-      val aggCols = Seq(count(lit(1)).as("__c"), coalesce(sum(col("dl")), lit(0L)).as("__s")) ++
-        fieldNames.flatMap { f =>
-          val d = coalesce(Analyzer.dlCol(col(s"__f_$f")), lit(0))
-          Seq(count(when(d > lit(0), 1)).as(s"__n_$f"),
-            coalesce(sum(d.cast("long")), lit(0L)).as(s"__s_$f"))
-        }
-      val row = deadDocs.agg(aggCols.head, aggCols.tail: _*).head()
-      RemovedStats(row.getAs[Long]("__c"), row.getAs[Long]("__s"),
-        fieldNames.map(f => f -> row.getAs[Long](s"__n_$f")).toMap,
-        fieldNames.map(f => f -> row.getAs[Long](s"__s_$f")).toMap)
-    }
-  }
-
-  /** Per-term df corrections of the tombstoned docs — their DISTINCT
-    * terms per namespace (main-text tokens plus each field's tokens
-    * namespaced), counted. Kept as a persisted DISTRIBUTED frame:
-    * driver memory never scales with the dead docs' vocabulary (the
-    * round-4 perf-weak component); [[removedDfFor]] filters it to the
-    * query's own terms.
-    */
-  private lazy val removedDfDF: Option[DataFrame] = {
-    if (!hasTombstones) None
-    else {
-      def toksOf(c: org.apache.spark.sql.Column) =
-        coalesce(Analyzer.tokensCol(c), array().cast("array<string>"))
-      val termsExpr = fieldNames.foldLeft(array_distinct(toksOf(col("text")))) { (acc, f) =>
-        concat(acc, transform(array_distinct(toksOf(col(s"__f_$f"))),
-          t => concat(lit(FieldTerms.textTerm(f, "")), t)))
-      }
-      val frame = deadDocs
-        .select(explode(termsExpr).as("term"))
-        .groupBy(col("term")).agg(count(lit(1)).as("removed"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      frame.count()
-      Some(frame)
-    }
-  }
-
-  /** Bounded driver cache of the corrections: collected only when the
-    * dead vocabulary fits [[maxDriverRemovedTerms]] (zero extra jobs per
-    * query — the common, compaction-bounded case); a heavy-churn store
-    * keeps the distributed path.
-    */
-  private lazy val removedDfSmall: Option[Map[String, Long]] =
-    removedDfDF.flatMap { f =>
-      val rows = f.limit(maxDriverRemovedTerms + 1).as[(String, Long)].collect()
-      if (rows.length > maxDriverRemovedTerms) None else Some(rows.toMap)
-    }
-
-  /** Removed-df corrections for exactly `terms` — a driver-map lookup
-    * when cached, else one distributed filter returning ≤ |terms| rows.
-    */
-  private def removedDfFor(terms: Seq[String]): Map[String, Long] =
-    removedDfDF match {
-      case None => Map.empty
-      case Some(frame) =>
-        removedDfSmall match {
-          case Some(m) => terms.iterator.flatMap(t => m.get(t).map(t -> _)).toMap
-          case None => frame.filter(col("term").isin(terms: _*))
-            .as[(String, Long)].collect().toMap
-        }
-    }
-
-  /** Global corpus stats over the LWW-visible union of all segments. */
-  lazy val n: Long = rawN - removedStats.n
-  lazy val sumDl: Long = rawSumDl - removedStats.sumDl
-  lazy val avgdl: Double = if (n == 0) 0.0 else sumDl.toDouble / n
-
-  /** Merged per-field (docCount, avgdl) over the LWW-visible union —
-    * the same exact-subtraction rule as N / avgdl.
-    */
-  lazy val fieldStatsMap: Map[String, (Long, Double)] =
-    rawFieldStats.map { case (f, (n0, s0)) =>
-      val nf = n0 - removedStats.fieldN.getOrElse(f, 0L)
-      val sf = s0 - removedStats.fieldSumDl.getOrElse(f, 0L)
-      f -> (nf, if (nf == 0) 0.0 else sf.toDouble / nf)
-    }
-
-  /** Per-segment dictionary rows for the query terms + merged global df.
-    * Returns (globalDf by term, per-segment termId by (segIdx, term)).
-    * ONE unioned scan + one collect for ALL segments — query latency must
-    * not grow one-Spark-job-per-segment with the micro-batch count
-    * (round-2 review); the result stays ≤ |terms| × |segments| rows.
-    */
-  private def lookup(terms: Seq[String]): (Map[String, Long], Map[(Int, String), TermStats]) = {
-    if (terms.isEmpty) return (Map.empty, Map.empty)
-    // exact LWW df: subtract the tombstoned docs' contribution; a term
-    // living ONLY in superseded docs vanishes (absent from the visible
-    // corpus — conjunctive queries on it must return empty, expansion
-    // must not propose it). Corrections come from the distributed
-    // removed-df frame (driver-cached only when bounded) — restricted
-    // to THESE terms, never the dead docs' whole vocabulary. On the
-    // COLD uncached path the corrections broadcast-join INTO the
-    // unioned dict scan, so the heavy-churn case costs the same ONE
-    // job as the common case (round-5 review "What's wrong #3").
-    var dfRemoved: Map[String, Long] = Map.empty
-    val perSeg: Map[(Int, String), TermStats] =
-      if (localDict != null) {
-        dfRemoved = removedDfFor(terms)
-        terms.flatMap(t => localDict.getOrElse(t, Nil).map { case (i, ts) => (i, t) -> ts }).toMap
-      } else {
-        val unioned = segDicts.zipWithIndex.map { case (d, i) =>
-          d.filter(col("term").isin(terms: _*))
-            .select(lit(i).as("seg"), col("term"), col("termId"), col("shard"),
-              col("df"), col("cf"), col("maxScore"))
-        }.reduce(_ unionByName _)
-        val joinFrame = removedDfDF.filter(_ => removedDfSmall.isEmpty)
-        val withRm = joinFrame match {
-          case Some(frame) =>
-            unioned.join(broadcast(frame.filter(col("term").isin(terms: _*))),
-              Seq("term"), "left")
-              .select(col("seg"), col("term"), col("termId"), col("shard"),
-                col("df"), col("cf"), col("maxScore"),
-                coalesce(col("removed"), lit(0L)).as("removed"))
-          case None => unioned.withColumn("removed", lit(0L))
-        }
-        val rows = withRm
-          .as[(Int, String, Long, Int, Long, Long, Double, Long)].collect()
-        if (joinFrame.isDefined)
-          dfRemoved = rows.iterator.filter(_._8 > 0L).map(r => r._2 -> r._8).toMap
-        else dfRemoved = removedDfFor(terms)
-        rows.map { case (i, t, tid, sh, df, cf, ms, _) =>
-          (i, t) -> TermStats(t, tid, sh, df, cf, ms)
-        }.toMap
-      }
-    val dfGlobal = perSeg.toSeq.groupBy(_._1._2)
-      .map { case (t, xs) => t -> (xs.map(_._2.df).sum - dfRemoved.getOrElse(t, 0L)) }
-      .filter(_._2 > 0L)
-    (dfGlobal, perSeg)
-  }
-
-  private def run(terms: Seq[String], k: Int, conjunctive: Boolean,
-      slots: Seq[String] = null,
-      filterClauses: Seq[Seq[String]] = Nil,
-      excludeTerms: Seq[String] = Nil,
-      shouldTerms: Seq[String] = Nil,
-      minShould: Int = 0,
-      after: Scored = null,
-      slop: Int = 0,
-      boosts: Map[String, Double] = Map.empty,
-      bestFields: Wand.BestFields = null,
-      prefixExpansions: Seq[String] = null,
-      spanFirstEnd: Int = -1): Array[Scored] = {
-    val distinctTerms = terms.distinct.sorted
-    if ((distinctTerms.isEmpty && shouldTerms.isEmpty && prefixExpansions == null) || k <= 0)
-      return Array.empty
-    val (dfGlobal, perSeg) =
-      lookup((distinctTerms ++ filterClauses.flatten ++ excludeTerms ++ shouldTerms ++
-        Option(prefixExpansions).getOrElse(Nil)).distinct.sorted)
-    if (distinctTerms.nonEmpty && !distinctTerms.exists(dfGlobal.contains))
-      return Array.empty
-    // a clause with no value present in any segment ⇒ nothing can match
-    val clauses = filterClauses.map(_.filter(dfGlobal.contains))
-    if (clauses.exists(_.isEmpty)) return Array.empty
-    if ((conjunctive || slots != null) && distinctTerms.exists(t => !dfGlobal.contains(t)))
-      return Array.empty
-    val shouldFound = shouldTerms.filter(dfGlobal.contains)
-    if (shouldFound.size < minShould) return Array.empty
-    val prefixFound =
-      if (prefixExpansions == null) null
-      else prefixExpansions.filter(dfGlobal.contains)
-    if (prefixFound != null && prefixFound.isEmpty) return Array.empty
-    val nG = n
-    val avgdlG = avgdl
-    val fsMap = fieldStatsMap
-    val aft = after
-    // ONE resolved work unit — the same shape the batched path uses, so
-    // runGroup is shared verbatim (scored terms never overlap clause /
-    // exclude terms: those live in the '#'/'%' namespaces)
-    val w = MsSpecWork(0, distinctTerms.filter(dfGlobal.contains), shouldFound,
-      clauses, excludeTerms.distinct.sorted.filter(dfGlobal.contains),
-      conjunctive, slots, minShould, slop, boosts, bestFields, prefixFound,
-      spanFirstEnd)
-    if (localSegs != null)
-      return runLocal(Seq((w, aft)), k, perSeg, dfGlobal, nG, avgdlG, fsMap).head
-    // termId is segment-local: key block groups by (segIdx, termId);
-    // terms whose visible df fell to zero are pruned from the scan
-    val idToTerm: Map[(Int, Long), (String, Long)] =
-      perSeg.flatMap { case ((i, t), ts) => dfGlobal.get(t).map(df => (i, ts.termId) -> (t, df)) }
-    val prunedBlocks: Seq[DataFrame] = segBlocks.zipWithIndex.flatMap { case (b, i) =>
-      val ids = perSeg.collect { case ((`i`, t), ts) if dfGlobal.contains(t) => ts }.toSeq
-      if (ids.isEmpty) None
-      else {
-        val shards = ids.map(_.shard).distinct
-        Some(b.filter(col("shard").isin(shards: _*) && col("termId").isin(ids.map(_.termId): _*))
-          .withColumn("seg", lit(i)))
-      }
-    }
-    if (prunedBlocks.isEmpty) return Array.empty
-    val all = withTombBlocks(prunedBlocks.reduce(_ unionByName _)
-      .select(col("seg").as("_1"), col("bucket").as("_2"),
-        struct(all_block_cols: _*).as("_3"))
-      .as[(Int, Int, PostingBlock)])
-    val perGroup = all
-      .groupByKey { case (seg, bucket, _) => (seg, bucket) }
-      .flatMapGroups { (_, it) =>
-        val (tombBlks, rows) = MultiSearcherOps.splitTomb(it.toArray)
-        if (rows.isEmpty) Iterator.empty
-        else {
-          val segIdx = rows.head._1
-          val byTerm: Map[String, (Array[PostingBlock], Long)] =
-            rows.map(_._3).groupBy(_.termId).map { case (tid, bs) =>
-              val (t, df) = idToTerm((segIdx, tid))
-              t -> (bs, df)
-            }
-          MultiSearcherOps.runGroup(byTerm, tombBlks, w, k, nG, avgdlG, fsMap, aft)
-        }
-      }
-    perGroup.orderBy(col("score").desc, col("docId").asc).limit(k).collect()
-  }
-
-  /** In-process execution of resolved work units over the driver-local
-    * segment blocks (zero Spark jobs — the warm cross-segment serving
-    * path, mirroring `Searcher.runLocal`): every (segment, bucket)
-    * group runs [[MultiSearcherOps.runGroup]] concurrently, results
-    * merge with the same top-k rule as the distributed path.
-    */
-  private def runLocal(
-      work: Seq[(MsSpecWork, Scored)],
-      k: Int,
-      perSeg: Map[(Int, String), TermStats],
-      dfGlobal: Map[String, Long],
-      nG: Long,
-      avgdlG: Double,
-      fsMap: Map[String, (Long, Double)]
-  ): Seq[Array[Scored]] = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    // per-segment term resolution (termId → (term, merged df)) once
-    val bySegTerm: Map[Int, Map[Long, (String, Long)]] =
-      perSeg.toSeq.groupBy(_._1._1).map { case (seg, xs) =>
-        seg -> xs.flatMap { case ((_, t), ts) =>
-          dfGlobal.get(t).map(df => ts.termId -> (t, df))
-        }.toMap
-      }
-    val exact = localExactBounds
-    val perGroup = localSegs.toSeq.map { case ((segIdx, _), (byTermId, tombBlks)) =>
-      Future {
-        // iterate the QUERY's terms (tiny), indexing into the group's
-        // vocabulary map — never a vocabulary-sized scan per query
-        val byTerm: Map[String, (Array[PostingBlock], Long)] =
-          bySegTerm.getOrElse(segIdx, Map.empty).flatMap { case (tid, (t, df)) =>
-            byTermId.get(tid).map(bs => t -> (bs, df))
-          }
-        work.map { case (w, aft) =>
-          if (byTerm.isEmpty && tombBlks.isEmpty) Array.empty[Scored]
-          else MultiSearcherOps.runGroup(byTerm, tombBlks, w, k, nG, avgdlG, fsMap,
-            aft, exactBounds = exact).toArray
-        }
-      }
-    }
-    val collected = Await.result(Future.sequence(perGroup),
-      scala.concurrent.duration.Duration.Inf)
-    work.indices.map { i =>
-      collected.flatMap(_(i)).toArray.sortBy(s => (-s.score, s.docId)).take(k)
-    }
-  }
-
-  private def all_block_cols: Seq[org.apache.spark.sql.Column] =
-    Seq("termId", "shard", "bucket", "blockId", "firstDocId", "lastDocId",
-      "count", "docs", "tfs", "dls", "poss", "maxTf", "maxScore").map(col)
-
-  /** Disjunctive (OR) BM25 top-k over the union of all segments. */
-  def search(query: String, k: Int, from: Int = 0): Array[Scored] = {
-    val hits = run(Analyzer.analyzeQuery(query).toSeq, from + k, conjunctive = false)
-    if (from == 0) hits else hits.slice(from, from + k)
-  }
-
-  /** ES `search_after` continuation over the union of all segments. */
-  def searchAfter(query: String, k: Int, after: Scored): Array[Scored] =
-    run(Analyzer.analyzeQuery(query).toSeq, k, conjunctive = false, after = after)
-
-  /** Fielded `match` over the union of all segments: per-field BM25
-    * under the MERGED field statistics (per-seg `fieldstats/` sums with
-    * exact tombstone subtraction) — same semantics as
-    * [[Searcher.searchField]] on a compacted index.
-    */
-  def searchField(field: String, query: String, k: Int,
-      conjunctive: Boolean = false, phrase: Boolean = false,
-      from: Int = 0, slop: Int = 0): Array[Scored] = {
-    val toks = Analyzer.tokenize(query).toSeq
-    if (toks.isEmpty) return Array.empty
-    val slots = if (phrase) toks.map(t => FieldTerms.textTerm(field, t)) else null
-    val terms =
-      if (phrase) slots.distinct.sorted
-      else toks.distinct.sorted.map(t => FieldTerms.textTerm(field, t))
-    val hits = run(terms, from + k, conjunctive, slots, slop = slop)
-    if (from == 0) hits else hits.slice(from, from + k)
-  }
-
-  /** ES `multi_match` over the union of all segments — same semantics
-    * as [[Searcher.multiMatch]] (most_fields sum by default;
-    * `bestFields = true` + `tieBreaker` = ES's default best_fields
-    * combination), under the merged LWW statistics.
-    */
-  def multiMatch(query: String, fields: Seq[(String, Double)], k: Int,
-      from: Int = 0,
-      bestFields: Boolean = false,
-      tieBreaker: Double = 0.0): Array[Scored] = {
-    require(fields.map(_._1).distinct.size == fields.size, "duplicate field in multiMatch")
-    val toks = Analyzer.analyzeQuery(query).toSeq
-    if (toks.isEmpty || fields.isEmpty) return Array.empty
-    val termBoosts: Seq[(String, Double)] =
-      for ((f, b) <- fields; t <- toks) yield FieldTerms.textTerm(f, t) -> b
-    val bf = if (bestFields) Wand.BestFields.of(fields.map(_._1), toks, tieBreaker) else null
-    val hits = run(termBoosts.map(_._1).sorted, from + k, conjunctive = false,
-      boosts = termBoosts.toMap, bestFields = bf)
-    if (from == 0) hits else hits.slice(from, from + k)
-  }
-
-  /** Conjunctive (AND) BM25 top-k over the union of all segments. */
-  def searchConjunctive(query: String, k: Int, from: Int = 0): Array[Scored] = {
-    val hits = run(Analyzer.analyzeQuery(query).toSeq, from + k, conjunctive = true)
-    if (from == 0) hits else hits.slice(from, from + k)
-  }
-
-  /** Phrase top-k over the union of all segments (positions are stored
-    * per posting, so adjacency needs no segment-level state; scores use
-    * the merged global stats like every other path here).
-    */
-  def searchPhrase(query: String, k: Int, from: Int = 0, slop: Int = 0): Array[Scored] = {
-    val slots = Analyzer.tokenize(query).toSeq
-    if (slots.isEmpty) return Array.empty
-    val hits = run(slots.distinct.sorted, from + k, conjunctive = false, slots = slots,
-      slop = slop)
-    if (from == 0) hits else hits.slice(from, from + k)
-  }
-
-  /** Lucene/ES `span_first` over the union of all segments — same
-    * span-end rule and phrase scoring as [[Searcher.searchSpanFirst]]
-    * (tombstoned/upserted docs excluded like every path here).
-    */
-  def searchSpanFirst(query: String, end: Int, k: Int): Array[Scored] = {
-    require(end > 0, "span_first end must be positive")
-    val slots = Analyzer.tokenize(query).toSeq
-    if (slots.isEmpty) return Array.empty
-    run(slots.distinct.sorted, k, conjunctive = false, slots = slots,
-      spanFirstEnd = end)
-  }
-
-  /** ES `min_score` over the union of all segments — see
-    * [[Searcher.searchMinScore]] (filter(top-k) ≡ top-k(filter)).
-    */
-  def searchMinScore(query: String, k: Int, minScore: Double): Array[Scored] =
-    search(query, k).filter(_.score >= minScore)
-
-  /** Lucene/ES `query_string` over the union of all segments — same
-    * grammar and compilation as [[Searcher.searchQueryString]].
-    */
-  def searchQueryString(q: String, k: Int,
-      schema: QueryString.Schema = QueryString.Schema()): Array[Scored] =
-    searchManyBool(Seq(QueryString.parse(q, schema)), k).head
-
-  /** ES `match_phrase_prefix` over the union of all segments: same
-    * rewrite and scoring rule as [[Searcher.searchPhrasePrefix]] — the
-    * last token expands against the GLOBAL distinct dictionary
-    * (term-asc, capped), so a compacted index answers identically.
-    */
-  def searchPhrasePrefix(query: String, k: Int, maxExpansions: Int = 50,
-      slop: Int = 0, from: Int = 0, field: String = "text"): Array[Scored] = {
-    val toks = Analyzer.tokenize(query).toSeq
-    if (toks.isEmpty) return Array.empty
-    val p = toks.last
-    val fixed = toks.init.map(t => FieldTerms.textTerm(field, t))
-    val exp = expand(_.startsWith(p), maxExpansions, field)
-    if (exp.isEmpty) return Array.empty
-    val slots = fixed :+ Searcher.PrefixSlot
-    val hits = run(fixed.distinct.sorted, from + k, conjunctive = false, slots = slots,
-      slop = slop, prefixExpansions = exp.sorted)
-    if (from == 0) hits else hits.slice(from, from + k)
-  }
-
-  /** ES bool query over the union of all segments: scoring clauses per
-    * the flags, `filters`/`mustNot` against fielded keyword terms
-    * ([[graft.index.FieldTerms]] — segments must be built with
-    * `IndexConfig.fieldCols`, e.g. via StreamingIngest's cfg). Same
-    * filter-context semantics as `Searcher.searchBool`: membership only,
-    * scores = merged-global-stats BM25 of the scoring clauses. `should`
-    * / `minShouldMatch` / `numericRangeFilters` / `from` / `after`
-    * behave exactly as on the single-index searcher.
-    */
-  def searchBool(
-      query: String,
-      k: Int,
-      filters: Seq[(String, String)] = Nil,
-      mustNot: Seq[(String, String)] = Nil,
-      conjunctive: Boolean = false,
-      phrase: Boolean = false,
-      /** ES `terms` clauses: doc must carry ANY of the listed values. */
-      anyFilters: Seq[(String, Seq[String])] = Nil,
-      /** ES `range` clauses (lexicographic, inclusive): expanded with ONE
-        * unioned dictionary scan across all segments — uncapped, like
-        * `Searcher`'s; use `numericRangeFilters` for high-cardinality
-        * numeric fields.
-        */
-      rangeFilters: Seq[(String, String, String)] = Nil,
-      /** Tiered-trie numeric ranges (`IndexConfig.numericFieldCols`):
-        * bounded clause at any cardinality, no dict range scan.
-        */
-      numericRangeFilters: Seq[(String, Long, Long)] = Nil,
-      /** ES `exists` clauses / `must_not exists` ("missing") — the
-        * `_field_names`-style marker terms ([[graft.index.FieldTerms
-        * .existsTerm]]), same semantics as the single-index searcher.
-        */
-      exists: Seq[String] = Nil,
-      missing: Seq[String] = Nil,
-      /** ES bool `must_not` over ANALYZED text ((field, word), "text" =
-        * main field — the Lucene `-term` clause).
-        */
-      mustNotText: Seq[(String, String)] = Nil,
-      should: String = "",
-      minShouldMatch: Int = 0,
-      from: Int = 0,
-      after: Scored = null,
-      phraseSlop: Int = 0,
-      /** Analyzed field the `query` matches over ("text" = main field) —
-        * per-field BM25 under the merged LWW field stats, same as
-        * [[searchField]] (round-5 review "What's missing #2").
-        */
-      field: String = "text",
-      /** ES `multi_match` inside the bool `must`: overrides `field`
-        * when non-empty (OR mode; same semantics as [[multiMatch]]).
-        */
-      multiMatchFields: Seq[(String, Double)] = Nil,
-      multiMatchBest: Boolean = false,
-      tieBreaker: Double = 0.0
-  ): Array[Scored] = {
-    guardExists(exists, missing)
-    val mm = multiMatchFields
-    require(mm.isEmpty || (!phrase && !conjunctive),
-      "multiMatchFields is OR-mode only (like multiMatch)")
-    val toks = Analyzer.tokenize(query).toSeq
-    val slots = if (phrase) toks.map(t => FieldTerms.textTerm(field, t)) else null
-    val scoredTerms =
-      if (mm.nonEmpty)
-        (for ((f, _) <- mm; t <- toks.distinct) yield FieldTerms.textTerm(f, t))
-          .distinct.sorted
-      else if (phrase) Option(slots).getOrElse(Nil).distinct.sorted
-      else toks.distinct.sorted.map(t => FieldTerms.textTerm(field, t))
-    val boosts: Map[String, Double] =
-      if (mm.isEmpty) Map.empty
-      else (for ((f, b) <- mm; t <- toks.distinct) yield FieldTerms.textTerm(f, t) -> b).toMap
-    val bf =
-      if (mm.nonEmpty && multiMatchBest) Wand.BestFields.of(mm.map(_._1), toks, tieBreaker)
-      else null
-    val shouldTerms = Analyzer.analyzeQuery(should).filterNot(scoredTerms.contains).toSeq
-    if (scoredTerms.isEmpty && shouldTerms.isEmpty) return Array.empty
-    val hits = run(scoredTerms, from + k, conjunctive, slots,
-      filters.map { case (f, v) => Seq(FieldTerms.term(f, v)) } ++
-        anyFilters.map { case (f, vs) =>
-          vs.distinct.map(v => FieldTerms.term(f, v))
-        } ++
-        numericRangeFilters.map { case (f, lo, hi) => FieldTerms.trieRangeTerms(f, lo, hi) } ++
-        rangeFilters.map { case (f, lo, hi) => expandFieldRange(f, lo, hi) } ++
-        exists.map(f => Seq(FieldTerms.existsTerm(f))),
-      (mustNot.map { case (f, v) => FieldTerms.term(f, v) } ++
-        missing.map(f => FieldTerms.existsTerm(f)) ++
-        mustNotText.flatMap { case (f, w) =>
-          Analyzer.tokenize(w).map(t => FieldTerms.textTerm(f, t)) }).distinct,
-      shouldTerms, minShouldMatch, after, phraseSlop, boosts, bf)
-    if (from == 0) hits else hits.slice(from, from + k)
-  }
-
-  /** Batched full-bool-surface execution across ALL segments (ES
-    * `_msearch` over an unmerged index): one unioned dictionary lookup
-    * and ONE job whose pruned block scan covers the union of every
-    * spec's terms; per (segment, bucket) group each spec builds fresh
-    * cursors and dispatches through the same Wand calls as its
-    * standalone API — results are identical to issuing the specs one
-    * at a time (test-pinned), including tombstone exclusion and the
-    * exact LWW statistics.
-    */
-  def searchManyBool(specs: Seq[BoolQuerySpec], k: Int): Seq[Array[Scored]] = {
-    specs.foreach(sp => guardExists(sp.exists, sp.missing))
-    // ALL specs' lexicographic ranges expand in ONE batched unioned scan
-    val rangeExp: Map[(String, String, String), Seq[String]] =
-      expandFieldRanges(specs.flatMap(_.rangeFilters).distinct)
-    val preps = specs.map { sp =>
-      require(sp.multiMatchFields.isEmpty || (!sp.phrase && !sp.conjunctive),
-        "multiMatchFields is OR-mode only (like multiMatch)")
-      val toks = Analyzer.tokenize(sp.query).toSeq
-      val mm = sp.multiMatchFields
-      val slots =
-        if (sp.phrase) toks.map(t => FieldTerms.textTerm(sp.field, t)) else null
-      val scoredTerms =
-        if (mm.nonEmpty)
-          (for ((f, _) <- mm; t <- toks.distinct) yield FieldTerms.textTerm(f, t))
-            .distinct.sorted
-        else if (sp.phrase) Option(slots).getOrElse(Nil).distinct.sorted
-        else toks.distinct.sorted.map(t => FieldTerms.textTerm(sp.field, t))
-      val boosts: Map[String, Double] =
-        if (mm.isEmpty) Map.empty
-        else (for ((f, b) <- mm; t <- toks.distinct) yield FieldTerms.textTerm(f, t) -> b).toMap
-      val shouldTerms = Analyzer.analyzeQuery(sp.should).filterNot(scoredTerms.contains).toSeq
-      val clauses: Seq[Seq[String]] =
-        sp.filters.map { case (f, v) => Seq(FieldTerms.term(f, v)) } ++
-          sp.anyFilters.map { case (f, vs) =>
-            vs.distinct.map(v => FieldTerms.term(f, v)) } ++
-          sp.numericRangeFilters.map { case (f, lo, hi) => FieldTerms.trieRangeTerms(f, lo, hi) } ++
-          sp.rangeFilters.map(rangeExp) ++
-          sp.exists.map(f => Seq(FieldTerms.existsTerm(f)))
-      val bf =
-        if (mm.nonEmpty && sp.multiMatchBest)
-          Wand.BestFields.of(mm.map(_._1), toks, sp.tieBreaker)
-        else null
-      (slots, scoredTerms, shouldTerms, clauses,
-        (sp.mustNot.map { case (f, v) => FieldTerms.term(f, v) } ++
-          sp.missing.map(f => FieldTerms.existsTerm(f)) ++
-          sp.mustNotText.flatMap { case (f, w) =>
-            Analyzer.tokenize(w).map(t => FieldTerms.textTerm(f, t)) }).distinct,
-        boosts, bf)
-    }
-    val allTerms = preps.flatMap(p => p._2 ++ p._3 ++ p._4.flatten ++ p._5).distinct.sorted
-    val (dfGlobal, perSeg) = lookup(allTerms)
-    // per-spec resolution mirrors searchBool/run's early-empty rules
-    val works: Seq[Option[MsSpecWork]] =
-      preps.zip(specs).zipWithIndex.map { case (((slots, sc, sh, cls, ex, boosts, bf), sp), i) =>
-        val needAll = sp.conjunctive || sp.phrase
-        val foundClauses = cls.map(_.filter(dfGlobal.contains))
-        val shouldFound = sh.filter(dfGlobal.contains)
-        if ((sc.isEmpty && sh.isEmpty) ||
-          (sp.phrase && (slots == null || slots.isEmpty)) ||
-          foundClauses.exists(_.isEmpty) ||
-          (needAll && sc.exists(t => !dfGlobal.contains(t))) ||
-          (sc.nonEmpty && !sc.exists(dfGlobal.contains)) ||
-          shouldFound.size < sp.minShouldMatch) None
-        else Some(MsSpecWork(i, sc.filter(dfGlobal.contains), shouldFound, foundClauses,
-          ex.filter(dfGlobal.contains), sp.conjunctive, slots, sp.minShouldMatch,
-          sp.phraseSlop, boosts, bf))
-      }
-    val active = works.flatten
-    if (active.isEmpty) return specs.map(_ => Array.empty[Scored])
-    if (localSegs != null) {
-      // warm in-process batch: every spec over every local group, zero jobs
-      val res = runLocal(active.map(w => (w, null: Scored)), k, perSeg, dfGlobal,
-        n, avgdl, fieldStatsMap)
-      val byIdx = active.map(_.idx).zip(res).toMap
-      return specs.indices.map(i => byIdx.getOrElse(i, Array.empty[Scored]))
-    }
-    val needed = active.flatMap(w =>
-      w.scored ++ w.shoulds ++ w.clauses.flatten ++ w.excludes).toSet
-    val idToTerm: Map[(Int, Long), (String, Long)] =
-      perSeg.flatMap { case ((i, t), ts) =>
-        if (needed.contains(t)) dfGlobal.get(t).map(df => (i, ts.termId) -> (t, df)) else None
-      }
-    val prunedBlocks: Seq[DataFrame] = segBlocks.zipWithIndex.flatMap { case (b, i) =>
-      val ids = perSeg.collect {
-        case ((`i`, t), ts) if needed.contains(t) && dfGlobal.contains(t) => ts
-      }.toSeq
-      if (ids.isEmpty) None
-      else Some(b.filter(col("shard").isin(ids.map(_.shard).distinct: _*) &&
-          col("termId").isin(ids.map(_.termId): _*))
-        .withColumn("seg", lit(i)))
-    }
-    if (prunedBlocks.isEmpty) return specs.map(_ => Array.empty[Scored])
-    val all = withTombBlocks(prunedBlocks.reduce(_ unionByName _)
-      .select(col("seg").as("_1"), col("bucket").as("_2"),
-        struct(all_block_cols: _*).as("_3"))
-      .as[(Int, Int, PostingBlock)])
-    val nG = n
-    val avgdlG = avgdl
-    val fsMap = fieldStatsMap
-    val ws = active
-    val rows = all
-      .groupByKey { case (seg, bucket, _) => (seg, bucket) }
-      .flatMapGroups { (_, it) =>
-        val (tombBlks, grp) = MultiSearcherOps.splitTomb(it.toArray)
-        if (grp.isEmpty) Iterator.empty
-        else {
-          val segIdx = grp.head._1
-          val byTerm: Map[String, (Array[PostingBlock], Long)] =
-            grp.map(_._3).groupBy(_.termId).map { case (tid, bs) =>
-              val (t, df) = idToTerm((segIdx, tid))
-              t -> (bs, df)
-            }
-          ws.iterator.flatMap { w =>
-            MultiSearcherOps.runGroup(byTerm, tombBlks, w, k, nG, avgdlG, fsMap,
-              null).map(s => (w.idx, s.docId, s.score))
-          }
-        }
-      }
-      .collect()
-    val grouped = rows.groupBy(_._1)
-    specs.indices.map { i =>
-      grouped.getOrElse(i, Array.empty)
-        .map(r => Scored(r._2, r._3))
-        .sortBy(s => (-s.score, s.docId))
-        .take(k)
-    }
-  }
-
-  /** Stored `#field:value` terms with lo ≤ value ≤ hi across ALL
-    * segments — one unioned, prefix-pruned dictionary scan (the same
-    * one-job-per-lookup rule as [[lookup]]); an empty expansion makes
-    * the clause unsatisfiable (run returns no hits).
-    */
-  private def expandFieldRange(field: String, lo: String, hi: String): Seq[String] = {
-    val prefix = FieldTerms.term(field, "")
-    val valueCol = col("term").substr(lit(prefix.length + 1), lit(Int.MaxValue))
-    segDicts.map { d =>
-      d.filter(col("term").startsWith(prefix) &&
-          valueCol >= lit(lo) && valueCol <= lit(hi))
-        .select(col("term"))
-    }.reduce(_ unionByName _).distinct().as[String].collect().toSeq.sorted
-  }
-
-  /** Batched variant for `searchManyBool`: every spec's ranges expand
-    * off ONE unioned dictionary scan (OR of the per-range predicates),
-    * partitioned back per range on the driver.
-    */
-  private def expandFieldRanges(ranges: Seq[(String, String, String)])
-      : Map[(String, String, String), Seq[String]] = {
-    val distinct = ranges.distinct
-    if (distinct.isEmpty) return Map.empty
-    val preds = distinct.map { case (f, lo, hi) =>
-      val prefix = FieldTerms.term(f, "")
-      val valueCol = col("term").substr(lit(prefix.length + 1), lit(Int.MaxValue))
-      col("term").startsWith(prefix) && valueCol >= lit(lo) && valueCol <= lit(hi)
-    }
-    val terms = segDicts.map(_.filter(preds.reduce(_ || _)).select(col("term")))
-      .reduce(_ unionByName _).distinct().as[String].collect().toSeq
-    def matches(r: (String, String, String), term: String): Boolean = {
-      val prefix = FieldTerms.term(r._1, "")
-      term.startsWith(prefix) && {
-        val v = term.substring(prefix.length)
-        r._2 <= v && v <= r._3
-      }
-    }
-    distinct.map(r => r -> terms.filter(matches(r, _)).sorted).toMap
-  }
-
-  // --- term-expansion queries (ES prefix / wildcard / fuzzy) --------------
-
-  /** Matching dictionary terms of ONE analyzed field across all
-    * segments ("text" = the main namespace; others expand within their
-    * `%field:` namespace — the predicate sees the BARE token): ascending
-    * term order, capped at maxExpansions over the GLOBAL distinct set —
-    * the same deterministic rewrite rule as the single-index `Searcher`,
-    * so a compacted index answers identically. ONE unioned dict scan.
-    */
-  private def expand(sqlPredOf: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
-      maxExpansions: Int, field: String = "text",
-      /** Bare-token length bounds implied by an edit-distance
-        * predicate: pushed to each segment dict's stored `len` column
-        * (format v2) so the parquet reader prunes before levenshtein
-        * ever evaluates; legacy dicts skip the prune (the predicate
-        * implies it — correctness unchanged).
-        */
-      lenRange: Option[(Int, Int)] = None): Seq[String] = {
-    val pred =
-      if (field == "text")
-        !col("term").startsWith(FieldTerms.Prefix) &&
-          !col("term").startsWith(FieldTerms.TextPrefix) && sqlPredOf(col("term"))
-      else {
-        val pfx = FieldTerms.textTerm(field, "")
-        col("term").startsWith(pfx) &&
-          sqlPredOf(col("term").substr(lit(pfx.length + 1), lit(Int.MaxValue)))
-      }
-    segDicts.map { d =>
-      val base = lenRange match {
-        case Some((lo, hi)) if d.columns.contains("len") =>
-          d.filter(col("len").between(lit(lo), lit(hi)))
-        case _ => d
-      }
-      base.filter(pred).select(col("term"))
-    }.reduce(_ unionByName _).distinct()
-      .orderBy(col("term")).limit(maxExpansions)
-      .as[String].collect().toSeq
-  }
-
-  /** Prefix query (ES `prefix`) over the union of all segments;
-    * `field` expands (and scores) within that analyzed field.
-    */
-  def searchPrefix(prefix: String, k: Int, maxExpansions: Int = 50,
-      field: String = "text"): Array[Scored] = {
-    val toks = Analyzer.tokenize(prefix)
-    if (toks.isEmpty) return Array.empty
-    run(expand(_.startsWith(toks(0)), maxExpansions, field), k, conjunctive = false)
-  }
-
-  /** Wildcard query (ES `wildcard`) over the union of all segments. */
-  def searchWildcard(pattern: String, k: Int, maxExpansions: Int = 50,
-      field: String = "text"): Array[Scored] = {
-    val like = Expansion.wildcardLike(pattern.toLowerCase(java.util.Locale.ROOT))
-    run(expand(_.like(like), maxExpansions, field), k, conjunctive = false)
-  }
-
-  /** Fuzzy query (ES `fuzziness`) over the union of all segments —
-    * the dict scans prune by the stored bare-token `len` range first;
-    * `prefixLength` (ES `prefix_length`) adds a row-group-prunable
-    * `startsWith` like the single-index searcher.
-    */
-  def searchFuzzy(term: String, k: Int, maxDist: Int = 1,
-      maxExpansions: Int = 50, field: String = "text",
-      prefixLength: Int = 0): Array[Scored] = {
-    val toks = Analyzer.tokenize(term)
-    if (toks.isEmpty) return Array.empty
-    val t0 = toks(0)
-    // Lucene rule: prefix_length ≥ len(term) ⇒ exact term query (the
-    // single-index searcher's twin — round-7 review)
-    if (prefixLength >= t0.length)
-      return run(expand(_ === lit(t0), maxExpansions, field,
-          lenRange = Some((t0.length, t0.length))),
-        k, conjunctive = false)
-    val pfx = t0.take(prefixLength)
-    run(expand(c => c.startsWith(pfx) && levenshtein(lit(t0), c) <= lit(maxDist),
-        maxExpansions, field,
-        lenRange = Some((math.max(1, t0.length - maxDist), t0.length + maxDist))),
-      k, conjunctive = false)
-  }
-
-  /** ES `constant_score` over the union of all segments — same rule as
-    * the single-index searcher (boost score, docId-asc deterministic
-    * ties, LWW-visible membership).
-    */
-  def searchConstantScore(query: String, k: Int, boost: Double = 1.0,
-      filters: Seq[(String, String)] = Nil,
-      mustNot: Seq[(String, String)] = Nil,
-      numericRangeFilters: Seq[(String, Long, Long)] = Nil,
-      anyFilters: Seq[(String, Seq[String])] = Nil,
-      rangeFilters: Seq[(String, String, String)] = Nil,
-      exists: Seq[String] = Nil,
-      missing: Seq[String] = Nil): DataFrame =
-    matchingOrEmpty(query, filters, mustNot, numericRangeFilters, anyFilters,
-      rangeFilters, exists, missing)
-      .orderBy(col("docId")).limit(k)
-      .withColumn("score", lit(boost))
-
-  /** ES `boosting` query over the union of all segments — same contract
-    * as [[Searcher.boosting]] (positive scored match set, negative
-    * MEMBERSHIP demotion), under the merged LWW-exact stats with
-    * tombstoned docs excluded.
-    */
-  def boosting(positive: String, negative: String, k: Int,
-      negativeBoost: Double = 0.5): DataFrame = {
-    require(k > 0, "boosting size must be positive")
-    require(negativeBoost >= 0, "negative_boost must be >= 0 (ES contract)")
-    scoredMatches(Analyzer.analyzeQuery(positive).toSeq) match {
-      case None =>
-        Seq.empty[(Long, Double)].toDF("doc_id", "score")
-      case Some(pos) =>
-        val neg = matchingOrEmpty(negative)
-          .select(col("docId"), lit(true).as("__neg"))
-        pos.join(neg, Seq("docId"), "left")
-          .select(col("docId").as("doc_id"),
-            when(col("__neg").isNotNull, col("score") * lit(negativeBoost))
-              .otherwise(col("score")).as("score"))
-          .orderBy(col("score").desc, col("doc_id").asc)
-          .limit(k)
-    }
-  }
-
-  /** ES `function_score` field_value_factor as a rescore window over
-    * the union of all segments — same contract as the single-index
-    * searcher (merged-stats BM25 window, one multiply, LWW doc store).
-    */
-  def rescoreByFieldFactor(query: String, k: Int, window: Int,
-      field: String, factor: Double,
-      /** ES `field_value_factor.missing` — see
-        * [[Searcher.rescoreByFieldFactor]]; None fails loudly on nulls.
-        */
-      missing: Option[Double] = None): DataFrame = {
-    require(window >= k, "rescore window must be >= k")
-    val top = run(Analyzer.analyzeQuery(query).toSeq, window, conjunctive = false)
-    val topDF = top.toSeq.map(h => (h.docId, h.score)).toDF("docId", "bm25")
-    // window-bounded fetch: push In(docId, ...) to the doc-store scans
-    // (row-group pruning — round-7 review #8)
-    rawDocs.filter(col("docId").isin(top.map(_.docId).toSeq: _*))
-      .select(col("docId"), Searcher.fvfValue(col(field), field, missing))
-      .join(broadcast(topDF), Seq("docId"))
-      .select(col("docId"),
-        (col("bm25") * (lit(factor) * col("__fv"))).as("score"))
-      .orderBy(col("score").desc, col("docId").asc)
-      .limit(k)
-  }
-
-  /** ES `function_score` decay over the union of all segments — same
-    * contract as [[Searcher.rescoreByDecay]] (bounded rescore window,
-    * shared closed-form multiplier), under the merged LWW-exact stats.
-    */
-  def rescoreByDecay(query: String, k: Int, window: Int, field: String,
-      shape: String, origin: Double, scale: Double,
-      offset: Double = 0.0, decay: Double = 0.5,
-      missing: Option[Double] = None): DataFrame = {
-    require(window >= k, "rescore window must be >= k")
-    val top = run(Analyzer.analyzeQuery(query).toSeq, window, conjunctive = false)
-    val topDF = top.toSeq.map(h => (h.docId, h.score)).toDF("docId", "bm25")
-    val vCol = rawDocs.schema(field).dataType match {
-      case org.apache.spark.sql.types.TimestampType =>
-        unix_millis(col(field)).cast("double")
-      case _ => col(field).cast("double")
-    }
-    rawDocs.filter(col("docId").isin(top.map(_.docId).toSeq: _*))
-      .select(col("docId"), Searcher.fvfValue(vCol, field, missing))
-      .join(broadcast(topDF), Seq("docId"))
-      .select(col("docId"), (col("bm25") *
-        FunctionScore.decayMultiplier(col("__fv"), shape, origin, scale, offset, decay))
-        .as("score"))
-      .orderBy(col("score").desc, col("docId").asc)
-      .limit(k)
-  }
-
-  /** ES `regexp` query over the union of all segments (Lucene whole-
-    * term anchoring; same deterministic term-asc capped rewrite as the
-    * single-index searcher).
-    */
-  def searchRegexp(pattern: String, k: Int, maxExpansions: Int = 50,
-      field: String = "text"): Array[Scored] = {
-    val anchored = "^(?:" + pattern + ")$"
-    run(expand(_.rlike(anchored), maxExpansions, field), k, conjunctive = false)
-  }
-
-  /** Per-token capped expansion across ALL segments with the cap IN the
-    * plan (mirrors `Searcher.expandPerToken`, round-7 review "What's
-    * wrong #1"): one unioned len-pruned dictionary scan → global
-    * distinct terms → each row explodes to the tokens within `maxDist`
-    * of its bare token → a term-asc rank-≤-cap window per token
-    * (InferWindowGroupLimit ⇒ pre-shuffle per-partition group limits),
-    * so the driver collects ≤ |tokens| × cap rows at any vocabulary
-    * size. Returns token → term-asc capped NAMESPACED terms.
-    */
-  private def expandPerToken(toks: Seq[String], maxDist: Int, perTokenCap: Int,
-      field: String): Map[String, Seq[String]] = {
-    if (toks.isEmpty) return Map.empty
-    val lo = math.max(1, toks.map(_.length).min - maxDist)
-    val hi = toks.map(_.length).max + maxDist
-    val pfx = if (field == "text") "" else FieldTerms.textTerm(field, "")
-    val nsPred =
-      if (pfx.isEmpty)
-        !col("term").startsWith(FieldTerms.Prefix) &&
-          !col("term").startsWith(FieldTerms.TextPrefix)
-      else col("term").startsWith(pfx)
-    val union = segDicts.map { d =>
-      val base =
-        if (d.columns.contains("len")) d.filter(col("len").between(lit(lo), lit(hi)))
-        else d
-      base.filter(nsPred).select(col("term"))
-    }.reduce(_ unionByName _).distinct()
-    val bareCol =
-      if (pfx.isEmpty) col("term")
-      else col("term").substr(lit(pfx.length + 1), lit(Int.MaxValue))
-    val tokArr = array(toks.distinct.sorted.map(lit): _*)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("__tok")).orderBy(col("term").asc)
-    union
-      .select(col("term"),
-        explode(org.apache.spark.sql.functions.filter(tokArr,
-          t => levenshtein(t, bareCol) <= lit(maxDist))).as("__tok"))
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= lit(perTokenCap))
-      .select(col("__tok"), col("term"))
-      .as[(String, String)].collect()
-      .toSeq.groupBy(_._1).view.mapValues(_.map(_._2).sorted).toMap
-  }
-
-  /** ES `match` with `fuzziness` over the union of all segments: per-
-    * token capped expansion with the cap IN the plan (ONE unioned dict
-    * scan for ALL tokens, length-pruned — [[expandPerToken]]), union
-    * scored as one BM25 OR — identical rewrite rule to
-    * [[Searcher.searchMatchFuzzy]] so the two searchers agree.
-    */
-  def searchMatchFuzzy(query: String, k: Int, maxDist: Int = 1,
-      maxExpansionsPerTerm: Int = 50, field: String = "text"): Array[Scored] = {
-    val toks = Analyzer.analyzeQuery(query).toSeq.sorted
-    if (toks.isEmpty) return Array.empty
-    val selected = expandPerToken(toks, maxDist, maxExpansionsPerTerm, field)
-      .valuesIterator.flatten.toSeq.distinct
-    run(selected, k, conjunctive = false)
-  }
-
-  /** ES `dis_max` as a general combinator over the union of all
-    * segments — the [[Wand.BestFields]] fold over query groups, same
-    * semantics as [[Searcher.searchDisMax]].
-    */
-  def searchDisMax(queries: Seq[String], k: Int,
-      tieBreaker: Double = 0.0): Array[Scored] = {
-    val groups = queries.map(q => Analyzer.analyzeQuery(q).toSeq.distinct.sorted)
-    require(groups.exists(_.nonEmpty), "dis_max needs >= 1 non-empty sub-query")
-    val groupsOf: Map[String, Seq[Int]] = groups.zipWithIndex
-      .flatMap { case (ts, i) => ts.map(_ -> i) }
-      .groupBy(_._1).view.mapValues(_.map(_._2).sorted).toMap
-    run(groups.flatten.distinct.sorted, k, conjunctive = false,
-      bestFields = new Wand.BestFields(Map.empty, groups.size, tieBreaker, groupsOf))
-  }
-
-  // --- match-set operators (facets / aggs / sort / count) -----------------
-
-  /** Distinct decoded docIds of `terms` across all segments (union of
-    * shard-pruned docIds-only block scans — docIds globally disjoint).
-    * None when no segment holds any of the terms.
-    */
-  private def decodeDocIds(perSeg: Map[(Int, String), TermStats],
-      terms: Set[String]): Option[DataFrame] =
-    decodeDocIdsRaw(perSeg, terms).map(_.distinct())
-
-  /** Same decoded stream WITHOUT the distinct — for the right side of
-    * semi/anti joins, where dedup is redundant (set-membership
-    * semantics) and the distinct's Exchange+HashAggregate is a pure
-    * cost (guide §2.4). Identical single-index reasoning in
-    * [[Searcher]].
-    */
-  private def decodeDocIdsRaw(perSeg: Map[(Int, String), TermStats],
-      terms: Set[String]): Option[DataFrame] = {
-    val pruned = segBlocks.zipWithIndex.flatMap { case (b, i) =>
-      val ids = perSeg.collect { case ((`i`, t), ts) if terms.contains(t) => ts }.toSeq
-      if (ids.isEmpty) None
-      else Some(b.filter(col("shard").isin(ids.map(_.shard).distinct: _*) &&
-          col("termId").isin(ids.map(_.termId): _*))
-        .select(col("docs"), col("count"), col("firstDocId")))
-    }
-    if (pruned.isEmpty) None
-    else Some(pruned.reduce(_ unionByName _)
-      .as[(Array[Byte], Int, Long)]
-      .flatMap { case (ds, n0, first) => graft.index.Codec.deltaDecode(ds, n0, first) }
-      .toDF("docId"))
-  }
-
-  /** Membership of the FULL bool query across segments (ES aggs run
-    * over the filtered query): scored-term docIds semi-joined per
-    * filter clause, anti-joined against must_not and tombstones —
-    * exactly the single-index plan shape, minus superseded docs.
-    */
-  private def matchSet(query: String,
-      filters: Seq[(String, String)] = Nil,
-      mustNot: Seq[(String, String)] = Nil,
-      numericRangeFilters: Seq[(String, Long, Long)] = Nil,
-      anyFilters: Seq[(String, Seq[String])] = Nil,
-      rangeFilters: Seq[(String, String, String)] = Nil,
-      exists: Seq[String] = Nil,
-      missing: Seq[String] = Nil): Option[DataFrame] = {
-    guardExists(exists, missing)
-    val terms = Analyzer.analyzeQuery(query).toSeq
-    val clauses: Seq[Seq[String]] =
-      filters.map { case (f, v) => Seq(FieldTerms.term(f, v)) } ++
-        anyFilters.map { case (f, vs) => vs.distinct.map(v => FieldTerms.term(f, v)) } ++
-        numericRangeFilters.map { case (f, lo, hi) => FieldTerms.trieRangeTerms(f, lo, hi) } ++
-        rangeFilters.map { case (f, lo, hi) => expandFieldRange(f, lo, hi) } ++
-        exists.map(f => Seq(FieldTerms.existsTerm(f)))
-    val excludeTerms = (mustNot.map { case (f, v) => FieldTerms.term(f, v) } ++
-      missing.map(f => FieldTerms.existsTerm(f))).distinct
-    val (dfGlobal, perSeg) =
-      lookup(terms ++ clauses.flatten.distinct ++ excludeTerms)
-    val scoredFound = terms.filter(dfGlobal.contains)
-    if (scoredFound.isEmpty) return None
-    val foundClauses = clauses.map(_.filter(dfGlobal.contains))
-    if (foundClauses.exists(_.isEmpty)) return None
-    var m = decodeDocIds(perSeg, scoredFound.toSet).getOrElse(return None)
-    for (cl <- foundClauses)
-      decodeDocIdsRaw(perSeg, cl.toSet) match {
-        case Some(c) => m = m.join(c, Seq("docId"), "left_semi")
-        case None => return None
-      }
-    val exFound = excludeTerms.filter(dfGlobal.contains)
-    if (exFound.nonEmpty)
-      decodeDocIdsRaw(perSeg, exFound.toSet).foreach(e =>
-        m = m.join(e, Seq("docId"), "left_anti"))
-    // ONE tombstone snapshot per searcher (the cached check): the WAND
-    // paths' exclusion blocks and the agg paths' anti-join see the same
-    // store state, and no per-query filesystem round-trip happens
-    // (round-5 review "What's wrong #2")
-    Some(if (hasTombstones) m.join(tombDF, Seq("docId"), "left_anti") else m)
-  }
-
-  private def matchingOrEmpty(query: String,
-      filters: Seq[(String, String)] = Nil,
-      mustNot: Seq[(String, String)] = Nil,
-      numericRangeFilters: Seq[(String, Long, Long)] = Nil,
-      anyFilters: Seq[(String, Seq[String])] = Nil,
-      rangeFilters: Seq[(String, String, String)] = Nil,
-      exists: Seq[String] = Nil,
-      missing: Seq[String] = Nil): DataFrame =
-    matchSet(query, filters, mustNot, numericRangeFilters, anyFilters, rangeFilters,
-      exists, missing)
-      .getOrElse(Seq.empty[Long].toDF("docId"))
-
-  /** Exact cross-segment BM25 scores of EVERY LWW-visible matching doc
-    * as a distributed (docId, score) frame — the [[collapse]] input.
-    * Mirrors [[Searcher.scoredMatches]]: per-segment posting decode
-    * (docId+tf+dl, pruned to the query terms' (shard, termId) sets),
-    * broadcast join of the tiny (seg, termId) → (term, GLOBAL df) side
-    * (df is the LWW-exact merged df — the same stats the WAND path
-    * scores under), ascending-term fold per doc, tombstoned/superseded
-    * docs anti-joined out.
-    */
-  /** Decoded (docId, term, tf, dl, df) posting rows of the query's
-    * terms across segments under the LWW-exact merged df — shared input
-    * of [[scoredMatches]] and [[explain]]. NOT tombstone-filtered;
-    * every consumer must exclude removed docs itself.
-    */
-  private def postingRows(terms: Seq[String]): Option[DataFrame] = {
-    val (dfGlobal, perSeg) = lookup(terms.distinct.sorted)
-    if (!terms.exists(dfGlobal.contains)) return None
-    val idRows = perSeg.toSeq.flatMap { case ((i, t), ts) =>
-      dfGlobal.get(t).map(df => (i, ts.termId, t, df))
-    }
-    if (idRows.isEmpty) return None
-    val idFrame = idRows.toDF("seg", "termId", "term", "df")
-    val pruned = segBlocks.zipWithIndex.flatMap { case (b, i) =>
-      val ids = perSeg.collect { case ((`i`, t), ts) if dfGlobal.contains(t) => ts }.toSeq
-      if (ids.isEmpty) None
-      else Some(b.filter(col("shard").isin(ids.map(_.shard).distinct: _*) &&
-          col("termId").isin(ids.map(_.termId): _*))
-        .select(lit(i).as("seg"), col("termId"), col("docs"), col("tfs"),
-          col("dls"), col("count"), col("firstDocId")))
-    }
-    if (pruned.isEmpty) return None
-    val posts = pruned.reduce(_ unionByName _)
-      .as[(Int, Long, Array[Byte], Array[Byte], Array[Byte], Int, Long)]
-      .flatMap { case (seg, tid, ds, tfs, dls, cnt, first) =>
-        val ids = graft.index.Codec.deltaDecode(ds, cnt, first)
-        val tfA = graft.index.Codec.decodeVarInts(tfs, cnt)
-        val dlA = graft.index.Codec.decodeVarInts(dls, cnt)
-        Iterator.range(0, cnt).map(i => (seg, tid, ids(i), tfA(i), dlA(i)))
-      }.toDF("seg", "termId", "docId", "tf", "dl")
-    Some(posts.join(broadcast(idFrame), Seq("seg", "termId")))
-  }
-
-  private def scoredMatches(terms: Seq[String]): Option[DataFrame] = {
-    val nG = n
-    val avgdlG = avgdl
-    postingRows(terms).map { rows =>
-      val scored = rows.select(col("docId"), struct(col("term"),
-          Bm25.scoreCol(col("tf"), col("df"), col("dl"), nG, avgdlG).as("s")).as("c"))
-        .groupBy(col("docId"))
-        .agg(aggregate(sort_array(collect_list(col("c"))), lit(0.0),
-          (acc, x) => acc + x.getField("s")).as("score"))
-      if (hasTombstones) scored.join(tombDF, Seq("docId"), "left_anti") else scored
-    }
-  }
-
-  /** ES `_explain` across segments — identical contract to
-    * [[Searcher.explain]] (per-term (tf, df, dl, idf, weight) rows,
-    * sum(weight) ≡ the hit's search score) under the LWW-exact merged
-    * stats; a tombstoned docId explains to zero rows (the doc no
-    * longer exists).
-    */
-  def explain(query: String, docId: Long): DataFrame = {
-    val terms = Analyzer.analyzeQuery(query).toSeq
-    val nG = n
-    val avgdlG = avgdl
-    postingRows(terms) match {
-      case None =>
-        Seq.empty[(String, Int, Long, Int, Double, Double)]
-          .toDF("term", "tf", "df", "dl", "idf", "weight")
-      case Some(rows) =>
-        val mine = rows.filter(col("docId") === lit(docId))
-        val live =
-          if (hasTombstones) mine.join(tombDF, Seq("docId"), "left_anti") else mine
-        live.select(col("term"), col("tf"), col("df"), col("dl"),
-            Bm25.idfCol(col("df"), nG).as("idf"),
-            Bm25.scoreCol(col("tf"), col("df"), col("dl"), nG, avgdlG).as("weight"))
-          .orderBy(col("term"))
-    }
-  }
-
-  /** ES scroll (`sort: _doc` bulk export) across segments — identical
-    * contract to [[Searcher.scrollAll]]: the full scored match set as a
-    * distributed frame under the LWW-exact merged stats, tombstoned
-    * docs excluded.
-    */
-  def scrollAll(query: String): DataFrame =
-    scoredMatches(Analyzer.analyzeQuery(query).toSeq)
-      .getOrElse(Seq.empty[(Long, Double)].toDF("docId", "score"))
-
-  /** ES `_termvectors` across segments — identical contract to
-    * [[Searcher.termVectors]]; the doc's text comes from ITS segment's
-    * store, df from the LWW-exact merged dictionary, and a tombstoned
-    * docId returns 0 rows (the doc no longer exists).
-    */
-  def termVectors(docId: Long): DataFrame = {
-    val empty = Seq.empty[(String, Int, Int, Int, Int, Long)]
-      .toDF("term", "pos", "start_offset", "end_offset", "tf", "df")
-    // tombstone exclusion folded into the ONE point-read job (left_anti
-    // before the collect) — a separate tombDF count was an extra Spark
-    // job per call, scaling with tombstone-frame scan cost (r8 ADVICE)
-    val mine = rawDocs.filter(col("docId") === lit(docId)).select(col("docId"), col("text"))
-    val live = if (hasTombstones) mine.join(tombDF, Seq("docId"), "left_anti") else mine
-    val row = live.select("text").collect()
-    if (row.isEmpty || row.head.isNullAt(0)) return empty
-    val toks = Analyzer.tokenizeWithOffsets(row.head.getString(0))
-    if (toks.isEmpty) return empty
-    val tf = toks.groupBy(_._1).map { case (t, occ) => t -> occ.length }
-    val (dfGlobal, _) = lookup(tf.keys.toSeq.sorted)
-    toks.zipWithIndex
-      .map { case ((t, s, e), i) =>
-        (t, i, s, e, tf(t), dfGlobal.getOrElse(t, 0L))
-      }
-      .sortBy(r => (r._1, r._2)).toSeq
-      .toDF("term", "pos", "start_offset", "end_offset", "tf", "df")
-  }
-
-  /** ES field collapsing over the union of all segments — identical
-    * contract to [[Searcher.collapse]] (one best hit per key, global
-    * top-k groups), under the merged LWW-exact stats. Same plan shape:
-    * scored matches → key join → pre-shuffle group-limit window →
-    * TakeOrderedAndProject.
-    */
-  def collapse(query: String, field: String, k: Int,
-      filters: Seq[(String, String)] = Nil,
-      mustNot: Seq[(String, String)] = Nil,
-      numericRangeFilters: Seq[(String, Long, Long)] = Nil,
-      anyFilters: Seq[(String, Seq[String])] = Nil,
-      rangeFilters: Seq[(String, String, String)] = Nil,
-      exists: Seq[String] = Nil,
-      missing: Seq[String] = Nil,
-      /** ES collapse `inner_hits.size` — see [[Searcher.collapse]]. */
-      innerHits: Int = 1): DataFrame = {
-    require(k > 0, "collapse size must be positive")
-    require(innerHits > 0, "inner_hits size must be positive")
-    scoredMatches(Analyzer.analyzeQuery(query).toSeq) match {
-      case None =>
-        rawDocs.select(col(field).as("key")).limit(0)
-          .withColumn("hit_rank", lit(0)).withColumn("doc_id", lit(0L))
-          .withColumn("score", lit(0.0))
-      case Some(scored0) =>
-        val scored =
-          if (filters.isEmpty && mustNot.isEmpty && numericRangeFilters.isEmpty &&
-            anyFilters.isEmpty && rangeFilters.isEmpty && exists.isEmpty && missing.isEmpty)
-            scored0
-          else scored0.join(matchingOrEmpty(query, filters, mustNot,
-            numericRangeFilters, anyFilters, rangeFilters, exists, missing),
-            Seq("docId"), "left_semi")
-        Searcher.collapseOf(
-          rawDocs.select(col("docId"), col(field).as("key")).join(scored, Seq("docId")),
-          k, innerHits)
-    }
-  }
-
-  /** ES `terms` aggregation (facets) over the cross-segment match set. */
-  def facetCounts(query: String, field: String,
-      filters: Seq[(String, String)] = Nil,
-      mustNot: Seq[(String, String)] = Nil,
-      numericRangeFilters: Seq[(String, Long, Long)] = Nil,
-      anyFilters: Seq[(String, Seq[String])] = Nil,
-      rangeFilters: Seq[(String, String, String)] = Nil,
-      exists: Seq[String] = Nil,
-      missing: Seq[String] = Nil,
-      /** ES terms-agg `size` — top buckets by count desc (value asc
-        * tiebreak); 0 = every bucket, value-ordered.
-        */
-      size: Int = 0): DataFrame = {
-    val agged = rawDocs.select(col("docId"), col(field).as("value"))
-      .join(matchingOrEmpty(query, filters, mustNot, numericRangeFilters, anyFilters,
-        rangeFilters, exists, missing), Seq("docId"))
-      .groupBy(col("value")).agg(count(lit(1)).as("n_docs"))
-    if (size > 0) agged.orderBy(col("n_docs").desc, col("value").asc).limit(size)
-    else agged.orderBy(col("value"))
-  }
-
-  /** ES `range` aggregation over the cross-segment match set — same
-    * one-pass conditional-count body as the single-index searcher.
-    */
-  def rangesAgg(query: String, field: String,
-      ranges: Seq[(Option[Long], Option[Long])],
-      filters: Seq[(String, String)] = Nil,
-      mustNot: Seq[(String, String)] = Nil,
-      numericRangeFilters: Seq[(String, Long, Long)] = Nil,
-      anyFilters: Seq[(String, Seq[String])] = Nil,
-      rangeFilters: Seq[(String, String, String)] = Nil,
-      exists: Seq[String] = Nil,
-      missing: Seq[String] = Nil): DataFrame = {
-    require(ranges.nonEmpty, "range aggregation needs >= 1 range")
-    val joined = rawDocs.select(col("docId"), col(field))
-      .join(matchingOrEmpty(query, filters, mustNot, numericRangeFilters, anyFilters,
-        rangeFilters, exists, missing), Seq("docId"))
-    Searcher.rangesAggOf(joined, col(field), ranges)
-  }
-
-  /** ES `hits.total` over the union of all segments (tombstones
-    * excluded).
-    */
-  def matchCount(query: String,
-      filters: Seq[(String, String)] = Nil,
-      mustNot: Seq[(String, String)] = Nil,
-      numericRangeFilters: Seq[(String, Long, Long)] = Nil,
-      anyFilters: Seq[(String, Seq[String])] = Nil,
-      rangeFilters: Seq[(String, String, String)] = Nil,
-      exists: Seq[String] = Nil,
-      missing: Seq[String] = Nil): Long =
-    matchSet(query, filters, mustNot, numericRangeFilters, anyFilters, rangeFilters,
-      exists, missing).map(_.count()).getOrElse(0L)
-
-  /** ES `sort`-by-field top-k over the cross-segment match set. */
-  def searchSortedBy(query: String, field: String, k: Int,
-      descending: Boolean = true,
-      filters: Seq[(String, String)] = Nil,
-      mustNot: Seq[(String, String)] = Nil,
-      numericRangeFilters: Seq[(String, Long, Long)] = Nil,
-      anyFilters: Seq[(String, Seq[String])] = Nil,
-      rangeFilters: Seq[(String, String, String)] = Nil,
-      exists: Seq[String] = Nil,
-      missing: Seq[String] = Nil,
-      /** Pagination offset on the field ordering (ES sort + from);
-        * plans as TakeOrderedAndProject with limit+offset — still
-        * per-partition heaps, never a global sort.
-        */
-      from: Int = 0,
-      /** ES `search_after` on the FIELD ordering — (fieldValue, docId)
-        * cursor; deep pages cost k per partition heap, not from + k.
-        */
-      after: Option[(Any, Long)] = None): DataFrame = {
-    val ord =
-      if (descending) Seq(col(field).desc, col("docId").asc)
-      else Seq(col(field).asc, col("docId").asc)
-    val base = rawDocs.select(col("docId"), col(field))
-      .join(matchingOrEmpty(query, filters, mustNot, numericRangeFilters, anyFilters,
-        rangeFilters, exists, missing), Seq("docId"))
-    val paged = after match {
-      case None => base
-      case Some((v, d)) =>
-        val cur =
-          if (descending) col(field) < lit(v) || (col(field) === lit(v) && col("docId") > lit(d))
-          else col(field) > lit(v) || (col(field) === lit(v) && col("docId") > lit(d))
-        base.filter(cur)
-    }
-    paged.orderBy(ord: _*).offset(from).limit(k)
-  }
-
-  /** ES sub-aggregation over the cross-segment match set: `terms`
-    * buckets over `bucketField` with a nested `stats` of `statField`
-    * per bucket (same plan shape as [[facetCounts]], one extra agg
-    * column set).
-    */
-  def facetStats(query: String, bucketField: String, statField: String,
-      filters: Seq[(String, String)] = Nil,
-      mustNot: Seq[(String, String)] = Nil,
-      numericRangeFilters: Seq[(String, Long, Long)] = Nil,
-      anyFilters: Seq[(String, Seq[String])] = Nil,
-      rangeFilters: Seq[(String, String, String)] = Nil,
-      exists: Seq[String] = Nil,
-      missing: Seq[String] = Nil): DataFrame =
-    rawDocs.select(col("docId"), col(bucketField).as("value"), col(statField))
-      .join(matchingOrEmpty(query, filters, mustNot, numericRangeFilters, anyFilters,
-        rangeFilters, exists, missing), Seq("docId"))
-      .groupBy(col("value"))
-      .agg(count(lit(1)).as("n_docs"), min(col(statField)).as("min"),
-        max(col(statField)).as("max"), avg(col(statField)).as("avg"),
-        sum(col(statField)).as("sum"))
-      .orderBy(col("value"))
-
-  /** ES `histogram` aggregation over the cross-segment match set. */
-  def numericHistogram(query: String, field: String, width: Long,
-      filters: Seq[(String, String)] = Nil,
-      mustNot: Seq[(String, String)] = Nil,
-      numericRangeFilters: Seq[(String, Long, Long)] = Nil,
-      anyFilters: Seq[(String, Seq[String])] = Nil,
-      rangeFilters: Seq[(String, String, String)] = Nil,
-      exists: Seq[String] = Nil,
-      missing: Seq[String] = Nil): DataFrame = {
-    require(width > 0, "histogram width must be positive")
-    rawDocs.select(col("docId"), col(field))
-      .join(matchingOrEmpty(query, filters, mustNot, numericRangeFilters, anyFilters,
-        rangeFilters, exists, missing), Seq("docId"))
-      .groupBy((floor(col(field) / lit(width)) * lit(width)).cast("long").as("bucket"))
-      .agg(count(lit(1)).as("n_docs"))
-      .orderBy(col("bucket"))
-  }
-
-  /** ES `date_histogram` over the cross-segment match set. */
-  def dateHistogram(query: String, field: String, interval: String,
-      filters: Seq[(String, String)] = Nil,
-      mustNot: Seq[(String, String)] = Nil,
-      numericRangeFilters: Seq[(String, Long, Long)] = Nil,
-      anyFilters: Seq[(String, Seq[String])] = Nil,
-      rangeFilters: Seq[(String, String, String)] = Nil,
-      exists: Seq[String] = Nil,
-      missing: Seq[String] = Nil): DataFrame =
-    rawDocs.select(col("docId"), col(field))
-      .join(matchingOrEmpty(query, filters, mustNot, numericRangeFilters, anyFilters,
-        rangeFilters, exists, missing), Seq("docId"))
-      .groupBy(date_trunc(interval, col(field)).as("bucket"))
-      .agg(count(lit(1)).as("n_docs"))
-      .orderBy(col("bucket"))
-
-  /** ES `stats` aggregation over the cross-segment match set. */
-  def fieldStats(query: String, field: String,
-      filters: Seq[(String, String)] = Nil,
-      mustNot: Seq[(String, String)] = Nil,
-      numericRangeFilters: Seq[(String, Long, Long)] = Nil,
-      anyFilters: Seq[(String, Seq[String])] = Nil,
-      rangeFilters: Seq[(String, String, String)] = Nil,
-      exists: Seq[String] = Nil,
-      missing: Seq[String] = Nil): DataFrame =
-    rawDocs.select(col("docId"), col(field))
-      .join(matchingOrEmpty(query, filters, mustNot, numericRangeFilters, anyFilters,
-        rangeFilters, exists, missing), Seq("docId"))
-      .agg(count(lit(1)).as("n_docs"), min(col(field)).as("min"),
-        max(col(field)).as("max"), avg(col(field)).as("avg"),
-        sum(col(field)).as("sum"))
-
-  /** ES `cardinality` aggregation over the cross-segment match set
-    * (same semantics as the single-index searcher: exact distributed
-    * count-distinct, or the HyperLogLog++ sketch when `approximate`).
-    */
-  /** Nested / composite aggregation tree over the cross-segment match
-    * set — same one-pass rollup contract as the single-index searcher
-    * ([[Aggs.nestedAggOf]]).
-    */
-  def nestedAgg(query: String, levels: Seq[BucketLevel],
-      statField: Option[String] = None,
-      filters: Seq[(String, String)] = Nil,
-      mustNot: Seq[(String, String)] = Nil,
-      numericRangeFilters: Seq[(String, Long, Long)] = Nil,
-      anyFilters: Seq[(String, Seq[String])] = Nil,
-      rangeFilters: Seq[(String, String, String)] = Nil,
-      exists: Seq[String] = Nil,
-      missing: Seq[String] = Nil): DataFrame = {
-    val srcCols = (levels.map(_.field) ++ statField.toSeq).distinct
-    val joined = rawDocs.select(col("docId") +: srcCols.map(col): _*)
-      .join(matchingOrEmpty(query, filters, mustNot, numericRangeFilters, anyFilters,
-        rangeFilters, exists, missing), Seq("docId"))
-    Aggs.nestedAggOf(joined, levels, statField)
-  }
-
-  /** ES `composite` aggregation with `after`-key paging over the
-    * cross-segment match set — same contract as
-    * [[Searcher.compositeAgg]] / [[Aggs.compositeAggOf]].
-    */
-  def compositeAgg(query: String, levels: Seq[BucketLevel], size: Int,
-      after: Option[Seq[Any]] = None,
-      statField: Option[String] = None,
-      filters: Seq[(String, String)] = Nil,
-      mustNot: Seq[(String, String)] = Nil,
-      numericRangeFilters: Seq[(String, Long, Long)] = Nil,
-      anyFilters: Seq[(String, Seq[String])] = Nil,
-      rangeFilters: Seq[(String, String, String)] = Nil,
-      exists: Seq[String] = Nil,
-      missing: Seq[String] = Nil): DataFrame = {
-    val srcCols = (levels.map(_.field) ++ statField.toSeq).distinct
-    val joined = rawDocs.select(col("docId") +: srcCols.map(col): _*)
-      .join(matchingOrEmpty(query, filters, mustNot, numericRangeFilters, anyFilters,
-        rangeFilters, exists, missing), Seq("docId"))
-    Aggs.compositeAggOf(joined, levels, statField, size, after)
-  }
-
-  def cardinality(query: String, field: String,
-      filters: Seq[(String, String)] = Nil,
-      mustNot: Seq[(String, String)] = Nil,
-      numericRangeFilters: Seq[(String, Long, Long)] = Nil,
-      anyFilters: Seq[(String, Seq[String])] = Nil,
-      rangeFilters: Seq[(String, String, String)] = Nil,
-      exists: Seq[String] = Nil,
-      missing: Seq[String] = Nil,
-      approximate: Boolean = false): Long =
-    matchSet(query, filters, mustNot, numericRangeFilters, anyFilters, rangeFilters,
-      exists, missing) match {
-      case None => 0L
-      case Some(m) =>
-        val joined = rawDocs.select(col("docId"), col(field)).join(m, Seq("docId"))
-        val agg =
-          if (approximate) joined.agg(approx_count_distinct(col(field)).as("c"))
-          else joined.agg(countDistinct(col(field)).as("c"))
-        agg.head().getLong(0)
-    }
-
-  /** The matched (docId, field-value) frame across segments (LWW-exact,
-    * tombstones excluded) — see [[Searcher.matchedField]]; consumed by
-    * the cross-index aggregations in [[Indices]].
-    */
-  def matchedField(query: String, field: String): DataFrame =
-    rawDocs.select(col("docId"), col(field))
-      .join(matchingOrEmpty(query), Seq("docId"))
-
-  /** ES `percentiles` aggregation over the cross-segment match set
-    * (exact `percentile`, or `percentile_approx` when `approximate` —
-    * same rules as the single-index searcher).
-    */
-  def percentiles(query: String, field: String, ps: Seq[Double],
-      filters: Seq[(String, String)] = Nil,
-      mustNot: Seq[(String, String)] = Nil,
-      numericRangeFilters: Seq[(String, Long, Long)] = Nil,
-      anyFilters: Seq[(String, Seq[String])] = Nil,
-      rangeFilters: Seq[(String, String, String)] = Nil,
-      exists: Seq[String] = Nil,
-      missing: Seq[String] = Nil,
-      approximate: Boolean = false): DataFrame = {
-    require(ps.nonEmpty && ps.forall(p => p >= 0.0 && p <= 1.0),
-      "percentiles must be in [0, 1]")
-    // Column API, not an expr() SQL string (round-6 review — injection)
-    val pLits = array(ps.map(lit): _*)
-    val aggExpr =
-      if (approximate) percentile_approx(col(field), pLits, lit(10000))
-      else percentile(col(field), pLits)
-    rawDocs.select(col("docId"), col(field))
-      .join(matchingOrEmpty(query, filters, mustNot, numericRangeFilters, anyFilters,
-        rangeFilters, exists, missing), Seq("docId"))
-      .agg(aggExpr.as("vals"))
-      .select(posexplode(col("vals")).as(Seq("pos", "value")))
-      .select(element_at(pLits, col("pos").cast("int") + 1).as("p"),
-        col("value").cast("double").as("value"))
-      .orderBy(col("p"))
-  }
-
-  /** ES `top_hits` sub-aggregation over the cross-segment match set:
-    * per-bucket top `k` by `sortField` (docId tiebreak) — row_number
-    * window whose `rank ≤ k` filter Catalyst rewrites into pre-shuffle
-    * per-partition group limits (the per-shard-heap shape).
-    */
-  def facetTopHits(query: String, bucketField: String, sortField: String,
-      k: Int, descending: Boolean = true,
-      filters: Seq[(String, String)] = Nil,
-      mustNot: Seq[(String, String)] = Nil,
-      numericRangeFilters: Seq[(String, Long, Long)] = Nil,
-      anyFilters: Seq[(String, Seq[String])] = Nil,
-      rangeFilters: Seq[(String, String, String)] = Nil,
-      exists: Seq[String] = Nil,
-      missing: Seq[String] = Nil): DataFrame = {
-    require(k > 0, "top_hits size must be positive")
-    val ord =
-      if (descending) Seq(col(sortField).desc, col("docId").asc)
-      else Seq(col(sortField).asc, col("docId").asc)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("value")).orderBy(ord: _*)
-    rawDocs.select(col("docId"), col(bucketField).as("value"), col(sortField))
-      .join(matchingOrEmpty(query, filters, mustNot, numericRangeFilters, anyFilters,
-        rangeFilters, exists, missing), Seq("docId"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= lit(k))
-      .select(col("value"), col("rank").cast("long").as("rank"),
-        col("docId").as("doc_id"), col(sortField).cast("long").as("sort_value"))
-      .orderBy(col("value"), col("rank"))
-  }
-
-  /** ES `filters` aggregation over the cross-segment match set — same
-    * one-pass named-bucket body as the single-index searcher.
-    */
-  def filtersAgg(query: String, buckets: Seq[(String, (String, String))],
-      filters: Seq[(String, String)] = Nil,
-      mustNot: Seq[(String, String)] = Nil,
-      numericRangeFilters: Seq[(String, Long, Long)] = Nil,
-      anyFilters: Seq[(String, Seq[String])] = Nil,
-      rangeFilters: Seq[(String, String, String)] = Nil,
-      exists: Seq[String] = Nil,
-      missing: Seq[String] = Nil): DataFrame = {
-    require(buckets.nonEmpty, "filters aggregation needs >= 1 named bucket")
-    val cols = buckets.map(_._2._1).distinct
-    val joined = rawDocs.select(col("docId") +: cols.map(col): _*)
-      .join(matchingOrEmpty(query, filters, mustNot, numericRangeFilters, anyFilters,
-        rangeFilters, exists, missing), Seq("docId"))
-    Searcher.filtersAggOf(joined, buckets)
-  }
-
-  /** Text-namespace background document frequencies across ALL
-    * segments, LWW-exact: per-segment dictionary rows summed, minus
-    * the removed-df corrections frame (tombstoned docs' terms) — the
-    * background model for [[significantTerms]] and the suggester,
-    * derived from index metadata (never a corpus scan).
-    */
-  private def bgDfFrame(lenRange: Option[(Int, Int)] = None): DataFrame = {
-    val union = segDicts.map { d =>
-      val base = lenRange match {
-        // stored bare-token length: pushed prune for edit-distance
-        // candidate scans (suggester); legacy dicts skip it
-        case Some((lo, hi)) if d.columns.contains("len") =>
-          d.filter(col("len").between(lit(lo), lit(hi)))
-        case _ => d
-      }
-      base.filter(
-        !col("term").startsWith(FieldTerms.Prefix) &&
-          !col("term").startsWith(FieldTerms.TextPrefix))
-        .select(col("term"), col("df"))
-    }.reduce(_ unionByName _)
-      .groupBy(col("term")).agg(sum(col("df")).as("bg_count"))
-    removedDfDF match {
-      case Some(rm) => union.join(rm, Seq("term"), "left")
-        .select(col("term"),
-          (col("bg_count") - coalesce(col("removed"), lit(0L))).as("bg_count"))
-        .filter(col("bg_count") > lit(0L))
-      case None => union
-    }
-  }
-
-  /** ES `significant_terms` over the cross-segment match set — same
-    * JLH rule as the single-index searcher; background stats come from
-    * the merged dictionaries with exact tombstone subtraction.
-    */
-  def significantTerms(query: String, k: Int, minDocCount: Long = 3L,
-      filters: Seq[(String, String)] = Nil,
-      mustNot: Seq[(String, String)] = Nil,
-      numericRangeFilters: Seq[(String, Long, Long)] = Nil,
-      anyFilters: Seq[(String, Seq[String])] = Nil,
-      rangeFilters: Seq[(String, String, String)] = Nil,
-      exists: Seq[String] = Nil,
-      missing: Seq[String] = Nil,
-      /** Same `sampler`-style foreground cap as the single-index
-        * searcher (lowest `sampleSize` docIds, deterministic); 0 = off.
-        */
-      sampleSize: Int = 0): DataFrame = {
-    val empty = Seq.empty[(String, Long, Long, Double)]
-      .toDF("term", "fg_count", "bg_count", "score")
-    matchSet(query, filters, mustNot, numericRangeFilters, anyFilters, rangeFilters,
-      exists, missing) match {
-      case None => empty
-      case Some(m0) =>
-        val m = if (sampleSize > 0) m0.orderBy(col("docId")).limit(sampleSize) else m0
-        val fgN = m.count()
-        if (fgN == 0) return empty
-        if (sampleSize > 0 && fgN == sampleSize)
-          org.slf4j.LoggerFactory.getLogger(getClass)
-            .info(s"significant_terms: foreground sampled to $sampleSize docs (sampler cap)")
-        val fg = rawDocs
-          .select(col("docId"),
-            explode(array_distinct(Analyzer.tokensCol(col("text")))).as("term"))
-          .join(m, Seq("docId"))
-          .groupBy(col("term")).agg(count(lit(1)).as("fg_count"))
-          .filter(col("fg_count") >= lit(minDocCount))
-        Searcher.jlhScore(fg.join(bgDfFrame(), Seq("term")), fgN, n)
-          .orderBy(col("score").desc, col("term").asc).limit(k)
-    }
-  }
-
-  /** ES term suggester over the union of all segments — candidates
-    * from ONE unioned dictionary scan (merged df, exact tombstone
-    * subtraction), ranked (distance asc, df desc, term asc) like the
-    * single-index searcher.
-    */
-  def suggestTerms(word: String, k: Int, maxDist: Int = 1,
-      maxCandidates: Int = 1000): DataFrame = {
-    val toks = Analyzer.tokenize(word)
-    if (toks.isEmpty) return Seq.empty[(String, Int, Long)].toDF("suggestion", "dist", "df")
-    val w = toks(0)
-    val cands = bgDfFrame(Some((math.max(1, w.length - maxDist), w.length + maxDist)))
-      .filter(col("term") =!= lit(w) &&
-        levenshtein(lit(w), col("term")) <= lit(maxDist))
-      .orderBy(col("term")).limit(maxCandidates)
-      .as[(String, Long)].collect()
-    cands.toSeq
-      .map { case (t, df) => (t, Expansion.levenshtein(w, t), df) }
-      .sortBy { case (t, d, df) => (d, -df, t) }
-      .take(k)
-      .toDF("suggestion", "dist", "df")
-  }
-
-  /** ES completion-suggester analog over the union of all segments —
-    * same (df desc, term asc) popularity rule as
-    * [[Searcher.suggestCompletion]], weights from the LWW-exact merged
-    * df (per-segment sums with exact tombstone subtraction,
-    * [[bgDfFrame]]), cap IN the plan.
-    */
-  def suggestCompletion(prefix: String, k: Int): DataFrame = {
-    require(prefix.nonEmpty, "completion prefix must be non-empty")
-    require(k > 0, "completion size must be positive")
-    val p = Analyzer.analyzeQuery(prefix).headOption.getOrElse("")
-    if (p.isEmpty) return Seq.empty[(String, Long)].toDF("suggestion", "weight")
-    bgDfFrame()
-      .filter(col("term").startsWith(p))
-      .orderBy(col("bg_count").desc, col("term").asc).limit(k)
-      .select(col("term").as("suggestion"), col("bg_count").as("weight"))
-  }
-
-  /** ES phrase suggester over the union of all segments — identical
-    * rewrite/scoring rule to [[Searcher.phraseSuggest]] (per-slot
-    * candidates from the LWW-exact merged df, bigram doc-counts from
-    * the segments' positional postings with tombstoned docs excluded),
-    * so a pre-compaction stream answers like the compacted index.
-    */
-  def phraseSuggest(phrase: String, k: Int, maxDist: Int = 1,
-      maxPerSlot: Int = 3): DataFrame = {
-    val slots = Analyzer.tokenize(phrase).toSeq
-    val empty = Seq.empty[(String, Long)].toDF("suggestion", "score")
-    if (slots.length < 2) return empty
-    val lo = math.max(1, slots.map(_.length).min - maxDist)
-    val hi = slots.map(_.length).max + maxDist
-    // per-slot (dist asc, df desc, term asc) ≤ maxPerSlot rank IN the
-    // plan over the LWW-exact background-df frame — the driver collects
-    // ≤ slots × maxPerSlot rows at any vocabulary size (round-7 review
-    // "What's wrong #1")
-    val tokArr = array(slots.distinct.sorted.map(lit): _*)
-    val w0 = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("__tok"))
-      .orderBy(levenshtein(col("__tok"), col("term")).asc,
-        col("bg_count").desc, col("term").asc)
-    val candMap: Map[String, Seq[String]] = bgDfFrame(Some((lo, hi)))
-      .select(col("term"), col("bg_count"),
-        explode(org.apache.spark.sql.functions.filter(tokArr,
-          t => levenshtein(t, col("term")) <= lit(maxDist))).as("__tok"))
-      .withColumn("__rn", row_number().over(w0))
-      .filter(col("__rn") <= lit(maxPerSlot))
-      .select(col("__tok"), col("term"), col("bg_count"))
-      .as[(String, String, Long)].collect()
-      .toSeq.groupBy(_._1).view.mapValues { xs =>
-        xs.map { case (tok, t, df) => (t, Expansion.levenshtein(tok, t), df) }
-          .sortBy { case (t, d, df) => (d, -df, t) }.map(_._1)
-      }.toMap
-    val slotCands: Seq[Seq[String]] = slots.map(w => candMap.getOrElse(w, Nil))
-    if (slotCands.exists(_.isEmpty)) return empty
-    val bigram = bigramDocCounts(Searcher.slotPairs(slotCands))
-    Searcher.phraseSuggestFrom(spark, slotCands, bigram, k)
-  }
-
-  /** Cross-segment adjacent-bigram doc-counts from positional postings:
-    * per-segment shard+termId-pruned block scans (seg-local termIds
-    * resolved via the lookup map), decoded to (term, docId, pos) with
-    * tombstoned docs anti-joined out, then the shared (docId, pos+1)
-    * equi-self-join.
-    */
-  private def bigramDocCounts(pairs: Seq[(String, String)]): Map[(String, String), Long] = {
-    if (pairs.isEmpty) return Map.empty
-    val terms = pairs.flatMap(p => Seq(p._1, p._2)).distinct.sorted
-    val (dfGlobal, perSeg) = lookup(terms)
-    val pairsFound = pairs.distinct.filter(p =>
-      dfGlobal.contains(p._1) && dfGlobal.contains(p._2))
-    if (pairsFound.isEmpty) return Map.empty
-    val pruned = segBlocks.zipWithIndex.flatMap { case (b, i) =>
-      val ids = perSeg.collect { case ((`i`, _), ts) => ts }.toSeq
-      if (ids.isEmpty) None
-      else Some(b.filter(col("shard").isin(ids.map(_.shard).distinct: _*) &&
-          col("termId").isin(ids.map(_.termId): _*))
-        .withColumn("seg", lit(i)))
-    }
-    if (pruned.isEmpty) return Map.empty
-    // (seg, termId) → term resolved inside the decode closure from the
-    // tiny driver map — the broadcast join was one more job + exchange
-    // per call (round-9; single-index twin identical)
-    val segIdToTerm: Map[(Int, Long), String] =
-      perSeg.map { case ((i, t), ts) => ((i, ts.termId), t) }
-    val exploded = pruned.reduce(_ unionByName _)
-      .select(col("seg").as("_1"), struct(all_block_cols: _*).as("_2"))
-      .as[(Int, PostingBlock)]
-      .flatMap { case (seg, b) =>
-        val d = graft.index.Codec.decodeBlock(b)
-        val poss = graft.index.Codec.decodePositions(b, d.tfs)
-        // loud like the phrase executor (see the single-index twin)
-        if (poss == null) throw new IllegalStateException(
-          "index stores no positions — phrase_suggest needs storePositions=true")
-        val term = segIdToTerm((seg, b.termId))
-        for {
-          i <- d.docIds.indices.iterator
-          p <- poss(i).iterator
-        } yield (term, d.docIds(i), p)
-      }.toDF("term", "docId", "pos")
-    val visible =
-      if (hasTombstones) exploded.join(tombDF, Seq("docId"), "left_anti") else exploded
-    Searcher.bigramCountsOf(visible, pairsFound)
-  }
-
-  /** ES `more_like_this` over the union of all segments — the source
-    * doc comes from the LWW-visible store, term selection uses the
-    * merged exact df (same deterministic rare-first rule), and the
-    * source doc is excluded from the hits.
-    */
-  def moreLikeThis(docId: Long, k: Int, maxQueryTerms: Int = 25,
-      minTermFreq: Int = 1): Array[Scored] = {
-    val row = docs.filter(col("docId") === lit(docId))
-      .select(col("text")).limit(1).collect()
-    if (row.isEmpty) return Array.empty
-    val tf = Analyzer.tokenize(row(0).getString(0))
-      .groupBy(identity).map { case (t, xs) => t -> xs.length }
-      .filter(_._2 >= minTermFreq)
-    val (dfGlobal, _) = lookup(tf.keys.toSeq.sorted)
-    val selected = tf.toSeq
-      .flatMap { case (t, f) => dfGlobal.get(t).map(df => (t, f, df)) }
-      .sortBy { case (t, f, df) => (-f, df, t) }
-      .take(maxQueryTerms).map(_._1)
-    if (selected.isEmpty) return Array.empty
-    run(selected, k + 1, conjunctive = false)
-      .filter(_.docId != docId).take(k)
-  }
-
-  /** Top-k resolved back to turn metadata + text (broadcast k hits
-    * against the live doc store).
-    */
-  def searchResolved(query: String, k: Int): DataFrame = {
-    // hits are already tombstone-excluded — resolve against the raw union
-    val hits = search(query, k)
-    val hitsDF = hits.toSeq.zipWithIndex
-      .map { case (s, i) => (s.docId, s.score, i + 1) }.toDF("docId", "score", "rank")
-    // k-bounded fetch: push In(docId, ...) to the doc-store scans
-    // (row-group pruning — the ES get-by-id shape, round-7 review #8)
-    rawDocs.filter(col("docId").isin(hits.map(_.docId).toSeq: _*))
-      .join(broadcast(hitsDF), Seq("docId"))
-      .select(col("rank"), col("docId"), col("score"), col("conv_id"), col("turn_idx"),
-        col("role"), col("text"))
-      .orderBy(col("rank"))
-  }
-
-  /** Resolved hits with ES-style highlighted fragments (same rule as
-    * the single-index searcher: the one UDF runs on k resolved rows;
-    * `field` ≠ "text" ranks by per-field BM25 and fragments the FIELD's
-    * stored column).
-    */
-  def searchHighlighted(query: String, k: Int, window: Int = 5,
-      field: String = "text",
-      /** ES `number_of_fragments` — same rule as the single-index
-        * searcher: 1 = first-match `fragment`, > 1 = best-N
-        * non-overlapping `fragments` array.
-        */
-      numberOfFragments: Int = 1): DataFrame = {
-    val terms = Analyzer.analyzeQuery(query).toSet
-    val nf = numberOfFragments
-    val frag =
-      if (nf <= 1) udf((text: String) =>
-        Highlight.fragment(if (text == null) "" else text, terms, window))
-      else udf((text: String) =>
-        Highlight.fragments(if (text == null) "" else text, terms, window, nf))
-    val fragCol = if (nf <= 1) "fragment" else "fragments"
-    if (field == "text")
-      searchResolved(query, k).withColumn(fragCol, frag(col("text")))
-    else {
-      val hits = searchField(field, query, k)
-      val hitsDF = hits.toSeq.zipWithIndex
-        .map { case (s, i) => (s.docId, s.score, i + 1) }.toDF("docId", "score", "rank")
-      rawDocs.filter(col("docId").isin(hits.map(_.docId).toSeq: _*))
-        .join(broadcast(hitsDF), Seq("docId"))
-        .select(col("rank"), col("docId"), col("score"), col("conv_id"), col("turn_idx"),
-          col("role"), col(field).cast("string").as(field))
-        .orderBy(col("rank"))
-        .withColumn(fragCol, frag(col(field)))
-    }
-  }
-
-  /** All live segments' doc stores as one DataFrame (docIds globally
-    * unique; tombstoned docs excluded — the LWW-visible corpus).
-    */
-  def docs: DataFrame = {
-    val union = rawDocs
-    if (hasTombstones) union.join(tombDF, Seq("docId"), "left_anti")
-    else union
-  }
-
-  /** Segment doc stores unioned WITHOUT the tombstone anti-join — for
-    * docId joins against sets that are already tombstone-filtered (the
-    * match set; resolved top-k hits): one anti-join per query, not two
-    * (round-4 review "What's wrong #2").
-    */
-  private def rawDocs: DataFrame = segDocs.reduce(_ unionByName _)
 }

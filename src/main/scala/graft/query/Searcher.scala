@@ -1,68 +1,12 @@
 package graft.query
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.analysis.Analyzer
-import graft.index.GraftHash
+import graft.index.{Codec, FieldTerms, GraftHash, Tombstones}
 import graft.model.{IndexStats, PostingBlock, Scored, TermStats}
-
-/** BM25 top-k execution over a built index (SURVEY.md §3.3 — the query
-  * lifecycle the reference delegates to Elasticsearch, Spark-native).
-  *
-  * Plan shape per query: (1) analyze the query with the SAME analyzer as
-  * index time; (2) dictionary lookup restricted to the query terms —
-  * a metadata-size read, broadcast to executors; (3) posting-block scan
-  * pruned by term-shard partition dirs + term predicate pushed to
-  * parquet; (4) block-max WAND per bucket (buckets = docId-disjoint
-  * segments ⇒ embarrassingly parallel, exactly ES's shard-then-merge
-  * topology); (5) tiny driver merge of per-bucket top-k.
-  */
-/** Execution mode of one query: OR (WAND), AND (intersection), or
-  * phrase (intersection + position adjacency; `slots` = analyzed
-  * phrase terms in order, possibly repeating). `filterClauses` are
-  * required-but-unscored clauses (ES bool `filter` context): each
-  * clause is a disjunction of fielded keyword terms
-  * ([[graft.index.FieldTerms]]) — a single-value `term` filter is a
-  * 1-element clause, a `terms`/`range` filter a multi-element one; a
-  * doc must satisfy EVERY clause. `excludeTerms` veto their docs
-  * (`must_not` — flat, since matching ANY exclude term vetoes). Both
-  * are disjoint from the scored terms. `shouldTerms` are OPTIONAL
-  * scoring terms (ES bool `should`): matched ones add score, and a doc
-  * must match ≥ `minShould` of them (`minimum_should_match`). `after`
-  * is the ES `search_after` cursor on the (score desc, docId asc) sort
-  * key — only docs ranked strictly after it are returned.
-  */
-private[query] final case class SearchMode(
-    conjunctive: Boolean,
-    slots: Seq[String],
-    filterClauses: Seq[Seq[String]] = Nil,
-    excludeTerms: Seq[String] = Nil,
-    shouldTerms: Seq[String] = Nil,
-    minShould: Int = 0,
-    after: Scored = null,
-    slop: Int = 0,
-    /** Per-term score multipliers (ES `multi_match` field boosts, keyed
-      * by the namespaced term); absent terms score with boost 1.
-      */
-    boosts: Map[String, Double] = Map.empty,
-    /** non-null = ES `multi_match` best_fields combination
-      * ([[Wand.BestFields]]: score = best field's sum + tie_breaker ·
-      * Σ others); null = the plain one-sum (most_fields) rule. OR-mode
-      * only.
-      */
-    bestFields: Wand.BestFields = null,
-    /** non-null = `match_phrase_prefix`: the dictionary terms the
-      * phrase's LAST slot expanded to (capped, term-asc — the ES
-      * rewrite); the slot matches when ANY of them occurs at the
-      * phrase position ([[Wand.UnionPosIterator]]). `slots`' last
-      * element is the [[Searcher.PrefixSlot]] placeholder.
-      */
-    prefixExpansions: Seq[String] = null,
-    /** ≥ 0 = Lucene/ES `span_first`: the phrase (`slots`) must occur
-      * with span end ≤ this bound — see [[Wand.topKPhrase]]. −1 = off.
-      */
-    spanFirstEnd: Int = -1)
 
 /** One query of a batched `_msearch`-style request
   * ([[Searcher.searchManyBool]]): the FULL bool surface, including
@@ -365,148 +309,292 @@ private[query] object Searcher {
     }
   }
 
-  /** One bucket's WAND dispatch, shared by the distributed and the
-    * driver-local serving paths (kept in the companion so Spark task
-    * closures never capture a Searcher instance). `entries` carries the
-    * dictionary rows of ALL the query's found terms — scored, filter,
-    * and exclude; returns empty when the bucket is missing a required
-    * term (any scored term under AND/phrase, or any filter term — a
-    * bucket that lacks a filter value cannot contain matching docs).
+  /** The canonical PostingBlock columns, bound by name at every block
+    * read (segments built by different writer revisions may carry extra
+    * build-internal columns, e.g. the round-9 `nbytes` partials feed, and
+    * cross-segment unionByName requires a stable schema).
     */
-  def runBucket(
-      byTerm: Map[Long, Array[PB]],
-      entries: Seq[(String, TermStats)],
-      mode: SearchMode,
+  val BlockCols: Seq[String] = Seq("termId", "shard", "bucket", "blockId", "firstDocId",
+    "lastDocId", "count", "docs", "tfs", "dls", "poss", "maxTf", "maxScore")
+
+  /** Sentinel termId of tombstone-exclusion blocks in a unioned block
+    * scan (real termIds are non-negative).
+    */
+  val TombTermId = -1L
+
+  /** Split a (seg, bucket) group's rows into (tombstone blocks, posting
+    * rows).
+    */
+  def splitTomb(rows: Array[(Int, Int, PB)]): (Array[PB], Array[(Int, Int, PB)]) = {
+    val (tombRows, postRows) = rows.partition(_._3.termId == TombTermId)
+    (tombRows.map(_._3), postRows)
+  }
+
+  /** A FRESH membership-only exclude cursor over the group's tombstone
+    * blocks (cursors are mutable — one per consumer, the engine-wide
+    * rule): the same nextGEQ block machinery as any posting list.
+    */
+  def tombCursorOf(blocks: Array[PB]): Seq[Wand.DocCursor] =
+    if (blocks.isEmpty) Nil
+    else Seq(new Wand.TermIterator("", blocks, 0.0, 1L, 1L, 1.0))
+
+  /** (count, Σdl, per-field count / Σdl) of the tombstoned docs. */
+  final case class RemovedStats(n: Long, sumDl: Long,
+      fieldN: Map[String, Long], fieldSumDl: Map[String, Long])
+
+  /** Where a group's WAND upper bounds come from. */
+  sealed trait Bounds extends Serializable
+  /** The dictionary term maxScore and the stored block maxima — valid
+    * exactly when the corpus is one segment without tombstones (only
+    * then are the segment's build-time stats the global stats).
+    */
+  case object StoredBounds extends Bounds
+  /** Block maxima re-derived under the merged stats at warm time. */
+  case object RescoredBounds extends Bounds
+  /** score(maxTf, dl = 0) per block — an exact upper bound under any
+    * stats (BM25 rises in tf, falls in dl), loose in practice.
+    */
+  case object LooseBounds extends Bounds
+
+  /** One (segment, bucket) group's WAND dispatch — THE shared execution
+    * body of every query path (distributed flatMapGroups closures AND
+    * the warm in-process path, kept in the companion so task closures
+    * never capture a Searcher), so the two are identical by
+    * construction. `byTerm` maps each query term present in the group
+    * to (its blocks, merged LWW df, dictionary maxScore); every role
+    * gets a FRESH iterator (cursors are mutable); `%field:` terms score
+    * under their field's merged stats (per-field BM25). Returns empty
+    * when the group is missing a required term (any scored term under
+    * AND/phrase, or every value of a filter clause).
+    */
+  def runGroup(
+      byTerm: Map[String, (Array[PB], Long, Double)],
+      tombBlks: Array[PB],
+      w: ResolvedQuery,
       k: Int,
-      n: Long,
-      avgdl: Double,
-      /** Per-field (docCount, avgdl) of the additional analyzed text
-        * fields (`IndexConfig.textFieldCols`) — a `%field:token` term
-        * scores under ITS field's stats (per-field BM25).
-        */
-      fieldStats: Map[String, (Long, Double)] = Map.empty
+      nG: Long,
+      avgdlG: Double,
+      fsMap: Map[String, (Long, Double)],
+      bounds: Bounds
   ): Iterator[Scored] = {
-    val fSet = mode.filterClauses.flatten.toSet
-    val eSet = mode.excludeTerms.toSet
-    val sSet = mode.shouldTerms.toSet
-    // an expansion that IS one of the fixed phrase terms (query "the th")
-    // must keep its scored iterator — the union slot builds its own fresh
-    // member iterators, so only expansion-ONLY terms leave the scored set
-    val pSet = if (mode.prefixExpansions == null) Set.empty[String]
-      else mode.prefixExpansions.toSet -- Option(mode.slots).getOrElse(Nil)
-    val byName = entries.toMap
-    def iterOfG(t: String, s: TermStats, g: Int): Option[Wand.TermIterator] =
-      byTerm.get(s.termId).map { bs =>
-        val (nn, ad) = graft.index.FieldTerms.textFieldOf(t)
-          .flatMap(fieldStats.get).getOrElse((n, avgdl))
-        val boost = mode.boosts.getOrElse(t, 1.0)
-        new Wand.TermIterator(t, bs, boost * s.maxScore, s.df, nn, ad,
-          boost = boost, groupOrdinal = g)
+    def iterOfG(t: String, scored: Boolean, g: Int): Option[Wand.TermIterator] =
+      byTerm.get(t).map { case (bs, df, dictMax) =>
+        val (nn, ad) = FieldTerms.textFieldOf(t).flatMap(fsMap.get).getOrElse((nG, avgdlG))
+        val boost = w.boosts.getOrElse(t, 1.0)
+        val ub =
+          if (!scored) 0.0
+          else boost * (bounds match {
+            case StoredBounds => dictMax
+            case RescoredBounds => bs.iterator.map(_.maxScore).max
+            case LooseBounds => bs.iterator.map(b => Bm25.score(b.maxTf, df, 0, nn, ad)).max
+          })
+        new Wand.TermIterator(t, bs, ub, df, nn, ad,
+          staleBlockMax = bounds == LooseBounds, boost = boost, groupOrdinal = g)
       }
-    def iterOf(t: String, s: TermStats): Option[Wand.TermIterator] =
-      iterOfG(t, s, Int.MinValue)
-    val scoredEntries = entries.filter { case (t, _) =>
-      !fSet.contains(t) && !eSet.contains(t) && !sSet.contains(t) && !pSet.contains(t) }
-    // shared-term dis_max: one FRESH iterator per (group, term), each
-    // attributed to its group (cursors are mutable — never shared)
-    val scored =
-      if (mode.bestFields != null && mode.bestFields.groupsOf != null)
-        scoredEntries.flatMap { case (t, s) =>
-          mode.bestFields.groupsOf.getOrElse(t, Seq(-1)).flatMap(g => iterOfG(t, s, g))
-        }
-      else scoredEntries.flatMap { case (t, s) => iterOf(t, s) }
-    val shoulds = entries.filter(e => sSet.contains(e._1)).flatMap { case (t, s) => iterOf(t, s) }
+    def iterOf(t: String, scored: Boolean): Option[Wand.TermIterator] =
+      iterOfG(t, scored, Int.MinValue)
+    // shared-term dis_max: one FRESH iterator per (group, term)
+    val iters =
+      if (w.bestFields != null && w.bestFields.groupsOf != null)
+        w.scored.flatMap(t => w.bestFields.groupsOf.getOrElse(t, Seq(-1))
+          .flatMap(g => iterOfG(t, scored = true, g)))
+      else w.scored.flatMap(t => iterOf(t, scored = true))
+    val shoulds = w.shoulds.flatMap(t => iterOf(t, scored = true))
+    // AND/phrase: every scored term must be present; a required-group
+    // term present globally but absent here ⇒ no hits. Checked before the
+    // membership cursors are built (a cursor decodes its first block)
+    if ((w.scored.nonEmpty && iters.isEmpty) ||
+      (iters.isEmpty && shoulds.isEmpty && w.prefixExpansions == null) ||
+      ((w.conjunctive || w.slots != null) && iters.size < w.scored.size) ||
+      shoulds.size < w.minShould) return Iterator.empty
     // match_phrase_prefix last slot: union of the expansions present in
-    // this bucket — a required slot with no member here ⇒ no hits
-    val prefixUnion: Wand.UnionPosIterator =
-      if (mode.prefixExpansions == null) null
-      else {
-        val members = mode.prefixExpansions
-          .flatMap(t => byName.get(t).flatMap(s => iterOf(t, s)))
-        if (members.isEmpty) return Iterator.empty
-        new Wand.UnionPosIterator(Searcher.PrefixSlot, members.toArray)
-      }
-    val needAll = mode.conjunctive || mode.slots != null
-    // required group present globally but absent here ⇒ no hits in this
-    // bucket; a bucket with fewer should lists than minShould likewise
-    if ((scoredEntries.nonEmpty && scored.isEmpty) ||
-      (scored.isEmpty && shoulds.isEmpty && prefixUnion == null) ||
-      (needAll && scored.size < scoredEntries.size) ||
-      shoulds.size < mode.minShould) return Iterator.empty
-    // each clause → one cursor (union of its values' lists); a clause
-    // with NO member in this bucket is unsatisfiable here. Every clause
-    // membership gets a FRESH iterator (never shared with another clause
-    // or the exclude list — cursors are mutable).
-    val clauseCursors: Seq[Option[Wand.DocCursor]] = mode.filterClauses.map { clause =>
-      val members = clause.flatMap(t => byName.get(t).flatMap(s => iterOf(t, s)))
+    // this group (score 0 — membership only); none here ⇒ no hits
+    val prefixMembers: Seq[Wand.TermIterator] =
+      if (w.prefixExpansions == null) null
+      else w.prefixExpansions.flatMap(t => iterOf(t, scored = false))
+    if (prefixMembers != null && prefixMembers.isEmpty) return Iterator.empty
+    // each clause → one cursor (union of its values' lists); a group
+    // where a clause has NO member value has no matching docs
+    val clauseCursors: Seq[Option[Wand.DocCursor]] = w.clauses.map { clause =>
+      val members = clause.flatMap(t => iterOf(t, scored = false))
       if (members.isEmpty) None
       else if (members.size == 1) Some(members.head)
       else Some(new Wand.UnionCursor(members))
     }
-    if (clauseCursors.exists(_.isEmpty)) return Iterator.empty
-    val filters = clauseCursors.flatten
-    val excludes = entries.filter(e => eSet.contains(e._1)).flatMap { case (t, s) => iterOf(t, s) }
-    val top =
-      if (mode.slots != null)
-        Wand.topKPhrase(
-          if (prefixUnion == null) scored else scored :+ prefixUnion,
-          mode.slots, k, filters, excludes, shoulds, mode.minShould,
-          mode.after, mode.slop, mode.spanFirstEnd)
-      else if (mode.conjunctive)
-        Wand.topKConjunctive(scored, k, filters, excludes, shoulds, mode.minShould, mode.after)
-      else Wand.topK(scored, k, filters, excludes, shoulds, mode.minShould, mode.after,
-        mode.bestFields)
-    top.iterator
+    if (clauseCursors.exists(_.isEmpty)) Iterator.empty
+    else {
+      val filters = clauseCursors.flatten
+      val excludes: Seq[Wand.DocCursor] =
+        w.excludes.flatMap(t => iterOf(t, scored = false)) ++ tombCursorOf(tombBlks)
+      val phraseLists: Seq[Wand.PosCursor] =
+        if (prefixMembers == null) iters
+        else iters :+ new Wand.UnionPosIterator(PrefixSlot, prefixMembers.toArray)
+      val top =
+        if (w.slots != null)
+          Wand.topKPhrase(phraseLists, w.slots, k, filters, excludes, shoulds, w.minShould,
+            w.after, w.slop, w.spanFirstEnd)
+        else if (w.conjunctive)
+          Wand.topKConjunctive(iters, k, filters, excludes, shoulds, w.minShould, w.after)
+        else Wand.topK(iters, k, filters, excludes, shoulds, w.minShould, w.after,
+          w.bestFields)
+      top.iterator
+    }
   }
 }
 
-class Searcher(spark: SparkSession, indexDir: String, numShards: Int) {
+/** Driver-resolved execution state of one query (serializable — rides
+  * the task closure of the single job of [[Searcher.searchManyBool]] and
+  * of every top-k query): OR (WAND), AND (intersection), or phrase
+  * (intersection + position adjacency; `slots` = analyzed phrase terms
+  * in order, possibly repeating). All term lists are restricted to
+  * GLOBALLY-found terms; [[Searcher.runGroup]] re-checks group-local
+  * presence. `clauses` are required-but-unscored clauses (ES bool
+  * `filter` context): each is a disjunction of fielded keyword terms
+  * ([[graft.index.FieldTerms]]) — a `term` filter is a 1-element
+  * clause, a `terms`/`range` filter a multi-element one; a doc must
+  * satisfy EVERY clause. `excludes` veto their docs (`must_not`).
+  * `shoulds` are OPTIONAL scoring terms (ES bool `should`): matched ones
+  * add score, and a doc must match ≥ `minShould` of them. `after` is the
+  * ES `search_after` cursor on the (score desc, docId asc) sort key.
+  */
+private[query] final case class ResolvedQuery(
+    scored: Seq[String],
+    shoulds: Seq[String],
+    clauses: Seq[Seq[String]],
+    excludes: Seq[String],
+    conjunctive: Boolean,
+    slots: Seq[String],
+    minShould: Int,
+    slop: Int,
+    /** Per-term score multipliers (ES `multi_match` field boosts, keyed
+      * by the namespaced term); absent terms score with boost 1.
+      */
+    boosts: Map[String, Double] = Map.empty,
+    /** non-null = ES `multi_match` best_fields combination
+      * ([[Wand.BestFields]]: score = best field's sum + tie_breaker ·
+      * Σ others); null = the plain one-sum (most_fields) rule. OR-mode
+      * only.
+      */
+    bestFields: Wand.BestFields = null,
+    /** non-null = `match_phrase_prefix`: the dictionary terms the
+      * phrase's LAST slot expanded to (capped, term-asc — the ES
+      * rewrite); the slot matches when ANY of them occurs at the phrase
+      * position ([[Wand.UnionPosIterator]]). `slots`' last element is
+      * the [[Searcher.PrefixSlot]] placeholder.
+      */
+    prefixExpansions: Seq[String] = null,
+    /** ≥ 0 = Lucene/ES `span_first`: the phrase (`slots`) must occur
+      * with span end ≤ this bound — see [[Wand.topKPhrase]]. −1 = off.
+      */
+    spanFirstEnd: Int = -1,
+    after: Scored = null) {
+
+  /** Every dictionary term the query reads postings of. */
+  def terms: Seq[String] =
+    scored ++ shoulds ++ clauses.flatten ++ excludes ++ Option(prefixExpansions).getOrElse(Nil)
+}
+
+/** BM25 top-k execution over an index read as a list of SEGMENTS plus
+  * tombstones — the query lifecycle the reference delegates to
+  * Elasticsearch (SURVEY.md §3.3), Spark-native. A single built index
+  * opens as one segment with no tombstones; a streaming dir opens as its
+  * live `seg-*` segments ([[MultiSearcher]]) — each an independent
+  * micro-batch index (NeoFinderToES.java:184-192 append runs) — queried
+  * as ONE corpus.
+  *
+  * Plan shape per query: (1) analyze the query with the SAME analyzer as
+  * index time; (2) dictionary lookup restricted to the query terms — one
+  * unioned, metadata-size read over every segment, shard-pruned when the
+  * shard count is known; (3) posting-block scan pruned by term-shard
+  * partition dirs + termId pushed to parquet; (4) block-max WAND per
+  * (segment, bucket) group — groups are docId-disjoint, so this is
+  * embarrassingly parallel, exactly ES's shard-then-merge topology; (5)
+  * tiny driver merge of the per-group top-k. A warmed searcher whose
+  * index fits runs (4)-(5) in-process with zero Spark jobs; both paths
+  * share [[Searcher.runGroup]].
+  *
+  * Statistics are GLOBAL and merge associatively: N = Σ nᵢ, Σdl = Σ
+  * (nᵢ·avgdlᵢ) (dl sums are integer-valued and < 2^52, so the per-segment
+  * product rounds back to the exact integer sum), df(term) = Σ dfᵢ(term).
+  *
+  * LAST-WRITE-WINS across segments: docs superseded by a later re-ingest
+  * of their (conv_id, turn_idx) key — or explicitly deleted — are listed
+  * in the index's tombstone store ([[Tombstones]]); every query path
+  * excludes tombstoned docIds, and NO query-path structure scales with
+  * tombstone volume on the driver: WAND excludes via per-(segment,
+  * bucket) delta-encoded docId blocks that ride the same pruned scan as
+  * the posting blocks, the doc-store paths anti-join the tombstone frame,
+  * and the per-term df corrections live in a persisted DISTRIBUTED frame
+  * filtered to each query's terms (driver-cached only when bounded).
+  * Global statistics are ADJUSTED EXACTLY — one bounded job re-derives
+  * the superseded docs' N / Σdl / per-field / per-term contributions and
+  * subtracts them — so scores are bit-identical to an index that never
+  * contained the old versions, unlike Lucene's deleted-doc model where
+  * IDF counts deletes until merge.
+  *
+  * Bounds: stored per-block and dictionary maxScore encode the SEGMENT's
+  * build-time stats, so they prune exactly when there is one segment and
+  * no tombstones. Otherwise block bounds come from the stats-independent
+  * maxTf as score(maxTf, dl = 0), or from a warm-time rescore under the
+  * merged stats ([[Searcher.Bounds]]). Exact per-posting rescoring from
+  * the stored (tf, dl) streams keeps results rank-identical to an
+  * exhaustive oracle either way.
+  */
+class Searcher private[query] (
+    spark: SparkSession,
+    indexDir: String,
+    /** Term-shard count the dictionaries were built with; 0 = unknown
+      * (dictionary lookups then skip the shard predicate).
+      */
+    numShards: Int,
+    /** The segment index dirs served as one corpus. */
+    val segments: Seq[String]) {
   import spark.implicits._
+  import Searcher.{LooseBounds, RescoredBounds, StoredBounds}
 
-  lazy val stats: IndexStats =
-    spark.read.parquet(s"$indexDir/stats").as[IndexStats].head()
+  /** A single built index: one segment, no tombstones. */
+  def this(spark: SparkSession, indexDir: String, numShards: Int) =
+    this(spark, indexDir, numShards, Seq(indexDir))
 
-  /** Per-field (docCount, avgdl) of the additional analyzed text fields
-    * — a handful of rows, read once (empty for indexes built without
-    * `textFieldCols`).
+  private val fs = new Path(indexDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  private lazy val segStats: Seq[IndexStats] =
+    segments.map(s => spark.read.parquet(s"$s/stats").as[IndexStats].head())
+
+  // ONE DataFrame per segment store, shared by every query path: a
+  // `warm()`ed searcher persists these, and Spark's cache manager then
+  // serves every pruned scan from the in-memory relation (plan-level
+  // cache matching on the shared analyzed plan)
+  private lazy val segDicts: Seq[DataFrame] =
+    segments.map(s => spark.read.parquet(s"$s/dict"))
+  private lazy val segBlocks: Seq[DataFrame] =
+    segments.map(s => spark.read.parquet(s"$s/blocks").select(Searcher.BlockCols.map(col): _*))
+  private lazy val segDocs: Seq[DataFrame] =
+    segments.map(s => spark.read.parquet(s"$s/docs"))
+
+  /** Every segment stores exists markers (format ≥ 2)? A legacy or
+    * mixed-generation index fails `exists`/`missing` loudly — one legacy
+    * segment would silently invert results for its docs (round-6
+    * review).
     */
-  lazy val fieldStatsMap: Map[String, (Long, Double)] = {
-    val p = new org.apache.hadoop.fs.Path(s"$indexDir/fieldstats")
-    val hfs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!hfs.exists(p)) Map.empty
-    else spark.read.parquet(s"$indexDir/fieldstats")
-      .select(col("field"), col("ndocs"), col("sumdl"))
-      .as[(String, Long, Long)].collect()
-      .map { case (f, nf, sdl) => f -> (nf, if (nf == 0) 0.0 else sdl.toDouble / nf) }
-      .toMap
-  }
-  private lazy val dict = spark.read.parquet(s"$indexDir/dict")
-  private lazy val blocks = spark.read.parquet(s"$indexDir/blocks")
-  lazy val docs: DataFrame = spark.read.parquet(s"$indexDir/docs")
-
-  /** Format ≥ 2 = the index stores `_field_names`-style exists markers.
-    * Checked once; `exists`/`missing` clauses on a legacy index throw
-    * instead of silently returning inverted results (round-6 review).
-    */
-  private lazy val hasExistsMarkers: Boolean = {
-    val p = new org.apache.hadoop.fs.Path(indexDir)
-    graft.index.IndexFormat.version(
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration), indexDir) >=
-      graft.index.IndexFormat.Version
-  }
+  private lazy val hasExistsMarkers: Boolean =
+    segments.forall(s =>
+      graft.index.IndexFormat.version(fs, s) >= graft.index.IndexFormat.Version)
   private def guardExists(exists: Seq[String], missing: Seq[String]): Unit =
     graft.index.IndexFormat.requireExistsMarkers(hasExistsMarkers, indexDir, exists, missing)
 
-  // driver-side dictionary (populated by warm() when the vocabulary fits;
-  // otherwise lookups stay distributed — the 100 TB path)
-  @volatile private var dictMap: Map[String, TermStats] = _
-  // driver-local serving index: bucket -> termId -> blocks. Populated by
-  // warm() ONLY when the compressed index fits `maxLocalBlockBytes`
-  // (bounded collect — same guard pattern as dictMap); queries then run
-  // WAND in-process with zero Spark jobs, which removes the ~100 ms
+  // driver-local in-process serving state, populated by warm() ONLY when
+  // the index fits the byte/term budgets (bounded collects); queries then
+  // run WAND in-process with zero Spark jobs, which removes the ~100 ms
   // per-query job-scheduling floor. Large indexes keep the distributed
-  // path (per-bucket WAND on executors) — identical results, same code.
-  @volatile private var localIdx: Map[Int, Map[Long, Array[PostingBlock]]] = _
+  // path — identical results, same runGroup.
+  // (segIdx, bucket) → (termId → blocks, that group's tombstone blocks)
+  @volatile private var localSegs
+      : Map[(Int, Int), (Map[Long, Array[PostingBlock]], Array[PostingBlock])] = _
+  // term → per-segment dictionary rows (driver lookup, zero jobs)
+  @volatile private var localDict: Map[String, Seq[(Int, TermStats)]] = _
+  // the warm-local blocks carry maxima rescored under the merged stats
+  @volatile private var localRescored: Boolean = false
 
   /** Conservative encoded-bytes → driver-heap expansion factor for the
     * local serving index: each PostingBlock holds three byte arrays plus
@@ -515,141 +603,598 @@ class Searcher(spark: SparkSession, indexDir: String, numShards: Int) {
     */
   private val LocalHeapExpansion = 4L
 
-  /** Pin blocks in executor memory and the dictionary on the driver (the
-    * "warm index" state a serving deployment runs in; spills to disk if
-    * larger than memory). `maxDriverDictTerms` guards driver memory —
-    * beyond it the dictionary stays a distributed lookup;
+  /** Pin blocks in executor memory and the dictionaries on the driver
+    * (the "warm index" state a serving deployment runs in; spills to
+    * disk if larger than memory). `maxDriverDictTerms` guards driver
+    * memory — beyond it the dictionaries stay a distributed lookup;
     * `maxLocalBlockBytes` additionally enables the in-process serving
-    * path when the whole compressed index fits (0 disables it). The
-    * budget is an estimated HEAP bound: encoded payload bytes ×
-    * [[LocalHeapExpansion]], so the default admits ~256 MB of encoded
-    * postings (~1 GB resident — size it to the serving driver's heap).
+    * path when the whole compressed index (blocks + tombstone blocks)
+    * fits (0 disables it). The budget is an estimated HEAP bound:
+    * encoded payload bytes × [[LocalHeapExpansion]], so the default
+    * admits ~256 MB of encoded postings (~1 GB resident). Without
+    * stored bounds (several segments or tombstones) the local blocks'
+    * maxima are rescored once under the merged stats.
     */
   def warm(maxDriverDictTerms: Long = 5_000_000L,
       maxLocalBlockBytes: Long = 1L << 30): this.type = {
-    // idempotent persist: a second searcher over the same dir (or a
-    // re-warm) must not re-ask the CacheManager (noisy WARN, no-op)
-    if (blocks.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      blocks.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    blocks.count()
-    if (dict.count() <= maxDriverDictTerms)
-      dictMap = dict.as[TermStats].collect().map(t => t.term -> t).toMap
-    else {
-      if (dict.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-        dict.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      dict.count()
+    def pin(df: DataFrame): Unit = {
+      // idempotent persist: a second searcher over the same dir (or a
+      // re-warm) must not re-ask the CacheManager (noisy WARN, no-op)
+      if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      df.count()
     }
+    segBlocks.foreach(pin)
+    if (segDicts.map(_.count()).sum <= maxDriverDictTerms)
+      localDict = segDicts.zipWithIndex.flatMap { case (d, i) =>
+        d.as[TermStats].collect().map(ts => (i, ts))
+      }.groupBy(_._2.term).view.mapValues(_.toSeq).toMap
+    else segDicts.foreach(pin)
     if (maxLocalBlockBytes > 0) {
-      val bytes = blocks
-        .agg(coalesce(sum((length(col("docs")) + length(col("tfs")) + length(col("dls"))
-          + length(col("poss")) + lit(64)) * lit(LocalHeapExpansion)), lit(0L))).head().getLong(0)
-      if (bytes <= maxLocalBlockBytes)
-        localIdx = blocks.as[PostingBlock].collect()
-          .groupBy(_.bucket).view.mapValues(_.groupBy(_.termId)).toMap
+      val bytes = segBlocks.map(_.agg(coalesce(sum(
+        (length(col("docs")) + length(col("tfs")) + length(col("dls"))
+          + length(col("poss")) + lit(64)) * lit(LocalHeapExpansion)), lit(0L)))
+        .head().getLong(0)).sum
+      if (bytes <= maxLocalBlockBytes) {
+        val postByGroup: Map[(Int, Int), Map[Long, Array[PostingBlock]]] =
+          segBlocks.zipWithIndex.flatMap { case (b, i) =>
+            b.as[PostingBlock].collect().map(pb => (i, pb))
+          }.groupBy { case (i, pb) => (i, pb.bucket) }
+            .view.mapValues(xs => xs.map(_._2).toArray.groupBy(_.termId)).toMap
+        val tombByGroup: Map[(Int, Int), Array[PostingBlock]] =
+          tombBlocks.map(_.collect().groupBy(r => (r._1, r._2))
+            .view.mapValues(_.map(_._3)).toMap).getOrElse(Map.empty)
+        localSegs = (postByGroup.keySet ++ tombByGroup.keySet).map { gk =>
+          gk -> (postByGroup.getOrElse(gk, Map.empty[Long, Array[PostingBlock]]),
+            tombByGroup.getOrElse(gk, Array.empty[PostingBlock]))
+        }.toMap
+      }
     }
+    if (!storedBounds) rescoreLocalBounds()
     this
   }
 
-  /** Dictionary rows for the query terms (tiny). */
+  /** One decode pass over the collected warm-local blocks re-deriving
+    * each block's maxScore EXACTLY under the merged LWW statistics
+    * (global or per-field) — the warm path then prunes as tightly as a
+    * compacted index, instead of the maxTf/dl=0 fallback bounds that
+    * make cross-segment WAND decode more blocks. Requires the driver
+    * dictionary and (under tombstones) the bounded removed-df cache;
+    * skipped otherwise — results are identical either way, only pruning
+    * differs. The rescored bound ranges over tombstoned postings too,
+    * which only loosens it — still sound.
+    */
+  private def rescoreLocalBounds(): Unit = {
+    if (localSegs == null || localDict == null) return
+    if (hasTombstones && removedDfSmall.isEmpty) return
+    val rm = removedDfSmall.getOrElse(Map.empty)
+    val mergedDf: Map[String, Long] = localDict.map { case (t, xs) =>
+      t -> (xs.map(_._2.df).sum - rm.getOrElse(t, 0L))
+    }.filter(_._2 > 0L)
+    val tidToTerm: Map[Int, Map[Long, String]] = localDict.toSeq
+      .flatMap { case (t, xs) => xs.map { case (i, ts) => (i, ts.termId, t) } }
+      .groupBy(_._1)
+      .map { case (i, xs) => i -> xs.map(x => x._2 -> x._3).toMap }
+    val nG = n
+    val adG = avgdl
+    val fsm = fieldStatsMap
+    localSegs = localSegs.map { case (gk @ (segIdx, _), (byTerm, tomb)) =>
+      val t2t = tidToTerm.getOrElse(segIdx, Map.empty)
+      val rescored = byTerm.map { case (tid, bs) =>
+        val exact = for { t <- t2t.get(tid); df <- mergedDf.get(t) } yield {
+          val (nn, ad) = FieldTerms.textFieldOf(t).flatMap(fsm.get).getOrElse((nG, adG))
+          bs.map { b =>
+            val dec = Codec.decodeBlock(b)
+            var mx = Double.NegativeInfinity
+            var i = 0
+            while (i < dec.docIds.length) {
+              val s = Bm25.score(dec.tfs(i), df, dec.dls(i), nn, ad)
+              if (s > mx) mx = s
+              i += 1
+            }
+            b.copy(maxScore = mx)
+          }
+        }
+        tid -> exact.getOrElse(bs)
+      }
+      gk -> (rescored, tomb)
+    }
+    localRescored = true
+  }
+
+  private lazy val rawN: Long = segStats.map(_.n).sum
+  private lazy val rawSumDl: Long = segStats.map(st => math.round(st.avgdl * st.n)).sum
+
+  /** Per-SEGMENT field stats (field → (docCount, Σdl)) — kept per
+    * segment so dead-doc subtraction can be gated on whether a segment
+    * actually INDEXED a field: a segment built without `textFieldCols`
+    * may still carry a doc-store column of the same name, and its dead
+    * docs must not subtract from field stats they never contributed to
+    * (round-5 ADVICE).
+    */
+  private lazy val segFieldStats: Seq[Map[String, (Long, Long)]] =
+    segments.map { s =>
+      val p = new Path(s"$s/fieldstats")
+      if (!fs.exists(p)) Map.empty[String, (Long, Long)]
+      else spark.read.parquet(s"$s/fieldstats")
+        .select(col("field"), col("ndocs"), col("sumdl"))
+        .as[(String, Long, Long)].collect().map(r => r._1 -> (r._2, r._3)).toMap
+    }
+
+  /** Per-field (docCount, Σdl) of the additional analyzed text fields
+    * (`IndexConfig.textFieldCols`), summed over segments (sums are
+    * associative like N / Σdl); empty for indexes without `fieldstats/`.
+    */
+  private lazy val rawFieldStats: Map[String, (Long, Long)] =
+    segFieldStats.foldLeft(Map.empty[String, (Long, Long)]) { (acc, m) =>
+      m.foldLeft(acc) { case (a, (f, (n1, s1))) =>
+        val (n0, s0) = a.getOrElse(f, (0L, 0L))
+        a.updated(f, (n0 + n1, s0 + s1))
+      }
+    }
+  private lazy val fieldNames: Seq[String] = rawFieldStats.keys.toSeq.sorted
+
+  /** Tombstone store present? One filesystem check per searcher — every
+    * tombstone-dependent structure below is gated on it, so the
+    * no-tombstone case (the common one) costs nothing.
+    */
+  private lazy val hasTombstones: Boolean = Tombstones.exists(spark, indexDir)
+  private def tombDF: DataFrame = Tombstones.loadDF(spark, indexDir)
+
+  /** Stored build-time bounds are valid: one segment, no tombstones. */
+  private lazy val storedBounds: Boolean = segments.size == 1 && !hasTombstones
+
+  /** Tombstone block size: exclusion blocks carry no payload worth
+    * splitting finely — bigger blocks = fewer rows through the scan.
+    */
+  private val TombBlockSize = 4096
+
+  /** Driver-cache cap for the removed-df correction map: below it the
+    * corrections collect to a driver map (zero extra jobs per query);
+    * above it they stay a persisted DISTRIBUTED frame filtered per
+    * lookup — bounded driver memory at ANY tombstone volume (round-4
+    * review "What's wrong #1").
+    */
+  private[graft] var maxDriverRemovedTerms: Int = 200000
+
+  /** Disjoint (lo, hi, seg, bucket) docId intervals of every (segment,
+    * bucket), from the blocks themselves (min firstDocId / max
+    * lastDocId — manifest-independent, so compacted and foreign
+    * segments resolve correctly). Sorted by lo for binary search. A
+    * docId outside every interval has no postings anywhere and can
+    * never be a WAND candidate, so it needs no exclusion block.
+    */
+  private lazy val bucketRanges: Array[(Long, Long, Int, Int)] =
+    segBlocks.zipWithIndex.map { case (b, i) =>
+      b.groupBy(col("bucket"))
+        .agg(min(col("firstDocId")).as("lo"), max(col("lastDocId")).as("hi"))
+        .select(lit(i).as("seg"), col("bucket"), col("lo"), col("hi"))
+    }.reduce(_ unionByName _)
+      .as[(Int, Int, Long, Long)].collect()
+      .map { case (seg, bucket, lo, hi) => (lo, hi, seg, bucket) }
+      .sortBy(_._1)
+
+  /** Tombstoned docIds as per-(segment, bucket) delta-encoded docId
+    * blocks (termId = [[Searcher.TombTermId]]) that ride the SAME pruned
+    * scan as the posting blocks: each WAND group excludes via an
+    * ordinary block cursor — NEVER a driver-side sorted array or a
+    * broadcast ∝ tombstone volume. Built once per searcher (one
+    * distributed encode job), persisted for reuse.
+    */
+  private lazy val tombBlocks: Option[Dataset[(Int, Int, PostingBlock)]] = {
+    if (!hasTombstones) None
+    else {
+      val ranges = bucketRanges
+      val los = ranges.map(_._1)
+      val tbs = TombBlockSize
+      val assigned = tombDF.as[Long]
+        .flatMap { d =>
+          var a = 0
+          var b = los.length
+          while (a < b) { val m = (a + b) >>> 1; if (los(m) <= d) a = m + 1 else b = m }
+          val i = a - 1
+          if (i >= 0 && d <= ranges(i)._2) Some((ranges(i)._3, ranges(i)._4, d)) else None
+        }
+        .toDF("seg", "bucket", "docId")
+      val enc = assigned
+        .repartition(col("seg"), col("bucket"))
+        .sortWithinPartitions(col("seg"), col("bucket"), col("docId"))
+        .as[(Int, Int, Long)]
+        .mapPartitions { it =>
+          // run-grouped streaming encode: ≤ TombBlockSize ids in memory
+          val buf = it.buffered
+          new Iterator[(Int, Int, PostingBlock)] {
+            override def hasNext: Boolean = buf.hasNext
+            override def next(): (Int, Int, PostingBlock) = {
+              val (seg, bucket, _) = buf.head
+              val ids = new scala.collection.mutable.ArrayBuffer[Long](256)
+              while (buf.hasNext && buf.head._1 == seg && buf.head._2 == bucket &&
+                ids.length < tbs) ids += buf.next()._3
+              val arr = ids.toArray
+              val k = arr.length
+              val blk = Codec.encodeBlocks(Searcher.TombTermId, 0, bucket, arr,
+                Array.fill(k)(1), Array.fill(k)(0), Array.fill(k)(0.0),
+                Array.fill(k)(Array.emptyByteArray), tbs).next()
+              (seg, bucket, blk)
+            }
+          }
+        }
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      enc.count()
+      Some(enc)
+    }
+  }
+
+  /** The tombstoned docs themselves (docId-range-pruned semi-join of the
+    * doc stores: pushed bounds let parquet row-group stats skip
+    * unaffected segments), with field columns normalized — shared by the
+    * scalar-stats aggregate and the removed-df frame. Persisted once per
+    * searcher; only evaluated when tombstones exist.
+    */
+  private lazy val deadDocs: DataFrame = {
+    val r = tombDF.agg(min(col("docId")), max(col("docId"))).head()
+    val lo = r.getLong(0)
+    val hi = r.getLong(1)
+    val union = segDocs.zipWithIndex.map { case (d, i) =>
+      // a field column counts ONLY for segments that actually indexed
+      // the field (own fieldstats entry) — round-5 ADVICE
+      val fcols = fieldNames.map { f =>
+        (if (segFieldStats(i).contains(f) && d.columns.contains(f)) col(f).cast("string")
+         else lit(null).cast("string")).as(s"__f_$f")
+      }
+      d.select(Seq(col("docId"), col("dl"), col("text")) ++ fcols: _*)
+        .filter(col("docId") >= lit(lo) && col("docId") <= lit(hi))
+    }.reduce(_ unionByName _)
+    union.join(tombDF, Seq("docId"), "left_semi")
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  }
+
+  /** Exact statistic contributions of the tombstoned docs, re-derived
+    * from the doc stores in one range-pruned job. Subtracting them makes
+    * every stat exact over the LWW-visible corpus (StreamingSpec pins
+    * this against the exhaustive oracle AND the compacted index).
+    */
+  private lazy val removedStats: Searcher.RemovedStats = {
+    if (!hasTombstones) Searcher.RemovedStats(0L, 0L, Map.empty, Map.empty)
+    else {
+      val aggCols = Seq(count(lit(1)).as("__c"), coalesce(sum(col("dl")), lit(0L)).as("__s")) ++
+        fieldNames.flatMap { f =>
+          val d = coalesce(Analyzer.dlCol(col(s"__f_$f")), lit(0))
+          Seq(count(when(d > lit(0), 1)).as(s"__n_$f"),
+            coalesce(sum(d.cast("long")), lit(0L)).as(s"__s_$f"))
+        }
+      val row = deadDocs.agg(aggCols.head, aggCols.tail: _*).head()
+      Searcher.RemovedStats(row.getAs[Long]("__c"), row.getAs[Long]("__s"),
+        fieldNames.map(f => f -> row.getAs[Long](s"__n_$f")).toMap,
+        fieldNames.map(f => f -> row.getAs[Long](s"__s_$f")).toMap)
+    }
+  }
+
+  /** Per-term df corrections of the tombstoned docs — their DISTINCT
+    * terms per namespace (main-text tokens plus each field's tokens
+    * namespaced), counted. Kept as a persisted DISTRIBUTED frame: driver
+    * memory never scales with the dead docs' vocabulary;
+    * [[removedDfFor]] filters it to the query's own terms.
+    */
+  private lazy val removedDfDF: Option[DataFrame] = {
+    if (!hasTombstones) None
+    else {
+      def toksOf(c: Column) = coalesce(Analyzer.tokensCol(c), array().cast("array<string>"))
+      val termsExpr = fieldNames.foldLeft(array_distinct(toksOf(col("text")))) { (acc, f) =>
+        concat(acc, transform(array_distinct(toksOf(col(s"__f_$f"))),
+          t => concat(lit(FieldTerms.textTerm(f, "")), t)))
+      }
+      val frame = deadDocs
+        .select(explode(termsExpr).as("term"))
+        .groupBy(col("term")).agg(count(lit(1)).as("removed"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      frame.count()
+      Some(frame)
+    }
+  }
+
+  /** Bounded driver cache of the corrections: collected only when the
+    * dead vocabulary fits [[maxDriverRemovedTerms]] (zero extra jobs per
+    * query — the common, compaction-bounded case); a heavy-churn store
+    * keeps the distributed path.
+    */
+  private lazy val removedDfSmall: Option[Map[String, Long]] =
+    removedDfDF.flatMap { f =>
+      val rows = f.limit(maxDriverRemovedTerms + 1).as[(String, Long)].collect()
+      if (rows.length > maxDriverRemovedTerms) None else Some(rows.toMap)
+    }
+
+  /** Removed-df corrections for exactly `terms` — a driver-map lookup
+    * when cached, else one distributed filter returning ≤ |terms| rows.
+    */
+  private def removedDfFor(terms: Seq[String]): Map[String, Long] =
+    removedDfDF match {
+      case None => Map.empty
+      case Some(frame) =>
+        removedDfSmall match {
+          case Some(m) => terms.iterator.flatMap(t => m.get(t).map(t -> _)).toMap
+          case None => frame.filter(col("term").isin(terms: _*))
+            .as[(String, Long)].collect().toMap
+        }
+    }
+
+  /** Global corpus stats over the LWW-visible union of all segments. */
+  lazy val n: Long = rawN - removedStats.n
+  lazy val sumDl: Long = rawSumDl - removedStats.sumDl
+  lazy val avgdl: Double =
+    if (storedBounds) segStats.head.avgdl else if (n == 0) 0.0 else sumDl.toDouble / n
+
+  /** Merged per-field (docCount, avgdl) over the LWW-visible union —
+    * the same exact-subtraction rule as N / avgdl.
+    */
+  lazy val fieldStatsMap: Map[String, (Long, Double)] =
+    rawFieldStats.map { case (f, (n0, s0)) =>
+      val nf = n0 - removedStats.fieldN.getOrElse(f, 0L)
+      val sf = s0 - removedStats.fieldSumDl.getOrElse(f, 0L)
+      f -> (nf, if (nf == 0) 0.0 else sf.toDouble / nf)
+    }
+
+  /** Per-segment dictionary rows for the query terms + merged global df.
+    * Returns (globalDf by term, per-segment rows by (segIdx, term)). Warm:
+    * driver maps, zero jobs. Cold: ONE unioned scan + one collect for ALL
+    * segments (query latency must not grow one-job-per-segment with the
+    * micro-batch count), shard-pruned when the shard count is known.
+    */
+  private def lookup(terms: Seq[String]): (Map[String, Long], Map[(Int, String), TermStats]) = {
+    if (terms.isEmpty) return (Map.empty, Map.empty)
+    // exact LWW df: subtract the tombstoned docs' contribution; a term
+    // living ONLY in superseded docs vanishes (absent from the visible
+    // corpus — conjunctive queries on it must return empty). On the
+    // COLD uncached-corrections path the corrections broadcast-join INTO
+    // the unioned dict scan, so the heavy-churn case costs the same ONE
+    // job as the common case (round-5 review "What's wrong #3").
+    var dfRemoved: Map[String, Long] = Map.empty
+    val perSeg: Map[(Int, String), TermStats] =
+      if (localDict != null) {
+        dfRemoved = removedDfFor(terms)
+        terms.flatMap(t => localDict.getOrElse(t, Nil).map { case (i, ts) => (i, t) -> ts }).toMap
+      } else {
+        val termPred =
+          if (numShards <= 0) col("term").isin(terms: _*)
+          else col("shard").isin(terms.map(GraftHash.shardOf(_, numShards)).distinct: _*) &&
+            col("term").isin(terms: _*)
+        val unioned = segDicts.zipWithIndex.map { case (d, i) =>
+          d.filter(termPred)
+            .select(lit(i).as("seg"), col("term"), col("termId"), col("shard"),
+              col("df"), col("cf"), col("maxScore"))
+        }.reduce(_ unionByName _)
+        val joinFrame = removedDfDF.filter(_ => removedDfSmall.isEmpty)
+        val withRm = joinFrame match {
+          case Some(frame) =>
+            unioned.join(broadcast(frame.filter(col("term").isin(terms: _*))),
+              Seq("term"), "left")
+              .select(col("seg"), col("term"), col("termId"), col("shard"),
+                col("df"), col("cf"), col("maxScore"),
+                coalesce(col("removed"), lit(0L)).as("removed"))
+          case None => unioned.withColumn("removed", lit(0L))
+        }
+        val rows = withRm
+          .as[(Int, String, Long, Int, Long, Long, Double, Long)].collect()
+        if (joinFrame.isDefined)
+          dfRemoved = rows.iterator.filter(_._8 > 0L).map(r => r._2 -> r._8).toMap
+        else dfRemoved = removedDfFor(terms)
+        rows.map { case (i, t, tid, sh, df, cf, ms, _) =>
+          (i, t) -> TermStats(t, tid, sh, df, cf, ms)
+        }.toMap
+      }
+    val dfGlobal = perSeg.toSeq.groupBy(_._1._2)
+      .map { case (t, xs) => t -> (xs.map(_._2.df).sum - dfRemoved.getOrElse(t, 0L)) }
+      .filter(_._2 > 0L)
+    (dfGlobal, perSeg)
+  }
+
+  /** Dictionary rows of the visible query terms, df = the merged LWW df
+    * (termId/shard are those of one segment holding the term).
+    */
   def lookupTerms(terms: Seq[String]): Map[String, TermStats] = {
-    if (terms.isEmpty) return Map.empty
-    if (dictMap != null) return terms.flatMap(t => dictMap.get(t).map(t -> _)).toMap
-    val shards = terms.map(GraftHash.shardOf(_, numShards)).distinct
-    dict
-      .filter(col("shard").isin(shards: _*) && col("term").isin(terms: _*))
-      .as[TermStats].collect().map(t => t.term -> t).toMap
+    val (dfGlobal, perSeg) = lookup(terms.distinct.sorted)
+    perSeg.collect { case ((_, t), ts) if dfGlobal.contains(t) => t -> ts.copy(df = dfGlobal(t)) }
   }
 
-  /** Blocks for the found dictionary rows: shard is a partition dir =>
-    * partition pruning; termId (int64) is pushed to parquet row groups
-    * (blocks are termId-sorted within files — cheaper min/max pruning and
-    * dictionary filtering than the round-1 term-string predicate).
+  /** Per-segment block scans pruned to the rows of `perSeg` whose term
+    * `keep` admits — shard is a partition dir (partition pruning), termId
+    * (int64) is pushed to parquet row groups (blocks are termId-sorted
+    * within files) — tagged `seg` and unioned. None when no segment
+    * holds any of the terms.
     */
-  private def selectBlocks(found: Iterable[TermStats]): DataFrame = {
-    val shards = found.map(_.shard).toSeq.distinct
-    val ids = found.map(_.termId).toSeq
-    blocks.filter(col("shard").isin(shards: _*) && col("termId").isin(ids: _*))
+  private def prunedBlocks(perSeg: Map[(Int, String), TermStats],
+      keep: String => Boolean): Option[DataFrame] =
+    segBlocks.zipWithIndex.flatMap { case (b, i) =>
+      val ids = perSeg.collect { case ((`i`, t), ts) if keep(t) => ts }.toSeq
+      if (ids.isEmpty) None
+      else Some(b.filter(col("shard").isin(ids.map(_.shard).distinct: _*) &&
+          col("termId").isin(ids.map(_.termId): _*))
+        .withColumn("seg", lit(i)))
+    }.reduceOption(_ unionByName _)
+
+  /** Resolve one query against the dictionaries and run it: the
+    * early-empty rules (a required term or a whole filter clause absent
+    * from the visible corpus ⇒ no hits) apply once on the driver, the
+    * rest per group in [[Searcher.runGroup]].
+    */
+  private def run(terms: Seq[String], k: Int, conjunctive: Boolean,
+      slots: Seq[String] = null,
+      filterClauses: Seq[Seq[String]] = Nil,
+      excludeTerms: Seq[String] = Nil,
+      shouldTerms: Seq[String] = Nil,
+      minShould: Int = 0,
+      after: Scored = null,
+      slop: Int = 0,
+      boosts: Map[String, Double] = Map.empty,
+      bestFields: Wand.BestFields = null,
+      prefixExpansions: Seq[String] = null,
+      spanFirstEnd: Int = -1): Array[Scored] = {
+    val distinctTerms = terms.distinct.sorted
+    if ((distinctTerms.isEmpty && shouldTerms.isEmpty && prefixExpansions == null) || k <= 0)
+      return Array.empty
+    val (dfGlobal, perSeg) =
+      lookup((distinctTerms ++ filterClauses.flatten ++ excludeTerms ++ shouldTerms ++
+        Option(prefixExpansions).getOrElse(Nil)).distinct.sorted)
+    if (distinctTerms.nonEmpty && !distinctTerms.exists(dfGlobal.contains))
+      return Array.empty
+    // a clause with no value present in any segment ⇒ nothing can match
+    // (a trie range clause keeps only the cells some doc carries)
+    val clauses = filterClauses.map(_.filter(dfGlobal.contains))
+    if (clauses.exists(_.isEmpty)) return Array.empty
+    if ((conjunctive || slots != null) && distinctTerms.exists(t => !dfGlobal.contains(t)))
+      return Array.empty
+    val shouldFound = shouldTerms.filter(dfGlobal.contains)
+    if (shouldFound.size < minShould) return Array.empty
+    val prefixFound =
+      if (prefixExpansions == null) null
+      else prefixExpansions.filter(dfGlobal.contains)
+    if (prefixFound != null && prefixFound.isEmpty) return Array.empty
+    // scored terms never overlap clause / exclude terms: those live in
+    // the '#'/'%' namespaces
+    val w = ResolvedQuery(distinctTerms.filter(dfGlobal.contains), shouldFound,
+      clauses, excludeTerms.distinct.sorted.filter(dfGlobal.contains),
+      conjunctive, slots, minShould, slop, boosts, bestFields, prefixFound,
+      spanFirstEnd, after)
+    execute(Seq(w), k, perSeg, dfGlobal).head
   }
 
-  private type Mode = SearchMode
-  private def Mode(conjunctive: Boolean, slots: Seq[String] = null): Mode =
-    SearchMode(conjunctive, slots)
-
-  /** In-process WAND over the driver-local index (no Spark job).
-    * Buckets run concurrently on the shared pool — the same
-    * per-bucket-then-merge topology as the distributed path (buckets are
-    * docId-disjoint), so results are identical and a hot-term query's
-    * latency is bounded by one bucket's share, not the whole index.
+  /** Run resolved queries over every (segment, bucket) group and merge
+    * each query's per-group top-k: in-process over the warm-local blocks
+    * when present, else ONE Spark job whose pruned block scan covers the
+    * union of every query's terms (plus the tombstone blocks) — the
+    * batch's tiny (≤ queries × groups × k) result set merges on the
+    * driver. Results align with `work`.
     */
-  private def runLocal(
-      found: Map[String, TermStats],
-      k: Int,
-      mode: Mode
-  ): Array[Scored] = {
+  private def execute(work: Seq[ResolvedQuery], k: Int,
+      perSeg: Map[(Int, String), TermStats],
+      dfGlobal: Map[String, Long]): Seq[Array[Scored]] = {
+    if (localSegs != null) return runLocal(work, k, perSeg, dfGlobal)
+    val needed = work.flatMap(_.terms).toSet
+    // termId is segment-local: key block groups by (segIdx, termId);
+    // terms whose visible df fell to zero are pruned from the scan
+    val idToTerm: Map[(Int, Long), (String, Long, Double)] = perSeg.collect {
+      case ((i, t), ts) if needed.contains(t) && dfGlobal.contains(t) =>
+        (i, ts.termId) -> (t, dfGlobal(t), ts.maxScore)
+    }
+    val pruned = prunedBlocks(perSeg, t => needed.contains(t) && dfGlobal.contains(t))
+      .getOrElse(return work.map(_ => Array.empty[Scored]))
+    val all = withTombBlocks(pruned
+      .select(col("seg").as("_1"), col("bucket").as("_2"),
+        struct(Searcher.BlockCols.map(col): _*).as("_3"))
+      .as[(Int, Int, PostingBlock)])
+    val nG = n
+    val avgdlG = avgdl
+    val fsMap = fieldStatsMap
+    val bounds = if (storedBounds) StoredBounds else LooseBounds
+    // the task closure captures only these locals and the companion's
+    // runGroup, never this Searcher
+    val rows = all
+      .groupByKey { case (seg, bucket, _) => (seg, bucket) }
+      .flatMapGroups { (_, it) =>
+        val (tombBlks, grp) = Searcher.splitTomb(it.toArray)
+        if (grp.isEmpty) Iterator.empty
+        else {
+          val segIdx = grp.head._1
+          val byTerm: Map[String, (Array[PostingBlock], Long, Double)] =
+            grp.map(_._3).groupBy(_.termId).map { case (tid, bs) =>
+              val (t, df, mx) = idToTerm((segIdx, tid))
+              t -> (bs, df, mx)
+            }
+          work.iterator.zipWithIndex.flatMap { case (w, j) =>
+            Searcher.runGroup(byTerm, tombBlks, w, k, nG, avgdlG, fsMap, bounds)
+              .map(s => (j, s.docId, s.score))
+          }
+        }
+      }
+    // one query: Catalyst plans TakeOrderedAndProject (per-partition
+    // heap + driver merge of ≤ k rows)
+    val top = if (work.size == 1) rows.orderBy(col("_3").desc, col("_2").asc).limit(k) else rows
+    val grouped = top.collect().groupBy(_._1)
+    work.indices.map { j =>
+      grouped.getOrElse(j, Array.empty)
+        .map(r => Scored(r._2, r._3))
+        .sortBy(s => (-s.score, s.docId))
+        .take(k)
+    }
+  }
+
+  /** Union `base` (a pruned posting-block scan keyed (seg, bucket)) with
+    * the tombstone exclusion blocks.
+    */
+  private def withTombBlocks(base: Dataset[(Int, Int, PostingBlock)])
+      : Dataset[(Int, Int, PostingBlock)] =
+    tombBlocks.map(base.union(_)).getOrElse(base)
+
+  /** In-process execution over the driver-local blocks (zero Spark
+    * jobs): every (segment, bucket) group runs [[Searcher.runGroup]]
+    * concurrently on the shared pool — the same per-group-then-merge
+    * topology as the distributed path, so results are identical and a
+    * hot-term query's latency is bounded by one group's share.
+    */
+  private def runLocal(work: Seq[ResolvedQuery], k: Int,
+      perSeg: Map[(Int, String), TermStats],
+      dfGlobal: Map[String, Long]): Seq[Array[Scored]] = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
-    val n = stats.n
-    val avgdl = stats.avgdl
-    val fStats = fieldStatsMap
-    val foundSeq = found.toSeq
-    val perBucket = localIdx.toSeq.map { case (_, byTerm) =>
-      Future(Searcher.runBucket(byTerm, foundSeq, mode, k, n, avgdl, fStats).toArray)
-    }
-    val out = Await.result(Future.sequence(perBucket),
-      scala.concurrent.duration.Duration.Inf).flatten.toArray
-    out.sortBy(s => (-s.score, s.docId)).take(k)
-  }
-
-  private def runPerBucket(
-      terms: Seq[String],
-      k: Int,
-      mode: Mode
-  ): Array[Scored] = {
-    val found = lookupTerms(terms)
-    val needAll = mode.conjunctive || mode.slots != null
-    if (needAll && found.size < terms.distinct.size) return Array.empty
-    runFound(found, k, mode)
-  }
-
-  private def runFound(
-      found: Map[String, TermStats],
-      k: Int,
-      mode: Mode
-  ): Array[Scored] = {
-    if (found.isEmpty) return Array.empty
-    if (localIdx != null) return runLocal(found, k, mode)
-    val n = stats.n
-    val avgdl = stats.avgdl
-    val fStats = fieldStatsMap
-    val foundSeq = found.toSeq
-    val md = mode
-    // Searcher.runBucket is a companion method — the task closure
-    // captures only (foundSeq, md, k, n, avgdl, fStats), never this
-    // Searcher
-    val perBucket = selectBlocks(found.values)
-      .as[PostingBlock]
-      .groupByKey(_.bucket)
-      .flatMapGroups { (_, it) =>
-        Searcher.runBucket(it.toArray.groupBy(_.termId), foundSeq, md, k, n, avgdl, fStats)
+    // per-segment term resolution (termId → (term, merged df, dict max))
+    val bySegTerm: Map[Int, Map[Long, (String, Long, Double)]] =
+      perSeg.toSeq.groupBy(_._1._1).map { case (seg, xs) =>
+        seg -> xs.flatMap { case ((_, t), ts) =>
+          dfGlobal.get(t).map(df => ts.termId -> (t, df, ts.maxScore))
+        }.toMap
       }
-    // per-bucket heaps (≤ k each) → global top-k merge: Catalyst plans
-    // TakeOrderedAndProject (per-partition heap + driver merge).
-    perBucket.orderBy(col("score").desc, col("docId").asc).limit(k).collect()
+    val nG = n
+    val avgdlG = avgdl
+    val fsMap = fieldStatsMap
+    val bounds =
+      if (storedBounds) StoredBounds else if (localRescored) RescoredBounds else LooseBounds
+    val perGroup = localSegs.toSeq.map { case ((segIdx, _), (byTermId, tombBlks)) =>
+      Future {
+        // iterate the QUERY's terms (tiny), indexing into the group's
+        // vocabulary map — never a vocabulary-sized scan per query
+        val byTerm: Map[String, (Array[PostingBlock], Long, Double)] =
+          bySegTerm.getOrElse(segIdx, Map.empty).flatMap { case (tid, (t, df, mx)) =>
+            byTermId.get(tid).map(bs => t -> (bs, df, mx))
+          }
+        work.map { w =>
+          if (byTerm.isEmpty) Array.empty[Scored]
+          else Searcher.runGroup(byTerm, tombBlks, w, k, nG, avgdlG, fsMap, bounds).toArray
+        }
+      }
+    }
+    val collected = Await.result(Future.sequence(perGroup),
+      scala.concurrent.duration.Duration.Inf)
+    work.indices.map { i =>
+      collected.flatMap(_(i)).toArray.sortBy(s => (-s.score, s.docId)).take(k)
+    }
   }
 
   /** Disjunctive (OR / ES `match`) BM25 top-k. `from` = pagination
-    * offset (skip the first `from` ranked hits; per-bucket heaps grow to
+    * offset (skip the first `from` ranked hits; per-group heaps grow to
     * from + k — the documented ES deep-paging cost).
     */
-  def search(query: String, k: Int, from: Int = 0): Array[Scored] = {
-    val hits = runPerBucket(Analyzer.analyzeQuery(query).toSeq, from + k, Mode(conjunctive = false))
+  def search(query: String, k: Int, from: Int = 0): Array[Scored] =
+    page(run(Analyzer.analyzeQuery(query).toSeq, from + k, conjunctive = false), from, k)
+
+  private def page(hits: Array[Scored], from: Int, k: Int): Array[Scored] =
     if (from == 0) hits else hits.slice(from, from + k)
-  }
+
+  /** ES `search_after` page continuation: the next k hits strictly after
+    * the (score, docId) cursor — sound with WAND because the cursor only
+    * filters offers; pruning still uses the page's own θ.
+    */
+  def searchAfter(query: String, k: Int, after: Scored): Array[Scored] =
+    run(Analyzer.analyzeQuery(query).toSeq, k, conjunctive = false, after = after)
+
+  /** Conjunctive (AND) BM25 top-k. */
+  def searchConjunctive(query: String, k: Int, from: Int = 0): Array[Scored] =
+    page(run(Analyzer.analyzeQuery(query).toSeq, from + k, conjunctive = true), from, k)
 
   /** Phrase top-k (ES `match_phrase`): docs whose analyzed token stream
     * contains the analyzed query tokens ADJACENTLY in order, ranked by
     * the BM25 sum of the phrase's distinct terms. Needs an index built
-    * with storePositions (default).
+    * with storePositions (default); positions are stored per posting, so
+    * adjacency needs no segment-level state.
     */
   def searchPhrase(query: String, k: Int, from: Int = 0,
       /** ES `slop` — full Lucene sloppy-phrase semantics: positional
@@ -660,37 +1205,34 @@ class Searcher(spark: SparkSession, indexDir: String, numShards: Int) {
       slop: Int = 0): Array[Scored] = {
     val slots = Analyzer.tokenize(query).toSeq // order + duplicates kept
     if (slots.isEmpty) return Array.empty
-    val hits = runPerBucket(slots.distinct.sorted, from + k,
-      SearchMode(conjunctive = false, slots = slots, slop = slop))
-    if (from == 0) hits else hits.slice(from, from + k)
+    page(run(slots.distinct.sorted, from + k, conjunctive = false, slots = slots, slop = slop),
+      from, k)
   }
 
   /** Lucene/ES `span_first`: the analyzed query must occur — exact
     * adjacency for multi-token queries — with span END (last token's
-    * 0-based position + 1) ≤ `end`, i.e. inside the field's first
-    * `end` token positions (Lucene SpanFirstQuery's `end() ≤ end`
-    * rule; transcripts: "conversations OPENING with …"). Scoring: the
-    * engine's phrase rule — BM25 sum of the distinct query terms over
-    * matching docs. Rides the positional phrase matcher (the span gate
-    * evaluates per aligned candidate on the already-decoded positions,
-    * so WAND pruning and block-max skipping apply unchanged); needs an
-    * index built with storePositions. Sloppy spans are out of scope
-    * (ES `span_near` slop is a different operator — not `match_phrase`
-    * slop).
+    * 0-based position + 1) ≤ `end`, i.e. inside the field's first `end`
+    * token positions (Lucene SpanFirstQuery's `end() ≤ end` rule;
+    * transcripts: "conversations OPENING with …"). Scoring: the engine's
+    * phrase rule — BM25 sum of the distinct query terms over matching
+    * docs. Rides the positional phrase matcher (the span gate evaluates
+    * per aligned candidate on the already-decoded positions, so WAND
+    * pruning and block-max skipping apply unchanged); needs positions.
+    * Sloppy spans are out of scope (ES `span_near` slop is a different
+    * operator — not `match_phrase` slop).
     */
   def searchSpanFirst(query: String, end: Int, k: Int): Array[Scored] = {
     require(end > 0, "span_first end must be positive")
     val slots = Analyzer.tokenize(query).toSeq
     if (slots.isEmpty) return Array.empty
-    runPerBucket(slots.distinct.sorted, k,
-      SearchMode(conjunctive = false, slots = slots, spanFirstEnd = end))
+    run(slots.distinct.sorted, k, conjunctive = false, slots = slots, spanFirstEnd = end)
   }
 
-  /** ES `min_score`: the plain disjunctive top-k with hits scoring
-    * below `minScore` removed. Filtering AFTER the top-k is exact:
-    * every doc beyond rank k scores ≤ the rank-k score, so a sub-
-    * threshold doc inside the page implies every doc outside it is
-    * sub-threshold too — filter(top-k) ≡ top-k(filter).
+  /** ES `min_score`: the plain disjunctive top-k with hits scoring below
+    * `minScore` removed. Filtering AFTER the top-k is exact: every doc
+    * beyond rank k scores ≤ the rank-k score, so a sub-threshold doc
+    * inside the page implies every doc outside it is sub-threshold too —
+    * filter(top-k) ≡ top-k(filter).
     */
   def searchMinScore(query: String, k: Int, minScore: Double): Array[Scored] =
     search(query, k).filter(_.score >= minScore)
@@ -708,216 +1250,152 @@ class Searcher(spark: SparkSession, indexDir: String, numShards: Int) {
     * whose LAST token is a PREFIX — expanded against the dictionary
     * (term-asc, capped at `maxExpansions`, exactly the `searchPrefix`
     * rewrite) into one multi-term slot ([[Wand.UnionPosIterator]],
-    * Lucene's MultiPhraseQuery position): the doc matches when the
-    * fixed tokens are followed by ANY expansion at the phrase position.
+    * Lucene's MultiPhraseQuery position): the doc matches when the fixed
+    * tokens are followed by ANY expansion at the phrase position.
     * Scoring: the engine's phrase rule — the BM25 sum of the FIXED
     * distinct terms (the expanded slot gates membership only; a
     * single-token query therefore ranks all prefix-matching docs at
     * score 0 — use [[searchPrefix]] for scored pure-prefix queries).
-    * `slop` > 0 applies the sloppy model; with an expansion identical
-    * to a fixed term the sloppy matcher may reuse a token occurrence
-    * across those two slots (slop = 0 adjacency is always exact).
-    * `field` expands and matches within that analyzed field.
+    * `slop` > 0 applies the sloppy model; with an expansion identical to
+    * a fixed term the sloppy matcher may reuse a token occurrence across
+    * those two slots (slop = 0 adjacency is always exact). `field`
+    * expands and matches within that analyzed field.
     */
   def searchPhrasePrefix(query: String, k: Int, maxExpansions: Int = 50,
       slop: Int = 0, from: Int = 0, field: String = "text"): Array[Scored] = {
     val toks = Analyzer.tokenize(query).toSeq
     if (toks.isEmpty) return Array.empty
     val p = toks.last
-    val fixed = toks.init.map(t => graft.index.FieldTerms.textTerm(field, t))
+    val fixed = toks.init.map(t => FieldTerms.textTerm(field, t))
     val exp = expand(_.startsWith(p), _.startsWith(p), maxExpansions, field)
     if (exp.isEmpty) return Array.empty
-    val fixedFound = lookupTerms(fixed.distinct)
-    if (fixedFound.size < fixed.distinct.size) return Array.empty
-    val slots = fixed :+ Searcher.PrefixSlot
-    val hits = runFound(fixedFound ++ exp, from + k,
-      SearchMode(conjunctive = false, slots = slots, slop = slop,
-        prefixExpansions = exp.keys.toSeq.sorted))
-    if (from == 0) hits else hits.slice(from, from + k)
+    page(run(fixed.distinct.sorted, from + k, conjunctive = false,
+      slots = fixed :+ Searcher.PrefixSlot, slop = slop, prefixExpansions = exp.map(_._1).sorted),
+      from, k)
   }
 
-  /** Batched execution: N queries in ONE Spark job — the throughput
-    * (QPS) shape. Blocks for the union of all query terms are scanned
-    * once; per bucket, each query runs WAND over that bucket's slice of
-    * its own term lists; the tiny (≤ queries × buckets × k) result set
-    * merges on the driver. Results are identical to per-query search
-    * (tested).
+  /** Batched execution: N OR queries through the one-job batched path
+    * ([[searchManyBool]]) — the throughput (QPS) shape. Results are
+    * identical to per-query [[search]] (tested).
     */
   def searchMany(queries: Seq[String], k: Int): Map[String, Array[Scored]] = {
-    val analyzed: Map[String, Seq[String]] =
-      queries.map(q => q -> Analyzer.analyzeQuery(q).toSeq).toMap
-    val allTerms = analyzed.values.flatten.toSeq.distinct.sorted
-    val found = lookupTerms(allTerms)
-    if (found.isEmpty) return queries.map(_ -> Array.empty[Scored]).toMap
-    if (localIdx != null)
-      return queries.map { q =>
-        q -> runLocal(analyzed(q).flatMap(t => found.get(t).map(t -> _)).toMap, k,
-          Mode(conjunctive = false))
-      }.toMap
-    val n = stats.n
-    val avgdl = stats.avgdl
-    val idOf: Map[String, Long] = found.map { case (t, s) => t -> s.termId }
-    val dfUb: Map[String, (Long, Double)] = found.map { case (t, s) => t -> (s.df, s.maxScore) }
-    val perQueryTerms: Seq[(String, Seq[String])] =
-      queries.map(q => q -> analyzed(q).filter(found.contains))
-    import spark.implicits._
-    val rows = selectBlocks(found.values)
-      .as[PostingBlock]
-      .groupByKey(_.bucket)
-      .flatMapGroups { (_, it) =>
-        val byTerm = it.toArray.groupBy(_.termId)
-        perQueryTerms.iterator.flatMap { case (q, terms) =>
-          val iters = terms.flatMap(t => byTerm.get(idOf(t)).map { bs =>
-            val (df, ub) = dfUb(t)
-            new Wand.TermIterator(t, bs, ub, df, n, avgdl)
-          })
-          Wand.topK(iters, k).iterator.map(s => (q, s.docId, s.score))
-        }
-      }
-      .collect()
-    val grouped = rows.groupBy(_._1)
-    queries.map { q =>
-      q -> grouped.getOrElse(q, Array.empty)
-        .map(r => Scored(r._2, r._3))
-        .sortBy(s => (-s.score, s.docId))
-        .take(k)
-    }.toMap
+    val qs = queries.distinct
+    qs.zip(searchManyBool(qs.map(q => BoolQuerySpec(query = q)), k)).toMap
   }
 
-  /** Batched execution of FULL bool queries — the ES `_msearch` shape:
-    * N heterogeneous queries (OR / AND / phrase+slop / filters /
-    * must_not / terms / trie ranges / should+minimum_should_match) in
-    * ONE Spark job. One dictionary lookup and one pruned block scan
-    * cover the union of every spec's terms; per bucket, each spec runs
-    * through the same [[Searcher.runBucket]] dispatch as its standalone
-    * API, so results are identical to issuing the specs one at a time
-    * (test-pinned). Warm searchers answer each spec in-process with
-    * zero jobs. Lexicographic `rangeFilters` batch too: every spec's
-    * ranges expand off ONE OR-predicate dictionary scan.
+  /** Analyzed (slots, scored terms, boosts, best-fields fold) of a bool
+    * query's `must` text — shared by [[searchBool]] and
+    * [[searchManyBool]]: `field` ("text" = main field) scores under that
+    * field's stats; non-empty `mm` (ES `multi_match`) overrides it, every
+    * (field, boost) scoring the query's tokens boost-scaled.
+    */
+  private def mustTerms(query: String, field: String, phrase: Boolean,
+      mm: Seq[(String, Double)], multiMatchBest: Boolean, tieBreaker: Double)
+      : (Seq[String], Seq[String], Map[String, Double], Wand.BestFields) = {
+    val toks = Analyzer.tokenize(query).toSeq
+    val slots = if (phrase) toks.map(t => FieldTerms.textTerm(field, t)) else null
+    val scoredTerms =
+      if (mm.nonEmpty)
+        (for ((f, _) <- mm; t <- toks.distinct) yield FieldTerms.textTerm(f, t)).distinct.sorted
+      else if (phrase) slots.distinct.sorted
+      else toks.distinct.sorted.map(t => FieldTerms.textTerm(field, t))
+    val boosts: Map[String, Double] =
+      if (mm.isEmpty) Map.empty
+      else (for ((f, b) <- mm; t <- toks.distinct) yield FieldTerms.textTerm(f, t) -> b).toMap
+    val bf =
+      if (mm.nonEmpty && multiMatchBest) Wand.BestFields.of(mm.map(_._1), toks, tieBreaker)
+      else null
+    (slots, scoredTerms, boosts, bf)
+  }
+
+  /** Filter-context clauses (each a disjunction of fielded terms) of
+    * the bool keyword/numeric/exists filters; lexicographic ranges are
+    * expanded by the caller.
+    */
+  private def filterClauses(filters: Seq[(String, String)],
+      anyFilters: Seq[(String, Seq[String])],
+      numericRangeFilters: Seq[(String, Long, Long)],
+      exists: Seq[String]): Seq[Seq[String]] =
+    filters.map { case (f, v) => Seq(FieldTerms.term(f, v)) } ++
+      anyFilters.map { case (f, vs) => vs.distinct.map(v => FieldTerms.term(f, v)) } ++
+      numericRangeFilters.map { case (f, lo, hi) => FieldTerms.trieRangeTerms(f, lo, hi) } ++
+      exists.map(f => Seq(FieldTerms.existsTerm(f)))
+
+  /** must_not terms: keyword values, missing-field exists markers, and
+    * the analyzed tokens of `mustNotText` words.
+    */
+  private def excludeTermsOf(mustNot: Seq[(String, String)], missing: Seq[String],
+      mustNotText: Seq[(String, String)]): Seq[String] =
+    (mustNot.map { case (f, v) => FieldTerms.term(f, v) } ++
+      missing.map(f => FieldTerms.existsTerm(f)) ++
+      mustNotText.flatMap { case (f, w) =>
+        Analyzer.tokenize(w).map(t => FieldTerms.textTerm(f, t)) }).distinct
+
+  /** Batched execution of FULL bool queries — the ES `_msearch` shape: N
+    * heterogeneous queries (OR / AND / phrase+slop / filters / must_not /
+    * terms / trie ranges / lexicographic ranges / should +
+    * minimum_should_match / multi_match) in ONE Spark job. One
+    * dictionary lookup, one batched range expansion and one pruned block
+    * scan cover the union of every spec's terms; per group, each spec
+    * runs through the same [[Searcher.runGroup]] dispatch as its
+    * standalone API, so results are identical to issuing the specs one
+    * at a time (test-pinned). Warm searchers answer in-process with zero
+    * jobs.
     */
   def searchManyBool(specs: Seq[BoolQuerySpec], k: Int): Seq[Array[Scored]] = {
     specs.foreach(sp => guardExists(sp.exists, sp.missing))
-    final case class Prep(scoredTerms: Seq[String], slots: Seq[String],
-        clauses: Seq[Seq[String]], excludeTerms: Seq[String], shouldTerms: Seq[String],
-        ranges: Seq[(String, String, String)], boosts: Map[String, Double],
-        bestFields: Wand.BestFields)
+    val rangeExp = expandFieldRanges(specs.flatMap(_.rangeFilters))
+    final case class Prep(slots: Seq[String], scored: Seq[String], should: Seq[String],
+        clauses: Seq[Seq[String]], excludes: Seq[String], boosts: Map[String, Double],
+        bf: Wand.BestFields)
     val preps = specs.map { sp =>
       require(sp.multiMatchFields.isEmpty || (!sp.phrase && !sp.conjunctive),
         "multiMatchFields is OR-mode only (like multiMatch)")
-      val toks = Analyzer.tokenize(sp.query).toSeq
-      val mm = sp.multiMatchFields
-      val slots =
-        if (sp.phrase) toks.map(t => graft.index.FieldTerms.textTerm(sp.field, t)) else null
-      val scoredTerms =
-        if (mm.nonEmpty)
-          (for ((f, _) <- mm; t <- toks.distinct)
-            yield graft.index.FieldTerms.textTerm(f, t)).distinct.sorted
-        else if (sp.phrase) Option(slots).getOrElse(Nil).distinct.sorted
-        else toks.distinct.sorted.map(t => graft.index.FieldTerms.textTerm(sp.field, t))
-      val boosts: Map[String, Double] =
-        if (mm.isEmpty) Map.empty
-        else (for ((f, b) <- mm; t <- toks.distinct)
-          yield graft.index.FieldTerms.textTerm(f, t) -> b).toMap
-      val shouldTerms = Analyzer.analyzeQuery(sp.should).filterNot(scoredTerms.contains).toSeq
-      val clauses: Seq[Seq[String]] =
-        sp.filters.map { case (f, v) => Seq(graft.index.FieldTerms.term(f, v)) } ++
-          sp.anyFilters.map { case (f, vs) =>
-            vs.distinct.map(v => graft.index.FieldTerms.term(f, v)) } ++
-          sp.numericRangeFilters.map { case (f, lo, hi) =>
-            graft.index.FieldTerms.trieRangeTerms(f, lo, hi) } ++
-          sp.exists.map(f => Seq(graft.index.FieldTerms.existsTerm(f)))
-      val bf =
-        if (mm.nonEmpty && sp.multiMatchBest)
-          Wand.BestFields.of(mm.map(_._1), toks, sp.tieBreaker)
-        else null
-      Prep(scoredTerms, slots, clauses,
-        (sp.mustNot.map { case (f, v) => graft.index.FieldTerms.term(f, v) } ++
-          sp.missing.map(f => graft.index.FieldTerms.existsTerm(f)) ++
-          sp.mustNotText.flatMap { case (f, w) =>
-            Analyzer.tokenize(w).map(t => graft.index.FieldTerms.textTerm(f, t)) }).distinct,
-        shouldTerms, sp.rangeFilters, boosts, bf)
+      val (slots, scored, boosts, bf) = mustTerms(sp.query, sp.field, sp.phrase,
+        sp.multiMatchFields, sp.multiMatchBest, sp.tieBreaker)
+      Prep(slots, scored, Analyzer.analyzeQuery(sp.should).filterNot(scored.contains).toSeq,
+        filterClauses(sp.filters, sp.anyFilters, sp.numericRangeFilters, sp.exists) ++
+          sp.rangeFilters.map(rangeExp),
+        excludeTermsOf(sp.mustNot, sp.missing, sp.mustNotText), boosts, bf)
     }
-    // ALL specs' lexicographic ranges expand in ONE batched dict scan
-    val rangeExp: Map[(String, String, String), Map[String, TermStats]] =
-      expandFieldRanges(preps.flatMap(_.ranges).distinct)
-    val allTerms = preps.flatMap(p =>
-      p.scoredTerms ++ p.shouldTerms ++ p.clauses.flatten ++ p.excludeTerms).distinct.sorted
-    val found = lookupTerms(allTerms) ++ rangeExp.valuesIterator.flatten
-    // per-spec resolution mirrors searchBool's early-empty rules exactly
-    val resolved: Seq[Option[(Seq[(String, TermStats)], SearchMode)]] =
-      preps.zip(specs).map { case (p, sp) =>
-        val needAll = sp.conjunctive || sp.phrase
-        val foundClauses = p.clauses.map(_.filter(found.contains)) ++
-          p.ranges.map(r => rangeExp(r).keys.toSeq.sorted)
-        val shouldFound = p.shouldTerms.filter(found.contains)
-        if ((p.scoredTerms.isEmpty && p.shouldTerms.isEmpty) ||
-          (sp.phrase && (p.slots == null || p.slots.isEmpty)) ||
+    val (dfGlobal, perSeg) = lookup(preps.flatMap(p =>
+      p.scored ++ p.should ++ p.clauses.flatten ++ p.excludes).distinct.sorted)
+    // per-spec resolution mirrors run's early-empty rules exactly
+    val active: Seq[(Int, ResolvedQuery)] = preps.zip(specs).zipWithIndex.flatMap {
+      case ((p, sp), i) =>
+        val foundClauses = p.clauses.map(_.filter(dfGlobal.contains))
+        val shouldFound = p.should.filter(dfGlobal.contains)
+        if ((p.scored.isEmpty && p.should.isEmpty) ||
+          (sp.phrase && p.slots.isEmpty) ||
           foundClauses.exists(_.isEmpty) ||
-          (needAll && p.scoredTerms.exists(t => !found.contains(t))) ||
-          (p.scoredTerms.nonEmpty && !p.scoredTerms.exists(found.contains)) ||
+          ((sp.conjunctive || sp.phrase) && p.scored.exists(t => !dfGlobal.contains(t))) ||
+          (p.scored.nonEmpty && !p.scored.exists(dfGlobal.contains)) ||
           shouldFound.size < sp.minShouldMatch) None
-        else {
-          val terms = (p.scoredTerms ++ shouldFound ++ foundClauses.flatten ++
-            p.excludeTerms).distinct.filter(found.contains)
-          Some((terms.map(t => t -> found(t)),
-            SearchMode(sp.conjunctive, p.slots, foundClauses,
-              p.excludeTerms.filter(found.contains), shouldFound, sp.minShouldMatch,
-              null, sp.phraseSlop, p.boosts, p.bestFields)))
-        }
-      }
-    if (!resolved.exists(_.isDefined)) return specs.map(_ => Array.empty[Scored])
-    if (localIdx != null)
-      return resolved.map {
-        case Some((fs, m)) => runLocal(fs.toMap, k, m)
-        case None => Array.empty[Scored]
-      }
-    val nG = stats.n
-    val avgdlG = stats.avgdl
-    val fStats = fieldStatsMap
-    val work: Seq[(Int, Seq[(String, TermStats)], SearchMode)] =
-      resolved.zipWithIndex.collect { case (Some((f, m)), i) => (i, f, m) }
-    val allStats = work.flatMap(_._2.map(_._2)).groupBy(_.termId).map(_._2.head)
-    val rows = selectBlocks(allStats)
-      .as[PostingBlock]
-      .groupByKey(_.bucket)
-      .flatMapGroups { (_, it) =>
-        val byTerm = it.toArray.groupBy(_.termId)
-        work.iterator.flatMap { case (i, foundSeq, mode) =>
-          Searcher.runBucket(byTerm, foundSeq, mode, k, nG, avgdlG, fStats)
-            .map(s => (i, s.docId, s.score))
-        }
-      }
-      .collect()
-    val grouped = rows.groupBy(_._1)
-    specs.indices.map { i =>
-      grouped.getOrElse(i, Array.empty)
-        .map(r => Scored(r._2, r._3))
-        .sortBy(s => (-s.score, s.docId))
-        .take(k)
+        else Some(i -> ResolvedQuery(p.scored.filter(dfGlobal.contains), shouldFound,
+          foundClauses, p.excludes.filter(dfGlobal.contains), sp.conjunctive, p.slots,
+          sp.minShouldMatch, sp.phraseSlop, p.boosts, p.bf))
     }
+    if (active.isEmpty) return specs.map(_ => Array.empty[Scored])
+    val byIdx = active.map(_._1).zip(execute(active.map(_._2), k, perSeg, dfGlobal)).toMap
+    specs.indices.map(i => byIdx.getOrElse(i, Array.empty[Scored]))
   }
 
   /** Fielded `match` (ES `{"match": {"<field>": ...}}`): BM25 top-k over
     * ONE analyzed text field of an index built with
     * `IndexConfig.textFieldCols`. Scores use the FIELD's own statistics
     * — df per `%field:token` term, the field's dl in every posting,
-    * (docCount, avgdl) from `fieldstats/` — exactly Lucene's per-field
-    * model, so a doc's score depends only on that field's content.
-    * `field = "text"` is the main field (≡ [[search]]). `phrase` matches
-    * the tokens adjacently within the field (positions are per-field).
+    * (docCount, avgdl) from `fieldstats/` (merged over segments with
+    * exact tombstone subtraction) — exactly Lucene's per-field model, so
+    * a doc's score depends only on that field's content. `field =
+    * "text"` is the main field (≡ [[search]]). `phrase` matches the
+    * tokens adjacently within the field (positions are per-field).
     */
   def searchField(field: String, query: String, k: Int,
       conjunctive: Boolean = false, phrase: Boolean = false,
       from: Int = 0, slop: Int = 0): Array[Scored] = {
-    val toks = Analyzer.tokenize(query).toSeq
-    if (toks.isEmpty) return Array.empty
-    val slots = if (phrase) toks.map(t => graft.index.FieldTerms.textTerm(field, t)) else null
-    val terms =
-      if (phrase) slots.distinct.sorted
-      else toks.distinct.sorted.map(t => graft.index.FieldTerms.textTerm(field, t))
-    val hits = runPerBucket(terms, from + k,
-      SearchMode(conjunctive, slots, slop = slop))
-    if (from == 0) hits else hits.slice(from, from + k)
+    val (slots, terms, _, _) = mustTerms(query, field, phrase, Nil, false, 0.0)
+    if (terms.isEmpty) return Array.empty
+    page(run(terms, from + k, conjunctive, slots, slop = slop), from, k)
   }
 
   /** ES `multi_match`: the query's terms score over EVERY listed field
@@ -940,18 +1418,10 @@ class Searcher(spark: SparkSession, indexDir: String, numShards: Int) {
     val toks = Analyzer.analyzeQuery(query).toSeq
     if (toks.isEmpty || fields.isEmpty) return Array.empty
     val termBoosts: Seq[(String, Double)] =
-      for ((f, b) <- fields; t <- toks) yield graft.index.FieldTerms.textTerm(f, t) -> b
+      for ((f, b) <- fields; t <- toks) yield FieldTerms.textTerm(f, t) -> b
     val bf = if (bestFields) Wand.BestFields.of(fields.map(_._1), toks, tieBreaker) else null
-    val hits = runPerBucket(termBoosts.map(_._1).sorted, from + k,
-      SearchMode(conjunctive = false, slots = null, boosts = termBoosts.toMap,
-        bestFields = bf))
-    if (from == 0) hits else hits.slice(from, from + k)
-  }
-
-  /** Conjunctive (AND) BM25 top-k. */
-  def searchConjunctive(query: String, k: Int, from: Int = 0): Array[Scored] = {
-    val hits = runPerBucket(Analyzer.analyzeQuery(query).toSeq, from + k, Mode(conjunctive = true))
-    if (from == 0) hits else hits.slice(from, from + k)
+    page(run(termBoosts.map(_._1).sorted, from + k, conjunctive = false,
+      boosts = termBoosts.toMap, bestFields = bf), from, k)
   }
 
   /** ES `bool` query: `query` scores (as OR / AND / phrase per the
@@ -964,7 +1434,7 @@ class Searcher(spark: SparkSession, indexDir: String, numShards: Int) {
     * query's scores on the surviving docs.
     *
     * Scale shape: a filter clause is ONE extra posting list in the
-    * per-bucket WAND — no doc-store scan, no post-filter of an oversized
+    * per-group WAND — no doc-store scan, no post-filter of an oversized
     * top-k (which would be unsound), no broadcast of a docId set.
     */
   def searchBool(
@@ -981,8 +1451,8 @@ class Searcher(spark: SparkSession, indexDir: String, numShards: Int) {
       /** ES `range` filter clauses on keyword fields: (field, lo, hi),
         * INCLUSIVE, LEXICOGRAPHIC value order (exact for fixed-width
         * encodings — zero-pad numerics at index time, ISO-8601 dates
-        * sort naturally). Expanded against the dictionary (uncapped —
-        * a silent expansion cap would drop matching docs), so use
+        * sort naturally). Expanded against the dictionary (uncapped — a
+        * silent expansion cap would drop matching docs), so use
         * [[numericRangeFilters]] for high-cardinality numeric fields.
         */
       rangeFilters: Seq[(String, String, String)] = Nil,
@@ -994,10 +1464,10 @@ class Searcher(spark: SparkSession, indexDir: String, numShards: Int) {
         * scan, no driver-side per-value expansion.
         */
       numericRangeFilters: Seq[(String, Long, Long)] = Nil,
-      /** ES `exists` filter clauses: the doc must HAVE each listed
-        * field (non-null keyword/numeric value, ≥ 1 token for analyzed
-        * text fields) — answered by the `_field_names`-style exists
-        * marker an index built with field columns stores
+      /** ES `exists` filter clauses: the doc must HAVE each listed field
+        * (non-null keyword/numeric value, ≥ 1 token for analyzed text
+        * fields) — answered by the `_field_names`-style exists marker an
+        * index built with field columns stores
         * ([[graft.index.FieldTerms.existsTerm]]): one more posting
         * cursor, never a doc-store scan.
         */
@@ -1006,9 +1476,9 @@ class Searcher(spark: SparkSession, indexDir: String, numShards: Int) {
         * vetoed — the exists marker rides the must_not cursor set.
         */
       missing: Seq[String] = Nil,
-      /** ES bool `must_not` over ANALYZED text ((field, token), "text"
-        * = main field — the Lucene `-term` clause): the token's docs
-        * are vetoed via the same exclude cursors as keyword mustNot.
+      /** ES bool `must_not` over ANALYZED text ((field, token), "text" =
+        * main field — the Lucene `-term` clause): the token's docs are
+        * vetoed via the same exclude cursors as keyword mustNot.
         */
       mustNotText: Seq[(String, String)] = Nil,
       /** ES bool `should`: an analyzed query whose terms optionally add
@@ -1022,8 +1492,8 @@ class Searcher(spark: SparkSession, indexDir: String, numShards: Int) {
         */
       minShouldMatch: Int = 0,
       /** Pagination offset (ES `from`): skip the first `from` hits of
-        * the (score desc, docId asc) ranking. Deep paging costs
-        * from + k per bucket — the documented ES tradeoff; prefer
+        * the (score desc, docId asc) ranking. Deep paging costs from + k
+        * per group — the documented ES tradeoff; prefer
         * [[searchAfter]]-style cursors for deep pages.
         */
       from: Int = 0,
@@ -1037,9 +1507,8 @@ class Searcher(spark: SparkSession, indexDir: String, numShards: Int) {
         */
       phraseSlop: Int = 0,
       /** Analyzed field the `query` matches over ("text" = main field) —
-        * per-field BM25, same as [[searchField]]; a fielded match WITH
-        * filter clauses no longer needs a batch-of-one (round-5 review
-        * "What's missing #2").
+        * per-field BM25, same as [[searchField]] (round-5 review "What's
+        * missing #2").
         */
       field: String = "text",
       /** ES `multi_match` inside the bool `must`: when non-empty,
@@ -1052,279 +1521,219 @@ class Searcher(spark: SparkSession, indexDir: String, numShards: Int) {
       tieBreaker: Double = 0.0
   ): Array[Scored] = {
     guardExists(exists, missing)
-    val mm = multiMatchFields
-    require(mm.isEmpty || (!phrase && !conjunctive),
+    require(multiMatchFields.isEmpty || (!phrase && !conjunctive),
       "multiMatchFields is OR-mode only (like multiMatch)")
-    val toks = Analyzer.tokenize(query).toSeq
-    val slots = if (phrase) toks.map(t => graft.index.FieldTerms.textTerm(field, t)) else null
-    val scoredTerms =
-      if (mm.nonEmpty)
-        (for ((f, _) <- mm; t <- toks.distinct)
-          yield graft.index.FieldTerms.textTerm(f, t)).distinct.sorted
-      else if (phrase) Option(slots).getOrElse(Nil).distinct.sorted
-      else toks.distinct.sorted.map(t => graft.index.FieldTerms.textTerm(field, t))
-    val boosts: Map[String, Double] =
-      if (mm.isEmpty) Map.empty
-      else (for ((f, b) <- mm; t <- toks.distinct)
-        yield graft.index.FieldTerms.textTerm(f, t) -> b).toMap
-    val bf =
-      if (mm.nonEmpty && multiMatchBest) Wand.BestFields.of(mm.map(_._1), toks, tieBreaker)
-      else null
-    val shouldTerms =
-      Analyzer.analyzeQuery(should).filterNot(scoredTerms.contains).toSeq
+    val (slots, scoredTerms, boosts, bf) =
+      mustTerms(query, field, phrase, multiMatchFields, multiMatchBest, tieBreaker)
+    val shouldTerms = Analyzer.analyzeQuery(should).filterNot(scoredTerms.contains).toSeq
     if ((scoredTerms.isEmpty && shouldTerms.isEmpty) || (phrase && slots.isEmpty))
       return Array.empty
-    val clauses: Seq[Seq[String]] =
-      filters.map { case (f, v) => Seq(graft.index.FieldTerms.term(f, v)) } ++
-        anyFilters.map { case (f, vs) =>
-          vs.distinct.map(v => graft.index.FieldTerms.term(f, v))
-        } ++
-        numericRangeFilters.map { case (f, lo, hi) =>
-          graft.index.FieldTerms.trieRangeTerms(f, lo, hi)
-        } ++
-        exists.map(f => Seq(graft.index.FieldTerms.existsTerm(f)))
-    // range expansion already returns the TermStats rows (one dict scan,
-    // no second lookup job over the expanded term list)
-    val rangeExp: Seq[Map[String, TermStats]] =
-      rangeFilters.map { case (f, lo, hi) => expandFieldRange(f, lo, hi) }
-    val excludeTerms = (mustNot.map { case (f, v) => graft.index.FieldTerms.term(f, v) } ++
-      missing.map(f => graft.index.FieldTerms.existsTerm(f)) ++
-      mustNotText.flatMap { case (f, w) =>
-        Analyzer.tokenize(w).map(t => graft.index.FieldTerms.textTerm(f, t)) }).distinct
-    val found = lookupTerms(
-      scoredTerms ++ shouldTerms ++ clauses.flatten.distinct ++ excludeTerms) ++
-      rangeExp.flatten
-    // a clause with no value present anywhere in the index ⇒ no match.
-    // (A trie range clause keeps only the cells some doc actually
-    // carries — an all-absent decomposition means nothing is in range.)
-    val foundClauses = clauses.map(_.filter(found.contains)) ++
-      rangeExp.map(_.keys.toSeq.sorted)
-    if (foundClauses.exists(_.isEmpty)) return Array.empty
-    val needAll = conjunctive || phrase
-    if (needAll && scoredTerms.exists(t => !found.contains(t))) return Array.empty
-    if (scoredTerms.nonEmpty && !scoredTerms.exists(found.contains)) return Array.empty
-    val shouldFound = shouldTerms.filter(found.contains)
-    if (shouldFound.size < minShouldMatch) return Array.empty
-    val hits = runFound(found, from + k,
-      SearchMode(conjunctive, slots, foundClauses, excludeTerms.filter(found.contains),
-        shouldFound, minShouldMatch, after, phraseSlop, boosts, bf))
-    if (from == 0) hits else hits.slice(from, from + k)
+    val rangeExp = expandFieldRanges(rangeFilters)
+    page(run(scoredTerms, from + k, conjunctive, slots,
+      filterClauses(filters, anyFilters, numericRangeFilters, exists) ++
+        rangeFilters.map(rangeExp),
+      excludeTermsOf(mustNot, missing, mustNotText),
+      shouldTerms, minShouldMatch, after, phraseSlop, boosts, bf), from, k)
   }
 
-  /** ES `search_after` page continuation: the next k hits strictly after
-    * the (score, docId) cursor — sound with WAND because the cursor only
-    * filters offers; pruning still uses the page's own θ.
-    */
-  def searchAfter(query: String, k: Int, after: Scored): Array[Scored] =
-    runPerBucket(Analyzer.analyzeQuery(query).toSeq, k,
-      SearchMode(conjunctive = false, slots = null, after = after))
-
-  /** Dictionary expansion of a lexicographic value range on a keyword
-    * field: every stored `#field:value` term with lo ≤ value ≤ hi.
-    * Warm dictMap filters on the driver (zero jobs); cold, ONE dict
-    * scan (the term-sorted parquet makes the prefix a row-group range
-    * scan, like searchPrefix). NOT capped: a range filter must see
-    * every matching value or it silently drops docs.
-    */
-  private def expandFieldRange(field: String, lo: String, hi: String): Map[String, TermStats] = {
-    val prefix = graft.index.FieldTerms.term(field, "")
-    def inRange(v: String): Boolean = lo <= v && v <= hi
-    if (dictMap != null)
-      dictMap.view
-        .filterKeys(t => t.startsWith(prefix) && inRange(t.substring(prefix.length)))
-        .toMap
-    else {
-      val valueCol = col("term").substr(lit(prefix.length + 1), lit(Int.MaxValue))
-      dict.filter(col("term").startsWith(prefix) &&
-          valueCol >= lit(lo) && valueCol <= lit(hi))
-        .as[TermStats].collect().map(ts => ts.term -> ts).toMap
-    }
-  }
-
-  /** Batched variant for `searchManyBool`: EVERY range expands off one
-    * dictionary scan (OR of the per-range predicates), partitioned back
-    * per range on the driver — the batch keeps its one-job contract.
+  /** Stored `#field:value` terms with lo ≤ value ≤ hi (inclusive,
+    * lexicographic) per requested range. EVERY range expands off one
+    * dictionary pass (OR of the per-range predicates) — the warm driver
+    * dictionary (zero jobs), else ONE unioned dict scan across segments
+    * (the term-sorted parquet makes each prefix a row-group range scan)
+    * — so a batch keeps its one-job contract. NOT capped: a range filter
+    * must see every matching value or it silently drops docs; an empty
+    * expansion makes the clause unsatisfiable.
     */
   private def expandFieldRanges(ranges: Seq[(String, String, String)])
-      : Map[(String, String, String), Map[String, TermStats]] = {
+      : Map[(String, String, String), Seq[String]] = {
     val distinct = ranges.distinct
     if (distinct.isEmpty) return Map.empty
     def matches(r: (String, String, String), term: String): Boolean = {
-      val prefix = graft.index.FieldTerms.term(r._1, "")
+      val prefix = FieldTerms.term(r._1, "")
       term.startsWith(prefix) && {
         val v = term.substring(prefix.length)
         r._2 <= v && v <= r._3
       }
     }
-    val rows: Seq[TermStats] =
-      if (dictMap != null)
-        dictMap.valuesIterator.filter(ts => distinct.exists(matches(_, ts.term))).toSeq
+    val terms: Seq[String] =
+      if (localDict != null) localDict.keysIterator.filter(t => distinct.exists(matches(_, t))).toSeq
       else {
-        val preds = distinct.map { case (f, lo, hi) =>
-          val prefix = graft.index.FieldTerms.term(f, "")
+        val pred = distinct.map { case (f, lo, hi) =>
+          val prefix = FieldTerms.term(f, "")
           val valueCol = col("term").substr(lit(prefix.length + 1), lit(Int.MaxValue))
           col("term").startsWith(prefix) && valueCol >= lit(lo) && valueCol <= lit(hi)
-        }
-        dict.filter(preds.reduce(_ || _)).as[TermStats].collect().toSeq
+        }.reduce(_ || _)
+        val union = segDicts.map(_.filter(pred).select(col("term"))).reduce(_ unionByName _)
+        (if (segDicts.size > 1) union.distinct() else union).as[String].collect().toSeq
       }
-    distinct.map(r =>
-      r -> rows.filter(ts => matches(r, ts.term)).map(ts => ts.term -> ts).toMap).toMap
+    distinct.map(r => r -> terms.filter(matches(r, _)).sorted).toMap
   }
 
   // --- term-expansion queries (ES prefix / wildcard / fuzzy) --------------
 
   /** Unit-cost Levenshtein — MUST agree with Spark's
     * functions.levenshtein and DuckDB's levenshtein (the oracle twins).
-    * Shared with the cross-segment searcher via [[Expansion]].
     */
   private[graft] def levenshtein(a: String, b: String): Int =
     Expansion.levenshtein(a, b)
 
-  /** Matching dictionary terms for a predicate over the tokens of ONE
-    * analyzed field (`"text"` = the main namespace; any other field
-    * matches within its `%field:` namespace — ES expands prefix/
-    * wildcard/fuzzy against the NAMED field's terms, round-5 review
-    * "What's missing #3"): ascending term order, capped at
-    * maxExpansions (the ES rewrite rule — deterministic, so the oracle
-    * twin reproduces the same set whenever the cap is not hit). The
-    * predicate always sees the BARE token (namespace stripped). Warm
-    * dictMap filters on the driver; otherwise ONE distributed dict scan
-    * (a prefix predicate cannot shard-prune — the dictionary's
-    * term-sorted parquet makes it a row-group range scan instead).
+  /** Dictionary-term predicate of analyzed `field`'s namespace ("text" =
+    * the main namespace: fielded keyword ('#field:v') and fielded text
+    * ('%field:tok') terms share the dictionary but never match a
+    * main-TEXT pattern — ES keeps sub-fields out of analyzed-field term
+    * expansion; neither prefix can appear in analyzer output, so the
+    * guard is exact) and the BARE-token column an expansion predicate
+    * sees.
+    */
+  private def fieldCols(field: String): (Column, Column) =
+    if (field == "text")
+      (!col("term").startsWith(FieldTerms.Prefix) && !col("term").startsWith(FieldTerms.TextPrefix),
+        col("term"))
+    else {
+      val pfx = FieldTerms.textTerm(field, "")
+      (col("term").startsWith(pfx), col("term").substr(lit(pfx.length + 1), lit(Int.MaxValue)))
+    }
+
+  /** Bare token of `term` when it lives in `field`'s namespace. */
+  private def bareOf(field: String, term: String): Option[String] =
+    if (field == "text") { if (FieldTerms.isNamespaced(term)) None else Some(term) }
+    else {
+      val pfx = FieldTerms.textTerm(field, "")
+      if (term.startsWith(pfx)) Some(term.substring(pfx.length)) else None
+    }
+
+  /** (term, LWW df) of every visible dictionary term of analyzed
+    * `field`: per-segment rows summed (a single segment skips the merge),
+    * minus the tombstoned docs' corrections — a term living only in
+    * superseded docs vanishes. `lenRange` pushes a bare-token length
+    * prune to each dict's stored `len` column (format v2 — a plain int
+    * range the parquet reader evaluates before any levenshtein; legacy
+    * dicts skip it, the caller's predicate already implies it). Index
+    * metadata only — never a corpus scan.
+    */
+  private def termDfFrame(field: String, lenRange: Option[(Int, Int)] = None): DataFrame = {
+    val (inField, _) = fieldCols(field)
+    val perSeg = segDicts.map { d =>
+      val base = lenRange match {
+        case Some((lo, hi)) if d.columns.contains("len") =>
+          d.filter(col("len").between(lit(lo), lit(hi)))
+        case _ => d
+      }
+      base.filter(inField).select(col("term"), col("df"))
+    }
+    val merged =
+      if (perSeg.size == 1) perSeg.head
+      else perSeg.reduce(_ unionByName _).groupBy(col("term")).agg(sum(col("df")).as("df"))
+    removedDfDF match {
+      case Some(rm) => merged.join(rm, Seq("term"), "left")
+        .select(col("term"), (col("df") - coalesce(col("removed"), lit(0L))).as("df"))
+        .filter(col("df") > lit(0L))
+      case None => merged
+    }
+  }
+
+  /** Warm twin of [[termDfFrame]] filtered to the bare tokens `keep`
+    * admits, from the driver dictionary with zero jobs — None when the
+    * dictionary stays distributed or heavy churn keeps the df
+    * corrections distributed (callers then scan).
+    */
+  private def localTermDf(field: String)(keep: String => Boolean): Option[Seq[(String, Long)]] =
+    if (localDict == null || (hasTombstones && removedDfSmall.isEmpty)) None
+    else {
+      val rm = removedDfSmall.getOrElse(Map.empty)
+      Some(localDict.iterator
+        .filter { case (t, _) => bareOf(field, t).exists(keep) }
+        .map { case (t, xs) => (t, xs.iterator.map(_._2.df).sum - rm.getOrElse(t, 0L)) }
+        .filter(_._2 > 0L).toSeq)
+    }
+
+  /** Matching visible dictionary terms, with their LWW df, for a
+    * predicate over the BARE tokens of ONE analyzed field ("text" = the
+    * main namespace; any other field matches within its `%field:`
+    * namespace — ES expands prefix/wildcard/fuzzy against the NAMED
+    * field's terms, round-5 review "What's missing #3"): ascending term
+    * order, capped at maxExpansions over the global distinct set (the ES
+    * rewrite rule — deterministic, so the oracle twin reproduces the same
+    * set whenever the cap is not hit). Warm: the driver dictionary. Cold:
+    * ONE unioned dict scan with the term-asc cap IN the plan
+    * (TakeOrderedAndProject: per-partition heaps of ≤ maxExpansions — a
+    * low-selectivity regexp / infix wildcard on a 10^9-term dictionary
+    * never collects the whole match, round-7 review "What's wrong #1").
+    * `lenRange` = the bare-token length bounds the predicate implies
+    * (edit distance: |len − |w|| ≤ maxDist), pushed to the cold scan.
     */
   private def expand(
       scalaPred: String => Boolean,
       sqlPredOf: Column => Column,
       maxExpansions: Int,
       field: String = "text",
-      /** Bare-token length bounds implied by the predicate (edit-
-        * distance queries: |len − |w|| ≤ maxDist). The cold dict scan
-        * pushes it to the STORED `len` column (format v2 dicts — a
-        * plain int range the parquet reader evaluates before any
-        * levenshtein), so the per-row predicate only runs on length-
-        * plausible survivors; legacy dicts without the column skip the
-        * prune (the predicate already implies it — correctness
-        * unchanged). Round-6 review "What's wrong #3".
-        */
       lenRange: Option[(Int, Int)] = None
-  ): Map[String, TermStats] = {
-    def pruned(d: DataFrame): DataFrame = lenRange match {
-      case Some((lo, hi)) if d.columns.contains("len") =>
-        d.filter(col("len").between(lit(lo), lit(hi)))
-      case _ => d
+  ): Seq[(String, Long)] =
+    localTermDf(field)(scalaPred) match {
+      case Some(xs) => xs.sortBy(_._1).take(maxExpansions)
+      case None =>
+        termDfFrame(field, lenRange).filter(sqlPredOf(fieldCols(field)._2))
+          .orderBy(col("term")).limit(maxExpansions)
+          .as[(String, Long)].collect().toSeq
     }
-    // the deterministic term-asc cap lives IN the plan on the cold path
-    // (TakeOrderedAndProject: per-partition heaps of ≤ maxExpansions,
-    // the driver sees ≤ maxExpansions rows) — a low-selectivity regexp /
-    // infix wildcard on a 10^9-term dictionary must never collect the
-    // whole match before capping (round-7 review "What's wrong #1")
-    def capped(d: DataFrame): Seq[TermStats] =
-      d.orderBy(col("term")).limit(maxExpansions).as[TermStats].collect().toSeq
-    val all =
-      if (field == "text") {
-        // main-text namespace only: fielded keyword terms ('#field:v')
-        // AND fielded text terms ('%field:tok') share the dictionary but
-        // must never match a main-TEXT pattern — ES keeps sub-fields out
-        // of analyzed-field term expansion; neither prefix can appear in
-        // analyzer output, so the guard is exact
-        val notField = !col("term").startsWith(graft.index.FieldTerms.Prefix) &&
-          !col("term").startsWith(graft.index.FieldTerms.TextPrefix)
-        if (dictMap != null)
-          dictMap.valuesIterator
-            .filter(ts => !graft.index.FieldTerms.isNamespaced(ts.term) && scalaPred(ts.term))
-            .toSeq
-        else capped(pruned(dict).filter(notField && sqlPredOf(col("term"))))
-      } else {
-        val pfx = graft.index.FieldTerms.textTerm(field, "")
-        if (dictMap != null)
-          dictMap.valuesIterator
-            .filter(ts => ts.term.startsWith(pfx) && scalaPred(ts.term.substring(pfx.length)))
-            .toSeq
-        else capped(pruned(dict).filter(col("term").startsWith(pfx) &&
-            sqlPredOf(col("term").substr(lit(pfx.length + 1), lit(Int.MaxValue)))))
-      }
-    all.sortBy(_.term).take(maxExpansions).map(ts => ts.term -> ts).toMap
-  }
 
   /** Per-token capped edit-distance expansion — the multi-token rewrite
     * ([[searchMatchFuzzy]], [[phraseSuggest]]) with the cap IN the plan:
-    * ONE len-pruned dictionary scan; each surviving row explodes to the
-    * query tokens within `maxDist` of its bare token; a rank-≤-cap
-    * window per token (Catalyst's InferWindowGroupLimit turns the
-    * `row_number ≤ cap` filter into PRE-SHUFFLE per-partition group
-    * limits), so the driver collects ≤ |tokens| × cap rows at ANY
-    * vocabulary size — never the whole distance match (round-7 review
-    * "What's wrong #1": the Int.MaxValue call sites). Ranking per token:
-    * `byDistDf = false` → term asc (the match-fuzzy per-token rewrite);
-    * `true` → (distance asc, df desc, term asc) — the term-suggester
-    * rule the phrase suggester's slots use. Warm dictMap filters on the
-    * driver (zero jobs), length-pre-filtered before any levenshtein.
+    * ONE len-pruned dictionary scan over all segments; each surviving
+    * term explodes to the query tokens within `maxDist` of its bare
+    * token; a rank-≤-cap window per token (Catalyst's
+    * InferWindowGroupLimit turns the `row_number ≤ cap` filter into
+    * PRE-SHUFFLE per-partition group limits), so the driver collects ≤
+    * |tokens| × cap rows at ANY vocabulary size (round-7 review "What's
+    * wrong #1"). Ranking per token: `byDistDf = false` → term asc (the
+    * match-fuzzy per-token rewrite); `true` → (distance asc, LWW df desc,
+    * term asc) — the term-suggester rule the phrase suggester's slots
+    * use. Warm: the driver dictionary, length-pre-filtered before any
+    * levenshtein. Returns token → ranked namespaced terms.
     */
   private def expandPerToken(toks: Seq[String], maxDist: Int, perTokenCap: Int,
-      field: String, byDistDf: Boolean): Map[String, Seq[TermStats]] = {
+      field: String, byDistDf: Boolean): Map[String, Seq[String]] = {
     if (toks.isEmpty) return Map.empty
     val lo = math.max(1, toks.map(_.length).min - maxDist)
     val hi = toks.map(_.length).max + maxDist
-    val pfx = if (field == "text") "" else graft.index.FieldTerms.textTerm(field, "")
-    val bareOf: String => String =
-      t => if (pfx.isEmpty) t else t.substring(pfx.length)
-    def rank(w: String, cands: Iterable[TermStats]): Seq[TermStats] = {
+    def rank(w: String, cands: Iterable[(String, Long)]): Seq[String] = {
       val in = cands.iterator
-        .map(ts => (ts, Expansion.levenshtein(w, bareOf(ts.term))))
-        .filter(_._2 <= maxDist).toSeq
+        .map { case (t, df) => (t, df, Expansion.levenshtein(w, bareOf(field, t).get)) }
+        .filter(_._3 <= maxDist).toSeq
       val ordered =
-        if (byDistDf) in.sortBy { case (ts, d) => (d, -ts.df, ts.term) }
-        else in.sortBy(_._1.term)
+        if (byDistDf) in.sortBy { case (t, df, d) => (d, -df, t) }
+        else in.sortBy(_._1)
       ordered.take(perTokenCap).map(_._1)
     }
-    if (dictMap != null) {
-      val pool = dictMap.valuesIterator.filter { ts =>
-        (if (pfx.isEmpty) !graft.index.FieldTerms.isNamespaced(ts.term)
-         else ts.term.startsWith(pfx)) && {
-          val l = bareOf(ts.term).length; l >= lo && l <= hi
-        }
-      }.toSeq
-      return toks.distinct.map(w => w -> rank(w, pool)).toMap
-    }
-    val nsPred =
-      if (pfx.isEmpty)
-        !col("term").startsWith(graft.index.FieldTerms.Prefix) &&
-          !col("term").startsWith(graft.index.FieldTerms.TextPrefix)
-      else col("term").startsWith(pfx)
-    val bareCol =
-      if (pfx.isEmpty) col("term")
-      else col("term").substr(lit(pfx.length + 1), lit(Int.MaxValue))
-    val lenPruned =
-      if (dict.columns.contains("len"))
-        dict.filter(col("len").between(lit(lo), lit(hi)))
-      else dict
-    val tokArr = array(toks.distinct.sorted.map(lit): _*)
-    val ordCols =
-      if (byDistDf)
-        Seq(org.apache.spark.sql.functions.levenshtein(col("__tok"), bareCol).asc,
-          col("df").desc, col("term").asc)
-      else Seq(col("term").asc)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("__tok")).orderBy(ordCols: _*)
-    val rows = lenPruned.filter(nsPred)
-      .select(col("term"), col("termId"), col("shard"), col("df"), col("cf"),
-        col("maxScore"),
-        explode(org.apache.spark.sql.functions.filter(tokArr,
-          t => org.apache.spark.sql.functions.levenshtein(t, bareCol) <= lit(maxDist)))
-          .as("__tok"))
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= lit(perTokenCap))
-      .select(col("__tok"), col("term"), col("termId"), col("shard"), col("df"),
-        col("cf"), col("maxScore"))
-      .as[(String, String, Long, Int, Long, Long, Double)]
-      .collect()
-    val byTok = rows.toSeq.groupBy(_._1).view
-      .mapValues(_.map { case (_, t, tid, sh, df, cf, ms) =>
-        TermStats(t, tid, sh, df, cf, ms)
-      }).toMap
-    // re-rank the ≤ cap survivors on the driver (collect order is
-    // partition-arbitrary; the window already selected the right SET)
-    toks.distinct.map(w => w -> rank(w, byTok.getOrElse(w, Nil))).toMap
+    val byTok: String => Iterable[(String, Long)] =
+      localTermDf(field)(b => b.length >= lo && b.length <= hi) match {
+        case Some(pool) => _ => pool
+        case None =>
+          val bare = fieldCols(field)._2
+          val tokArr = array(toks.distinct.sorted.map(lit): _*)
+          val ordCols =
+            if (byDistDf)
+              Seq(org.apache.spark.sql.functions.levenshtein(col("__tok"), bare).asc,
+                col("df").desc, col("term").asc)
+            else Seq(col("term").asc)
+          val w = org.apache.spark.sql.expressions.Window
+            .partitionBy(col("__tok")).orderBy(ordCols: _*)
+          val rows = termDfFrame(field, Some((lo, hi)))
+            .select(col("term"), col("df"),
+              explode(org.apache.spark.sql.functions.filter(tokArr,
+                t => org.apache.spark.sql.functions.levenshtein(t, bare) <= lit(maxDist)))
+                .as("__tok"))
+            .withColumn("__rn", row_number().over(w))
+            .filter(col("__rn") <= lit(perTokenCap))
+            .select(col("__tok"), col("term"), col("df"))
+            .as[(String, String, Long)].collect()
+          // re-rank the ≤ cap survivors on the driver (collect order is
+          // partition-arbitrary; the window already selected the SET)
+          val grouped = rows.toSeq.groupBy(_._1).view.mapValues(_.map(r => (r._2, r._3))).toMap
+          t => grouped.getOrElse(t, Nil)
+      }
+    toks.distinct.map(w => w -> rank(w, byTok(w))).toMap
   }
 
   /** Prefix query (ES `prefix`, rewrite = scoring boolean): BM25 OR over
@@ -1336,8 +1745,8 @@ class Searcher(spark: SparkSession, indexDir: String, numShards: Int) {
     val toks = Analyzer.tokenize(prefix)
     if (toks.isEmpty) return Array.empty
     val p = toks(0)
-    runFound(expand(_.startsWith(p), _.startsWith(p), maxExpansions, field),
-      k, Mode(conjunctive = false))
+    run(expand(_.startsWith(p), _.startsWith(p), maxExpansions, field).map(_._1),
+      k, conjunctive = false)
   }
 
   /** Wildcard query (ES `wildcard`): `*` = any run, `?` = one char,
@@ -1348,13 +1757,13 @@ class Searcher(spark: SparkSession, indexDir: String, numShards: Int) {
     val pat = pattern.toLowerCase(java.util.Locale.ROOT)
     val rx = Expansion.wildcardRegex(pat)
     val like = Expansion.wildcardLike(pat)
-    runFound(expand(t => rx.findFirstIn(t).isDefined, _.like(like), maxExpansions, field),
-      k, Mode(conjunctive = false))
+    run(expand(t => rx.findFirstIn(t).isDefined, _.like(like), maxExpansions, field).map(_._1),
+      k, conjunctive = false)
   }
 
-  /** Fuzzy query (ES `fuzziness`): BM25 OR over index terms within
-    * edit distance maxDist of the analyzed term. Both scan paths prune
-    * by bare-token length FIRST (levenshtein ≥ |len difference|, so the
+  /** Fuzzy query (ES `fuzziness`): BM25 OR over index terms within edit
+    * distance maxDist of the analyzed term. Both scan paths prune by
+    * bare-token length FIRST (levenshtein ≥ |len difference|, so the
     * bound is exact): the warm driver map with an int compare, the cold
     * dict scan with the stored `len` column's pushed range filter.
     * `prefixLength` > 0 (ES `prefix_length`) additionally requires
@@ -1371,22 +1780,465 @@ class Searcher(spark: SparkSession, indexDir: String, numShards: Int) {
     // Lucene rule: prefix_length ≥ len(term) degrades FuzzyQuery to an
     // EXACT term query — without this, terms EXTENDING the input within
     // maxDist would still match (round-7 review)
-    if (prefixLength >= t0.length)
-      return runFound(
+    val exp =
+      if (prefixLength >= t0.length)
         expand(_ == t0, _ === lit(t0), maxExpansions, field,
-          lenRange = Some((t0.length, t0.length))),
-        k, Mode(conjunctive = false))
-    val pfx = t0.take(prefixLength)
-    runFound(
-      expand(t => t.startsWith(pfx) && math.abs(t.length - t0.length) <= maxDist &&
-          levenshtein(t0, t) <= maxDist,
-        c => c.startsWith(pfx) &&
-          org.apache.spark.sql.functions.levenshtein(lit(t0), c) <= lit(maxDist),
-        maxExpansions, field,
-        lenRange = Some((math.max(1, t0.length - maxDist), t0.length + maxDist))),
-      k, Mode(conjunctive = false))
+          lenRange = Some((t0.length, t0.length)))
+      else {
+        val pfx = t0.take(prefixLength)
+        expand(t => t.startsWith(pfx) && math.abs(t.length - t0.length) <= maxDist &&
+            levenshtein(t0, t) <= maxDist,
+          c => c.startsWith(pfx) &&
+            org.apache.spark.sql.functions.levenshtein(lit(t0), c) <= lit(maxDist),
+          maxExpansions, field,
+          lenRange = Some((math.max(1, t0.length - maxDist), t0.length + maxDist)))
+      }
+    run(exp.map(_._1), k, conjunctive = false)
   }
 
+  /** ES `regexp` query: the pattern anchors to the WHOLE analyzed term
+    * (Lucene regexp semantics — `sp.rk` matches `spark`, never a term
+    * merely containing it); BM25 OR over the ≤ maxExpansions matching
+    * dictionary terms (term-asc — the deterministic rewrite). Cold path
+    * is one dict scan (`rlike` with the anchored pattern); warm path
+    * matches the driver map.
+    */
+  def searchRegexp(pattern: String, k: Int, maxExpansions: Int = 50,
+      field: String = "text"): Array[Scored] = {
+    val p = java.util.regex.Pattern.compile(pattern)
+    val anchored = "^(?:" + pattern + ")$"
+    run(expand(t => p.matcher(t).matches(), _.rlike(anchored), maxExpansions, field).map(_._1),
+      k, conjunctive = false)
+  }
+
+  /** ES `match` with `fuzziness` (round-6 review "What's missing #4"):
+    * EVERY analyzed query token expands to the dictionary terms within
+    * `maxDist` edits of it (per-token term-asc cap — the ES per-term
+    * rewrite; dist 0 keeps the token itself when indexed), and the union
+    * scores as ONE BM25 OR. Documented deviation from ES: each expansion
+    * scores with its OWN df/idf (ES's blended rewrite reuses the original
+    * term's df across its expansions) — the integer-exact per-token
+    * selection keeps the SQL twin bit-reproducible. Cold path is ONE
+    * dict scan for ALL tokens ([[expandPerToken]]).
+    */
+  def searchMatchFuzzy(query: String, k: Int, maxDist: Int = 1,
+      maxExpansionsPerTerm: Int = 50, field: String = "text"): Array[Scored] = {
+    val toks = Analyzer.analyzeQuery(query).toSeq.sorted
+    if (toks.isEmpty) return Array.empty
+    run(expandPerToken(toks, maxDist, maxExpansionsPerTerm, field, byDistDf = false)
+      .valuesIterator.flatten.toSeq.distinct, k, conjunctive = false)
+  }
+
+  /** ES `dis_max` as a general combinator (round-6 review "What's
+    * missing #4"): score = best-scoring sub-query's BM25 sum +
+    * `tieBreaker` · Σ(the other matching sub-queries' sums) — the
+    * [[Wand.BestFields]] fold generalized from multi_match fields to
+    * arbitrary match sub-queries (tie_breaker = 1 degenerates to the
+    * plain bool-OR sum, pinned by test). Sub-queries MAY share analyzed
+    * terms (round-7 review "What's missing #5" — ES scores each
+    * sub-query independently): a shared term gets one scored iterator
+    * PER containing group, each attributed to its group's sum; sums tie
+    * to the lowest group index. Docs matching ANY sub-query rank.
+    */
+  def searchDisMax(queries: Seq[String], k: Int,
+      tieBreaker: Double = 0.0): Array[Scored] = {
+    val groups = queries.map(q => Analyzer.analyzeQuery(q).toSeq.distinct.sorted)
+    require(groups.exists(_.nonEmpty), "dis_max needs >= 1 non-empty sub-query")
+    val groupsOf: Map[String, Seq[Int]] = groups.zipWithIndex
+      .flatMap { case (ts, i) => ts.map(_ -> i) }
+      .groupBy(_._1).view.mapValues(_.map(_._2).sorted).toMap
+    run(groups.flatten.distinct.sorted, k, conjunctive = false,
+      bestFields = new Wand.BestFields(Map.empty, groups.size, tieBreaker, groupsOf))
+  }
+
+  /** ES term suggester ("did you mean"): visible dictionary terms within
+    * `maxDist` edits of the analyzed input word, ranked (distance asc,
+    * LWW df desc, term asc) — ES's default sort, deterministic. The
+    * candidate set is the ≤ `maxCandidates` term-asc terms matching the
+    * distance predicate (same deterministic cap rule as every
+    * expansion); the input word itself is excluded (ES
+    * suggest_mode=missing shape — you suggest for misspellings).
+    * Returns (suggestion, dist, df) rows, top `k`.
+    */
+  def suggestTerms(word: String, k: Int, maxDist: Int = 1,
+      maxCandidates: Int = 1000): DataFrame = {
+    val toks = Analyzer.tokenize(word)
+    if (toks.isEmpty) return Seq.empty[(String, Int, Long)].toDF("suggestion", "dist", "df")
+    val w = toks(0)
+    val cands = expand(
+      t => t != w && math.abs(t.length - w.length) <= maxDist &&
+        levenshtein(w, t) <= maxDist,
+      c => c =!= lit(w) &&
+        org.apache.spark.sql.functions.levenshtein(lit(w), c) <= lit(maxDist),
+      maxCandidates,
+      lenRange = Some((math.max(1, w.length - maxDist), w.length + maxDist)))
+    cands
+      .map { case (t, df) => (t, levenshtein(w, t), df) }
+      .sortBy { case (t, d, df) => (d, -df, t) }
+      .take(k)
+      .toDF("suggestion", "dist", "df")
+  }
+
+  /** ES completion-suggester analog (search-as-you-type): the top `k`
+    * dictionary terms extending `prefix`, ranked by POPULARITY — (LWW df
+    * desc, term asc); df is the suggestion's weight, the natural
+    * corpus-derived analog of ES's indexed completion weight. The cap is
+    * IN the plan — `orderBy(df desc, term asc).limit(k)` on the
+    * prefix-pruned dict scan (TakeOrderedAndProject: the driver sees ≤ k
+    * rows at any vocabulary size). Warm path filters the driver map.
+    * Returns (suggestion, weight) rows.
+    */
+  def suggestCompletion(prefix: String, k: Int): DataFrame = {
+    require(prefix.nonEmpty, "completion prefix must be non-empty")
+    require(k > 0, "completion size must be positive")
+    val p = Analyzer.analyzeQuery(prefix).headOption.getOrElse("")
+    if (p.isEmpty) return Seq.empty[(String, Long)].toDF("suggestion", "weight")
+    localTermDf("text")(_.startsWith(p)) match {
+      case Some(xs) =>
+        xs.sortBy { case (t, df) => (-df, t) }.take(k).toDF("suggestion", "weight")
+      case None =>
+        termDfFrame("text").filter(col("term").startsWith(p))
+          .orderBy(col("df").desc, col("term").asc).limit(k)
+          .select(col("term").as("suggestion"), col("df").as("weight"))
+    }
+  }
+
+  /** ES phrase suggester ("did you mean" over whole queries, round-6
+    * review "What's missing #5"): every analyzed input token expands to
+    * its ≤ `maxPerSlot` best correction candidates (dist ≤ maxDist
+    * INCLUDING the token itself when indexed, ranked dist asc / df desc /
+    * term asc — the term-suggester rule), candidate phrases are the slot
+    * product, and each phrase is scored by the SUM of its adjacent
+    * bigram doc-counts — derived from the POSITIONAL POSTINGS already
+    * stored (one pruned block scan + one self-join on (docId, pos+1);
+    * never a corpus re-tokenize), tombstoned docs excluded.
+    * Integer-exact and deterministic, so the DuckDB twin reproduces
+    * scores bit-for-bit (ES ranks by a smoothed bigram LM — deviation
+    * documented). Returns (suggestion, score) rows, top `k` by (score
+    * desc, phrase asc).
+    */
+  def phraseSuggest(phrase: String, k: Int, maxDist: Int = 1,
+      maxPerSlot: Int = 3): DataFrame = {
+    val slots = Analyzer.tokenize(phrase).toSeq
+    val empty = Seq.empty[(String, Long)].toDF("suggestion", "score")
+    if (slots.length < 2) return empty
+    val candMap = expandPerToken(slots, maxDist, maxPerSlot, "text", byDistDf = true)
+    val slotCands: Seq[Seq[String]] = slots.map(w => candMap.getOrElse(w, Nil))
+    if (slotCands.exists(_.isEmpty)) return empty
+    val bigram = bigramDocCounts(Searcher.slotPairs(slotCands))
+    Searcher.phraseSuggestFrom(spark, slotCands, bigram, k)
+  }
+
+  /** Corpus doc-counts of adjacent bigrams (a at position p, b at p+1)
+    * for the requested (a, b) pairs, from the positional postings: ONE
+    * pruned block scan over the pairs' terms (segment-local termIds
+    * resolved inside the decode closure from the tiny driver map — a
+    * broadcast join here was one more job + exchange per call, round-9),
+    * decoded to (term, docId, pos), tombstoned docs anti-joined out,
+    * then the shared (docId, pos+1) equi-self-join. Cost is bounded by
+    * the candidate terms' posting sizes (exactly what ES's phrase
+    * suggester reads for its collate).
+    */
+  private def bigramDocCounts(pairs: Seq[(String, String)]): Map[(String, String), Long] = {
+    if (pairs.isEmpty) return Map.empty
+    val terms = pairs.flatMap(p => Seq(p._1, p._2)).distinct.sorted
+    val (dfGlobal, perSeg) = lookup(terms)
+    val pairsFound = pairs.distinct.filter(p =>
+      dfGlobal.contains(p._1) && dfGlobal.contains(p._2))
+    if (pairsFound.isEmpty) return Map.empty
+    val pruned = prunedBlocks(perSeg, _ => true).getOrElse(return Map.empty)
+    val segIdToTerm: Map[(Int, Long), String] =
+      perSeg.map { case ((i, t), ts) => ((i, ts.termId), t) }
+    val exploded = pruned
+      .select(col("seg").as("_1"), struct(Searcher.BlockCols.map(col): _*).as("_2"))
+      .as[(Int, PostingBlock)]
+      .flatMap { case (seg, b) =>
+        val d = Codec.decodeBlock(b)
+        val poss = Codec.decodePositions(b, d.tfs)
+        // loud like the phrase executor — a silent empty would return
+        // all-zero bigram scores (wrong ranking), not an obvious error
+        if (poss == null) throw new IllegalStateException(
+          "index stores no positions — phrase_suggest needs storePositions=true")
+        val term = segIdToTerm((seg, b.termId))
+        for {
+          i <- d.docIds.indices.iterator
+          p <- poss(i).iterator
+        } yield (term, d.docIds(i), p)
+      }.toDF("term", "docId", "pos")
+    Searcher.bigramCountsOf(liveOnly(exploded), pairsFound)
+  }
+
+  /** `frame` without tombstoned docIds (a no-op without tombstones). */
+  private def liveOnly(frame: DataFrame): DataFrame =
+    if (hasTombstones) frame.join(tombDF, Seq("docId"), "left_anti") else frame
+
+  /** ES `more_like_this` (by document): the source doc's terms are
+    * ranked by the deterministic rare-first rule (tf desc, df asc, term
+    * asc — an integer-exact tf·idf proxy, so the oracle twin reproduces
+    * the selection bit-for-bit), the top `maxQueryTerms` become an OR
+    * query, and the source doc is excluded from the hits (ES `include =
+    * false` default). The source doc comes from the LWW-visible store.
+    */
+  def moreLikeThis(docId: Long, k: Int, maxQueryTerms: Int = 25,
+      minTermFreq: Int = 1): Array[Scored] = {
+    val row = docs.filter(col("docId") === lit(docId))
+      .select(col("text")).limit(1).collect()
+    if (row.isEmpty) return Array.empty
+    val tf = Analyzer.tokenize(row(0).getString(0))
+      .groupBy(identity).map { case (t, xs) => t -> xs.length }
+      .filter(_._2 >= minTermFreq)
+    val (dfGlobal, _) = lookup(tf.keys.toSeq.sorted)
+    val selected = tf.toSeq
+      .flatMap { case (t, f) => dfGlobal.get(t).map(df => (t, f, df)) }
+      .sortBy { case (t, f, df) => (-f, df, t) }
+      .take(maxQueryTerms).map(_._1)
+    if (selected.isEmpty) return Array.empty
+    run(selected, k + 1, conjunctive = false)
+      .filter(_.docId != docId).take(k)
+  }
+
+  /** Top-k resolved back to turn metadata + text (SURVEY.md J4): the k
+    * hits are broadcast against the doc store.
+    */
+  def searchResolved(query: String, k: Int): DataFrame = resolve(search(query, k), "text")
+
+  /** Hits (already tombstone-excluded and (score desc, docId asc)-sorted,
+    * so ranked here, not via an unpartitioned window) joined to the doc
+    * store with `field` as a string column. k-bounded fetch: the literal
+    * In(docId, ...) pushes to the parquet scans (row-group min/max
+    * pruning — the ES get-by-id shape, round-7 review #8) instead of
+    * streaming the whole doc store through the broadcast join.
+    */
+  private def resolve(hits: Array[Scored], field: String): DataFrame = {
+    val hitsDF = hits.toSeq.zipWithIndex
+      .map { case (s, i) => (s.docId, s.score, i + 1) }.toDF("docId", "score", "rank")
+    rawDocs.filter(col("docId").isin(hits.map(_.docId).toSeq: _*))
+      .join(broadcast(hitsDF), Seq("docId"))
+      .select(col("rank"), col("docId"), col("score"), col("conv_id"), col("turn_idx"),
+        col("role"), col(field).cast("string").as(field))
+      .orderBy(col("rank"))
+  }
+
+  /** Top-k resolved hits with ES-style highlighted fragments
+    * ([[Highlight]]): ±`window` analyzed tokens around the first query
+    * term, matches wrapped in `<em></em>`. Fragment building runs on the
+    * k RESOLVED rows only (the lone UDF in the query path — k-row
+    * post-processing of already-collected hits, not a corpus operator).
+    * `field` ≠ "text" highlights a fielded match ([[searchField]]) in the
+    * FIELD's own stored column (round-5 review "What's missing #3").
+    */
+  def searchHighlighted(query: String, k: Int, window: Int = 5,
+      field: String = "text",
+      /** ES `number_of_fragments`: 1 (default) keeps the single
+        * first-match `fragment` column; > 1 returns a `fragments` array
+        * column instead — the best N non-overlapping windows
+        * ([[Highlight.fragments]]).
+        */
+      numberOfFragments: Int = 1): DataFrame = {
+    val terms = Analyzer.analyzeQuery(query).toSet
+    val nf = numberOfFragments
+    val frag =
+      if (nf <= 1) udf((text: String) =>
+        Highlight.fragment(if (text == null) "" else text, terms, window))
+      else udf((text: String) =>
+        Highlight.fragments(if (text == null) "" else text, terms, window, nf))
+    val fragCol = if (nf <= 1) "fragment" else "fragments"
+    val hits = if (field == "text") search(query, k) else searchField(field, query, k)
+    resolve(hits, field).withColumn(fragCol, frag(col(field)))
+  }
+
+  // --- match-set operators (facets / aggs / sort / count) -----------------
+
+  /** Decoded docIds of `terms` across all segments (union of pruned
+    * docIds-only block scans — three columns, parquet-pruned past the
+    * tf/dl/pos streams; these operators touch the FULL match set, so
+    * decode waste scales with it). No distinct: the right side of a
+    * left_semi/left_anti join needs no dedup (set-membership semantics),
+    * so clause/exclude sides skip the distinct's Exchange+HashAggregate
+    * entirely (guide §2.4). None when no segment holds any of the terms.
+    */
+  private def decodeDocIdsRaw(perSeg: Map[(Int, String), TermStats],
+      terms: Set[String]): Option[DataFrame] =
+    prunedBlocks(perSeg, terms).map(_
+      .select(col("docs"), col("count"), col("firstDocId"))
+      .as[(Array[Byte], Int, Long)]
+      .flatMap { case (ds, n0, first) => Codec.deltaDecode(ds, n0, first) }
+      .toDF("docId"))
+
+  /** Membership of the FULL bool query (ES aggregations/counts run over
+    * the filtered query, not just the scored terms): distinct docs
+    * matching ≥1 scored term, restricted by every filter clause
+    * (semi-join per clause — each clause's docIds come from its own
+    * pruned block scan) and must_not + tombstones (anti-joins). All
+    * joins are docId-keyed — the match set never touches the driver.
+    * None when no query term (or no value of some clause) is visible.
+    */
+  private def matchSet(query: String,
+      filters: Seq[(String, String)] = Nil,
+      mustNot: Seq[(String, String)] = Nil,
+      numericRangeFilters: Seq[(String, Long, Long)] = Nil,
+      anyFilters: Seq[(String, Seq[String])] = Nil,
+      rangeFilters: Seq[(String, String, String)] = Nil,
+      exists: Seq[String] = Nil,
+      missing: Seq[String] = Nil): Option[DataFrame] = {
+    guardExists(exists, missing)
+    val terms = Analyzer.analyzeQuery(query).toSeq
+    val rangeExp = expandFieldRanges(rangeFilters)
+    val clauses = filterClauses(filters, anyFilters, numericRangeFilters, exists) ++
+      rangeFilters.map(rangeExp)
+    val excludeTerms = excludeTermsOf(mustNot, missing, Nil)
+    val (dfGlobal, perSeg) =
+      lookup((terms ++ clauses.flatten ++ excludeTerms).distinct.sorted)
+    val scoredFound = terms.filter(dfGlobal.contains)
+    if (scoredFound.isEmpty) return None
+    val foundClauses = clauses.map(_.filter(dfGlobal.contains))
+    if (foundClauses.exists(_.isEmpty)) return None
+    var m = decodeDocIdsRaw(perSeg, scoredFound.toSet).getOrElse(return None).distinct()
+    for (cl <- foundClauses)
+      m = m.join(decodeDocIdsRaw(perSeg, cl.toSet).getOrElse(return None),
+        Seq("docId"), "left_semi")
+    val exFound = excludeTerms.filter(dfGlobal.contains)
+    if (exFound.nonEmpty)
+      decodeDocIdsRaw(perSeg, exFound.toSet).foreach(e =>
+        m = m.join(e, Seq("docId"), "left_anti"))
+    // ONE tombstone snapshot per searcher: the WAND paths' exclusion
+    // blocks and the agg paths' anti-join see the same store state
+    Some(liveOnly(m))
+  }
+
+  /** The match set, or an empty docId frame when nothing matches — so
+    * every aggregation below shares one plan shape with a correct
+    * empty-result schema.
+    */
+  private def matchingOrEmpty(query: String,
+      filters: Seq[(String, String)] = Nil,
+      mustNot: Seq[(String, String)] = Nil,
+      numericRangeFilters: Seq[(String, Long, Long)] = Nil,
+      anyFilters: Seq[(String, Seq[String])] = Nil,
+      rangeFilters: Seq[(String, String, String)] = Nil,
+      exists: Seq[String] = Nil,
+      missing: Seq[String] = Nil): DataFrame =
+    matchSet(query, filters, mustNot, numericRangeFilters, anyFilters, rangeFilters,
+      exists, missing)
+      .getOrElse(Seq.empty[Long].toDF("docId"))
+
+  /** Decoded (docId, term, tf, dl, df) posting rows of the query's terms
+    * across segments under the LWW-exact merged df — the shared
+    * distributed input of [[scoredMatches]] and [[explain]]:
+    * term-pruned block scan → decode → broadcast join of the tiny (seg,
+    * termId) → (term, df) side. NOT tombstone-filtered; every consumer
+    * must exclude removed docs itself.
+    */
+  private def postingRows(terms: Seq[String]): Option[DataFrame] = {
+    val (dfGlobal, perSeg) = lookup(terms.distinct.sorted)
+    if (!terms.exists(dfGlobal.contains)) return None
+    val idFrame = perSeg.toSeq.flatMap { case ((i, t), ts) =>
+      dfGlobal.get(t).map(df => (i, ts.termId, t, df))
+    }.toDF("seg", "termId", "term", "df")
+    val pruned = prunedBlocks(perSeg, dfGlobal.contains).getOrElse(return None)
+    val posts = pruned
+      .select(col("seg"), col("termId"), col("docs"), col("tfs"), col("dls"),
+        col("count"), col("firstDocId"))
+      .as[(Int, Long, Array[Byte], Array[Byte], Array[Byte], Int, Long)]
+      .flatMap { case (seg, tid, ds, tfs, dls, cnt, first) =>
+        val ids = Codec.deltaDecode(ds, cnt, first)
+        val tfA = Codec.decodeVarInts(tfs, cnt)
+        val dlA = Codec.decodeVarInts(dls, cnt)
+        Iterator.range(0, cnt).map(i => (seg, tid, ids(i), tfA(i), dlA(i)))
+      }.toDF("seg", "termId", "docId", "tf", "dl")
+    Some(posts.join(broadcast(idFrame), Seq("seg", "termId")))
+  }
+
+  /** Exact BM25 score of EVERY visible matching doc as a distributed
+    * (docId, score) frame — the scored match set field collapsing needs
+    * (top-k alone cannot collapse: the global top k docs may all share
+    * one key, ES runs a collapsing per-shard collector for the same
+    * reason). Per-doc fold of contributions in ASCENDING TERM ORDER
+    * (sort_array + aggregate) — the engine-wide determinism rule,
+    * bit-identical to the WAND sum (Bm25.scoreCol ≡ Bm25.score by
+    * construction).
+    */
+  private def scoredMatches(terms: Seq[String]): Option[DataFrame] = {
+    val nG = n
+    val avgdlG = avgdl
+    postingRows(terms).map { rows =>
+      liveOnly(rows.select(col("docId"), struct(col("term"),
+          Bm25.scoreCol(col("tf"), col("df"), col("dl"), nG, avgdlG).as("s")).as("c"))
+        .groupBy(col("docId"))
+        .agg(aggregate(sort_array(collect_list(col("c"))), lit(0.0),
+          (acc, x) => acc + x.getField("s")).as("score")))
+    }
+  }
+
+  /** ES `_explain` (GET /index/_explain/{id}): the per-term BM25 score
+    * breakdown of one (query, document) pair — (term, tf, df, dl, idf,
+    * weight) rows, weight = the term's contribution under EXACTLY the
+    * search formula/operation order ([[Bm25.scoreCol]]), so sum(weight)
+    * over the rows is bit-identical to the hit's search score (pinned in
+    * tests). Terms of the query absent from the doc contribute no row (ES
+    * omits non-matching sub-explanations); a tombstoned docId explains to
+    * zero rows (the doc no longer exists). Plan: the term-pruned decode
+    * of [[postingRows]] filtered to the one docId — never a corpus scan.
+    */
+  def explain(query: String, docId: Long): DataFrame = {
+    val terms = Analyzer.analyzeQuery(query).toSeq
+    val nG = n
+    val avgdlG = avgdl
+    postingRows(terms) match {
+      case None =>
+        Seq.empty[(String, Int, Long, Int, Double, Double)]
+          .toDF("term", "tf", "df", "dl", "idf", "weight")
+      case Some(rows) =>
+        liveOnly(rows.filter(col("docId") === lit(docId)))
+          .select(col("term"), col("tf"), col("df"), col("dl"),
+            Bm25.idfCol(col("df"), nG).as("idf"),
+            Bm25.scoreCol(col("tf"), col("df"), col("dl"), nG, avgdlG).as("weight"))
+          .orderBy(col("term"))
+    }
+  }
+
+  /** ES scroll, the efficient `sort: _doc` bulk-export mode: the FULL
+    * scored match set as a still-distributed (docId, score) frame — no
+    * top-k, no global sort, nothing on the driver. ES pages this through
+    * a stateful cursor because its client is a single process; the
+    * Spark-native equivalent of "scroll every hit" IS the DataFrame —
+    * callers write it out or join it onward, and any page-sized
+    * consumption is a `searchAfter` (Q16/Q25). Scores are the exact
+    * per-doc BM25 sums ([[scoredMatches]]); empty frame when no query
+    * term is indexed.
+    */
+  def scrollAll(query: String): DataFrame =
+    scoredMatches(Analyzer.analyzeQuery(query).toSeq)
+      .getOrElse(Seq.empty[(Long, Double)].toDF("docId", "score"))
+
+  /** ES `_termvectors` (GET /index/_termvectors/{id}, a 2.4-era API):
+    * the document's own term statistics — one row per token occurrence,
+    * (term, pos, start_offset, end_offset, tf, df), term asc / pos asc.
+    * tf/positions/offsets are generated ON THE FLY from the stored text
+    * (exactly ES's behavior when term vectors are not stored in the
+    * mapping); df is the merged LWW dictionary df. Plan: a point read of
+    * the doc-store row (EqualTo(docId) pushed to the docId-range-
+    * partitioned stores, tombstone exclusion folded into the same job) +
+    * one dict lookup bounded by the doc's vocabulary — never a corpus
+    * pass. Unknown or tombstoned docId → 0 rows (ES found=false).
+    */
+  def termVectors(docId: Long): DataFrame = {
+    val empty = Seq.empty[(String, Int, Int, Int, Int, Long)]
+      .toDF("term", "pos", "start_offset", "end_offset", "tf", "df")
+    val row = liveOnly(rawDocs.filter(col("docId") === lit(docId)).select(col("docId"), col("text")))
+      .select("text").collect()
+    if (row.isEmpty || row.head.isNullAt(0)) return empty
+    val toks = Analyzer.tokenizeWithOffsets(row.head.getString(0))
+    if (toks.isEmpty) return empty
+    val tf = toks.groupBy(_._1).map { case (t, occ) => t -> occ.length }
+    val (dfGlobal, _) = lookup(tf.keys.toSeq.sorted)
+    toks.zipWithIndex
+      .map { case ((t, s, e), i) =>
+        (t, i, s, e, tf(t), dfGlobal.getOrElse(t, 0L))
+      }
+      .sortBy(r => (r._1, r._2)).toSeq
+      .toDF("term", "pos", "start_offset", "end_offset", "tf", "df")
+  }
   /** ES `constant_score`: every doc matching the bool membership
     * (scored terms OR'd + all filter-context clauses) scores exactly
     * `boost` — no BM25, no WAND; membership is the same decoded match
@@ -1460,12 +2312,11 @@ class Searcher(spark: SparkSession, indexDir: String, numShards: Int) {
         */
       missing: Option[Double] = None): DataFrame = {
     require(window >= k, "rescore window must be >= k")
-    val top = runPerBucket(Analyzer.analyzeQuery(query).toSeq, window,
-      Mode(conjunctive = false))
+    val top = run(Analyzer.analyzeQuery(query).toSeq, window, conjunctive = false)
     val topDF = top.toSeq.map(h => (h.docId, h.score)).toDF("docId", "bm25")
     // window-bounded fetch: push In(docId, ...) to the doc-store scan
     // (row-group pruning) — round-7 review #8
-    docs.filter(col("docId").isin(top.map(_.docId).toSeq: _*))
+    rawDocs.filter(col("docId").isin(top.map(_.docId).toSeq: _*))
       .select(col("docId"), Searcher.fvfValue(col(field), field, missing))
       .join(broadcast(topDF), Seq("docId"))
       .select(col("docId"),
@@ -1492,15 +2343,14 @@ class Searcher(spark: SparkSession, indexDir: String, numShards: Int) {
       offset: Double = 0.0, decay: Double = 0.5,
       missing: Option[Double] = None): DataFrame = {
     require(window >= k, "rescore window must be >= k")
-    val top = runPerBucket(Analyzer.analyzeQuery(query).toSeq, window,
-      Mode(conjunctive = false))
+    val top = run(Analyzer.analyzeQuery(query).toSeq, window, conjunctive = false)
     val topDF = top.toSeq.map(h => (h.docId, h.score)).toDF("docId", "bm25")
-    val vCol = docs.schema(field).dataType match {
+    val vCol = rawDocs.schema(field).dataType match {
       case org.apache.spark.sql.types.TimestampType =>
         unix_millis(col(field)).cast("double")
       case _ => col(field).cast("double")
     }
-    docs.filter(col("docId").isin(top.map(_.docId).toSeq: _*))
+    rawDocs.filter(col("docId").isin(top.map(_.docId).toSeq: _*))
       .select(col("docId"), Searcher.fvfValue(vCol, field, missing))
       .join(broadcast(topDF), Seq("docId"))
       .select(col("docId"), (col("bm25") *
@@ -1509,465 +2359,6 @@ class Searcher(spark: SparkSession, indexDir: String, numShards: Int) {
       .orderBy(col("score").desc, col("docId").asc)
       .limit(k)
   }
-
-  /** ES `regexp` query: the pattern anchors to the WHOLE analyzed term
-    * (Lucene regexp semantics — `sp.rk` matches `spark`, never a term
-    * merely containing it); BM25 OR over the ≤ maxExpansions matching
-    * dictionary terms (term-asc — the deterministic rewrite). The
-    * compiled predicate rides the same `expand` machinery as prefix/
-    * wildcard/fuzzy; `field` expands within that analyzed field's
-    * namespace. Cold path is one dict scan (`rlike` with the anchored
-    * pattern); warm path matches the driver map.
-    */
-  def searchRegexp(pattern: String, k: Int, maxExpansions: Int = 50,
-      field: String = "text"): Array[Scored] = {
-    val p = java.util.regex.Pattern.compile(pattern)
-    val anchored = "^(?:" + pattern + ")$"
-    runFound(
-      expand(t => p.matcher(t).matches(), _.rlike(anchored), maxExpansions, field),
-      k, Mode(conjunctive = false))
-  }
-
-  /** ES `match` with `fuzziness` (round-6 review "What's missing #4"):
-    * EVERY analyzed query token expands to the dictionary terms within
-    * `maxDist` edits of it (per-token term-asc cap — the ES per-term
-    * rewrite; dist 0 keeps the token itself when indexed), and the
-    * union scores as ONE BM25 OR. Documented deviation from ES: each
-    * expansion scores with its OWN df/idf (ES's blended rewrite reuses
-    * the original term's df across its expansions) — the integer-exact
-    * per-token selection keeps the SQL twin bit-reproducible. Cold path
-    * is ONE dict scan for ALL tokens (length-pruned to the union of the
-    * per-token `len` windows), never a scan per token.
-    */
-  def searchMatchFuzzy(query: String, k: Int, maxDist: Int = 1,
-      maxExpansionsPerTerm: Int = 50, field: String = "text"): Array[Scored] = {
-    val toks = Analyzer.analyzeQuery(query).toSeq.sorted
-    if (toks.isEmpty) return Array.empty
-    runFound(multiFuzzyExpand(toks, maxDist, maxExpansionsPerTerm, field),
-      k, Mode(conjunctive = false))
-  }
-
-  /** Per-token capped fuzzy expansion of `toks`, ONE dictionary scan
-    * with the per-token term-asc cap IN the plan ([[expandPerToken]]):
-    * the driver sees ≤ |tokens| × cap dictionary rows at any vocabulary
-    * size (round-7 review "What's wrong #1").
-    */
-  private def multiFuzzyExpand(toks: Seq[String], maxDist: Int,
-      perTermCap: Int, field: String): Map[String, TermStats] =
-    expandPerToken(toks, maxDist, perTermCap, field, byDistDf = false)
-      .valuesIterator.flatten.map(ts => ts.term -> ts).toMap
-
-  /** ES `dis_max` as a general combinator (round-6 review "What's
-    * missing #4"): score = best-scoring sub-query's BM25 sum +
-    * `tieBreaker` · Σ(the other matching sub-queries' sums) — the
-    * [[Wand.BestFields]] fold generalized from multi_match fields to
-    * arbitrary match sub-queries (tie_breaker = 1 degenerates to the
-    * plain bool-OR sum, pinned by test). Sub-queries MAY share analyzed
-    * terms (round-7 review "What's missing #5" — ES scores each
-    * sub-query independently): a shared term gets one scored iterator
-    * PER containing group, each attributed to its group's sum; sums
-    * tie to the lowest group index. Docs matching ANY sub-query rank.
-    */
-  def searchDisMax(queries: Seq[String], k: Int,
-      tieBreaker: Double = 0.0): Array[Scored] = {
-    val groups = queries.map(q => Analyzer.analyzeQuery(q).toSeq.distinct.sorted)
-    require(groups.exists(_.nonEmpty), "dis_max needs >= 1 non-empty sub-query")
-    val groupsOf: Map[String, Seq[Int]] = groups.zipWithIndex
-      .flatMap { case (ts, i) => ts.map(_ -> i) }
-      .groupBy(_._1).view.mapValues(_.map(_._2).sorted).toMap
-    runPerBucket(groups.flatten.distinct.sorted, k, Mode(conjunctive = false).copy(
-      bestFields = new Wand.BestFields(Map.empty, groups.size, tieBreaker, groupsOf)))
-  }
-
-  /** ES term suggester ("did you mean"): dictionary terms within
-    * `maxDist` edits of the analyzed input word, ranked (distance asc,
-    * df desc, term asc) — ES's default sort, deterministic. The
-    * candidate set is the ≤ `maxCandidates` term-asc dictionary terms
-    * matching the distance predicate (same deterministic cap rule as
-    * every expansion); the input word itself is excluded (ES
-    * suggest_mode=missing shape — you suggest for misspellings).
-    * Returns (suggestion, dist, df) rows, top `k`.
-    */
-  def suggestTerms(word: String, k: Int, maxDist: Int = 1,
-      maxCandidates: Int = 1000): DataFrame = {
-    val toks = Analyzer.tokenize(word)
-    if (toks.isEmpty) return Seq.empty[(String, Int, Long)].toDF("suggestion", "dist", "df")
-    val w = toks(0)
-    val cands = expand(
-      t => t != w && math.abs(t.length - w.length) <= maxDist &&
-        levenshtein(w, t) <= maxDist,
-      c => c =!= lit(w) &&
-        org.apache.spark.sql.functions.levenshtein(lit(w), c) <= lit(maxDist),
-      maxCandidates,
-      lenRange = Some((math.max(1, w.length - maxDist), w.length + maxDist)))
-    cands.values.toSeq
-      .map(ts => (ts.term, levenshtein(w, ts.term), ts.df))
-      .sortBy { case (t, d, df) => (d, -df, t) }
-      .take(k)
-      .toDF("suggestion", "dist", "df")
-  }
-
-  /** ES completion-suggester analog (search-as-you-type): the top `k`
-    * dictionary terms extending `prefix`, ranked by POPULARITY —
-    * (df desc, term asc); df is the suggestion's weight, the natural
-    * corpus-derived analog of ES's indexed completion weight. The cap
-    * is IN the plan — `orderBy(df desc, term asc).limit(k)` on the
-    * prefix-pruned dict scan (TakeOrderedAndProject: the driver sees ≤
-    * k rows at any vocabulary size; the startsWith pushes to the
-    * term-sorted dict parquet). Warm path filters the driver map.
-    * Returns (suggestion, weight) rows.
-    */
-  def suggestCompletion(prefix: String, k: Int): DataFrame = {
-    require(prefix.nonEmpty, "completion prefix must be non-empty")
-    require(k > 0, "completion size must be positive")
-    val p = Analyzer.analyzeQuery(prefix).headOption.getOrElse("")
-    if (p.isEmpty) return Seq.empty[(String, Long)].toDF("suggestion", "weight")
-    if (dictMap != null)
-      return dictMap.valuesIterator
-        .filter(ts => !graft.index.FieldTerms.isNamespaced(ts.term) &&
-          ts.term.startsWith(p))
-        .toSeq.sortBy(ts => (-ts.df, ts.term)).take(k)
-        .map(ts => (ts.term, ts.df))
-        .toDF("suggestion", "weight")
-    dict
-      .filter(!col("term").startsWith(graft.index.FieldTerms.Prefix) &&
-        !col("term").startsWith(graft.index.FieldTerms.TextPrefix) &&
-        col("term").startsWith(p))
-      .orderBy(col("df").desc, col("term").asc).limit(k)
-      .select(col("term").as("suggestion"), col("df").as("weight"))
-  }
-
-  /** ES phrase suggester ("did you mean" over whole queries, round-6
-    * review "What's missing #5"): every analyzed input token expands to
-    * its ≤ `maxPerSlot` best correction candidates (dist ≤ maxDist
-    * INCLUDING the token itself when indexed, ranked dist asc / df desc
-    * / term asc — the term-suggester rule), candidate phrases are the
-    * slot product, and each phrase is scored by the SUM of its adjacent
-    * bigram doc-counts — derived from the POSITIONAL POSTINGS already
-    * stored (one pruned block scan + one self-join on (docId, pos+1);
-    * never a corpus re-tokenize). Integer-exact and deterministic, so
-    * the DuckDB twin reproduces scores bit-for-bit (ES ranks by a
-    * smoothed bigram LM — deviation documented). Returns (suggestion,
-    * score) rows, top `k` by (score desc, phrase asc).
-    */
-  def phraseSuggest(phrase: String, k: Int, maxDist: Int = 1,
-      maxPerSlot: Int = 3): DataFrame = {
-    val slots = Analyzer.tokenize(phrase).toSeq
-    val empty = Seq.empty[(String, Long)].toDF("suggestion", "score")
-    if (slots.length < 2) return empty
-    // per-slot candidates with the (dist asc, df desc, term asc) ≤
-    // maxPerSlot rank IN the plan — one dict scan, ≤ slots × maxPerSlot
-    // rows to the driver (round-7 review "What's wrong #1")
-    val candMap = expandPerToken(slots, maxDist, maxPerSlot, "text", byDistDf = true)
-    val slotCands: Seq[Seq[String]] = slots.map(w =>
-      candMap.getOrElse(w, Nil).map(_.term))
-    if (slotCands.exists(_.isEmpty)) return empty
-    val bigram = bigramDocCounts(Searcher.slotPairs(slotCands))
-    Searcher.phraseSuggestFrom(spark, slotCands, bigram, k)
-  }
-
-  /** Corpus doc-counts of adjacent bigrams (a at position p, b at p+1)
-    * for the requested (a, b) pairs, from the positional postings: ONE
-    * shard+termId-pruned block scan over the pairs' terms, decoded to
-    * (term, docId, pos), self-joined on the equi-key (docId, pos+1) —
-    * both sides hash-partition on docId, no driver materialization of
-    * position streams. Cost is bounded by the candidate terms' posting
-    * sizes (exactly what ES's phrase suggester reads for its collate).
-    */
-  private def bigramDocCounts(pairs: Seq[(String, String)]): Map[(String, String), Long] = {
-    if (pairs.isEmpty) return Map.empty
-    val terms = pairs.flatMap(p => Seq(p._1, p._2)).distinct.sorted
-    val found = lookupTerms(terms)
-    val pairsFound = pairs.distinct.filter(p => found.contains(p._1) && found.contains(p._2))
-    if (pairsFound.isEmpty) return Map.empty
-    // termId → term resolved INSIDE the decode closure from the tiny
-    // driver map (rides the task closure) — the broadcast join here was
-    // one more job + exchange per call (round-9)
-    val idToTerm: Map[Long, String] = found.map { case (t, ts) => (ts.termId, t) }
-    val exploded = selectBlocks(found.values).as[PostingBlock]
-      .flatMap { b =>
-        val d = graft.index.Codec.decodeBlock(b)
-        val poss = graft.index.Codec.decodePositions(b, d.tfs)
-        // loud like the phrase executor — a silent empty would return
-        // all-zero bigram scores (wrong ranking), not an obvious error
-        if (poss == null) throw new IllegalStateException(
-          "index stores no positions — phrase_suggest needs storePositions=true")
-        val term = idToTerm(b.termId)
-        for {
-          i <- d.docIds.indices.iterator
-          p <- poss(i).iterator
-        } yield (term, d.docIds(i), p)
-      }.toDF("term", "docId", "pos")
-    Searcher.bigramCountsOf(exploded, pairsFound)
-  }
-
-  /** ES `more_like_this` (by document): the source doc's terms are
-    * ranked by the deterministic rare-first rule (tf desc, df asc,
-    * term asc — an integer-exact tf·idf proxy, so the oracle twin
-    * reproduces the selection bit-for-bit), the top `maxQueryTerms`
-    * become an OR query, and the source doc is excluded from the hits
-    * (ES `include = false` default).
-    */
-  def moreLikeThis(docId: Long, k: Int, maxQueryTerms: Int = 25,
-      minTermFreq: Int = 1): Array[Scored] = {
-    val row = docs.filter(col("docId") === lit(docId))
-      .select(col("text")).limit(1).collect()
-    if (row.isEmpty) return Array.empty
-    val tf = Analyzer.tokenize(row(0).getString(0))
-      .groupBy(identity).map { case (t, xs) => t -> xs.length }
-      .filter(_._2 >= minTermFreq)
-    val found = lookupTerms(tf.keys.toSeq.sorted)
-    val selected = tf.toSeq
-      .flatMap { case (t, f) => found.get(t).map(ts => (t, f, ts.df)) }
-      .sortBy { case (t, f, df) => (-f, df, t) }
-      .take(maxQueryTerms).map(_._1)
-    if (selected.isEmpty) return Array.empty
-    runFound(selected.map(t => t -> found(t)).toMap, k + 1,
-      Mode(conjunctive = false))
-      .filter(_.docId != docId).take(k)
-  }
-
-  /** Top-k resolved hits with ES-style highlighted fragments
-    * ([[Highlight]]): ±`window` analyzed tokens around the first query
-    * term, matches wrapped in `<em></em>`. Fragment building runs on
-    * the k RESOLVED rows only (the lone UDF in the query path — k-row
-    * post-processing of already-collected hits, not a corpus operator).
-    * `field` ≠ "text" highlights a fielded match ([[searchField]]) in
-    * the FIELD's own stored column (round-5 review "What's missing #3"):
-    * the hit is ranked by per-field BM25 and the fragment is built from
-    * that field's text.
-    */
-  def searchHighlighted(query: String, k: Int, window: Int = 5,
-      field: String = "text",
-      /** ES `number_of_fragments`: 1 (default) keeps the single
-        * first-match `fragment` column; > 1 returns a `fragments`
-        * array column instead — the best N non-overlapping windows
-        * ([[Highlight.fragments]]).
-        */
-      numberOfFragments: Int = 1): DataFrame = {
-    val terms = Analyzer.analyzeQuery(query).toSet
-    val nf = numberOfFragments
-    val frag =
-      if (nf <= 1) udf((text: String) =>
-        Highlight.fragment(if (text == null) "" else text, terms, window))
-      else udf((text: String) =>
-        Highlight.fragments(if (text == null) "" else text, terms, window, nf))
-    val fragCol = if (nf <= 1) "fragment" else "fragments"
-    if (field == "text")
-      searchResolved(query, k).withColumn(fragCol, frag(col("text")))
-    else {
-      val hits = searchField(field, query, k)
-      val hitsDF = hits.toSeq.zipWithIndex
-        .map { case (s, i) => (s.docId, s.score, i + 1) }.toDF("docId", "score", "rank")
-      docs.filter(col("docId").isin(hits.map(_.docId).toSeq: _*))
-        .join(broadcast(hitsDF), Seq("docId"))
-        .select(col("rank"), col("docId"), col("score"), col("conv_id"), col("turn_idx"),
-          col("role"), col(field).cast("string").as(field))
-        .orderBy(col("rank"))
-        .withColumn(fragCol, frag(col(field)))
-    }
-  }
-
-  /** ES `terms` aggregation over the FULL match set (facet counts —
-    * what the reference's ES delegation gives its users for free): doc
-    * counts per value of `field` among ALL docs containing ≥1 query
-    * term — top-k plays no part. Index-side plan: posting blocks of the
-    * query terms (shard-pruned scan) → distributed docId decode →
-    * distinct → join the doc store on docId (column-pruned to (docId,
-    * field)) → hash-agg count. No driver materialization of the match
-    * set; the blocks:docs join shuffles only matching docIds. At 10^12
-    * docs this is the plan you'd run — the match set is a fraction of
-    * the corpus and both sides hash-partition on docId.
-    */
-  /** Distinct docIds containing ≥1 of the query's terms (the OR match
-    * set) as a distributed frame — the shared membership scan under
-    * facets / field-sort / hit-count. docIds-only decode: the block scan
-    * reads three columns (column-pruned at the parquet level) and skips
-    * the tf/dl varint streams entirely — these operators touch the FULL
-    * match set, so decode waste scales with it. Returns None when no
-    * query term exists in the index.
-    */
-  /** Distinct decoded docIds of a found term set (docIds-only block
-    * read — three columns, parquet-pruned past the tf/dl/pos streams).
-    */
-  private def decodeDocIds(found: Iterable[TermStats]): DataFrame =
-    decodeDocIdsRaw(found).distinct()
-
-  /** Same decoded docId stream WITHOUT the distinct: the right side of
-    * a left_semi/left_anti join needs no dedup (membership only), so
-    * clause/exclude cursors skip the distinct's Exchange+HashAggregate
-    * entirely (guide §2.4 — remove shuffles outright). Results are
-    * identical: semi/anti join semantics are set-membership regardless
-    * of right-side multiplicity.
-    */
-  private def decodeDocIdsRaw(found: Iterable[TermStats]): DataFrame =
-    selectBlocks(found)
-      .select(col("docs"), col("count"), col("firstDocId"))
-      .as[(Array[Byte], Int, Long)]
-      .flatMap { case (docs, n0, first) => graft.index.Codec.deltaDecode(docs, n0, first) }
-      .toDF("docId")
-
-  /** Membership of the FULL bool query (ES aggregations/counts run over
-    * the filtered query, not just the scored terms): docs matching ≥1
-    * scored term, restricted by every filter clause (semi-join per
-    * clause — each clause's docIds come from its own pruned block scan)
-    * and must_not (anti-join). All joins are docId-keyed — the match
-    * set never touches the driver.
-    */
-  private def matchSet(query: String,
-      filters: Seq[(String, String)] = Nil,
-      mustNot: Seq[(String, String)] = Nil,
-      anyFilters: Seq[(String, Seq[String])] = Nil,
-      numericRangeFilters: Seq[(String, Long, Long)] = Nil,
-      rangeFilters: Seq[(String, String, String)] = Nil,
-      exists: Seq[String] = Nil,
-      missing: Seq[String] = Nil): Option[DataFrame] = {
-    guardExists(exists, missing)
-    val terms = Analyzer.analyzeQuery(query).toSeq
-    val clauses: Seq[Seq[String]] =
-      filters.map { case (f, v) => Seq(graft.index.FieldTerms.term(f, v)) } ++
-        anyFilters.map { case (f, vs) => vs.distinct.map(v => graft.index.FieldTerms.term(f, v)) } ++
-        numericRangeFilters.map { case (f, lo, hi) =>
-          graft.index.FieldTerms.trieRangeTerms(f, lo, hi) } ++
-        exists.map(f => Seq(graft.index.FieldTerms.existsTerm(f)))
-    val excludeTerms = (mustNot.map { case (f, v) => graft.index.FieldTerms.term(f, v) } ++
-      missing.map(f => graft.index.FieldTerms.existsTerm(f))).distinct
-    // lexicographic ranges return their TermStats with the expansion —
-    // one dict scan each, no second lookup job
-    val rangeExp: Seq[Map[String, TermStats]] =
-      rangeFilters.map { case (f, lo, hi) => expandFieldRange(f, lo, hi) }
-    val found = lookupTerms(terms ++ clauses.flatten.distinct ++ excludeTerms) ++
-      rangeExp.flatten
-    val scoredFound = terms.filter(found.contains)
-    if (scoredFound.isEmpty) return None
-    val foundClauses = clauses.map(_.filter(found.contains)) ++
-      rangeExp.map(_.keys.toSeq.sorted)
-    if (foundClauses.exists(_.isEmpty)) return None
-    var m = decodeDocIds(scoredFound.map(found))
-    for (cl <- foundClauses)
-      m = m.join(decodeDocIdsRaw(cl.map(found)), Seq("docId"), "left_semi")
-    val exFound = excludeTerms.filter(found.contains)
-    if (exFound.nonEmpty)
-      m = m.join(decodeDocIdsRaw(exFound.map(found)), Seq("docId"), "left_anti")
-    Some(m)
-  }
-
-  /** Exact BM25 score of EVERY matching doc as a distributed (docId,
-    * score) frame — the scored match set field collapsing needs (top-k
-    * alone cannot collapse: the global top k docs may all share one
-    * key, ES runs a collapsing per-shard collector for the same
-    * reason). Plan: full decode of the query terms' posting blocks
-    * (docId+tf+dl, parquet-pruned past positions — cost ∝ the query
-    * terms' posting sizes, never the corpus), broadcast join of the
-    * tiny (termId, term, df) side, and a per-doc fold of contributions
-    * in ASCENDING TERM ORDER (sort_array + aggregate) — the engine-wide
-    * determinism rule, bit-identical to the WAND sum (Bm25.scoreCol ≡
-    * Bm25.score by construction).
-    */
-  /** Decoded (docId, term, tf, dl, df) posting rows of the query's
-    * terms — the shared distributed input of [[scoredMatches]] and
-    * [[explain]]: term-pruned block scan → decode → broadcast join of
-    * the tiny (term, df) frame.
-    */
-  private def postingRows(terms: Seq[String]): Option[DataFrame] = {
-    val found = lookupTerms(terms.distinct)
-    if (found.isEmpty) return None
-    val termDf = found.values.toSeq.map(ts => (ts.termId, ts.term, ts.df))
-      .toDF("termId", "term", "df")
-    val posts = selectBlocks(found.values)
-      .select(col("termId"), col("docs"), col("tfs"), col("dls"),
-        col("count"), col("firstDocId"))
-      .as[(Long, Array[Byte], Array[Byte], Array[Byte], Int, Long)]
-      .flatMap { case (tid, ds, tfs, dls, cnt, first) =>
-        val ids = graft.index.Codec.deltaDecode(ds, cnt, first)
-        val tfA = graft.index.Codec.decodeVarInts(tfs, cnt)
-        val dlA = graft.index.Codec.decodeVarInts(dls, cnt)
-        Iterator.range(0, cnt).map(i => (tid, ids(i), tfA(i), dlA(i)))
-      }.toDF("termId", "docId", "tf", "dl")
-    Some(posts.join(broadcast(termDf), Seq("termId")))
-  }
-
-  private def scoredMatches(terms: Seq[String]): Option[DataFrame] = {
-    val nG = stats.n
-    val avgdlG = stats.avgdl
-    postingRows(terms).map { rows =>
-      rows.select(col("docId"), struct(col("term"),
-          Bm25.scoreCol(col("tf"), col("df"), col("dl"), nG, avgdlG).as("s")).as("c"))
-        .groupBy(col("docId"))
-        .agg(aggregate(sort_array(collect_list(col("c"))), lit(0.0),
-          (acc, x) => acc + x.getField("s")).as("score"))
-    }
-  }
-
-  /** ES `_explain` (GET /index/_explain/{id}): the per-term BM25 score
-    * breakdown of one (query, document) pair — (term, tf, df, dl, idf,
-    * weight) rows, weight = the term's contribution under EXACTLY the
-    * search formula/operation order ([[Bm25.scoreCol]]), so
-    * sum(weight) over the rows is bit-identical to the hit's search
-    * score (pinned in tests). Terms of the query absent from the doc
-    * contribute no row (ES omits non-matching sub-explanations). Plan:
-    * the term-pruned decode of [[postingRows]] filtered to the one
-    * docId — never a corpus scan.
-    */
-  def explain(query: String, docId: Long): DataFrame = {
-    val terms = Analyzer.analyzeQuery(query).toSeq
-    val nG = stats.n
-    val avgdlG = stats.avgdl
-    postingRows(terms) match {
-      case None =>
-        Seq.empty[(String, Int, Long, Int, Double, Double)]
-          .toDF("term", "tf", "df", "dl", "idf", "weight")
-      case Some(rows) =>
-        rows.filter(col("docId") === lit(docId))
-          .select(col("term"), col("tf"), col("df"), col("dl"),
-            Bm25.idfCol(col("df"), nG).as("idf"),
-            Bm25.scoreCol(col("tf"), col("df"), col("dl"), nG, avgdlG).as("weight"))
-          .orderBy(col("term"))
-    }
-  }
-
-  /** ES scroll, the efficient `sort: _doc` bulk-export mode: the FULL
-    * scored match set as a still-distributed (docId, score) frame — no
-    * top-k, no global sort, nothing on the driver. ES pages this
-    * through a stateful cursor because its client is a single process;
-    * the Spark-native equivalent of "scroll every hit" IS the
-    * DataFrame — callers write it out or join it onward, and any
-    * page-sized consumption is a `searchAfter` (Q16/Q25). Scores are
-    * the exact per-doc BM25 sums ([[scoredMatches]]); empty frame when
-    * no query term is indexed.
-    */
-  def scrollAll(query: String): DataFrame =
-    scoredMatches(Analyzer.analyzeQuery(query).toSeq)
-      .getOrElse(Seq.empty[(Long, Double)].toDF("docId", "score"))
-
-  /** ES `_termvectors` (GET /index/_termvectors/{id}, a 2.4-era API):
-    * the document's own term statistics — one row per token occurrence,
-    * (term, pos, start_offset, end_offset, tf, df), term asc / pos asc.
-    * tf/positions/offsets are generated ON THE FLY from the stored text
-    * (exactly ES's behavior when term vectors are not stored in the
-    * mapping); df comes from the index dictionary. Plan: a point read
-    * of the doc-store row (EqualTo(docId) pushed to the
-    * docId-range-partitioned store) + one dict lookup bounded by the
-    * doc's vocabulary — never a corpus pass. Unknown docId → 0 rows
-    * (ES found=false).
-    */
-  def termVectors(docId: Long): DataFrame = {
-    val empty = Seq.empty[(String, Int, Int, Int, Int, Long)]
-      .toDF("term", "pos", "start_offset", "end_offset", "tf", "df")
-    val row = docs.filter(col("docId") === lit(docId)).select("text").collect()
-    if (row.isEmpty || row.head.isNullAt(0)) return empty
-    val toks = Analyzer.tokenizeWithOffsets(row.head.getString(0))
-    if (toks.isEmpty) return empty
-    val tf = toks.groupBy(_._1).map { case (t, occ) => t -> occ.length }
-    val dfs = lookupTerms(tf.keys.toSeq.sorted)
-    toks.zipWithIndex
-      .map { case ((t, s, e), i) =>
-        (t, i, s, e, tf(t), dfs.get(t).map(_.df).getOrElse(0L))
-      }
-      .sortBy(r => (r._1, r._2)).toSeq
-      .toDF("term", "pos", "start_offset", "end_offset", "tf", "df")
-  }
-
   /** ES field collapsing (`collapse`, round-7 review "What's missing
     * #1"): ONE hit per distinct `field` value — the group's best doc by
     * (score desc, docId asc) — globally ranked by that best score, top
@@ -2000,7 +2391,7 @@ class Searcher(spark: SparkSession, indexDir: String, numShards: Int) {
     require(innerHits > 0, "inner_hits size must be positive")
     scoredMatches(Analyzer.analyzeQuery(query).toSeq) match {
       case None =>
-        docs.select(col(field).as("key")).limit(0)
+        rawDocs.select(col(field).as("key")).limit(0)
           .withColumn("hit_rank", lit(0)).withColumn("doc_id", lit(0L))
           .withColumn("score", lit(0.0))
       case Some(scored0) =>
@@ -2014,7 +2405,7 @@ class Searcher(spark: SparkSession, indexDir: String, numShards: Int) {
             numericRangeFilters, anyFilters, rangeFilters, exists, missing),
             Seq("docId"), "left_semi")
         Searcher.collapseOf(
-          docs.select(col("docId"), col(field).as("key")).join(scored, Seq("docId")),
+          rawDocs.select(col("docId"), col(field).as("key")).join(scored, Seq("docId")),
           k, innerHits)
     }
   }
@@ -2034,12 +2425,12 @@ class Searcher(spark: SparkSession, indexDir: String, numShards: Int) {
         * bucket, value-ordered.
         */
       size: Int = 0): DataFrame =
-    matchSet(query, filters, mustNot, anyFilters, numericRangeFilters, rangeFilters,
+    matchSet(query, filters, mustNot, numericRangeFilters, anyFilters, rangeFilters,
       exists, missing) match {
       case None =>
-        docs.select(col(field).as("value")).limit(0).withColumn("n_docs", lit(0L))
+        rawDocs.select(col(field).as("value")).limit(0).withColumn("n_docs", lit(0L))
       case Some(matching) =>
-        val agged = docs.select(col("docId"), col(field).as("value"))
+        val agged = rawDocs.select(col("docId"), col(field).as("value"))
           .join(matching, Seq("docId"))
           .groupBy(col("value")).agg(count(lit(1)).as("n_docs"))
         if (size > 0) agged.orderBy(col("n_docs").desc, col("value").asc).limit(size)
@@ -2063,7 +2454,7 @@ class Searcher(spark: SparkSession, indexDir: String, numShards: Int) {
       exists: Seq[String] = Nil,
       missing: Seq[String] = Nil): DataFrame = {
     require(ranges.nonEmpty, "range aggregation needs >= 1 range")
-    val joined = docs.select(col("docId"), col(field))
+    val joined = rawDocs.select(col("docId"), col(field))
       .join(matchingOrEmpty(query, filters, mustNot, numericRangeFilters, anyFilters,
         rangeFilters, exists, missing), Seq("docId"))
     Searcher.rangesAggOf(joined, col(field), ranges)
@@ -2081,25 +2472,9 @@ class Searcher(spark: SparkSession, indexDir: String, numShards: Int) {
       rangeFilters: Seq[(String, String, String)] = Nil,
       exists: Seq[String] = Nil,
       missing: Seq[String] = Nil): Long =
-    matchSet(query, filters, mustNot, anyFilters, numericRangeFilters, rangeFilters,
+    matchSet(query, filters, mustNot, numericRangeFilters, anyFilters, rangeFilters,
       exists, missing)
       .map(_.count()).getOrElse(0L)
-
-  /** The match set, or an empty docId frame when no query term exists —
-    * so every aggregation below shares one plan shape with a correct
-    * empty-result schema.
-    */
-  private def matchingOrEmpty(query: String,
-      filters: Seq[(String, String)] = Nil,
-      mustNot: Seq[(String, String)] = Nil,
-      numericRangeFilters: Seq[(String, Long, Long)] = Nil,
-      anyFilters: Seq[(String, Seq[String])] = Nil,
-      rangeFilters: Seq[(String, String, String)] = Nil,
-      exists: Seq[String] = Nil,
-      missing: Seq[String] = Nil): DataFrame =
-    matchSet(query, filters, mustNot, anyFilters, numericRangeFilters, rangeFilters,
-      exists, missing)
-      .getOrElse(Seq.empty[Long].toDF("docId"))
 
   /** ES `histogram` aggregation over the FULL match set: doc counts per
     * fixed-width bucket of a numeric field (bucket = floor(v/width)·
@@ -2117,7 +2492,7 @@ class Searcher(spark: SparkSession, indexDir: String, numShards: Int) {
       exists: Seq[String] = Nil,
       missing: Seq[String] = Nil): DataFrame = {
     require(width > 0, "histogram width must be positive")
-    docs.select(col("docId"), col(field))
+    rawDocs.select(col("docId"), col(field))
       .join(matchingOrEmpty(query, filters, mustNot, numericRangeFilters, anyFilters,
         rangeFilters, exists, missing), Seq("docId"))
       .groupBy((floor(col(field) / lit(width)) * lit(width)).cast("long").as("bucket"))
@@ -2137,7 +2512,7 @@ class Searcher(spark: SparkSession, indexDir: String, numShards: Int) {
       rangeFilters: Seq[(String, String, String)] = Nil,
       exists: Seq[String] = Nil,
       missing: Seq[String] = Nil): DataFrame =
-    docs.select(col("docId"), col(field))
+    rawDocs.select(col("docId"), col(field))
       .join(matchingOrEmpty(query, filters, mustNot, numericRangeFilters, anyFilters,
         rangeFilters, exists, missing), Seq("docId"))
       .groupBy(date_trunc(interval, col(field)).as("bucket"))
@@ -2156,7 +2531,7 @@ class Searcher(spark: SparkSession, indexDir: String, numShards: Int) {
       rangeFilters: Seq[(String, String, String)] = Nil,
       exists: Seq[String] = Nil,
       missing: Seq[String] = Nil): DataFrame =
-    docs.select(col("docId"), col(field))
+    rawDocs.select(col("docId"), col(field))
       .join(matchingOrEmpty(query, filters, mustNot, numericRangeFilters, anyFilters,
         rangeFilters, exists, missing), Seq("docId"))
       .agg(count(lit(1)).as("n_docs"), min(col(field)).as("min"),
@@ -2171,7 +2546,7 @@ class Searcher(spark: SparkSession, indexDir: String, numShards: Int) {
     * order-statistic over it is exact — no sketch-state merge needed.
     */
   def matchedField(query: String, field: String): DataFrame =
-    docs.select(col("docId"), col(field))
+    rawDocs.select(col("docId"), col(field))
       .join(matchingOrEmpty(query), Seq("docId"))
 
   /** Match set sorted by a FIELD instead of by score (ES `sort`): docs
@@ -2206,11 +2581,11 @@ class Searcher(spark: SparkSession, indexDir: String, numShards: Int) {
     val ord =
       if (descending) Seq(col(field).desc, col("docId").asc)
       else Seq(col(field).asc, col("docId").asc)
-    matchSet(query, filters, mustNot, anyFilters, numericRangeFilters, rangeFilters,
+    matchSet(query, filters, mustNot, numericRangeFilters, anyFilters, rangeFilters,
       exists, missing) match {
-      case None => docs.select(col("docId"), col(field)).limit(0)
+      case None => rawDocs.select(col("docId"), col(field)).limit(0)
       case Some(matching) =>
-        val base = docs.select(col("docId"), col(field)).join(matching, Seq("docId"))
+        val base = rawDocs.select(col("docId"), col(field)).join(matching, Seq("docId"))
         val paged = after match {
           case None => base
           case Some((v, d)) =>
@@ -2236,7 +2611,7 @@ class Searcher(spark: SparkSession, indexDir: String, numShards: Int) {
       rangeFilters: Seq[(String, String, String)] = Nil,
       exists: Seq[String] = Nil,
       missing: Seq[String] = Nil): DataFrame =
-    docs.select(col("docId"), col(bucketField).as("value"), col(statField))
+    rawDocs.select(col("docId"), col(bucketField).as("value"), col(statField))
       .join(matchingOrEmpty(query, filters, mustNot, numericRangeFilters, anyFilters,
         rangeFilters, exists, missing), Seq("docId"))
       .groupBy(col("value"))
@@ -2263,7 +2638,7 @@ class Searcher(spark: SparkSession, indexDir: String, numShards: Int) {
       exists: Seq[String] = Nil,
       missing: Seq[String] = Nil): DataFrame = {
     val srcCols = (levels.map(_.field) ++ statField.toSeq).distinct
-    val joined = docs.select(col("docId") +: srcCols.map(col): _*)
+    val joined = rawDocs.select(col("docId") +: srcCols.map(col): _*)
       .join(matchingOrEmpty(query, filters, mustNot, numericRangeFilters, anyFilters,
         rangeFilters, exists, missing), Seq("docId"))
     Aggs.nestedAggOf(joined, levels, statField)
@@ -2284,7 +2659,7 @@ class Searcher(spark: SparkSession, indexDir: String, numShards: Int) {
       exists: Seq[String] = Nil,
       missing: Seq[String] = Nil): DataFrame = {
     val srcCols = (levels.map(_.field) ++ statField.toSeq).distinct
-    val joined = docs.select(col("docId") +: srcCols.map(col): _*)
+    val joined = rawDocs.select(col("docId") +: srcCols.map(col): _*)
       .join(matchingOrEmpty(query, filters, mustNot, numericRangeFilters, anyFilters,
         rangeFilters, exists, missing), Seq("docId"))
     Aggs.compositeAggOf(joined, levels, statField, size, after)
@@ -2308,11 +2683,11 @@ class Searcher(spark: SparkSession, indexDir: String, numShards: Int) {
       exists: Seq[String] = Nil,
       missing: Seq[String] = Nil,
       approximate: Boolean = false): Long =
-    matchSet(query, filters, mustNot, anyFilters, numericRangeFilters, rangeFilters,
+    matchSet(query, filters, mustNot, numericRangeFilters, anyFilters, rangeFilters,
       exists, missing) match {
       case None => 0L
       case Some(m) =>
-        val joined = docs.select(col("docId"), col(field)).join(m, Seq("docId"))
+        val joined = rawDocs.select(col("docId"), col(field)).join(m, Seq("docId"))
         val agg =
           if (approximate) joined.agg(approx_count_distinct(col(field)).as("c"))
           else joined.agg(countDistinct(col(field)).as("c"))
@@ -2346,7 +2721,7 @@ class Searcher(spark: SparkSession, indexDir: String, numShards: Int) {
     val aggExpr =
       if (approximate) percentile_approx(col(field), pLits, lit(10000))
       else percentile(col(field), pLits)
-    docs.select(col("docId"), col(field))
+    rawDocs.select(col("docId"), col(field))
       .join(matchingOrEmpty(query, filters, mustNot, numericRangeFilters, anyFilters,
         rangeFilters, exists, missing), Seq("docId"))
       .agg(aggExpr.as("vals"))
@@ -2379,7 +2754,7 @@ class Searcher(spark: SparkSession, indexDir: String, numShards: Int) {
       else Seq(col(sortField).asc, col("docId").asc)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("value")).orderBy(ord: _*)
-    docs.select(col("docId"), col(bucketField).as("value"), col(sortField))
+    rawDocs.select(col("docId"), col(bucketField).as("value"), col(sortField))
       .join(matchingOrEmpty(query, filters, mustNot, numericRangeFilters, anyFilters,
         rangeFilters, exists, missing), Seq("docId"))
       .withColumn("rank", row_number().over(w))
@@ -2406,7 +2781,7 @@ class Searcher(spark: SparkSession, indexDir: String, numShards: Int) {
       missing: Seq[String] = Nil): DataFrame = {
     require(buckets.nonEmpty, "filters aggregation needs >= 1 named bucket")
     val cols = buckets.map(_._2._1).distinct
-    val joined = docs.select(col("docId") +: cols.map(col): _*)
+    val joined = rawDocs.select(col("docId") +: cols.map(col): _*)
       .join(matchingOrEmpty(query, filters, mustNot, numericRangeFilters, anyFilters,
         rangeFilters, exists, missing), Seq("docId"))
     Searcher.filtersAggOf(joined, buckets)
@@ -2441,7 +2816,7 @@ class Searcher(spark: SparkSession, indexDir: String, numShards: Int) {
       sampleSize: Int = 0): DataFrame = {
     val empty = Seq.empty[(String, Long, Long, Double)]
       .toDF("term", "fg_count", "bg_count", "score")
-    matchSet(query, filters, mustNot, anyFilters, numericRangeFilters, rangeFilters,
+    matchSet(query, filters, mustNot, numericRangeFilters, anyFilters, rangeFilters,
       exists, missing) match {
       case None => empty
       case Some(m0) =>
@@ -2453,42 +2828,31 @@ class Searcher(spark: SparkSession, indexDir: String, numShards: Int) {
         if (sampleSize > 0 && fgN == sampleSize)
           org.slf4j.LoggerFactory.getLogger(getClass)
             .info(s"significant_terms: foreground sampled to $sampleSize docs (sampler cap)")
-        val fg = docs
+        val fg = rawDocs
           .select(col("docId"),
             explode(array_distinct(Analyzer.tokensCol(col("text")))).as("term"))
           .join(m, Seq("docId"))
           .groupBy(col("term")).agg(count(lit(1)).as("fg_count"))
           .filter(col("fg_count") >= lit(minDocCount))
-        val bg = dict.filter(
-          !col("term").startsWith(graft.index.FieldTerms.Prefix) &&
-            !col("term").startsWith(graft.index.FieldTerms.TextPrefix))
-          .select(col("term"), col("df").as("bg_count"))
-        Searcher.jlhScore(fg.join(bg, Seq("term")), fgN, stats.n)
+        val bg = termDfFrame("text").select(col("term"), col("df").as("bg_count"))
+        Searcher.jlhScore(fg.join(bg, Seq("term")), fgN, n)
           .orderBy(col("score").desc, col("term").asc).limit(k)
     }
   }
 
-  /** Top-k resolved back to turn metadata + text (SURVEY.md J4): the k
-    * hits are broadcast against the doc store.
+  /** Every live doc store as one DataFrame (docIds globally unique;
+    * tombstoned docs excluded — the LWW-visible corpus).
     */
-  def searchResolved(query: String, k: Int): DataFrame = {
-    val hits = runPerBucket(Analyzer.analyzeQuery(query).toSeq, k, Mode(conjunctive = false))
-    // hits are already (score desc, docId asc)-sorted and tiny: rank here,
-    // not via an unpartitioned window.
-    val hitsDF = hits.toSeq.zipWithIndex
-      .map { case (s, i) => (s.docId, s.score, i + 1) }.toDF("docId", "score", "rank")
-    // k-bounded fetch: the literal In(docId, ...) pushes to the parquet
-    // scan (row-group min/max pruning — the ES get-by-id shape) instead
-    // of streaming the whole doc store through the broadcast join
-    // (round-7 review #8). docs are docId-range-partitioned by build,
-    // so most row groups prune away.
-    docs.filter(col("docId").isin(hits.map(_.docId).toSeq: _*))
-      .join(broadcast(hitsDF), Seq("docId"))
-      .select(col("rank"), col("docId"), col("score"), col("conv_id"), col("turn_idx"),
-        col("role"), col("text"))
-      .orderBy(col("rank"))
-  }
+  def docs: DataFrame = liveOnly(rawDocs)
+
+  /** Segment doc stores unioned WITHOUT the tombstone anti-join — for
+    * docId joins against sets that are already tombstone-filtered (the
+    * match set; resolved top-k hits): one anti-join per query, not two
+    * (round-4 review "What's wrong #2").
+    */
+  private def rawDocs: DataFrame = segDocs.reduce(_ unionByName _)
 }
+
 
 /** The in-repo exhaustive-scoring oracle (SURVEY.md §5.2.3): brute-force
   * BM25 from the raw docs, no index structures — defines rank-identity

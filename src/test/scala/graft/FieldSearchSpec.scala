@@ -62,9 +62,9 @@ class FieldSearchSpec extends SparkSpec {
       count(when(Analyzer.dlCol(col("title")) > lit(0), 1)),
       sum(Analyzer.dlCol(col("title")).cast("long"))).head()
     assert(nF == want.getLong(0))
-    assert(nF < searcher.stats.n) // empty titles exist
+    assert(nF < searcher.n) // empty titles exist
     assert(math.abs(avgdlF - want.getLong(1).toDouble / nF) < 1e-12)
-    assert(math.abs(avgdlF - searcher.stats.avgdl) > 0.5) // genuinely different norm
+    assert(math.abs(avgdlF - searcher.avgdl) > 0.5) // genuinely different norm
   }
 
   test("searchField(title) ≡ exhaustive per-field oracle (docIds AND scores)") {

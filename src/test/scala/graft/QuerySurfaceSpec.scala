@@ -231,7 +231,7 @@ class QuerySurfaceSpec extends SparkSpec {
     assert(searcher.searchPhrase("the a", kAll, slop = 0).toSeq == exact.toSeq)
   }
 
-  private lazy val stats_n: Int = searcher.stats.n.toInt
+  private lazy val stats_n: Int = searcher.n.toInt
 
   test("bool-filtered aggregations run over the FILTERED match set (ES aggs semantics)") {
     val terms = Analyzer.analyzeQuery("the").toSeq

@@ -297,7 +297,7 @@ class StreamingSpec extends SparkSpec {
     assert(report.n == visible.count())
     val single = new Searcher(spark, compacted, 8)
     assert(single.search("zanzibar quasar lattice", 10).isEmpty)
-    assert(single.stats.n == visible.count())
+    assert(single.n == visible.count())
     // the deleted docs' postings are gone from the blocks, not just
     // filtered: 'zanzibar' (only in deleted/absent markers + updated
     // convs) must have no dictionary entry or no postings
