@@ -87,8 +87,33 @@ object Codec {
     a
   }
 
-  def decodeVarInts(bytes: Array[Byte], n: Int): Array[Int] =
-    decodeVarLongs(bytes, n).map(_.toInt)
+  def decodeVarInts(bytes: Array[Byte], n: Int): Array[Int] = {
+    val out = new Array[Int](n)
+    decodeVarIntsInto(bytes, n, out)
+    out
+  }
+
+  /** Decode `n` varints into `out(0 until n)` — one pass, no
+    * intermediate array, no boxing. `out` may be longer than `n`; the
+    * entries past `n` are left as they were.
+    */
+  def decodeVarIntsInto(bytes: Array[Byte], n: Int, out: Array[Int]): Unit = {
+    var pos = 0
+    var i = 0
+    while (i < n) {
+      var shift = 0
+      var v = 0L
+      var b = 0
+      do {
+        b = bytes(pos) & 0xff
+        pos += 1
+        v |= (b & 0x7fL) << shift
+        shift += 7
+      } while ((b & 0x80) != 0)
+      out(i) = v.toInt
+      i += 1
+    }
+  }
 
   /** Delta-encode an ascending docId run (first entry encoded as delta
     * from `firstDocId`, i.e. 0; strictly ascending ⇒ later deltas ≥ 1).
@@ -109,16 +134,32 @@ object Codec {
   }
 
   def deltaDecode(bytes: Array[Byte], n: Int, firstDocId: Long): Array[Long] = {
-    val deltas = decodeVarLongs(bytes, n)
     val out = new Array[Long](n)
+    deltaDecodeInto(bytes, n, firstDocId, out)
+    out
+  }
+
+  /** [[deltaDecode]] into `out(0 until n)`: varint decode and prefix sum
+    * in one pass, no intermediate deltas array.
+    */
+  def deltaDecodeInto(bytes: Array[Byte], n: Int, firstDocId: Long, out: Array[Long]): Unit = {
     var acc = firstDocId
+    var pos = 0
     var i = 0
     while (i < n) {
-      acc += deltas(i)
+      var shift = 0
+      var v = 0L
+      var b = 0
+      do {
+        b = bytes(pos) & 0xff
+        pos += 1
+        v |= (b & 0x7fL) << shift
+        shift += 7
+      } while ((b & 0x80) != 0)
+      acc += v
       out(i) = acc
       i += 1
     }
-    out
   }
 
   /** Encode one term's postings (already sorted by docId asc) into blocks
@@ -176,6 +217,12 @@ object Codec {
 
   final case class DecodedBlock(docIds: Array[Long], tfs: Array[Int], dls: Array[Int])
 
+  /** A block decoded into fresh arrays — for one-shot callers. A hot
+    * cursor decodes into its own reused buffers instead
+    * ([[deltaDecodeInto]], [[decodeVarIntsInto]]): each decode
+    * overwrites the previous block's values, so what a cursor exposes is
+    * valid only until it moves to another block (`Wand.TermIterator`).
+    */
   def decodeBlock(b: PostingBlock): DecodedBlock =
     DecodedBlock(
       deltaDecode(b.docs, b.count, b.firstDocId),

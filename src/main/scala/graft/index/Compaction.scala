@@ -297,8 +297,13 @@ object Compaction {
     // exact per-term stats over the SURVIVING postings: df needs no
     // decode (block counts), cf decodes only the tf varint stream
     val dfcf = rewritten
-      .map(b => (b.termId, b.count.toLong,
-        Codec.decodeVarInts(b.tfs, b.count).foldLeft(0L)(_ + _)))
+      .map { b =>
+        val tfs = Codec.decodeVarInts(b.tfs, b.count)
+        var cf = 0L
+        var i = 0
+        while (i < tfs.length) { cf += tfs(i); i += 1 }
+        (b.termId, b.count.toLong, cf)
+      }
       .toDF("termId", "dfb", "cfb")
       .groupBy(col("termId"))
       .agg(sum(col("dfb")).as("df"), sum(col("cfb")).as("cf"))
@@ -321,11 +326,13 @@ object Compaction {
         val df = dfRow.getLong(1)
         val fid0 = dfRow.getInt(3)
         val fid = if (fid0 >= 0 && fid0 < fNs.length) fid0 else 0
-        val dec = Codec.decodeBlock(blk)
+        val tfs = Codec.decodeVarInts(blk.tfs, blk.count)
+        val dls = Codec.decodeVarInts(blk.dls, blk.count)
+        val idf = Bm25.idf(df, fNs(fid))
         var mx = Double.NegativeInfinity
         var i = 0
-        while (i < dec.docIds.length) {
-          val sc = Bm25.score(dec.tfs(i), df, dec.dls(i), fNs(fid), fAds(fid))
+        while (i < blk.count) {
+          val sc = Bm25.scoreIdf(idf, tfs(i), dls(i), fAds(fid))
           if (sc > mx) mx = sc
           i += 1
         }

@@ -101,3 +101,15 @@ final case class BuildManifest(
 
 /** A scored document (query-time). */
 final case class Scored(docId: Long, score: Double)
+
+object Scored {
+  /** The engine's hit ranking: score descending, then docId ascending.
+    * Compares the primitives directly — no tuple per comparison.
+    */
+  val Ranking: Ordering[Scored] = new Ordering[Scored] {
+    def compare(x: Scored, y: Scored): Int = {
+      val c = java.lang.Double.compare(y.score, x.score)
+      if (c != 0) c else java.lang.Long.compare(x.docId, y.docId)
+    }
+  }
+}

@@ -22,8 +22,20 @@ object Bm25 {
     * must take the deterministic fdlibm path to stay bit-identical.
     */
   def score(tf: Int, df: Long, dl: Int, n: Long, avgdl: Double): Double =
-    StrictMath.log(1.0 + (n - df + 0.5) / (df + 0.5)) * (tf * 2.2) /
-      (tf + 1.2 * (0.25 + 0.75 * dl / avgdl))
+    scoreIdf(idf(df, n), tf, dl, avgdl)
+
+  /** The idf factor of [[score]]: constant per (term, stats), so a
+    * posting cursor computes it once, not once per posting.
+    */
+  def idf(df: Long, n: Long): Double =
+    StrictMath.log(1.0 + (n - df + 0.5) / (df + 0.5))
+
+  /** [[score]] given its idf factor — the same operations in the same
+    * order, so `scoreIdf(idf(df, n), tf, dl, avgdl)` and
+    * `score(tf, df, dl, n, avgdl)` are the same double.
+    */
+  def scoreIdf(idf: Double, tf: Int, dl: Int, avgdl: Double): Double =
+    idf * (tf * 2.2) / (tf + 1.2 * (0.25 + 0.75 * dl / avgdl))
 
   /** Catalyst-side score with the same operation order/types.
     * tf: int col, df: long col, dl: int col; n, avgdl: literals.

@@ -386,7 +386,9 @@ private[query] object Searcher {
           else boost * (bounds match {
             case StoredBounds => dictMax
             case RescoredBounds => bs.iterator.map(_.maxScore).max
-            case LooseBounds => bs.iterator.map(b => Bm25.score(b.maxTf, df, 0, nn, ad)).max
+            case LooseBounds =>
+              val idf = Bm25.idf(df, nn)
+              bs.iterator.map(b => Bm25.scoreIdf(idf, b.maxTf, 0, ad)).max
           })
         new Wand.TermIterator(t, bs, ub, df, nn, ad,
           staleBlockMax = bounds == LooseBounds, boost = boost, groupOrdinal = g)
@@ -636,14 +638,16 @@ class Searcher private[query] (
           + length(col("poss")) + lit(64)) * lit(LocalHeapExpansion)), lit(0L)))
         .head().getLong(0)).sum
       if (bytes <= maxLocalBlockBytes) {
+        // every list in cursor order once here, not once per query
         val postByGroup: Map[(Int, Int), Map[Long, Array[PostingBlock]]] =
           segBlocks.zipWithIndex.flatMap { case (b, i) =>
             b.as[PostingBlock].collect().map(pb => (i, pb))
           }.groupBy { case (i, pb) => (i, pb.bucket) }
-            .view.mapValues(xs => xs.map(_._2).toArray.groupBy(_.termId)).toMap
+            .view.mapValues(xs => xs.map(_._2).toArray.groupBy(_.termId)
+              .view.mapValues(Wand.inBlockOrder).toMap).toMap
         val tombByGroup: Map[(Int, Int), Array[PostingBlock]] =
           tombBlocks.map(_.collect().groupBy(r => (r._1, r._2))
-            .view.mapValues(_.map(_._3)).toMap).getOrElse(Map.empty)
+            .view.mapValues(rs => Wand.inBlockOrder(rs.map(_._3))).toMap).getOrElse(Map.empty)
         localSegs = (postByGroup.keySet ++ tombByGroup.keySet).map { gk =>
           gk -> (postByGroup.getOrElse(gk, Map.empty[Long, Array[PostingBlock]]),
             tombByGroup.getOrElse(gk, Array.empty[PostingBlock]))
@@ -683,12 +687,17 @@ class Searcher private[query] (
       val rescored = byTerm.map { case (tid, bs) =>
         val exact = for { t <- t2t.get(tid); df <- mergedDf.get(t) } yield {
           val (nn, ad) = FieldTerms.textFieldOf(t).flatMap(fsm.get).getOrElse((nG, adG))
+          val idf = Bm25.idf(df, nn)
+          val cap = bs.iterator.map(_.count).max
+          val tfs = new Array[Int](cap)
+          val dls = new Array[Int](cap)
           bs.map { b =>
-            val dec = Codec.decodeBlock(b)
+            Codec.decodeVarIntsInto(b.tfs, b.count, tfs)
+            Codec.decodeVarIntsInto(b.dls, b.count, dls)
             var mx = Double.NegativeInfinity
             var i = 0
-            while (i < dec.docIds.length) {
-              val s = Bm25.score(dec.tfs(i), df, dec.dls(i), nn, ad)
+            while (i < b.count) {
+              val s = Bm25.scoreIdf(idf, tfs(i), dls(i), ad)
               if (s > mx) mx = s
               i += 1
             }
@@ -1113,7 +1122,7 @@ class Searcher private[query] (
     work.indices.map { j =>
       grouped.getOrElse(j, Array.empty)
         .map(r => Scored(r._2, r._3))
-        .sortBy(s => (-s.score, s.docId))
+        .sorted(Scored.Ranking)
         .take(k)
     }
   }
@@ -1165,7 +1174,7 @@ class Searcher private[query] (
     val collected = Await.result(Future.sequence(perGroup),
       scala.concurrent.duration.Duration.Inf)
     work.indices.map { i =>
-      collected.flatMap(_(i)).toArray.sortBy(s => (-s.score, s.docId)).take(k)
+      collected.flatMap(_(i)).toArray.sorted(Scored.Ranking).take(k)
     }
   }
 
@@ -1953,17 +1962,17 @@ class Searcher private[query] (
       .select(col("seg").as("_1"), struct(Searcher.BlockCols.map(col): _*).as("_2"))
       .as[(Int, PostingBlock)]
       .flatMap { case (seg, b) =>
-        val d = Codec.decodeBlock(b)
-        val poss = Codec.decodePositions(b, d.tfs)
+        val ids = Codec.deltaDecode(b.docs, b.count, b.firstDocId)
+        val poss = Codec.decodePositions(b, Codec.decodeVarInts(b.tfs, b.count))
         // loud like the phrase executor — a silent empty would return
         // all-zero bigram scores (wrong ranking), not an obvious error
         if (poss == null) throw new IllegalStateException(
           "index stores no positions — phrase_suggest needs storePositions=true")
         val term = segIdToTerm((seg, b.termId))
         for {
-          i <- d.docIds.indices.iterator
+          i <- ids.indices.iterator
           p <- poss(i).iterator
-        } yield (term, d.docIds(i), p)
+        } yield (term, ids(i), p)
       }.toDF("term", "docId", "pos")
     Searcher.bigramCountsOf(liveOnly(exploded), pairsFound)
   }

@@ -37,8 +37,17 @@ object Wand {
 
   /** One term's posting cursor over its block list (blocks sorted by
     * firstDocId; docId-disjoint — guaranteed by build: range-partitioned
-    * runs within docId-range buckets). Blocks are decoded lazily; block
-    * skipping never decodes skipped blocks.
+    * runs within docId-range buckets). Blocks already in that order are
+    * used as given (the warm path sorts each term's blocks once); other
+    * input is sorted here. Blocks are decoded lazily; block skipping
+    * never decodes skipped blocks.
+    *
+    * Buffer contract: the cursor decodes each block into its OWN reused
+    * docId/tf/dl arrays (sized to its largest block), and caches the
+    * term's idf — no allocation per block or per posting. The decoded
+    * values, [[score]] and [[positions]] are valid only for the current
+    * posting, until the cursor moves (nextGEQ / advancePast /
+    * shallowSeek); a caller that keeps them longer must copy them.
     *
     * `staleBlockMax = true` ignores the STORED per-block maxScore and
     * re-derives a valid bound from the block's maxTf (stats-independent)
@@ -67,9 +76,20 @@ object Wand {
         */
       val groupOrdinal: Int = Int.MinValue
   ) extends PosCursor {
-    private val blocks = blocksIn.sortBy(b => (b.firstDocId, b.lastDocId))
+    private val blocks = inBlockOrder(blocksIn)
+    private val idf = Bm25.idf(df, n)
+    private val bufLen = {
+      var mx = 0
+      var i = 0
+      while (i < blocks.length) { mx = math.max(mx, blocks(i).count); i += 1 }
+      mx
+    }
+    private val docBuf = new Array[Long](bufLen)
+    private val tfBuf = new Array[Int](bufLen)
+    private val dlBuf = new Array[Int](bufLen)
     private var bi = 0
-    private var dec: Codec.DecodedBlock = _
+    /** The buffers hold block `bi` (false after a block skip). */
+    private var loaded = false
     private var posDec: Array[Array[Int]] = _
     private var pos = 0
     /** Blocks actually decoded (pruning-effectiveness metric: block skips
@@ -77,14 +97,16 @@ object Wand {
       */
     var decodes: Long = 0L
     var curDoc: Long = _
-    decodeCurrent()
+    if (blocks.isEmpty) curDoc = Long.MaxValue
+    else { load(); curDoc = docBuf(0) }
 
-    private def decodeCurrent(): Unit = {
-      if (bi >= blocks.length) { curDoc = Long.MaxValue; dec = null; posDec = null }
-      else {
-        dec = Codec.decodeBlock(blocks(bi)); posDec = null; pos = 0
-        decodes += 1; curDoc = dec.docIds(0)
-      }
+    private def load(): Unit = {
+      val b = blocks(bi)
+      Codec.deltaDecodeInto(b.docs, b.count, b.firstDocId, docBuf)
+      Codec.decodeVarIntsInto(b.tfs, b.count, tfBuf)
+      Codec.decodeVarIntsInto(b.dls, b.count, dlBuf)
+      loaded = true; posDec = null; pos = 0
+      decodes += 1
     }
 
     /** Token positions of the current posting (ascending). Requires an
@@ -92,7 +114,7 @@ object Wand {
       */
     def positions: Array[Int] = {
       if (posDec == null) {
-        posDec = Codec.decodePositions(blocks(bi), dec.tfs)
+        posDec = Codec.decodePositions(blocks(bi), tfBuf)
         require(posDec != null,
           s"index stores no positions for term '$term' — build with storePositions=true")
       }
@@ -106,7 +128,7 @@ object Wand {
       */
     def blockMax: Double =
       if (bi >= blocks.length) 0.0
-      else if (staleBlockMax) boost * Bm25.score(blocks(bi).maxTf, df, 0, n, avgdl)
+      else if (staleBlockMax) boost * Bm25.scoreIdf(idf, blocks(bi).maxTf, 0, avgdl)
       else boost * blocks(bi).maxScore
 
     /** Last docId of the current block (skip horizon). */
@@ -120,24 +142,40 @@ object Wand {
     def shallowSeek(target: Long): Unit = {
       if (bi < blocks.length && blocks(bi).lastDocId >= target) return
       while (bi < blocks.length && blocks(bi).lastDocId < target) bi += 1
-      dec = null; posDec = null; pos = 0
+      loaded = false; posDec = null; pos = 0
       if (bi >= blocks.length) curDoc = Long.MaxValue
     }
 
     def nextGEQ(target: Long): Unit = {
-      if (curDoc >= target && dec != null) return
-      while (bi < blocks.length && blocks(bi).lastDocId < target) { bi += 1; dec = null; posDec = null }
-      if (bi >= blocks.length) { curDoc = Long.MaxValue; dec = null; posDec = null; return }
-      if (dec == null) { dec = Codec.decodeBlock(blocks(bi)); posDec = null; pos = 0; decodes += 1 }
+      if (curDoc >= target && loaded) return
+      while (bi < blocks.length && blocks(bi).lastDocId < target) { bi += 1; loaded = false }
+      if (bi >= blocks.length) { curDoc = Long.MaxValue; loaded = false; posDec = null; return }
+      if (!loaded) load()
       // in-block scan (blocks are <=128 entries; galloping not worth it)
-      while (dec.docIds(pos) < target) pos += 1
-      curDoc = dec.docIds(pos)
+      while (docBuf(pos) < target) pos += 1
+      curDoc = docBuf(pos)
     }
 
     def advancePast(doc: Long): Unit = nextGEQ(doc + 1)
 
     /** Exact (boost-scaled) BM25 contribution at the current position. */
-    def score: Double = boost * Bm25.score(dec.tfs(pos), df, dec.dls(pos), n, avgdl)
+    def score: Double = boost * Bm25.scoreIdf(idf, tfBuf(pos), dlBuf(pos), avgdl)
+  }
+
+  /** `bs` in cursor order, (firstDocId, lastDocId): returned as is when
+    * already ordered (the warm path orders each list once), else sorted.
+    */
+  def inBlockOrder(bs: Array[PostingBlock]): Array[PostingBlock] = {
+    var i = 1
+    while (i < bs.length) {
+      val a = bs(i - 1)
+      val b = bs(i)
+      if (a.firstDocId > b.firstDocId ||
+        (a.firstDocId == b.firstDocId && a.lastDocId > b.lastDocId))
+        return bs.sortBy(b => (b.firstDocId, b.lastDocId))
+      i += 1
+    }
+    bs
   }
 
   /** Membership-only cursor over a sorted docId stream — what filter /
@@ -293,11 +331,33 @@ object Wand {
     }
   }
 
-  private final case class HeapEntry(score: Double, docId: Long)
-  // min-heap: worst entry on top = lowest score, then LARGEST docId
-  // (ties rank by docId asc, so the largest docId is the weakest).
-  private val heapOrd: Ordering[HeapEntry] =
-    Ordering.by[HeapEntry, (Double, Long)](e => (-e.score, e.docId))
+  /** The top-k collector of both executors: a heap ordered by
+    * [[Scored.Ranking]], so its head is the WORST entry — lowest score,
+    * then LARGEST docId (ties rank by docId asc, so the largest docId is
+    * the weakest). Docs must be offered in ascending docId order, so an
+    * equal score never displaces a held doc. Non-null `after` (ES
+    * `search_after`) admits only docs ranked strictly after it.
+    */
+  private final class TopK(k: Int, after: Scored) {
+    private val heap = scala.collection.mutable.PriorityQueue.empty[Scored](Scored.Ranking)
+    /** The k-th best score once k docs are held, else −∞. */
+    var theta = Double.NegativeInfinity
+    def full: Boolean = heap.size == k
+    def offer(score: Double, docId: Long): Unit = {
+      if (after != null &&
+        !(score < after.score || (score == after.score && docId > after.docId))) return
+      if (heap.size < k) {
+        heap.enqueue(Scored(docId, score))
+        if (heap.size == k) theta = heap.head.score
+      } else if (score > heap.head.score) {
+        heap.dequeue()
+        heap.enqueue(Scored(docId, score))
+        theta = heap.head.score
+      }
+    }
+    /** The held docs, best first. */
+    def ranked: Array[Scored] = heap.toArray.sorted(Scored.Ranking)
+  }
 
   /** Align `filters` at `doc`: returns `doc` if every filter list
     * contains it, else a docId ≥ the first position where all filters
@@ -395,23 +455,23 @@ object Wand {
     val bfContrib: Array[Double] = if (bf == null) null else new Array[Double](byTerm.length)
     val bfMatched: Array[Boolean] = if (bf == null) null else new Array[Boolean](byTerm.length)
     val bfSums: Array[Double] = if (bf == null) null else new Array[Double](bf.nFields)
-    val heap = scala.collection.mutable.PriorityQueue.empty[HeapEntry](heapOrd)
-    var theta = Double.NegativeInfinity
-    def offer(score: Double, docId: Long): Unit = {
-      if (after != null &&
-        !(score < after.score || (score == after.score && docId > after.docId))) return
-      if (heap.size < k) {
-        heap.enqueue(HeapEntry(score, docId))
-        if (heap.size == k) theta = heap.head.score
-      } else if (score > heap.head.score) {
-        heap.dequeue()
-        heap.enqueue(HeapEntry(score, docId))
-        theta = heap.head.score
-      }
-    }
+    val top = new TopK(k, after)
 
     val iters = byTerm.clone() // sorted by curDoc during the loop
-    def sortIters(): Unit = java.util.Arrays.sort(iters, Ordering.by[TermIterator, Long](_.curDoc))
+    // stable in-place insertion sort on curDoc (the order a stable sort
+    // gives; between pivot steps only a few cursors move, so the array
+    // is nearly sorted)
+    def sortIters(): Unit = {
+      var i = 1
+      while (i < iters.length) {
+        val it = iters(i)
+        val d = it.curDoc
+        var j = i - 1
+        while (j >= 0 && iters(j).curDoc > d) { iters(j + 1) = iters(j); j -= 1 }
+        iters(j + 1) = it
+        i += 1
+      }
+    }
 
     sortIters()
     var running = true
@@ -423,7 +483,7 @@ object Wand {
       while (p < iters.length && !found) {
         if (!iters(p).exhausted) {
           acc += iters(p).ub
-          if (acc + Margin > theta) found = true else p += 1
+          if (acc + Margin > top.theta) found = true else p += 1
         } else p = iters.length
       }
       if (!found || p >= iters.length || iters(p).exhausted) running = false
@@ -436,7 +496,7 @@ object Wand {
           while (i <= p) { iters(i).shallowSeek(pivotDoc); blockSum += iters(i).blockMax; i += 1 }
           // lists beyond p that already sit on pivotDoc also contribute
           while (i < iters.length && iters(i).curDoc == pivotDoc) { blockSum += iters(i).blockMax; i += 1 }
-          if (blockSum + Margin <= theta) {
+          if (blockSum + Margin <= top.theta) {
             // cannot qualify anywhere in these blocks: jump past the
             // nearest block horizon (capped by the next list's curDoc)
             var horizon = Long.MaxValue
@@ -510,7 +570,7 @@ object Wand {
                   t += 1
                 }
               }
-              if ((mustN == 0 || nMust >= 1) && nShould >= minShould) offer(s, pivotDoc)
+              if ((mustN == 0 || nMust >= 1) && nShould >= minShould) top.offer(s, pivotDoc)
               t = 0
               while (t < byTerm.length) {
                 if (byTerm(t).curDoc == pivotDoc) byTerm(t).advancePast(pivotDoc)
@@ -526,8 +586,7 @@ object Wand {
         }
       }
     }
-    heap.dequeueAll.map((e: HeapEntry) => Scored(e.docId, e.score)).toArray
-      .sortBy(s => (-s.score, s.docId))
+    top.ranked
   }
 
   /** Conjunctive (AND) top-k: docs containing ALL terms, BM25-scored —
@@ -712,6 +771,13 @@ object Wand {
     }
   }
 
+  private def maxCurDoc(cs: Array[PosCursor]): Long = {
+    var mx = Long.MinValue
+    var i = 0
+    while (i < cs.length) { mx = math.max(mx, cs(i).curDoc); i += 1 }
+    mx
+  }
+
   private def intersectTopK(
       lists: Seq[PosCursor],
       k: Int,
@@ -744,23 +810,11 @@ object Wand {
         require(phrase.forall(m.contains), "phrase terms must each have an iterator")
         phrase.map(m).toArray
       }
-    val heap = scala.collection.mutable.PriorityQueue.empty[HeapEntry](heapOrd)
-    var theta = Double.NegativeInfinity
-    def offer(s: Double, docId: Long): Unit = {
-      if (after != null &&
-        !(s < after.score || (s == after.score && docId > after.docId))) return
-      if (heap.size < k) {
-        heap.enqueue(HeapEntry(s, docId))
-        if (heap.size == k) theta = heap.head.score
-      } else if (s > heap.head.score) {
-        heap.dequeue(); heap.enqueue(HeapEntry(s, docId))
-        theta = heap.head.score
-      }
-    }
-    var candidate = byTerm.map(_.curDoc).max
+    val top = new TopK(k, after)
+    var candidate = maxCurDoc(byTerm)
     while (candidate != Long.MaxValue) {
       var skipped = false
-      if (heap.size == k) {
+      if (top.full) {
         // block-max early exit: bound the best score reachable inside the
         // current block span WITHOUT decoding (shallowSeek moves block
         // pointers only); if it can't beat θ, jump past the nearest block
@@ -781,7 +835,7 @@ object Wand {
           }
         }
         if (dead) { candidate = Long.MaxValue; skipped = true }
-        else if (blockSum + Margin <= theta) {
+        else if (blockSum + Margin <= top.theta) {
           candidate = math.max(candidate + 1, horizon + 1)
           skipped = true
         }
@@ -819,16 +873,16 @@ object Wand {
                 if (merged(t).curDoc == candidate) s += merged(t).score
                 t += 1
               }
-              offer(s, candidate)
+              top.offer(s, candidate)
             }
           }
           val next = candidate + 1
-          byTerm.foreach(_.nextGEQ(next))
-          candidate = byTerm.map(_.curDoc).max
+          var j = 0
+          while (j < byTerm.length) { byTerm(j).nextGEQ(next); j += 1 }
+          candidate = maxCurDoc(byTerm)
         }
       }
     }
-    heap.dequeueAll.map((e: HeapEntry) => Scored(e.docId, e.score)).toArray
-      .sortBy(s => (-s.score, s.docId))
+    top.ranked
   }
 }

@@ -646,4 +646,112 @@ class WandSpec extends AnyFunSuite {
           s" got=${got.toSeq}\n want=$brute")
     }
   }
+
+  test("ties at the k boundary rank by docId asc: topK, topKConjunctive ≡ exhaustive") {
+    val corpus = Array.tabulate(260)(i => ScoringSpec.tieText(i).split(' '))
+    for (terms <- Seq(Seq("alpha"), Seq("alpha", "beta")); k <- Seq(8, 10, 25);
+        blockSize <- Seq(4, 16, 128); conj <- Seq(false, true)) {
+      val all = bruteScore(corpus, terms, k + 1, conj)
+      assert(all(k - 1).score == all(k).score, s"no tie at the boundary: $terms k=$k")
+      val (iters, _, _, _) = buildIters(corpus, terms, blockSize)
+      val got = if (conj) Wand.topKConjunctive(iters, k) else Wand.topK(iters, k)
+      assert(got.toSeq == all.take(k), s"$terms k=$k blockSize=$blockSize conj=$conj")
+    }
+  }
+
+  test("cursor buffer reuse: every posting ≡ a fresh block decode across block boundaries") {
+    val r = new scala.util.Random(7)
+    val n = 5000L
+    val avgdl = 17.5
+
+    /** One list as blocks of MIXED sizes: runs over disjoint docId ranges
+      * encoded with different block sizes, so a short block follows a
+      * long one (stale tail entries in a reused buffer) and runs end in
+      * partial blocks. Every other list comes unsorted.
+      */
+    final class Ref(val blocks: Array[PostingBlock], val ids: Array[Long], val tfs: Array[Int],
+        val dls: Array[Int], val poss: Array[Array[Int]], val blk: Array[PostingBlock])
+    def listOf(shuffle: Boolean): Ref = {
+      val nPost = 1 + r.nextInt(300)
+      var d = r.nextInt(5).toLong
+      val ids = Array.fill(nPost) { val x = d; d += 1 + r.nextInt(12); x }
+      val tfs = Array.fill(nPost)(1 + r.nextInt(5))
+      val dls = tfs.map(tf => tf + r.nextInt(40))
+      val pos = tfs.map(tf => r.shuffle((0 until 60).toList).take(tf).sorted.toArray)
+      val scores = Array.tabulate(nPost)(i => Bm25.score(tfs(i), nPost, dls(i), n, avgdl))
+      val bs = scala.collection.mutable.ArrayBuffer[PostingBlock]()
+      var lo = 0
+      while (lo < nPost) {
+        val hi = math.min(nPost, lo + 1 + r.nextInt(80))
+        val sl = (lo until hi)
+        bs ++= Codec.encodeBlocks(1L, 0, 0, sl.map(ids).toArray, sl.map(tfs).toArray,
+          sl.map(dls).toArray, sl.map(scores).toArray,
+          sl.map(i => Codec.encodePositions(pos(i))).toArray, Seq(1, 3, 8, 16, 128)(r.nextInt(5)))
+        lo = hi
+      }
+      val sorted = bs.toArray
+      // the reference: each block decoded afresh, independently of any cursor
+      val blk = sorted.flatMap(b => Array.fill(b.count)(b))
+      val decs = sorted.map(Codec.decodeBlock)
+      val possRef = sorted.zip(decs).flatMap { case (b, dec) => Codec.decodePositions(b, dec.tfs) }
+      new Ref(if (shuffle) r.shuffle(sorted.toSeq).toArray else sorted,
+        decs.flatMap(_.docIds), decs.flatMap(_.tfs), decs.flatMap(_.dls), possRef, blk)
+    }
+
+    for (c <- 1 to 80) {
+      val refs = Array(listOf(shuffle = c % 2 == 0), listOf(shuffle = c % 3 == 0))
+      val boost = if (c % 3 == 0) 1.7 else 1.0
+      val stale = c % 4 == 0
+      val its = refs.map(ref => new Wand.TermIterator("t", ref.blocks, 0.0, ref.ids.length.toLong,
+        n, avgdl, staleBlockMax = stale, boost = boost))
+      val at = Array(0, 0) // the reference posting each cursor must sit on
+      def check(j: Int, what: String): Unit = {
+        val (it, ref, i) = (its(j), refs(j), at(j))
+        if (i >= ref.ids.length) assert(it.exhausted && it.curDoc == Long.MaxValue, what)
+        else {
+          val df = ref.ids.length.toLong
+          assert(it.curDoc == ref.ids(i), what)
+          assert(java.lang.Double.doubleToRawLongBits(it.score) ==
+            java.lang.Double.doubleToRawLongBits(
+              boost * Bm25.score(ref.tfs(i), df, ref.dls(i), n, avgdl)), what)
+          val b = ref.blk(i)
+          val wantMax = if (stale) boost * Bm25.score(b.maxTf, df, 0, n, avgdl) else boost * b.maxScore
+          assert(java.lang.Double.doubleToRawLongBits(it.blockMax) ==
+            java.lang.Double.doubleToRawLongBits(wantMax), what)
+          assert(it.blockLast == b.lastDocId, what)
+          // positions read lazily: skipped at some postings, so a block's
+          // position cache is sometimes first built mid-block
+          if (r.nextBoolean()) assert(it.positions.sameElements(ref.poss(i)), what)
+        }
+      }
+      def seekRef(j: Int, target: Long): Unit =
+        while (at(j) < refs(j).ids.length && refs(j).ids(at(j)) < target) at(j) += 1
+      check(0, s"case $c: first posting"); check(1, s"case $c: first posting")
+      var steps = 0
+      while (!(its(0).exhausted && its(1).exhausted)) {
+        // interleave the two cursors: each keeps its own buffers
+        val j = r.nextInt(2)
+        val it = its(j)
+        if (!it.exhausted) {
+          val cur = it.curDoc
+          val what = s"case $c step $steps cursor $j"
+          r.nextInt(4) match {
+            case 0 =>
+              val t = cur + r.nextInt(3)
+              it.nextGEQ(t); seekRef(j, t); check(j, s"$what nextGEQ($t)")
+            case 1 =>
+              val t = cur + r.nextInt(200)
+              it.nextGEQ(t); seekRef(j, t); check(j, s"$what far nextGEQ($t)")
+            case 2 =>
+              val t = cur + r.nextInt(400)
+              it.shallowSeek(t); it.nextGEQ(t); seekRef(j, t)
+              check(j, s"$what shallowSeek+nextGEQ($t)")
+            case _ =>
+              it.advancePast(cur); seekRef(j, cur + 1); check(j, s"$what advancePast($cur)")
+          }
+        }
+        steps += 1
+      }
+    }
+  }
 }
