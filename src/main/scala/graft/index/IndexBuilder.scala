@@ -274,30 +274,18 @@ object FieldTerms {
   }
 }
 
+/** What an index holds and how it is cut up — never which build path
+  * runs: [[IndexBuilder]] has one path (all buckets' blocks in one
+  * fused job), and the only run-time choice, translate map vs string
+  * join for the block pass, follows from the observed vocabulary
+  * ([[IndexBuilder.translateFits]]).
+  */
 final case class IndexConfig(
     numBuckets: Int = 4,
     numShards: Int = 8,
     blockSize: Int = 128,
     salt: Int = 16,
     partitions: Int = 32,
-    /** true (default): encode ALL buckets' blocks in ONE job (single
-      * range shuffle on (bucket, term, docId), single partitioned write)
-      * — per-bucket manifest cells are still written, but resume
-      * granularity for the block phase is all-buckets-or-none. false:
-      * one job per bucket — fine-grained resume; right when each bucket
-      * is hours of work (at 10^12 turns run fused GROUPS of buckets:
-      * several builds over docId sub-ranges, each fused internally).
-      */
-    fusedBlocks: Boolean = true,
-    /** true: write the tokenized postings to parquet as their own
-      * checkpoint cell (resume never re-tokenizes — right when the
-      * corpus⇒postings pass dwarfs everything, e.g. 10^12 turns on a
-      * cluster with fast parallel storage). false (default): keep them
-      * in a spillable cache for the duration of the build — one tokenize
-      * pass either way, but no extra full write+read of the posting
-      * stream through storage; a resumed build re-tokenizes once.
-      */
-    materializePostings: Boolean = false,
     /** Store per-posting token positions (varint gap streams) in the
       * blocks — what makes phrase queries answerable (ES analyzed fields
       * record positions by default; reference parity). Costs ~1-2 bytes
@@ -326,20 +314,6 @@ final case class IndexConfig(
       * filter — ES missing-value semantics).
       */
     numericFieldCols: Seq[String] = Nil,
-    /** Vocabulary gate for the blocks-phase term→termId TRANSLATE map
-      * (round-9): when the dictionary has ≤ this many terms, the block
-      * pass resolves (termId, df, fieldId) inside the tokenize closure
-      * via a broadcast java map instead of a broadcast-hash JOIN on the
-      * term string — the join probe (UnsafeRow key encode +
-      * BytesToBytesMap lookup + arrayEquals per posting) was a measured
-      * 24% of build executor CPU (round-9 JFR sampling). Same gated-
-      * broadcast pattern as `Searcher.warm(maxDriverDictTerms)`: above
-      * the gate (vocabularies that would not fit executor memory — the
-      * 10^12-turn case) the path falls back to the join, which AQE
-      * plans as broadcast or shuffle join by size as before. 0 disables
-      * the translate map entirely (always join).
-      */
-    maxTranslateVocab: Long = 4_000_000L,
     /** Doc columns to index as ADDITIONAL analyzed text fields
       * (`%field:token` terms, [[FieldTerms.textTerm]]) — the ES
       * multi-field mapping (reference mapping.json:12-17 +
@@ -418,9 +392,19 @@ final case class BuildReport(
   *
   * At 10^12-turn scale the same plan holds: docs/blocks are partitioned
   * parquet/iceberg, every shuffle is keyed on (docId slice) or (term,
-  * salt) — no global single-task stage and no sampling pass anywhere, and
-  * the dictionary join is AQE-broadcast when the vocabulary is small
-  * enough, shuffle join otherwise.
+  * salt) — no global single-task stage and no sampling pass anywhere.
+  *
+  * One build path: each field kind has one posting generator, and the
+  * blocks of all buckets are encoded in one phase. The only run-time
+  * choice is how the block pass finds each posting's termId/df/fieldId,
+  * decided once per build from the vocabulary the dict0 write observed:
+  * a broadcast translate map resolved inside the tokenize closure when
+  * vocab · [[IndexBuilder.TranslateEntryBytes]] + Σ term bytes fits
+  * 1/[[IndexBuilder.TranslateHeapShare]] of the smaller of the driver
+  * and executor heaps ([[IndexBuilder.translateFits]]), else a join on
+  * the term string (AQE-broadcast or shuffle by size) — same rows
+  * either way. A resume needs a dict0 from this writer; an older one
+  * fails the block phase with "rebuild without resume".
   */
 class IndexBuilder(
     spark: SparkSession,
@@ -436,7 +420,6 @@ class IndexBuilder(
   def docsPath = s"$indexDir/docs"
   def statsPath = s"$indexDir/stats"
   def fieldStatsPath = s"$indexDir/fieldstats"
-  def postings0Path = s"$indexDir/postings0"
   def dict0Path = s"$indexDir/dict0"
   def blocksPath = s"$indexDir/blocks"
   def partialsPath = s"$indexDir/termpartials"
@@ -446,7 +429,10 @@ class IndexBuilder(
   // --- manifest (checkpoint) ---------------------------------------------
   private def cellFile(cell: String) = new Path(manifestDir, cell.replace('=', '-') + ".props")
 
-  private[index] def writeManifest(m: BuildManifest): Unit = {
+  /** Writes the cell's props file; `extra` appends cell-specific keys
+    * (the dict0 cell's gate statistics), read back by [[manifestProps]].
+    */
+  private[index] def writeManifest(m: BuildManifest, extra: Seq[(String, Long)] = Nil): Unit = {
     fs.mkdirs(manifestDir)
     val tmp = new Path(manifestDir, cellFile(m.cell).getName + ".tmp")
     val out = fs.create(tmp, true)
@@ -460,24 +446,29 @@ class IndexBuilder(
          |bytesCompressed=${m.bytesCompressed}
          |status=${m.status}
          |wallSec=${m.wallSec}
-         |""".stripMargin
+         |""".stripMargin + extra.map { case (k, v) => s"$k=$v\n" }.mkString
     out.write(body.getBytes(StandardCharsets.UTF_8))
     out.close()
     fs.delete(cellFile(m.cell), false)
     fs.rename(tmp, cellFile(m.cell))
   }
 
-  def readManifest(cell: String): Option[BuildManifest] = {
+  /** A cell's props as key → value (empty when the cell is absent). */
+  private def manifestProps(cell: String): Map[String, String] = {
     val p = cellFile(cell)
-    if (!fs.exists(p)) return None
+    if (!fs.exists(p)) return Map.empty
     val in = fs.open(p)
     val bytes = new java.io.ByteArrayOutputStream()
     val buf = new Array[Byte](4096)
     var r = in.read(buf)
     while (r > 0) { bytes.write(buf, 0, r); r = in.read(buf) }
     in.close()
-    val kv = bytes.toString("UTF-8").linesIterator.filter(_.contains('='))
+    bytes.toString("UTF-8").linesIterator.filter(_.contains('='))
       .map { l => val i = l.indexOf('='); l.substring(0, i) -> l.substring(i + 1) }.toMap
+  }
+
+  def readManifest(cell: String): Option[BuildManifest] = {
+    val kv = manifestProps(cell)
     try Some(BuildManifest(kv("cell"), kv("bucket").toInt, kv("docIdLo").toLong,
       kv("docIdHi").toLong, kv("sourceSnapshotId"), kv("postingsEmitted").toLong,
       kv("bytesCompressed").toLong, kv("status"), kv("wallSec").toDouble))
@@ -489,323 +480,133 @@ class IndexBuilder(
     else fs.listStatus(manifestDir).toSeq.filter(_.getPath.getName.endsWith(".props"))
       .flatMap(st => readManifest(st.getPath.getName.stripSuffix(".props").replaceFirst("^bucket-", "bucket=")))
 
+  /** Heap bytes the block phase's translate map may take: 1 /
+    * [[IndexBuilder.TranslateHeapShare]] of the smaller of the driver
+    * heap and the executor heap (one JVM in local mode). Tests override
+    * it to force the join path.
+    */
+  protected def translateBudget: Long = {
+    val sc = spark.sparkContext
+    val driver = Runtime.getRuntime.maxMemory
+    val executor =
+      if (sc.isLocal) driver else sc.getConf.getSizeAsBytes("spark.executor.memory", "1g")
+    math.min(driver, executor) / IndexBuilder.TranslateHeapShare
+  }
+
   private def isDone(cell: String): Boolean =
     readManifest(cell).exists(m => m.status == "done" && m.sourceSnapshotId == snapshotId)
 
   // --- build phases --------------------------------------------------------
 
-  /** (term, docId, tf, dl, pay) postings — one row per distinct (term,
-    * doc). `dl` rides along so no big doc-side join is ever needed
-    * (SURVEY.md A6). tf — and, when cfg.storePositions, the term's token
-    * positions — are aggregated PER DOC inside a narrow map pass: a
-    * document's tokens are by definition co-located, so neither needs a
-    * shuffle or a corpus-wide hash table. `pay` is the PACKED per-posting
-    * payload — varint(tf), varint(dl), then the position gap stream —
-    * produced here so the block shuffle can carry ONE ~3-byte binary
-    * instead of two 8-byte longs plus a separate position column (round-3
-    * scaling finding: per-posting fixed-width fields dominated shuffle
-    * bytes once positions landed — 986 → 1386 B/turn; packing restores
-    * it). The separate tf/dl int columns exist for the dictionary
-    * aggregation and are column-pruned out of the block path. (Round-1
-    * shape — explode + groupBy(term, docId) — shuffled ~1 row per posting
-    * and built a postings-cardinality hash aggregate for a ~1.35:1
-    * reduction; measured 34 s of the 96 s build at 1 M turns. This pass
-    * is per-partition imperative logic, the documented legitimate use of
-    * typed mapPartitions.)
+  /** Runs one field kind's per-doc loop over `src` and feeds each posting
+    * it produces to the shared output step ([[PostingSink]]): a string
+    * row (term, docId, tf, dl, pay) — or, with a `translate` map, the
+    * resolved row (termId, docId, df, pay, fieldId), looked up inside
+    * this closure so no per-posting term string leaves it and the block
+    * pass needs no join. `withPayload = false` skips the packed payload
+    * (the dict0 pass only reads term/docId/tf: the payload is built in
+    * a typed closure, so Catalyst could not prune it, and at ~40 M
+    * postings/M-turns the dead encode was a measured allocation hot spot).
+    * Per-partition imperative logic — the documented legitimate use of
+    * typed mapPartitions. `accSize` is the initial size of the per-doc
+    * term table: it fixes the table's iteration order, hence the order
+    * postings are emitted in — which the dictionary's termIds derive
+    * from.
+    */
+  private def generate[A](src: Dataset[A], withPayload: Boolean,
+      translate: IndexBuilder.Translate, accSize: Int = 128)(
+      loop: (A, PostingSink[_]) => Unit): DataFrame = {
+    val withPos = cfg.storePositions && withPayload
+    translate match {
+      case Some(bc) =>
+        src.mapPartitions { it =>
+          new TranslatedSink(bc.value, withPayload, withPos, accSize).run(it, loop)
+        }.toDF("termId", "docId", "df", "pay", "fieldId")
+      case None =>
+        src.mapPartitions(it => new StringSink(withPayload, withPos, accSize).run(it, loop))
+          .toDF("term", "docId", "tf", "dl", "pay")
+    }
+  }
+
+  /** Main-text postings — one row per distinct (term, doc). `dl` rides
+    * along so no big doc-side join is ever needed (SURVEY.md A6). tf —
+    * and, when cfg.storePositions, the term's token positions — are
+    * aggregated PER DOC inside the narrow map pass: a document's tokens
+    * are by definition co-located, so neither needs a shuffle or a
+    * corpus-wide hash table. The packed payload (varint tf, varint dl,
+    * position gaps — [[PosAcc.payload]]) lets the block shuffle carry ONE
+    * ~3-byte binary instead of two 8-byte longs plus a position column
+    * (round-3 scaling finding: 986 → 1386 B/turn once positions landed;
+    * packing restores it). (Round-1 shape — explode + groupBy(term,
+    * docId) — shuffled ~1 row per posting; measured 34 s of the 96 s
+    * build at 1 M turns.)
     */
   def postingsOf(docs: DataFrame, withPayload: Boolean = true,
       translate: IndexBuilder.Translate = None): DataFrame = {
-    val withPos = cfg.storePositions && withPayload
-    val src = docs.select(col("docId"), col("dl"), col("text"))
-      .as[(Long, Int, String)]
-    translate match {
-      case Some(bc) =>
-        // TRANSLATED stream (round-9, see IndexConfig.maxTranslateVocab):
-        // (termId, df, fieldId) resolved against the broadcast dict0 map
-        // IN this closure — term strings never leave it, so the blocks
-        // pass needs no join and no per-posting string UnsafeRow
-        src.mapPartitions { it =>
-          val m = bc.value
-          val acc = new java.util.HashMap[String, PosAcc](128)
-          it.flatMap { case (id, dl, text) =>
-            acc.clear()
-            val toks = Analyzer.tokenize(text)
-            var i = 0
-            while (i < toks.length) {
-              val prev = acc.get(toks(i))
-              val a = if (prev == null) { val p = new PosAcc; acc.put(toks(i), p); p } else prev
-              if (withPos) a.add(i) else a.n += 1
-              i += 1
-            }
-            val out = new Array[(Long, Long, Long, Array[Byte], Int)](acc.size)
-            val entries = acc.entrySet().iterator()
-            var j = 0
-            while (entries.hasNext) {
-              val e = entries.next()
-              val a = e.getValue
-              val v = IndexBuilder.resolved(m, e.getKey)
-              out(j) = (v(0), id, v(1),
-                if (withPayload) a.payload(dl, withPos) else Array.emptyByteArray,
-                v(2).toInt)
-              j += 1
-            }
-            out.iterator
-          }
-        }.toDF("termId", "docId", "df", "pay", "fieldId")
-      case None =>
-        src.mapPartitions { it =>
-          // per-doc term table; PosAcc is reused across docs via clear()
-          val acc = new java.util.HashMap[String, PosAcc](128)
-          it.flatMap { case (id, dl, text) =>
-            acc.clear()
-            val toks = Analyzer.tokenize(text)
-            var i = 0
-            while (i < toks.length) {
-              val prev = acc.get(toks(i))
-              val a = if (prev == null) { val p = new PosAcc; acc.put(toks(i), p); p } else prev
-              if (withPos) a.add(i) else a.n += 1
-              i += 1
-            }
-            // materialize eagerly: `acc` is reused for the next doc
-            val out = new Array[(String, Long, Int, Int, Array[Byte])](acc.size)
-            val entries = acc.entrySet().iterator()
-            var j = 0
-            while (entries.hasNext) {
-              val e = entries.next()
-              val a = e.getValue
-              out(j) = (e.getKey, id, a.n, dl,
-                if (withPayload) a.payload(dl, withPos) else Array.emptyByteArray)
-              j += 1
-            }
-            out.iterator
-          }
-        }.toDF("term", "docId", "tf", "dl", "pay")
+    val src = docs.select(col("docId"), col("dl"), col("text")).as[(Long, Int, String)]
+    generate(src, withPayload, translate) { case ((id, dl, text), out) =>
+      out.addTokens(id, Analyzer.tokenize(text), "", dl)
     }
   }
 
   /** One tf=1 posting per doc for a metadata column's exact value
-    * ([[FieldTerms]] — ES keyword sub-field). Null/absent values emit
-    * nothing (a filter on the field then simply never matches those
-    * docs — ES semantics). Same output schema as [[postingsOf]], so the
-    * streams union and flow through the identical dict/block phases.
+    * ([[FieldTerms]] — ES keyword sub-field), plus the `_field_names`-
+    * style exists marker. Null values emit nothing (a filter on the
+    * field then never matches those docs — ES semantics).
     */
-  def fieldPostingsOf(docs: DataFrame, field: String,
-      withPayload: Boolean = true,
+  def fieldPostingsOf(docs: DataFrame, field: String, withPayload: Boolean = true,
       translate: IndexBuilder.Translate = None): DataFrame = {
-    val withPos = cfg.storePositions && withPayload
-    val src = docs.select(col("docId"), col("dl"), col(field).cast("string"))
-      .as[(Long, Int, String)]
-    translate match {
-      case Some(bc) =>
-        src.mapPartitions { it =>
-          val m = bc.value
-          it.flatMap { case (id, dl, v) =>
-            if (v == null) Iterator.empty
-            else {
-              val pay =
-                if (!withPayload) Array.emptyByteArray
-                else {
-                  val a = new PosAcc
-                  if (withPos) a.add(0) else a.n = 1
-                  a.payload(dl, withPos)
-                }
-              val t1 = IndexBuilder.resolved(m, FieldTerms.term(field, v))
-              val t2 = IndexBuilder.resolved(m, FieldTerms.existsTerm(field))
-              Iterator((t1(0), id, t1(1), pay, t1(2).toInt),
-                (t2(0), id, t2(1), pay, t2(2).toInt))
-            }
-          }
-        }.toDF("termId", "docId", "df", "pay", "fieldId")
-      case None =>
-        src.mapPartitions { it =>
-          it.flatMap { case (id, dl, v) =>
-            if (v == null) Iterator.empty
-            else {
-              val pay =
-                if (!withPayload) Array.emptyByteArray
-                else {
-                  val a = new PosAcc
-                  if (withPos) a.add(0) else a.n = 1
-                  a.payload(dl, withPos)
-                }
-              // value term + the `_field_names`-style exists marker
-              Iterator((FieldTerms.term(field, v), id, 1, dl, pay),
-                (FieldTerms.existsTerm(field), id, 1, dl, pay))
-            }
-          }
-        }.toDF("term", "docId", "tf", "dl", "pay")
+    val src = docs.select(col("docId"), col("dl"), col(field).cast("string")).as[(Long, Int, String)]
+    generate(src, withPayload, translate) { case ((id, dl, v), out) =>
+      if (v != null) out.addSingles(id, dl, Iterator(FieldTerms.term(field, v)), field)
     }
   }
 
   /** One tf=1 posting per (doc, tier) for a numeric column: the exact
     * zero-padded term plus every tier term
-    * ([[FieldTerms.numericValueTerms]]). Same schema as [[postingsOf]].
+    * ([[FieldTerms.numericValueTerms]]) and the exists marker. Null or
+    * negative values emit nothing.
     */
-  def numericFieldPostingsOf(docs: DataFrame, field: String,
-      withPayload: Boolean = true,
+  def numericFieldPostingsOf(docs: DataFrame, field: String, withPayload: Boolean = true,
       translate: IndexBuilder.Translate = None): DataFrame = {
-    val withPos = cfg.storePositions && withPayload
     val src = docs.select(col("docId"), col("dl"), col(field).cast("long"))
       .as[(Long, Int, Option[Long])]
-    translate match {
-      case Some(bc) =>
-        src.mapPartitions { it =>
-          val m = bc.value
-          it.flatMap {
-            case (id, dl, Some(v)) if v >= 0 =>
-              val pay =
-                if (!withPayload) Array.emptyByteArray
-                else {
-                  val a = new PosAcc
-                  if (withPos) a.add(0) else a.n = 1
-                  a.payload(dl, withPos)
-                }
-              (FieldTerms.numericValueTerms(field, v).iterator ++
-                Iterator.single(FieldTerms.existsTerm(field)))
-                .map { t =>
-                  val r = IndexBuilder.resolved(m, t)
-                  (r(0), id, r(1), pay, r(2).toInt)
-                }
-            case _ => Iterator.empty
-          }
-        }.toDF("termId", "docId", "df", "pay", "fieldId")
-      case None =>
-        src.mapPartitions { it =>
-          it.flatMap {
-            case (id, dl, Some(v)) if v >= 0 =>
-              val pay =
-                if (!withPayload) Array.emptyByteArray
-                else {
-                  val a = new PosAcc
-                  if (withPos) a.add(0) else a.n = 1
-                  a.payload(dl, withPos)
-                }
-              (FieldTerms.numericValueTerms(field, v).iterator ++
-                Iterator.single(FieldTerms.existsTerm(field)))
-                .map(t => (t, id, 1, dl, pay))
-            case _ => Iterator.empty
-          }
-        }.toDF("term", "docId", "tf", "dl", "pay")
+    generate(src, withPayload, translate) {
+      case ((id, dl, Some(v)), out) if v >= 0 =>
+        out.addSingles(id, dl, FieldTerms.numericValueTerms(field, v).iterator, field)
+      case _ =>
     }
   }
 
   /** Analyzed postings of an ADDITIONAL text field ([[FieldTerms
-    * .textTerm]] namespace): same per-doc tf+positions map pass as the
-    * main text ([[postingsOf]]), but dl in the payload is the FIELD's
-    * token count — the per-field BM25 length norm (Lucene's per-field
-    * model). Null/empty values emit nothing (the doc is outside the
-    * field's docCount).
+    * .textTerm]] namespace): the main-text per-doc pass, but dl in the
+    * payload is the FIELD's token count — the per-field BM25 length norm
+    * (Lucene's per-field model) — and the exists marker marks docs with
+    * ≥ 1 token (the field's docCount, same rule as fieldstats). Null or
+    * empty values emit nothing.
     */
-  def textFieldPostingsOf(docs: DataFrame, field: String,
-      withPayload: Boolean = true,
+  def textFieldPostingsOf(docs: DataFrame, field: String, withPayload: Boolean = true,
       translate: IndexBuilder.Translate = None): DataFrame = {
-    val withPos = cfg.storePositions && withPayload
     val prefix = FieldTerms.textTerm(field, "")
-    val src = docs.select(col("docId"), col(field).cast("string"))
-      .as[(Long, String)]
-    translate match {
-      case Some(bc) =>
-        src.mapPartitions { it =>
-          val m = bc.value
-          val acc = new java.util.HashMap[String, PosAcc](32)
-          it.flatMap { case (id, v) =>
-            val toks = if (v == null) Array.empty[String] else Analyzer.tokenize(v)
-            if (toks.isEmpty) Iterator.empty
-            else {
-              acc.clear()
-              var i = 0
-              while (i < toks.length) {
-                val prev = acc.get(toks(i))
-                val a = if (prev == null) { val p = new PosAcc; acc.put(toks(i), p); p } else prev
-                if (withPos) a.add(i) else a.n += 1
-                i += 1
-              }
-              val fdl = toks.length
-              val out = new Array[(Long, Long, Long, Array[Byte], Int)](acc.size + 1)
-              val entries = acc.entrySet().iterator()
-              var j = 0
-              while (entries.hasNext) {
-                val e = entries.next()
-                val a = e.getValue
-                val r = IndexBuilder.resolved(m, prefix + e.getKey)
-                out(j) = (r(0), id, r(1),
-                  if (withPayload) a.payload(fdl, withPos) else Array.emptyByteArray,
-                  r(2).toInt)
-                j += 1
-              }
-              val epay =
-                if (!withPayload) Array.emptyByteArray
-                else {
-                  val ea = new PosAcc
-                  if (withPos) ea.add(0) else ea.n = 1
-                  ea.payload(fdl, withPos)
-                }
-              val er = IndexBuilder.resolved(m, FieldTerms.existsTerm(field))
-              out(j) = (er(0), id, er(1), epay, er(2).toInt)
-              out.iterator
-            }
-          }
-        }.toDF("termId", "docId", "df", "pay", "fieldId")
-      case None =>
-        src.mapPartitions { it =>
-          val acc = new java.util.HashMap[String, PosAcc](32)
-          it.flatMap { case (id, v) =>
-            val toks = if (v == null) Array.empty[String] else Analyzer.tokenize(v)
-            if (toks.isEmpty) Iterator.empty
-            else {
-              acc.clear()
-              var i = 0
-              while (i < toks.length) {
-                val prev = acc.get(toks(i))
-                val a = if (prev == null) { val p = new PosAcc; acc.put(toks(i), p); p } else prev
-                if (withPos) a.add(i) else a.n += 1
-                i += 1
-              }
-              val fdl = toks.length
-              // +1: the exists marker (≥ 1 token ⇔ the doc is in the
-              // field's docCount — same membership rule as fieldstats)
-              val out = new Array[(String, Long, Int, Int, Array[Byte])](acc.size + 1)
-              val entries = acc.entrySet().iterator()
-              var j = 0
-              while (entries.hasNext) {
-                val e = entries.next()
-                val a = e.getValue
-                out(j) = (prefix + e.getKey, id, a.n, fdl,
-                  if (withPayload) a.payload(fdl, withPos) else Array.emptyByteArray)
-                j += 1
-              }
-              val epay =
-                if (!withPayload) Array.emptyByteArray
-                else {
-                  val ea = new PosAcc
-                  if (withPos) ea.add(0) else ea.n = 1
-                  ea.payload(fdl, withPos)
-                }
-              out(j) = (FieldTerms.existsTerm(field), id, 1, fdl, epay)
-              out.iterator
-            }
-          }
-        }.toDF("term", "docId", "tf", "dl", "pay")
+    val src = docs.select(col("docId"), col(field).cast("string")).as[(Long, String)]
+    generate(src, withPayload, translate, accSize = 32) { case ((id, v), out) =>
+      val toks = if (v == null) Array.empty[String] else Analyzer.tokenize(v)
+      if (toks.nonEmpty) {
+        out.addTokens(id, toks, prefix, toks.length)
+        out.addSingles(id, toks.length, Iterator.empty, field)
+      }
     }
   }
 
-  /** Text postings plus any configured fielded keyword postings.
-    * `withPayload = false` skips building the packed per-posting payload
-    * (varint tf/dl + position gaps) — for consumers that only need the
-    * (term, docId, tf, dl) columns (the dict0 aggregation): the payload
-    * is produced inside typed closures, so Catalyst cannot column-prune
-    * it away, and at ~40 M postings/M-turns the dead encode was a
-    * measured allocation hot spot (round-9).
+  /** Text postings plus every configured field kind's postings, unioned
+    * into one stream for the dict0 and block phases.
     */
   def allPostingsOf(docs: DataFrame, withPayload: Boolean = true,
-      translate: IndexBuilder.Translate = None): DataFrame = {
-    val withFields = cfg.fieldCols.foldLeft(postingsOf(docs, withPayload, translate))(
-      (acc, f) => acc.unionByName(fieldPostingsOf(docs, f, withPayload, translate)))
-    val withNumeric = cfg.numericFieldCols.foldLeft(withFields)(
-      (acc, f) => acc.unionByName(numericFieldPostingsOf(docs, f, withPayload, translate)))
-    cfg.textFieldCols.foldLeft(withNumeric)(
-      (acc, f) => acc.unionByName(textFieldPostingsOf(docs, f, withPayload, translate)))
-  }
+      translate: IndexBuilder.Translate = None): DataFrame =
+    (cfg.fieldCols.map(fieldPostingsOf(docs, _, withPayload, translate)) ++
+      cfg.numericFieldCols.map(numericFieldPostingsOf(docs, _, withPayload, translate)) ++
+      cfg.textFieldCols.map(textFieldPostingsOf(docs, _, withPayload, translate)))
+      .foldLeft(postingsOf(docs, withPayload, translate))(_ unionByName _)
 
   /** Direct per-term df/cf (single hash agg — partial+final via Catalyst). */
   def dictDirect(postings: DataFrame): DataFrame =
@@ -846,18 +647,26 @@ class IndexBuilder(
     // marker-bearing (the silent-inversion hole the flag exists to
     // close).
     if (!resume || allManifests.isEmpty) IndexFormat.write(fs, indexDir)
-    def phase[T](cell: String)(body: => BuildManifest): Unit =
-      if (resume && isDone(cell)) skipped += cell
+    // One unit of work writing `cells` (skipped when all are done): its
+    // jobs carry the label `graft build: <label>` (guide §1.5 —
+    // thread-local, cleared even when the body throws), and the body
+    // returns each cell's manifest with its extra keys; the unit's wall
+    // time is split evenly over its cells.
+    def phases(cells: Seq[String], label: String)(
+        body: => Seq[(BuildManifest, Seq[(String, Long)])]): Unit =
+      if (resume && cells.forall(isDone)) skipped ++= cells
       else {
         val t0 = System.nanoTime()
-        // label the cell's jobs (guide §1.5) — thread-local, cleared after
-        spark.sparkContext.setJobDescription(s"graft build: $cell")
+        spark.sparkContext.setJobDescription(s"graft build: $label")
         try {
-          val m = body
-          writeManifest(m.copy(wallSec = (System.nanoTime() - t0) / 1e9))
-          built += cell
+          val ms = body
+          val wall = (System.nanoTime() - t0) / 1e9 / ms.size
+          for ((m, extra) <- ms) writeManifest(m.copy(wallSec = wall), extra)
+          built ++= cells
         } finally spark.sparkContext.setJobDescription(null)
       }
+    def phase(cell: String)(body: => BuildManifest): Unit =
+      phases(Seq(cell), cell)(Seq(body -> Nil))
 
     // Phase A — doc store + corpus stats. Stats (n, avgdl, max docId)
     // ride the write job itself via the Observation API — no second
@@ -944,26 +753,6 @@ class IndexBuilder(
       (ns, ads)
     }
 
-    // Phase B0 — the posting stream. With per-doc tf folded into the
-    // tokenize pass (postingsOf), producing postings is one narrow
-    // codegen'd scan (~1-2 s/M turns measured); CACHING the ~50 rows/turn
-    // stream costs more memory traffic than recomputing it, so by default
-    // the two consumers (dict0, block encode) each re-derive it from the
-    // columnar doc store. materializePostings=true instead checkpoints
-    // the stream to parquet as its own resume cell — right when the
-    // corpus scan itself is the dominant cost (e.g. remote storage).
-    val withBucket = allPostingsOf(docs)
-      .withColumn("bucket", least(floor(col("docId") / lit(bucketWidth)),
-        lit(cfg.numBuckets - 1)).cast("int"))
-    val postings0 =
-      if (cfg.materializePostings) {
-        phase("postings") {
-          withBucket.write.partitionBy("bucket").mode(SaveMode.Overwrite).parquet(postings0Path)
-          BuildManifest("postings", -1, 0, idBound, snapshotId, 0, 0, "done", 0)
-        }
-        spark.read.parquet(postings0Path)
-      } else withBucket
-
     // Phase B — pre-finalize dictionary (global df/cf) via salted merge,
     // plus termId assignment (dictionary encoding). Every later
     // per-posting shuffle/sort/storage carries the 8-byte termId instead
@@ -973,7 +762,11 @@ class IndexBuilder(
     // is all blocks need), assigned in the same codegen pass as the
     // aggregation, no extra job, no single-task stage; they are
     // materialized exactly once (this parquet write) so re-execution
-    // nondeterminism cannot leak.
+    // nondeterminism cannot leak. The posting stream is NOT cached: the
+    // two consumers (this pass, block encode) each re-derive it from the
+    // columnar doc store — caching ~50 rows/turn costs more memory
+    // traffic than the one narrow tokenize scan (~1-2 s/M turns) — and
+    // this pass re-derives it payload-free.
     // fieldId of a term (0 = main text / keyword namespaces, i+1 = the
     // i-th textFieldCol): derived from the term string ONCE here, so the
     // block shuffle carries a run-constant tiny int instead of re-parsing
@@ -983,18 +776,10 @@ class IndexBuilder(
       case (acc, (f, i)) =>
         when(col("term").startsWith(lit(FieldTerms.textTerm(f, ""))), lit(i + 1)).otherwise(acc)
     }
-    // dict0 only consumes (term, docId, tf): when the postings are NOT
-    // materialized to parquet (the default — each consumer re-derives
-    // the stream), feed it a payload-free re-derivation so the dict
-    // pass skips the packed-payload encode entirely (the payload is
-    // built inside a typed closure — column pruning can't remove it)
-    val dictSource =
-      if (cfg.materializePostings) postings0
-      else allPostingsOf(docs, withPayload = false)
-    phase("dict0") {
+    phases(Seq("dict0"), "dict0") {
       val numShards = cfg.numShards
       val obs = org.apache.spark.sql.Observation()
-      val dict0 = dictSalted(dictSource, cfg.salt)
+      dictSalted(allPostingsOf(docs, withPayload = false), cfg.salt)
         .as[(String, Long, Long)]
         .map { case (t, df, cf) => (t, GraftHash.shardOf(t, numShards), df, cf) }
         .toDF("term", "shard", "df", "cf")
@@ -1008,48 +793,81 @@ class IndexBuilder(
         .withColumn("termId",
           monotonically_increasing_id() * lit(numShards.toLong) + col("shard"))
         .withColumn("fieldId", fieldIdExpr)
-        // `tidp`: marker that termId is shard-packed — a resume over a
-        // pre-packing dict0 (column absent) keeps the legacy wide-row
-        // block shuffle (termId % numShards would be garbage there)
+        // `tidp`: marker that termId is shard-packed (see the block
+        // phase's format check)
         .withColumn("tidp", lit(true))
         .select(col("term"), col("termId"), col("shard"), col("df"), col("cf"),
           col("fieldId"), col("tidp"))
-        // vocab + total postings ride the write job (Observation) — the
-        // block phase needs Σdf for its hot-term threshold, and reading
-        // it back from the manifest costs zero jobs on resume too
-        .observe(obs, count(lit(1)).as("vocab"), coalesce(sum(col("df")), lit(0L)).as("p"))
-      dict0.write.mode(SaveMode.Overwrite).parquet(dict0Path)
-      val totalPostings = obs.get("p").asInstanceOf[Long]
+        // Σdf (the block phase's hot-term threshold), the vocabulary and
+        // Σ term bytes (the translate gate) ride the write job and the
+        // manifest — zero extra jobs, on resume too
+        .observe(obs, count(lit(1)).as("vocab"), coalesce(sum(col("df")), lit(0L)).as("p"),
+          coalesce(sum(octet_length(col("term"))), lit(0L)).as("tb"))
+        .write.mode(SaveMode.Overwrite).parquet(dict0Path)
+      val row = obs.get
       // dict0 cell: postingsEmitted = Σdf (the corpus posting count);
-      // vocab is recorded by the finalize cell
-      BuildManifest("dict0", -1, 0, n, snapshotId, totalPostings, 0, "done", 0)
+      // vocab is recorded again by the finalize cell
+      Seq(BuildManifest("dict0", -1, 0, n, snapshotId, row("p").asInstanceOf[Long], 0, "done", 0) ->
+        Seq("vocab" -> row("vocab").asInstanceOf[Long], "termBytes" -> row("tb").asInstanceOf[Long]))
     }
-    val dict0 = {
-      val d = spark.read.parquet(dict0Path)
-      // resume over a dict0 cell written by a pre-fieldId build
-      if (d.columns.contains("fieldId")) d else d.withColumn("fieldId", fieldIdExpr)
-    }
-    val totalPostings = readManifest("dict0").map(_.postingsEmitted).getOrElse(0L)
+    val dict0 = spark.read.parquet(dict0Path)
+    val dict0Cell = manifestProps("dict0")
+    val totalPostings = dict0Cell.get("postingsEmitted").fold(0L)(_.toLong)
 
-    // Phase C — compressed blocks per bucket (contiguous docId range).
-    val numShards = cfg.numShards
+    // Phase C — compressed blocks of ALL buckets in ONE job: a single
+    // closed-form shuffle on (bucket, term, docId) and a single
+    // partitioned write. Each bucket keeps its manifest cell, but the
+    // phase resumes all-buckets-or-none (at 10^12 turns run several
+    // builds over docId sub-ranges).
     val blockSize = cfg.blockSize
     val bucketCells = (0 until cfg.numBuckets).map(b => s"bucket=$b")
-    if (cfg.fusedBlocks) {
-      if (resume && bucketCells.forall(isDone)) skipped ++= bucketCells
-      else {
-        val t0 = System.nanoTime()
-        spark.sparkContext.setJobDescription("graft build: blocks (fused)")
-        // Shuffle schema is deliberately minimal: (termId, shard, docId,
-        // df) + the packed payload binary (varint tf + dl + position
-        // gaps, built in the tokenize pass). No term string
-        // (dict-encoded), no per-posting score (recomputed inside the
-        // encoder from the unpacked tf/dl and df — df is run-constant per
-        // term, so it lz4-compresses to ~nothing in the sorted shuffle,
-        // unlike the high-entropy double it replaces), no fixed-width
-        // tf/dl fields (a posting's tf and dl are each ~1 varint byte in
-        // the payload vs 8-byte UnsafeRow slots).
-        //
+    phases(bucketCells, "blocks") {
+      // A dict0 from an older writer (no shard-packed termIds, no
+      // fieldId, or no gate statistics in its cell) cannot feed this
+      // phase: fail before writing anything.
+      val gateStats = for (v <- dict0Cell.get("vocab"); b <- dict0Cell.get("termBytes"))
+        yield (v.toLong, b.toLong)
+      if (gateStats.isEmpty || !Seq("tidp", "fieldId").forall(dict0.columns.contains))
+        throw new IllegalStateException(s"dict0 at $dict0Path was written by an older " +
+          "build format (no shard-packed termIds, fieldId or gate statistics) — rebuild " +
+          "without resume")
+      val (vocab, termBytes) = gateStats.get
+      // term→(termId, df, fieldId) TRANSLATE map when it fits the heap
+      // budget (IndexBuilder.translateFits): the posting generators then
+      // resolve ids inside the tokenize closure and the string join
+      // disappears from the plan (its probe — UnsafeRow key encode +
+      // BytesToBytesMap lookup + arrayEquals per posting — was ~24% of
+      // build executor CPU, round-9 JFR). Over the budget, the join
+      // (AQE: broadcast or shuffle by size).
+      val translate: IndexBuilder.Translate =
+        if (!IndexBuilder.translateFits(vocab, termBytes, translateBudget)) None
+        else {
+          val rows = dict0.select(col("term"), col("termId"), col("df"), col("fieldId"))
+            .as[(String, Long, Long, Int)].collect()
+          val m = new java.util.HashMap[String, Array[Long]](rows.length * 2)
+          rows.foreach { case (t, tid, df, fid) => m.put(t, Array(tid, df, fid.toLong)) }
+          Some(spark.sparkContext.broadcast(m))
+        }
+      try {
+        // Shuffle schema is deliberately minimal: (termId, docId, df) +
+        // the packed payload binary (varint tf + dl + position gaps,
+        // built in the tokenize pass). No term string (dict-encoded), no
+        // shard (packed into termId, re-derived after the exchange), no
+        // per-posting score (recomputed inside the encoder from the
+        // unpacked tf/dl and df — df is run-constant per term, so it
+        // lz4-compresses to ~nothing in the sorted shuffle, unlike the
+        // high-entropy double it replaces), no fixed-width tf/dl fields
+        // (each ~1 varint byte in the payload vs 8-byte UnsafeRow slots).
+        // fieldId rides the shuffle ONLY when extra text fields exist: a
+        // plain build re-derives the constant 0 after the exchange, so
+        // its shuffle bytes/turn stay exactly the round-4 shape.
+        val hasTextFields = cfg.textFieldCols.nonEmpty
+        val fieldIdCol = if (hasTextFields) Seq(col("fieldId")) else Nil
+        val scored = (translate match {
+          case Some(_) => allPostingsOf(docs, translate = translate)
+          case None => allPostingsOf(docs).join(
+            dict0.select(col("term"), col("termId"), col("df"), col("fieldId")), Seq("term"))
+        }).select(Seq(col("termId"), col("docId"), col("df"), col("pay")) ++ fieldIdCol: _*)
         // Partition routing is CLOSED-FORM and df-AWARE — no
         // repartitionByRange sampling pass (which re-executed the whole
         // posting stream):
@@ -1071,14 +889,12 @@ class IndexBuilder(
         // partition must stay ~targetSortBytes regardless of parallelism
         // (round-2 finding: partitions = cores made high-core runs spill
         // — ~64 B/posting in the sorter — while low-core runs of the same
-        // corpus fit, silently skewing the N-vs-4N comparison; at 10^12
-        // turns "partitions = cores" would be off by orders of magnitude
-        // anyway). cores only set the FLOOR so all slots stay busy.
-        // clamped to the inverse-key-table cap (DirectPartition.MaxParts);
-        // past it, partitions exceed targetSortBytes and the external
-        // sorter spills — graceful, and 64k × 128 MB already covers ~10^11
-        // postings per build (larger corpora run as several fused builds
-        // over docId sub-ranges, per the fusedBlocks doc above)
+        // corpus fit, silently skewing the N-vs-4N comparison). cores only
+        // set the FLOOR so all slots stay busy. Clamped to the
+        // inverse-key-table cap (DirectPartition.MaxParts); past it,
+        // partitions exceed targetSortBytes and the external sorter
+        // spills — graceful, and 64k × 128 MB already covers ~10^11
+        // postings per build.
         val sortBytesPerPosting = 64L
         val targetSortBytes = 128L << 20
         val neededParts = math.min(DirectPartition.MaxParts.toLong,
@@ -1093,51 +909,7 @@ class IndexBuilder(
         // bucket never rides the shuffled rows: the pid expression derives
         // it from docId (closed form), every resulting partition is
         // single-bucket, and the encoder re-derives it from
-        // docId/bucketWidth. The routing key is a bare expression too —
-        // nothing but (termId, shard, docId, df, pay) enters the
-        // shuffle/sort.
-        // fieldId rides the shuffle ONLY when extra text fields exist:
-        // a plain build re-derives the constant 0 AFTER the exchange
-        // (projected above the sort), so its shuffle bytes/turn stay
-        // exactly the round-4 shape (bench-tracked)
-        val hasTextFields = cfg.textFieldCols.nonEmpty
-        // shard-packed termIds (dict0 `tidp` marker): the shuffle rows
-        // drop the shard slot entirely — it is re-derived from termId
-        // AFTER the exchange (one projection over the sorted stream).
-        // A resume over a pre-packing dict0 keeps the legacy wide row.
-        val packedTid = dict0.columns.contains("tidp")
-        // term→(termId, df, fieldId) TRANSLATE map (round-9, see
-        // IndexConfig.maxTranslateVocab): when the vocabulary fits, the
-        // posting generators resolve ids inside the tokenize closure and
-        // the string join disappears from the plan (its probe was ~24%
-        // of build executor CPU). Applies only to the default re-derive
-        // mode over a shard-packed dict0; materialized postings and
-        // legacy-resume keep the join (over-gate vocabularies fall back
-        // to it too — AQE sizes that join as before).
-        val translate: IndexBuilder.Translate =
-          if (!packedTid || cfg.materializePostings || cfg.maxTranslateVocab <= 0) None
-          else if (dict0.count() > cfg.maxTranslateVocab) None
-          else {
-            val rows = dict0.select(col("term"), col("termId"), col("df"), col("fieldId"))
-              .as[(String, Long, Long, Int)].collect()
-            val m = new java.util.HashMap[String, Array[Long]](rows.length * 2)
-            rows.foreach { case (t, tid, df, fid) => m.put(t, Array(tid, df, fid.toLong)) }
-            Some(spark.sparkContext.broadcast(m))
-          }
-        val scored = translate match {
-          case Some(_) =>
-            allPostingsOf(docs, withPayload = true, translate = translate)
-              .select(Seq(col("termId"), col("docId"), col("df"), col("pay")) ++
-                (if (hasTextFields) Seq(col("fieldId")) else Nil): _*)
-          case None => postings0
-            .join(dict0.select(Seq(col("term"), col("termId")) ++
-              (if (packedTid) Nil else Seq(col("shard"))) ++ Seq(col("df")) ++
-              (if (hasTextFields) Seq(col("fieldId")) else Nil): _*), Seq("term"))
-            .select(Seq(col("termId")) ++
-              (if (packedTid) Nil else Seq(col("shard"))) ++
-              Seq(col("docId"), col("df"), col("pay")) ++
-              (if (hasTextFields) Seq(col("fieldId")) else Nil): _*)
-        }
+        // docId/bucketWidth.
         val bucketExpr = least(floor(col("docId") / lit(bucketWidth)), lit(cfg.numBuckets - 1L))
         val slicePid = least(
           floor((col("docId") - bucketExpr * lit(bucketWidth)) / lit(subWidth)),
@@ -1149,19 +921,15 @@ class IndexBuilder(
         val bw = bucketWidth
         val fNs = fieldNs
         val fAds = fieldAvgdls
-        val sorted = DirectPartition.byComputedPid(scored, pid, numParts)
+        // shard re-attached post-exchange (a Project above the sort — row
+        // order within partitions is preserved); encoder tuple order is
+        // (termId, shard, docId, df, pay, fieldId)
+        val shuffled = DirectPartition.byComputedPid(scored, pid, numParts)
           .sortWithinPartitions(col("termId"), col("docId"))
-        // re-attach shard post-exchange for packed termIds (a Project
-        // above the sort — row order within partitions is preserved);
-        // encoder tuple order is (termId, shard, docId, df, pay[, fieldId])
-        val shuffled =
-          if (!packedTid) sorted
-          else sorted.select(Seq(col("termId"),
+          .select(Seq(col("termId"),
             pmod(col("termId"), lit(cfg.numShards.toLong)).cast("int").as("shard"),
-            col("docId"), col("df"), col("pay")) ++
-            (if (hasTextFields) Seq(col("fieldId")) else Nil): _*)
-        val blocks = (if (hasTextFields) shuffled
-          else shuffled.withColumn("fieldId", lit(0)))
+            col("docId"), col("df"), col("pay")) ++ fieldIdCol: _*)
+        val blocks = (if (hasTextFields) shuffled else shuffled.withColumn("fieldId", lit(0)))
           .as[(Long, Int, Long, Long, Array[Byte], Int)]
           .mapPartitions(rows => BlockEncoder.encodeFused(rows, blockSize, fNs, fAds,
             bw, nBuckets))
@@ -1169,84 +937,35 @@ class IndexBuilder(
         // parquet write, carrying a precomputed per-block byte count
         // (`nbytes`), and the term partials aggregate from a
         // COLUMN-PRUNED read of the just-written store (bucket/termId/
-        // maxScore/count/nbytes — a few MB) instead of a MEMORY_AND_DISK
-        // persist of the whole encoded index (guide §5: cache only when
-        // recompute is dearer — here "recompute" is a metadata-column
-        // scan; the persist was a full extra copy of every payload byte
-        // through the block manager inside the timed build). Readers
-        // bind block columns by name, so the extra column is invisible
-        // to them; compaction re-selects named columns and drops it.
+        // maxScore/count/nbytes — a few MB) instead of a persist of the
+        // whole encoded index (guide §5). Readers bind block columns by
+        // name, so the extra column is invisible to them; compaction
+        // re-selects named columns and drops it.
         blocks
           .withColumn("nbytes", length(col("docs")) + length(col("tfs"))
             + length(col("dls")) + length(col("poss")))
           .write.partitionBy("bucket", "shard")
           .mode(SaveMode.Overwrite).parquet(blocksPath)
-        spark.read.parquet(blocksPath)
-          .groupBy(col("bucket"), col("termId"))
-          .agg(max(col("maxScore")).as("maxScore"), sum(col("count")).as("dfb"),
-            sum(col("nbytes")).as("bytesb"))
-          .write.partitionBy("bucket").mode(SaveMode.Overwrite).parquet(partialsPath)
-        translate.foreach(_.unpersist(false))
-        // per-bucket manifest metrics: one tiny groupBy over the just-
-        // written partials (round-2 review: an Observation with
-        // 2×numBuckets conditional sums is an 8192-expression
-        // CollectMetrics at the sized() bucket cap — evaluated per row)
-        val perBucket = spark.read.parquet(partialsPath)
-          .groupBy(col("bucket"))
-          .agg(coalesce(sum(col("dfb")), lit(0L)).as("p"),
-            coalesce(sum(col("bytesb")), lit(0L)).as("y"))
-          .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
-        val wall = (System.nanoTime() - t0) / 1e9
-        for (b <- 0 until cfg.numBuckets) {
-          val lo = b.toLong * bucketWidth
-          val hi = math.min(idBound, lo + bucketWidth)
-          val (p, y) = perBucket.getOrElse(b, (0L, 0L))
-          writeManifest(BuildManifest(s"bucket=$b", b, lo, hi, snapshotId,
-            p, y, "done", wall / cfg.numBuckets))
-          built += s"bucket=$b"
-        }
-        spark.sparkContext.setJobDescription(null)
-      }
-    } else for (b <- 0 until cfg.numBuckets) {
-      val lo = b.toLong * bucketWidth
-      val hi = math.min(idBound, lo + bucketWidth)
-      phase(s"bucket=$b") {
-        val scored = postings0.filter(col("bucket") === lit(b))
-          .join(dict0.select(col("term"), col("termId"), col("shard"), col("df"),
-            col("fieldId")), Seq("term"))
-          .select(col("termId"), col("shard"), col("docId"), col("df"), col("pay"),
-            col("fieldId"))
-        // same sample-free df-aware routing + sort-memory partition
-        // sizing as the fused path (per-bucket share of the postings)
-        val perBucketPostings = math.max(1L, totalPostings / cfg.numBuckets)
-        val neededParts = math.min(DirectPartition.MaxParts.toLong,
-          1L + perBucketPostings * 64L / (128L << 20)).toInt
-        val nParts = math.min(DirectPartition.MaxParts, math.max(cfg.partitions, neededParts))
-        val hotDf = math.max(nParts.toLong * blockSize,
-          totalPostings / (4L * math.max(1, nParts)))
-        val subWidth = math.max(1L, (bucketWidth + nParts - 1) / nParts)
-        val pid = when(col("df") >= lit(hotDf),
-            least(floor((col("docId") - lit(lo)) / lit(subWidth)), lit(nParts - 1L)))
-          .otherwise(pmod(hash(col("termId")), lit(nParts)))
-        val fNs = fieldNs
-        val fAds = fieldAvgdls
-        val blocks = DirectPartition.byComputedPid(scored, pid, nParts)
-          .sortWithinPartitions(col("termId"), col("docId"))
-          .as[(Long, Int, Long, Long, Array[Byte], Int)]
-          .mapPartitions(rows => BlockEncoder.encode(rows, b, blockSize, fNs, fAds))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        blocks.drop("bucket").write.partitionBy("shard")
-          .mode(SaveMode.Overwrite).parquet(s"$blocksPath/bucket=$b")
-        // per-bucket term partials straight off the cached blocks (no
-        // second pass over the postings): exact max block score + df/bytes
-        blocks.groupBy(col("termId"))
-          .agg(max(col("maxScore")).as("maxScore"), sum(col("count")).as("dfb"),
-            sum(length(col("docs")) + length(col("tfs")) + length(col("dls")) + length(col("poss"))).as("bytesb"))
-          .write.mode(SaveMode.Overwrite).parquet(s"$partialsPath/bucket=$b")
-        blocks.unpersist(blocking = false)
-        val mrow = spark.read.parquet(s"$partialsPath/bucket=$b")
-          .agg(coalesce(sum(col("dfb")), lit(0L)), coalesce(sum(col("bytesb")), lit(0L))).head()
-        BuildManifest(s"bucket=$b", b, lo, hi, snapshotId, mrow.getLong(0), mrow.getLong(1), "done", 0)
+      } finally translate.foreach(_.unpersist(false))
+      spark.read.parquet(blocksPath)
+        .groupBy(col("bucket"), col("termId"))
+        .agg(max(col("maxScore")).as("maxScore"), sum(col("count")).as("dfb"),
+          sum(col("nbytes")).as("bytesb"))
+        .write.partitionBy("bucket").mode(SaveMode.Overwrite).parquet(partialsPath)
+      // per-bucket manifest metrics: one tiny groupBy over the just-
+      // written partials (round-2 review: an Observation with
+      // 2×numBuckets conditional sums is an 8192-expression
+      // CollectMetrics at the sized() bucket cap — evaluated per row)
+      val perBucket = spark.read.parquet(partialsPath)
+        .groupBy(col("bucket"))
+        .agg(coalesce(sum(col("dfb")), lit(0L)).as("p"),
+          coalesce(sum(col("bytesb")), lit(0L)).as("y"))
+        .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
+      for (b <- 0 until cfg.numBuckets) yield {
+        val lo = b.toLong * bucketWidth
+        val (p, y) = perBucket.getOrElse(b, (0L, 0L))
+        BuildManifest(s"bucket=$b", b, lo, math.min(idBound, lo + bucketWidth), snapshotId,
+          p, y, "done", 0) -> Nil
       }
     }
 
@@ -1294,7 +1013,7 @@ class IndexBuilder(
 
 object IndexBuilder {
   /** Broadcast dict0 translate map: term → [termId, df, fieldId]
-    * (see IndexConfig.maxTranslateVocab). None = use the join path.
+    * (see [[translateFits]]). None = use the join path.
     */
   type Translate =
     Option[org.apache.spark.broadcast.Broadcast[java.util.HashMap[String, Array[Long]]]]
@@ -1311,6 +1030,28 @@ object IndexBuilder {
         "diverged from the dictionary lineage (rebuild without resume)")
     v
   }
+
+  /** Heap bytes per translate-map entry besides its term's bytes:
+    * `HashMap.Node` + `String` + `byte[]` header + the `long[3]` value +
+    * its table slot. Measured once on JDK 17 (compressed oops, compact
+    * strings) as the heap delta of maps with 10^5, 10^6 and 3·10^6
+    * entries: 122–125 B/entry.
+    */
+  val TranslateEntryBytes = 128L
+
+  /** The share of the smaller heap the translate map may take: 1/8
+    * leaves room for the collected rows it is built from, its
+    * serialized broadcast blocks and the tasks running beside it.
+    */
+  val TranslateHeapShare = 8L
+
+  /** The translate gate: does a map of `vocab` terms totalling
+    * `termBytes` UTF-8 bytes (both recorded in the dict0 cell) fit
+    * `budget` bytes? Estimated footprint = vocab · [[TranslateEntryBytes]]
+    * + termBytes.
+    */
+  def translateFits(vocab: Long, termBytes: Long, budget: Long): Boolean =
+    vocab * TranslateEntryBytes + termBytes <= budget
 }
 
 /** Reusable per-(doc, term) position accumulator for the tokenize pass:
@@ -1358,6 +1099,83 @@ private[index] final class PosAcc {
       }
     }
     a
+  }
+}
+
+private[index] object PosAcc {
+  /** The tf=1 posting at position 0: every keyword, numeric-tier and
+    * exists-marker posting.
+    */
+  def single(): PosAcc = { val a = new PosAcc; a.add(0); a }
+}
+
+/** The shared output step of [[IndexBuilder]]'s posting generators: a
+  * field kind's per-doc loop hands it the doc's postings and [[row]]
+  * turns each (term, tf, dl, payload) into the stream's row. One
+  * instance per partition; a doc's rows are buffered and drained before
+  * the next doc is read.
+  */
+private[index] abstract class PostingSink[R](withPayload: Boolean, withPos: Boolean,
+    accSize: Int) {
+  private val buf = new scala.collection.mutable.ArrayBuffer[R](64)
+  // per-doc term table, reused via clear()
+  private val acc = new java.util.HashMap[String, PosAcc](accSize)
+  private val one = PosAcc.single()
+
+  protected def row(term: String, docId: Long, tf: Int, dl: Int, pay: Array[Byte]): R
+
+  private def pay(a: PosAcc, dl: Int): Array[Byte] =
+    if (withPayload) a.payload(dl, withPos) else Array.emptyByteArray
+
+  /** One posting per distinct token of a doc (term = prefix + token),
+    * with its tf and, when stored, its positions.
+    */
+  def addTokens(docId: Long, toks: Array[String], prefix: String, dl: Int): Unit = {
+    acc.clear()
+    var i = 0
+    while (i < toks.length) {
+      val prev = acc.get(toks(i))
+      val a = if (prev == null) { val p = new PosAcc; acc.put(toks(i), p); p } else prev
+      if (withPos) a.add(i) else a.n += 1
+      i += 1
+    }
+    val entries = acc.entrySet().iterator()
+    while (entries.hasNext) {
+      val e = entries.next()
+      val term = if (prefix.isEmpty) e.getKey else prefix + e.getKey
+      buf += row(term, docId, e.getValue.n, dl, pay(e.getValue, dl))
+    }
+  }
+
+  /** tf=1 postings of `terms`, then `field`'s exists marker
+    * ([[FieldTerms.existsTerm]]), all sharing one payload.
+    */
+  def addSingles(docId: Long, dl: Int, terms: Iterator[String], field: String): Unit = {
+    val p = pay(one, dl)
+    terms.foreach(t => buf += row(t, docId, 1, dl, p))
+    buf += row(FieldTerms.existsTerm(field), docId, 1, dl, p)
+  }
+
+  def run[A](it: Iterator[A], loop: (A, PostingSink[_]) => Unit): Iterator[R] =
+    it.flatMap { a => buf.clear(); loop(a, this); buf }
+}
+
+/** String rows (term, docId, tf, dl, pay): the dict0 pass and the join. */
+private[index] final class StringSink(withPayload: Boolean, withPos: Boolean, accSize: Int)
+    extends PostingSink[(String, Long, Int, Int, Array[Byte])](withPayload, withPos, accSize) {
+  protected def row(term: String, docId: Long, tf: Int, dl: Int, pay: Array[Byte]) =
+    (term, docId, tf, dl, pay)
+}
+
+/** Resolved rows (termId, docId, df, pay, fieldId) through the broadcast
+  * translate map ([[IndexBuilder.resolved]]).
+  */
+private[index] final class TranslatedSink(m: java.util.HashMap[String, Array[Long]],
+    withPayload: Boolean, withPos: Boolean, accSize: Int)
+    extends PostingSink[(Long, Long, Long, Array[Byte], Int)](withPayload, withPos, accSize) {
+  protected def row(term: String, docId: Long, tf: Int, dl: Int, pay: Array[Byte]) = {
+    val r = IndexBuilder.resolved(m, term)
+    (r(0), docId, r(1), pay, r(2).toInt)
   }
 }
 

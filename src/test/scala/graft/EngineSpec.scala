@@ -444,36 +444,60 @@ class EngineSpec extends SparkSpec {
   }
 
   test("blocks-phase translate map ≡ join path: stores content-identical (round-9)") {
-    // one corpus, two builds: default (vocab under the gate ⇒ broadcast
-    // translate map resolves termId/df/fieldId inside the tokenize
-    // closure) vs maxTranslateVocab = 0 (the string join, also the
-    // over-gate fallback at 10^12-scale vocabularies). Every posting
-    // generator is exercised: main text + keyword (role) + numeric trie
-    // (turn_idx) + extra analyzed text (tool, incl. nulls). The two
-    // paths must yield the SAME posting rows into the same routing, so
-    // dict and decoded blocks must be content-identical.
+    // one corpus, two builds per positions setting: default (vocab under
+    // the gate ⇒ broadcast translate map resolves termId/df/fieldId
+    // inside the tokenize closure) vs a 0-byte translate budget (the
+    // string join, also the over-gate fallback at 10^12-scale
+    // vocabularies). Every posting generator is exercised: main text +
+    // keyword (role) + numeric trie (turn_idx) + extra analyzed text
+    // (tool, incl. nulls), with and without positions. The two paths
+    // must yield the SAME posting rows into the same routing, so dict
+    // and decoded blocks must be content-identical.
     val turns = DocIds.dedup(Transcripts.generate(spark, 150L))
     val docs = DocIds.assign(turns, 4)
-    val base = IndexConfig(numBuckets = 2, numShards = 8, blockSize = 32, partitions = 4,
-      fieldCols = Seq("role"), numericFieldCols = Seq("turn_idx"), textFieldCols = Seq("tool"))
-    val dirT = s"${TestSpark.tmpRoot}/index-translate"
-    val dirJ = s"${TestSpark.tmpRoot}/index-joinpath"
-    new IndexBuilder(spark, dirT, "snap-tr", base).build(docs)
-    new IndexBuilder(spark, dirJ, "snap-tr", base.copy(maxTranslateVocab = 0)).build(docs)
     def dictRows(d: String) = spark.read.parquet(s"$d/dict")
       .select("term", "termId", "shard", "df", "cf", "maxScore")
       .as[(String, Long, Int, Long, Long, Double)].collect().sortBy(_._1).toSeq
-    assert(dictRows(dirT) == dictRows(dirJ))
     def blockRows(d: String) = spark.read.parquet(s"$d/blocks")
       .as[graft.model.PostingBlock].collect()
       .sortBy(b => (b.termId, b.bucket, b.blockId))
       .map(b => (b.termId, b.shard, b.bucket, b.blockId, b.firstDocId, b.lastDocId,
         b.count, b.docs.toSeq, b.tfs.toSeq, b.dls.toSeq, b.poss.toSeq, b.maxTf, b.maxScore))
       .toSeq
-    assert(blockRows(dirT) == blockRows(dirJ))
-    val sT = new Searcher(spark, dirT, base.numShards)
-    val sJ = new Searcher(spark, dirJ, base.numShards)
-    assert(sT.search("the zanzibar", 10).toSeq == sJ.search("the zanzibar", 10).toSeq)
+    for (withPos <- Seq(true, false)) {
+      val base = IndexConfig(numBuckets = 2, numShards = 8, blockSize = 32, partitions = 4,
+        storePositions = withPos, fieldCols = Seq("role"), numericFieldCols = Seq("turn_idx"),
+        textFieldCols = Seq("tool"))
+      val dirT = s"${TestSpark.tmpRoot}/index-translate-$withPos"
+      val dirJ = s"${TestSpark.tmpRoot}/index-joinpath-$withPos"
+      new IndexBuilder(spark, dirT, "snap-tr", base).build(docs)
+      // a 0-byte translate budget: the block phase takes the join
+      new IndexBuilder(spark, dirJ, "snap-tr", base) {
+        override protected def translateBudget = 0L
+      }.build(docs)
+      assert(dictRows(dirT) == dictRows(dirJ), s"positions=$withPos")
+      val blocks = blockRows(dirT)
+      assert(blocks == blockRows(dirJ), s"positions=$withPos")
+      assert(blocks.exists(_._11.nonEmpty) == withPos, s"positions=$withPos")
+      val sT = new Searcher(spark, dirT, base.numShards)
+      val sJ = new Searcher(spark, dirJ, base.numShards)
+      assert(sT.search("the zanzibar", 10).toSeq == sJ.search("the zanzibar", 10).toSeq)
+    }
+  }
+
+  test("translate gate: the map's estimated footprint against the heap budget") {
+    import IndexBuilder.{TranslateEntryBytes, translateFits}
+    val (vocab, termBytes) = (1000L, 9000L)
+    val footprint = vocab * TranslateEntryBytes + termBytes
+    assert(translateFits(vocab, termBytes, footprint))
+    assert(!translateFits(vocab, termBytes, footprint - 1))
+    assert(!translateFits(vocab + 1, termBytes, footprint))
+    assert(translateFits(0L, 0L, 0L))
+    // local mode: the default budget is a share of this one JVM's heap
+    val budget = new IndexBuilder(spark, s"${TestSpark.tmpRoot}/unused", "s") {
+      def exposed = translateBudget
+    }.exposed
+    assert(budget > 0 && budget == Runtime.getRuntime.maxMemory / IndexBuilder.TranslateHeapShare)
   }
 
   test("salted dictionary ≡ direct dictionary") {
@@ -496,40 +520,83 @@ class EngineSpec extends SparkSpec {
     assert(deduped.count() == Transcripts.generate(spark, 200L).count())
   }
 
+  private def hfs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+
   test("resume skips done cells; a cleared cell is rebuilt identically") {
     val dir2 = s"${TestSpark.tmpRoot}/index-resume"
     val turns = DocIds.dedup(Transcripts.generate(spark, 120L))
     val docs = DocIds.assign(turns, 4)
-    val cfg2 = cfg.copy(numBuckets = 2, fusedBlocks = false) // per-bucket resume cells
-    val b1 = new IndexBuilder(spark, dir2, "snap-r1", cfg2)
-    val r1 = b1.build(docs)
+    val cfg2 = cfg.copy(numBuckets = 2)
+    val r1 = new IndexBuilder(spark, dir2, "snap-r1", cfg2).build(docs)
     assert(r1.cellsBuilt.nonEmpty && r1.cellsSkipped.isEmpty)
-    // semantic index identity: decoded postings (block layout may differ
-    // across runs — range-partition boundaries are sampled)
+    // semantic index identity: decoded postings
     def blockFingerprint() = spark.read.parquet(s"$dir2/blocks")
       .as[graft.model.PostingBlock].collect()
       .flatMap { b =>
         val d = graft.index.Codec.decodeBlock(b)
         d.docIds.indices.map(i => (b.termId, d.docIds(i), d.tfs(i), d.dls(i)))
       }
-      .sortBy(t => (t._1, t._2))
+      .sortBy(t => (t._1, t._2)).toSeq
     val blocksBefore = blockFingerprint()
 
     // full re-run: everything skipped
     val r2 = new IndexBuilder(spark, dir2, "snap-r1", cfg2).build(docs)
     assert(r2.cellsBuilt.isEmpty && r2.cellsSkipped.size == r1.cellsBuilt.size)
 
-    // clear one bucket cell → only that cell (still same snapshot) rebuilds
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir2/manifest/bucket-1.props"), false)
+    // clear one bucket cell → the block phase (all its bucket cells,
+    // same snapshot) rebuilds, with identical decoded postings
+    hfs.delete(new org.apache.hadoop.fs.Path(s"$dir2/manifest/bucket-1.props"), false)
     val r3 = new IndexBuilder(spark, dir2, "snap-r1", cfg2).build(docs)
-    assert(r3.cellsBuilt == Seq("bucket=1"), r3.toString)
-    val blocksAfter = blockFingerprint()
-    assert(blocksAfter.toSeq == blocksBefore.toSeq)
+    assert(r3.cellsBuilt == Seq("bucket=0", "bucket=1"), r3.toString)
+    assert(blockFingerprint() == blocksBefore)
 
     // changed snapshot id ⇒ nothing is trusted, full rebuild
     val r4 = new IndexBuilder(spark, dir2, "snap-r2", cfg2).build(docs, resume = true)
     assert(r4.cellsBuilt.size == r1.cellsBuilt.size)
+  }
+
+  test("resume over a dict0 from an older build format fails loudly, before any block write") {
+    val dir = s"${TestSpark.tmpRoot}/index-legacy-dict0"
+    val docs = DocIds.assign(DocIds.dedup(Transcripts.generate(spark, 60L)), 4)
+    val cfg2 = cfg.copy(numBuckets = 2)
+    new IndexBuilder(spark, dir, "snap-l", cfg2).build(docs)
+    // rewrite dict0 without the shard-packed-termId marker (a dict0
+    // written before round 9) and clear the bucket cells
+    spark.read.parquet(s"$dir/dict0").drop("tidp").write.parquet(s"$dir/dict0-legacy")
+    hfs.delete(new org.apache.hadoop.fs.Path(s"$dir/dict0"), true)
+    hfs.rename(new org.apache.hadoop.fs.Path(s"$dir/dict0-legacy"),
+      new org.apache.hadoop.fs.Path(s"$dir/dict0"))
+    for (b <- 0 until 2)
+      hfs.delete(new org.apache.hadoop.fs.Path(s"$dir/manifest/bucket-$b.props"), false)
+    def blockFiles() = {
+      val it = hfs.listFiles(new org.apache.hadoop.fs.Path(s"$dir/blocks"), true)
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+        .map(f => (f.getPath.toString, f.getModificationTime)).toSet
+    }
+    val before = blockFiles()
+    val e = intercept[IllegalStateException](
+      new IndexBuilder(spark, dir, "snap-l", cfg2).build(docs))
+    assert(e.getMessage.contains("rebuild without resume"), e.getMessage)
+    assert(blockFiles() == before)
+    assert(spark.sparkContext.getLocalProperty("spark.job.description") == null)
+  }
+
+  test("a failing block phase throws the lineage error and clears its job label") {
+    // dict0 from a small corpus, docs from a larger one (same snapshot,
+    // resumed): the larger corpus has terms the dict0 never saw, so the
+    // translate closure must throw its loud lineage error
+    val dir = s"${TestSpark.tmpRoot}/index-foreign-dict0"
+    val cfg2 = cfg.copy(numBuckets = 2)
+    val small = DocIds.assign(DocIds.dedup(Transcripts.generate(spark, 40L)), 4)
+    new IndexBuilder(spark, dir, "snap-x", cfg2).build(small)
+    for (c <- Seq("docs", "bucket-0", "bucket-1", "finalize"))
+      hfs.delete(new org.apache.hadoop.fs.Path(s"$dir/manifest/$c.props"), false)
+    val large = DocIds.assign(DocIds.dedup(Transcripts.generate(spark, 400L)), 4)
+    val e = intercept[Exception](new IndexBuilder(spark, dir, "snap-x", cfg2).build(large))
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toSeq
+    assert(msgs.exists(_.contains("absent from the dict0 translate map")), msgs.mkString("\n"))
+    assert(spark.sparkContext.getLocalProperty("spark.job.description") == null)
   }
 
   test("fused build resumes as a unit and dedupAndAssign ≡ dedup∘assign") {
