@@ -330,6 +330,26 @@ private[query] object Searcher {
     (tombRows.map(_._3), postRows)
   }
 
+  /** `bs` in docId order, checked docId-disjoint: one list over several
+    * segments and buckets is sound only when their docId ranges do not
+    * overlap (each batch is offset past the last, compaction shifts
+    * buckets). Throws naming `what` and the first overlapping pair.
+    */
+  def docIdOrdered(what: String, bs: Array[PB]): Array[PB] = {
+    val out = Wand.inBlockOrder(bs)
+    var i = 1
+    while (i < out.length) {
+      val (a, b) = (out(i - 1), out(i))
+      if (b.firstDocId <= a.lastDocId)
+        throw new IllegalStateException(s"overlapping docId ranges in the blocks of " +
+          s"'$what': [${a.firstDocId}, ${a.lastDocId}] (bucket ${a.bucket}) and " +
+          s"[${b.firstDocId}, ${b.lastDocId}] (bucket ${b.bucket}) — segments must be " +
+          "docId-disjoint")
+      i += 1
+    }
+    out
+  }
+
   /** A FRESH membership-only exclude cursor over the group's tombstone
     * blocks (cursors are mutable — one per consumer, the engine-wide
     * rule): the same nextGEQ block machinery as any posting list.
@@ -356,12 +376,14 @@ private[query] object Searcher {
     */
   case object LooseBounds extends Bounds
 
-  /** One (segment, bucket) group's WAND dispatch — THE shared execution
-    * body of every query path (distributed flatMapGroups closures AND
-    * the warm in-process path, kept in the companion so task closures
-    * never capture a Searcher), so the two are identical by
-    * construction. `byTerm` maps each query term present in the group
-    * to (its blocks, merged LWW df, dictionary maxScore); every role
+  /** One group's WAND dispatch — THE shared execution body of every
+    * query path (a (segment, bucket) group in the distributed
+    * flatMapGroups closures, the whole corpus on the warm in-process
+    * path; kept in the companion so task closures never capture a
+    * Searcher), so the two are identical by construction. `byTerm` maps
+    * each query term present in the group to (its docId-ordered blocks,
+    * merged LWW df, dictionary maxScore — read only under
+    * [[StoredBounds]]); every role
     * gets a FRESH iterator (cursors are mutable); `%field:` terms score
     * under their field's merged stats (per-field BM25). Returns empty
     * when the group is missing a required term (any scored term under
@@ -512,8 +534,10 @@ private[query] final case class ResolvedQuery(
   * (segment, bucket) group — groups are docId-disjoint, so this is
   * embarrassingly parallel, exactly ES's shard-then-merge topology; (5)
   * tiny driver merge of the per-group top-k. A warmed searcher whose
-  * index fits runs (4)-(5) in-process with zero Spark jobs; both paths
-  * share [[Searcher.runGroup]].
+  * index fits replaces (3)-(5) with ONE in-process WAND per query over
+  * term-keyed, docId-ordered lists that span every segment and bucket
+  * (zero Spark jobs, one top-k heap); both paths share
+  * [[Searcher.runGroup]].
   *
   * Statistics are GLOBAL and merge associatively: N = Σ nᵢ, Σdl = Σ
   * (nᵢ·avgdlᵢ) (dl sums are integer-valued and < 2^52, so the per-segment
@@ -586,17 +610,19 @@ class Searcher private[query] (
     graft.index.IndexFormat.requireExistsMarkers(hasExistsMarkers, indexDir, exists, missing)
 
   // driver-local in-process serving state, populated by warm() ONLY when
-  // the index fits the byte/term budgets (bounded collects); queries then
-  // run WAND in-process with zero Spark jobs, which removes the ~100 ms
-  // per-query job-scheduling floor. Large indexes keep the distributed
-  // path — identical results, same runGroup.
-  // (segIdx, bucket) → (termId → blocks, that group's tombstone blocks)
-  @volatile private var localSegs
-      : Map[(Int, Int), (Map[Long, Array[PostingBlock]], Array[PostingBlock])] = _
+  // the driver dictionary is loaded and the blocks fit the byte budget
+  // (bounded collects); queries then run WAND in-process with zero Spark
+  // jobs, which removes the ~100 ms per-query job-scheduling floor. Large
+  // indexes keep the distributed path — identical results, same runGroup.
+  // term → every segment's and bucket's blocks of the term, in docId order
+  @volatile private var localLists: Map[String, Array[PostingBlock]] = _
+  // every tombstone block, in docId order
+  @volatile private var localTomb: Array[PostingBlock] = _
   // term → per-segment dictionary rows (driver lookup, zero jobs)
   @volatile private var localDict: Map[String, Seq[(Int, TermStats)]] = _
-  // the warm-local blocks carry maxima rescored under the merged stats
-  @volatile private var localRescored: Boolean = false
+  // where the warm lists' WAND bounds come from: stored, rescored at
+  // warm time under the merged stats, or loose
+  @volatile private[query] var localBounds: Searcher.Bounds = LooseBounds
 
   /** Conservative encoded-bytes → driver-heap expansion factor for the
     * local serving index: each PostingBlock holds three byte arrays plus
@@ -611,11 +637,15 @@ class Searcher private[query] (
     * memory — beyond it the dictionaries stay a distributed lookup;
     * `maxLocalBlockBytes` additionally enables the in-process serving
     * path when the whole compressed index (blocks + tombstone blocks)
-    * fits (0 disables it). The budget is an estimated HEAP bound:
-    * encoded payload bytes × [[LocalHeapExpansion]], so the default
-    * admits ~256 MB of encoded postings (~1 GB resident). Without
-    * stored bounds (several segments or tombstones) the local blocks'
-    * maxima are rescored once under the merged stats.
+    * fits (0 disables it). That path needs the driver dictionary — it
+    * keys every segment's blocks by term — so without it the searcher
+    * stays distributed. The budget is an estimated HEAP bound: encoded
+    * payload bytes × [[LocalHeapExpansion]], so the default admits ~256
+    * MB of encoded postings (~1 GB resident). Without stored bounds
+    * (several segments or tombstones) the local blocks' maxima are
+    * rescored once under the merged stats. Throws when two segments'
+    * docId ranges overlap: one docId-ordered list per term needs
+    * docId-disjoint segments.
     */
   def warm(maxDriverDictTerms: Long = 5_000_000L,
       maxLocalBlockBytes: Long = 1L << 30): this.type = {
@@ -627,88 +657,80 @@ class Searcher private[query] (
       df.count()
     }
     segBlocks.foreach(pin)
-    if (segDicts.map(_.count()).sum <= maxDriverDictTerms)
-      localDict = segDicts.zipWithIndex.flatMap { case (d, i) =>
-        d.as[TermStats].collect().map(ts => (i, ts))
-      }.groupBy(_._2.term).view.mapValues(_.toSeq).toMap
+    // one bounded collect per segment: the driver never holds more than
+    // maxDriverDictTerms + 1 rows, and a segment past the cap is not read
+    var remaining = maxDriverDictTerms
+    val dictRows = segDicts.zipWithIndex.map { case (d, i) =>
+      if (remaining < 0) Array.empty[(Int, TermStats)]
+      else {
+        val rows = d.as[TermStats].limit(math.min(remaining + 1, Int.MaxValue).toInt).collect()
+        remaining -= rows.length
+        rows.map(ts => (i, ts))
+      }
+    }
+    if (remaining >= 0)
+      localDict = dictRows.flatten.groupBy(_._2.term).view.mapValues(_.toSeq).toMap
     else segDicts.foreach(pin)
-    if (maxLocalBlockBytes > 0) {
+    if (maxLocalBlockBytes > 0 && localDict != null) {
       val bytes = segBlocks.map(_.agg(coalesce(sum(
         (length(col("docs")) + length(col("tfs")) + length(col("dls"))
           + length(col("poss")) + lit(64)) * lit(LocalHeapExpansion)), lit(0L)))
         .head().getLong(0)).sum
       if (bytes <= maxLocalBlockBytes) {
-        // every list in cursor order once here, not once per query
-        val postByGroup: Map[(Int, Int), Map[Long, Array[PostingBlock]]] =
-          segBlocks.zipWithIndex.flatMap { case (b, i) =>
-            b.as[PostingBlock].collect().map(pb => (i, pb))
-          }.groupBy { case (i, pb) => (i, pb.bucket) }
-            .view.mapValues(xs => xs.map(_._2).toArray.groupBy(_.termId)
-              .view.mapValues(Wand.inBlockOrder).toMap).toMap
-        val tombByGroup: Map[(Int, Int), Array[PostingBlock]] =
-          tombBlocks.map(_.collect().groupBy(r => (r._1, r._2))
-            .view.mapValues(rs => Wand.inBlockOrder(rs.map(_._3))).toMap).getOrElse(Map.empty)
-        localSegs = (postByGroup.keySet ++ tombByGroup.keySet).map { gk =>
-          gk -> (postByGroup.getOrElse(gk, Map.empty[Long, Array[PostingBlock]]),
-            tombByGroup.getOrElse(gk, Array.empty[PostingBlock]))
-        }.toMap
+        val termOf: Map[(Int, Long), String] = localDict.iterator
+          .flatMap { case (t, xs) => xs.map { case (i, ts) => (i, ts.termId) -> t } }.toMap
+        localLists = segBlocks.zipWithIndex.flatMap { case (b, i) =>
+          b.as[PostingBlock].collect().map(pb => termOf((i, pb.termId)) -> pb)
+        }.groupMap(_._1)(_._2).map { case (t, bs) => t -> Searcher.docIdOrdered(t, bs.toArray) }
+        localTomb = Searcher.docIdOrdered("tombstones",
+          tombBlocks.map(_.collect().map(_._3)).getOrElse(Array.empty))
       }
     }
-    if (!storedBounds) rescoreLocalBounds()
+    if (storedBounds) localBounds = StoredBounds else rescoreLocalBounds()
     this
   }
 
-  /** One decode pass over the collected warm-local blocks re-deriving
-    * each block's maxScore EXACTLY under the merged LWW statistics
-    * (global or per-field) — the warm path then prunes as tightly as a
-    * compacted index, instead of the maxTf/dl=0 fallback bounds that
-    * make cross-segment WAND decode more blocks. Requires the driver
-    * dictionary and (under tombstones) the bounded removed-df cache;
-    * skipped otherwise — results are identical either way, only pruning
-    * differs. The rescored bound ranges over tombstoned postings too,
-    * which only loosens it — still sound.
+  /** One decode pass over the warm term lists re-deriving each block's
+    * maxScore EXACTLY under the merged LWW statistics (global or
+    * per-field) — the warm path then prunes as tightly as a compacted
+    * index, instead of the maxTf/dl=0 fallback bounds that make
+    * cross-segment WAND decode more blocks. Requires (under tombstones)
+    * the bounded removed-df cache; skipped otherwise — results are
+    * identical either way, only pruning differs. The rescored bound
+    * ranges over tombstoned postings too, which only loosens it — still
+    * sound.
     */
   private def rescoreLocalBounds(): Unit = {
-    if (localSegs == null || localDict == null) return
+    if (localLists == null) return
     if (hasTombstones && removedDfSmall.isEmpty) return
     val rm = removedDfSmall.getOrElse(Map.empty)
-    val mergedDf: Map[String, Long] = localDict.map { case (t, xs) =>
-      t -> (xs.map(_._2.df).sum - rm.getOrElse(t, 0L))
-    }.filter(_._2 > 0L)
-    val tidToTerm: Map[Int, Map[Long, String]] = localDict.toSeq
-      .flatMap { case (t, xs) => xs.map { case (i, ts) => (i, ts.termId, t) } }
-      .groupBy(_._1)
-      .map { case (i, xs) => i -> xs.map(x => x._2 -> x._3).toMap }
     val nG = n
     val adG = avgdl
     val fsm = fieldStatsMap
-    localSegs = localSegs.map { case (gk @ (segIdx, _), (byTerm, tomb)) =>
-      val t2t = tidToTerm.getOrElse(segIdx, Map.empty)
-      val rescored = byTerm.map { case (tid, bs) =>
-        val exact = for { t <- t2t.get(tid); df <- mergedDf.get(t) } yield {
-          val (nn, ad) = FieldTerms.textFieldOf(t).flatMap(fsm.get).getOrElse((nG, adG))
-          val idf = Bm25.idf(df, nn)
-          val cap = bs.iterator.map(_.count).max
-          val tfs = new Array[Int](cap)
-          val dls = new Array[Int](cap)
-          bs.map { b =>
-            Codec.decodeVarIntsInto(b.tfs, b.count, tfs)
-            Codec.decodeVarIntsInto(b.dls, b.count, dls)
-            var mx = Double.NegativeInfinity
-            var i = 0
-            while (i < b.count) {
-              val s = Bm25.scoreIdf(idf, tfs(i), dls(i), ad)
-              if (s > mx) mx = s
-              i += 1
-            }
-            b.copy(maxScore = mx)
+    localLists = localLists.map { case (t, bs) =>
+      val df = localDict(t).map(_._2.df).sum - rm.getOrElse(t, 0L)
+      if (df <= 0L) t -> bs
+      else {
+        val (nn, ad) = FieldTerms.textFieldOf(t).flatMap(fsm.get).getOrElse((nG, adG))
+        val idf = Bm25.idf(df, nn)
+        val cap = bs.iterator.map(_.count).max
+        val tfs = new Array[Int](cap)
+        val dls = new Array[Int](cap)
+        t -> bs.map { b =>
+          Codec.decodeVarIntsInto(b.tfs, b.count, tfs)
+          Codec.decodeVarIntsInto(b.dls, b.count, dls)
+          var mx = Double.NegativeInfinity
+          var i = 0
+          while (i < b.count) {
+            val s = Bm25.scoreIdf(idf, tfs(i), dls(i), ad)
+            if (s > mx) mx = s
+            i += 1
           }
+          b.copy(maxScore = mx)
         }
-        tid -> exact.getOrElse(bs)
       }
-      gk -> (rescored, tomb)
     }
-    localRescored = true
+    localBounds = RescoredBounds
   }
 
   private lazy val rawN: Long = segStats.map(_.n).sum
@@ -1067,17 +1089,17 @@ class Searcher private[query] (
     execute(Seq(w), k, perSeg, dfGlobal).head
   }
 
-  /** Run resolved queries over every (segment, bucket) group and merge
-    * each query's per-group top-k: in-process over the warm-local blocks
-    * when present, else ONE Spark job whose pruned block scan covers the
-    * union of every query's terms (plus the tombstone blocks) — the
-    * batch's tiny (≤ queries × groups × k) result set merges on the
-    * driver. Results align with `work`.
+  /** Run resolved queries; results align with `work`. A warm searcher
+    * runs them in-process over its term-keyed lists ([[runLocal]]).
+    * Otherwise ONE Spark job runs every query per (segment, bucket)
+    * group — its pruned block scan covers the union of every query's
+    * terms (plus the tombstone blocks) — and the batch's tiny (≤ queries
+    * × groups × k) result set merges on the driver.
     */
   private def execute(work: Seq[ResolvedQuery], k: Int,
       perSeg: Map[(Int, String), TermStats],
       dfGlobal: Map[String, Long]): Seq[Array[Scored]] = {
-    if (localSegs != null) return runLocal(work, k, perSeg, dfGlobal)
+    if (localLists != null) return runLocal(work, k, perSeg, dfGlobal)
     val needed = work.flatMap(_.terms).toSet
     // termId is segment-local: key block groups by (segIdx, termId);
     // terms whose visible df fell to zero are pruned from the scan
@@ -1134,52 +1156,27 @@ class Searcher private[query] (
       : Dataset[(Int, Int, PostingBlock)] =
     tombBlocks.map(base.union(_)).getOrElse(base)
 
-  /** In-process execution over the driver-local blocks (zero Spark
-    * jobs): every (segment, bucket) group runs [[Searcher.runGroup]]
-    * concurrently on the shared pool — the same per-group-then-merge
-    * topology as the distributed path, so results are identical and a
-    * hot-term query's latency is bounded by one group's share.
+  /** In-process execution over the warm term-keyed lists (zero Spark
+    * jobs), on the calling thread: each query is ONE
+    * [[Searcher.runGroup]] over the whole corpus — one cursor per term
+    * across every segment and bucket, one θ and one top-k heap — so its
+    * cost does not grow with the number of (segment, bucket) groups.
     */
   private def runLocal(work: Seq[ResolvedQuery], k: Int,
       perSeg: Map[(Int, String), TermStats],
       dfGlobal: Map[String, Long]): Seq[Array[Scored]] = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    // per-segment term resolution (termId → (term, merged df, dict max))
-    val bySegTerm: Map[Int, Map[Long, (String, Long, Double)]] =
-      perSeg.toSeq.groupBy(_._1._1).map { case (seg, xs) =>
-        seg -> xs.flatMap { case ((_, t), ts) =>
-          dfGlobal.get(t).map(df => ts.termId -> (t, df, ts.maxScore))
-        }.toMap
-      }
-    val nG = n
-    val avgdlG = avgdl
-    val fsMap = fieldStatsMap
-    val bounds =
-      if (storedBounds) StoredBounds else if (localRescored) RescoredBounds else LooseBounds
-    val perGroup = localSegs.toSeq.map { case ((segIdx, _), (byTermId, tombBlks)) =>
-      Future {
-        // iterate the QUERY's terms (tiny), indexing into the group's
-        // vocabulary map — never a vocabulary-sized scan per query
-        val byTerm: Map[String, (Array[PostingBlock], Long, Double)] =
-          bySegTerm.getOrElse(segIdx, Map.empty).flatMap { case (tid, (t, df, mx)) =>
-            byTermId.get(tid).map(bs => t -> (bs, df, mx))
-          }
-        work.map { w =>
-          if (byTerm.isEmpty) Array.empty[Scored]
-          else Searcher.runGroup(byTerm, tombBlks, w, k, nG, avgdlG, fsMap, bounds).toArray
-        }
-      }
+    val bounds = localBounds
+    // the dictionary maxScore bounds only the one segment it was built on
+    val byTerm: Map[String, (Array[PostingBlock], Long, Double)] = dfGlobal.flatMap {
+      case (t, df) => localLists.get(t).map(bs =>
+        t -> (bs, df, if (bounds == StoredBounds) perSeg((0, t)).maxScore else 0.0))
     }
-    val collected = Await.result(Future.sequence(perGroup),
-      scala.concurrent.duration.Duration.Inf)
-    work.indices.map { i =>
-      collected.flatMap(_(i)).toArray.sorted(Scored.Ranking).take(k)
-    }
+    work.map(w =>
+      Searcher.runGroup(byTerm, localTomb, w, k, n, avgdl, fieldStatsMap, bounds).toArray)
   }
 
   /** Disjunctive (OR / ES `match`) BM25 top-k. `from` = pagination
-    * offset (skip the first `from` ranked hits; per-group heaps grow to
+    * offset (skip the first `from` ranked hits; the top-k heap grows to
     * from + k — the documented ES deep-paging cost).
     */
   def search(query: String, k: Int, from: Int = 0): Array[Scored] =
