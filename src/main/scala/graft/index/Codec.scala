@@ -240,28 +240,46 @@ object Codec {
     var pos = 0
     var i = 0
     while (i < b.count) {
-      val n = tfs(i)
-      val ps = new Array[Int](n)
-      var acc = 0
-      var j = 0
-      while (j < n) {
-        var shift = 0
-        var v = 0L
-        var byte0 = 0
-        do {
-          byte0 = b.poss(pos) & 0xff
-          pos += 1
-          v |= (byte0 & 0x7fL) << shift
-          shift += 7
-        } while ((byte0 & 0x80) != 0)
-        acc += v.toInt
-        ps(j) = acc
-        j += 1
-      }
-      out(i) = ps
+      out(i) = new Array[Int](tfs(i))
+      pos = positionsInto(b.poss, pos, out(i))
       i += 1
     }
     out
+  }
+
+  /** Decode one posting's position stream starting at `bytes(off)` into
+    * `out` (`out.length` = the posting's tf); returns the offset past it.
+    */
+  def positionsInto(bytes: Array[Byte], off: Int, out: Array[Int]): Int = {
+    var pos = off
+    var acc = 0
+    var j = 0
+    while (j < out.length) {
+      var shift = 0
+      var v = 0L
+      var b = 0
+      do {
+        b = bytes(pos) & 0xff
+        pos += 1
+        v |= (b & 0x7fL) << shift
+        shift += 7
+      } while ((b & 0x80) != 0)
+      acc += v.toInt
+      out(j) = acc
+      j += 1
+    }
+    pos
+  }
+
+  /** The offset past the `n` varints starting at `bytes(off)`. */
+  def skipVarInts(bytes: Array[Byte], off: Int, n: Int): Int = {
+    var pos = off
+    var left = n
+    while (left > 0) {
+      if ((bytes(pos) & 0x80) == 0) left -= 1
+      pos += 1
+    }
+    pos
   }
 
   /** Inverse of the tokenize pass's packed posting payload

@@ -42,9 +42,11 @@ object DocIds {
     * one partition, the partition sort puts the winner (ts desc, text
     * desc) first, a per-partition scan drops the rest and numbers the
     * survivors against broadcast offsets. This is the build hot path;
-    * `dedup`+`assign` remain as the composable pieces.
+    * `dedup`+`assign` remain as the composable pieces. docIds start at
+    * `base` (a streaming segment's first free docId). The result is
+    * persisted (MEMORY_AND_DISK); the caller unpersists it.
     */
-  def dedupAndAssign(turns: Dataset[Turn], partitions: Int): Dataset[Doc] = {
+  def dedupAndAssign(turns: Dataset[Turn], partitions: Int, base: Long = 0L): Dataset[Doc] = {
     val spark: SparkSession = turns.sparkSession
     import spark.implicits._
     val sorted = turns
@@ -69,7 +71,7 @@ object DocIds {
       .mapPartitions(it => Iterator((TaskContext.getPartitionId(), winners(it).size.toLong)))
       .collect().toMap
     val offsets: Map[Int, Long] = {
-      var acc = 0L
+      var acc = base
       (0 until partitions).map { pid =>
         val o = pid -> acc
         acc += counts.getOrElse(pid, 0L)
@@ -97,7 +99,8 @@ object DocIds {
     * field-indexable per `IndexConfig.fieldCols` / `textFieldCols` /
     * `numericFieldCols`). The frame must carry (conv_id, turn_idx, ts,
     * text); `assignFrame` appends (docId, dl) with the same dense,
-    * stable, no-global-window assignment as the typed path.
+    * stable, no-global-window assignment as the typed path, numbered
+    * from `base`, persisted like [[dedupAndAssign]]'s result.
     */
   def dedupFrame(frame: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
@@ -109,7 +112,7 @@ object DocIds {
       .drop("__rn")
   }
 
-  def assignFrame(frame: org.apache.spark.sql.DataFrame, partitions: Int)
+  def assignFrame(frame: org.apache.spark.sql.DataFrame, partitions: Int, base: Long = 0L)
       : org.apache.spark.sql.DataFrame = {
     val spark = frame.sparkSession
     val sorted = frame
@@ -123,7 +126,7 @@ object DocIds {
       .map(r => r.getInt(0) -> r.getLong(1))
       .toMap
     val offsets: Map[Int, Long] = {
-      var acc = 0L
+      var acc = base
       (0 until partitions).map { pid =>
         val o = pid -> acc
         acc += counts.getOrElse(pid, 0L)

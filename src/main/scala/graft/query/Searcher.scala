@@ -468,7 +468,7 @@ private[query] object Searcher {
 
 /** Driver-resolved execution state of one query (serializable — rides
   * the task closure of the single job of [[Searcher.searchManyBool]] and
-  * of every top-k query): OR (WAND), AND (intersection), or phrase
+  * of every top-k query): OR (MaxScore), AND (intersection), or phrase
   * (intersection + position adjacency; `slots` = analyzed phrase terms
   * in order, possibly repeating). All term lists are restricted to
   * GLOBALLY-found terms; [[Searcher.runGroup]] re-checks group-local
@@ -530,7 +530,8 @@ private[query] final case class ResolvedQuery(
   * index time; (2) dictionary lookup restricted to the query terms — one
   * unioned, metadata-size read over every segment, shard-pruned when the
   * shard count is known; (3) posting-block scan pruned by term-shard
-  * partition dirs + termId pushed to parquet; (4) block-max WAND per
+  * partition dirs + termId pushed to parquet; (4) block-max top-k
+  * ([[Wand.topK]] MaxScore, or the AND / phrase intersection) per
   * (segment, bucket) group — groups are docId-disjoint, so this is
   * embarrassingly parallel, exactly ES's shard-then-merge topology; (5)
   * tiny driver merge of the per-group top-k. A warmed searcher whose

@@ -3,14 +3,15 @@ package graft.query
 import graft.index.Codec
 import graft.model.{PostingBlock, Scored}
 
-/** Block-max WAND top-k over compressed posting blocks (north_rule:
-  * "BM25 top-k query executor using posting-list intersection with
-  * block-max WAND pruning"; Ding & Suel, SIGIR'11 pattern). Exact:
-  * pruning uses per-term global upper bounds and per-block max scores
-  * with a small safety margin, so it never skips a doc that could enter
-  * the top-k; every surviving doc is scored with the exact BM25 sum in
-  * ascending term order — bit-identical to the exhaustive oracle
-  * (SURVEY.md §7.5 float-determinism decisions).
+/** BM25 top-k over compressed posting blocks (north_rule: "BM25 top-k
+  * query executor using posting-list intersection with block-max WAND
+  * pruning"): block-max MaxScore for disjunctions ([[topK]]) and a
+  * block-max intersection for AND / phrase ([[topKConjunctive]],
+  * [[topKPhrase]]). Exact: pruning uses per-term global upper bounds and
+  * per-block max scores with a small safety margin, so it never skips a
+  * doc that could enter the top-k; every surviving doc is scored with
+  * the exact BM25 sum in ascending term order — bit-identical to the
+  * exhaustive oracle (SURVEY.md §7.5 float-determinism decisions).
   */
 object Wand {
   private val Margin = 1e-7
@@ -90,8 +91,15 @@ object Wand {
     private var bi = 0
     /** The buffers hold block `bi` (false after a block skip). */
     private var loaded = false
-    private var posDec: Array[Array[Int]] = _
     private var pos = 0
+    /** On-demand positions: block `bi`'s position stream is read forward
+      * only — `posOff` is the byte offset where posting `posNext`'s
+      * positions start, and `posCur` holds posting `posNext − 1`'s
+      * (null = none decoded in this block yet).
+      */
+    private var posNext = 0
+    private var posOff = 0
+    private var posCur: Array[Int] = _
     /** Blocks actually decoded (pruning-effectiveness metric: block skips
       * and block-max early exits avoid decodes entirely).
       */
@@ -105,20 +113,28 @@ object Wand {
       Codec.deltaDecodeInto(b.docs, b.count, b.firstDocId, docBuf)
       Codec.decodeVarIntsInto(b.tfs, b.count, tfBuf)
       Codec.decodeVarIntsInto(b.dls, b.count, dlBuf)
-      loaded = true; posDec = null; pos = 0
+      loaded = true; pos = 0; resetPositions()
       decodes += 1
     }
 
-    /** Token positions of the current posting (ascending). Requires an
-      * index built with storePositions (the default).
+    private def resetPositions(): Unit = { posNext = 0; posOff = 0; posCur = null }
+
+    /** Token positions of the current posting (ascending), decoded on
+      * first use: the streams of the postings between the last decoded
+      * one and this one are skipped, not decoded. Requires an index built
+      * with storePositions (the default).
       */
     def positions: Array[Int] = {
-      if (posDec == null) {
-        posDec = Codec.decodePositions(blocks(bi), tfBuf)
-        require(posDec != null,
+      if (posCur == null || posNext != pos + 1) {
+        val bytes = blocks(bi).poss
+        require(bytes != null && bytes.nonEmpty,
           s"index stores no positions for term '$term' — build with storePositions=true")
+        while (posNext < pos) { posOff = Codec.skipVarInts(bytes, posOff, tfBuf(posNext)); posNext += 1 }
+        posCur = new Array[Int](tfBuf(pos))
+        posOff = Codec.positionsInto(bytes, posOff, posCur)
+        posNext = pos + 1
       }
-      posDec(pos)
+      posCur
     }
 
     def exhausted: Boolean = curDoc == Long.MaxValue
@@ -142,14 +158,14 @@ object Wand {
     def shallowSeek(target: Long): Unit = {
       if (bi < blocks.length && blocks(bi).lastDocId >= target) return
       while (bi < blocks.length && blocks(bi).lastDocId < target) bi += 1
-      loaded = false; posDec = null; pos = 0
+      loaded = false; pos = 0; resetPositions()
       if (bi >= blocks.length) curDoc = Long.MaxValue
     }
 
     def nextGEQ(target: Long): Unit = {
       if (curDoc >= target && loaded) return
       while (bi < blocks.length && blocks(bi).lastDocId < target) { bi += 1; loaded = false }
-      if (bi >= blocks.length) { curDoc = Long.MaxValue; loaded = false; posDec = null; return }
+      if (bi >= blocks.length) { curDoc = Long.MaxValue; loaded = false; resetPositions(); return }
       if (!loaded) load()
       // in-block scan (blocks are <=128 entries; galloping not worth it)
       while (docBuf(pos) < target) pos += 1
@@ -331,32 +347,61 @@ object Wand {
     }
   }
 
-  /** The top-k collector of both executors: a heap ordered by
-    * [[Scored.Ranking]], so its head is the WORST entry — lowest score,
-    * then LARGEST docId (ties rank by docId asc, so the largest docId is
-    * the weakest). Docs must be offered in ascending docId order, so an
-    * equal score never displaces a held doc. Non-null `after` (ES
-    * `search_after`) admits only docs ranked strictly after it.
+  /** The top-k collector of both executors: a binary heap over parallel
+    * score / docId arrays ordered by [[Scored.Ranking]], so its head is
+    * the WORST entry — lowest score, then LARGEST docId (ties rank by
+    * docId asc, so the largest docId is the weakest). Docs must be
+    * offered in ascending docId order, so an equal score never displaces
+    * a held doc; a better doc replaces the head in place (one sift-down,
+    * no allocation). The arrays grow by doubling up to k. Non-null
+    * `after` (ES `search_after`) admits only docs ranked strictly after
+    * it.
     */
   private final class TopK(k: Int, after: Scored) {
-    private val heap = scala.collection.mutable.PriorityQueue.empty[Scored](Scored.Ranking)
+    private var scores = new Array[Double](math.min(k, 16))
+    private var docs = new Array[Long](scores.length)
+    private var size = 0
     /** The k-th best score once k docs are held, else −∞. */
     var theta = Double.NegativeInfinity
-    def full: Boolean = heap.size == k
+    def full: Boolean = size == k
+    /** Does (s1, d1) rank below (s2, d2) under [[Scored.Ranking]]? */
+    private def below(s1: Double, d1: Long, s2: Double, d2: Long): Boolean = {
+      val c = java.lang.Double.compare(s1, s2)
+      c < 0 || (c == 0 && d1 > d2)
+    }
     def offer(score: Double, docId: Long): Unit = {
       if (after != null &&
         !(score < after.score || (score == after.score && docId > after.docId))) return
-      if (heap.size < k) {
-        heap.enqueue(Scored(docId, score))
-        if (heap.size == k) theta = heap.head.score
-      } else if (score > heap.head.score) {
-        heap.dequeue()
-        heap.enqueue(Scored(docId, score))
-        theta = heap.head.score
+      if (size < k) {
+        if (size == scores.length) {
+          val cap = math.min(k.toLong, 2L * size).toInt
+          scores = java.util.Arrays.copyOf(scores, cap)
+          docs = java.util.Arrays.copyOf(docs, cap)
+        }
+        var i = size
+        size += 1
+        while (i > 0 && below(score, docId, scores((i - 1) >>> 1), docs((i - 1) >>> 1))) {
+          val p = (i - 1) >>> 1
+          scores(i) = scores(p); docs(i) = docs(p); i = p
+        }
+        scores(i) = score; docs(i) = docId
+        if (size == k) theta = scores(0)
+      } else if (score > scores(0)) {
+        var i = 0
+        var sifting = true
+        while (sifting) {
+          val l = 2 * i + 1
+          val c = if (l + 1 < size && below(scores(l + 1), docs(l + 1), scores(l), docs(l))) l + 1 else l
+          if (c < size && below(scores(c), docs(c), score, docId)) {
+            scores(i) = scores(c); docs(i) = docs(c); i = c
+          } else sifting = false
+        }
+        scores(i) = score; docs(i) = docId
+        theta = scores(0)
       }
     }
     /** The held docs, best first. */
-    def ranked: Array[Scored] = heap.toArray.sorted(Scored.Ranking)
+    def ranked: Array[Scored] = Array.tabulate(size)(i => Scored(docs(i), scores(i))).sorted(Scored.Ranking)
   }
 
   /** Align `filters` at `doc`: returns `doc` if every filter list
@@ -364,7 +409,7 @@ object Wand {
     * COULD align again (the max of their curDocs) — the caller skips its
     * scored cursors there. Filters are membership-only (ES bool `filter`
     * context): they never contribute score, so they play no part in
-    * pivot/upper-bound pruning — they only veto candidates.
+    * upper-bound pruning — they only veto candidates.
     */
   private def filtersAlignAt(filters: Array[DocCursor], doc: Long): Long = {
     var next = doc
@@ -390,16 +435,15 @@ object Wand {
   }
 
   /** Disjunctive (OR) BM25 top-k — the ES `match` query shape (SURVEY.md
-    * J3/T1). `lists` must be keyed by distinct terms — EXCEPT shared-
-    * term dis_max instances ([[BestFields.groupsOf]]): one iterator per
-    * (group, term) is valid because each instance scores and bounds
-    * independently (two cursors on one posting list behave like two
-    * terms with identical postings). `filters` are
-    * required-but-unscored lists (ES bool `filter` context — typically
-    * fielded keyword terms like `#role:user`); `excludes` veto their docs
-    * (`must_not`). Both default empty = plain WAND, and neither affects
-    * pruning soundness: filters/excludes only REMOVE candidates, and the
-    * pivot bound Σub over scored lists stays a valid upper bound.
+    * J3/T1), run as block-max MaxScore (Turtle & Flood 1995, the way
+    * Lucene runs top-level disjunctions). `lists` must be keyed by
+    * distinct terms — EXCEPT shared-term dis_max instances
+    * ([[BestFields.groupsOf]]): one iterator per (group, term) is valid
+    * because each instance scores and bounds independently (two cursors
+    * on one posting list behave like two terms with identical postings).
+    * `filters` are required-but-unscored lists (ES bool `filter` context
+    * — typically fielded keyword terms like `#role:user`); `excludes`
+    * veto their docs (`must_not`). Both only REMOVE candidates.
     *
     * `shoulds` are OPTIONAL scoring lists (ES bool `should` context,
     * term-disjoint from `lists`): a matched should term adds its BM25
@@ -407,10 +451,30 @@ object Wand {
     * must match ≥ `minShould` of them (`minimum_should_match`). `lists`
     * is the required group: when non-empty a doc must match ≥ 1 of it
     * (the ES `match`-in-`must` shape); when empty, shoulds alone drive
-    * the query (pure m-of-n). Scores stay deterministic: ONE sum over
-    * all matched terms in ascending term order, exactly the no-should
-    * rule. Pruning stays sound: both groups' upper bounds enter the
-    * pivot sum, and the group-count requirements only REMOVE candidates.
+    * the query (pure m-of-n). The group-count rules only REMOVE
+    * candidates, so both groups take part in the bounds below.
+    *
+    * MaxScore: the scored lists (both groups) are ordered by `ub`
+    * ascending with prefix sums cum(i) = ub(0) + … + ub(i). With θ the
+    * k-th best score held, the lists 0..e−1 whose cum(e−1) + Margin ≤ θ
+    * are NON-ESSENTIAL: a doc found only in them scores at most
+    * cum(e−1) and cannot enter the top-k (an entering doc must beat θ —
+    * an equal score loses the docId tie-break, docs come in docId
+    * order). So candidates are the smallest `curDoc` over the ESSENTIAL
+    * lists e..n−1 only, and e only grows as θ rises. A candidate is
+    * vetoed by the filters and excludes, scored on the essential lists
+    * sitting on it, then the non-essential lists are probed (nextGEQ)
+    * from the highest ub down, stopping as soon as the partial sum plus
+    * the remaining lists' block maxima (each list shallow-seeked to the
+    * candidate's block, no decode) + Margin ≤ θ. No per-step cursor
+    * sort: the essential set is a suffix of one fixed order.
+    *
+    * Results are bit-identical to the exhaustive oracle: pruning only
+    * drops docs that cannot beat θ (bounds are sums of per-list upper
+    * bounds, Margin absorbs the summation-order rounding), and a doc
+    * that survives is offered with ONE sum over its matched
+    * contributions in ascending TERM order (or the best_fields two-pass
+    * fold below), never the probe-order partial.
     *
     * `after` implements ES `search_after` on the (score desc, docId asc)
     * sort key: only docs ranked strictly after it are offered. It cannot
@@ -438,13 +502,15 @@ object Wand {
     // fixed scoring order: term asc over the MERGED groups
     val byTerm = (lists ++ shoulds).sortBy(_.term).toArray
     val isShould = byTerm.map(it => shouldSet.contains(it.term))
+    val n = byTerm.length
+    // contribution of each list (term order) at the current candidate
+    val contrib = new Array[Double](n)
     val bf = bestFields
-    // best_fields scratch (reused per candidate — no per-doc allocation):
-    // contribution + matched flag per list, one accumulator per field.
-    // Terms outside the multi_match field map (bool `should` terms riding
-    // a best_fields query) get ordinal -1 — a 'no field' bucket whose
-    // contributions always carry weight 1.0 (ES adds separate bool
-    // clauses at full weight) and never enter any field's dis-max sum.
+    // best_fields field ordinal per list. Terms outside the multi_match
+    // field map (bool `should` terms riding a best_fields query) get
+    // ordinal -1 — a 'no field' bucket whose contributions always carry
+    // weight 1.0 (ES adds separate bool clauses at full weight) and never
+    // enter any field's dis-max sum.
     val bfFieldIdx: Array[Int] =
       if (bf == null) null
       else byTerm.map(it =>
@@ -452,137 +518,110 @@ object Wand {
         // everything else resolves through the term-keyed field map
         if (it.groupOrdinal != Int.MinValue) it.groupOrdinal
         else bf.fieldOf.getOrElse(it.term, -1))
-    val bfContrib: Array[Double] = if (bf == null) null else new Array[Double](byTerm.length)
-    val bfMatched: Array[Boolean] = if (bf == null) null else new Array[Boolean](byTerm.length)
     val bfSums: Array[Double] = if (bf == null) null else new Array[Double](bf.nFields)
     val top = new TopK(k, after)
 
-    val iters = byTerm.clone() // sorted by curDoc during the loop
-    // stable in-place insertion sort on curDoc (the order a stable sort
-    // gives; between pivot steps only a few cursors move, so the array
-    // is nearly sorted)
-    def sortIters(): Unit = {
-      var i = 1
-      while (i < iters.length) {
-        val it = iters(i)
-        val d = it.curDoc
-        var j = i - 1
-        while (j >= 0 && iters(j).curDoc > d) { iters(j + 1) = iters(j); j -= 1 }
-        iters(j + 1) = it
-        i += 1
+    // MaxScore order: ub ascending; ubCum(i) = Σ ub of lists 0..i
+    val ord = Array.range(0, n).sortBy(t => byTerm(t).ub)
+    val byUb = ord.map(byTerm)
+    val ubCum = new Array[Double](n)
+    var acc = 0.0
+    var i = 0
+    while (i < n) { acc += byUb(i).ub; ubCum(i) = acc; i += 1 }
+    // per-candidate block-max prefix sums of the non-essential lists
+    val bmCum = new Array[Double](n)
+    var firstEss = 0 // byUb(firstEss until n) are the essential lists
+
+    /** Every list sits on or past `doc` (all were probed), so the ones ON
+      * it are exactly its matches: apply the group rules and offer the
+      * exact score — the sum in ascending term order or, best_fields,
+      * pass 1 per-field sums, pass 2 the same global order re-folded
+      * with weight 1 on the best field and tieBreaker elsewhere (tb = 1
+      * reproduces the most_fields sum bit-exactly).
+      */
+    def offerFolded(doc: Long): Unit = {
+      var nMust = 0
+      var nShould = 0
+      var s = 0.0
+      var t = 0
+      if (bf == null) {
+        while (t < n) {
+          if (byTerm(t).curDoc == doc) {
+            s += contrib(t)
+            if (isShould(t)) nShould += 1 else nMust += 1
+          }
+          t += 1
+        }
+      } else {
+        java.util.Arrays.fill(bfSums, 0.0)
+        while (t < n) {
+          if (byTerm(t).curDoc == doc) {
+            if (bfFieldIdx(t) >= 0) bfSums(bfFieldIdx(t)) += contrib(t)
+            if (isShould(t)) nShould += 1 else nMust += 1
+          }
+          t += 1
+        }
+        var best = 0
+        var f = 1
+        while (f < bfSums.length) { if (bfSums(f) > bfSums(best)) best = f; f += 1 }
+        t = 0
+        while (t < n) {
+          if (byTerm(t).curDoc == doc) {
+            val w = if (bfFieldIdx(t) < 0 || bfFieldIdx(t) == best) 1.0 else bf.tieBreaker
+            s += w * contrib(t)
+          }
+          t += 1
+        }
       }
+      if ((mustN == 0 || nMust > 0) && nShould >= minShould) top.offer(s, doc)
     }
 
-    sortIters()
+    var target = Long.MinValue
     var running = true
     while (running) {
-      // pivot selection on term upper bounds
-      var acc = 0.0
-      var p = 0
-      var found = false
-      while (p < iters.length && !found) {
-        if (!iters(p).exhausted) {
-          acc += iters(p).ub
-          if (acc + Margin > top.theta) found = true else p += 1
-        } else p = iters.length
+      // step every essential list to `target`; the smallest docId they
+      // then sit on is the next candidate
+      var cand = Long.MaxValue
+      i = firstEss
+      while (i < n) {
+        val it = byUb(i)
+        if (it.curDoc < target) it.nextGEQ(target)
+        if (it.curDoc < cand) cand = it.curDoc
+        i += 1
       }
-      if (!found || p >= iters.length || iters(p).exhausted) running = false
+      if (cand == Long.MaxValue) running = false
       else {
-        val pivotDoc = iters(p).curDoc
-        if (iters(0).curDoc == pivotDoc) {
-          // block-max refinement: shallow-seek lists 0..p to pivotDoc's blocks
-          var i = 0
-          var blockSum = 0.0
-          while (i <= p) { iters(i).shallowSeek(pivotDoc); blockSum += iters(i).blockMax; i += 1 }
-          // lists beyond p that already sit on pivotDoc also contribute
-          while (i < iters.length && iters(i).curDoc == pivotDoc) { blockSum += iters(i).blockMax; i += 1 }
-          if (blockSum + Margin <= top.theta) {
-            // cannot qualify anywhere in these blocks: jump past the
-            // nearest block horizon (capped by the next list's curDoc)
-            var horizon = Long.MaxValue
+        target = cand + 1
+        val fNext = if (fArr.isEmpty) cand else filtersAlignAt(fArr, cand)
+        // vetoed: no doc before the filters' next possible doc qualifies
+        if (fNext != cand) target = fNext
+        else if (!excludedAt(eArr, cand)) {
+          var partial = 0.0
+          i = firstEss
+          while (i < n) {
+            val it = byUb(i)
+            if (it.curDoc == cand) { val c = it.score; contrib(ord(i)) = c; partial += c }
+            i += 1
+          }
+          // probe the non-essential lists, highest ub first, while the
+          // partial sum plus what the rest can add might still beat θ —
+          // by their ubs, then by their block maxima at `cand`
+          i = firstEss - 1
+          if (i >= 0 && partial + ubCum(i) + Margin > top.theta) {
+            var bm = 0.0
             var j = 0
-            while (j <= p) { horizon = math.min(horizon, iters(j).blockLast); j += 1 }
-            var target = if (horizon == Long.MaxValue) Long.MaxValue else horizon + 1
-            if (p + 1 < iters.length) target = math.min(target, iters(p + 1).curDoc)
-            target = math.max(target, pivotDoc + 1)
-            j = 0
-            while (j <= p) { iters(j).nextGEQ(target); j += 1 }
-          } else {
-            val fNext = if (fArr.isEmpty) pivotDoc else filtersAlignAt(fArr, pivotDoc)
-            if (fNext != pivotDoc || excludedAt(eArr, pivotDoc)) {
-              // filtered out: skip every list sitting on pivotDoc forward
-              // (to the filters' next possible doc when that is known)
-              val target = math.max(pivotDoc + 1, fNext)
-              var t = 0
-              while (t < byTerm.length) {
-                if (byTerm(t).curDoc == pivotDoc) byTerm(t).nextGEQ(target)
-                t += 1
-              }
-            } else {
-              // fully score pivotDoc: exact sum in ascending TERM order,
-              // counting group matches for the must-≥1 / minShould rules
-              var s = 0.0
-              var nMust = 0
-              var nShould = 0
-              var t = 0
-              if (bf == null) {
-                while (t < byTerm.length) {
-                  val it = byTerm(t)
-                  if (it.curDoc == pivotDoc) {
-                    it.nextGEQ(pivotDoc); s += it.score
-                    if (isShould(t)) nShould += 1 else nMust += 1
-                  }
-                  t += 1
-                }
-              } else {
-                // best_fields: pass 1 collects contributions + per-field
-                // sums (ascending term order — fields are contiguous in
-                // it); pass 2 re-folds them weighted (1 on the best
-                // field, tieBreaker elsewhere) in the SAME global order,
-                // so tb = 1 reproduces the most_fields sum bit-exactly
-                java.util.Arrays.fill(bfSums, 0.0)
-                while (t < byTerm.length) {
-                  val it = byTerm(t)
-                  if (it.curDoc == pivotDoc) {
-                    it.nextGEQ(pivotDoc)
-                    val c = it.score
-                    bfContrib(t) = c
-                    bfMatched(t) = true
-                    if (bfFieldIdx(t) >= 0) bfSums(bfFieldIdx(t)) += c
-                    if (isShould(t)) nShould += 1 else nMust += 1
-                  } else bfMatched(t) = false
-                  t += 1
-                }
-                var best = 0
-                var bmax = bfSums(0)
-                var f = 1
-                while (f < bfSums.length) {
-                  if (bfSums(f) > bmax) { bmax = bfSums(f); best = f }
-                  f += 1
-                }
-                t = 0
-                while (t < byTerm.length) {
-                  if (bfMatched(t)) {
-                    val w = if (bfFieldIdx(t) < 0 || bfFieldIdx(t) == best) 1.0
-                      else bf.tieBreaker
-                    s += w * bfContrib(t)
-                  }
-                  t += 1
-                }
-              }
-              if ((mustN == 0 || nMust >= 1) && nShould >= minShould) top.offer(s, pivotDoc)
-              t = 0
-              while (t < byTerm.length) {
-                if (byTerm(t).curDoc == pivotDoc) byTerm(t).advancePast(pivotDoc)
-                t += 1
-              }
+            while (j <= i) {
+              byUb(j).shallowSeek(cand); bm += byUb(j).blockMax; bmCum(j) = bm; j += 1
+            }
+            while (i >= 0 && partial + bmCum(i) + Margin > top.theta) {
+              val it = byUb(i)
+              it.nextGEQ(cand)
+              if (it.curDoc == cand) { val c = it.score; contrib(ord(i)) = c; partial += c }
+              i -= 1
             }
           }
-          sortIters()
-        } else {
-          // advance the first list (smallest curDoc) up to the pivot
-          iters(0).nextGEQ(pivotDoc)
-          sortIters()
+          if (i < 0) offerFolded(cand)
+          while (firstEss < n && ubCum(firstEss) + Margin <= top.theta) firstEss += 1
         }
       }
     }

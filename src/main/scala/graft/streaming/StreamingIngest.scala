@@ -70,11 +70,11 @@ object StreamingIngest {
       batchId: Long,
       cfg: IndexConfig
   ): Unit = {
-    import spark.implicits._
     if (batch.isEmpty) return
-    val base = currentMaxDocId(spark, indexDir) + 1
-    val docs = graft.index.DocIds.assign(graft.index.DocIds.dedup(batch), cfg.partitions)
-      .map(d => d.copy(docId = d.docId + base))
+    // numbered from `base` by the fused dedup + assign, so `docs` IS the
+    // persisted frame the build reads and the unpersist below frees it
+    val docs = graft.index.DocIds.dedupAndAssign(batch, cfg.partitions,
+      base = currentMaxDocId(spark, indexDir) + 1)
     val segDir = s"$indexDir/seg-$batchId"
     val report = new IndexBuilder(spark, segDir, s"stream-batch-$batchId", cfg)
       .build(docs)
@@ -100,10 +100,8 @@ object StreamingIngest {
       cfg: IndexConfig
   ): Unit = {
     if (batch.isEmpty) return
-    val base = currentMaxDocId(spark, indexDir) + 1
-    val docs = graft.index.DocIds
-      .assignFrame(graft.index.DocIds.dedupFrame(batch), cfg.partitions)
-      .withColumn("docId", col("docId") + lit(base))
+    val docs = graft.index.DocIds.assignFrame(graft.index.DocIds.dedupFrame(batch),
+      cfg.partitions, base = currentMaxDocId(spark, indexDir) + 1)
     val segDir = s"$indexDir/seg-$batchId"
     val report = new IndexBuilder(spark, segDir, s"stream-batch-$batchId", cfg)
       .buildFrom(docs)

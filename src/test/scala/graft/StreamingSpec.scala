@@ -679,6 +679,29 @@ class StreamingSpec extends SparkSpec {
     all.unpersist(blocking = false)
   }
 
+  test("appendSegment and appendSegmentFrame release the docs frame they cache") {
+    val idx = s"${TestSpark.tmpRoot}/stream-idx-cache"
+    val idxFrame = s"${TestSpark.tmpRoot}/stream-idx-cache-frame"
+    val cfg = IndexConfig(numBuckets = 1, partitions = 4)
+    val all = Transcripts.generate(spark, 30L)
+    def slice(b: Int) =
+      all.filter($"conv_id" >= f"conv-${b * 10}%08d" && $"conv_id" < f"conv-${b * 10 + 10}%08d")
+    val persisted = spark.sparkContext.getPersistentRDDs.size
+    for (b <- 0 until 3) {
+      StreamingIngest.appendSegment(spark, slice(b), idx, b.toLong, cfg)
+      StreamingIngest.appendSegmentFrame(spark, slice(b).toDF(), idxFrame, b.toLong, cfg)
+    }
+    assert(spark.sparkContext.getPersistentRDDs.size == persisted)
+    // numbered from each segment's base: both layouts hold every turn once
+    for (dir <- Seq(idx, idxFrame)) {
+      val docs = new graft.query.MultiSearcher(spark, dir).docs
+      assert(docs.count() == all.count())
+      assert(docs.select("docId").distinct().count() == all.count())
+      assert(docs.agg(org.apache.spark.sql.functions.max("docId")).head().getLong(0)
+        == all.count() - 1)
+    }
+  }
+
   test("heavy-churn cold queries: df corrections ride the dict lookup (per-query job count pinned)") {
     // round-5 review "What's wrong #3": with the driver cache declined,
     // removedDf corrections used to cost one EXTRA sequential job per

@@ -18,6 +18,30 @@ class WandSpec extends AnyFunSuite {
   private def randomCorpus(nDocs: Int, vocab: Int): Array[Array[String]] =
     Array.fill(nDocs)(Array.fill(1 + rnd.nextInt(30))("t" + rnd.nextInt(vocab)))
 
+  /** Skewed corpus: "all" in every doc, low-idf head terms h0..h2 in
+    * most docs (tf 1-3), mid terms t0..t11, and rare terms r0..r3 in
+    * ~2% of docs. With a query over all three kinds, θ soon passes the
+    * bounds of "all" and the heads, so the essential set of the
+    * disjunctive executor shrinks while the query runs.
+    */
+  private def skewedCorpus(nDocs: Int): Array[Array[String]] =
+    Array.fill(nDocs) {
+      val body = Seq.fill(2 + rnd.nextInt(20))("t" + rnd.nextInt(12))
+      val heads = (0 until 3).filter(h => rnd.nextInt(10) < 8 - 2 * h)
+        .flatMap(h => Seq.fill(1 + rnd.nextInt(3))("h" + h))
+      val rare = (0 until 4).filter(_ => rnd.nextInt(50) == 0).map("r" + _)
+      rnd.shuffle(body ++ heads ++ rare :+ "all").toArray
+    }
+
+  /** A query over the skewed vocabulary: "all", heads, a mid and rares. */
+  private def skewedQuery(): Seq[String] =
+    (Seq("all") ++ Seq("h0", "h1", "h2").filter(_ => rnd.nextBoolean()) ++
+      Seq("t" + rnd.nextInt(12)) ++ Seq("r0", "r1", "r2", "r3").filter(_ => rnd.nextInt(3) > 0))
+      .distinct.sorted
+
+  /** The (k, block size) grid every skewed case runs over. */
+  private val skewGrid = for (k <- Seq(1, 10, 100); bs <- Seq(4, 16, 128)) yield (k, bs)
+
   private def tfOf(doc: Array[String]): Map[String, Int] =
     doc.groupBy(identity).map { case (t, xs) => t -> xs.length }
 
@@ -85,10 +109,13 @@ class WandSpec extends AnyFunSuite {
   }
 
   private def check(nDocs: Int, vocab: Int, qTerms: Seq[String], k: Int, blockSize: Int,
-      conjunctive: Boolean = false): Unit = {
+      conjunctive: Boolean = false): Unit =
+    checkOn(randomCorpus(nDocs, vocab), qTerms, k, blockSize, conjunctive)
+
+  private def checkOn(corpus: Array[Array[String]], qTerms: Seq[String], k: Int,
+      blockSize: Int, conjunctive: Boolean = false): Unit = {
     // unit-level semantics: OOV terms are dropped before the executor
     // (the engine-level AND empty-on-missing rule lives in Searcher)
-    val corpus = randomCorpus(nDocs, vocab)
     val terms = qTerms.distinct.sorted
     val (iters, _, _, _) = buildIters(corpus, terms, blockSize)
     val brute = bruteScore(corpus, terms, k, conjunctive)
@@ -108,6 +135,7 @@ class WandSpec extends AnyFunSuite {
       val blockSize = Seq(4, 16, 128)(i % 3)
       check(nDocs, vocab, q, k, blockSize)
     }
+    for ((k, bs) <- skewGrid; _ <- 1 to 3) checkOn(skewedCorpus(1500), skewedQuery(), k, bs)
   }
 
   test("best_fields combination ≡ exhaustive weighted fold; tb=1 ≡ most_fields bit-exact") {
@@ -142,16 +170,10 @@ class WandSpec extends AnyFunSuite {
         }
       }.sortBy(s => (-s.score, s.docId)).take(k)
     }
-    for (i <- 1 to 100) {
-      val vocab = 3 + rnd.nextInt(20)
-      val nDocs = 10 + rnd.nextInt(300)
-      val corpus = randomCorpus(nDocs, vocab)
-      val q = Seq.fill(2 + rnd.nextInt(4))("t" + rnd.nextInt(vocab)).distinct.sorted
+    def run(i: Int, corpus: Array[Array[String]], q: Seq[String], k: Int, bs: Int): Unit = {
       val nFields = 2 + rnd.nextInt(2)
       val fieldOf = q.map(t => t -> rnd.nextInt(nFields)).toMap
       val tb = Seq(0.0, 0.3, 1.0)(i % 3)
-      val k = 1 + rnd.nextInt(15)
-      val bs = Seq(4, 16, 128)(i % 3)
       val (iters, _, _, _) = buildIters(corpus, q, bs)
       val bf = new Wand.BestFields(fieldOf, nFields, tb)
       val got = Wand.topK(iters, k, bestFields = bf).toSeq
@@ -164,6 +186,14 @@ class WandSpec extends AnyFunSuite {
         assert(Wand.topK(iters2, k).toSeq == got, s"tb=1 ≠ most_fields, case $i")
       }
     }
+    for (i <- 1 to 100) {
+      val vocab = 3 + rnd.nextInt(20)
+      val corpus = randomCorpus(10 + rnd.nextInt(300), vocab)
+      val q = Seq.fill(2 + rnd.nextInt(4))("t" + rnd.nextInt(vocab)).distinct.sorted
+      run(i, corpus, q, 1 + rnd.nextInt(15), Seq(4, 16, 128)(i % 3))
+    }
+    for (((k, bs), i) <- skewGrid.zipWithIndex; j <- 0 until 3)
+      run(i + j, skewedCorpus(1000), skewedQuery(), k, bs)
   }
 
   test("dis_max with SHARED terms ≡ exhaustive per-group fold on 120 random cases (round-8)") {
@@ -202,19 +232,9 @@ class WandSpec extends AnyFunSuite {
         }
       }.sortBy(s => (-s.score, s.docId)).take(k)
     }
-    for (i <- 1 to 120) {
-      val vocab = 3 + rnd.nextInt(15)
-      val nDocs = 10 + rnd.nextInt(300)
-      val corpus = randomCorpus(nDocs, vocab)
-      val nGroups = 2 + rnd.nextInt(2)
-      // overlap by construction: a shared pool most groups draw from
-      val pool = Seq.fill(4)("t" + rnd.nextInt(vocab)).distinct
-      val groups = Seq.fill(nGroups)(
-        (Seq.fill(1 + rnd.nextInt(2))("t" + rnd.nextInt(vocab)) ++
-          Seq(pool(rnd.nextInt(pool.size)))).distinct.sorted)
+    def run(i: Int, corpus: Array[Array[String]], groups: Seq[Seq[String]], k: Int,
+        bs: Int): Unit = {
       val tb = Seq(0.0, 0.3, 1.0)(i % 3)
-      val k = 1 + rnd.nextInt(15)
-      val bs = Seq(4, 16, 128)(i % 3)
       val iters = groups.zipWithIndex.flatMap { case (g, gi) =>
         buildIters(corpus, g, bs, groupOrdinal = gi)._1
       }
@@ -224,6 +244,25 @@ class WandSpec extends AnyFunSuite {
       val got = Wand.topK(iters, k, bestFields = bf).toSeq
       val want = bruteShared(corpus, groups, tb, k)
       assert(got == want, s"case $i tb=$tb groups=$groups\n got=$got\n want=$want")
+    }
+    for (i <- 1 to 120) {
+      val vocab = 3 + rnd.nextInt(15)
+      val corpus = randomCorpus(10 + rnd.nextInt(300), vocab)
+      val nGroups = 2 + rnd.nextInt(2)
+      // overlap by construction: a shared pool most groups draw from
+      val pool = Seq.fill(4)("t" + rnd.nextInt(vocab)).distinct
+      val groups = Seq.fill(nGroups)(
+        (Seq.fill(1 + rnd.nextInt(2))("t" + rnd.nextInt(vocab)) ++
+          Seq(pool(rnd.nextInt(pool.size)))).distinct.sorted)
+      run(i, corpus, groups, 1 + rnd.nextInt(15), Seq(4, 16, 128)(i % 3))
+    }
+    // skewed: groups share "all" or a head term, rare terms in some
+    for (((k, bs), i) <- skewGrid.zipWithIndex; j <- 0 until 3) {
+      val q = skewedQuery()
+      val groups = Seq.fill(2 + rnd.nextInt(2))(
+        (Seq(Seq("all", "h0", "h1")(rnd.nextInt(3))) ++ q.filter(_ => rnd.nextBoolean()))
+          .distinct.sorted)
+      run(i + j, skewedCorpus(1000), groups, k, bs)
     }
   }
 
@@ -365,6 +404,36 @@ class WandSpec extends AnyFunSuite {
   }
 
   test("filtered WAND (bool filter/must_not) ≡ exhaustive on 150 random cases incl. phrase") {
+    def run(corpus: Array[Array[String]], terms: Seq[String], phrase: Seq[String], k: Int,
+        blockSize: Int, conj: Boolean, useF: Boolean, useE: Boolean): Unit = {
+      val nDocs = corpus.length
+      val usePhrase = phrase != null
+      // synthetic keyword field: doc's value = docId mod m
+      val m = 2 + rnd.nextInt(3)
+      val fv = rnd.nextInt(m)
+      val ev = rnd.nextInt(m)
+      val inFilter = (0 until nDocs).filter(_ % m == fv)
+      val inExclude = (0 until nDocs).filter(_ % m == ev)
+      val (iters, df, n, avgdl) = buildIters(corpus, terms, blockSize)
+      val filters = Seq(fieldIter("#f:" + fv, inFilter, blockSize, n, avgdl))
+      val excludes = Seq(fieldIter("#f:" + ev, inExclude, blockSize, n, avgdl))
+      val brute = bruteScore(corpus, terms, nDocs, conj || usePhrase, phrase = phrase)
+        .filter(s => !useF || s.docId % m == fv)
+        .filter(s => !useE || s.docId % m != ev)
+        .take(k)
+      val qt = terms.filter(df.contains)
+      val fs: Seq[Wand.DocCursor] = if (useF) filters else Nil
+      val es: Seq[Wand.DocCursor] = if (useE) excludes else Nil
+      val got =
+        if ((conj || usePhrase) && qt.size < terms.size) Array.empty[Scored]
+        else if (usePhrase) Wand.topKPhrase(iters, phrase, k, fs, es)
+        else if (conj) Wand.topKConjunctive(iters, k, fs, es)
+        else Wand.topK(iters, k, fs, es)
+      assert(got.toSeq == brute,
+        s"filtered mismatch: terms=$terms phrase=$phrase m=$m fv=$fv ev=$ev useF=$useF " +
+          s"useE=$useE conj=$conj k=$k\n got=${got.toSeq}\n want=$brute")
+    }
+
     for (i <- 1 to 150) {
       val vocab = 3 + rnd.nextInt(12)
       val nDocs = 10 + rnd.nextInt(400)
@@ -382,36 +451,13 @@ class WandSpec extends AnyFunSuite {
       val terms =
         if (usePhrase) phrase.distinct.sorted
         else Seq.fill(1 + rnd.nextInt(3))("t" + rnd.nextInt(vocab)).distinct.sorted
-      val k = 1 + rnd.nextInt(15)
-      val blockSize = Seq(4, 16, 128)(i % 3)
-      val conj = i % 4 == 1
-      // synthetic keyword field: doc's value = docId mod m
-      val m = 2 + rnd.nextInt(3)
-      val fv = rnd.nextInt(m)
-      val ev = rnd.nextInt(m)
-      val inFilter = (0 until nDocs).filter(_ % m == fv)
-      val inExclude = (0 until nDocs).filter(_ % m == ev)
-      val (iters, df, n, avgdl) = buildIters(corpus, terms, blockSize)
-      val filters = Seq(fieldIter("#f:" + fv, inFilter, blockSize, n, avgdl))
-      val excludes = Seq(fieldIter("#f:" + ev, inExclude, blockSize, n, avgdl))
-      val useF = i % 3 != 0
-      val useE = i % 3 != 1
-      val brute = bruteScore(corpus, terms, nDocs, conj || usePhrase, phrase = phrase)
-        .filter(s => !useF || s.docId % m == fv)
-        .filter(s => !useE || s.docId % m != ev)
-        .take(k)
-      val qt = terms.filter(df.contains)
-      val fs: Seq[Wand.DocCursor] = if (useF) filters else Nil
-      val es: Seq[Wand.DocCursor] = if (useE) excludes else Nil
-      val got =
-        if ((conj || usePhrase) && qt.size < terms.size) Array.empty[Scored]
-        else if (usePhrase) Wand.topKPhrase(iters, phrase, k, fs, es)
-        else if (conj) Wand.topKConjunctive(iters, k, fs, es)
-        else Wand.topK(iters, k, fs, es)
-      assert(got.toSeq == brute,
-        s"filtered mismatch: terms=$terms phrase=$phrase m=$m fv=$fv ev=$ev useF=$useF " +
-          s"useE=$useE conj=$conj k=$k\n got=${got.toSeq}\n want=$brute")
+      run(corpus, terms, phrase, 1 + rnd.nextInt(15), Seq(4, 16, 128)(i % 3),
+        conj = i % 4 == 1, useF = i % 3 != 0, useE = i % 3 != 1)
     }
+    // skewed OR cases: filter and must_not over a keyword field
+    for ((k, bs) <- skewGrid; j <- 0 until 3)
+      run(skewedCorpus(1500), skewedQuery(), null, k, bs, conj = false,
+        useF = j != 0, useE = j != 1)
   }
 
   /** Does `doc` sloppy-match the phrase (Lucene/ES model)? Exhaustive
@@ -509,6 +555,20 @@ class WandSpec extends AnyFunSuite {
   }
 
   test("should + minimum_should_match ≡ exhaustive on 150 random cases (OR and AND musts)") {
+    def run(corpus: Array[Array[String]], must: Seq[String], should: Seq[String], m: Int,
+        k: Int, blockSize: Int, conj: Boolean): Unit = {
+      val (mIters, _, _, _) = buildIters(corpus, must, blockSize)
+      val (sIters, _, _, _) = buildIters(corpus, should, blockSize)
+      val brute = bruteShould(corpus, must, should, k, conj, m)
+      val got =
+        if (conj && mIters.size < must.size) Array.empty[Scored]
+        else if (conj) Wand.topKConjunctive(mIters, k, Nil, Nil, sIters, m)
+        else Wand.topK(mIters, k, Nil, Nil, sIters, m)
+      assert(got.toSeq == brute,
+        s"should mismatch: must=$must should=$should m=$m conj=$conj k=$k\n" +
+          s" got=${got.toSeq}\n want=$brute")
+    }
+
     for (i <- 1 to 150) {
       val vocab = 3 + rnd.nextInt(10)
       val nDocs = 10 + rnd.nextInt(300)
@@ -517,47 +577,27 @@ class WandSpec extends AnyFunSuite {
       val must = Seq.fill(nMust)("t" + rnd.nextInt(vocab)).distinct.sorted
       val should = Seq.fill(1 + rnd.nextInt(3))("t" + rnd.nextInt(vocab))
         .distinct.filterNot(must.contains).sorted
-      if (should.nonEmpty) {
-        val m = rnd.nextInt(should.size + 1)
-        val k = 1 + rnd.nextInt(12)
-        val blockSize = Seq(4, 16, 128)(i % 3)
-        val conj = nMust > 0 && i % 2 == 0
-        val (mIters, _, _, _) = buildIters(corpus, must, blockSize)
-        val (sIters, _, _, _) = buildIters(corpus, should, blockSize)
-        val brute = bruteShould(corpus, must, should, k, conj, m)
-        val got =
-          if (conj && mIters.size < must.size) Array.empty[Scored]
-          else if (conj) Wand.topKConjunctive(mIters, k, Nil, Nil, sIters, m)
-          else Wand.topK(mIters, k, Nil, Nil, sIters, m)
-        assert(got.toSeq == brute,
-          s"should mismatch: must=$must should=$should m=$m conj=$conj k=$k\n" +
-            s" got=${got.toSeq}\n want=$brute")
-      }
+      if (should.nonEmpty)
+        run(corpus, must, should, rnd.nextInt(should.size + 1), 1 + rnd.nextInt(12),
+          Seq(4, 16, 128)(i % 3), conj = nMust > 0 && i % 2 == 0)
+    }
+    // skewed OR musts: "all" / heads / rares split between the groups
+    for ((k, bs) <- skewGrid; nMust <- 0 until 3) {
+      val q = skewedQuery()
+      val must = rnd.shuffle(q).take(nMust).sorted
+      val should = q.filterNot(must.contains)
+      run(skewedCorpus(1500), must, should, rnd.nextInt(math.min(3, should.size + 1)), k, bs,
+        conj = false)
     }
   }
 
   test("search_after pages tile the full ranking on 100 random cases (OR/AND/phrase)") {
-    for (i <- 1 to 100) {
-      val vocab = 3 + rnd.nextInt(8)
-      val nDocs = 20 + rnd.nextInt(300)
-      val corpus = randomCorpus(nDocs, vocab)
-      val phraseMode = i % 4 == 3
-      val phrase: Seq[String] =
-        if (!phraseMode) null
-        else {
-          val d = corpus(rnd.nextInt(nDocs))
-          if (d.length >= 2) { val s0 = rnd.nextInt(d.length - 1); d.slice(s0, s0 + 2).toSeq }
-          else Seq.fill(2)("t" + rnd.nextInt(vocab))
-        }
-      val terms =
-        if (phraseMode) phrase.distinct.sorted
-        else Seq.fill(1 + rnd.nextInt(3))("t" + rnd.nextInt(vocab)).distinct.sorted
-      val conj = !phraseMode && i % 4 == 1
-      val k = 2 + rnd.nextInt(8)
-      val blockSize = Seq(4, 16, 128)(i % 3)
+    def tile(corpus: Array[Array[String]], terms: Seq[String], phrase: Seq[String],
+        conj: Boolean, k: Int, blockSize: Int): Unit = {
+      val phraseMode = phrase != null
       val (_, df, _, _) = buildIters(corpus, terms, blockSize)
       if (terms.forall(df.contains)) {
-        val full = bruteScore(corpus, terms, nDocs, conj || phraseMode, phrase = phrase)
+        val full = bruteScore(corpus, terms, corpus.length, conj || phraseMode, phrase = phrase)
         def run(after: Scored): Array[Scored] = {
           // fresh iterators per page (cursors are stateful)
           val (it, _, _, _) = buildIters(corpus, terms, blockSize)
@@ -578,6 +618,27 @@ class WandSpec extends AnyFunSuite {
             s" got=$pages\n want=$full")
       }
     }
+
+    for (i <- 1 to 100) {
+      val vocab = 3 + rnd.nextInt(8)
+      val nDocs = 20 + rnd.nextInt(300)
+      val corpus = randomCorpus(nDocs, vocab)
+      val phraseMode = i % 4 == 3
+      val phrase: Seq[String] =
+        if (!phraseMode) null
+        else {
+          val d = corpus(rnd.nextInt(nDocs))
+          if (d.length >= 2) { val s0 = rnd.nextInt(d.length - 1); d.slice(s0, s0 + 2).toSeq }
+          else Seq.fill(2)("t" + rnd.nextInt(vocab))
+        }
+      val terms =
+        if (phraseMode) phrase.distinct.sorted
+        else Seq.fill(1 + rnd.nextInt(3))("t" + rnd.nextInt(vocab)).distinct.sorted
+      tile(corpus, terms, phrase, conj = !phraseMode && i % 4 == 1, 2 + rnd.nextInt(8),
+        Seq(4, 16, 128)(i % 3))
+    }
+    // skewed OR pages: θ comes from a page's own docs, never from `after`
+    for ((k, bs) <- skewGrid) tile(skewedCorpus(400), skewedQuery(), null, conj = false, k, bs)
   }
 
   test("SortedArrayCursor ≡ linear reference; tombstone excludes ≡ posting-list excludes") {

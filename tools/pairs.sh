@@ -9,14 +9,17 @@
 # the change. Prints one line per pair (cpu_us_per_unit, setup_s,
 # index_bytes_per_turn, failed for both sides), then the number of pairs
 # where the change's cpu_us_per_unit is lower, each side's median and
-# quartiles (inclusive method), the parent's interquartile range and the
-# total `failed`.
+# quartiles (inclusive method), the parent's interquartile range, the
+# claim verdict and the total `failed`. The verdict is the paired rule for
+# a gain on cpu_us_per_unit (lower is better): the change is lower in at
+# least 9/10 of all pairs run (ties and pairs missing a result count as
+# losses) and its median is below the parent's by more than the parent's IQR.
 # The raw result lines go to pairs-<workload>-<first>-<last>.jsonl in the
 # current directory. Run nothing else on the host meanwhile.
 set -euo pipefail
 
 if [ $# -lt 5 ]; then
-  sed -n '2,15p' "$0" >&2
+  sed -n '2,19p' "$0" >&2
   exit 2
 fi
 P=$(cd "$1" && pwd)
@@ -71,6 +74,10 @@ if cpu_p:
           f"parent median {mp:.1f} (quartiles {p1:.1f}, {p3:.1f}, IQR {p3 - p1:.1f}); "
           f"change median {mc:.1f} (quartiles {c1:.1f}, {c3:.1f}); "
           f"change vs parent {100 * (mc - mp) / mp:+.1f}%")
+    gain = wins >= 0.9 * len(runs) and mp - mc > p3 - p1
+    print(f"claim verdict (cpu_us_per_unit lower): {'GAIN' if gain else 'NO GAIN'}: "
+          f"change lower in {wins}/{len(runs)} pairs (needs >= 9/10), "
+          f"median drop {mp - mc:.1f} vs parent IQR {p3 - p1:.1f} (needs drop > IQR)")
 for n in names[1:]:
     vp = [metric(runs[s].get("parent"), n) for s in sorted(runs) if runs[s].get("parent")]
     vc = [metric(runs[s].get("change"), n) for s in sorted(runs) if runs[s].get("change")]
