@@ -8,10 +8,13 @@ import graft.analysis.Analyzer
 import graft.index.{Codec, FieldTerms, GraftHash, Tombstones}
 import graft.model.{IndexStats, PostingBlock, Scored, TermStats}
 
-/** One query of a batched `_msearch`-style request
-  * ([[Searcher.searchManyBool]]): the FULL bool surface, including
-  * lexicographic `rangeFilters` (all specs' ranges expand in ONE
-  * batched dictionary scan — the one-job contract holds).
+/** One ES bool query: the FULL bool surface, including lexicographic
+  * `rangeFilters`. A spec compiles to the engine's one query value
+  * ([[ResolvedQuery]]); [[Searcher.searchBool]] runs one spec,
+  * [[Searcher.searchManyBool]] a batched `_msearch`-style request (all
+  * specs' ranges expand in ONE batched dictionary scan — the one-job
+  * contract holds), and the match-set aggregations take their
+  * membership from the same compiled value.
   */
 final case class BoolQuerySpec(
     query: String = "",
@@ -466,30 +469,34 @@ private[query] object Searcher {
   }
 }
 
-/** Driver-resolved execution state of one query (serializable — rides
-  * the task closure of the single job of [[Searcher.searchManyBool]] and
-  * of every top-k query): OR (MaxScore), AND (intersection), or phrase
-  * (intersection + position adjacency; `slots` = analyzed phrase terms
-  * in order, possibly repeating). All term lists are restricted to
-  * GLOBALLY-found terms; [[Searcher.runGroup]] re-checks group-local
-  * presence. `clauses` are required-but-unscored clauses (ES bool
-  * `filter` context): each is a disjunction of fielded keyword terms
-  * ([[graft.index.FieldTerms]]) — a `term` filter is a 1-element
-  * clause, a `terms`/`range` filter a multi-element one; a doc must
-  * satisfy EVERY clause. `excludes` veto their docs (`must_not`).
-  * `shoulds` are OPTIONAL scoring terms (ES bool `should`): matched ones
-  * add score, and a doc must match ≥ `minShould` of them. `after` is the
-  * ES `search_after` cursor on the (score desc, docId asc) sort key.
+/** THE query value of every ranked entry point and of the match set the
+  * aggregations run over: each entry point builds one (a
+  * [[BoolQuerySpec]] compiles to one), [[visibleIn]] resolves it against
+  * the dictionaries, and the resolved value runs (serializable — it rides
+  * the task closure of the one distributed job, or the warm in-process
+  * call). OR (MaxScore), AND (intersection), or phrase (intersection +
+  * position adjacency; `slots` = analyzed phrase terms in order, possibly
+  * repeating). Once resolved, every term list holds only GLOBALLY-found
+  * terms and `scored` / `excludes` are distinct and ascending;
+  * [[Searcher.runGroup]] re-checks group-local presence. `clauses` are
+  * required-but-unscored clauses (ES bool `filter` context): each is a
+  * disjunction of fielded keyword terms ([[graft.index.FieldTerms]]) — a
+  * `term` filter is a 1-element clause, a `terms`/`range` filter a
+  * multi-element one; a doc must satisfy EVERY clause. `excludes` veto
+  * their docs (`must_not`). `shoulds` are OPTIONAL scoring terms (ES bool
+  * `should`): matched ones add score, and a doc must match ≥ `minShould`
+  * of them. `after` is the ES `search_after` cursor on the (score desc,
+  * docId asc) sort key.
   */
 private[query] final case class ResolvedQuery(
     scored: Seq[String],
-    shoulds: Seq[String],
-    clauses: Seq[Seq[String]],
-    excludes: Seq[String],
-    conjunctive: Boolean,
-    slots: Seq[String],
-    minShould: Int,
-    slop: Int,
+    shoulds: Seq[String] = Nil,
+    clauses: Seq[Seq[String]] = Nil,
+    excludes: Seq[String] = Nil,
+    conjunctive: Boolean = false,
+    slots: Seq[String] = null,
+    minShould: Int = 0,
+    slop: Int = 0,
     /** Per-term score multipliers (ES `multi_match` field boosts, keyed
       * by the namespaced term); absent terms score with boost 1.
       */
@@ -516,6 +523,30 @@ private[query] final case class ResolvedQuery(
   /** Every dictionary term the query reads postings of. */
   def terms: Seq[String] =
     scored ++ shoulds ++ clauses.flatten ++ excludes ++ Option(prefixExpansions).getOrElse(Nil)
+
+  /** This query restricted to the terms `found` in the visible corpus, or
+    * None when it can have no hits there. These are the early-empty
+    * rules of every query path; with every term found (`_ => true`) only
+    * the rules that need no dictionary can fire.
+    */
+  def visibleIn(found: String => Boolean): Option[ResolvedQuery] = {
+    val all = scored.distinct.sorted
+    val sc = all.filter(found)
+    val sh = shoulds.filter(found)
+    val cl = clauses.map(_.filter(found))
+    val px = if (prefixExpansions == null) null else prefixExpansions.filter(found)
+    val empty =
+      (all.isEmpty && shoulds.isEmpty && prefixExpansions == null) || // nothing to match
+        (slots != null && slots.isEmpty) || // a phrase without tokens
+        (all.nonEmpty && sc.isEmpty) || // every scored term absent
+        ((conjunctive || slots != null) && sc.size < all.size) || // a required term absent
+        cl.exists(_.isEmpty) || // a filter clause with no value present
+        sh.size < minShould || // too few shoulds present
+        (px != null && px.isEmpty) // no match_phrase_prefix expansion present
+    if (empty) None
+    else Some(copy(scored = sc, shoulds = sh, clauses = cl,
+      excludes = excludes.distinct.sorted.filter(found), prefixExpansions = px))
+  }
 }
 
 /** BM25 top-k execution over an index read as a list of SEGMENTS plus
@@ -650,14 +681,19 @@ class Searcher private[query] (
     */
   def warm(maxDriverDictTerms: Long = 5_000_000L,
       maxLocalBlockBytes: Long = 1L << 30): this.type = {
-    def pin(df: DataFrame): Unit = {
+    def pinned(df: DataFrame): DataFrame = {
       // idempotent persist: a second searcher over the same dir (or a
       // re-warm) must not re-ask the CacheManager (noisy WARN, no-op)
       if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
         df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df.count()
+      df
     }
-    segBlocks.foreach(pin)
+    // the pass that materializes each segment's block cache also sums the
+    // blocks' estimated heap bytes (the local-serving budget)
+    val blockBytes = segBlocks.map(b => pinned(b).agg(coalesce(sum(
+      (length(col("docs")) + length(col("tfs")) + length(col("dls"))
+        + length(col("poss")) + lit(64)) * lit(LocalHeapExpansion)), lit(0L)))
+      .head().getLong(0)).sum
     // one bounded collect per segment: the driver never holds more than
     // maxDriverDictTerms + 1 rows, and a segment past the cap is not read
     var remaining = maxDriverDictTerms
@@ -671,21 +707,20 @@ class Searcher private[query] (
     }
     if (remaining >= 0)
       localDict = dictRows.flatten.groupBy(_._2.term).view.mapValues(_.toSeq).toMap
-    else segDicts.foreach(pin)
-    if (maxLocalBlockBytes > 0 && localDict != null) {
-      val bytes = segBlocks.map(_.agg(coalesce(sum(
-        (length(col("docs")) + length(col("tfs")) + length(col("dls"))
-          + length(col("poss")) + lit(64)) * lit(LocalHeapExpansion)), lit(0L)))
-        .head().getLong(0)).sum
-      if (bytes <= maxLocalBlockBytes) {
-        val termOf: Map[(Int, Long), String] = localDict.iterator
-          .flatMap { case (t, xs) => xs.map { case (i, ts) => (i, ts.termId) -> t } }.toMap
-        localLists = segBlocks.zipWithIndex.flatMap { case (b, i) =>
-          b.as[PostingBlock].collect().map(pb => termOf((i, pb.termId)) -> pb)
-        }.groupMap(_._1)(_._2).map { case (t, bs) => t -> Searcher.docIdOrdered(t, bs.toArray) }
-        localTomb = Searcher.docIdOrdered("tombstones",
-          tombBlocks.map(_.collect().map(_._3)).getOrElse(Array.empty))
-      }
+    else segDicts.foreach(d => pinned(d).count())
+    if (maxLocalBlockBytes > 0 && localDict != null && blockBytes <= maxLocalBlockBytes) {
+      val termOf: Map[(Int, Long), String] = localDict.iterator
+        .flatMap { case (t, xs) => xs.map { case (i, ts) => (i, ts.termId) -> t } }.toMap
+      // every segment's cached blocks in one collect
+      localLists = segBlocks.zipWithIndex
+        .map { case (b, i) =>
+          b.select(lit(i).as("_1"), struct(Searcher.BlockCols.map(col): _*).as("_2"))
+        }
+        .reduce(_ unionByName _).as[(Int, PostingBlock)].collect()
+        .map { case (i, pb) => termOf((i, pb.termId)) -> pb }
+        .groupMap(_._1)(_._2).map { case (t, bs) => t -> Searcher.docIdOrdered(t, bs) }
+      localTomb = Searcher.docIdOrdered("tombstones",
+        tombBlocks.map(_.collect().map(_._3)).getOrElse(Array.empty))
     }
     if (storedBounds) localBounds = StoredBounds else rescoreLocalBounds()
     this
@@ -1044,51 +1079,33 @@ class Searcher private[query] (
         .withColumn("seg", lit(i)))
     }.reduceOption(_ unionByName _)
 
-  /** Resolve one query against the dictionaries and run it: the
-    * early-empty rules (a required term or a whole filter clause absent
-    * from the visible corpus ⇒ no hits) apply once on the driver, the
-    * rest per group in [[Searcher.runGroup]].
+  /** THE top-k query path: one dictionary lookup for every query's terms,
+    * [[ResolvedQuery.visibleIn]] per query, then one [[execute]] of the
+    * queries that can have hits. Results align with `queries`. `from`
+    * skips each query's first `from` ranked hits (the top-k heap grows to
+    * from + k — the documented ES deep-paging cost). k = 0 runs nothing.
     */
-  private def run(terms: Seq[String], k: Int, conjunctive: Boolean,
-      slots: Seq[String] = null,
-      filterClauses: Seq[Seq[String]] = Nil,
-      excludeTerms: Seq[String] = Nil,
-      shouldTerms: Seq[String] = Nil,
-      minShould: Int = 0,
-      after: Scored = null,
-      slop: Int = 0,
-      boosts: Map[String, Double] = Map.empty,
-      bestFields: Wand.BestFields = null,
-      prefixExpansions: Seq[String] = null,
-      spanFirstEnd: Int = -1): Array[Scored] = {
-    val distinctTerms = terms.distinct.sorted
-    if ((distinctTerms.isEmpty && shouldTerms.isEmpty && prefixExpansions == null) || k <= 0)
-      return Array.empty
-    val (dfGlobal, perSeg) =
-      lookup((distinctTerms ++ filterClauses.flatten ++ excludeTerms ++ shouldTerms ++
-        Option(prefixExpansions).getOrElse(Nil)).distinct.sorted)
-    if (distinctTerms.nonEmpty && !distinctTerms.exists(dfGlobal.contains))
-      return Array.empty
-    // a clause with no value present in any segment ⇒ nothing can match
-    // (a trie range clause keeps only the cells some doc carries)
-    val clauses = filterClauses.map(_.filter(dfGlobal.contains))
-    if (clauses.exists(_.isEmpty)) return Array.empty
-    if ((conjunctive || slots != null) && distinctTerms.exists(t => !dfGlobal.contains(t)))
-      return Array.empty
-    val shouldFound = shouldTerms.filter(dfGlobal.contains)
-    if (shouldFound.size < minShould) return Array.empty
-    val prefixFound =
-      if (prefixExpansions == null) null
-      else prefixExpansions.filter(dfGlobal.contains)
-    if (prefixFound != null && prefixFound.isEmpty) return Array.empty
-    // scored terms never overlap clause / exclude terms: those live in
-    // the '#'/'%' namespaces
-    val w = ResolvedQuery(distinctTerms.filter(dfGlobal.contains), shouldFound,
-      clauses, excludeTerms.distinct.sorted.filter(dfGlobal.contains),
-      conjunctive, slots, minShould, slop, boosts, bestFields, prefixFound,
-      spanFirstEnd, after)
-    execute(Seq(w), k, perSeg, dfGlobal).head
+  private def runAll(queries: Seq[ResolvedQuery], k: Int, from: Int = 0): Seq[Array[Scored]] = {
+    require(k >= 0, s"k must be >= 0, got $k")
+    require(from >= 0, s"from must be >= 0, got $from")
+    val none = queries.map(_ => Array.empty[Scored])
+    // a query empty whatever the dictionary holds adds no terms to look up
+    val possible = queries.filter(_.visibleIn(_ => true).isDefined)
+    if (k == 0 || possible.isEmpty) return none
+    val (dfGlobal, perSeg) = lookup(possible.flatMap(_.terms).distinct.sorted)
+    val active = queries.zipWithIndex.flatMap { case (q, i) =>
+      q.visibleIn(dfGlobal.contains).map(i -> _)
+    }
+    if (active.isEmpty) return none
+    val hits = active.map(_._1).zip(execute(active.map(_._2), from + k, perSeg, dfGlobal)).toMap
+    queries.indices.map(i => hits.get(i) match {
+      case Some(h) => if (from == 0) h else h.slice(from, from + k)
+      case None => Array.empty[Scored]
+    })
   }
+
+  private def runOne(q: ResolvedQuery, k: Int, from: Int = 0): Array[Scored] =
+    runAll(Seq(q), k, from).head
 
   /** Run resolved queries; results align with `work`. A warm searcher
     * runs them in-process over its term-keyed lists ([[runLocal]]).
@@ -1181,21 +1198,18 @@ class Searcher private[query] (
     * from + k — the documented ES deep-paging cost).
     */
   def search(query: String, k: Int, from: Int = 0): Array[Scored] =
-    page(run(Analyzer.analyzeQuery(query).toSeq, from + k, conjunctive = false), from, k)
-
-  private def page(hits: Array[Scored], from: Int, k: Int): Array[Scored] =
-    if (from == 0) hits else hits.slice(from, from + k)
+    runOne(ResolvedQuery(Analyzer.analyzeQuery(query).toSeq), k, from)
 
   /** ES `search_after` page continuation: the next k hits strictly after
     * the (score, docId) cursor — sound with WAND because the cursor only
     * filters offers; pruning still uses the page's own θ.
     */
   def searchAfter(query: String, k: Int, after: Scored): Array[Scored] =
-    run(Analyzer.analyzeQuery(query).toSeq, k, conjunctive = false, after = after)
+    runOne(ResolvedQuery(Analyzer.analyzeQuery(query).toSeq, after = after), k)
 
   /** Conjunctive (AND) BM25 top-k. */
   def searchConjunctive(query: String, k: Int, from: Int = 0): Array[Scored] =
-    page(run(Analyzer.analyzeQuery(query).toSeq, from + k, conjunctive = true), from, k)
+    runOne(ResolvedQuery(Analyzer.analyzeQuery(query).toSeq, conjunctive = true), k, from)
 
   /** Phrase top-k (ES `match_phrase`): docs whose analyzed token stream
     * contains the analyzed query tokens ADJACENTLY in order, ranked by
@@ -1211,9 +1225,7 @@ class Searcher private[query] (
         */
       slop: Int = 0): Array[Scored] = {
     val slots = Analyzer.tokenize(query).toSeq // order + duplicates kept
-    if (slots.isEmpty) return Array.empty
-    page(run(slots.distinct.sorted, from + k, conjunctive = false, slots = slots, slop = slop),
-      from, k)
+    runOne(ResolvedQuery(slots, slots = slots, slop = slop), k, from)
   }
 
   /** Lucene/ES `span_first`: the analyzed query must occur — exact
@@ -1231,8 +1243,7 @@ class Searcher private[query] (
   def searchSpanFirst(query: String, end: Int, k: Int): Array[Scored] = {
     require(end > 0, "span_first end must be positive")
     val slots = Analyzer.tokenize(query).toSeq
-    if (slots.isEmpty) return Array.empty
-    run(slots.distinct.sorted, k, conjunctive = false, slots = slots, spanFirstEnd = end)
+    runOne(ResolvedQuery(slots, slots = slots, spanFirstEnd = end), k)
   }
 
   /** ES `min_score`: the plain disjunctive top-k with hits scoring below
@@ -1275,10 +1286,8 @@ class Searcher private[query] (
     val p = toks.last
     val fixed = toks.init.map(t => FieldTerms.textTerm(field, t))
     val exp = expand(_.startsWith(p), _.startsWith(p), maxExpansions, field)
-    if (exp.isEmpty) return Array.empty
-    page(run(fixed.distinct.sorted, from + k, conjunctive = false,
-      slots = fixed :+ Searcher.PrefixSlot, slop = slop, prefixExpansions = exp.map(_._1).sorted),
-      from, k)
+    runOne(ResolvedQuery(fixed, slots = fixed :+ Searcher.PrefixSlot, slop = slop,
+      prefixExpansions = exp.map(_._1).sorted), k, from)
   }
 
   /** Batched execution: N OR queries through the one-job batched path
@@ -1290,102 +1299,61 @@ class Searcher private[query] (
     qs.zip(searchManyBool(qs.map(q => BoolQuerySpec(query = q)), k)).toMap
   }
 
-  /** Analyzed (slots, scored terms, boosts, best-fields fold) of a bool
-    * query's `must` text — shared by [[searchBool]] and
-    * [[searchManyBool]]: `field` ("text" = main field) scores under that
-    * field's stats; non-empty `mm` (ES `multi_match`) overrides it, every
-    * (field, boost) scoring the query's tokens boost-scaled.
+  /** The query values of bool specs, with ONE range expansion for the
+    * whole batch. Per spec: the `must` text's terms (`field` scores under
+    * that field's stats; non-empty `multiMatchFields` overrides it, every
+    * (field, boost) scoring the query's tokens boost-scaled), the
+    * `should` terms not already in the must group, one filter clause per
+    * keyword / terms / trie-range / exists / lexicographic-range filter,
+    * and the must_not terms (keyword values, missing-field exists
+    * markers, the analyzed tokens of `mustNotText`).
     */
-  private def mustTerms(query: String, field: String, phrase: Boolean,
-      mm: Seq[(String, Double)], multiMatchBest: Boolean, tieBreaker: Double)
-      : (Seq[String], Seq[String], Map[String, Double], Wand.BestFields) = {
-    val toks = Analyzer.tokenize(query).toSeq
-    val slots = if (phrase) toks.map(t => FieldTerms.textTerm(field, t)) else null
-    val scoredTerms =
-      if (mm.nonEmpty)
-        (for ((f, _) <- mm; t <- toks.distinct) yield FieldTerms.textTerm(f, t)).distinct.sorted
-      else if (phrase) slots.distinct.sorted
-      else toks.distinct.sorted.map(t => FieldTerms.textTerm(field, t))
-    val boosts: Map[String, Double] =
-      if (mm.isEmpty) Map.empty
-      else (for ((f, b) <- mm; t <- toks.distinct) yield FieldTerms.textTerm(f, t) -> b).toMap
-    val bf =
-      if (mm.nonEmpty && multiMatchBest) Wand.BestFields.of(mm.map(_._1), toks, tieBreaker)
-      else null
-    (slots, scoredTerms, boosts, bf)
+  private def compile(specs: Seq[BoolQuerySpec]): Seq[ResolvedQuery] = {
+    specs.foreach(sp => guardExists(sp.exists, sp.missing))
+    val rangeExp = expandFieldRanges(specs.flatMap(_.rangeFilters))
+    specs.map { sp =>
+      val mm = sp.multiMatchFields
+      require(mm.isEmpty || (!sp.phrase && !sp.conjunctive),
+        "multiMatchFields is OR-mode only (like multiMatch)")
+      val toks = Analyzer.tokenize(sp.query).toSeq
+      val slots = if (sp.phrase) toks.map(t => FieldTerms.textTerm(sp.field, t)) else null
+      val fieldBoosts = if (mm.nonEmpty) mm else Seq(sp.field -> 1.0)
+      val termBoosts = for ((f, b) <- fieldBoosts; t <- toks.distinct)
+        yield FieldTerms.textTerm(f, t) -> b
+      val scored = termBoosts.map(_._1).distinct.sorted
+      ResolvedQuery(scored,
+        shoulds = Analyzer.analyzeQuery(sp.should).filterNot(scored.contains).toSeq,
+        clauses = sp.filters.map { case (f, v) => Seq(FieldTerms.term(f, v)) } ++
+          sp.anyFilters.map { case (f, vs) => vs.distinct.map(v => FieldTerms.term(f, v)) } ++
+          sp.numericRangeFilters.map { case (f, lo, hi) => FieldTerms.trieRangeTerms(f, lo, hi) } ++
+          sp.exists.map(f => Seq(FieldTerms.existsTerm(f))) ++
+          sp.rangeFilters.map(rangeExp),
+        excludes = sp.mustNot.map { case (f, v) => FieldTerms.term(f, v) } ++
+          sp.missing.map(f => FieldTerms.existsTerm(f)) ++
+          sp.mustNotText.flatMap { case (f, w) =>
+            Analyzer.tokenize(w).map(t => FieldTerms.textTerm(f, t)) },
+        conjunctive = sp.conjunctive, slots = slots, minShould = sp.minShouldMatch,
+        slop = sp.phraseSlop,
+        boosts = if (mm.isEmpty) Map.empty else termBoosts.toMap,
+        bestFields =
+          if (mm.nonEmpty && sp.multiMatchBest) Wand.BestFields.of(mm.map(_._1), toks, sp.tieBreaker)
+          else null)
+    }
   }
-
-  /** Filter-context clauses (each a disjunction of fielded terms) of
-    * the bool keyword/numeric/exists filters; lexicographic ranges are
-    * expanded by the caller.
-    */
-  private def filterClauses(filters: Seq[(String, String)],
-      anyFilters: Seq[(String, Seq[String])],
-      numericRangeFilters: Seq[(String, Long, Long)],
-      exists: Seq[String]): Seq[Seq[String]] =
-    filters.map { case (f, v) => Seq(FieldTerms.term(f, v)) } ++
-      anyFilters.map { case (f, vs) => vs.distinct.map(v => FieldTerms.term(f, v)) } ++
-      numericRangeFilters.map { case (f, lo, hi) => FieldTerms.trieRangeTerms(f, lo, hi) } ++
-      exists.map(f => Seq(FieldTerms.existsTerm(f)))
-
-  /** must_not terms: keyword values, missing-field exists markers, and
-    * the analyzed tokens of `mustNotText` words.
-    */
-  private def excludeTermsOf(mustNot: Seq[(String, String)], missing: Seq[String],
-      mustNotText: Seq[(String, String)]): Seq[String] =
-    (mustNot.map { case (f, v) => FieldTerms.term(f, v) } ++
-      missing.map(f => FieldTerms.existsTerm(f)) ++
-      mustNotText.flatMap { case (f, w) =>
-        Analyzer.tokenize(w).map(t => FieldTerms.textTerm(f, t)) }).distinct
 
   /** Batched execution of FULL bool queries — the ES `_msearch` shape: N
     * heterogeneous queries (OR / AND / phrase+slop / filters / must_not /
     * terms / trie ranges / lexicographic ranges / should +
-    * minimum_should_match / multi_match) in ONE Spark job. One
-    * dictionary lookup, one batched range expansion and one pruned block
-    * scan cover the union of every spec's terms; per group, each spec
-    * runs through the same [[Searcher.runGroup]] dispatch as its
-    * standalone API, so results are identical to issuing the specs one
-    * at a time (test-pinned). Warm searchers answer in-process with zero
-    * jobs.
+    * minimum_should_match / multi_match) compiled to query values and run
+    * by the one top-k path in ONE Spark job: one batched range expansion,
+    * one dictionary lookup and one pruned block scan cover the union of
+    * every spec's terms. Each spec is exactly the query value its
+    * standalone [[searchBool]] call builds, so results are identical to
+    * issuing the specs one at a time (test-pinned). Warm searchers answer
+    * in-process with zero jobs.
     */
-  def searchManyBool(specs: Seq[BoolQuerySpec], k: Int): Seq[Array[Scored]] = {
-    specs.foreach(sp => guardExists(sp.exists, sp.missing))
-    val rangeExp = expandFieldRanges(specs.flatMap(_.rangeFilters))
-    final case class Prep(slots: Seq[String], scored: Seq[String], should: Seq[String],
-        clauses: Seq[Seq[String]], excludes: Seq[String], boosts: Map[String, Double],
-        bf: Wand.BestFields)
-    val preps = specs.map { sp =>
-      require(sp.multiMatchFields.isEmpty || (!sp.phrase && !sp.conjunctive),
-        "multiMatchFields is OR-mode only (like multiMatch)")
-      val (slots, scored, boosts, bf) = mustTerms(sp.query, sp.field, sp.phrase,
-        sp.multiMatchFields, sp.multiMatchBest, sp.tieBreaker)
-      Prep(slots, scored, Analyzer.analyzeQuery(sp.should).filterNot(scored.contains).toSeq,
-        filterClauses(sp.filters, sp.anyFilters, sp.numericRangeFilters, sp.exists) ++
-          sp.rangeFilters.map(rangeExp),
-        excludeTermsOf(sp.mustNot, sp.missing, sp.mustNotText), boosts, bf)
-    }
-    val (dfGlobal, perSeg) = lookup(preps.flatMap(p =>
-      p.scored ++ p.should ++ p.clauses.flatten ++ p.excludes).distinct.sorted)
-    // per-spec resolution mirrors run's early-empty rules exactly
-    val active: Seq[(Int, ResolvedQuery)] = preps.zip(specs).zipWithIndex.flatMap {
-      case ((p, sp), i) =>
-        val foundClauses = p.clauses.map(_.filter(dfGlobal.contains))
-        val shouldFound = p.should.filter(dfGlobal.contains)
-        if ((p.scored.isEmpty && p.should.isEmpty) ||
-          (sp.phrase && p.slots.isEmpty) ||
-          foundClauses.exists(_.isEmpty) ||
-          ((sp.conjunctive || sp.phrase) && p.scored.exists(t => !dfGlobal.contains(t))) ||
-          (p.scored.nonEmpty && !p.scored.exists(dfGlobal.contains)) ||
-          shouldFound.size < sp.minShouldMatch) None
-        else Some(i -> ResolvedQuery(p.scored.filter(dfGlobal.contains), shouldFound,
-          foundClauses, p.excludes.filter(dfGlobal.contains), sp.conjunctive, p.slots,
-          sp.minShouldMatch, sp.phraseSlop, p.boosts, p.bf))
-    }
-    if (active.isEmpty) return specs.map(_ => Array.empty[Scored])
-    val byIdx = active.map(_._1).zip(execute(active.map(_._2), k, perSeg, dfGlobal)).toMap
-    specs.indices.map(i => byIdx.getOrElse(i, Array.empty[Scored]))
-  }
+  def searchManyBool(specs: Seq[BoolQuerySpec], k: Int): Seq[Array[Scored]] =
+    runAll(compile(specs), k)
 
   /** Fielded `match` (ES `{"match": {"<field>": ...}}`): BM25 top-k over
     * ONE analyzed text field of an index built with
@@ -1399,11 +1367,9 @@ class Searcher private[query] (
     */
   def searchField(field: String, query: String, k: Int,
       conjunctive: Boolean = false, phrase: Boolean = false,
-      from: Int = 0, slop: Int = 0): Array[Scored] = {
-    val (slots, terms, _, _) = mustTerms(query, field, phrase, Nil, false, 0.0)
-    if (terms.isEmpty) return Array.empty
-    page(run(terms, from + k, conjunctive, slots, slop = slop), from, k)
-  }
+      from: Int = 0, slop: Int = 0): Array[Scored] =
+    runOne(compile(Seq(BoolQuerySpec(query, field = field, conjunctive = conjunctive,
+      phrase = phrase, phraseSlop = slop))).head, k, from)
 
   /** ES `multi_match`: the query's terms score over EVERY listed field
     * under that field's own statistics, scaled by the field's boost.
@@ -1423,12 +1389,11 @@ class Searcher private[query] (
       tieBreaker: Double = 0.0): Array[Scored] = {
     require(fields.map(_._1).distinct.size == fields.size, "duplicate field in multiMatch")
     val toks = Analyzer.analyzeQuery(query).toSeq
-    if (toks.isEmpty || fields.isEmpty) return Array.empty
     val termBoosts: Seq[(String, Double)] =
       for ((f, b) <- fields; t <- toks) yield FieldTerms.textTerm(f, t) -> b
     val bf = if (bestFields) Wand.BestFields.of(fields.map(_._1), toks, tieBreaker) else null
-    page(run(termBoosts.map(_._1).sorted, from + k, conjunctive = false,
-      boosts = termBoosts.toMap, bestFields = bf), from, k)
+    runOne(ResolvedQuery(termBoosts.map(_._1), boosts = termBoosts.toMap, bestFields = bf),
+      k, from)
   }
 
   /** ES `bool` query: `query` scores (as OR / AND / phrase per the
@@ -1527,20 +1492,14 @@ class Searcher private[query] (
       multiMatchBest: Boolean = false,
       tieBreaker: Double = 0.0
   ): Array[Scored] = {
-    guardExists(exists, missing)
-    require(multiMatchFields.isEmpty || (!phrase && !conjunctive),
-      "multiMatchFields is OR-mode only (like multiMatch)")
-    val (slots, scoredTerms, boosts, bf) =
-      mustTerms(query, field, phrase, multiMatchFields, multiMatchBest, tieBreaker)
-    val shouldTerms = Analyzer.analyzeQuery(should).filterNot(scoredTerms.contains).toSeq
-    if ((scoredTerms.isEmpty && shouldTerms.isEmpty) || (phrase && slots.isEmpty))
-      return Array.empty
-    val rangeExp = expandFieldRanges(rangeFilters)
-    page(run(scoredTerms, from + k, conjunctive, slots,
-      filterClauses(filters, anyFilters, numericRangeFilters, exists) ++
-        rangeFilters.map(rangeExp),
-      excludeTermsOf(mustNot, missing, mustNotText),
-      shouldTerms, minShouldMatch, after, phraseSlop, boosts, bf), from, k)
+    val q = compile(Seq(BoolQuerySpec(query = query, field = field,
+      multiMatchFields = multiMatchFields, multiMatchBest = multiMatchBest,
+      tieBreaker = tieBreaker, conjunctive = conjunctive, phrase = phrase, filters = filters,
+      mustNot = mustNot, anyFilters = anyFilters, numericRangeFilters = numericRangeFilters,
+      rangeFilters = rangeFilters, exists = exists, missing = missing,
+      mustNotText = mustNotText, should = should, minShouldMatch = minShouldMatch,
+      phraseSlop = phraseSlop))).head
+    runOne(q.copy(after = after), k, from)
   }
 
   /** Stored `#field:value` terms with lo ≤ value ≤ hi (inclusive,
@@ -1752,8 +1711,8 @@ class Searcher private[query] (
     val toks = Analyzer.tokenize(prefix)
     if (toks.isEmpty) return Array.empty
     val p = toks(0)
-    run(expand(_.startsWith(p), _.startsWith(p), maxExpansions, field).map(_._1),
-      k, conjunctive = false)
+    runOne(ResolvedQuery(expand(_.startsWith(p), _.startsWith(p), maxExpansions, field)
+      .map(_._1)), k)
   }
 
   /** Wildcard query (ES `wildcard`): `*` = any run, `?` = one char,
@@ -1764,8 +1723,8 @@ class Searcher private[query] (
     val pat = pattern.toLowerCase(java.util.Locale.ROOT)
     val rx = Expansion.wildcardRegex(pat)
     val like = Expansion.wildcardLike(pat)
-    run(expand(t => rx.findFirstIn(t).isDefined, _.like(like), maxExpansions, field).map(_._1),
-      k, conjunctive = false)
+    runOne(ResolvedQuery(expand(t => rx.findFirstIn(t).isDefined, _.like(like), maxExpansions,
+      field).map(_._1)), k)
   }
 
   /** Fuzzy query (ES `fuzziness`): BM25 OR over index terms within edit
@@ -1800,7 +1759,7 @@ class Searcher private[query] (
           maxExpansions, field,
           lenRange = Some((math.max(1, t0.length - maxDist), t0.length + maxDist)))
       }
-    run(exp.map(_._1), k, conjunctive = false)
+    runOne(ResolvedQuery(exp.map(_._1)), k)
   }
 
   /** ES `regexp` query: the pattern anchors to the WHOLE analyzed term
@@ -1814,8 +1773,8 @@ class Searcher private[query] (
       field: String = "text"): Array[Scored] = {
     val p = java.util.regex.Pattern.compile(pattern)
     val anchored = "^(?:" + pattern + ")$"
-    run(expand(t => p.matcher(t).matches(), _.rlike(anchored), maxExpansions, field).map(_._1),
-      k, conjunctive = false)
+    runOne(ResolvedQuery(expand(t => p.matcher(t).matches(), _.rlike(anchored), maxExpansions,
+      field).map(_._1)), k)
   }
 
   /** ES `match` with `fuzziness` (round-6 review "What's missing #4"):
@@ -1830,10 +1789,9 @@ class Searcher private[query] (
     */
   def searchMatchFuzzy(query: String, k: Int, maxDist: Int = 1,
       maxExpansionsPerTerm: Int = 50, field: String = "text"): Array[Scored] = {
-    val toks = Analyzer.analyzeQuery(query).toSeq.sorted
-    if (toks.isEmpty) return Array.empty
-    run(expandPerToken(toks, maxDist, maxExpansionsPerTerm, field, byDistDf = false)
-      .valuesIterator.flatten.toSeq.distinct, k, conjunctive = false)
+    val toks = Analyzer.analyzeQuery(query).toSeq
+    runOne(ResolvedQuery(expandPerToken(toks, maxDist, maxExpansionsPerTerm, field,
+      byDistDf = false).valuesIterator.flatten.toSeq), k)
   }
 
   /** ES `dis_max` as a general combinator (round-6 review "What's
@@ -1854,8 +1812,8 @@ class Searcher private[query] (
     val groupsOf: Map[String, Seq[Int]] = groups.zipWithIndex
       .flatMap { case (ts, i) => ts.map(_ -> i) }
       .groupBy(_._1).view.mapValues(_.map(_._2).sorted).toMap
-    run(groups.flatten.distinct.sorted, k, conjunctive = false,
-      bestFields = new Wand.BestFields(Map.empty, groups.size, tieBreaker, groupsOf))
+    runOne(ResolvedQuery(groups.flatten,
+      bestFields = new Wand.BestFields(Map.empty, groups.size, tieBreaker, groupsOf)), k)
   }
 
   /** ES term suggester ("did you mean"): visible dictionary terms within
@@ -1999,9 +1957,7 @@ class Searcher private[query] (
       .flatMap { case (t, f) => dfGlobal.get(t).map(df => (t, f, df)) }
       .sortBy { case (t, f, df) => (-f, df, t) }
       .take(maxQueryTerms).map(_._1)
-    if (selected.isEmpty) return Array.empty
-    run(selected, k + 1, conjunctive = false)
-      .filter(_.docId != docId).take(k)
+    runOne(ResolvedQuery(selected), k + 1).filter(_.docId != docId).take(k)
   }
 
   /** Top-k resolved back to turn metadata + text (SURVEY.md J4): the k
@@ -2073,12 +2029,13 @@ class Searcher private[query] (
       .toDF("docId"))
 
   /** Membership of the FULL bool query (ES aggregations/counts run over
-    * the filtered query, not just the scored terms): distinct docs
-    * matching ≥1 scored term, restricted by every filter clause
+    * the filtered query, not just the scored terms): the OR query value
+    * [[compile]] builds, resolved by [[ResolvedQuery.visibleIn]] — distinct
+    * docs matching ≥1 scored term, restricted by every filter clause
     * (semi-join per clause — each clause's docIds come from its own
     * pruned block scan) and must_not + tombstones (anti-joins). All
     * joins are docId-keyed — the match set never touches the driver.
-    * None when no query term (or no value of some clause) is visible.
+    * None when the query can have no hits.
     */
   private def matchSet(query: String,
       filters: Seq[(String, String)] = Nil,
@@ -2088,25 +2045,17 @@ class Searcher private[query] (
       rangeFilters: Seq[(String, String, String)] = Nil,
       exists: Seq[String] = Nil,
       missing: Seq[String] = Nil): Option[DataFrame] = {
-    guardExists(exists, missing)
-    val terms = Analyzer.analyzeQuery(query).toSeq
-    val rangeExp = expandFieldRanges(rangeFilters)
-    val clauses = filterClauses(filters, anyFilters, numericRangeFilters, exists) ++
-      rangeFilters.map(rangeExp)
-    val excludeTerms = excludeTermsOf(mustNot, missing, Nil)
-    val (dfGlobal, perSeg) =
-      lookup((terms ++ clauses.flatten ++ excludeTerms).distinct.sorted)
-    val scoredFound = terms.filter(dfGlobal.contains)
-    if (scoredFound.isEmpty) return None
-    val foundClauses = clauses.map(_.filter(dfGlobal.contains))
-    if (foundClauses.exists(_.isEmpty)) return None
-    var m = decodeDocIdsRaw(perSeg, scoredFound.toSet).getOrElse(return None).distinct()
-    for (cl <- foundClauses)
+    val q0 = compile(Seq(BoolQuerySpec(query, filters = filters, mustNot = mustNot,
+      anyFilters = anyFilters, numericRangeFilters = numericRangeFilters,
+      rangeFilters = rangeFilters, exists = exists, missing = missing))).head
+    val (dfGlobal, perSeg) = lookup(q0.terms.distinct.sorted)
+    val q = q0.visibleIn(dfGlobal.contains).getOrElse(return None)
+    var m = decodeDocIdsRaw(perSeg, q.scored.toSet).getOrElse(return None).distinct()
+    for (cl <- q.clauses)
       m = m.join(decodeDocIdsRaw(perSeg, cl.toSet).getOrElse(return None),
         Seq("docId"), "left_semi")
-    val exFound = excludeTerms.filter(dfGlobal.contains)
-    if (exFound.nonEmpty)
-      decodeDocIdsRaw(perSeg, exFound.toSet).foreach(e =>
+    if (q.excludes.nonEmpty)
+      decodeDocIdsRaw(perSeg, q.excludes.toSet).foreach(e =>
         m = m.join(e, Seq("docId"), "left_anti"))
     // ONE tombstone snapshot per searcher: the WAND paths' exclusion
     // blocks and the agg paths' anti-join see the same store state
@@ -2138,7 +2087,7 @@ class Searcher private[query] (
     */
   private def postingRows(terms: Seq[String]): Option[DataFrame] = {
     val (dfGlobal, perSeg) = lookup(terms.distinct.sorted)
-    if (!terms.exists(dfGlobal.contains)) return None
+    if (ResolvedQuery(terms).visibleIn(dfGlobal.contains).isEmpty) return None
     val idFrame = perSeg.toSeq.flatMap { case ((i, t), ts) =>
       dfGlobal.get(t).map(df => (i, ts.termId, t, df))
     }.toDF("seg", "termId", "term", "df")
@@ -2319,7 +2268,7 @@ class Searcher private[query] (
         */
       missing: Option[Double] = None): DataFrame = {
     require(window >= k, "rescore window must be >= k")
-    val top = run(Analyzer.analyzeQuery(query).toSeq, window, conjunctive = false)
+    val top = runOne(ResolvedQuery(Analyzer.analyzeQuery(query).toSeq), window)
     val topDF = top.toSeq.map(h => (h.docId, h.score)).toDF("docId", "bm25")
     // window-bounded fetch: push In(docId, ...) to the doc-store scan
     // (row-group pruning) — round-7 review #8
@@ -2350,7 +2299,7 @@ class Searcher private[query] (
       offset: Double = 0.0, decay: Double = 0.5,
       missing: Option[Double] = None): DataFrame = {
     require(window >= k, "rescore window must be >= k")
-    val top = run(Analyzer.analyzeQuery(query).toSeq, window, conjunctive = false)
+    val top = runOne(ResolvedQuery(Analyzer.analyzeQuery(query).toSeq), window)
     val topDF = top.toSeq.map(h => (h.docId, h.score)).toDF("docId", "bm25")
     val vCol = rawDocs.schema(field).dataType match {
       case org.apache.spark.sql.types.TimestampType =>

@@ -1507,4 +1507,88 @@ class QuerySurfaceSpec extends SparkSpec {
       s"unexpected cap in:\n$plan")
     assert(searcher.scrollAll("qqqzzz").count() == 0)
   }
+
+  /** Spark jobs `body` starts on the calling thread (job-group scoped). */
+  private def jobsOf(body: => Unit): Int = {
+    val group = s"jobs-of-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
+      org.apache.spark.sql.GraftSqlBridge.waitListenerBus(sc)
+      jobs.get()
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("early-empty rules: each gives empty through searchBool, searchManyBool alone and batched") {
+    import graft.query.BoolQuerySpec
+    val absent = "zzqxabsent"
+    // one row per rule: without its rule, each row returns hits or runs a
+    // top-k job (runGroup re-checks some rules per group)
+    val rows: Seq[(String, BoolQuerySpec)] = Seq(
+      "required AND term absent" -> BoolQuerySpec(s"the $absent", conjunctive = true),
+      "required phrase term absent" -> BoolQuerySpec(s"the $absent", phrase = true),
+      "filter clause with no value present" ->
+        BoolQuerySpec("the", filters = Seq("role" -> "no-such-value")),
+      "every scored term absent" -> BoolQuerySpec(absent, should = "the"),
+      "fewer found shoulds than minShouldMatch" ->
+        BoolQuerySpec("the", should = s"zanzibar $absent", minShouldMatch = 2),
+      "no scored or should term" -> BoolQuerySpec("", filters = Seq("role" -> "user")),
+      "phrase without tokens" -> BoolQuerySpec("", phrase = true, should = "the"))
+    val matching = BoolQuerySpec("the zanzibar")
+    def bool(s: Searcher, sp: BoolQuerySpec): Array[Scored] =
+      s.searchBool(sp.query, 10, filters = sp.filters, conjunctive = sp.conjunctive,
+        phrase = sp.phrase, should = sp.should, minShouldMatch = sp.minShouldMatch)
+    for (s <- Seq(searcher, warmed)) {
+      val want = s.search("the zanzibar", 10).toSeq
+      assert(want.nonEmpty)
+      for ((rule, sp) <- rows) {
+        assert(bool(s, sp).isEmpty, s"searchBool: $rule")
+        assert(s.searchManyBool(Seq(sp), 10).head.isEmpty, s"searchManyBool alone: $rule")
+        val batch = s.searchManyBool(Seq(sp, matching), 10)
+        assert(batch.head.isEmpty && batch(1).toSeq == want, s"searchManyBool batched: $rule")
+      }
+      assert(s.searchPhrasePrefix(s"the $absent", 10).isEmpty, "phrase prefix: no expansion")
+    }
+    // a query found empty on the driver runs no top-k job: the distributed
+    // searcher at most looks its terms up (a lookup is one job for any
+    // terms; the rules that need no dictionary skip it)
+    val lookupJobs = jobsOf(searcher.lookupTerms(Seq("the", "zanzibar")))
+    for ((rule, sp) <- rows) {
+      bool(searcher, sp) // one-time lazy set-up
+      assert(jobsOf(bool(searcher, sp)) <= lookupJobs, s"searchBool jobs: $rule")
+      assert(jobsOf(searcher.searchManyBool(Seq(sp), 10)) <= lookupJobs,
+        s"searchManyBool jobs: $rule")
+    }
+    // match_phrase_prefix without an expansion costs only the expansion
+    // scan, like a prefix query expanding to nothing
+    searcher.searchPhrasePrefix(s"the $absent", 10)
+    assert(jobsOf(searcher.searchPhrasePrefix(s"the $absent", 10)) ==
+      jobsOf(searcher.searchPrefix(absent, 10)), "phrase prefix jobs: no expansion")
+  }
+
+  test("invalid paging input fails loudly: negative k or from (warm, distributed, batched)") {
+    import graft.query.BoolQuerySpec
+    for (s <- Seq(searcher, warmed)) {
+      intercept[IllegalArgumentException](s.search("the", 10, from = -5))
+      intercept[IllegalArgumentException](s.search("the", -1))
+      intercept[IllegalArgumentException](s.searchConjunctive("the a", 10, from = -1))
+      intercept[IllegalArgumentException](s.searchPhrase("the a", -3))
+      intercept[IllegalArgumentException](s.searchBool("the", 10, from = -1))
+      intercept[IllegalArgumentException](s.searchBool("the", -2))
+      intercept[IllegalArgumentException](s.searchManyBool(Seq(BoolQuerySpec("the")), -1))
+      intercept[IllegalArgumentException](
+        s.searchManyBool(Seq(BoolQuerySpec("the"), BoolQuerySpec("a")), -1))
+      // k = 0 stays a valid, empty request
+      assert(s.search("the", 0).isEmpty)
+      assert(s.searchManyBool(Seq(BoolQuerySpec("the"), BoolQuerySpec("a")), 0).forall(_.isEmpty))
+    }
+  }
 }
