@@ -93,14 +93,14 @@ object Codec {
     out
   }
 
-  /** Decode `n` varints into `out(0 until n)` — one pass, no
-    * intermediate array, no boxing. `out` may be longer than `n`; the
-    * entries past `n` are left as they were.
+  /** Decode `n` varints into `out(at until at + n)` — one pass, no
+    * intermediate array, no boxing. The other entries of `out` are left
+    * as they were.
     */
-  def decodeVarIntsInto(bytes: Array[Byte], n: Int, out: Array[Int]): Unit = {
+  def decodeVarIntsInto(bytes: Array[Byte], n: Int, out: Array[Int], at: Int = 0): Unit = {
     var pos = 0
-    var i = 0
-    while (i < n) {
+    var i = at
+    while (i < at + n) {
       var shift = 0
       var v = 0L
       var b = 0
@@ -139,14 +139,15 @@ object Codec {
     out
   }
 
-  /** [[deltaDecode]] into `out(0 until n)`: varint decode and prefix sum
-    * in one pass, no intermediate deltas array.
+  /** [[deltaDecode]] into `out(at until at + n)`: varint decode and
+    * prefix sum in one pass, no intermediate deltas array.
     */
-  def deltaDecodeInto(bytes: Array[Byte], n: Int, firstDocId: Long, out: Array[Long]): Unit = {
+  def deltaDecodeInto(bytes: Array[Byte], n: Int, firstDocId: Long, out: Array[Long],
+      at: Int = 0): Unit = {
     var acc = firstDocId
     var pos = 0
-    var i = 0
-    while (i < n) {
+    var i = at
+    while (i < at + n) {
       var shift = 0
       var v = 0L
       var b = 0
@@ -219,9 +220,10 @@ object Codec {
 
   /** A block decoded into fresh arrays — for one-shot callers. A hot
     * cursor decodes into its own reused buffers instead
-    * ([[deltaDecodeInto]], [[decodeVarIntsInto]]): each decode
-    * overwrites the previous block's values, so what a cursor exposes is
-    * valid only until it moves to another block (`Wand.TermIterator`).
+    * ([[deltaDecodeInto]], [[decodeVarIntsInto]] via
+    * `Wand.PostingList.decodeInto`): each decode overwrites the previous
+    * block's values, so what a cursor exposes is valid only until it
+    * moves to another block (`Wand.TermIterator`).
     */
   def decodeBlock(b: PostingBlock): DecodedBlock =
     DecodedBlock(
@@ -241,20 +243,20 @@ object Codec {
     var i = 0
     while (i < b.count) {
       out(i) = new Array[Int](tfs(i))
-      pos = positionsInto(b.poss, pos, out(i))
+      pos = positionsInto(b.poss, pos, tfs(i), out(i))
       i += 1
     }
     out
   }
 
-  /** Decode one posting's position stream starting at `bytes(off)` into
-    * `out` (`out.length` = the posting's tf); returns the offset past it.
+  /** Decode one posting's position stream (`n` = its tf) starting at
+    * `bytes(off)` into `out(0 until n)`; returns the offset past it.
     */
-  def positionsInto(bytes: Array[Byte], off: Int, out: Array[Int]): Int = {
+  def positionsInto(bytes: Array[Byte], off: Int, n: Int, out: Array[Int]): Int = {
     var pos = off
     var acc = 0
     var j = 0
-    while (j < out.length) {
+    while (j < n) {
       var shift = 0
       var v = 0L
       var b = 0

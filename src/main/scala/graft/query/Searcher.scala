@@ -353,70 +353,70 @@ private[query] object Searcher {
     out
   }
 
-  /** A FRESH membership-only exclude cursor over the group's tombstone
-    * blocks (cursors are mutable — one per consumer, the engine-wide
-    * rule): the same nextGEQ block machinery as any posting list.
+  /** The docIds of tombstone blocks, ascending — what a query's
+    * [[Wand.SortedArrayCursor]] exclude reads (blocks of one group, or
+    * every block after [[docIdOrdered]]).
     */
-  def tombCursorOf(blocks: Array[PB]): Seq[Wand.DocCursor] =
-    if (blocks.isEmpty) Nil
-    else Seq(new Wand.TermIterator("", blocks, 0.0, 1L, 1L, 1.0))
+  def tombIds(blocks: Array[PB]): Array[Long] = {
+    val bs = Wand.inBlockOrder(blocks)
+    val out = new Array[Long](bs.iterator.map(_.count).sum)
+    var at = 0
+    for (b <- bs) { Codec.deltaDecodeInto(b.docs, b.count, b.firstDocId, out, at); at += b.count }
+    out
+  }
 
   /** (count, Σdl, per-field count / Σdl) of the tombstoned docs. */
   final case class RemovedStats(n: Long, sumDl: Long,
       fieldN: Map[String, Long], fieldSumDl: Map[String, Long])
 
-  /** Where a group's WAND upper bounds come from. */
+  /** Where a searcher's WAND upper bounds come from. */
   sealed trait Bounds extends Serializable
   /** The dictionary term maxScore and the stored block maxima — valid
     * exactly when the corpus is one segment without tombstones (only
     * then are the segment's build-time stats the global stats).
     */
   case object StoredBounds extends Bounds
-  /** Block maxima re-derived under the merged stats at warm time. */
+  /** Block maxima re-derived exactly under the merged stats at warm time
+    * (the warm lists of several segments or tombstones).
+    */
   case object RescoredBounds extends Bounds
   /** score(maxTf, dl = 0) per block — an exact upper bound under any
-    * stats (BM25 rises in tf, falls in dl), loose in practice.
+    * stats (BM25 rises in tf, falls in dl), loose in practice: the
+    * distributed path over several segments or tombstones.
     */
   case object LooseBounds extends Bounds
 
+  /** (docCount, avgdl) that term `t` scores under: its field's merged
+    * stats for a `%field:` term (per-field BM25), else the corpus's.
+    */
+  def statsOf(t: String, nG: Long, avgdlG: Double,
+      fsMap: Map[String, (Long, Double)]): (Long, Double) =
+    FieldTerms.textFieldOf(t).flatMap(fsMap.get).getOrElse((nG, avgdlG))
+
   /** One group's WAND dispatch — THE shared execution body of every
     * query path (a (segment, bucket) group in the distributed
-    * flatMapGroups closures, the whole corpus on the warm in-process
-    * path; kept in the companion so task closures never capture a
-    * Searcher), so the two are identical by construction. `byTerm` maps
-    * each query term present in the group to (its docId-ordered blocks,
-    * merged LWW df, dictionary maxScore — read only under
-    * [[StoredBounds]]); every role
-    * gets a FRESH iterator (cursors are mutable); `%field:` terms score
-    * under their field's merged stats (per-field BM25). Returns empty
-    * when the group is missing a required term (any scored term under
-    * AND/phrase, or every value of a filter clause).
+    * flatMapGroups closures over [[Wand.PostingList.compressed]] lists,
+    * the whole corpus on the warm in-process path over
+    * [[Wand.PostingList.decoded]] lists; kept in the companion so task
+    * closures never capture a Searcher), so the two are identical by
+    * construction. `byTerm` maps each query term present in the group to
+    * its docId-ordered list, scored and bounded under the merged LWW
+    * stats (`%field:` terms under their field's); every role gets a
+    * FRESH cursor (cursors are mutable). `tomb` = the group's tombstoned
+    * docIds, ascending. Returns empty when the group is missing a
+    * required term (any scored term under AND/phrase, or every value of
+    * a filter clause).
     */
   def runGroup(
-      byTerm: Map[String, (Array[PB], Long, Double)],
-      tombBlks: Array[PB],
+      byTerm: Map[String, Wand.PostingList],
+      tomb: Array[Long],
       w: ResolvedQuery,
-      k: Int,
-      nG: Long,
-      avgdlG: Double,
-      fsMap: Map[String, (Long, Double)],
-      bounds: Bounds
+      k: Int
   ): Iterator[Scored] = {
     def iterOfG(t: String, scored: Boolean, g: Int): Option[Wand.TermIterator] =
-      byTerm.get(t).map { case (bs, df, dictMax) =>
-        val (nn, ad) = FieldTerms.textFieldOf(t).flatMap(fsMap.get).getOrElse((nG, avgdlG))
+      byTerm.get(t).map { l =>
         val boost = w.boosts.getOrElse(t, 1.0)
-        val ub =
-          if (!scored) 0.0
-          else boost * (bounds match {
-            case StoredBounds => dictMax
-            case RescoredBounds => bs.iterator.map(_.maxScore).max
-            case LooseBounds =>
-              val idf = Bm25.idf(df, nn)
-              bs.iterator.map(b => Bm25.scoreIdf(idf, b.maxTf, 0, ad)).max
-          })
-        new Wand.TermIterator(t, bs, ub, df, nn, ad,
-          staleBlockMax = bounds == LooseBounds, boost = boost, groupOrdinal = g)
+        new Wand.TermIterator(t, l, if (scored) boost * l.ub else 0.0, boost, g)
       }
     def iterOf(t: String, scored: Boolean): Option[Wand.TermIterator] =
       iterOfG(t, scored, Int.MinValue)
@@ -452,7 +452,8 @@ private[query] object Searcher {
     else {
       val filters = clauseCursors.flatten
       val excludes: Seq[Wand.DocCursor] =
-        w.excludes.flatMap(t => iterOf(t, scored = false)) ++ tombCursorOf(tombBlks)
+        w.excludes.flatMap(t => iterOf(t, scored = false)) ++
+          (if (tomb.isEmpty) Nil else Seq(new Wand.SortedArrayCursor(tomb)))
       val phraseLists: Seq[Wand.PosCursor] =
         if (prefixMembers == null) iters
         else iters :+ new Wand.UnionPosIterator(PrefixSlot, prefixMembers.toArray)
@@ -642,41 +643,61 @@ class Searcher private[query] (
     graft.index.IndexFormat.requireExistsMarkers(hasExistsMarkers, indexDir, exists, missing)
 
   // driver-local in-process serving state, populated by warm() ONLY when
-  // the driver dictionary is loaded and the blocks fit the byte budget
-  // (bounded collects); queries then run WAND in-process with zero Spark
-  // jobs, which removes the ~100 ms per-query job-scheduling floor. Large
-  // indexes keep the distributed path — identical results, same runGroup.
-  // term → every segment's and bucket's blocks of the term, in docId order
-  @volatile private var localLists: Map[String, Array[PostingBlock]] = _
-  // every tombstone block, in docId order
-  @volatile private var localTomb: Array[PostingBlock] = _
+  // the driver dictionary is loaded, every term's idf is fixed and the
+  // decoded lists fit the byte budget (bounded collects); queries then run
+  // WAND in-process with zero Spark jobs, which removes the ~100 ms
+  // per-query job-scheduling floor. Other indexes keep the distributed
+  // path — identical results, same runGroup.
+  // term → one decoded list over every segment's and bucket's blocks
+  @volatile private var localLists: Map[String, Wand.PostingList] = _
+  // every tombstoned docId, ascending
+  @volatile private var localTomb: Array[Long] = _
   // term → per-segment dictionary rows (driver lookup, zero jobs)
   @volatile private var localDict: Map[String, Seq[(Int, TermStats)]] = _
-  // where the warm lists' WAND bounds come from: stored, rescored at
-  // warm time under the merged stats, or loose
+  // where the queries' WAND bounds come from: stored, rescored at warm
+  // time under the merged stats (warm lists), or loose (distributed)
   @volatile private[query] var localBounds: Searcher.Bounds = LooseBounds
+  // the resident bytes warm() estimated for the decoded lists (0 = not
+  // estimated: no driver dictionary, or an idf not fixed at warm time)
+  @volatile private[query] var localBytes: Long = 0L
 
-  /** Conservative encoded-bytes → driver-heap expansion factor for the
-    * local serving index: each PostingBlock holds three byte arrays plus
-    * object/array headers, boxed map keys, and per-term array wrappers —
-    * measured small multiple of payload bytes (round-2 review).
+  /** Does this searcher answer queries in-process (after [[warm]])? */
+  private[query] def servesLocally: Boolean = localLists != null
+
+  /** Resident heap bytes of a decoded warm list, per posting: docId (8),
+    * tf (4), score (8) and position offset (4).
     */
-  private val LocalHeapExpansion = 4L
+  private val ResidentPostingBytes = 24L
+  /** Per block: lastDocId (8), bound (8), start index (4), the position
+    * stream's reference (4) and array header (16).
+    */
+  private val ResidentBlockBytes = 40L
+  /** Per list: the list object, its eight array headers and the map
+    * entry — 240–248 B measured (heap delta of 200,000 decoded lists of
+    * 1, 4 and 200 postings, compressed oops), rounded up.
+    */
+  private val ResidentListBytes = 256L
 
   /** Pin blocks in executor memory and the dictionaries on the driver
     * (the "warm index" state a serving deployment runs in; spills to
     * disk if larger than memory). `maxDriverDictTerms` guards driver
-    * memory — beyond it the dictionaries stay a distributed lookup;
+    * memory — beyond it the dictionaries stay a distributed lookup.
     * `maxLocalBlockBytes` additionally enables the in-process serving
-    * path when the whole compressed index (blocks + tombstone blocks)
-    * fits (0 disables it). That path needs the driver dictionary — it
-    * keys every segment's blocks by term — so without it the searcher
-    * stays distributed. The budget is an estimated HEAP bound: encoded
-    * payload bytes × [[LocalHeapExpansion]], so the default admits ~256
-    * MB of encoded postings (~1 GB resident). Without stored bounds
-    * (several segments or tombstones) the local blocks' maxima are
-    * rescored once under the merged stats. Throws when two segments'
-    * docId ranges overlap: one docId-ordered list per term needs
+    * path (0 disables it): every term's blocks over all segments and
+    * buckets are decoded ONCE into a flat list of docIds, tfs, exact
+    * BM25 contributions and position offsets ([[Wand.PostingList]]), so
+    * a warm query decodes and rescores nothing. The budget counts what
+    * those lists hold on the heap — [[ResidentPostingBytes]] per
+    * posting, the position bytes, [[ResidentBlockBytes]] per block,
+    * [[ResidentListBytes]] per term and 8 B per tombstone — so the
+    * default 1 GB admits ~40M postings. The path needs the driver
+    * dictionary (it keys every segment's blocks by term) and every
+    * term's idf fixed at warm time: no tombstones, or the removed-df
+    * corrections cached on the driver ([[maxDriverRemovedTerms]]) — a
+    * heavy-churn store stays distributed. Without stored bounds
+    * (several segments or tombstones) each block's bound is re-derived
+    * exactly under the merged stats. Throws when two segments' docId
+    * ranges overlap: one docId-ordered list per term needs
     * docId-disjoint segments.
     */
   def warm(maxDriverDictTerms: Long = 5_000_000L,
@@ -689,11 +710,10 @@ class Searcher private[query] (
       df
     }
     // the pass that materializes each segment's block cache also sums the
-    // blocks' estimated heap bytes (the local-serving budget)
+    // decoded lists' per-block and per-posting resident bytes
     val blockBytes = segBlocks.map(b => pinned(b).agg(coalesce(sum(
-      (length(col("docs")) + length(col("tfs")) + length(col("dls"))
-        + length(col("poss")) + lit(64)) * lit(LocalHeapExpansion)), lit(0L)))
-      .head().getLong(0)).sum
+      col("count") * lit(ResidentPostingBytes) + length(col("poss")) + lit(ResidentBlockBytes)),
+      lit(0L))).head().getLong(0)).sum
     // one bounded collect per segment: the driver never holds more than
     // maxDriverDictTerms + 1 rows, and a segment past the cap is not read
     var remaining = maxDriverDictTerms
@@ -708,65 +728,46 @@ class Searcher private[query] (
     if (remaining >= 0)
       localDict = dictRows.flatten.groupBy(_._2.term).view.mapValues(_.toSeq).toMap
     else segDicts.foreach(d => pinned(d).count())
-    if (maxLocalBlockBytes > 0 && localDict != null && blockBytes <= maxLocalBlockBytes) {
-      val termOf: Map[(Int, Long), String] = localDict.iterator
-        .flatMap { case (t, xs) => xs.map { case (i, ts) => (i, ts.termId) -> t } }.toMap
-      // every segment's cached blocks in one collect
-      localLists = segBlocks.zipWithIndex
-        .map { case (b, i) =>
-          b.select(lit(i).as("_1"), struct(Searcher.BlockCols.map(col): _*).as("_2"))
-        }
-        .reduce(_ unionByName _).as[(Int, PostingBlock)].collect()
-        .map { case (i, pb) => termOf((i, pb.termId)) -> pb }
-        .groupMap(_._1)(_._2).map { case (t, bs) => t -> Searcher.docIdOrdered(t, bs) }
-      localTomb = Searcher.docIdOrdered("tombstones",
-        tombBlocks.map(_.collect().map(_._3)).getOrElse(Array.empty))
+    // every term's df (hence idf) fixed now: the scores can be stored
+    if (maxLocalBlockBytes > 0 && localDict != null &&
+      (!hasTombstones || removedDfSmall.isDefined)) {
+      localBytes = blockBytes + localDict.size * ResidentListBytes + removedStats.n * 8L
+      if (localBytes <= maxLocalBlockBytes) buildLocalLists()
     }
-    if (storedBounds) localBounds = StoredBounds else rescoreLocalBounds()
+    localBounds =
+      if (storedBounds) StoredBounds else if (localLists != null) RescoredBounds else LooseBounds
     this
   }
 
-  /** One decode pass over the warm term lists re-deriving each block's
-    * maxScore EXACTLY under the merged LWW statistics (global or
-    * per-field) — the warm path then prunes as tightly as a compacted
-    * index, instead of the maxTf/dl=0 fallback bounds that make
-    * cross-segment WAND decode more blocks. Requires (under tombstones)
-    * the bounded removed-df cache; skipped otherwise — results are
-    * identical either way, only pruning differs. The rescored bound
-    * ranges over tombstoned postings too, which only loosens it — still
-    * sound.
+  /** Collect every segment's cached blocks (one job) and decode them into
+    * one list per term, scored under the merged LWW statistics; terms
+    * with no visible doc are dropped (no lookup returns them).
     */
-  private def rescoreLocalBounds(): Unit = {
-    if (localLists == null) return
-    if (hasTombstones && removedDfSmall.isEmpty) return
+  private def buildLocalLists(): Unit = {
+    val termOf: Map[(Int, Long), String] = localDict.iterator
+      .flatMap { case (t, xs) => xs.map { case (i, ts) => (i, ts.termId) -> t } }.toMap
     val rm = removedDfSmall.getOrElse(Map.empty)
-    val nG = n
-    val adG = avgdl
-    val fsm = fieldStatsMap
-    localLists = localLists.map { case (t, bs) =>
-      val df = localDict(t).map(_._2.df).sum - rm.getOrElse(t, 0L)
-      if (df <= 0L) t -> bs
-      else {
-        val (nn, ad) = FieldTerms.textFieldOf(t).flatMap(fsm.get).getOrElse((nG, adG))
-        val idf = Bm25.idf(df, nn)
-        val cap = bs.iterator.map(_.count).max
-        val tfs = new Array[Int](cap)
-        val dls = new Array[Int](cap)
-        t -> bs.map { b =>
-          Codec.decodeVarIntsInto(b.tfs, b.count, tfs)
-          Codec.decodeVarIntsInto(b.dls, b.count, dls)
-          var mx = Double.NegativeInfinity
-          var i = 0
-          while (i < b.count) {
-            val s = Bm25.scoreIdf(idf, tfs(i), dls(i), ad)
-            if (s > mx) mx = s
-            i += 1
-          }
-          b.copy(maxScore = mx)
+    val (nG, adG, fsm) = (n, avgdl, fieldStatsMap)
+    // set before the lists: a query that sees the lists reads it
+    localTomb = Searcher.tombIds(Searcher.docIdOrdered("tombstones",
+      tombBlocks.map(_.collect().map(_._3)).getOrElse(Array.empty)))
+    localLists = segBlocks.zipWithIndex
+      .map { case (b, i) =>
+        b.select(lit(i).as("_1"), struct(Searcher.BlockCols.map(col): _*).as("_2"))
+      }
+      .reduce(_ unionByName _).as[(Int, PostingBlock)].collect()
+      .map { case (i, pb) => termOf((i, pb.termId)) -> pb }
+      .groupMap(_._1)(_._2).flatMap { case (t, bs) =>
+        val ordered = Searcher.docIdOrdered(t, bs)
+        val rows = localDict(t)
+        val df = rows.iterator.map(_._2.df).sum - rm.getOrElse(t, 0L)
+        if (df <= 0L) None
+        else {
+          val (nn, ad) = Searcher.statsOf(t, nG, adG, fsm)
+          Some(t -> Wand.PostingList.decoded(ordered, Bm25.idf(df, nn), ad, storedBounds,
+            rows.head._2.maxScore))
         }
       }
-    }
-    localBounds = RescoredBounds
   }
 
   private lazy val rawN: Long = segStats.map(_.n).sum
@@ -1117,7 +1118,7 @@ class Searcher private[query] (
   private def execute(work: Seq[ResolvedQuery], k: Int,
       perSeg: Map[(Int, String), TermStats],
       dfGlobal: Map[String, Long]): Seq[Array[Scored]] = {
-    if (localLists != null) return runLocal(work, k, perSeg, dfGlobal)
+    if (localLists != null) return runLocal(work, k)
     val needed = work.flatMap(_.terms).toSet
     // termId is segment-local: key block groups by (segIdx, termId);
     // terms whose visible df fell to zero are pruned from the scan
@@ -1134,7 +1135,7 @@ class Searcher private[query] (
     val nG = n
     val avgdlG = avgdl
     val fsMap = fieldStatsMap
-    val bounds = if (storedBounds) StoredBounds else LooseBounds
+    val stored = storedBounds
     // the task closure captures only these locals and the companion's
     // runGroup, never this Searcher
     val rows = all
@@ -1144,14 +1145,15 @@ class Searcher private[query] (
         if (grp.isEmpty) Iterator.empty
         else {
           val segIdx = grp.head._1
-          val byTerm: Map[String, (Array[PostingBlock], Long, Double)] =
+          val byTerm: Map[String, Wand.PostingList] =
             grp.map(_._3).groupBy(_.termId).map { case (tid, bs) =>
               val (t, df, mx) = idToTerm((segIdx, tid))
-              t -> (bs, df, mx)
+              val (nn, ad) = Searcher.statsOf(t, nG, avgdlG, fsMap)
+              t -> Wand.PostingList.compressed(bs, Bm25.idf(df, nn), ad, stored, mx)
             }
+          val tomb = Searcher.tombIds(tombBlks)
           work.iterator.zipWithIndex.flatMap { case (w, j) =>
-            Searcher.runGroup(byTerm, tombBlks, w, k, nG, avgdlG, fsMap, bounds)
-              .map(s => (j, s.docId, s.score))
+            Searcher.runGroup(byTerm, tomb, w, k).map(s => (j, s.docId, s.score))
           }
         }
       }
@@ -1179,19 +1181,11 @@ class Searcher private[query] (
     * [[Searcher.runGroup]] over the whole corpus — one cursor per term
     * across every segment and bucket, one θ and one top-k heap — so its
     * cost does not grow with the number of (segment, bucket) groups.
+    * A resolved query names only terms the lookup found, each of which
+    * has a warm list.
     */
-  private def runLocal(work: Seq[ResolvedQuery], k: Int,
-      perSeg: Map[(Int, String), TermStats],
-      dfGlobal: Map[String, Long]): Seq[Array[Scored]] = {
-    val bounds = localBounds
-    // the dictionary maxScore bounds only the one segment it was built on
-    val byTerm: Map[String, (Array[PostingBlock], Long, Double)] = dfGlobal.flatMap {
-      case (t, df) => localLists.get(t).map(bs =>
-        t -> (bs, df, if (bounds == StoredBounds) perSeg((0, t)).maxScore else 0.0))
-    }
-    work.map(w =>
-      Searcher.runGroup(byTerm, localTomb, w, k, n, avgdl, fieldStatsMap, bounds).toArray)
-  }
+  private def runLocal(work: Seq[ResolvedQuery], k: Int): Seq[Array[Scored]] =
+    work.map(w => Searcher.runGroup(localLists, localTomb, w, k).toArray)
 
   /** Disjunctive (OR / ES `match`) BM25 top-k. `from` = pagination
     * offset (skip the first `from` ranked hits; the top-k heap grows to

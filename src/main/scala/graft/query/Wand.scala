@@ -32,150 +32,297 @@ object Wand {
     def blockLast: Long
     def shallowSeek(target: Long): Unit
     def advancePast(doc: Long): Unit
-    def positions: Array[Int]
+    /** Decodes the current posting's token positions (ascending) into
+      * [[posBuf]] and returns their count. Valid until the cursor moves.
+      */
+    def positions(): Int
+    /** The cursor's grow-only position buffer: read it after
+      * [[positions]], up to the count that returned.
+      */
+    def posBuf: Array[Int]
     def score: Double
   }
 
-  /** One term's posting cursor over its block list (blocks sorted by
-    * firstDocId; docId-disjoint — guaranteed by build: range-partitioned
-    * runs within docId-range buckets). Blocks already in that order are
-    * used as given (the warm path sorts each term's blocks once); other
-    * input is sorted here. Blocks are decoded lazily; block skipping
-    * never decodes skipped blocks.
+  /** First index i in [from, until) with a(i) ≥ target, or `until` when
+    * there is none (`a` ascending over the range): exponential probe
+    * from `from`, then a binary search — O(log gap).
+    */
+  def gallop(a: Array[Long], from: Int, until: Int, target: Long): Int = {
+    if (from >= until || a(from) >= target) return from
+    var lo = from // a(lo) < target
+    var step = 1
+    while (lo + step < until && a(lo + step) < target) { lo += step; step <<= 1 }
+    var l = lo + 1
+    var h = math.min(until, lo + step)
+    while (l < h) {
+      val m = (l + h) >>> 1
+      if (a(m) < target) l = m + 1 else h = m
+    }
+    l
+  }
+
+  /** One term's postings in the layout [[TermIterator]] reads. Per block
+    * b: `lastDocs(b)`, the unboosted score bound `maxes(b)`, the index
+    * range [starts(b), starts(b + 1)) of its postings and its position
+    * stream `poss(b)`. A WARM list ([[PostingList.decoded]], `docs` non-
+    * null) holds every posting decoded once: docId, tf, the exact
+    * unboosted BM25 contribution and the byte offset of its positions in
+    * its block's stream. A COMPRESSED list ([[PostingList.compressed]])
+    * keeps the blocks, and its cursor decodes the block it lands on into
+    * its own buffers with the same [[PostingList.decodeInto]]. `ub` is
+    * the unboosted bound of the whole list; `idf` / `avgdl` the stats its
+    * scores are computed under.
+    */
+  final class PostingList private (
+      val ub: Double,
+      val idf: Double,
+      val avgdl: Double,
+      val lastDocs: Array[Long],
+      val maxes: Array[Double],
+      val starts: Array[Int],
+      val poss: Array[Array[Byte]],
+      /** The source blocks — compressed lists only (null when warm). */
+      val blocks: Array[PostingBlock],
+      val docs: Array[Long],
+      val tfs: Array[Int],
+      val scores: Array[Double],
+      val posOffs: Array[Int]) {
+    def nBlocks: Int = lastDocs.length
+    /** Postings in the largest block (the size of a cursor's buffers). */
+    def maxCount: Int = {
+      var mx = 0
+      var b = 0
+      while (b < nBlocks) { mx = math.max(mx, starts(b + 1) - starts(b)); b += 1 }
+      mx
+    }
+  }
+
+  object PostingList {
+    /** Decodes block `b` into `docs` / `tfs` / `scores` from index `at`,
+      * each score the exact unboosted BM25 contribution
+      * `Bm25.scoreIdf(idf, tf, dl, avgdl)`; `dls` is scratch of at least
+      * the block's count. THE block decode of both sources: a warm list
+      * runs it once per block at warm time, a compressed list's cursor on
+      * every block it loads.
+      */
+    def decodeInto(b: PostingBlock, idf: Double, avgdl: Double, at: Int, docs: Array[Long],
+        tfs: Array[Int], dls: Array[Int], scores: Array[Double]): Unit = {
+      Codec.deltaDecodeInto(b.docs, b.count, b.firstDocId, docs, at)
+      Codec.decodeVarIntsInto(b.tfs, b.count, tfs, at)
+      Codec.decodeVarIntsInto(b.dls, b.count, dls)
+      var i = 0
+      while (i < b.count) { scores(at + i) = Bm25.scoreIdf(idf, tfs(at + i), dls(i), avgdl); i += 1 }
+    }
+
+    /** Byte offsets into `bytes` (one block's position stream) of the
+      * postings `from until until`, whose tfs are `tfs(from until
+      * until)`, written to `offs` at the same indices.
+      */
+    def offsetsInto(bytes: Array[Byte], tfs: Array[Int], from: Int, until: Int,
+        offs: Array[Int]): Unit = {
+      var off = 0
+      var i = from
+      while (i < until) { offs(i) = off; off = Codec.skipVarInts(bytes, off, tfs(i)); i += 1 }
+    }
+
+    /** Per-block index ranges: starts(b) = Σ count of blocks before b. */
+    private def startsOf(bs: Array[PostingBlock]): Array[Int] = {
+      val starts = new Array[Int](bs.length + 1)
+      var b = 0
+      while (b < bs.length) { starts(b + 1) = starts(b) + bs(b).count; b += 1 }
+      starts
+    }
+
+    /** max of a(from until until); −∞ when empty. */
+    private def maxOf(a: Array[Double], from: Int, until: Int): Double = {
+      var mx = Double.NegativeInfinity
+      var i = from
+      while (i < until) { if (a(i) > mx) mx = a(i); i += 1 }
+      mx
+    }
+
+    /** A list the cursor decodes per block (the distributed path).
+      * `blocksIn` is put in cursor order
+      * ([[inBlockOrder]]). Bounds: `stored` = the blocks' stored maxScore
+      * and `dictMax` (valid when the scoring stats are the build's);
+      * otherwise the stats-independent score(maxTf, dl = 0) per block —
+      * an exact upper bound under any stats (BM25 rises in tf, falls in
+      * dl), loose in practice.
+      */
+    def compressed(blocksIn: Array[PostingBlock], idf: Double, avgdl: Double, stored: Boolean,
+        dictMax: Double): PostingList = {
+      val bs = inBlockOrder(blocksIn)
+      val maxes = bs.map(b =>
+        if (stored) b.maxScore else Bm25.scoreIdf(idf, b.maxTf, 0, avgdl))
+      new PostingList(if (stored) dictMax else maxOf(maxes, 0, maxes.length), idf, avgdl,
+        bs.map(_.lastDocId), maxes, startsOf(bs), bs.map(_.poss), bs, null, null, null, null)
+    }
+
+    /** A warm list: every block of `bs` (in cursor order, docId-disjoint)
+      * decoded and scored once, position offsets included, so a cursor
+      * over it decodes and rescores nothing. Bounds: `stored` = the
+      * blocks' stored maxScore and `dictMax`; otherwise each block's
+      * maximum is re-derived EXACTLY from its scores (under merged stats
+      * it is tighter than the maxTf bound, as tight as a compacted
+      * index's).
+      */
+    def decoded(bs: Array[PostingBlock], idf: Double, avgdl: Double, stored: Boolean,
+        dictMax: Double): PostingList = {
+      val starts = startsOf(bs)
+      val total = starts(bs.length)
+      val docs = new Array[Long](total)
+      val tfs = new Array[Int](total)
+      val scores = new Array[Double](total)
+      val posOffs = new Array[Int](total)
+      val dls = new Array[Int](bs.iterator.map(_.count).maxOption.getOrElse(0))
+      val maxes = new Array[Double](bs.length)
+      var b = 0
+      while (b < bs.length) {
+        val blk = bs(b)
+        decodeInto(blk, idf, avgdl, starts(b), docs, tfs, dls, scores)
+        if (blk.poss != null && blk.poss.nonEmpty)
+          offsetsInto(blk.poss, tfs, starts(b), starts(b + 1), posOffs)
+        maxes(b) = if (stored) blk.maxScore else maxOf(scores, starts(b), starts(b + 1))
+        b += 1
+      }
+      new PostingList(if (stored) dictMax else maxOf(maxes, 0, maxes.length), idf, avgdl,
+        bs.map(_.lastDocId), maxes, starts, bs.map(_.poss), null, docs, tfs, scores, posOffs)
+    }
+  }
+
+  /** One term's posting cursor over a [[PostingList]] (blocks in
+    * firstDocId order, docId-disjoint — guaranteed by build: range-
+    * partitioned runs within docId-range buckets). Block and in-block
+    * seeks gallop ([[gallop]]) over `lastDocs` and then the block's
+    * docIds; block skipping never loads a skipped block.
     *
-    * Buffer contract: the cursor decodes each block into its OWN reused
-    * docId/tf/dl arrays (sized to its largest block), and caches the
-    * term's idf — no allocation per block or per posting. The decoded
-    * values, [[score]] and [[positions]] are valid only for the current
-    * posting, until the cursor moves (nextGEQ / advancePast /
-    * shallowSeek); a caller that keeps them longer must copy them.
-    *
-    * `staleBlockMax = true` ignores the STORED per-block maxScore and
-    * re-derives a valid bound from the block's maxTf (stats-independent)
-    * as score(maxTf, dl = 0) — needed when the index is queried under
-    * DIFFERENT global stats than it was built with (cross-segment search
-    * over merged segments: stored maxScore encodes per-segment df/N/avgdl
-    * and is no longer an upper bound).
+    * Buffer contract: over a WARM list the cursor reads the list's
+    * resident arrays — loading a block is an index switch, [[score]] is
+    * `boost · scores(pos)`, [[positions]] decodes one posting at its
+    * stored offset. Over a COMPRESSED list it decodes each block it
+    * loads into its OWN reused docId/tf/score arrays (sized to the
+    * list's largest block) with [[PostingList.decodeInto]], and computes
+    * the block's position offsets on the first [[positions]] call in it.
+    * Either way no allocation per block or per posting (the position
+    * buffer only grows), and the values, [[score]] and [[posBuf]] are
+    * valid only for the current posting, until the cursor moves
+    * (nextGEQ / advancePast / shallowSeek); a caller that keeps them
+    * longer must copy them. `decodes` counts blocks loaded.
     */
   final class TermIterator(
       val term: String,
-      blocksIn: Array[PostingBlock],
+      list: PostingList,
       val ub: Double,
-      df: Long,
-      n: Long,
-      avgdl: Double,
-      staleBlockMax: Boolean = false,
       /** Score multiplier (ES per-field boost — `multi_match` weights).
         * Scales `score` AND both block-max bounds, so pruning stays
         * sound; callers must pass a pre-scaled `ub`.
         */
-      boost: Double = 1.0,
+      boost: Double,
       /** dis_max group this INSTANCE is attributed to (shared-term
         * sub-queries build one iterator per (group, term) —
         * [[BestFields.groupsOf]]); Int.MinValue = unset, attribution
         * falls back to the term-keyed [[BestFields.fieldOf]] map.
         */
-      val groupOrdinal: Int = Int.MinValue
+      val groupOrdinal: Int
   ) extends PosCursor {
-    private val blocks = inBlockOrder(blocksIn)
-    private val idf = Bm25.idf(df, n)
-    private val bufLen = {
-      var mx = 0
-      var i = 0
-      while (i < blocks.length) { mx = math.max(mx, blocks(i).count); i += 1 }
-      mx
-    }
-    private val docBuf = new Array[Long](bufLen)
-    private val tfBuf = new Array[Int](bufLen)
-    private val dlBuf = new Array[Int](bufLen)
+    private val warm = list.docs != null
+    private val lastDocs = list.lastDocs
+    private val nBlocks = list.nBlocks
+    private val bufLen = if (warm) 0 else list.maxCount
+    private val docs = if (warm) list.docs else new Array[Long](bufLen)
+    private val tfs = if (warm) list.tfs else new Array[Int](bufLen)
+    private val scores = if (warm) list.scores else new Array[Double](bufLen)
+    private val posOffs = if (warm) list.posOffs else new Array[Int](bufLen)
+    private val dls = if (warm) null else new Array[Int](bufLen)
     private var bi = 0
-    /** The buffers hold block `bi` (false after a block skip). */
+    /** Block `bi` is loaded: its postings end at index `end` of the
+      * docs / tfs / scores arrays and `pos` is the current one. False
+      * after a block skip.
+      */
     private var loaded = false
     private var pos = 0
-    /** On-demand positions: block `bi`'s position stream is read forward
-      * only — `posOff` is the byte offset where posting `posNext`'s
-      * positions start, and `posCur` holds posting `posNext − 1`'s
-      * (null = none decoded in this block yet).
-      */
-    private var posNext = 0
-    private var posOff = 0
-    private var posCur: Array[Int] = _
-    /** Blocks actually decoded (pruning-effectiveness metric: block skips
-      * and block-max early exits avoid decodes entirely).
+    private var end = 0
+    /** `posOffs` holds block `bi`'s offsets (always, over a warm list). */
+    private var offsetsReady = false
+    private var buf = Array.emptyIntArray
+    private var bufCount = 0
+    /** The posting whose positions `buf` holds (−1 = none). */
+    private var bufAt = -1
+    /** Blocks loaded (pruning-effectiveness metric: block skips and
+      * block-max early exits avoid loads entirely).
       */
     var decodes: Long = 0L
     var curDoc: Long = _
-    if (blocks.isEmpty) curDoc = Long.MaxValue
-    else { load(); curDoc = docBuf(0) }
+    if (nBlocks == 0) curDoc = Long.MaxValue
+    else { load(); curDoc = docs(pos) }
 
     private def load(): Unit = {
-      val b = blocks(bi)
-      Codec.deltaDecodeInto(b.docs, b.count, b.firstDocId, docBuf)
-      Codec.decodeVarIntsInto(b.tfs, b.count, tfBuf)
-      Codec.decodeVarIntsInto(b.dls, b.count, dlBuf)
-      loaded = true; pos = 0; resetPositions()
+      if (warm) { pos = list.starts(bi); end = list.starts(bi + 1) }
+      else {
+        val b = list.blocks(bi)
+        PostingList.decodeInto(b, list.idf, list.avgdl, 0, docs, tfs, dls, scores)
+        pos = 0; end = b.count; offsetsReady = false
+      }
+      loaded = true; bufAt = -1
       decodes += 1
     }
 
-    private def resetPositions(): Unit = { posNext = 0; posOff = 0; posCur = null }
-
-    /** Token positions of the current posting (ascending), decoded on
-      * first use: the streams of the postings between the last decoded
-      * one and this one are skipped, not decoded. Requires an index built
-      * with storePositions (the default).
-      */
-    def positions: Array[Int] = {
-      if (posCur == null || posNext != pos + 1) {
-        val bytes = blocks(bi).poss
+    def positions(): Int = {
+      if (bufAt != pos) {
+        val bytes = list.poss(bi)
         require(bytes != null && bytes.nonEmpty,
           s"index stores no positions for term '$term' — build with storePositions=true")
-        while (posNext < pos) { posOff = Codec.skipVarInts(bytes, posOff, tfBuf(posNext)); posNext += 1 }
-        posCur = new Array[Int](tfBuf(pos))
-        posOff = Codec.positionsInto(bytes, posOff, posCur)
-        posNext = pos + 1
+        if (!warm && !offsetsReady) {
+          PostingList.offsetsInto(bytes, tfs, 0, end, posOffs); offsetsReady = true
+        }
+        val tf = tfs(pos)
+        if (buf.length < tf) buf = new Array[Int](math.max(tf, 2 * buf.length).max(8))
+        Codec.positionsInto(bytes, posOffs(pos), tf, buf)
+        bufCount = tf; bufAt = pos
       }
-      posCur
+      bufCount
     }
+
+    def posBuf: Array[Int] = buf
 
     def exhausted: Boolean = curDoc == Long.MaxValue
 
     /** Max score of the block that contains (or is the first after) the
       * current position — used for the block-max refinement.
       */
-    def blockMax: Double =
-      if (bi >= blocks.length) 0.0
-      else if (staleBlockMax) boost * Bm25.scoreIdf(idf, blocks(bi).maxTf, 0, avgdl)
-      else boost * blocks(bi).maxScore
+    def blockMax: Double = if (bi >= nBlocks) 0.0 else boost * list.maxes(bi)
 
     /** Last docId of the current block (skip horizon). */
-    def blockLast: Long = if (bi >= blocks.length) Long.MaxValue else blocks(bi).lastDocId
+    def blockLast: Long = if (bi >= nBlocks) Long.MaxValue else lastDocs(bi)
 
-    /** Shallow block seek: advance the block pointer (no decode) until the
+    /** Shallow block seek: advance the block pointer (no load) until the
       * current block's lastDocId >= target. Invalidates the in-block
       * position, so callers must follow with nextGEQ(target) before
       * reading scores; curDoc stays a lower bound.
       */
     def shallowSeek(target: Long): Unit = {
-      if (bi < blocks.length && blocks(bi).lastDocId >= target) return
-      while (bi < blocks.length && blocks(bi).lastDocId < target) bi += 1
-      loaded = false; pos = 0; resetPositions()
-      if (bi >= blocks.length) curDoc = Long.MaxValue
+      if (bi < nBlocks && lastDocs(bi) >= target) return
+      bi = gallop(lastDocs, bi, nBlocks, target)
+      loaded = false; bufAt = -1
+      if (bi >= nBlocks) curDoc = Long.MaxValue
     }
 
     def nextGEQ(target: Long): Unit = {
       if (curDoc >= target && loaded) return
-      while (bi < blocks.length && blocks(bi).lastDocId < target) { bi += 1; loaded = false }
-      if (bi >= blocks.length) { curDoc = Long.MaxValue; loaded = false; resetPositions(); return }
+      if (bi < nBlocks && lastDocs(bi) < target) {
+        bi = gallop(lastDocs, bi + 1, nBlocks, target); loaded = false
+      }
+      if (bi >= nBlocks) { curDoc = Long.MaxValue; loaded = false; bufAt = -1; return }
       if (!loaded) load()
-      // in-block scan (blocks are <=128 entries; galloping not worth it)
-      while (docBuf(pos) < target) pos += 1
-      curDoc = docBuf(pos)
+      // lastDocs(bi) >= target: the block holds the answer
+      pos = gallop(docs, pos, end, target)
+      curDoc = docs(pos)
     }
 
     def advancePast(doc: Long): Unit = nextGEQ(doc + 1)
 
     /** Exact (boost-scaled) BM25 contribution at the current position. */
-    def score: Double = boost * Bm25.scoreIdf(idf, tfBuf(pos), dlBuf(pos), avgdl)
+    def score: Double = boost * scores(pos)
   }
 
   /** `bs` in cursor order, (firstDocId, lastDocId): returned as is when
@@ -213,19 +360,7 @@ object Wand {
   final class SortedArrayCursor(ids: Array[Long]) extends DocCursor {
     private var i = 0
     def curDoc: Long = if (i < ids.length) ids(i) else Long.MaxValue
-    def nextGEQ(target: Long): Unit = {
-      if (curDoc >= target) return
-      var lo = i
-      var step = 1
-      while (lo + step < ids.length && ids(lo + step) < target) { lo += step; step <<= 1 }
-      var a = lo
-      var b = math.min(ids.length, lo + step + 1)
-      while (a < b) {
-        val m = (a + b) >>> 1
-        if (ids(m) < target) a = m + 1 else b = m
-      }
-      i = a
-    }
+    def nextGEQ(target: Long): Unit = i = gallop(ids, i, ids.length, target)
   }
 
   /** Disjunction of posting lists as one cursor (ES `terms` / `range`
@@ -290,14 +425,39 @@ object Wand {
     def blockMax: Double = 0.0
     def blockLast: Long = Long.MaxValue
     def score: Double = 0.0
-    /** Merged ascending occurrence positions of the members sitting on
-      * the current doc (each aligned member's in-block position is valid
-      * after the nextGEQ that aligned it).
+    private var buf = Array.emptyIntArray
+    def posBuf: Array[Int] = buf
+    /** Merged ascending distinct occurrence positions of the members
+      * sitting on the current doc (each aligned member's in-block
+      * position is valid after the nextGEQ that aligned it).
       */
-    def positions: Array[Int] = {
-      val bufs = members.iterator.filter(_.curDoc == cur).map(_.positions).toArray
-      if (bufs.length == 1) bufs(0)
-      else bufs.flatten.distinct.sorted
+    def positions(): Int = {
+      var len = 0
+      var merged = 0
+      var i = 0
+      while (i < members.length) {
+        val m = members(i)
+        if (m.curDoc == cur) {
+          val c = m.positions()
+          if (buf.length < len + c)
+            buf = java.util.Arrays.copyOf(buf, math.max(len + c, 2 * buf.length).max(16))
+          System.arraycopy(m.posBuf, 0, buf, len, c)
+          len += c
+          merged += 1
+        }
+        i += 1
+      }
+      if (merged <= 1) len
+      else {
+        java.util.Arrays.sort(buf, 0, len)
+        var out = 0
+        i = 0
+        while (i < len) {
+          if (out == 0 || buf(i) != buf(out - 1)) { buf(out) = buf(i); out += 1 }
+          i += 1
+        }
+        out
+      }
     }
   }
 
@@ -657,7 +817,7 @@ object Wand {
       after: Scored = null,
       /** ES `slop` — full Lucene sloppy-phrase semantics (positional
         * moves; reordered terms match from slop ≥ 2); 0 = exact
-        * adjacency. See [[phraseAt]].
+        * adjacency. See [[PhraseMatch]].
         */
       slop: Int = 0,
       /** ≥ 0 = Lucene `span_first`: the phrase must have an occurrence
@@ -673,140 +833,152 @@ object Wand {
   }
 
   /** Does the phrase occur at the current (aligned) doc within `slop`?
-    * slots(j) is the iterator of phrase position j; all slots sit on
-    * the same doc. Semantics: the Lucene/ES SLOPPY-PHRASE model —
-    * there exist DISTINCT token positions p_0 … p_{m−1}, one per slot,
-    * whose offset-ADJUSTED positions q_i = p_i − i satisfy
-    * max(q) − min(q) ≤ slop (each unit of slop is one positional move;
-    * REORDERED terms match from slop ≥ 2 — a transposed bigram has
-    * width 2). slop = 0 forces all q equal = exact in-order adjacency
-    * (`match_phrase`), answered by the O(Σ positions) greedy
-    * minimal-chain scan.
+    * slots(j) is the cursor of phrase position j; all slots sit on the
+    * same doc. Semantics: the Lucene/ES SLOPPY-PHRASE model — there
+    * exist DISTINCT token positions p_0 … p_{m−1}, one per slot, whose
+    * offset-ADJUSTED positions q_i = p_i − i satisfy max(q) − min(q) ≤
+    * slop (each unit of slop is one positional move; REORDERED terms
+    * match from slop ≥ 2 — a transposed bigram has width 2). slop = 0
+    * forces all q equal = exact in-order adjacency (`match_phrase`),
+    * answered by the O(Σ positions) greedy minimal-chain scan.
+    *
+    * One instance per query: the slots' position buffers, counts and
+    * pointers and the repeated-term groups are set up once, so checking
+    * a candidate allocates nothing.
     */
-  private def phraseAt(slots: Array[PosCursor], slop: Int,
+  private final class PhraseMatch(slots: Array[PosCursor], slop: Int,
       /** ≥ 0 = `span_first`: additionally require an occurrence ending
         * at 0-based position < spanEnd (Lucene SpanFirstQuery: span
         * end() ≤ end). Single-term and exact-adjacency phrases only —
         * [[topKPhrase]] rejects slop > 0 with spanEnd.
         */
-      spanEnd: Int = -1): Boolean = {
-    val m = slots.length
-    if (m == 1) {
-      val ps = slots(0).positions
-      // positions are ascending: the FIRST occurrence decides span_first
-      return ps.length > 0 && (spanEnd < 0 || ps(0) + 1 <= spanEnd)
-    }
-    if (slop == 0) {
-      // adjacency chain from start st spans [st, st + m) — end = st + m
-      val st = adjacentAt(slots)
-      return st >= 0 && (spanEnd < 0 || st + m <= spanEnd)
-    }
-    var hasRepeat = false
-    var i = 0
-    while (i < m && !hasRepeat) {
-      var j = i + 1
-      while (j < m && !hasRepeat) { if (slots(i) eq slots(j)) hasRepeat = true; j += 1 }
-      i += 1
-    }
-    if (!hasRepeat) sloppyDistinctAt(slots, slop) else sloppyRepeatsAt(slots, slop)
-  }
-
-  /** Exact in-order adjacency (slop = 0): greedy minimal chain — for
-    * each start in slot 0, extend each later slot to its minimal
-    * position past the previous; pointers only move forward across
-    * starts, O(Σ positions) total. Returns the EARLIEST matching start
-    * position (starts ascend, so it is also the minimal-end chain —
-    * what `span_first` needs), or −1 when the phrase does not occur.
-    */
-  private def adjacentAt(slots: Array[PosCursor]): Int = {
-    val pos = slots.map(_.positions)
-    val m = slots.length
-    val ptr = new Array[Int](m)
-    var s = 0
-    while (s < pos(0).length) {
-      val start = pos(0)(s)
-      var prev = start
-      var j = 1
-      while (j < m) {
-        val pj = pos(j)
-        while (ptr(j) < pj.length && pj(ptr(j)) <= prev) ptr(j) += 1
-        if (ptr(j) >= pj.length) return -1 // exhausted: no later start can match
-        prev = pj(ptr(j))
-        j += 1
-      }
-      if (prev - start == m - 1) return start
-      s += 1
-    }
-    -1
-  }
-
-  /** Sloppy match, all slots DISTINCT terms: the classic k-list minimal
-    * range scan over the adjusted position lists — hold one pointer per
-    * list, test the current window, advance the list holding the
-    * minimum. Finds the minimal achievable width (positions across
-    * different terms are distinct by construction), O(Σ positions · m).
-    */
-  private def sloppyDistinctAt(slots: Array[PosCursor], slop: Int): Boolean = {
-    val pos = slots.map(_.positions)
-    val m = slots.length
-    val ptr = new Array[Int](m)
-    var running = true
-    while (running) {
-      var mn = Int.MaxValue
-      var mx = Int.MinValue
-      var mnI = 0
+      spanEnd: Int) {
+    private val m = slots.length
+    private val bufs = new Array[Array[Int]](m)
+    private val lens = new Array[Int](m)
+    private val ptr = new Array[Int](m)
+    private val hasRepeat = {
+      var rep = false
       var i = 0
-      while (i < m) {
-        val v = pos(i)(ptr(i)) - i
-        if (v < mn) { mn = v; mnI = i }
-        if (v > mx) mx = v
+      while (i < m && !rep) {
+        var j = i + 1
+        while (j < m && !rep) { rep = slots(i) eq slots(j); j += 1 }
         i += 1
       }
-      if (mx - mn <= slop) return true
-      ptr(mnI) += 1
-      if (ptr(mnI) >= pos(mnI).length) running = false
+      rep
     }
-    false
-  }
+    /** Repeated phrase terms (sloppy only): one group per distinct
+      * cursor — a slot holding it (`groupSlot`) and its ascending slot
+      * offsets.
+      */
+    private lazy val (groupSlot, groupOffs): (Array[Int], Array[Array[Int]]) = {
+      val firsts = (0 until m).filter(i => (0 until i).forall(j => !(slots(j) eq slots(i))))
+      (firsts.toArray, firsts.map(i => (0 until m).filter(j => slots(j) eq slots(i)).toArray).toArray)
+    }
 
-  /** Sloppy match with REPEATED phrase terms (rare): distinctness of
-    * the chosen positions inside a repeated term's slot group matters.
-    * Try every candidate window origin w ∈ {p − slot offset}; within
-    * [w, w + slop] each term group's constraint is a staircase of
-    * intervals [w+o, w+slop+o] over ascending offsets o, for which the
-    * ascending greedy assignment (smallest unused feasible position per
-    * offset) is exact. O(candidates × Σ positions).
-    */
-  private def sloppyRepeatsAt(slots: Array[PosCursor], slop: Int): Boolean = {
-    val m = slots.length
-    val groups: Array[(Array[Int], Array[Int])] = {
-      val seen = scala.collection.mutable.ArrayBuffer[(PosCursor, scala.collection.mutable.ArrayBuffer[Int])]()
+    def matches(): Boolean = {
       var i = 0
-      while (i < m) {
-        seen.find(_._1 eq slots(i)) match {
-          case Some((_, offs)) => offs += i
-          case None => seen += ((slots(i), scala.collection.mutable.ArrayBuffer(i)))
+      while (i < m) { lens(i) = slots(i).positions(); bufs(i) = slots(i).posBuf; i += 1 }
+      if (m == 1)
+        // positions are ascending: the FIRST occurrence decides span_first
+        lens(0) > 0 && (spanEnd < 0 || bufs(0)(0) + 1 <= spanEnd)
+      else if (slop == 0) {
+        // adjacency chain from start st spans [st, st + m) — end = st + m
+        val st = adjacentAt()
+        st >= 0 && (spanEnd < 0 || st + m <= spanEnd)
+      } else if (!hasRepeat) sloppyDistinct()
+      else sloppyRepeats()
+    }
+
+    /** Exact in-order adjacency (slop = 0): greedy minimal chain — for
+      * each start in slot 0, extend each later slot to its minimal
+      * position past the previous; pointers only move forward across
+      * starts, O(Σ positions) total. Returns the EARLIEST matching start
+      * position (starts ascend, so it is also the minimal-end chain —
+      * what `span_first` needs), or −1 when the phrase does not occur.
+      */
+    private def adjacentAt(): Int = {
+      java.util.Arrays.fill(ptr, 0)
+      var s = 0
+      while (s < lens(0)) {
+        val start = bufs(0)(s)
+        var prev = start
+        var j = 1
+        while (j < m) {
+          val pj = bufs(j)
+          while (ptr(j) < lens(j) && pj(ptr(j)) <= prev) ptr(j) += 1
+          if (ptr(j) >= lens(j)) return -1 // exhausted: no later start can match
+          prev = pj(ptr(j))
+          j += 1
         }
+        if (prev - start == m - 1) return start
+        s += 1
+      }
+      -1
+    }
+
+    /** Sloppy match, all slots DISTINCT terms: the classic k-list
+      * minimal range scan over the adjusted position lists — hold one
+      * pointer per list, test the current window, advance the list
+      * holding the minimum. Finds the minimal achievable width
+      * (positions across different terms are distinct by construction),
+      * O(Σ positions · m).
+      */
+    private def sloppyDistinct(): Boolean = {
+      java.util.Arrays.fill(ptr, 0)
+      while (true) {
+        var mn = Int.MaxValue
+        var mx = Int.MinValue
+        var mnI = 0
+        var i = 0
+        while (i < m) {
+          val v = bufs(i)(ptr(i)) - i
+          if (v < mn) { mn = v; mnI = i }
+          if (v > mx) mx = v
+          i += 1
+        }
+        if (mx - mn <= slop) return true
+        ptr(mnI) += 1
+        if (ptr(mnI) >= lens(mnI)) return false
+      }
+      false
+    }
+
+    /** Sloppy match with REPEATED phrase terms (rare): distinctness of
+      * the chosen positions inside a repeated term's slot group matters.
+      * Try every candidate window origin w = p − slot offset; within
+      * [w, w + slop] each term group's constraint is a staircase of
+      * intervals [w+o, w+slop+o] over ascending offsets o, for which the
+      * ascending greedy assignment (smallest unused feasible position per
+      * offset) is exact. O(candidates × Σ positions).
+      */
+    private def sloppyRepeats(): Boolean = {
+      var i = 0
+      while (i < m) {
+        var j = 0
+        while (j < lens(i)) { if (fitsAt(bufs(i)(j) - i)) return true; j += 1 }
         i += 1
       }
-      seen.map { case (it, offs) => (it.positions, offs.toArray) }.toArray
+      false
     }
-    val candidates = scala.collection.mutable.SortedSet[Int]()
-    var i = 0
-    while (i < m) {
-      val ps = slots(i).positions
-      var j = 0
-      while (j < ps.length) { candidates += ps(j) - i; j += 1 }
-      i += 1
-    }
-    candidates.exists { w =>
-      groups.forall { case (ps, offs) =>
+
+    /** Can every term group place its offsets inside the window at `w`? */
+    private def fitsAt(w: Int): Boolean = {
+      var g = 0
+      while (g < groupSlot.length) {
+        val ps = bufs(groupSlot(g))
+        val n = lens(groupSlot(g))
+        val offs = groupOffs(g)
         var pi = 0
-        offs.forall { o =>
-          while (pi < ps.length && ps(pi) < w + o) pi += 1
-          if (pi < ps.length && ps(pi) <= w + slop + o) { pi += 1; true } else false
+        var o = 0
+        while (o < offs.length) {
+          while (pi < n && ps(pi) < w + offs(o)) pi += 1
+          if (pi < n && ps(pi) <= w + slop + offs(o)) pi += 1 else return false
+          o += 1
         }
+        g += 1
       }
+      true
     }
   }
 
@@ -842,12 +1014,12 @@ object Wand {
     // scoring order: term asc over the MERGED groups (same determinism
     // rule as topK); merged(i) aligned-at-candidate ⇒ contributes
     val merged = (byTerm ++ shouldArr).sortBy(_.term)
-    val slots: Array[PosCursor] =
+    val phraseMatch: PhraseMatch =
       if (phrase == null) null
       else {
         val m = byTerm.map(it => it.term -> it).toMap
         require(phrase.forall(m.contains), "phrase terms must each have an iterator")
-        phrase.map(m).toArray
+        new PhraseMatch(phrase.map(m).toArray, slop, spanEnd)
       }
     val top = new TopK(k, after)
     var candidate = maxCurDoc(byTerm)
@@ -894,7 +1066,7 @@ object Wand {
         }
         if (aligned && candidate != Long.MaxValue) {
           if (!excludedAt(eArr, candidate) &&
-            (slots == null || phraseAt(slots, slop, spanEnd))) {
+            (phraseMatch == null || phraseMatch.matches())) {
             // advance shoulds to the candidate and count matches
             var nShould = 0
             var j = 0

@@ -45,6 +45,16 @@ class WandSpec extends AnyFunSuite {
   private def tfOf(doc: Array[String]): Map[String, Int] =
     doc.groupBy(identity).map { case (t, xs) => t -> xs.length }
 
+  /** A cursor over `blocks` as the distributed path reads them
+    * (decoded per block), scored under (df, n, avgdl); `staleBlockMax`
+    * bounds each block by score(maxTf, dl = 0), not its stored maxScore.
+    */
+  private def compressedIter(t: String, blocks: Array[PostingBlock], ub: Double, df: Long,
+      n: Long, avgdl: Double, staleBlockMax: Boolean = false, boost: Double = 1.0,
+      groupOrdinal: Int = Int.MinValue): Wand.TermIterator =
+    new Wand.TermIterator(t, Wand.PostingList.compressed(blocks, Bm25.idf(df, n), avgdl,
+      stored = !staleBlockMax, ub), ub, boost, groupOrdinal)
+
   /** Engine-side iterators for the query terms over the corpus. */
   private def buildIters(
       corpus: Array[Array[String]],
@@ -74,8 +84,7 @@ class WandSpec extends AnyFunSuite {
         Codec.encodeBlocks(tid.toLong, GraftHash.shardOf(t, 8), 0, ids, tf, ds, scores,
           poss, blockSize).toArray
       val ub = if (scores.isEmpty) 0.0 else scores.max
-      new Wand.TermIterator(t, blocks, ub, df(t), n, avgdl,
-        groupOrdinal = groupOrdinal)
+      compressedIter(t, blocks, ub, df(t), n, avgdl, groupOrdinal = groupOrdinal)
     }
     (iters, df, n, avgdl)
   }
@@ -400,7 +409,7 @@ class WandSpec extends AnyFunSuite {
     val ones = Array.fill(docIds.length)(1)
     val blocks = Codec.encodeBlocks(9999L, 0, 0, ids, ones, ones,
       Array.fill(docIds.length)(0.0), ids.map(_ => Array.emptyByteArray), blockSize).toArray
-    new Wand.TermIterator(name, blocks, 0.0, docIds.length.toLong, n, avgdl)
+    compressedIter(name, blocks, 0.0, docIds.length.toLong, n, avgdl)
   }
 
   test("filtered WAND (bool filter/must_not) ≡ exhaustive on 150 random cases incl. phrase") {
@@ -763,8 +772,16 @@ class WandSpec extends AnyFunSuite {
       val refs = Array(listOf(shuffle = c % 2 == 0), listOf(shuffle = c % 3 == 0))
       val boost = if (c % 3 == 0) 1.7 else 1.0
       val stale = c % 4 == 0
-      val its = refs.map(ref => new Wand.TermIterator("t", ref.blocks, 0.0, ref.ids.length.toLong,
-        n, avgdl, staleBlockMax = stale, boost = boost))
+      // odd cases read warm lists (decoded once, stored or rescored block
+      // maxima — equal here, the blocks were scored under the same stats)
+      val warm = c % 2 == 1
+      val its = refs.map(ref =>
+        if (warm)
+          new Wand.TermIterator("t", Wand.PostingList.decoded(Wand.inBlockOrder(ref.blocks),
+            Bm25.idf(ref.ids.length.toLong, n), avgdl, stored = c % 4 == 1, 0.0), 0.0, boost,
+            Int.MinValue)
+        else compressedIter("t", ref.blocks, 0.0, ref.ids.length.toLong,
+          n, avgdl, staleBlockMax = stale, boost = boost))
       val at = Array(0, 0) // the reference posting each cursor must sit on
       def check(j: Int, what: String): Unit = {
         val (it, ref, i) = (its(j), refs(j), at(j))
@@ -782,7 +799,10 @@ class WandSpec extends AnyFunSuite {
           assert(it.blockLast == b.lastDocId, what)
           // positions read lazily: skipped at some postings, so a block's
           // position cache is sometimes first built mid-block
-          if (r.nextBoolean()) assert(it.positions.sameElements(ref.poss(i)), what)
+          if (r.nextBoolean()) {
+            val np = it.positions()
+            assert(it.posBuf.take(np).sameElements(ref.poss(i)), what)
+          }
         }
       }
       def seekRef(j: Int, target: Long): Unit =
@@ -812,6 +832,72 @@ class WandSpec extends AnyFunSuite {
           }
         }
         steps += 1
+      }
+    }
+  }
+
+  test("warm lists ≡ fresh block decodes at every posting: block sizes 4/16/128, gallop jumps") {
+    val r = new scala.util.Random(11)
+    val n = 5000L
+    val avgdl = 17.5
+    def bits(d: Double): Long = java.lang.Double.doubleToRawLongBits(d)
+    for (bs <- Seq(4, 16, 128); c <- 1 to 4) {
+      // several full blocks and a partial last one; docId gaps of 1-4
+      val nPost = bs * (3 + r.nextInt(4)) + 1 + r.nextInt(bs - 1)
+      var d = r.nextInt(3).toLong
+      val ids0 = Array.fill(nPost) { val x = d; d += 1 + r.nextInt(4); x }
+      val tfs0 = Array.fill(nPost)(1 + r.nextInt(4))
+      val dls0 = tfs0.map(tf => tf + r.nextInt(40))
+      val pos0 = tfs0.map(tf => r.shuffle((0 until 50).toList).take(tf).sorted.toArray)
+      val scores0 = Array.tabulate(nPost)(i => Bm25.score(tfs0(i), nPost, dls0(i), n, avgdl))
+      val blocks = Codec.encodeBlocks(1L, 0, 0, ids0, tfs0, dls0, scores0,
+        pos0.map(Codec.encodePositions), bs).toArray
+      // the reference: every block decoded afresh, scored with Bm25.score
+      val decs = blocks.map(Codec.decodeBlock)
+      val ids = decs.flatMap(_.docIds)
+      val scores = decs.flatMap(dec => dec.docIds.indices.map(i =>
+        Bm25.score(dec.tfs(i), nPost, dec.dls(i), n, avgdl)))
+      val poss = blocks.zip(decs).flatMap { case (b, dec) => Codec.decodePositions(b, dec.tfs) }
+      val blk = blocks.flatMap(b => Array.fill(b.count)(b))
+      val boost = if (c % 2 == 0) 1.3 else 1.0
+      val stored = c > 2
+      def check(it: Wand.TermIterator, i: Int, what: String): Unit =
+        if (i >= nPost) assert(it.exhausted && it.curDoc == Long.MaxValue, what)
+        else {
+          assert(it.curDoc == ids(i), what)
+          assert(bits(it.score) == bits(boost * scores(i)), what)
+          val b = blk(i)
+          val inBlock = scores.indices.filter(blk(_) eq b).map(scores)
+          val wantMax = if (stored) b.maxScore else inBlock.max
+          assert(bits(it.blockMax) == bits(boost * wantMax), what)
+          assert(it.blockLast == b.lastDocId, what)
+          val np = it.positions()
+          assert(it.posBuf.take(np).sameElements(poss(i)), what)
+        }
+      val list = Wand.PostingList.decoded(blocks, Bm25.idf(nPost.toLong, n), avgdl, stored, 0.0)
+      // jumps in postings: next, two on, within a block, to and past the
+      // next block, several blocks on; each lands on a docId or, with
+      // `gap`, just before it (the gap's first docId, when there is one)
+      for (jump <- Seq(1, 2, bs - 1, bs, bs + 1, 2 * bs + 3); shallow <- Seq(false, true);
+          gap <- Seq(false, true)) {
+        val it = new Wand.TermIterator("t", list, 0.0, boost, Int.MinValue)
+        val what = s"bs=$bs case $c jump=$jump shallow=$shallow gap=$gap"
+        check(it, 0, s"$what: first posting")
+        var i = 0
+        while (i < nPost) {
+          val j = i + jump
+          val target =
+            if (j >= nPost) ids(nPost - 1) + 1
+            else if (gap && ids(j) - 1 > ids(j - 1)) ids(j) - 1
+            else ids(j)
+          if (shallow) it.shallowSeek(target)
+          it.nextGEQ(target)
+          i = math.min(j, nPost)
+          check(it, i, s"$what: nextGEQ($target)")
+        }
+        // blocks loaded = the distinct blocks landed on
+        val landed = (0 until nPost by jump).map(blk).distinct.size
+        assert(it.decodes == landed, s"$what: ${it.decodes} loads, $landed blocks")
       }
     }
   }

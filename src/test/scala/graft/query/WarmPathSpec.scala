@@ -16,8 +16,10 @@ import graft.streaming.StreamingIngest
   * docId-ordered lists that span every segment and bucket. On adversarial
   * corpora it must answer exactly like the distributed path (one WAND per
   * (segment, bucket) group) and the exhaustive [[Oracle]]; segments whose
-  * docId ranges overlap fail `warm()` loudly; and a warm query over
-  * several tombstoned segments runs no Spark job.
+  * docId ranges overlap fail `warm()` loudly; a warm query over several
+  * tombstoned segments runs no Spark job; the local-serving budget counts
+  * the decoded lists; and a store whose df corrections stay distributed
+  * is served distributed.
   */
 class WarmPathSpec extends SparkSpec {
   import spark.implicits._
@@ -182,7 +184,13 @@ class WarmPathSpec extends SparkSpec {
         BoolQuerySpec(query = "have", anyFilters = Seq("role" -> Seq("user", "tool")))), k)
     val want = queries().map(_.toSeq) // pays the one-time lazy set-up
     assert(want.forall(_.nonEmpty))
-    val group = "warm-path-zero-jobs"
+    val jobs = jobsOf("warm-path-zero-jobs")(assert(queries().map(_.toSeq) == want))
+    assert(jobs == 0, s"$jobs Spark job(s) ran for warm queries")
+    all.unpersist()
+  }
+
+  /** Spark jobs that `body` starts (counted by its job group). */
+  private def jobsOf(group: String)(body: => Unit): Int = {
     val jobs = new AtomicInteger()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
@@ -193,11 +201,65 @@ class WarmPathSpec extends SparkSpec {
     sc.addSparkListener(listener)
     try {
       sc.setJobGroup(group, group)
-      try assert(queries().map(_.toSeq) == want)
+      try body
       finally sc.clearJobGroup()
       org.apache.spark.sql.GraftSqlBridge.waitListenerBus(sc)
-      assert(jobs.get() == 0, s"${jobs.get()} Spark job(s) ran for warm queries")
+      jobs.get()
     } finally sc.removeSparkListener(listener)
+  }
+
+  test("the local-serving budget counts the decoded lists, not compressed bytes × 4") {
+    val all = Transcripts.generate(spark, 40L).cache()
+    val idx = s"${TestSpark.tmpRoot}/warm-path-budget"
+    // one bucket: a list of ≤ 128 postings is one block, which the old
+    // estimate charged 256 B and the decoded one 40 B plus 256 B per list
+    StreamingIngest.appendSegment(spark, all, idx, 0L, cfg.copy(numBuckets = 1, blockSize = 128))
+    val probe = new MultiSearcher(spark, idx).warm()
+    assert(probe.servesLocally)
+    val decoded = probe.localBytes
+    // the estimate the budget used before the lists were decoded at warm
+    // time: encoded block bytes plus 64 B per block, times 4
+    val compressedX4 = probe.segments.map(seg => spark.read.parquet(s"$seg/blocks")
+      .agg(sum((length($"docs") + length($"tfs") + length($"dls") + length($"poss") + 64) * 4))
+      .head().getLong(0)).sum
+    assert(compressedX4 < decoded, s"compressed × 4 = $compressedX4 B, decoded = $decoded B")
+    def queries(s: Searcher): Seq[Seq[Scored]] = Seq(
+      s.search("the zanzibar", k), s.searchConjunctive("the one", k),
+      s.searchPhrase("zanzibar quasar", k),
+      s.searchBool("the", k, filters = Seq("role" -> "user"))).map(_.toSeq)
+    val want = queries(probe)
+    assert(want.forall(_.nonEmpty))
+    val tight = new MultiSearcher(spark, idx).warm(maxLocalBlockBytes = compressedX4)
+    assert(!tight.servesLocally && tight.localBytes == decoded)
+    assert(queries(tight) == want)
+    assert(jobsOf("warm-path-budget-tight")(assert(queries(tight) == want)) > 0)
+    val fits = new MultiSearcher(spark, idx).warm(maxLocalBlockBytes = decoded)
+    assert(fits.servesLocally && fits.localBounds == Searcher.StoredBounds)
+    assert(queries(fits) == want)
+    val jobs = jobsOf("warm-path-budget-fits")(assert(queries(fits) == want))
+    assert(jobs == 0, s"$jobs Spark job(s) ran for warm queries")
+    all.unpersist()
+  }
+
+  test("heavy churn (df corrections not cached on the driver) stays distributed ≡ Oracle") {
+    val all = Transcripts.generate(spark, 30L).cache()
+    val idx = ingest("churn", Seq(convRange(all, 0, 15),
+      convRange(all, 15, 30).unionByName(convRange(all, 0, 6).filter($"turn_idx" === 0))))
+    assert(StreamingIngest.deleteConvs(spark, idx, Seq("conv-00000003", "conv-00000021")) > 0)
+    val s = new MultiSearcher(spark, idx)
+    s.maxDriverRemovedTerms = 0
+    s.warm()
+    assert(!s.servesLocally && s.localBytes == 0L && s.localBounds == Searcher.LooseBounds)
+    val live = s.docs.cache()
+    for (q <- Seq("the zanzibar", "one have", "quasar")) {
+      assert(s.search(q, k).toSeq == hits(Oracle.topK(live, q, k)), s"OR '$q'")
+      assert(s.searchConjunctive(q, k).toSeq == hits(Oracle.topKConjunctive(live, q, k)),
+        s"AND '$q'")
+    }
+    assert(s.searchPhrase("zanzibar quasar", k).toSeq ==
+      hits(Oracle.topKPhrase(live, "zanzibar quasar", k)))
+    assert(jobsOf("warm-path-churn")(s.search("the zanzibar", k)) > 0)
+    live.unpersist()
     all.unpersist()
   }
 }
