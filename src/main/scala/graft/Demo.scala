@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 import graft.corpus.Transcripts
 import graft.index.{DocIds, IndexBuilder, IndexConfig}
-import graft.query.{Oracle, Searcher}
+import graft.query.{BoolQuerySpec, Oracle, Searcher}
 
 /** Demo / smoke CLI: builds the full index over the seed-42 synthetic
   * transcript corpus and runs a few BM25 queries through the WAND path,
@@ -91,7 +91,7 @@ object Demo {
     println("== dl histogram (width 20) over the 'the' match set:")
     searcher.numericHistogram("the", "dl", 20).show(5, truncate = false)
     println("== dl stats over the 'the' match set, filtered role=user:")
-    searcher.fieldStats("the", "dl", filters = Seq("role" -> "user")).show(false)
+    searcher.fieldStats(BoolQuerySpec("the", filters = Seq("role" -> "user")), "dl").show(false)
 
     // round-5 surface: per-field match, multi_match, sub-aggregation
     println(s"== fielded match 'the' over the 'opener' field (per-field BM25 stats) -> " +
@@ -107,8 +107,8 @@ object Demo {
     // round-6 surface: exists/missing, query_string, suggester,
     // significant_terms, more_like_this, top_hits
     println(s"== exists/missing on 'tool' (the _field_names marker): " +
-      s"exists=${searcher.matchCount("the", exists = Seq("tool"))} " +
-      s"missing=${searcher.matchCount("the", missing = Seq("tool"))} " +
+      s"exists=${searcher.matchCount(BoolQuerySpec("the", exists = Seq("tool")))} " +
+      s"missing=${searcher.matchCount(BoolQuerySpec("the", missing = Seq("tool")))} " +
       s"of ${searcher.matchCount("the")} matching docs")
     val qs = searcher.searchQueryString("the AND a role:user dl:[30 TO 80]", 3,
       graft.query.QueryString.Schema(keywordFields = Set("role"), numericFields = Set("dl")))

@@ -10,7 +10,7 @@ import graft.compat.CatalogCompat
 import graft.index.{IndexBuilder, IndexConfig}
 import graft.model.Doc
 import graft.ops.{Dedup, Multimodal, Similarity, TextOps}
-import graft.query.{Bm25, Oracle, Searcher}
+import graft.query.{Bm25, BoolQuerySpec, Oracle, Searcher}
 
 /** Driver contract — one `queries` entry per implemented operator from
   * SURVEY.md §2 (+ the training-data-pipeline ops), each with a DuckDB
@@ -549,8 +549,8 @@ FROM scored ORDER BY score DESC, doc_id ASC LIMIT $k"""
       // ES constant_score: filter-context membership, score = boost,
       // deterministic docId-asc ties — no BM25, no WAND
       searcherOf(s, documentsIndex(s, dir))
-        .searchConstantScore(Bm25Query, 10, boost = 2.5,
-          filters = Seq("lang" -> "en"))
+        .searchConstantScore(BoolQuerySpec(Bm25Query, filters = Seq("lang" -> "en")), 10,
+          boost = 2.5)
         .select(col("docId").as("doc_id"), col("score"))),
     "q_rescore" -> ((s, dir) =>
       // ES function_score field_value_factor via a rescore window:
@@ -685,9 +685,9 @@ FROM scored ORDER BY score DESC, doc_id ASC LIMIT $k"""
       // aggregation over the FULL bool query incl. a `terms` clause and
       // a lexicographic keyword `range` clause (round-5 review ask #6)
       searcherOf(s, documentsIndex(s, dir))
-        .facetCounts(Bm25Query, "source",
+        .facetCounts(BoolQuerySpec(Bm25Query,
           anyFilters = Seq("lang" -> Seq("fr", "es", "de")),
-          rangeFilters = Seq(("source", "src1", "src2")))),
+          rangeFilters = Seq(("source", "src1", "src2"))), "source")),
     "q_bm25_exists" -> ((s, dir) => {
       // ES `exists` query: docs that HAVE the title field (≥1 token) —
       // the `_field_names`-style marker term rides the WAND as one more
@@ -1009,12 +1009,13 @@ FROM scored ORDER BY score DESC, doc_id ASC LIMIT $k"""
       // filter clause (semi-join of the clause's posting docIds — no
       // doc-store predicate scan)
       searcherOf(s, documentsIndex(s, dir))
-        .facetCounts(Bm25Query, "lang", filters = Seq("source" -> "src1"))),
+        .facetCounts(BoolQuerySpec(Bm25Query, filters = Seq("source" -> "src1")), "lang")),
     "q_count_range" -> ((s, dir) => {
       import s.implicits._
       // hits.total of a bool query with a numeric trie range clause
       Seq(searcherOf(s, documentsIndex(s, dir))
-        .matchCount(Bm25Query, numericRangeFilters = Seq(("n_chars", 137L, 2741L))))
+        .matchCount(BoolQuerySpec(Bm25Query,
+          numericRangeFilters = Seq(("n_chars", 137L, 2741L)))))
         .toDF("n_hits")
     }),
     "q_facet_lang" -> ((s, dir) =>

@@ -265,10 +265,8 @@ class Indices(spark: SparkSession, root: String, numShards: Int = 8) {
       searcherFor(n).facetCounts(query, field)
     }
     require(frames.nonEmpty, s"expression '$expr' matched no index under $root")
-    val merged = frames.reduce(_ unionByName _)
-      .groupBy(col("value")).agg(sum(col("n_docs")).as("n_docs"))
-    if (size > 0) merged.orderBy(col("n_docs").desc, col("value").asc).limit(size)
-    else merged.orderBy(col("value"))
+    Searcher.termsOrderOf(frames.reduce(_ unionByName _)
+      .groupBy(col("value")).agg(sum(col("n_docs")).as("n_docs")), size)
   }
 
   /** Multi-index `stats` aggregation: every matched index's one-row
@@ -319,21 +317,8 @@ class Indices(spark: SparkSession, root: String, numShards: Int = 8) {
     * value) rows like the per-index surface.
     */
   def percentiles(expr: String, query: String, field: String, ps: Seq[Double],
-      approximate: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.functions.{array, element_at, lit, posexplode}
-    require(ps.nonEmpty && ps.forall(p => p >= 0.0 && p <= 1.0),
-      "percentiles must be in [0, 1]")
-    val pLits = array(ps.map(lit): _*)
-    val aggExpr =
-      if (approximate) percentile_approx(col(field), pLits, lit(10000))
-      else percentile(col(field), pLits)
-    matchedUnion(expr, query, field)
-      .agg(aggExpr.as("vals"))
-      .select(posexplode(col("vals")).as(Seq("pos", "value")))
-      .select(element_at(pLits, col("pos").cast("int") + 1).as("p"),
-        col("value").cast("double").as("value"))
-      .orderBy(col("p"))
-  }
+      approximate: Boolean = false): DataFrame =
+    Searcher.percentilesOf(matchedUnion(expr, query, field), field, ps, approximate)
 
   /** Multi-index `cardinality`: distinct field values over the unioned
     * match sets — exact by default (distinct de-dups ACROSS indexes in
@@ -341,13 +326,8 @@ class Indices(spark: SparkSession, root: String, numShards: Int = 8) {
     * why this rides the union), HLL sketch when `approximate`.
     */
   def cardinality(expr: String, query: String, field: String,
-      approximate: Boolean = false): Long = {
-    val joined = matchedUnion(expr, query, field)
-    val agg =
-      if (approximate) joined.agg(approx_count_distinct(col(field)).as("c"))
-      else joined.agg(countDistinct(col(field)).as("c"))
-    agg.head().getLong(0)
-  }
+      approximate: Boolean = false): Long =
+    Searcher.cardinalityOf(matchedUnion(expr, query, field), field, approximate)
 
   /** Run `f` over the resolved index names concurrently, results in
     * input order (deterministic — downstream merges re-sort anyway).

@@ -1,5 +1,7 @@
 package graft.query
 
+import scala.language.implicitConversions
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -13,8 +15,11 @@ import graft.model.{IndexStats, PostingBlock, Scored, TermStats}
   * ([[ResolvedQuery]]); [[Searcher.searchBool]] runs one spec,
   * [[Searcher.searchManyBool]] a batched `_msearch`-style request (all
   * specs' ranges expand in ONE batched dictionary scan — the one-job
-  * contract holds), and the match-set aggregations take their
-  * membership from the same compiled value.
+  * contract holds), and every match-set operator (aggregations, counts,
+  * field sorts, constant score, collapse) takes its membership as one
+  * spec. A match set is the OR of the `query` terms on the main field
+  * plus the clauses; it rejects `conjunctive`, `phrase`, `should`,
+  * `minShouldMatch`, a non-main `field` and `multiMatchFields`.
   */
 final case class BoolQuerySpec(
     query: String = "",
@@ -58,10 +63,18 @@ final case class BoolQuerySpec(
     minShouldMatch: Int = 0,
     phraseSlop: Int = 0)
 
+object BoolQuerySpec {
+  /** A bare query string is the spec without clauses, so a filter-free
+    * match-set call reads `facetCounts(q, field)`.
+    */
+  implicit def ofQuery(query: String): BoolQuerySpec = BoolQuerySpec(query)
+}
+
 /** Pattern-compile helpers shared by the single-index and cross-segment
-  * term-expansion paths (ES `wildcard` rewrite): the Scala regex and the
-  * SQL LIKE pattern MUST stay equivalent (AnalyzerSpec-style parity is
-  * covered by the expansion specs).
+  * term-expansion paths (ES `wildcard` rewrite): the Scala regex (warm
+  * driver dictionary) and the SQL LIKE pattern (cold dictionary scan) MUST
+  * stay equivalent — EngineSpec "wildcard twins" pins warm ≡ cold for
+  * `?`, `*?`, a leading `?` and a pattern without wildcards.
   */
 private[query] object Expansion {
   def wildcardRegex(patLower: String): scala.util.matching.Regex =
@@ -264,6 +277,48 @@ private[query] object Searcher {
       .selectExpr(s"stack(${ranges.size}, $stackArgs) as (key, n_docs)")
   }
 
+  /** Shared ES `terms`-aggregation order over (value, n_docs) buckets:
+    * `size` > 0 keeps the top `size` by doc count desc (value asc
+    * tiebreak — deterministic), ES's default bucket order, planned as
+    * TakeOrderedAndProject over the agg (per-partition heaps, never a
+    * global sort); 0 = every bucket, value-ordered.
+    */
+  def termsOrderOf(buckets: DataFrame, size: Int): DataFrame =
+    if (size > 0) buckets.orderBy(col("n_docs").desc, col("value").asc).limit(size)
+    else buckets.orderBy(col("value"))
+
+  /** Shared ES `cardinality` body: distinct non-null values of `field`
+    * in `joined` — exact count-distinct, or the HyperLogLog++ sketch when
+    * `approximate`.
+    */
+  def cardinalityOf(joined: DataFrame, field: String, approximate: Boolean): Long = {
+    val agg =
+      if (approximate) joined.agg(approx_count_distinct(col(field)).as("c"))
+      else joined.agg(countDistinct(col(field)).as("c"))
+    agg.head().getLong(0)
+  }
+
+  /** Shared ES `percentiles` body: one (p, value) row per requested
+    * percentile of `field` in `joined`, p ascending — Spark's exact
+    * `percentile`, or the `percentile_approx` sketch when `approximate`.
+    * Column API, not an expr() SQL string: field names with special
+    * characters must never reach a SQL parser (round-6 review).
+    */
+  def percentilesOf(joined: DataFrame, field: String, ps: Seq[Double],
+      approximate: Boolean): DataFrame = {
+    require(ps.nonEmpty && ps.forall(p => p >= 0.0 && p <= 1.0),
+      "percentiles must be in [0, 1]")
+    val pLits = array(ps.map(lit): _*)
+    val aggExpr =
+      if (approximate) percentile_approx(col(field), pLits, lit(10000))
+      else percentile(col(field), pLits)
+    joined.agg(aggExpr.as("vals"))
+      .select(posexplode(col("vals")).as(Seq("pos", "value")))
+      .select(element_at(pLits, col("pos").cast("int") + 1).as("p"),
+        col("value").cast("double").as("value"))
+      .orderBy(col("p"))
+  }
+
   /** `function_score` field-value column as `__fv`: nulls substitute
     * the `missing` default when given, else fail LOUDLY on the first
     * null row (ES field_value_factor semantics — it errors without
@@ -368,23 +423,6 @@ private[query] object Searcher {
   /** (count, Σdl, per-field count / Σdl) of the tombstoned docs. */
   final case class RemovedStats(n: Long, sumDl: Long,
       fieldN: Map[String, Long], fieldSumDl: Map[String, Long])
-
-  /** Where a searcher's WAND upper bounds come from. */
-  sealed trait Bounds extends Serializable
-  /** The dictionary term maxScore and the stored block maxima — valid
-    * exactly when the corpus is one segment without tombstones (only
-    * then are the segment's build-time stats the global stats).
-    */
-  case object StoredBounds extends Bounds
-  /** Block maxima re-derived exactly under the merged stats at warm time
-    * (the warm lists of several segments or tombstones).
-    */
-  case object RescoredBounds extends Bounds
-  /** score(maxTf, dl = 0) per block — an exact upper bound under any
-    * stats (BM25 rises in tf, falls in dl), loose in practice: the
-    * distributed path over several segments or tombstones.
-    */
-  case object LooseBounds extends Bounds
 
   /** (docCount, avgdl) that term `t` scores under: its field's merged
     * stats for a `%field:` term (per-field BM25), else the corpus's.
@@ -594,10 +632,11 @@ private[query] final case class ResolvedQuery(
   * Bounds: stored per-block and dictionary maxScore encode the SEGMENT's
   * build-time stats, so they prune exactly when there is one segment and
   * no tombstones. Otherwise block bounds come from the stats-independent
-  * maxTf as score(maxTf, dl = 0), or from a warm-time rescore under the
-  * merged stats ([[Searcher.Bounds]]). Exact per-posting rescoring from
-  * the stored (tf, dl) streams keeps results rank-identical to an
-  * exhaustive oracle either way.
+  * maxTf as score(maxTf, dl = 0) — an exact bound under any stats, loose
+  * in practice (the distributed path) — or from a warm-time rescore under
+  * the merged stats (the warm lists, [[servesLocally]]). Exact
+  * per-posting rescoring from the stored (tf, dl) streams keeps results
+  * rank-identical to an exhaustive oracle either way.
   */
 class Searcher private[query] (
     spark: SparkSession,
@@ -609,7 +648,6 @@ class Searcher private[query] (
     /** The segment index dirs served as one corpus. */
     val segments: Seq[String]) {
   import spark.implicits._
-  import Searcher.{LooseBounds, RescoredBounds, StoredBounds}
 
   /** A single built index: one segment, no tombstones. */
   def this(spark: SparkSession, indexDir: String, numShards: Int) =
@@ -654,9 +692,6 @@ class Searcher private[query] (
   @volatile private var localTomb: Array[Long] = _
   // term → per-segment dictionary rows (driver lookup, zero jobs)
   @volatile private var localDict: Map[String, Seq[(Int, TermStats)]] = _
-  // where the queries' WAND bounds come from: stored, rescored at warm
-  // time under the merged stats (warm lists), or loose (distributed)
-  @volatile private[query] var localBounds: Searcher.Bounds = LooseBounds
   // the resident bytes warm() estimated for the decoded lists (0 = not
   // estimated: no driver dictionary, or an idf not fixed at warm time)
   @volatile private[query] var localBytes: Long = 0L
@@ -734,8 +769,6 @@ class Searcher private[query] (
       localBytes = blockBytes + localDict.size * ResidentListBytes + removedStats.n * 8L
       if (localBytes <= maxLocalBlockBytes) buildLocalLists()
     }
-    localBounds =
-      if (storedBounds) StoredBounds else if (localLists != null) RescoredBounds else LooseBounds
     this
   }
 
@@ -809,8 +842,10 @@ class Searcher private[query] (
   private lazy val hasTombstones: Boolean = Tombstones.exists(spark, indexDir)
   private def tombDF: DataFrame = Tombstones.loadDF(spark, indexDir)
 
-  /** Stored build-time bounds are valid: one segment, no tombstones. */
-  private lazy val storedBounds: Boolean = segments.size == 1 && !hasTombstones
+  /** Stored build-time bounds are valid: one segment, no tombstones (only
+    * then are the segment's build-time stats the global stats).
+    */
+  private[query] lazy val storedBounds: Boolean = segments.size == 1 && !hasTombstones
 
   /** Tombstone block size: exclusion blocks carry no payload worth
     * splitting finely — bigger blocks = fewer rows through the scan.
@@ -2022,26 +2057,29 @@ class Searcher private[query] (
       .flatMap { case (ds, n0, first) => Codec.deltaDecode(ds, n0, first) }
       .toDF("docId"))
 
+  /** A match set is the OR of the spec's `query` terms on the main field
+    * plus its clauses: the scoring-only options would be silently ignored,
+    * so they fail loudly instead.
+    */
+  private def requireMatchSet(spec: BoolQuerySpec): Unit =
+    require(!spec.conjunctive && !spec.phrase && spec.should.isEmpty &&
+      spec.minShouldMatch == 0 && spec.field == "text" && spec.multiMatchFields.isEmpty,
+      "a match set takes OR `query` text on the main field plus clauses; conjunctive, " +
+        s"phrase, should, minShouldMatch, field and multiMatchFields are not supported: $spec")
+
   /** Membership of the FULL bool query (ES aggregations/counts run over
     * the filtered query, not just the scored terms): the OR query value
-    * [[compile]] builds, resolved by [[ResolvedQuery.visibleIn]] — distinct
-    * docs matching ≥1 scored term, restricted by every filter clause
-    * (semi-join per clause — each clause's docIds come from its own
-    * pruned block scan) and must_not + tombstones (anti-joins). All
-    * joins are docId-keyed — the match set never touches the driver.
-    * None when the query can have no hits.
+    * [[compile]] builds from `spec`, resolved by
+    * [[ResolvedQuery.visibleIn]] — distinct docs matching ≥1 scored term,
+    * restricted by every filter clause (semi-join per clause — each
+    * clause's docIds come from its own pruned block scan) and must_not
+    * (keyword values, missing-field markers, `mustNotText` tokens) +
+    * tombstones (anti-joins). All joins are docId-keyed — the match set
+    * never touches the driver. None when the query can have no hits.
     */
-  private def matchSet(query: String,
-      filters: Seq[(String, String)] = Nil,
-      mustNot: Seq[(String, String)] = Nil,
-      numericRangeFilters: Seq[(String, Long, Long)] = Nil,
-      anyFilters: Seq[(String, Seq[String])] = Nil,
-      rangeFilters: Seq[(String, String, String)] = Nil,
-      exists: Seq[String] = Nil,
-      missing: Seq[String] = Nil): Option[DataFrame] = {
-    val q0 = compile(Seq(BoolQuerySpec(query, filters = filters, mustNot = mustNot,
-      anyFilters = anyFilters, numericRangeFilters = numericRangeFilters,
-      rangeFilters = rangeFilters, exists = exists, missing = missing))).head
+  private def matchSet(spec: BoolQuerySpec): Option[DataFrame] = {
+    requireMatchSet(spec)
+    val q0 = compile(Seq(spec)).head
     val (dfGlobal, perSeg) = lookup(q0.terms.distinct.sorted)
     val q = q0.visibleIn(dfGlobal.contains).getOrElse(return None)
     var m = decodeDocIdsRaw(perSeg, q.scored.toSet).getOrElse(return None).distinct()
@@ -2060,17 +2098,15 @@ class Searcher private[query] (
     * every aggregation below shares one plan shape with a correct
     * empty-result schema.
     */
-  private def matchingOrEmpty(query: String,
-      filters: Seq[(String, String)] = Nil,
-      mustNot: Seq[(String, String)] = Nil,
-      numericRangeFilters: Seq[(String, Long, Long)] = Nil,
-      anyFilters: Seq[(String, Seq[String])] = Nil,
-      rangeFilters: Seq[(String, String, String)] = Nil,
-      exists: Seq[String] = Nil,
-      missing: Seq[String] = Nil): DataFrame =
-    matchSet(query, filters, mustNot, numericRangeFilters, anyFilters, rangeFilters,
-      exists, missing)
-      .getOrElse(Seq.empty[Long].toDF("docId"))
+  private def matchingOrEmpty(spec: BoolQuerySpec): DataFrame =
+    matchSet(spec).getOrElse(Seq.empty[Long].toDF("docId"))
+
+  /** `cols` of the docs in the match set of `spec`: the column-pruned doc
+    * stores docId-joined against the membership frame — the input every
+    * value aggregation below consumes.
+    */
+  private def matched(spec: BoolQuerySpec, cols: Column*): DataFrame =
+    rawDocs.select(col("docId") +: cols: _*).join(matchingOrEmpty(spec), Seq("docId"))
 
   /** Decoded (docId, term, tf, dl, df) posting rows of the query's terms
     * across segments under the LWW-exact merged df — the shared
@@ -2195,16 +2231,8 @@ class Searcher private[query] (
     * set every aggregation uses, ranked (docId asc — deterministic; ES
     * leaves constant-score ties arbitrary) via TakeOrderedAndProject.
     */
-  def searchConstantScore(query: String, k: Int, boost: Double = 1.0,
-      filters: Seq[(String, String)] = Nil,
-      mustNot: Seq[(String, String)] = Nil,
-      numericRangeFilters: Seq[(String, Long, Long)] = Nil,
-      anyFilters: Seq[(String, Seq[String])] = Nil,
-      rangeFilters: Seq[(String, String, String)] = Nil,
-      exists: Seq[String] = Nil,
-      missing: Seq[String] = Nil): DataFrame =
-    matchingOrEmpty(query, filters, mustNot, numericRangeFilters, anyFilters,
-      rangeFilters, exists, missing)
+  def searchConstantScore(query: BoolQuerySpec, k: Int, boost: Double = 1.0): DataFrame =
+    matchingOrEmpty(query)
       .orderBy(col("docId")).limit(k)
       .withColumn("score", lit(boost))
 
@@ -2321,14 +2349,7 @@ class Searcher private[query] (
     * null group (ES doc-values semantics). Returns (key, doc_id,
     * score), score desc / doc_id asc.
     */
-  def collapse(query: String, field: String, k: Int,
-      filters: Seq[(String, String)] = Nil,
-      mustNot: Seq[(String, String)] = Nil,
-      numericRangeFilters: Seq[(String, Long, Long)] = Nil,
-      anyFilters: Seq[(String, Seq[String])] = Nil,
-      rangeFilters: Seq[(String, String, String)] = Nil,
-      exists: Seq[String] = Nil,
-      missing: Seq[String] = Nil,
+  def collapse(query: BoolQuerySpec, field: String, k: Int,
       /** ES collapse `inner_hits.size`: 1 (default) returns the
         * group's best hit only; > 1 additionally returns the group's
         * next-best hits, ranked by `hit_rank` (same (score desc,
@@ -2339,7 +2360,8 @@ class Searcher private[query] (
       innerHits: Int = 1): DataFrame = {
     require(k > 0, "collapse size must be positive")
     require(innerHits > 0, "inner_hits size must be positive")
-    scoredMatches(Analyzer.analyzeQuery(query).toSeq) match {
+    requireMatchSet(query)
+    scoredMatches(Analyzer.analyzeQuery(query.query).toSeq) match {
       case None =>
         rawDocs.select(col(field).as("key")).limit(0)
           .withColumn("hit_rank", lit(0)).withColumn("doc_id", lit(0L))
@@ -2348,43 +2370,26 @@ class Searcher private[query] (
         // bool context restricts MEMBERSHIP only (scores stay full-corpus
         // BM25 — the engine-wide filter-context rule)
         val scored =
-          if (filters.isEmpty && mustNot.isEmpty && numericRangeFilters.isEmpty &&
-            anyFilters.isEmpty && rangeFilters.isEmpty && exists.isEmpty && missing.isEmpty)
-            scored0
-          else scored0.join(matchingOrEmpty(query, filters, mustNot,
-            numericRangeFilters, anyFilters, rangeFilters, exists, missing),
-            Seq("docId"), "left_semi")
+          if (query == BoolQuerySpec(query.query)) scored0
+          else scored0.join(matchingOrEmpty(query), Seq("docId"), "left_semi")
         Searcher.collapseOf(
           rawDocs.select(col("docId"), col(field).as("key")).join(scored, Seq("docId")),
           k, innerHits)
     }
   }
 
-  def facetCounts(query: String, field: String,
-      filters: Seq[(String, String)] = Nil,
-      mustNot: Seq[(String, String)] = Nil,
-      numericRangeFilters: Seq[(String, Long, Long)] = Nil,
-      anyFilters: Seq[(String, Seq[String])] = Nil,
-      rangeFilters: Seq[(String, String, String)] = Nil,
-      exists: Seq[String] = Nil,
-      missing: Seq[String] = Nil,
-      /** ES terms-agg `size`: > 0 returns only the top `size` buckets
-        * by doc count desc (value asc tiebreak — deterministic), ES's
-        * DEFAULT bucket ordering; plans as TakeOrderedAndProject over
-        * the agg (per-partition heaps, never a global sort). 0 = every
-        * bucket, value-ordered.
-        */
-      size: Int = 0): DataFrame =
-    matchSet(query, filters, mustNot, numericRangeFilters, anyFilters, rangeFilters,
-      exists, missing) match {
+  /** ES `terms` aggregation: (value, n_docs) per distinct `field` value
+    * of the match set; `size` as in [[Searcher.termsOrderOf]] (ES
+    * terms-agg `size`, 0 = every bucket).
+    */
+  def facetCounts(query: BoolQuerySpec, field: String, size: Int = 0): DataFrame =
+    matchSet(query) match {
       case None =>
         rawDocs.select(col(field).as("value")).limit(0).withColumn("n_docs", lit(0L))
       case Some(matching) =>
-        val agged = rawDocs.select(col("docId"), col(field).as("value"))
+        Searcher.termsOrderOf(rawDocs.select(col("docId"), col(field).as("value"))
           .join(matching, Seq("docId"))
-          .groupBy(col("value")).agg(count(lit(1)).as("n_docs"))
-        if (size > 0) agged.orderBy(col("n_docs").desc, col("value").asc).limit(size)
-        else agged.orderBy(col("value"))
+          .groupBy(col("value")).agg(count(lit(1)).as("n_docs")), size)
     }
 
   /** ES `range` aggregation: one row per requested [from, to) bucket
@@ -2394,37 +2399,18 @@ class Searcher private[query] (
     * the plan costs exactly one match-set join regardless of the range
     * count. Rows come back in request order with `key` "from-to".
     */
-  def rangesAgg(query: String, field: String,
-      ranges: Seq[(Option[Long], Option[Long])],
-      filters: Seq[(String, String)] = Nil,
-      mustNot: Seq[(String, String)] = Nil,
-      numericRangeFilters: Seq[(String, Long, Long)] = Nil,
-      anyFilters: Seq[(String, Seq[String])] = Nil,
-      rangeFilters: Seq[(String, String, String)] = Nil,
-      exists: Seq[String] = Nil,
-      missing: Seq[String] = Nil): DataFrame = {
+  def rangesAgg(query: BoolQuerySpec, field: String,
+      ranges: Seq[(Option[Long], Option[Long])]): DataFrame = {
     require(ranges.nonEmpty, "range aggregation needs >= 1 range")
-    val joined = rawDocs.select(col("docId"), col(field))
-      .join(matchingOrEmpty(query, filters, mustNot, numericRangeFilters, anyFilters,
-        rangeFilters, exists, missing), Seq("docId"))
-    Searcher.rangesAggOf(joined, col(field), ranges)
+    Searcher.rangesAggOf(matched(query, col(field)), col(field), ranges)
   }
 
   /** Total hit count of the (optionally bool-filtered) match set (ES
     * `hits.total` / `_count`) — no top-k involved; one distributed
     * count over the decoded docId stream.
     */
-  def matchCount(query: String,
-      filters: Seq[(String, String)] = Nil,
-      mustNot: Seq[(String, String)] = Nil,
-      numericRangeFilters: Seq[(String, Long, Long)] = Nil,
-      anyFilters: Seq[(String, Seq[String])] = Nil,
-      rangeFilters: Seq[(String, String, String)] = Nil,
-      exists: Seq[String] = Nil,
-      missing: Seq[String] = Nil): Long =
-    matchSet(query, filters, mustNot, numericRangeFilters, anyFilters, rangeFilters,
-      exists, missing)
-      .map(_.count()).getOrElse(0L)
+  def matchCount(query: BoolQuerySpec): Long =
+    matchSet(query).map(_.count()).getOrElse(0L)
 
   /** ES `histogram` aggregation over the FULL match set: doc counts per
     * fixed-width bucket of a numeric field (bucket = floor(v/width)·
@@ -2433,18 +2419,9 @@ class Searcher private[query] (
     * against the column-pruned doc store → hash agg; the match set
     * never touches the driver.
     */
-  def numericHistogram(query: String, field: String, width: Long,
-      filters: Seq[(String, String)] = Nil,
-      mustNot: Seq[(String, String)] = Nil,
-      numericRangeFilters: Seq[(String, Long, Long)] = Nil,
-      anyFilters: Seq[(String, Seq[String])] = Nil,
-      rangeFilters: Seq[(String, String, String)] = Nil,
-      exists: Seq[String] = Nil,
-      missing: Seq[String] = Nil): DataFrame = {
+  def numericHistogram(query: BoolQuerySpec, field: String, width: Long): DataFrame = {
     require(width > 0, "histogram width must be positive")
-    rawDocs.select(col("docId"), col(field))
-      .join(matchingOrEmpty(query, filters, mustNot, numericRangeFilters, anyFilters,
-        rangeFilters, exists, missing), Seq("docId"))
+    matched(query, col(field))
       .groupBy((floor(col(field) / lit(width)) * lit(width)).cast("long").as("bucket"))
       .agg(count(lit(1)).as("n_docs"))
       .orderBy(col("bucket"))
@@ -2454,17 +2431,8 @@ class Searcher private[query] (
     * `interval` is a `date_trunc` unit — "day", "hour", "week",
     * "month", … Empty buckets omitted.
     */
-  def dateHistogram(query: String, field: String, interval: String,
-      filters: Seq[(String, String)] = Nil,
-      mustNot: Seq[(String, String)] = Nil,
-      numericRangeFilters: Seq[(String, Long, Long)] = Nil,
-      anyFilters: Seq[(String, Seq[String])] = Nil,
-      rangeFilters: Seq[(String, String, String)] = Nil,
-      exists: Seq[String] = Nil,
-      missing: Seq[String] = Nil): DataFrame =
-    rawDocs.select(col("docId"), col(field))
-      .join(matchingOrEmpty(query, filters, mustNot, numericRangeFilters, anyFilters,
-        rangeFilters, exists, missing), Seq("docId"))
+  def dateHistogram(query: BoolQuerySpec, field: String, interval: String): DataFrame =
+    matched(query, col(field))
       .groupBy(date_trunc(interval, col(field)).as("bucket"))
       .agg(count(lit(1)).as("n_docs"))
       .orderBy(col("bucket"))
@@ -2473,17 +2441,8 @@ class Searcher private[query] (
     * avg / sum of a numeric field among all docs matching ≥ 1 query
     * term. One distributed agg — no top-k, no driver materialization.
     */
-  def fieldStats(query: String, field: String,
-      filters: Seq[(String, String)] = Nil,
-      mustNot: Seq[(String, String)] = Nil,
-      numericRangeFilters: Seq[(String, Long, Long)] = Nil,
-      anyFilters: Seq[(String, Seq[String])] = Nil,
-      rangeFilters: Seq[(String, String, String)] = Nil,
-      exists: Seq[String] = Nil,
-      missing: Seq[String] = Nil): DataFrame =
-    rawDocs.select(col("docId"), col(field))
-      .join(matchingOrEmpty(query, filters, mustNot, numericRangeFilters, anyFilters,
-        rangeFilters, exists, missing), Seq("docId"))
+  def fieldStats(query: BoolQuerySpec, field: String): DataFrame =
+    matched(query, col(field))
       .agg(count(lit(1)).as("n_docs"), min(col(field)).as("min"),
         max(col(field)).as("max"), avg(col(field)).as("avg"),
         sum(col(field)).as("sum"))
@@ -2495,9 +2454,8 @@ class Searcher private[query] (
     * exactly one index, so the union IS the global match set and any
     * order-statistic over it is exact — no sketch-state merge needed.
     */
-  def matchedField(query: String, field: String): DataFrame =
-    rawDocs.select(col("docId"), col(field))
-      .join(matchingOrEmpty(query), Seq("docId"))
+  def matchedField(query: BoolQuerySpec, field: String): DataFrame =
+    matched(query, col(field))
 
   /** Match set sorted by a FIELD instead of by score (ES `sort`): docs
     * containing ≥1 query term, ordered by `field` (desc/asc) with docId
@@ -2506,15 +2464,8 @@ class Searcher private[query] (
     * TakeOrderedAndProject (per-partition heaps, driver merge of ≤k) —
     * never a global sort.
     */
-  def searchSortedBy(query: String, field: String, k: Int,
+  def searchSortedBy(query: BoolQuerySpec, field: String, k: Int,
       descending: Boolean = true,
-      filters: Seq[(String, String)] = Nil,
-      mustNot: Seq[(String, String)] = Nil,
-      numericRangeFilters: Seq[(String, Long, Long)] = Nil,
-      anyFilters: Seq[(String, Seq[String])] = Nil,
-      rangeFilters: Seq[(String, String, String)] = Nil,
-      exists: Seq[String] = Nil,
-      missing: Seq[String] = Nil,
       /** Pagination offset on the field ordering (ES sort + from);
         * plans as TakeOrderedAndProject with limit+offset — still
         * per-partition heaps, never a global sort.
@@ -2531,8 +2482,7 @@ class Searcher private[query] (
     val ord =
       if (descending) Seq(col(field).desc, col("docId").asc)
       else Seq(col(field).asc, col("docId").asc)
-    matchSet(query, filters, mustNot, numericRangeFilters, anyFilters, rangeFilters,
-      exists, missing) match {
+    matchSet(query) match {
       case None => rawDocs.select(col("docId"), col(field)).limit(0)
       case Some(matching) =>
         val base = rawDocs.select(col("docId"), col(field)).join(matching, Seq("docId"))
@@ -2553,17 +2503,8 @@ class Searcher private[query] (
     * the same match-set join as [[facetCounts]] (the match set never
     * touches the driver; both fields are column-pruned at the scan).
     */
-  def facetStats(query: String, bucketField: String, statField: String,
-      filters: Seq[(String, String)] = Nil,
-      mustNot: Seq[(String, String)] = Nil,
-      numericRangeFilters: Seq[(String, Long, Long)] = Nil,
-      anyFilters: Seq[(String, Seq[String])] = Nil,
-      rangeFilters: Seq[(String, String, String)] = Nil,
-      exists: Seq[String] = Nil,
-      missing: Seq[String] = Nil): DataFrame =
-    rawDocs.select(col("docId"), col(bucketField).as("value"), col(statField))
-      .join(matchingOrEmpty(query, filters, mustNot, numericRangeFilters, anyFilters,
-        rangeFilters, exists, missing), Seq("docId"))
+  def facetStats(query: BoolQuerySpec, bucketField: String, statField: String): DataFrame =
+    matched(query, col(bucketField).as("value"), col(statField))
       .groupBy(col("value"))
       .agg(count(lit(1)).as("n_docs"), min(col(statField)).as("min"),
         max(col(statField)).as("max"), avg(col(statField)).as("avg"),
@@ -2578,41 +2519,21 @@ class Searcher private[query] (
     * n_docs, optional min/max/avg/sum of `statField`) and the one-pass
     * scale argument.
     */
-  def nestedAgg(query: String, levels: Seq[BucketLevel],
-      statField: Option[String] = None,
-      filters: Seq[(String, String)] = Nil,
-      mustNot: Seq[(String, String)] = Nil,
-      numericRangeFilters: Seq[(String, Long, Long)] = Nil,
-      anyFilters: Seq[(String, Seq[String])] = Nil,
-      rangeFilters: Seq[(String, String, String)] = Nil,
-      exists: Seq[String] = Nil,
-      missing: Seq[String] = Nil): DataFrame = {
+  def nestedAgg(query: BoolQuerySpec, levels: Seq[BucketLevel],
+      statField: Option[String] = None): DataFrame = {
     val srcCols = (levels.map(_.field) ++ statField.toSeq).distinct
-    val joined = rawDocs.select(col("docId") +: srcCols.map(col): _*)
-      .join(matchingOrEmpty(query, filters, mustNot, numericRangeFilters, anyFilters,
-        rangeFilters, exists, missing), Seq("docId"))
-    Aggs.nestedAggOf(joined, levels, statField)
+    Aggs.nestedAggOf(matched(query, srcCols.map(col): _*), levels, statField)
   }
 
   /** ES `composite` aggregation with `after`-key paging over the match
     * set — see [[Aggs.compositeAggOf]] for the paging contract (flat
     * key tuples, keys-asc, exclusive cursor).
     */
-  def compositeAgg(query: String, levels: Seq[BucketLevel], size: Int,
+  def compositeAgg(query: BoolQuerySpec, levels: Seq[BucketLevel], size: Int,
       after: Option[Seq[Any]] = None,
-      statField: Option[String] = None,
-      filters: Seq[(String, String)] = Nil,
-      mustNot: Seq[(String, String)] = Nil,
-      numericRangeFilters: Seq[(String, Long, Long)] = Nil,
-      anyFilters: Seq[(String, Seq[String])] = Nil,
-      rangeFilters: Seq[(String, String, String)] = Nil,
-      exists: Seq[String] = Nil,
-      missing: Seq[String] = Nil): DataFrame = {
+      statField: Option[String] = None): DataFrame = {
     val srcCols = (levels.map(_.field) ++ statField.toSeq).distinct
-    val joined = rawDocs.select(col("docId") +: srcCols.map(col): _*)
-      .join(matchingOrEmpty(query, filters, mustNot, numericRangeFilters, anyFilters,
-        rangeFilters, exists, missing), Seq("docId"))
-    Aggs.compositeAggOf(joined, levels, statField, size, after)
+    Aggs.compositeAggOf(matched(query, srcCols.map(col): _*), levels, statField, size, after)
   }
 
   /** ES `cardinality` aggregation: number of DISTINCT values of `field`
@@ -2624,24 +2545,11 @@ class Searcher private[query] (
     * (`approx_count_distinct`), constant memory per partition at any
     * cardinality, mergeable without re-scanning.
     */
-  def cardinality(query: String, field: String,
-      filters: Seq[(String, String)] = Nil,
-      mustNot: Seq[(String, String)] = Nil,
-      numericRangeFilters: Seq[(String, Long, Long)] = Nil,
-      anyFilters: Seq[(String, Seq[String])] = Nil,
-      rangeFilters: Seq[(String, String, String)] = Nil,
-      exists: Seq[String] = Nil,
-      missing: Seq[String] = Nil,
-      approximate: Boolean = false): Long =
-    matchSet(query, filters, mustNot, numericRangeFilters, anyFilters, rangeFilters,
-      exists, missing) match {
+  def cardinality(query: BoolQuerySpec, field: String, approximate: Boolean = false): Long =
+    matchSet(query) match {
       case None => 0L
-      case Some(m) =>
-        val joined = rawDocs.select(col("docId"), col(field)).join(m, Seq("docId"))
-        val agg =
-          if (approximate) joined.agg(approx_count_distinct(col(field)).as("c"))
-          else joined.agg(countDistinct(col(field)).as("c"))
-        agg.head().getLong(0)
+      case Some(m) => Searcher.cardinalityOf(
+        rawDocs.select(col("docId"), col(field)).join(m, Seq("docId")), field, approximate)
     }
 
   /** ES `percentiles` aggregation over the match set: one row per
@@ -2654,32 +2562,9 @@ class Searcher private[query] (
     * sketch, constant memory at any cardinality (ES uses t-digest).
     * Docs missing the field are ignored (ES semantics).
     */
-  def percentiles(query: String, field: String, ps: Seq[Double],
-      filters: Seq[(String, String)] = Nil,
-      mustNot: Seq[(String, String)] = Nil,
-      numericRangeFilters: Seq[(String, Long, Long)] = Nil,
-      anyFilters: Seq[(String, Seq[String])] = Nil,
-      rangeFilters: Seq[(String, String, String)] = Nil,
-      exists: Seq[String] = Nil,
-      missing: Seq[String] = Nil,
-      approximate: Boolean = false): DataFrame = {
-    require(ps.nonEmpty && ps.forall(p => p >= 0.0 && p <= 1.0),
-      "percentiles must be in [0, 1]")
-    // Column API, not an expr() SQL string — field names with special
-    // characters must never reach a SQL parser (round-6 review)
-    val pLits = array(ps.map(lit): _*)
-    val aggExpr =
-      if (approximate) percentile_approx(col(field), pLits, lit(10000))
-      else percentile(col(field), pLits)
-    rawDocs.select(col("docId"), col(field))
-      .join(matchingOrEmpty(query, filters, mustNot, numericRangeFilters, anyFilters,
-        rangeFilters, exists, missing), Seq("docId"))
-      .agg(aggExpr.as("vals"))
-      .select(posexplode(col("vals")).as(Seq("pos", "value")))
-      .select(element_at(pLits, col("pos").cast("int") + 1).as("p"),
-        col("value").cast("double").as("value"))
-      .orderBy(col("p"))
-  }
+  def percentiles(query: BoolQuerySpec, field: String, ps: Seq[Double],
+      approximate: Boolean = false): DataFrame =
+    Searcher.percentilesOf(matched(query, col(field)), field, ps, approximate)
 
   /** ES `top_hits` sub-aggregation: per `bucketField` bucket, the top
     * `k` matching docs by `sortField` (docId tiebreak — deterministic).
@@ -2689,24 +2574,15 @@ class Searcher private[query] (
     * shape ES runs; verified in PLANS.md), so a hot bucket never sorts
     * more than k rows per upstream partition before the exchange.
     */
-  def facetTopHits(query: String, bucketField: String, sortField: String,
-      k: Int, descending: Boolean = true,
-      filters: Seq[(String, String)] = Nil,
-      mustNot: Seq[(String, String)] = Nil,
-      numericRangeFilters: Seq[(String, Long, Long)] = Nil,
-      anyFilters: Seq[(String, Seq[String])] = Nil,
-      rangeFilters: Seq[(String, String, String)] = Nil,
-      exists: Seq[String] = Nil,
-      missing: Seq[String] = Nil): DataFrame = {
+  def facetTopHits(query: BoolQuerySpec, bucketField: String, sortField: String,
+      k: Int, descending: Boolean = true): DataFrame = {
     require(k > 0, "top_hits size must be positive")
     val ord =
       if (descending) Seq(col(sortField).desc, col("docId").asc)
       else Seq(col(sortField).asc, col("docId").asc)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("value")).orderBy(ord: _*)
-    rawDocs.select(col("docId"), col(bucketField).as("value"), col(sortField))
-      .join(matchingOrEmpty(query, filters, mustNot, numericRangeFilters, anyFilters,
-        rangeFilters, exists, missing), Seq("docId"))
+    matched(query, col(bucketField).as("value"), col(sortField))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= lit(k))
       .select(col("value"), col("rank").cast("long").as("rank"),
@@ -2721,20 +2597,9 @@ class Searcher private[query] (
     * the match-set join, unpivoted via `stack` in request order —
     * bucket count never multiplies scans.
     */
-  def filtersAgg(query: String, buckets: Seq[(String, (String, String))],
-      filters: Seq[(String, String)] = Nil,
-      mustNot: Seq[(String, String)] = Nil,
-      numericRangeFilters: Seq[(String, Long, Long)] = Nil,
-      anyFilters: Seq[(String, Seq[String])] = Nil,
-      rangeFilters: Seq[(String, String, String)] = Nil,
-      exists: Seq[String] = Nil,
-      missing: Seq[String] = Nil): DataFrame = {
+  def filtersAgg(query: BoolQuerySpec, buckets: Seq[(String, (String, String))]): DataFrame = {
     require(buckets.nonEmpty, "filters aggregation needs >= 1 named bucket")
-    val cols = buckets.map(_._2._1).distinct
-    val joined = rawDocs.select(col("docId") +: cols.map(col): _*)
-      .join(matchingOrEmpty(query, filters, mustNot, numericRangeFilters, anyFilters,
-        rangeFilters, exists, missing), Seq("docId"))
-    Searcher.filtersAggOf(joined, buckets)
+    Searcher.filtersAggOf(matched(query, buckets.map(_._2._1).distinct.map(col): _*), buckets)
   }
 
   /** ES `significant_terms` aggregation: terms over-represented in the
@@ -2747,14 +2612,7 @@ class Searcher private[query] (
     * below `minDocCount` foreground docs are dropped (ES default
     * shape); top `k` by (score desc, term asc) — deterministic.
     */
-  def significantTerms(query: String, k: Int, minDocCount: Long = 3L,
-      filters: Seq[(String, String)] = Nil,
-      mustNot: Seq[(String, String)] = Nil,
-      numericRangeFilters: Seq[(String, Long, Long)] = Nil,
-      anyFilters: Seq[(String, Seq[String])] = Nil,
-      rangeFilters: Seq[(String, String, String)] = Nil,
-      exists: Seq[String] = Nil,
-      missing: Seq[String] = Nil,
+  def significantTerms(query: BoolQuerySpec, k: Int, minDocCount: Long = 3L,
       /** ES `sampler`-agg cap on the foreground pass (round-6 review
         * "What's wrong #4"): > 0 bounds the re-tokenized match set to
         * the `sampleSize` LOWEST docIds (deterministic — ES samples by
@@ -2766,8 +2624,7 @@ class Searcher private[query] (
       sampleSize: Int = 0): DataFrame = {
     val empty = Seq.empty[(String, Long, Long, Double)]
       .toDF("term", "fg_count", "bg_count", "score")
-    matchSet(query, filters, mustNot, numericRangeFilters, anyFilters, rangeFilters,
-      exists, missing) match {
+    matchSet(query) match {
       case None => empty
       case Some(m0) =>
         // TakeOrderedAndProject: per-partition heaps of ≤ sampleSize,

@@ -128,6 +128,19 @@ class EngineSpec extends SparkSpec {
     assert(searcher.levenshtein("", "abc") == 3 && searcher.levenshtein("abc", "abc") == 0)
   }
 
+  test("wildcard twins: the warm regex expansion ≡ the cold LIKE expansion") {
+    val warm = new Searcher(spark, indexDir, cfg.numShards).warm()
+    // `?` inside, `*?`, a leading `?`, no wildcard at all, and a `?` past
+    // the end of every term (no expansion on either path)
+    for (p <- Seq("zanzi?ar", "qua?a?", "zanz*?", "cinna*?", "?uasar", "zanzibar", "zanzibar?")) {
+      val cold = searcher.searchWildcard(p, 10).toSeq
+      assert(warm.searchWildcard(p, 10).toSeq == cold, s"pattern '$p'")
+      assert(cold.isEmpty == (p == "zanzibar?"), s"pattern '$p' expanded to ${cold.size} hits")
+    }
+    assert(searcher.searchWildcard("zanzibar", 10).toSeq == searcher.search("zanzibar", 10).toSeq)
+    assert(searcher.searchWildcard("zanzi?ar", 10).toSeq == searcher.search("zanzibar", 10).toSeq)
+  }
+
   test("regexp query: whole-term anchoring, BM25 OR over the expansion (round-7)") {
     // 'zanz.bar' matches exactly {zanzibar} → identical to a term query
     assert(searcher.searchRegexp("zanz.bar", 10).toSeq

@@ -7,7 +7,7 @@ import graft.analysis.Analyzer
 import graft.corpus.Transcripts
 import graft.index.{DocIds, FieldTerms, IndexBuilder, IndexConfig}
 import graft.model.Scored
-import graft.query.{Oracle, Searcher}
+import graft.query.{BoolQuerySpec, Oracle, Searcher}
 
 /** Round-4 query surface: should / minimum_should_match, tiered numeric
   * range filters, pagination (from + search_after), histogram/stats
@@ -244,23 +244,25 @@ class QuerySurfaceSpec extends SparkSpec {
     val wantFacet = filtered.groupBy(col("role").as("value"))
       .agg(count(lit(1)).as("n_docs")).orderBy(col("value"))
       .as[(String, Long)].collect().toSeq
-    val gotFacet = searcher.facetCounts("the", "role",
-      filters = Seq("role" -> "user"), numericRangeFilters = Seq(("dl", 30L, 80L)))
+    val gotFacet = searcher.facetCounts(BoolQuerySpec("the", filters = Seq("role" -> "user"),
+      numericRangeFilters = Seq(("dl", 30L, 80L))), "role")
       .as[(String, Long)].collect().toSeq
     assert(gotFacet == wantFacet && gotFacet.nonEmpty)
-    assert(searcher.matchCount("the",
-      filters = Seq("role" -> "user"), numericRangeFilters = Seq(("dl", 30L, 80L)))
+    assert(searcher.matchCount(BoolQuerySpec("the", filters = Seq("role" -> "user"),
+      numericRangeFilters = Seq(("dl", 30L, 80L))))
       == filtered.count())
     // must_not restricts the agg's population too
     val anti = base.filter(col("role") =!= lit("user"))
     val wantStats = anti.agg(count(lit(1)), min(col("dl")), max(col("dl"))).head()
-    val gotStats = searcher.fieldStats("the", "dl", mustNot = Seq("role" -> "user")).head()
+    val gotStats = searcher.fieldStats(BoolQuerySpec("the", mustNot = Seq("role" -> "user")),
+      "dl").head()
     assert(gotStats.getLong(0) == wantStats.getLong(0))
     assert(gotStats.getInt(1) == wantStats.getInt(1))
     assert(gotStats.getInt(2) == wantStats.getInt(2))
     // unknown filter value ⇒ empty aggs
-    assert(searcher.matchCount("the", filters = Seq("role" -> "no-such")) == 0L)
-    assert(searcher.facetCounts("the", "role", filters = Seq("role" -> "no-such")).count() == 0L)
+    assert(searcher.matchCount(BoolQuerySpec("the", filters = Seq("role" -> "no-such"))) == 0L)
+    assert(searcher.facetCounts(BoolQuerySpec("the", filters = Seq("role" -> "no-such")), "role")
+      .count() == 0L)
     base.unpersist(blocking = false)
   }
 
@@ -278,15 +280,17 @@ class QuerySurfaceSpec extends SparkSpec {
     val wantFacet = filtered.groupBy(col("role").as("value"))
       .agg(count(lit(1)).as("n_docs")).orderBy(col("value"))
       .as[(String, Long)].collect().toSeq
-    val gotFacet = searcher.facetCounts("the", "role", anyFilters = any, rangeFilters = rng)
+    val gotFacet = searcher.facetCounts(BoolQuerySpec("the", anyFilters = any,
+      rangeFilters = rng), "role")
       .as[(String, Long)].collect().toSeq
     assert(gotFacet == wantFacet && gotFacet.nonEmpty, s"facet: $gotFacet vs $wantFacet")
     // count
-    assert(searcher.matchCount("the", anyFilters = any, rangeFilters = rng)
+    assert(searcher.matchCount(BoolQuerySpec("the", anyFilters = any, rangeFilters = rng))
       == filtered.count())
     // stats
     val wantStats = filtered.agg(count(lit(1)), min(col("dl")), max(col("dl"))).head()
-    val gotStats = searcher.fieldStats("the", "dl", anyFilters = any, rangeFilters = rng).head()
+    val gotStats = searcher.fieldStats(BoolQuerySpec("the", anyFilters = any, rangeFilters = rng),
+      "dl").head()
     assert(gotStats.getLong(0) == wantStats.getLong(0))
     assert(gotStats.getInt(1) == wantStats.getInt(1))
     assert(gotStats.getInt(2) == wantStats.getInt(2))
@@ -295,30 +299,33 @@ class QuerySurfaceSpec extends SparkSpec {
       .groupBy((floor(col("dl") / lit(20)) * lit(20)).cast("long").as("bucket"))
       .agg(count(lit(1)).as("n_docs")).orderBy(col("bucket"))
       .as[(Long, Long)].collect().toSeq
-    assert(searcher.numericHistogram("the", "dl", 20L, anyFilters = any, rangeFilters = rng)
+    assert(searcher.numericHistogram(BoolQuerySpec("the", anyFilters = any, rangeFilters = rng),
+      "dl", 20L)
       .as[(Long, Long)].collect().toSeq == wantHist)
     // field sort
     val wantSort = filtered.select(col("docId"), col("dl"))
       .orderBy(col("dl").desc, col("docId").asc).limit(5)
       .as[(Long, Int)].collect().toSeq
-    assert(searcher.searchSortedBy("the", "dl", 5, anyFilters = any, rangeFilters = rng)
+    assert(searcher.searchSortedBy(BoolQuerySpec("the", anyFilters = any, rangeFilters = rng),
+      "dl", 5)
       .as[(Long, Int)].collect().toSeq == wantSort)
     // sub-aggregation
     val wantFS = filtered.groupBy(col("role").as("value"))
       .agg(count(lit(1)).as("n_docs"), min(col("dl")).as("min"), max(col("dl")).as("max"),
         avg(col("dl")).as("avg"), sum(col("dl")).as("sum"))
       .orderBy(col("value")).collect().toSeq
-    assert(searcher.facetStats("the", "role", "dl", anyFilters = any, rangeFilters = rng)
+    assert(searcher.facetStats(BoolQuerySpec("the", anyFilters = any, rangeFilters = rng),
+      "role", "dl")
       .collect().toSeq == wantFS)
     // an unsatisfiable range clause empties every op
-    assert(searcher.matchCount("the", rangeFilters = Seq(("role", "zz", "zzz"))) == 0L)
-    assert(searcher.facetCounts("the", "role",
-      rangeFilters = Seq(("role", "zz", "zzz"))).count() == 0L)
+    assert(searcher.matchCount(BoolQuerySpec("the",
+      rangeFilters = Seq(("role", "zz", "zzz")))) == 0L)
+    assert(searcher.facetCounts(BoolQuerySpec("the", rangeFilters = Seq(("role", "zz", "zzz"))),
+      "role").count() == 0L)
     base.unpersist(blocking = false)
   }
 
   test("searchManyBool: heterogeneous batch in one job ≡ standalone calls (warm + distributed)") {
-    import graft.query.BoolQuerySpec
     val specs = Seq(
       BoolQuerySpec("the zanzibar"),
       BoolQuerySpec("the a", conjunctive = true),
@@ -380,8 +387,8 @@ class QuerySurfaceSpec extends SparkSpec {
       .as[(String, Long, Int, Int, Double, Long)].collect().toSeq
     assert(got == want && got.size == 3)
     // filtered sub-aggregation runs over the FILTERED match set
-    val gotF = searcher.facetStats("the", "role", "dl",
-      numericRangeFilters = Seq(("dl", 30L, 80L)))
+    val gotF = searcher.facetStats(BoolQuerySpec("the",
+      numericRangeFilters = Seq(("dl", 30L, 80L))), "role", "dl")
       .as[(String, Long, Int, Int, Double, Long)].collect().toSeq
     val wantF = matching.filter(col("dl") >= lit(30) && col("dl") <= lit(80))
       .groupBy(col("role").as("value"))
@@ -391,7 +398,6 @@ class QuerySurfaceSpec extends SparkSpec {
       .as[(String, Long, Int, Int, Double, Long)].collect().toSeq
     assert(gotF == wantF && gotF.nonEmpty)
     // batched lexicographic rangeFilters ≡ standalone (one expansion job)
-    import graft.query.BoolQuerySpec
     val specs = Seq(
       BoolQuerySpec("the", rangeFilters = Seq(("role", "a", "u"))),
       BoolQuerySpec("the zanzibar"),
@@ -426,7 +432,6 @@ class QuerySurfaceSpec extends SparkSpec {
     assert(warmed.searchBool("the", 10, exists = Seq("tool")).toSeq == wantExists)
     assert(warmed.searchBool("the", 10, missing = Seq("tool")).toSeq == wantMissing)
     // batch spec carries the clauses too
-    import graft.query.BoolQuerySpec
     assert(searcher.searchManyBool(Seq(BoolQuerySpec("the", exists = Seq("tool")),
         BoolQuerySpec("the", missing = Seq("tool"))), 10).map(_.toSeq)
       == Seq(wantExists, wantMissing))
@@ -442,10 +447,10 @@ class QuerySurfaceSpec extends SparkSpec {
       .join(tok.filter(col("term").isin(terms: _*)).select("docId").distinct(), Seq("docId"))
       .cache()
     val withTool = matching.filter(col("tool").isNotNull)
-    assert(searcher.matchCount("the", exists = Seq("tool")) == withTool.count())
-    assert(searcher.matchCount("the", missing = Seq("tool"))
+    assert(searcher.matchCount(BoolQuerySpec("the", exists = Seq("tool"))) == withTool.count())
+    assert(searcher.matchCount(BoolQuerySpec("the", missing = Seq("tool")))
       == matching.filter(col("tool").isNull).count())
-    assert(searcher.facetCounts("the", "role", exists = Seq("tool"))
+    assert(searcher.facetCounts(BoolQuerySpec("the", exists = Seq("tool")), "role")
         .as[(String, Long)].collect().toSeq
       == withTool.groupBy(col("role").as("value")).agg(count(lit(1)).as("n_docs"))
         .orderBy(col("value")).as[(String, Long)].collect().toSeq)
@@ -593,9 +598,11 @@ class QuerySurfaceSpec extends SparkSpec {
     val legacy = new Searcher(spark, dir, cfg.numShards)
     intercept[IllegalStateException] { legacy.searchBool("the", 5, exists = Seq("tool")) }
     intercept[IllegalStateException] { legacy.searchBool("the", 5, missing = Seq("tool")) }
-    intercept[IllegalStateException] { legacy.matchCount("the", exists = Seq("tool")) }
     intercept[IllegalStateException] {
-      legacy.searchManyBool(Seq(graft.query.BoolQuerySpec("the", missing = Seq("tool"))), 5)
+      legacy.matchCount(BoolQuerySpec("the", exists = Seq("tool")))
+    }
+    intercept[IllegalStateException] {
+      legacy.searchManyBool(Seq(BoolQuerySpec("the", missing = Seq("tool"))), 5)
     }
     // everything WITHOUT exists/missing still serves on the legacy index
     assert(legacy.searchBool("the", 5, filters = Seq("role" -> "user")).nonEmpty)
@@ -745,15 +752,15 @@ class QuerySurfaceSpec extends SparkSpec {
 
   test("constant_score, rescore window, fuzzy prefix_length (round-7)") {
     // constant_score: filter-context membership, score = boost, docId asc
-    val cs = searcher.searchConstantScore("zanzibar the", 10, boost = 2.5,
-      filters = Seq("role" -> "user")).as[(Long, Double)].collect().toSeq
+    val cs = searcher.searchConstantScore(BoolQuerySpec("zanzibar the",
+      filters = Seq("role" -> "user")), 10, boost = 2.5).as[(Long, Double)].collect().toSeq
     val memberWant = tok.filter(col("term").isin("zanzibar", "the"))
       .select("docId").distinct()
       .join(docsDF.filter(col("role") === lit("user")).select("docId"), Seq("docId"), "left_semi")
       .orderBy(col("docId")).limit(10).as[Long].collect().toSeq
     assert(cs == memberWant.map(id => (id, 2.5)) && cs.nonEmpty)
-    assert(warmed.searchConstantScore("zanzibar the", 10, boost = 2.5,
-      filters = Seq("role" -> "user")).as[(Long, Double)].collect().toSeq == cs)
+    assert(warmed.searchConstantScore(BoolQuerySpec("zanzibar the",
+      filters = Seq("role" -> "user")), 10, boost = 2.5).as[(Long, Double)].collect().toSeq == cs)
 
     // rescore: the top-`window` BM25 hits (exact oracle) re-rank by
     // bm25 · (factor · field); docs OUTSIDE the window cannot enter
@@ -908,25 +915,27 @@ class QuerySurfaceSpec extends SparkSpec {
     assert(multi.dateHistogram("the", "ts", "hour").as[(java.sql.Timestamp, Long)].collect().toSeq
       == single.dateHistogram("the", "ts", "hour").as[(java.sql.Timestamp, Long)].collect().toSeq)
     // bool-filtered aggs agree across segments too
-    assert(multi.facetCounts("the", "role", filters = Seq("role" -> "user"),
-        numericRangeFilters = Seq(("dl", 30L, 80L))).as[(String, Long)].collect().toSeq
-      == single.facetCounts("the", "role", filters = Seq("role" -> "user"),
-        numericRangeFilters = Seq(("dl", 30L, 80L))).as[(String, Long)].collect().toSeq)
-    assert(multi.matchCount("the", mustNot = Seq("role" -> "user"))
-      == single.matchCount("the", mustNot = Seq("role" -> "user")))
+    assert(multi.facetCounts(BoolQuerySpec("the", filters = Seq("role" -> "user"),
+      numericRangeFilters = Seq(("dl", 30L, 80L))), "role").as[(String, Long)].collect().toSeq
+      == single.facetCounts(BoolQuerySpec("the", filters = Seq("role" -> "user"),
+        numericRangeFilters = Seq(("dl", 30L, 80L))), "role").as[(String, Long)].collect().toSeq)
+    assert(multi.matchCount(BoolQuerySpec("the", mustNot = Seq("role" -> "user")))
+      == single.matchCount(BoolQuerySpec("the", mustNot = Seq("role" -> "user"))))
     // round-6: terms + lexicographic range clauses agree across segments
     val any6 = Seq("role" -> Seq("user", "assistant"))
     val rng6 = Seq(("role", "a", "b"))
-    assert(multi.facetCounts("the", "role", anyFilters = any6, rangeFilters = rng6)
+    assert(multi.facetCounts(BoolQuerySpec("the", anyFilters = any6, rangeFilters = rng6), "role")
         .as[(String, Long)].collect().toSeq
-      == single.facetCounts("the", "role", anyFilters = any6, rangeFilters = rng6)
+      == single.facetCounts(BoolQuerySpec("the", anyFilters = any6, rangeFilters = rng6), "role")
         .as[(String, Long)].collect().toSeq)
-    assert(multi.matchCount("the", anyFilters = any6, rangeFilters = rng6)
-      == single.matchCount("the", anyFilters = any6, rangeFilters = rng6))
-    assert(multi.matchCount("the", anyFilters = any6, rangeFilters = rng6) > 0)
-    assert(multi.searchSortedBy("the", "dl", 5, anyFilters = any6, rangeFilters = rng6)
+    assert(multi.matchCount(BoolQuerySpec("the", anyFilters = any6, rangeFilters = rng6))
+      == single.matchCount(BoolQuerySpec("the", anyFilters = any6, rangeFilters = rng6)))
+    assert(multi.matchCount(BoolQuerySpec("the", anyFilters = any6, rangeFilters = rng6)) > 0)
+    assert(multi.searchSortedBy(BoolQuerySpec("the", anyFilters = any6, rangeFilters = rng6),
+      "dl", 5)
         .as[(Long, Int)].collect().toSeq
-      == single.searchSortedBy("the", "dl", 5, anyFilters = any6, rangeFilters = rng6)
+      == single.searchSortedBy(BoolQuerySpec("the", anyFilters = any6, rangeFilters = rng6),
+        "dl", 5)
         .as[(Long, Int)].collect().toSeq)
 
     // bool surface incl. numeric trie range + should, and pagination
@@ -948,13 +957,13 @@ class QuerySurfaceSpec extends SparkSpec {
     // cross-segment batched _msearch ≡ standalone multi calls ≡ the
     // compacted index's batch (one job for the whole heterogeneous set)
     val batch = Seq(
-      graft.query.BoolQuerySpec("the zanzibar"),
-      graft.query.BoolQuerySpec("the a", conjunctive = true),
-      graft.query.BoolQuerySpec("the a", phrase = true, phraseSlop = 2),
-      graft.query.BoolQuerySpec("the", filters = Seq("role" -> "user"),
+      BoolQuerySpec("the zanzibar"),
+      BoolQuerySpec("the a", conjunctive = true),
+      BoolQuerySpec("the a", phrase = true, phraseSlop = 2),
+      BoolQuerySpec("the", filters = Seq("role" -> "user"),
         numericRangeFilters = Seq(("dl", 40L, 90L))),
-      graft.query.BoolQuerySpec("zanzibar", should = "the quasar", minShouldMatch = 1),
-      graft.query.BoolQuerySpec("definitely-notavocab-word"))
+      BoolQuerySpec("zanzibar", should = "the quasar", minShouldMatch = 1),
+      BoolQuerySpec("definitely-notavocab-word"))
     val mBatch = multi.searchManyBool(batch, 10).map(_.toSeq)
     assert(mBatch == Seq(
       multi.search("the zanzibar", 10).toSeq,
@@ -978,7 +987,7 @@ class QuerySurfaceSpec extends SparkSpec {
         .as[(Long, Int)].collect().toSeq)
     assert(multi.facetStats("the", "role", "dl").collect().toSeq
       == single.facetStats("the", "role", "dl").collect().toSeq)
-    val rfSpecs = Seq(graft.query.BoolQuerySpec("the", rangeFilters = Seq(("role", "a", "u"))))
+    val rfSpecs = Seq(BoolQuerySpec("the", rangeFilters = Seq(("role", "a", "u"))))
     assert(multi.searchManyBool(rfSpecs, 10).head.toSeq
       == multi.searchBool("the", 10, rangeFilters = Seq(("role", "a", "u"))).toSeq)
     assert(multi.searchManyBool(rfSpecs, 10).head.toSeq
@@ -1019,9 +1028,11 @@ class QuerySurfaceSpec extends SparkSpec {
     }
 
     // round-7 parity: constant_score / rescore / fuzzy prefix_length
-    assert(multi.searchConstantScore("the", 10, boost = 3.0, filters = Seq("role" -> "user"))
+    assert(multi.searchConstantScore(BoolQuerySpec("the", filters = Seq("role" -> "user")), 10,
+      boost = 3.0)
         .as[(Long, Double)].collect().toSeq
-      == single.searchConstantScore("the", 10, boost = 3.0, filters = Seq("role" -> "user"))
+      == single.searchConstantScore(BoolQuerySpec("the", filters = Seq("role" -> "user")), 10,
+        boost = 3.0)
         .as[(Long, Double)].collect().toSeq)
     assert(multi.searchConstantScore("the", 10).count() > 0)
     assert(multi.rescoreByFieldFactor("the", 10, 30, "dl", 0.01)
@@ -1067,8 +1078,8 @@ class QuerySurfaceSpec extends SparkSpec {
     assert(multi.searchBool("the", 10, exists = Seq("tool")).nonEmpty)
     assert(multi.searchBool("the", 10, missing = Seq("tool")).toSeq
       == single.searchBool("the", 10, missing = Seq("tool")).toSeq)
-    assert(multi.matchCount("the", exists = Seq("tool"))
-      == single.matchCount("the", exists = Seq("tool")))
+    assert(multi.matchCount(BoolQuerySpec("the", exists = Seq("tool")))
+      == single.matchCount(BoolQuerySpec("the", exists = Seq("tool"))))
     assert(multi.cardinality("the", "tool") == single.cardinality("the", "tool"))
     assert(multi.cardinality("the", "tool") > 0)
     assert(multi.percentiles("the", "dl", Seq(0.25, 0.5, 0.9))
@@ -1171,7 +1182,7 @@ class QuerySurfaceSpec extends SparkSpec {
     // warm dictionary path resolves terms identically
     assert(hits(warmed.collapse(q, "dl", 10)) == got)
     // filter context restricts membership, scores stay full-corpus
-    val gotF = hits(searcher.collapse(q, "dl", 10, filters = Seq("role" -> "user")))
+    val gotF = hits(searcher.collapse(BoolQuerySpec(q, filters = Seq("role" -> "user")), "dl", 10))
     assert(gotF == want(filtered = true, 10) && gotF.nonEmpty)
     // inner_hits: each kept group returns its ≤ M best hits in rank
     // order; group selection and ordering stay EXACTLY the best-hit
@@ -1413,7 +1424,8 @@ class QuerySurfaceSpec extends SparkSpec {
     }) ()
     assert(paged.toSeq == allBuckets)
     // composite respects the bool filter context like every agg
-    val fAll = searcher.compositeAgg("the", lv, 100000, filters = Seq("role" -> "user"))
+    val fAll = searcher.compositeAgg(BoolQuerySpec("the", filters = Seq("role" -> "user")), lv,
+      100000)
       .as[(String, Int, Long)].collect().toSeq
     assert(fAll.nonEmpty && fAll.forall(_._1 == "user"))
     // a stat field adds the metric columns per bucket
@@ -1528,7 +1540,6 @@ class QuerySurfaceSpec extends SparkSpec {
   }
 
   test("early-empty rules: each gives empty through searchBool, searchManyBool alone and batched") {
-    import graft.query.BoolQuerySpec
     val absent = "zzqxabsent"
     // one row per rule: without its rule, each row returns hits or runs a
     // top-k job (runGroup re-checks some rules per group)
@@ -1575,7 +1586,6 @@ class QuerySurfaceSpec extends SparkSpec {
   }
 
   test("invalid paging input fails loudly: negative k or from (warm, distributed, batched)") {
-    import graft.query.BoolQuerySpec
     for (s <- Seq(searcher, warmed)) {
       intercept[IllegalArgumentException](s.search("the", 10, from = -5))
       intercept[IllegalArgumentException](s.search("the", -1))
@@ -1590,5 +1600,54 @@ class QuerySurfaceSpec extends SparkSpec {
       assert(s.search("the", 0).isEmpty)
       assert(s.searchManyBool(Seq(BoolQuerySpec("the"), BoolQuerySpec("a")), 0).forall(_.isEmpty))
     }
+  }
+
+  test("every match-set operator honors its BoolQuerySpec; scoring-only options fail loudly") {
+    import graft.query.TermsLevel
+    // every doc has exactly one of the three roles, so these two specs
+    // select the same docs through different clause kinds
+    assert(docsDF.filter(!col("role").isin("user", "assistant", "tool")).isEmpty)
+    val user = BoolQuerySpec("the", filters = Seq("role" -> "user"))
+    val notOthers = BoolQuerySpec("the", mustNot = Seq("role" -> "assistant", "role" -> "tool"))
+    def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
+    val ops: Seq[(String, BoolQuerySpec => Seq[String])] = Seq(
+      "searchConstantScore" -> (q => rows(searcher.searchConstantScore(q, 10))),
+      "collapse" -> (q => rows(searcher.collapse(q, "dl", 10))),
+      "facetCounts" -> (q => rows(searcher.facetCounts(q, "role"))),
+      "rangesAgg" -> (q => rows(searcher.rangesAgg(q, "dl",
+        Seq((None, Some(40L)), (Some(40L), None))))),
+      "matchCount" -> (q => Seq(searcher.matchCount(q).toString)),
+      "numericHistogram" -> (q => rows(searcher.numericHistogram(q, "dl", 20L))),
+      "dateHistogram" -> (q => rows(searcher.dateHistogram(q, "ts", "month"))),
+      "fieldStats" -> (q => rows(searcher.fieldStats(q, "dl"))),
+      "searchSortedBy" -> (q => rows(searcher.searchSortedBy(q, "dl", 10))),
+      "facetStats" -> (q => rows(searcher.facetStats(q, "role", "dl"))),
+      "nestedAgg" -> (q => rows(searcher.nestedAgg(q, Seq(TermsLevel("role", "r")), Some("dl")))),
+      "compositeAgg" -> (q => rows(searcher.compositeAgg(q, Seq(TermsLevel("role", "r")), 10))),
+      "cardinality" -> (q => Seq(searcher.cardinality(q, "role").toString)),
+      "percentiles" -> (q => rows(searcher.percentiles(q, "dl", Seq(0.1, 0.5, 0.9)))),
+      "facetTopHits" -> (q => rows(searcher.facetTopHits(q, "role", "dl", 3))),
+      "filtersAgg" -> (q => rows(searcher.filtersAgg(q,
+        Seq("u" -> ("role" -> "user"), "a" -> ("role" -> "assistant"))))),
+      "significantTerms" -> (q => rows(searcher.significantTerms(q, 10, minDocCount = 1L))))
+    for ((op, run) <- ops) {
+      val got = run(user)
+      assert(run(notOthers) == got, s"$op: two specs of one membership differ")
+      assert(got != run(BoolQuerySpec("the")), s"$op: the spec's clauses changed nothing")
+    }
+    val rejected = Seq(
+      BoolQuerySpec("the", conjunctive = true), BoolQuerySpec("the", phrase = true),
+      BoolQuerySpec("the", should = "zanzibar"), BoolQuerySpec("the", minShouldMatch = 1),
+      BoolQuerySpec("the", field = "tool"),
+      BoolQuerySpec("the", multiMatchFields = Seq("text" -> 1.0)))
+    for (sp <- rejected; (op, run) <- ops)
+      withClue(s"$op($sp): ")(intercept[IllegalArgumentException](run(sp)))
+    // must_not over analyzed text: the count drops by exactly the docs
+    // that hold the token
+    val holding = tok.filter(col("term") === "the").select("docId")
+      .join(tok.filter(col("term") === "zanzibar").select("docId"), Seq("docId")).count()
+    assert(holding > 0)
+    assert(searcher.matchCount("the") - holding ==
+      searcher.matchCount(BoolQuerySpec("the", mustNotText = Seq("text" -> "zanzibar"))))
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.streaming.Trigger
 
 import graft.corpus.Transcripts
 import graft.index.IndexConfig
-import graft.query.Searcher
+import graft.query.{BoolQuerySpec, Searcher}
 import graft.streaming.StreamingIngest
 
 class StreamingSpec extends SparkSpec {
@@ -332,9 +332,9 @@ class StreamingSpec extends SparkSpec {
     val wantM = want($"tool".isNull)
     assert(multi.searchBool("the", 10, exists = Seq("tool")).toSeq == wantE && wantE.nonEmpty)
     assert(multi.searchBool("the", 10, missing = Seq("tool")).toSeq == wantM && wantM.nonEmpty)
-    assert(multi.matchCount("the", exists = Seq("tool"))
+    assert(multi.matchCount(BoolQuerySpec("the", exists = Seq("tool")))
       == theDocs.filter($"tool".isNotNull).count())
-    assert(multi.matchCount("the", missing = Seq("tool"))
+    assert(multi.matchCount(BoolQuerySpec("the", missing = Seq("tool")))
       == theDocs.filter($"tool".isNull).count())
     // warm in-process path sees the same tombstone snapshot
     val warm = new graft.query.MultiSearcher(spark, idx).warm()
@@ -345,7 +345,7 @@ class StreamingSpec extends SparkSpec {
     graft.index.Compaction.compact(spark, idx, compacted)
     val single = new Searcher(spark, compacted, 8)
     assert(single.searchBool("the", 10, exists = Seq("tool")).toSeq == wantE)
-    assert(single.matchCount("the", exists = Seq("tool"))
+    assert(single.matchCount(BoolQuerySpec("the", exists = Seq("tool")))
       == theDocs.filter($"tool".isNotNull).count())
     visible.unpersist(blocking = false)
     all.unpersist(blocking = false)

@@ -42,14 +42,14 @@ class WarmPathSpec extends SparkSpec {
     idx
   }
 
-  /** OR / AND / phrase: warm ≡ distributed ≡ Oracle over the live docs;
-    * bool queries: warm ≡ distributed. Returns the warm searcher.
+  /** OR / AND / phrase: warm (lists rescored under the merged stats) ≡
+    * distributed ≡ Oracle over the live docs; bool queries: warm ≡
+    * distributed. Returns the warm searcher.
     */
-  private def assertParity(idx: String, queries: Seq[String], phrases: Seq[String],
-      bounds: Searcher.Bounds): Searcher = {
+  private def assertParity(idx: String, queries: Seq[String], phrases: Seq[String]): Searcher = {
     val warm = new MultiSearcher(spark, idx).warm()
     val dist = new MultiSearcher(spark, idx).warm(maxLocalBlockBytes = 0)
-    assert(warm.localBounds == bounds)
+    assert(warm.servesLocally && !warm.storedBounds)
     val live = dist.docs.cache()
     def same(what: String, w: Array[Scored], d: Array[Scored], oracle: DataFrame): Unit = {
       val want = hits(oracle)
@@ -95,8 +95,7 @@ class WarmPathSpec extends SparkSpec {
     assert(StreamingIngest.deleteConvs(spark, idx, Seq("conv-00000017", "conv-00000020")) > 0)
     val s = assertParity(idx,
       Seq("omnipresent", "the omnipresent", "omnipresent zanzibar quasar", "updated one have"),
-      Seq("omnipresent updated", "zanzibar quasar", "updated zanzibar quasar"),
-      Searcher.RescoredBounds)
+      Seq("omnipresent updated", "zanzibar quasar", "updated zanzibar quasar"))
     assert(s.segments.size == 3)
     // every live doc, in every bucket of every segment, holds the hot term
     assert(s.search("omnipresent", Int.MaxValue).length == s.docs.count())
@@ -112,7 +111,7 @@ class WarmPathSpec extends SparkSpec {
         .otherwise($"text")).as[Turn].cache()
     val idx = ingest("long", Seq(convRange(all, 0, 12), convRange(all, 12, 24)))
     val s = assertParity(idx, Seq("zanzibar quasar", "t10 t11 t12", "quasar", "the t399"),
-      Seq("t10 t11", "t398 t399 t0", "zanzibar quasar lattice"), Searcher.RescoredBounds)
+      Seq("t10 t11", "t398 t399 t0", "zanzibar quasar lattice"))
     assert(s.searchPhrase("t398 t399 t0", k).map(_.docId).toSeq ==
       s.docs.filter($"text" === long).select("docId").as[Long].collect().toSeq)
     all.unpersist()
@@ -137,8 +136,7 @@ class WarmPathSpec extends SparkSpec {
     assertParity(idx,
       Seq("münchen café", "привет hello", "東京", "ελληνικά zanzibar", "straße über", "naïve",
         "مرحبا", "٣٤٥ ①②③"),
-      Seq("grüße aus münchen", "привет мир", "ελληνικά κείμενο", "café cafe"),
-      Searcher.RescoredBounds)
+      Seq("grüße aus münchen", "привет мир", "ελληνικά κείμενο", "café cafe"))
     all.unpersist()
   }
 
@@ -149,7 +147,7 @@ class WarmPathSpec extends SparkSpec {
     val doomed = convRange(all, 12, 24).select("conv_id").distinct().as[String].collect().toSeq
     assert(StreamingIngest.deleteConvs(spark, idx, doomed) > 0)
     val s = assertParity(idx, Seq("the", "zanzibar quasar lattice", "one have t999", "the a"),
-      Seq("zanzibar quasar", "cinnabar monolith"), Searcher.RescoredBounds)
+      Seq("zanzibar quasar", "cinnabar monolith"))
     assert(s.segments.size == 3)
     assert(s.docs.filter($"conv_id".isin(doomed: _*)).isEmpty)
     all.unpersist()
@@ -174,7 +172,7 @@ class WarmPathSpec extends SparkSpec {
       convRange(all, 20, 30).unionByName(convRange(all, 0, 5).filter($"turn_idx" === 1))))
     assert(StreamingIngest.deleteConvs(spark, idx, Seq("conv-00000012")) > 0)
     val s = new MultiSearcher(spark, idx).warm()
-    assert(s.segments.size == 3 && s.localBounds == Searcher.RescoredBounds)
+    assert(s.segments.size == 3 && s.servesLocally && !s.storedBounds)
     def queries(): Seq[Array[Scored]] = Seq(
       s.search("the zanzibar", k),
       s.searchConjunctive("the one", k),
@@ -234,7 +232,7 @@ class WarmPathSpec extends SparkSpec {
     assert(queries(tight) == want)
     assert(jobsOf("warm-path-budget-tight")(assert(queries(tight) == want)) > 0)
     val fits = new MultiSearcher(spark, idx).warm(maxLocalBlockBytes = decoded)
-    assert(fits.servesLocally && fits.localBounds == Searcher.StoredBounds)
+    assert(fits.servesLocally && fits.storedBounds)
     assert(queries(fits) == want)
     val jobs = jobsOf("warm-path-budget-fits")(assert(queries(fits) == want))
     assert(jobs == 0, s"$jobs Spark job(s) ran for warm queries")
@@ -249,7 +247,7 @@ class WarmPathSpec extends SparkSpec {
     val s = new MultiSearcher(spark, idx)
     s.maxDriverRemovedTerms = 0
     s.warm()
-    assert(!s.servesLocally && s.localBytes == 0L && s.localBounds == Searcher.LooseBounds)
+    assert(!s.servesLocally && s.localBytes == 0L && !s.storedBounds)
     val live = s.docs.cache()
     for (q <- Seq("the zanzibar", "one have", "quasar")) {
       assert(s.search(q, k).toSeq == hits(Oracle.topK(live, q, k)), s"OR '$q'")

@@ -10,16 +10,22 @@
 # index_bytes_per_turn, failed for both sides), then the number of pairs
 # where the change's cpu_us_per_unit is lower, each side's median and
 # quartiles (inclusive method), the parent's interquartile range, the
-# claim verdict and the total `failed`. The verdict is the paired rule for
-# a gain on cpu_us_per_unit (lower is better): the change is lower in at
-# least 9/10 of all pairs run (ties and pairs missing a result count as
-# losses) and its median is below the parent's by more than the parent's IQR.
+# claim verdict, one no-regression line per end-to-end metric and the total
+# `failed`. The verdict is the paired rule for a gain on cpu_us_per_unit
+# (lower is better): the change is lower in at least 9/10 of all pairs run
+# (ties and pairs missing a result count as losses) and its median is below
+# the parent's by more than the parent's IQR. Each no-regression line takes
+# the metric's direction and bound (a fraction of the parent's median) from
+# the change's BENCHMARK.json: WORSE when the change's median is worse than
+# the parent's by more than the bound; else unresolved when the parent's
+# IQR / median exceeds the bound and not every change run is better than
+# every parent run; else ok.
 # The raw result lines go to pairs-<workload>-<first>-<last>.jsonl in the
 # current directory. Run nothing else on the host meanwhile.
 set -euo pipefail
 
 if [ $# -lt 5 ]; then
-  sed -n '2,19p' "$0" >&2
+  sed -n '2,24p' "$0" >&2
   exit 2
 fi
 P=$(cd "$1" && pwd)
@@ -41,7 +47,7 @@ for s in $(seq "$FIRST" "$LAST"); do
   done
 done
 
-python3 - "$RAW" <<'PY'
+python3 - "$RAW" "$C/BENCHMARK.json" <<'PY'
 import json, statistics, sys
 
 runs = {}
@@ -78,10 +84,20 @@ if cpu_p:
     print(f"claim verdict (cpu_us_per_unit lower): {'GAIN' if gain else 'NO GAIN'}: "
           f"change lower in {wins}/{len(runs)} pairs (needs >= 9/10), "
           f"median drop {mp - mc:.1f} vs parent IQR {p3 - p1:.1f} (needs drop > IQR)")
-for n in names[1:]:
+for m in json.load(open(sys.argv[2]))["end_to_end"]:
+    n, bound, sign = m["name"], m["bound"], 1 if m["better"] == "lower" else -1
     vp = [metric(runs[s].get("parent"), n) for s in sorted(runs) if runs[s].get("parent")]
     vc = [metric(runs[s].get("change"), n) for s in sorted(runs) if runs[s].get("change")]
-    if vp and vc:
-        print(f"{n}: median {statistics.median(vp):.4f} -> {statistics.median(vc):.4f}")
+    if not (vp and vc):
+        continue
+    (p1, mp, p3), mc = quartiles(vp), statistics.median(vc)
+    worse = sign * (mc - mp) / mp
+    spread = (p3 - p1) / mp
+    all_better = all(sign * (c - p) < 0 for c in vc for p in vp)
+    verdict = ("WORSE" if worse > bound else
+               "unresolved" if spread > bound and not all_better else "ok")
+    print(f"no regression {n}: {verdict}: median {mp:.4f} -> {mc:.4f} "
+          f"({100 * worse:+.1f}% worse, bound {100 * bound:.0f}%), "
+          f"parent IQR/median {100 * spread:.1f}%")
 print(f"failed (both sides, all runs; a run without a result counts 1): {failed}")
 PY
