@@ -218,12 +218,10 @@ object Codec {
 
   final case class DecodedBlock(docIds: Array[Long], tfs: Array[Int], dls: Array[Int])
 
-  /** A block decoded into fresh arrays — for one-shot callers. A hot
-    * cursor decodes into its own reused buffers instead
-    * ([[deltaDecodeInto]], [[decodeVarIntsInto]] via
-    * `Wand.PostingList.decodeInto`): each decode overwrites the previous
-    * block's values, so what a cursor exposes is valid only until it
-    * moves to another block (`Wand.TermIterator`).
+  /** A block decoded into fresh arrays — for one-shot callers. A query's
+    * posting list decodes every block of a term into one set of flat
+    * arrays instead ([[deltaDecodeInto]], [[decodeVarIntsInto]] via
+    * `Wand.PostingList.decoded`).
     */
   def decodeBlock(b: PostingBlock): DecodedBlock =
     DecodedBlock(

@@ -53,8 +53,10 @@ final case class Posting(term: String, docId: Long, tf: Int, dl: Int, pos: Array
   * `poss` is the concatenated per-posting position stream (posting i has
   * tfs[i] positions, delta+varint — Lucene-style positional postings for
   * phrase queries; empty when the index is built with
-  * storePositions = false). `maxScore` is the exact BM25 block-max used
-  * by WAND pruning.
+  * storePositions = false). `maxTf` / `maxScore` are the block's largest
+  * tf and exact BM25 block-max under the segment's build-time stats;
+  * they stay in the format, but query pruning re-derives each block's
+  * bound from its decoded scores (`Wand.PostingList.decoded`).
   */
 final case class PostingBlock(
     termId: Long,
@@ -74,7 +76,8 @@ final case class PostingBlock(
 
 /** Per-term dictionary row (≙ ES/Lucene term dictionary). `termId` is
   * the dense dictionary-encoded id blocks are keyed by; `maxScore` is
-  * the global term score upper bound used by WAND pivot selection.
+  * the term's score upper bound under the build-time stats (stored, not
+  * read by query pruning: a list's bound is the max of its blocks').
   */
 final case class TermStats(term: String, termId: Long, shard: Int, df: Long, cf: Long, maxScore: Double)
 

@@ -76,7 +76,7 @@ object BoolQuerySpec {
   * stay equivalent — EngineSpec "wildcard twins" pins warm ≡ cold for
   * `?`, `*?`, a leading `?` and a pattern without wildcards.
   */
-private[query] object Expansion {
+private[graft] object Expansion {
   def wildcardRegex(patLower: String): scala.util.matching.Regex =
     ("^" + patLower.flatMap {
       case '*' => ".*"
@@ -424,26 +424,30 @@ private[query] object Searcher {
   final case class RemovedStats(n: Long, sumDl: Long,
       fieldN: Map[String, Long], fieldSumDl: Map[String, Long])
 
-  /** (docCount, avgdl) that term `t` scores under: its field's merged
-    * stats for a `%field:` term (per-field BM25), else the corpus's.
+  /** THE posting list of both query paths: term `t`'s blocks `bs` (every
+    * segment's and bucket's on the warm path, one (segment, bucket)
+    * group's on the distributed one) put in docId order, decoded and
+    * scored once under the merged LWW stats — visible df `df` and the
+    * corpus's (`nG`, `avgdlG`), or for a `%field:` term its field's
+    * (docCount, avgdl) from `fsMap` (per-field BM25) — with each block
+    * bounded by its exact maximum.
     */
-  def statsOf(t: String, nG: Long, avgdlG: Double,
-      fsMap: Map[String, (Long, Double)]): (Long, Double) =
-    FieldTerms.textFieldOf(t).flatMap(fsMap.get).getOrElse((nG, avgdlG))
+  def postingList(t: String, bs: Array[PB], df: Long, nG: Long, avgdlG: Double,
+      fsMap: Map[String, (Long, Double)]): Wand.PostingList = {
+    val (nn, ad) = FieldTerms.textFieldOf(t).flatMap(fsMap.get).getOrElse((nG, avgdlG))
+    Wand.PostingList.decoded(docIdOrdered(t, bs), Bm25.idf(df, nn), ad)
+  }
 
   /** One group's WAND dispatch — THE shared execution body of every
     * query path (a (segment, bucket) group in the distributed
-    * flatMapGroups closures over [[Wand.PostingList.compressed]] lists,
-    * the whole corpus on the warm in-process path over
-    * [[Wand.PostingList.decoded]] lists; kept in the companion so task
-    * closures never capture a Searcher), so the two are identical by
-    * construction. `byTerm` maps each query term present in the group to
-    * its docId-ordered list, scored and bounded under the merged LWW
-    * stats (`%field:` terms under their field's); every role gets a
-    * FRESH cursor (cursors are mutable). `tomb` = the group's tombstoned
-    * docIds, ascending. Returns empty when the group is missing a
-    * required term (any scored term under AND/phrase, or every value of
-    * a filter clause).
+    * flatMapGroups closures, the whole corpus on the warm in-process
+    * path; kept in the companion so task closures never capture a
+    * Searcher), so the two are identical by construction. `byTerm` maps
+    * each query term present in the group to its [[postingList]]; every
+    * role gets a FRESH cursor (cursors are mutable). `tomb` = the group's
+    * tombstoned docIds, ascending. Returns empty when the group is
+    * missing a required term (any scored term under AND/phrase, or every
+    * value of a filter clause).
     */
   def runGroup(
       byTerm: Map[String, Wand.PostingList],
@@ -467,7 +471,7 @@ private[query] object Searcher {
     val shoulds = w.shoulds.flatMap(t => iterOf(t, scored = true))
     // AND/phrase: every scored term must be present; a required-group
     // term present globally but absent here ⇒ no hits. Checked before the
-    // membership cursors are built (a cursor decodes its first block)
+    // membership cursors are built (a cursor loads its first block)
     if ((w.scored.nonEmpty && iters.isEmpty) ||
       (iters.isEmpty && shoulds.isEmpty && w.prefixExpansions == null) ||
       ((w.conjunctive || w.slots != null) && iters.size < w.scored.size) ||
@@ -629,14 +633,13 @@ private[query] final case class ResolvedQuery(
   * contained the old versions, unlike Lucene's deleted-doc model where
   * IDF counts deletes until merge.
   *
-  * Bounds: stored per-block and dictionary maxScore encode the SEGMENT's
-  * build-time stats, so they prune exactly when there is one segment and
-  * no tombstones. Otherwise block bounds come from the stats-independent
-  * maxTf as score(maxTf, dl = 0) — an exact bound under any stats, loose
-  * in practice (the distributed path) — or from a warm-time rescore under
-  * the merged stats (the warm lists, [[servesLocally]]). Exact
-  * per-posting rescoring from the stored (tf, dl) streams keeps results
-  * rank-identical to an exhaustive oracle either way.
+  * Bounds: both paths decode a term's blocks once into one
+  * [[Searcher.postingList]] scored under the merged stats, and bound each
+  * block by the exact maximum of its scores — valid under any stats, and
+  * bitwise the stored per-block maxScore when one segment without
+  * tombstones is served (the stored bounds themselves are never read).
+  * Exact per-posting scores from the stored (tf, dl) streams keep
+  * results rank-identical to an exhaustive oracle.
   */
 class Searcher private[query] (
     spark: SparkSession,
@@ -729,10 +732,8 @@ class Searcher private[query] (
     * dictionary (it keys every segment's blocks by term) and every
     * term's idf fixed at warm time: no tombstones, or the removed-df
     * corrections cached on the driver ([[maxDriverRemovedTerms]]) — a
-    * heavy-churn store stays distributed. Without stored bounds
-    * (several segments or tombstones) each block's bound is re-derived
-    * exactly under the merged stats. Throws when two segments' docId
-    * ranges overlap: one docId-ordered list per term needs
+    * heavy-churn store stays distributed. Throws when two segments'
+    * docId ranges overlap: one docId-ordered list per term needs
     * docId-disjoint segments.
     */
   def warm(maxDriverDictTerms: Long = 5_000_000L,
@@ -791,15 +792,8 @@ class Searcher private[query] (
       .reduce(_ unionByName _).as[(Int, PostingBlock)].collect()
       .map { case (i, pb) => termOf((i, pb.termId)) -> pb }
       .groupMap(_._1)(_._2).flatMap { case (t, bs) =>
-        val ordered = Searcher.docIdOrdered(t, bs)
-        val rows = localDict(t)
-        val df = rows.iterator.map(_._2.df).sum - rm.getOrElse(t, 0L)
-        if (df <= 0L) None
-        else {
-          val (nn, ad) = Searcher.statsOf(t, nG, adG, fsm)
-          Some(t -> Wand.PostingList.decoded(ordered, Bm25.idf(df, nn), ad, storedBounds,
-            rows.head._2.maxScore))
-        }
+        val df = localDict(t).iterator.map(_._2.df).sum - rm.getOrElse(t, 0L)
+        if (df <= 0L) None else Some(t -> Searcher.postingList(t, bs, df, nG, adG, fsm))
       }
   }
 
@@ -842,8 +836,10 @@ class Searcher private[query] (
   private lazy val hasTombstones: Boolean = Tombstones.exists(spark, indexDir)
   private def tombDF: DataFrame = Tombstones.loadDF(spark, indexDir)
 
-  /** Stored build-time bounds are valid: one segment, no tombstones (only
-    * then are the segment's build-time stats the global stats).
+  /** One segment, no tombstones: only then are the segment's build-time
+    * stats the global stats, and [[avgdl]] is the segment's stored avgdl
+    * (the one its build scored under), not Σdl / N recomputed. That is
+    * all it decides: query bounds always come from the decoded scores.
     */
   private[query] lazy val storedBounds: Boolean = segments.size == 1 && !hasTombstones
 
@@ -1157,9 +1153,9 @@ class Searcher private[query] (
     val needed = work.flatMap(_.terms).toSet
     // termId is segment-local: key block groups by (segIdx, termId);
     // terms whose visible df fell to zero are pruned from the scan
-    val idToTerm: Map[(Int, Long), (String, Long, Double)] = perSeg.collect {
+    val idToTerm: Map[(Int, Long), (String, Long)] = perSeg.collect {
       case ((i, t), ts) if needed.contains(t) && dfGlobal.contains(t) =>
-        (i, ts.termId) -> (t, dfGlobal(t), ts.maxScore)
+        (i, ts.termId) -> (t, dfGlobal(t))
     }
     val pruned = prunedBlocks(perSeg, t => needed.contains(t) && dfGlobal.contains(t))
       .getOrElse(return work.map(_ => Array.empty[Scored]))
@@ -1170,7 +1166,6 @@ class Searcher private[query] (
     val nG = n
     val avgdlG = avgdl
     val fsMap = fieldStatsMap
-    val stored = storedBounds
     // the task closure captures only these locals and the companion's
     // runGroup, never this Searcher
     val rows = all
@@ -1182,9 +1177,8 @@ class Searcher private[query] (
           val segIdx = grp.head._1
           val byTerm: Map[String, Wand.PostingList] =
             grp.map(_._3).groupBy(_.termId).map { case (tid, bs) =>
-              val (t, df, mx) = idToTerm((segIdx, tid))
-              val (nn, ad) = Searcher.statsOf(t, nG, avgdlG, fsMap)
-              t -> Wand.PostingList.compressed(bs, Bm25.idf(df, nn), ad, stored, mx)
+              val (t, df) = idToTerm((segIdx, tid))
+              t -> Searcher.postingList(t, bs, df, nG, avgdlG, fsMap)
             }
           val tomb = Searcher.tombIds(tombBlks)
           work.iterator.zipWithIndex.flatMap { case (w, j) =>
@@ -1567,12 +1561,6 @@ class Searcher private[query] (
 
   // --- term-expansion queries (ES prefix / wildcard / fuzzy) --------------
 
-  /** Unit-cost Levenshtein — MUST agree with Spark's
-    * functions.levenshtein and DuckDB's levenshtein (the oracle twins).
-    */
-  private[graft] def levenshtein(a: String, b: String): Int =
-    Expansion.levenshtein(a, b)
-
   /** Dictionary-term predicate of analyzed `field`'s namespace ("text" =
     * the main namespace: fielded keyword ('#field:v') and fielded text
     * ('%field:tok') terms share the dictionary but never match a
@@ -1782,7 +1770,7 @@ class Searcher private[query] (
       else {
         val pfx = t0.take(prefixLength)
         expand(t => t.startsWith(pfx) && math.abs(t.length - t0.length) <= maxDist &&
-            levenshtein(t0, t) <= maxDist,
+            Expansion.levenshtein(t0, t) <= maxDist,
           c => c.startsWith(pfx) &&
             org.apache.spark.sql.functions.levenshtein(lit(t0), c) <= lit(maxDist),
           maxExpansions, field,
@@ -1861,13 +1849,13 @@ class Searcher private[query] (
     val w = toks(0)
     val cands = expand(
       t => t != w && math.abs(t.length - w.length) <= maxDist &&
-        levenshtein(w, t) <= maxDist,
+        Expansion.levenshtein(w, t) <= maxDist,
       c => c =!= lit(w) &&
         org.apache.spark.sql.functions.levenshtein(lit(w), c) <= lit(maxDist),
       maxCandidates,
       lenRange = Some((math.max(1, w.length - maxDist), w.length + maxDist)))
     cands
-      .map { case (t, df) => (t, levenshtein(w, t), df) }
+      .map { case (t, df) => (t, Expansion.levenshtein(w, t), df) }
       .sortBy { case (t, d, df) => (d, -df, t) }
       .take(k)
       .toDF("suggestion", "dist", "df")

@@ -3,7 +3,7 @@ package graft.query
 import graft.index.Codec
 import graft.model.{PostingBlock, Scored}
 
-/** BM25 top-k over compressed posting blocks (north_rule: "BM25 top-k
+/** BM25 top-k over decoded posting lists (north_rule: "BM25 top-k
   * query executor using posting-list intersection with block-max WAND
   * pruning"): block-max MaxScore for disjunctions ([[topK]]) and a
   * block-max intersection for AND / phrase ([[topKConjunctive]],
@@ -61,78 +61,28 @@ object Wand {
     l
   }
 
-  /** One term's postings in the layout [[TermIterator]] reads. Per block
-    * b: `lastDocs(b)`, the unboosted score bound `maxes(b)`, the index
-    * range [starts(b), starts(b + 1)) of its postings and its position
-    * stream `poss(b)`. A WARM list ([[PostingList.decoded]], `docs` non-
-    * null) holds every posting decoded once: docId, tf, the exact
+  /** One term's postings in the layout [[TermIterator]] reads, every
+    * posting decoded once ([[PostingList.decoded]]): its docId, tf, exact
     * unboosted BM25 contribution and the byte offset of its positions in
-    * its block's stream. A COMPRESSED list ([[PostingList.compressed]])
-    * keeps the blocks, and its cursor decodes the block it lands on into
-    * its own buffers with the same [[PostingList.decodeInto]]. `ub` is
-    * the unboosted bound of the whole list; `idf` / `avgdl` the stats its
-    * scores are computed under.
+    * its block's stream. Per block b: `lastDocs(b)`, the unboosted score
+    * bound `maxes(b)` (the exact maximum of the block's scores), the index
+    * range [starts(b), starts(b + 1)) of its postings and its position
+    * stream `poss(b)`. `ub` is the unboosted bound of the whole list.
     */
   final class PostingList private (
       val ub: Double,
-      val idf: Double,
-      val avgdl: Double,
       val lastDocs: Array[Long],
       val maxes: Array[Double],
       val starts: Array[Int],
       val poss: Array[Array[Byte]],
-      /** The source blocks — compressed lists only (null when warm). */
-      val blocks: Array[PostingBlock],
       val docs: Array[Long],
       val tfs: Array[Int],
       val scores: Array[Double],
       val posOffs: Array[Int]) {
     def nBlocks: Int = lastDocs.length
-    /** Postings in the largest block (the size of a cursor's buffers). */
-    def maxCount: Int = {
-      var mx = 0
-      var b = 0
-      while (b < nBlocks) { mx = math.max(mx, starts(b + 1) - starts(b)); b += 1 }
-      mx
-    }
   }
 
   object PostingList {
-    /** Decodes block `b` into `docs` / `tfs` / `scores` from index `at`,
-      * each score the exact unboosted BM25 contribution
-      * `Bm25.scoreIdf(idf, tf, dl, avgdl)`; `dls` is scratch of at least
-      * the block's count. THE block decode of both sources: a warm list
-      * runs it once per block at warm time, a compressed list's cursor on
-      * every block it loads.
-      */
-    def decodeInto(b: PostingBlock, idf: Double, avgdl: Double, at: Int, docs: Array[Long],
-        tfs: Array[Int], dls: Array[Int], scores: Array[Double]): Unit = {
-      Codec.deltaDecodeInto(b.docs, b.count, b.firstDocId, docs, at)
-      Codec.decodeVarIntsInto(b.tfs, b.count, tfs, at)
-      Codec.decodeVarIntsInto(b.dls, b.count, dls)
-      var i = 0
-      while (i < b.count) { scores(at + i) = Bm25.scoreIdf(idf, tfs(at + i), dls(i), avgdl); i += 1 }
-    }
-
-    /** Byte offsets into `bytes` (one block's position stream) of the
-      * postings `from until until`, whose tfs are `tfs(from until
-      * until)`, written to `offs` at the same indices.
-      */
-    def offsetsInto(bytes: Array[Byte], tfs: Array[Int], from: Int, until: Int,
-        offs: Array[Int]): Unit = {
-      var off = 0
-      var i = from
-      while (i < until) { offs(i) = off; off = Codec.skipVarInts(bytes, off, tfs(i)); i += 1 }
-    }
-
-    /** Per-block index ranges: starts(b) = Σ count of blocks before b. */
-    private def startsOf(bs: Array[PostingBlock]): Array[Int] = {
-      val starts = new Array[Int](bs.length + 1)
-      var b = 0
-      while (b < bs.length) { starts(b + 1) = starts(b) + bs(b).count; b += 1 }
-      starts
-    }
-
     /** max of a(from until until); −∞ when empty. */
     private def maxOf(a: Array[Double], from: Int, until: Int): Double = {
       var mx = Double.NegativeInfinity
@@ -141,34 +91,18 @@ object Wand {
       mx
     }
 
-    /** A list the cursor decodes per block (the distributed path).
-      * `blocksIn` is put in cursor order
-      * ([[inBlockOrder]]). Bounds: `stored` = the blocks' stored maxScore
-      * and `dictMax` (valid when the scoring stats are the build's);
-      * otherwise the stats-independent score(maxTf, dl = 0) per block —
-      * an exact upper bound under any stats (BM25 rises in tf, falls in
-      * dl), loose in practice.
+    /** Every block of `bs` (in cursor order, docId-disjoint) decoded and
+      * scored once under (idf, avgdl) — each score the exact unboosted
+      * `Bm25.scoreIdf(idf, tf, dl, avgdl)` — position offsets included, so
+      * a cursor over it decodes and rescores nothing. Each block's bound
+      * is the maximum of its scores: exact under any stats (under a
+      * single segment's own stats it is bitwise the block's stored
+      * maxScore).
       */
-    def compressed(blocksIn: Array[PostingBlock], idf: Double, avgdl: Double, stored: Boolean,
-        dictMax: Double): PostingList = {
-      val bs = inBlockOrder(blocksIn)
-      val maxes = bs.map(b =>
-        if (stored) b.maxScore else Bm25.scoreIdf(idf, b.maxTf, 0, avgdl))
-      new PostingList(if (stored) dictMax else maxOf(maxes, 0, maxes.length), idf, avgdl,
-        bs.map(_.lastDocId), maxes, startsOf(bs), bs.map(_.poss), bs, null, null, null, null)
-    }
-
-    /** A warm list: every block of `bs` (in cursor order, docId-disjoint)
-      * decoded and scored once, position offsets included, so a cursor
-      * over it decodes and rescores nothing. Bounds: `stored` = the
-      * blocks' stored maxScore and `dictMax`; otherwise each block's
-      * maximum is re-derived EXACTLY from its scores (under merged stats
-      * it is tighter than the maxTf bound, as tight as a compacted
-      * index's).
-      */
-    def decoded(bs: Array[PostingBlock], idf: Double, avgdl: Double, stored: Boolean,
-        dictMax: Double): PostingList = {
-      val starts = startsOf(bs)
+    def decoded(bs: Array[PostingBlock], idf: Double, avgdl: Double): PostingList = {
+      val starts = new Array[Int](bs.length + 1)
+      var b = 0
+      while (b < bs.length) { starts(b + 1) = starts(b) + bs(b).count; b += 1 }
       val total = starts(bs.length)
       val docs = new Array[Long](total)
       val tfs = new Array[Int](total)
@@ -176,17 +110,29 @@ object Wand {
       val posOffs = new Array[Int](total)
       val dls = new Array[Int](bs.iterator.map(_.count).maxOption.getOrElse(0))
       val maxes = new Array[Double](bs.length)
-      var b = 0
+      b = 0
       while (b < bs.length) {
         val blk = bs(b)
-        decodeInto(blk, idf, avgdl, starts(b), docs, tfs, dls, scores)
-        if (blk.poss != null && blk.poss.nonEmpty)
-          offsetsInto(blk.poss, tfs, starts(b), starts(b + 1), posOffs)
-        maxes(b) = if (stored) blk.maxScore else maxOf(scores, starts(b), starts(b + 1))
+        val at = starts(b)
+        Codec.deltaDecodeInto(blk.docs, blk.count, blk.firstDocId, docs, at)
+        Codec.decodeVarIntsInto(blk.tfs, blk.count, tfs, at)
+        Codec.decodeVarIntsInto(blk.dls, blk.count, dls)
+        var i = 0
+        while (i < blk.count) {
+          scores(at + i) = Bm25.scoreIdf(idf, tfs(at + i), dls(i), avgdl); i += 1
+        }
+        if (blk.poss != null && blk.poss.nonEmpty) {
+          var off = 0
+          i = at
+          while (i < starts(b + 1)) {
+            posOffs(i) = off; off = Codec.skipVarInts(blk.poss, off, tfs(i)); i += 1
+          }
+        }
+        maxes(b) = maxOf(scores, at, starts(b + 1))
         b += 1
       }
-      new PostingList(if (stored) dictMax else maxOf(maxes, 0, maxes.length), idf, avgdl,
-        bs.map(_.lastDocId), maxes, starts, bs.map(_.poss), null, docs, tfs, scores, posOffs)
+      new PostingList(maxOf(maxes, 0, maxes.length), bs.map(_.lastDocId), maxes, starts,
+        bs.map(_.poss), docs, tfs, scores, posOffs)
     }
   }
 
@@ -196,18 +142,12 @@ object Wand {
     * seeks gallop ([[gallop]]) over `lastDocs` and then the block's
     * docIds; block skipping never loads a skipped block.
     *
-    * Buffer contract: over a WARM list the cursor reads the list's
-    * resident arrays — loading a block is an index switch, [[score]] is
-    * `boost · scores(pos)`, [[positions]] decodes one posting at its
-    * stored offset. Over a COMPRESSED list it decodes each block it
-    * loads into its OWN reused docId/tf/score arrays (sized to the
-    * list's largest block) with [[PostingList.decodeInto]], and computes
-    * the block's position offsets on the first [[positions]] call in it.
-    * Either way no allocation per block or per posting (the position
-    * buffer only grows), and the values, [[score]] and [[posBuf]] are
-    * valid only for the current posting, until the cursor moves
-    * (nextGEQ / advancePast / shallowSeek); a caller that keeps them
-    * longer must copy them. `decodes` counts blocks loaded.
+    * The cursor reads the list's resident arrays: loading a block is an
+    * index switch, [[score]] is `boost · scores(pos)`, [[positions]]
+    * decodes one posting at its stored offset into a grow-only buffer.
+    * No allocation per block or per posting; [[posBuf]] is valid only
+    * for the current posting, until the cursor moves (nextGEQ /
+    * advancePast / shallowSeek). `decodes` counts blocks loaded.
     */
   final class TermIterator(
       val term: String,
@@ -225,25 +165,20 @@ object Wand {
         */
       val groupOrdinal: Int
   ) extends PosCursor {
-    private val warm = list.docs != null
     private val lastDocs = list.lastDocs
     private val nBlocks = list.nBlocks
-    private val bufLen = if (warm) 0 else list.maxCount
-    private val docs = if (warm) list.docs else new Array[Long](bufLen)
-    private val tfs = if (warm) list.tfs else new Array[Int](bufLen)
-    private val scores = if (warm) list.scores else new Array[Double](bufLen)
-    private val posOffs = if (warm) list.posOffs else new Array[Int](bufLen)
-    private val dls = if (warm) null else new Array[Int](bufLen)
+    private val docs = list.docs
+    private val tfs = list.tfs
+    private val scores = list.scores
+    private val posOffs = list.posOffs
     private var bi = 0
     /** Block `bi` is loaded: its postings end at index `end` of the
-      * docs / tfs / scores arrays and `pos` is the current one. False
-      * after a block skip.
+      * list's arrays and `pos` is the current one. False after a block
+      * skip.
       */
     private var loaded = false
     private var pos = 0
     private var end = 0
-    /** `posOffs` holds block `bi`'s offsets (always, over a warm list). */
-    private var offsetsReady = false
     private var buf = Array.emptyIntArray
     private var bufCount = 0
     /** The posting whose positions `buf` holds (−1 = none). */
@@ -257,12 +192,7 @@ object Wand {
     else { load(); curDoc = docs(pos) }
 
     private def load(): Unit = {
-      if (warm) { pos = list.starts(bi); end = list.starts(bi + 1) }
-      else {
-        val b = list.blocks(bi)
-        PostingList.decodeInto(b, list.idf, list.avgdl, 0, docs, tfs, dls, scores)
-        pos = 0; end = b.count; offsetsReady = false
-      }
+      pos = list.starts(bi); end = list.starts(bi + 1)
       loaded = true; bufAt = -1
       decodes += 1
     }
@@ -272,9 +202,6 @@ object Wand {
         val bytes = list.poss(bi)
         require(bytes != null && bytes.nonEmpty,
           s"index stores no positions for term '$term' — build with storePositions=true")
-        if (!warm && !offsetsReady) {
-          PostingList.offsetsInto(bytes, tfs, 0, end, posOffs); offsetsReady = true
-        }
         val tf = tfs(pos)
         if (buf.length < tf) buf = new Array[Int](math.max(tf, 2 * buf.length).max(8))
         Codec.positionsInto(bytes, posOffs(pos), tf, buf)
@@ -326,7 +253,7 @@ object Wand {
   }
 
   /** `bs` in cursor order, (firstDocId, lastDocId): returned as is when
-    * already ordered (the warm path orders each list once), else sorted.
+    * already ordered, else sorted.
     */
   def inBlockOrder(bs: Array[PostingBlock]): Array[PostingBlock] = {
     var i = 1

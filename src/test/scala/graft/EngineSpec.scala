@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.corpus.Transcripts
 import graft.index.{DocIds, IndexBuilder, IndexConfig}
 import graft.model.Scored
-import graft.query.{Oracle, Searcher}
+import graft.query.{Expansion, Oracle, Searcher}
 
 /** Golden end-to-end: the full engine (docIds → salted build → compressed
   * blocks → block-max WAND) must be rank-identical — docIDs AND BM25
@@ -123,9 +123,9 @@ class EngineSpec extends SparkSpec {
     assert(warm.searchWildcard("*bar", 10).toSeq == searcher.searchWildcard("*bar", 10).toSeq)
     assert(warm.searchFuzzy("zanzibat", 10).toSeq == searcher.searchFuzzy("zanzibat", 10).toSeq)
     // scala-side levenshtein ≡ the SQL twins' semantics (spot values)
-    assert(searcher.levenshtein("sprak", "spark") == 2)
-    assert(searcher.levenshtein("s", "spark") == 4)
-    assert(searcher.levenshtein("", "abc") == 3 && searcher.levenshtein("abc", "abc") == 0)
+    assert(Expansion.levenshtein("sprak", "spark") == 2)
+    assert(Expansion.levenshtein("s", "spark") == 4)
+    assert(Expansion.levenshtein("", "abc") == 3 && Expansion.levenshtein("abc", "abc") == 0)
   }
 
   test("wildcard twins: the warm regex expansion ≡ the cold LIKE expansion") {
@@ -165,7 +165,7 @@ class EngineSpec extends SparkSpec {
       .select(explode(array_distinct(graft.analysis.Analyzer.tokensCol(col("text")))).as("t"))
       .distinct().as[String].collect().toSet
     def exp(w: String, d: Int) = vocab.filter(t =>
-      math.abs(t.length - w.length) <= d && searcher.levenshtein(w, t) <= d)
+      math.abs(t.length - w.length) <= d && Expansion.levenshtein(w, t) <= d)
       .toSeq.sorted.take(50)
     for ((q, d) <- Seq(("zanzibat quasat", 1), ("zanzibar lattice", 1))) {
       val toks = graft.analysis.Analyzer.analyzeQuery(q).toSeq

@@ -7,7 +7,7 @@ import graft.analysis.Analyzer
 import graft.corpus.Transcripts
 import graft.index.{DocIds, FieldTerms, IndexBuilder, IndexConfig}
 import graft.model.Scored
-import graft.query.{Oracle, Searcher}
+import graft.query.{Expansion, Oracle, Searcher}
 
 /** Per-field fulltext (round-5): additional analyzed text fields
   * (`IndexConfig.textFieldCols`, `%field:token` namespace) with
@@ -375,7 +375,7 @@ class FieldSearchSpec extends SparkSpec {
     assert(wToks.nonEmpty && wToks.size < 50)
     assert(searcher.searchWildcard("t*e", 10, field = "title").toSeq == fieldOracle(wToks))
     // fuzzy
-    val fToks = titleToks.filter(t => searcher.levenshtein("thee", t) <= 1)
+    val fToks = titleToks.filter(t => Expansion.levenshtein("thee", t) <= 1)
     assert(fToks.nonEmpty && fToks.size < 50)
     assert(searcher.searchFuzzy("thee", 10, maxDist = 1, field = "title").toSeq
       == fieldOracle(fToks))

@@ -7,7 +7,7 @@ import graft.analysis.Analyzer
 import graft.corpus.Transcripts
 import graft.index.{DocIds, FieldTerms, IndexBuilder, IndexConfig}
 import graft.model.Scored
-import graft.query.{BoolQuerySpec, Oracle, Searcher}
+import graft.query.{BoolQuerySpec, Expansion, Oracle, Searcher}
 
 /** Round-4 query surface: should / minimum_should_match, tiered numeric
   * range filters, pagination (from + search_after), histogram/stats
@@ -724,7 +724,7 @@ class QuerySurfaceSpec extends SparkSpec {
     val dfMap = toksByDoc.flatMap(_._2.distinct).groupBy(identity)
       .map { case (t, xs) => t -> xs.length.toLong }
     def cands(w: String, d: Int, cap: Int): Seq[String] = dfMap.keys.toSeq
-      .map(t => (t, searcher.levenshtein(w, t), dfMap(t)))
+      .map(t => (t, Expansion.levenshtein(w, t), dfMap(t)))
       .filter(_._2 <= d)
       .sortBy { case (t, dd, dfc) => (dd, -dfc, t) }.take(cap).map(_._1)
     def bigramCount(a: String, b: String): Long = toksByDoc.count { case (_, ts) =>
@@ -787,7 +787,7 @@ class QuerySurfaceSpec extends SparkSpec {
       val cands =
         if (pfxLen >= w.length) vocab.filter(_ == w).toSeq
         else vocab.filter(t => t.startsWith(w.take(pfxLen)) &&
-          math.abs(t.length - w.length) <= d && searcher.levenshtein(w, t) <= d)
+          math.abs(t.length - w.length) <= d && Expansion.levenshtein(w, t) <= d)
           .toSeq.sorted.take(50)
       if (cands.isEmpty) Seq.empty
       else Oracle.topK(docsDF, cands.mkString(" "), 10).as[graft.model.Scored].collect().toSeq
@@ -853,7 +853,7 @@ class QuerySurfaceSpec extends SparkSpec {
     val sg = searcher.suggestTerms("thee", 5, maxDist = 1)
       .as[(String, Int, Long)].collect().toSeq
     assert(sg.nonEmpty && sg.head._1 == "the" && sg.head._2 == 1)
-    assert(sg.map(_._1).forall(t => searcher.levenshtein("thee", t) <= 1 && t != "thee"))
+    assert(sg.map(_._1).forall(t => Expansion.levenshtein("thee", t) <= 1 && t != "thee"))
     assert(sg == sg.sortBy { case (t, d, df) => (d, -df, t) })
 
     // more_like_this: reconstruct the selection rule and pin identity

@@ -45,15 +45,15 @@ class WandSpec extends AnyFunSuite {
   private def tfOf(doc: Array[String]): Map[String, Int] =
     doc.groupBy(identity).map { case (t, xs) => t -> xs.length }
 
-  /** A cursor over `blocks` as the distributed path reads them
-    * (decoded per block), scored under (df, n, avgdl); `staleBlockMax`
-    * bounds each block by score(maxTf, dl = 0), not its stored maxScore.
+  /** A cursor over compressed `blocks` (any order) as both query paths
+    * read them: put in cursor order and decoded once into a list scored
+    * under (df, n, avgdl).
     */
   private def compressedIter(t: String, blocks: Array[PostingBlock], ub: Double, df: Long,
-      n: Long, avgdl: Double, staleBlockMax: Boolean = false, boost: Double = 1.0,
+      n: Long, avgdl: Double, boost: Double = 1.0,
       groupOrdinal: Int = Int.MinValue): Wand.TermIterator =
-    new Wand.TermIterator(t, Wand.PostingList.compressed(blocks, Bm25.idf(df, n), avgdl,
-      stored = !staleBlockMax, ub), ub, boost, groupOrdinal)
+    new Wand.TermIterator(t, Wand.PostingList.decoded(Wand.inBlockOrder(blocks),
+      Bm25.idf(df, n), avgdl), ub, boost, groupOrdinal)
 
   /** Engine-side iterators for the query terms over the corpus. */
   private def buildIters(
@@ -736,19 +736,22 @@ class WandSpec extends AnyFunSuite {
 
     /** One list as blocks of MIXED sizes: runs over disjoint docId ranges
       * encoded with different block sizes, so a short block follows a
-      * long one (stale tail entries in a reused buffer) and runs end in
-      * partial blocks. Every other list comes unsorted.
+      * long one and runs end in partial blocks. Every other list comes
+      * unsorted. `stale` stores block maxima scored under other stats
+      * (avgdl · 3), as a segment's blocks carry once the merged stats
+      * move: the cursor must not read them.
       */
     final class Ref(val blocks: Array[PostingBlock], val ids: Array[Long], val tfs: Array[Int],
         val dls: Array[Int], val poss: Array[Array[Int]], val blk: Array[PostingBlock])
-    def listOf(shuffle: Boolean): Ref = {
+    def listOf(shuffle: Boolean, stale: Boolean): Ref = {
       val nPost = 1 + r.nextInt(300)
       var d = r.nextInt(5).toLong
       val ids = Array.fill(nPost) { val x = d; d += 1 + r.nextInt(12); x }
       val tfs = Array.fill(nPost)(1 + r.nextInt(5))
       val dls = tfs.map(tf => tf + r.nextInt(40))
       val pos = tfs.map(tf => r.shuffle((0 until 60).toList).take(tf).sorted.toArray)
-      val scores = Array.tabulate(nPost)(i => Bm25.score(tfs(i), nPost, dls(i), n, avgdl))
+      val storedAvgdl = if (stale) 3 * avgdl else avgdl
+      val scores = Array.tabulate(nPost)(i => Bm25.score(tfs(i), nPost, dls(i), n, storedAvgdl))
       val bs = scala.collection.mutable.ArrayBuffer[PostingBlock]()
       var lo = 0
       while (lo < nPost) {
@@ -769,19 +772,11 @@ class WandSpec extends AnyFunSuite {
     }
 
     for (c <- 1 to 80) {
-      val refs = Array(listOf(shuffle = c % 2 == 0), listOf(shuffle = c % 3 == 0))
-      val boost = if (c % 3 == 0) 1.7 else 1.0
       val stale = c % 4 == 0
-      // odd cases read warm lists (decoded once, stored or rescored block
-      // maxima — equal here, the blocks were scored under the same stats)
-      val warm = c % 2 == 1
+      val refs = Array(listOf(shuffle = c % 2 == 0, stale), listOf(shuffle = c % 3 == 0, stale))
+      val boost = if (c % 3 == 0) 1.7 else 1.0
       val its = refs.map(ref =>
-        if (warm)
-          new Wand.TermIterator("t", Wand.PostingList.decoded(Wand.inBlockOrder(ref.blocks),
-            Bm25.idf(ref.ids.length.toLong, n), avgdl, stored = c % 4 == 1, 0.0), 0.0, boost,
-            Int.MinValue)
-        else compressedIter("t", ref.blocks, 0.0, ref.ids.length.toLong,
-          n, avgdl, staleBlockMax = stale, boost = boost))
+        compressedIter("t", ref.blocks, 0.0, ref.ids.length.toLong, n, avgdl, boost = boost))
       val at = Array(0, 0) // the reference posting each cursor must sit on
       def check(j: Int, what: String): Unit = {
         val (it, ref, i) = (its(j), refs(j), at(j))
@@ -793,12 +788,14 @@ class WandSpec extends AnyFunSuite {
             java.lang.Double.doubleToRawLongBits(
               boost * Bm25.score(ref.tfs(i), df, ref.dls(i), n, avgdl)), what)
           val b = ref.blk(i)
-          val wantMax = if (stale) boost * Bm25.score(b.maxTf, df, 0, n, avgdl) else boost * b.maxScore
+          // the exact in-block maximum under the cursor's stats, whatever
+          // the block stored
+          val inBlock = ref.ids.indices.filter(ref.blk(_) eq b)
+            .map(p => Bm25.score(ref.tfs(p), df, ref.dls(p), n, avgdl)).max
           assert(java.lang.Double.doubleToRawLongBits(it.blockMax) ==
-            java.lang.Double.doubleToRawLongBits(wantMax), what)
+            java.lang.Double.doubleToRawLongBits(boost * inBlock), what)
           assert(it.blockLast == b.lastDocId, what)
-          // positions read lazily: skipped at some postings, so a block's
-          // position cache is sometimes first built mid-block
+          // positions read lazily: skipped at some postings
           if (r.nextBoolean()) {
             val np = it.positions()
             assert(it.posBuf.take(np).sameElements(ref.poss(i)), what)
@@ -810,7 +807,7 @@ class WandSpec extends AnyFunSuite {
       check(0, s"case $c: first posting"); check(1, s"case $c: first posting")
       var steps = 0
       while (!(its(0).exhausted && its(1).exhausted)) {
-        // interleave the two cursors: each keeps its own buffers
+        // interleave the two cursors: each keeps its own position buffer
         val j = r.nextInt(2)
         val it = its(j)
         if (!it.exhausted) {
@@ -860,7 +857,6 @@ class WandSpec extends AnyFunSuite {
       val poss = blocks.zip(decs).flatMap { case (b, dec) => Codec.decodePositions(b, dec.tfs) }
       val blk = blocks.flatMap(b => Array.fill(b.count)(b))
       val boost = if (c % 2 == 0) 1.3 else 1.0
-      val stored = c > 2
       def check(it: Wand.TermIterator, i: Int, what: String): Unit =
         if (i >= nPost) assert(it.exhausted && it.curDoc == Long.MaxValue, what)
         else {
@@ -868,13 +864,15 @@ class WandSpec extends AnyFunSuite {
           assert(bits(it.score) == bits(boost * scores(i)), what)
           val b = blk(i)
           val inBlock = scores.indices.filter(blk(_) eq b).map(scores)
-          val wantMax = if (stored) b.maxScore else inBlock.max
-          assert(bits(it.blockMax) == bits(boost * wantMax), what)
+          // the bound is the exact in-block maximum, which under the
+          // blocks' own stats is bitwise their stored maxScore
+          assert(bits(inBlock.max) == bits(b.maxScore), what)
+          assert(bits(it.blockMax) == bits(boost * inBlock.max), what)
           assert(it.blockLast == b.lastDocId, what)
           val np = it.positions()
           assert(it.posBuf.take(np).sameElements(poss(i)), what)
         }
-      val list = Wand.PostingList.decoded(blocks, Bm25.idf(nPost.toLong, n), avgdl, stored, 0.0)
+      val list = Wand.PostingList.decoded(blocks, Bm25.idf(nPost.toLong, n), avgdl)
       // jumps in postings: next, two on, within a block, to and past the
       // next block, several blocks on; each lands on a docId or, with
       // `gap`, just before it (the gap's first docId, when there is one)
