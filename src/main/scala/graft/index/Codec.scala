@@ -164,9 +164,7 @@ object Codec {
   }
 
   /** Encode one term's postings (already sorted by docId asc) into blocks
-    * of ≤ blockSize, computing exact per-block max tf and max BM25 score.
-    * `scores(i)` is the exact per-posting BM25 contribution (computed at
-    * build with the global df/N/avgdl). `poss(i)` is posting i's
+    * of ≤ blockSize. `poss(i)` is posting i's
     * already-varint-encoded position stream (empty arrays when positions
     * are not stored) — per-block streams are a plain concatenation.
     */
@@ -177,7 +175,6 @@ object Codec {
       docIds: Array[Long],
       tfs: Array[Int],
       dls: Array[Int],
-      scores: Array[Double],
       poss: Array[Array[Byte]],
       blockSize: Int
   ): Iterator[PostingBlock] = {
@@ -189,16 +186,9 @@ object Codec {
       val ids = java.util.Arrays.copyOfRange(docIds, lo, hi)
       val t = java.util.Arrays.copyOfRange(tfs, lo, hi)
       val d = java.util.Arrays.copyOfRange(dls, lo, hi)
-      var maxTf = 0
-      var maxScore = Double.NegativeInfinity
       var posBytes = 0
       var i = lo
-      while (i < hi) {
-        if (tfs(i) > maxTf) maxTf = tfs(i)
-        if (scores(i) > maxScore) maxScore = scores(i)
-        posBytes += poss(i).length
-        i += 1
-      }
+      while (i < hi) { posBytes += poss(i).length; i += 1 }
       val pcat = new Array[Byte](posBytes)
       var off = 0
       i = lo
@@ -211,7 +201,7 @@ object Codec {
         termId = termId, shard = shard, bucket = bucket, blockId = b,
         firstDocId = ids(0), lastDocId = ids(ids.length - 1), count = hi - lo,
         docs = deltaEncode(ids), tfs = encodeVarInts(t), dls = encodeVarInts(d),
-        poss = pcat, maxTf = maxTf, maxScore = maxScore
+        poss = pcat
       )
     }
   }

@@ -5,7 +5,6 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.{BuildManifest, IndexStats, PostingBlock, TermStats}
-import graft.query.Bm25
 
 final case class CompactionReport(segments: Int, n: Long, vocab: Long, buckets: Int,
   consumedTombstones: Seq[String] = Nil, mergedSegments: Seq[String] = Nil)
@@ -59,11 +58,9 @@ final case class CompactionPolicy(
   *   4. statistics are recomputed EXACTLY over the surviving corpus:
   *      N and Σdl from the merged doc store write (Observation), df/cf
   *      per term from the surviving blocks themselves (df = Σ block
-  *      count without decoding; cf decodes only the tf varint stream),
-  *      and per-block maxScore by rescoring the surviving (tf, dl)
-  *      streams under the merged stats. The compacted index therefore
-  *      serves a plain `Searcher` with tight bounds — no staleBlockMax
-  *      mode, unlike `MultiSearcher` over raw segments.
+  *      count without decoding; cf decodes only the tf varint stream).
+  *      Nothing is rescored: blocks store no score, and every query
+  *      bounds a block by its scores under the stats it serves.
   *
   * The output carries the full manifest set a built index has — docs,
   * finalize AND per-bucket cells — so a LATER compaction over a dir
@@ -85,9 +82,7 @@ object Compaction {
 
   /** Drop tombstoned postings from a block: returns the block unchanged
     * when no tombstone falls in its docId range, None when every posting
-    * is dead, else a re-encoded block of the survivors (maxScore is a
-    * placeholder — phase 2 rescores every block under the merged stats
-    * anyway).
+    * is dead, else a re-encoded block of the survivors.
     */
   private def filterBlock(blk: PostingBlock, tomb: Array[Long]): Option[PostingBlock] = {
     if (tomb.isEmpty) return Some(blk)
@@ -112,7 +107,6 @@ object Compaction {
     val tfs = new Array[Int](nKeep)
     val dls = new Array[Int](nKeep)
     val pss = new Array[Array[Byte]](nKeep)
-    var maxTf = 0
     var o = 0
     i = 0
     while (i < blk.count) {
@@ -122,7 +116,6 @@ object Compaction {
         dls(o) = dec.dls(i)
         pss(o) = if (posDec == null) Array.emptyByteArray
           else Codec.encodePositions(posDec(i))
-        if (tfs(o) > maxTf) maxTf = tfs(o)
         o += 1
       }
       i += 1
@@ -141,7 +134,7 @@ object Compaction {
     Some(blk.copy(
       firstDocId = ids(0), lastDocId = ids(nKeep - 1), count = nKeep,
       docs = Codec.deltaEncode(ids), tfs = Codec.encodeVarInts(tfs),
-      dls = Codec.encodeVarInts(dls), poss = pcat, maxTf = maxTf, maxScore = 0.0))
+      dls = Codec.encodeVarInts(dls), poss = pcat))
   }
 
   /** Merge `indexDir`'s live seg-* (minus tombstoned docs) into a
@@ -222,7 +215,7 @@ object Compaction {
     val maxDocId = row("mx").asInstanceOf[Long]
     val avgdl = if (n == 0) 0.0 else sumDl.toDouble / n
     // merged field stats (fieldId re-assigned in sorted field order) —
-    // persisted like a built index's, and fed to the rescore below
+    // persisted like a built index's
     val mergedFieldStats: Seq[(String, Int, Long, Long)] =
       fieldNames.zipWithIndex.map { case (f, i) =>
         (f, i + 1, row(s"fn_$f").asInstanceOf[Long], row(s"fs_$f").asInstanceOf[Long])
@@ -240,9 +233,12 @@ object Compaction {
     // (monotonically_increasing_id must not be recomputed across
     // consumers; same rule as IndexBuilder's dict0 phase). df/cf are NOT
     // carried from the segment dicts: they are recomputed exactly from
-    // the surviving blocks below (tombstones change them).
+    // the surviving blocks below (tombstones change them). Columns are
+    // selected by name: segments written by other writer revisions
+    // carry other dict columns.
     val dictUnion = segments.zipWithIndex.map { case (s, i) =>
-      spark.read.parquet(s"$s/dict").withColumn("seg", lit(i))
+      spark.read.parquet(s"$s/dict")
+        .select(col("term"), col("termId"), col("shard"), lit(i).as("seg"))
     }.reduce(_ unionByName _).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     dictUnion.groupBy(col("term"))
       .agg(first(col("shard")).as("shard"))
@@ -283,16 +279,18 @@ object Compaction {
           (col("bucket") + lit(off)).cast("int").as("_3"), col("blockId").as("_4"),
           col("firstDocId").as("_5"), col("lastDocId").as("_6"), col("count").as("_7"),
           col("docs").as("_8"), col("tfs").as("_9"), col("dls").as("_10"),
-          col("poss").as("_11"), col("maxTf").as("_12"))
+          col("poss").as("_11"))
     }.reduce(_ unionByName _)
       .as[(Long, Int, Int, Int, Long, Long, Int,
-        Array[Byte], Array[Byte], Array[Byte], Array[Byte], Int)]
+        Array[Byte], Array[Byte], Array[Byte], Array[Byte])]
       .flatMap { r =>
         val blk = PostingBlock(r._1, r._2, r._3, r._4, r._5, r._6, r._7,
-          r._8, r._9, r._10, r._11, r._12, 0.0)
+          r._8, r._9, r._10, r._11)
         filterBlock(blk, tombBc.value)
       }
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    rewritten.write.partitionBy("bucket", "shard")
+      .mode(SaveMode.Overwrite).parquet(s"$outDir/blocks")
 
     // exact per-term stats over the SURVIVING postings: df needs no
     // decode (block counts), cf decodes only the tf varint stream
@@ -308,63 +306,27 @@ object Compaction {
       .groupBy(col("termId"))
       .agg(sum(col("dfb")).as("df"), sum(col("cfb")).as("cf"))
 
-    // phase 2 — rescore block-max EXACTLY under the merged (N, Σdl, df)
-    // — per-FIELD stats for `%field:` terms (their fieldId is re-derived
-    // from the merged dictionary's term strings): dict-sized join
-    // (AQE-broadcast), decode, rescore; payloads pass through untouched
-    val fieldIdExpr = fieldNames.zipWithIndex.foldLeft(lit(0)) { case (acc, (f, i)) =>
-      when(col("term").startsWith(lit(FieldTerms.textTerm(f, ""))), lit(i + 1)).otherwise(acc)
-    }
-    val dfcfF = dfcf.join(gdict.select(col("termId"), fieldIdExpr.as("fieldId")), Seq("termId"))
-    val fNs: Array[Long] = (n +: mergedFieldStats.map(_._3)).toArray
-    val fAds: Array[Double] = (avgdl +: mergedFieldStats.map { case (_, _, nf, sdl) =>
-      if (nf == 0) 0.0 else sdl.toDouble / nf
-    }).toArray
-    val rescored = rewritten
-      .joinWith(dfcfF, rewritten("termId") === dfcfF("termId"))
-      .map { case (blk, dfRow) =>
-        val df = dfRow.getLong(1)
-        val fid0 = dfRow.getInt(3)
-        val fid = if (fid0 >= 0 && fid0 < fNs.length) fid0 else 0
-        val tfs = Codec.decodeVarInts(blk.tfs, blk.count)
-        val dls = Codec.decodeVarInts(blk.dls, blk.count)
-        val idf = Bm25.idf(df, fNs(fid))
-        var mx = Double.NegativeInfinity
-        var i = 0
-        while (i < blk.count) {
-          val sc = Bm25.scoreIdf(idf, tfs(i), dls(i), fAds(fid))
-          if (sc > mx) mx = sc
-          i += 1
-        }
-        blk.copy(maxScore = mx)
-      }
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    rescored.write.partitionBy("bucket", "shard")
-      .mode(SaveMode.Overwrite).parquet(s"$outDir/blocks")
-
-    // finalize: dictionary df/cf/maxScore from the rescored blocks
-    // (exact global upper bounds — a plain Searcher needs no stale-bound
-    // mode); terms with no surviving posting drop out via the inner join
-    val maxs = rescored.groupBy(col("termId"))
-      .agg(max(col("maxScore")).as("maxScore"))
+    // finalize: dictionary df/cf from the surviving blocks; terms with
+    // no surviving posting drop out via the inner join. The vocabulary
+    // rides the write job (no re-read of the written dict).
+    val dictObs = org.apache.spark.sql.Observation()
     gdict
       .join(dfcf, Seq("termId"))
-      .join(maxs, Seq("termId"))
-      .select(col("term"), col("termId"), col("shard"), col("df"), col("cf"), col("maxScore"))
+      .select(col("term"), col("termId"), col("shard"), col("df"), col("cf"))
+      .observe(dictObs, count(lit(1)).as("vocab"))
       .as[TermStats]
       .withColumn("len", graft.index.FieldTerms.bareLenCol(col("term")))
       .write.mode(SaveMode.Overwrite).parquet(s"$outDir/dict")
-    val nVocab = spark.read.parquet(s"$outDir/dict").count()
+    val nVocab = dictObs.get("vocab").asInstanceOf[Long]
 
     // per-bucket metrics for the manifest cells (ADVICE r3: the output
     // segment must carry bucket cells so a later compaction round
     // derives its bucket count correctly)
-    val perBucket = rescored.groupBy(col("bucket"))
+    val perBucket = rewritten.groupBy(col("bucket"))
       .agg(coalesce(sum(col("count")), lit(0L)).as("p"),
         coalesce(sum(length(col("docs")) + length(col("tfs")) + length(col("dls"))
           + length(col("poss"))), lit(0L)).as("y"))
       .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
-    rescored.unpersist(blocking = false)
     rewritten.unpersist(blocking = false)
     mapping.unpersist(blocking = false)
     dictUnion.unpersist(blocking = false)

@@ -8,7 +8,6 @@ import org.apache.spark.sql.functions._
 
 import graft.analysis.Analyzer
 import graft.model._
-import graft.query.Bm25
 
 /** Deterministic cross-side term hash (build writes shard in Scala; the
   * query path computes the same shard for pruning without a Spark job).
@@ -297,7 +296,7 @@ final case class IndexConfig(
       * (`#field:value`, one tf=1 posting per doc — [[FieldTerms]]) so
       * `Searcher.searchBool` can apply ES filter-context / must_not
       * clauses as posting-list intersections. Text-term statistics
-      * (df/cf/maxScore) and corpus stats (N, avgdl) are UNAFFECTED, so
+      * (df/cf) and corpus stats (N, avgdl) are UNAFFECTED, so
       * scores with and without fieldCols are identical. Default off.
       */
     fieldCols: Seq[String] = Nil,
@@ -322,8 +321,7 @@ final case class IndexConfig(
       * term, dl = the FIELD's token count (carried in the posting
       * payload), docCount = docs with ≥1 token in the field, avgdl =
       * Σ field dl / docCount — persisted under `fieldstats/` and used
-      * both by the block encoder (block-max under field stats) and at
-      * query time ([[graft.query.Searcher.searchField]] /
+      * at query time ([[graft.query.Searcher.searchField]] /
       * `multiMatch`). Main-text statistics and scores are UNAFFECTED
       * (the namespaces are disjoint; corpus N/avgdl come from the docs
       * phase alone). Default off.
@@ -369,10 +367,10 @@ final case class BuildReport(
   * Layout under `indexDir`:
   *   docs/                 docId-sorted doc store (meta + text)
   *   stats/                IndexStats singleton
+  *   fieldstats/           per-field (docCount, Σdl) of textFieldCols
   *   dict0/                term → (df, cf, shard)  [pre-finalize dictionary]
   *   blocks/bucket=i/shard=j/   compressed PostingBlocks (Parquet)
-  *   termpartials/bucket=i/     per-bucket term max-score partials
-  *   dict/                 finalized TermStats (df, cf, maxScore)
+  *   dict/                 finalized TermStats (df, cf) + bare-token len
   *   manifest/             one checkpoint file per cell (lineage+metrics)
   *
   * Scale design: buckets are contiguous docId ranges (≙ Lucene segments)
@@ -396,7 +394,7 @@ final case class BuildReport(
   *
   * One build path: each field kind has one posting generator, and the
   * blocks of all buckets are encoded in one phase. The only run-time
-  * choice is how the block pass finds each posting's termId/df/fieldId,
+  * choice is how the block pass finds each posting's termId and df,
   * decided once per build from the vocabulary the dict0 write observed:
   * a broadcast translate map resolved inside the tokenize closure when
   * vocab · [[IndexBuilder.TranslateEntryBytes]] + Σ term bytes fits
@@ -422,7 +420,6 @@ class IndexBuilder(
   def fieldStatsPath = s"$indexDir/fieldstats"
   def dict0Path = s"$indexDir/dict0"
   def blocksPath = s"$indexDir/blocks"
-  def partialsPath = s"$indexDir/termpartials"
   def dictPath = s"$indexDir/dict"
   private def manifestDir = new Path(root, "manifest")
 
@@ -501,7 +498,7 @@ class IndexBuilder(
   /** Runs one field kind's per-doc loop over `src` and feeds each posting
     * it produces to the shared output step ([[PostingSink]]): a string
     * row (term, docId, tf, dl, pay) — or, with a `translate` map, the
-    * resolved row (termId, docId, df, pay, fieldId), looked up inside
+    * resolved row (termId, docId, df, pay), looked up inside
     * this closure so no per-posting term string leaves it and the block
     * pass needs no join. `withPayload = false` skips the packed payload
     * (the dict0 pass only reads term/docId/tf: the payload is built in
@@ -521,7 +518,7 @@ class IndexBuilder(
       case Some(bc) =>
         src.mapPartitions { it =>
           new TranslatedSink(bc.value, withPayload, withPos, accSize).run(it, loop)
-        }.toDF("termId", "docId", "df", "pay", "fieldId")
+        }.toDF("termId", "docId", "df", "pay")
       case None =>
         src.mapPartitions(it => new StringSink(withPayload, withPos, accSize).run(it, loop))
           .toDF("term", "docId", "tf", "dl", "pay")
@@ -721,8 +718,8 @@ class IndexBuilder(
     // Phase A2 — per-field stats of the additional analyzed text fields
     // (docCount = docs with ≥1 token, Σ field dl): ONE narrow agg job
     // over the column-pruned doc store, persisted so query time reads a
-    // handful of rows. The block encoder below scores field postings
-    // under THESE stats (per-field BM25 — Lucene's model).
+    // handful of rows: query time scores field postings under THESE
+    // stats (per-field BM25 — Lucene's model).
     if (cfg.textFieldCols.nonEmpty) phase("fieldstats") {
       val aggs = cfg.textFieldCols.flatMap { f =>
         val d = coalesce(Analyzer.dlCol(col(f).cast("string")), lit(0))
@@ -736,23 +733,6 @@ class IndexBuilder(
         .coalesce(1).write.mode(SaveMode.Overwrite).parquet(fieldStatsPath)
       BuildManifest("fieldstats", -1, 0, n, snapshotId, 0, 0, "done", 0)
     }
-    // encoder stats tables, index 0 = the main text field (corpus stats)
-    val (fieldNs, fieldAvgdls) = {
-      val ns = Array.fill(cfg.textFieldCols.length + 1)(n)
-      val ads = Array.fill(cfg.textFieldCols.length + 1)(avgdl)
-      if (cfg.textFieldCols.nonEmpty) {
-        val byField = spark.read.parquet(fieldStatsPath)
-          .select(col("fieldId"), col("ndocs"), col("sumdl"))
-          .as[(Int, Long, Long)].collect().map(r => r._1 -> (r._2, r._3)).toMap
-        for (i <- 1 to cfg.textFieldCols.length) {
-          val (nf, sdl) = byField.getOrElse(i, (0L, 0L))
-          ns(i) = nf
-          ads(i) = if (nf == 0) 0.0 else sdl.toDouble / nf
-        }
-      }
-      (ns, ads)
-    }
-
     // Phase B — pre-finalize dictionary (global df/cf) via salted merge,
     // plus termId assignment (dictionary encoding). Every later
     // per-posting shuffle/sort/storage carries the 8-byte termId instead
@@ -767,15 +747,6 @@ class IndexBuilder(
     // columnar doc store — caching ~50 rows/turn costs more memory
     // traffic than the one narrow tokenize scan (~1-2 s/M turns) — and
     // this pass re-derives it payload-free.
-    // fieldId of a term (0 = main text / keyword namespaces, i+1 = the
-    // i-th textFieldCol): derived from the term string ONCE here, so the
-    // block shuffle carries a run-constant tiny int instead of re-parsing
-    // strings, and the encoder can score each posting under its field's
-    // stats
-    val fieldIdExpr = cfg.textFieldCols.zipWithIndex.foldLeft(lit(0)) {
-      case (acc, (f, i)) =>
-        when(col("term").startsWith(lit(FieldTerms.textTerm(f, ""))), lit(i + 1)).otherwise(acc)
-    }
     phases(Seq("dict0"), "dict0") {
       val numShards = cfg.numShards
       val obs = org.apache.spark.sql.Observation()
@@ -792,12 +763,10 @@ class IndexBuilder(
         // for any sane shard count.
         .withColumn("termId",
           monotonically_increasing_id() * lit(numShards.toLong) + col("shard"))
-        .withColumn("fieldId", fieldIdExpr)
         // `tidp`: marker that termId is shard-packed (see the block
         // phase's format check)
         .withColumn("tidp", lit(true))
-        .select(col("term"), col("termId"), col("shard"), col("df"), col("cf"),
-          col("fieldId"), col("tidp"))
+        .select(col("term"), col("termId"), col("shard"), col("df"), col("cf"), col("tidp"))
         // Σdf (the block phase's hot-term threshold), the vocabulary and
         // Σ term bytes (the translate gate) ride the write job and the
         // manifest — zero extra jobs, on resume too
@@ -822,17 +791,17 @@ class IndexBuilder(
     val blockSize = cfg.blockSize
     val bucketCells = (0 until cfg.numBuckets).map(b => s"bucket=$b")
     phases(bucketCells, "blocks") {
-      // A dict0 from an older writer (no shard-packed termIds, no
-      // fieldId, or no gate statistics in its cell) cannot feed this
-      // phase: fail before writing anything.
+      // A dict0 from an older writer (no shard-packed termIds or no gate
+      // statistics in its cell) cannot feed this phase: fail before
+      // writing anything.
       val gateStats = for (v <- dict0Cell.get("vocab"); b <- dict0Cell.get("termBytes"))
         yield (v.toLong, b.toLong)
-      if (gateStats.isEmpty || !Seq("tidp", "fieldId").forall(dict0.columns.contains))
+      if (gateStats.isEmpty || !dict0.columns.contains("tidp"))
         throw new IllegalStateException(s"dict0 at $dict0Path was written by an older " +
-          "build format (no shard-packed termIds, fieldId or gate statistics) — rebuild " +
+          "build format (no shard-packed termIds or gate statistics) — rebuild " +
           "without resume")
       val (vocab, termBytes) = gateStats.get
-      // term→(termId, df, fieldId) TRANSLATE map when it fits the heap
+      // term→(termId, df) TRANSLATE map when it fits the heap
       // budget (IndexBuilder.translateFits): the posting generators then
       // resolve ids inside the tokenize closure and the string join
       // disappears from the plan (its probe — UnsafeRow key encode +
@@ -842,10 +811,10 @@ class IndexBuilder(
       val translate: IndexBuilder.Translate =
         if (!IndexBuilder.translateFits(vocab, termBytes, translateBudget)) None
         else {
-          val rows = dict0.select(col("term"), col("termId"), col("df"), col("fieldId"))
-            .as[(String, Long, Long, Int)].collect()
+          val rows = dict0.select(col("term"), col("termId"), col("df"))
+            .as[(String, Long, Long)].collect()
           val m = new java.util.HashMap[String, Array[Long]](rows.length * 2)
-          rows.foreach { case (t, tid, df, fid) => m.put(t, Array(tid, df, fid.toLong)) }
+          rows.foreach { case (t, tid, df) => m.put(t, Array(tid, df)) }
           Some(spark.sparkContext.broadcast(m))
         }
       try {
@@ -853,21 +822,15 @@ class IndexBuilder(
         // the packed payload binary (varint tf + dl + position gaps,
         // built in the tokenize pass). No term string (dict-encoded), no
         // shard (packed into termId, re-derived after the exchange), no
-        // per-posting score (recomputed inside the encoder from the
-        // unpacked tf/dl and df — df is run-constant per term, so it
-        // lz4-compresses to ~nothing in the sorted shuffle, unlike the
-        // high-entropy double it replaces), no fixed-width tf/dl fields
-        // (each ~1 varint byte in the payload vs 8-byte UnsafeRow slots).
-        // fieldId rides the shuffle ONLY when extra text fields exist: a
-        // plain build re-derives the constant 0 after the exchange, so
-        // its shuffle bytes/turn stay exactly the round-4 shape.
-        val hasTextFields = cfg.textFieldCols.nonEmpty
-        val fieldIdCol = if (hasTextFields) Seq(col("fieldId")) else Nil
-        val scored = (translate match {
+        // score (blocks store none), no fixed-width tf/dl fields (each
+        // ~1 varint byte in the payload vs 8-byte UnsafeRow slots). df
+        // only routes hot terms (below); it is run-constant per term, so
+        // it lz4-compresses to ~nothing in the sorted shuffle.
+        val postings = (translate match {
           case Some(_) => allPostingsOf(docs, translate = translate)
           case None => allPostingsOf(docs).join(
-            dict0.select(col("term"), col("termId"), col("df"), col("fieldId")), Seq("term"))
-        }).select(Seq(col("termId"), col("docId"), col("df"), col("pay")) ++ fieldIdCol: _*)
+            dict0.select(col("term"), col("termId"), col("df")), Seq("term"))
+        }).select(col("termId"), col("docId"), col("df"), col("pay"))
         // Partition routing is CLOSED-FORM and df-AWARE — no
         // repartitionByRange sampling pass (which re-executed the whole
         // posting stream):
@@ -919,47 +882,38 @@ class IndexBuilder(
             .otherwise(pmod(hash(col("termId")), lit(partsPerBucket)))
         val nBuckets = cfg.numBuckets // local copy: the closure must not capture `this`
         val bw = bucketWidth
-        val fNs = fieldNs
-        val fAds = fieldAvgdls
         // shard re-attached post-exchange (a Project above the sort — row
         // order within partitions is preserved); encoder tuple order is
-        // (termId, shard, docId, df, pay, fieldId)
-        val shuffled = DirectPartition.byComputedPid(scored, pid, numParts)
+        // (termId, shard, docId, pay)
+        val blocks = DirectPartition.byComputedPid(postings, pid, numParts)
           .sortWithinPartitions(col("termId"), col("docId"))
-          .select(Seq(col("termId"),
+          .select(col("termId"),
             pmod(col("termId"), lit(cfg.numShards.toLong)).cast("int").as("shard"),
-            col("docId"), col("df"), col("pay")) ++ fieldIdCol: _*)
-        val blocks = (if (hasTextFields) shuffled else shuffled.withColumn("fieldId", lit(0)))
-          .as[(Long, Int, Long, Long, Array[Byte], Int)]
-          .mapPartitions(rows => BlockEncoder.encodeFused(rows, blockSize, fNs, fAds,
-            bw, nBuckets))
+            col("docId"), col("pay"))
+          .as[BlockEncoder.Row]
+          .mapPartitions(rows => BlockEncoder.encodeFused(rows, blockSize, bw, nBuckets))
         // ONE pass, no cache: the encoded blocks flow straight into the
         // parquet write, carrying a precomputed per-block byte count
-        // (`nbytes`), and the term partials aggregate from a
-        // COLUMN-PRUNED read of the just-written store (bucket/termId/
-        // maxScore/count/nbytes — a few MB) instead of a persist of the
-        // whole encoded index (guide §5). Readers bind block columns by
-        // name, so the extra column is invisible to them; compaction
-        // re-selects named columns and drops it.
+        // (`nbytes`), and the manifest metrics aggregate from a
+        // COLUMN-PRUNED read of the just-written store (bucket/count/
+        // nbytes) instead of a persist of the whole encoded index
+        // (guide §5). Readers bind block columns by name, so the extra
+        // column is invisible to them; compaction re-selects named
+        // columns and drops it.
         blocks
           .withColumn("nbytes", length(col("docs")) + length(col("tfs"))
             + length(col("dls")) + length(col("poss")))
           .write.partitionBy("bucket", "shard")
           .mode(SaveMode.Overwrite).parquet(blocksPath)
       } finally translate.foreach(_.unpersist(false))
-      spark.read.parquet(blocksPath)
-        .groupBy(col("bucket"), col("termId"))
-        .agg(max(col("maxScore")).as("maxScore"), sum(col("count")).as("dfb"),
-          sum(col("nbytes")).as("bytesb"))
-        .write.partitionBy("bucket").mode(SaveMode.Overwrite).parquet(partialsPath)
-      // per-bucket manifest metrics: one tiny groupBy over the just-
-      // written partials (round-2 review: an Observation with
-      // 2×numBuckets conditional sums is an 8192-expression
+      // per-bucket manifest metrics: one groupBy over the just-written
+      // blocks' count/nbytes columns (round-2 review: an Observation
+      // with 2×numBuckets conditional sums is an 8192-expression
       // CollectMetrics at the sized() bucket cap — evaluated per row)
-      val perBucket = spark.read.parquet(partialsPath)
+      val perBucket = spark.read.parquet(blocksPath)
         .groupBy(col("bucket"))
-        .agg(coalesce(sum(col("dfb")), lit(0L)).as("p"),
-          coalesce(sum(col("bytesb")), lit(0L)).as("y"))
+        .agg(coalesce(sum(col("count")), lit(0L)).as("p"),
+          coalesce(sum(col("nbytes")), lit(0L)).as("y"))
         .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
       for (b <- 0 until cfg.numBuckets) yield {
         val lo = b.toLong * bucketWidth
@@ -969,15 +923,11 @@ class IndexBuilder(
       }
     }
 
-    // Phase D — finalize dictionary: df/cf from dict0, global max score
-    // from the per-bucket block partials.
+    // Phase D — finalize dictionary: dict0's TermStats columns.
     phase("finalize") {
       val obs = org.apache.spark.sql.Observation()
-      val maxs = spark.read.parquet(partialsPath)
-        .groupBy(col("termId")).agg(max(col("maxScore")).as("maxScore"))
       val dict = dict0
-        .join(maxs, Seq("termId"))
-        .select(col("term"), col("termId"), col("shard"), col("df"), col("cf"), col("maxScore"))
+        .select(col("term"), col("termId"), col("shard"), col("df"), col("cf"))
         .observe(obs, count(lit(1)).as("vocab"))
         .as[TermStats]
       // `len` (bare-token length) rides along for edit-distance scan
@@ -1012,7 +962,7 @@ class IndexBuilder(
 }
 
 object IndexBuilder {
-  /** Broadcast dict0 translate map: term → [termId, df, fieldId]
+  /** Broadcast dict0 translate map: term → [termId, df]
     * (see [[translateFits]]). None = use the join path.
     */
   type Translate =
@@ -1032,10 +982,11 @@ object IndexBuilder {
   }
 
   /** Heap bytes per translate-map entry besides its term's bytes:
-    * `HashMap.Node` + `String` + `byte[]` header + the `long[3]` value +
+    * `HashMap.Node` + `String` + `byte[]` header + the `long[2]` value +
     * its table slot. Measured once on JDK 17 (compressed oops, compact
     * strings) as the heap delta of maps with 10^5, 10^6 and 3·10^6
-    * entries: 122–125 B/entry.
+    * entries when the value was a `long[3]`: 122–125 B/entry; the
+    * `long[2]` value is 8 B smaller, so 128 B stays an upper bound.
     */
   val TranslateEntryBytes = 128L
 
@@ -1167,36 +1118,30 @@ private[index] final class StringSink(withPayload: Boolean, withPos: Boolean, ac
     (term, docId, tf, dl, pay)
 }
 
-/** Resolved rows (termId, docId, df, pay, fieldId) through the broadcast
+/** Resolved rows (termId, docId, df, pay) through the broadcast
   * translate map ([[IndexBuilder.resolved]]).
   */
 private[index] final class TranslatedSink(m: java.util.HashMap[String, Array[Long]],
     withPayload: Boolean, withPos: Boolean, accSize: Int)
-    extends PostingSink[(Long, Long, Long, Array[Byte], Int)](withPayload, withPos, accSize) {
+    extends PostingSink[(Long, Long, Long, Array[Byte])](withPayload, withPos, accSize) {
   protected def row(term: String, docId: Long, tf: Int, dl: Int, pay: Array[Byte]) = {
     val r = IndexBuilder.resolved(m, term)
-    (r(0), docId, r(1), pay, r(2).toInt)
+    (r(0), docId, r(1), pay)
   }
 }
 
 /** Streaming run-grouping block encoder: consumes (termId, shard, docId,
-  * df, pay) rows sorted by (termId, docId) and emits compressed blocks,
+  * pay) rows sorted by (termId, docId) and emits compressed blocks,
   * holding at most `blockSize` postings in memory at a time. `pay` is
   * the tokenize pass's packed payload (varint tf + dl + position gaps,
-  * PosAcc.payload) — unpacked here, after the shuffle. Per-posting BM25
-  * scores (for the exact block-max metadata) are computed HERE too, from
-  * the unpacked (tf, dl) and (df, n, avgdl) — the high-entropy score
-  * double never rides the shuffle.
+  * PosAcc.payload) — unpacked here, after the shuffle. Nothing is
+  * scored: blocks store tf and dl, and queries score them under the
+  * current stats.
   */
 object BlockEncoder {
 
-  /** One shuffled posting row: (termId, shard, docId, df, pay,
-    * fieldId). fieldId (run-constant per term — lz4s to ~nothing in the
-    * sorted shuffle) selects which (n, avgdl) pair scores the posting:
-    * index 0 = the main text / corpus stats, i ≥ 1 = the i-th
-    * additional analyzed text field's own stats (per-field BM25).
-    */
-  type Row = (Long, Int, Long, Long, Array[Byte], Int)
+  /** One shuffled posting row: (termId, shard, docId, pay). */
+  type Row = (Long, Int, Long, Array[Byte])
 
   /** Fused-mode encoder: rows sorted by (termId, docId). The bucket is
     * NOT carried in the rows — it is re-derived from docId (buckets are
@@ -1207,8 +1152,6 @@ object BlockEncoder {
   def encodeFused(
       rows: Iterator[Row],
       blockSize: Int,
-      fieldNs: Array[Long],
-      fieldAvgdls: Array[Double],
       bucketWidth: Long,
       numBuckets: Int
   ): Iterator[PostingBlock] = {
@@ -1223,7 +1166,7 @@ object BlockEncoder {
         val run = new scala.collection.mutable.ArrayBuffer[Row]()
         while (it.hasNext && it.head._1 == termId && bucketOf(it.head._3) == bucket)
           run += it.next()
-        encode(run.iterator, bucket, blockSize, fieldNs, fieldAvgdls)
+        encode(run.iterator, bucket, blockSize)
       }
     }
     grouped.flatten
@@ -1232,9 +1175,7 @@ object BlockEncoder {
   def encode(
       rows: Iterator[Row],
       bucket: Int,
-      blockSize: Int,
-      fieldNs: Array[Long],
-      fieldAvgdls: Array[Double]
+      blockSize: Int
   ): Iterator[PostingBlock] = new Iterator[PostingBlock] {
     private val it = rows.buffered
     private var out: Iterator[PostingBlock] = Iterator.empty
@@ -1246,23 +1187,20 @@ object BlockEncoder {
         val ids = new scala.collection.mutable.ArrayBuffer[Long](blockSize)
         val tfs = new scala.collection.mutable.ArrayBuffer[Int](blockSize)
         val dls = new scala.collection.mutable.ArrayBuffer[Int](blockSize)
-        val scs = new scala.collection.mutable.ArrayBuffer[Double](blockSize)
         val pss = new scala.collection.mutable.ArrayBuffer[Array[Byte]](blockSize)
         val acc = new scala.collection.mutable.ArrayBuffer[PostingBlock]()
         var blockId = 0
         def flush(): Unit = if (ids.nonEmpty) {
           acc ++= Codec.encodeBlocks(termId, shard, bucket,
-            ids.toArray, tfs.toArray, dls.toArray, scs.toArray, pss.toArray, blockSize)
+            ids.toArray, tfs.toArray, dls.toArray, pss.toArray, blockSize)
             .map(_.copy(blockId = blockId))
           blockId += 1
-          ids.clear(); tfs.clear(); dls.clear(); scs.clear(); pss.clear()
+          ids.clear(); tfs.clear(); dls.clear(); pss.clear()
         }
         while (it.hasNext && it.head._1 == termId) {
           val r = it.next()
-          val (tf, dl, pos) = Codec.unpackPayload(r._5)
-          val fid = if (r._6 >= 0 && r._6 < fieldNs.length) r._6 else 0
+          val (tf, dl, pos) = Codec.unpackPayload(r._4)
           ids += r._3; tfs += tf; dls += dl; pss += pos
-          scs += Bm25.score(tf, r._4, dl, fieldNs(fid), fieldAvgdls(fid))
           if (ids.length == blockSize) flush()
         }
         flush()

@@ -53,10 +53,10 @@ final case class Posting(term: String, docId: Long, tf: Int, dl: Int, pos: Array
   * `poss` is the concatenated per-posting position stream (posting i has
   * tfs[i] positions, delta+varint — Lucene-style positional postings for
   * phrase queries; empty when the index is built with
-  * storePositions = false). `maxTf` / `maxScore` are the block's largest
-  * tf and exact BM25 block-max under the segment's build-time stats;
-  * they stay in the format, but query pruning re-derives each block's
-  * bound from its decoded scores (`Wand.PostingList.decoded`).
+  * storePositions = false). No score is stored: a BM25 score moves with
+  * N, avgdl and df, so query pruning bounds each block by the maximum of
+  * its decoded scores under the current stats
+  * (`Wand.PostingList.decoded`).
   */
 final case class PostingBlock(
     termId: Long,
@@ -69,17 +69,15 @@ final case class PostingBlock(
     docs: Array[Byte],
     tfs: Array[Byte],
     dls: Array[Byte],
-    poss: Array[Byte],
-    maxTf: Int,
-    maxScore: Double
+    poss: Array[Byte]
 )
 
 /** Per-term dictionary row (≙ ES/Lucene term dictionary). `termId` is
-  * the dense dictionary-encoded id blocks are keyed by; `maxScore` is
-  * the term's score upper bound under the build-time stats (stored, not
-  * read by query pruning: a list's bound is the max of its blocks').
+  * the dense dictionary-encoded id blocks are keyed by. Like the blocks,
+  * it stores no score bound (a list's bound is the max of its decoded
+  * blocks').
   */
-final case class TermStats(term: String, termId: Long, shard: Int, df: Long, cf: Long, maxScore: Double)
+final case class TermStats(term: String, termId: Long, shard: Int, df: Long, cf: Long)
 
 /** Singleton corpus stats (BM25 norm inputs). */
 final case class IndexStats(n: Long, avgdl: Double, sourceSnapshotId: String)

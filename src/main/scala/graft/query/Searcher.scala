@@ -369,11 +369,11 @@ private[query] object Searcher {
 
   /** The canonical PostingBlock columns, bound by name at every block
     * read (segments built by different writer revisions may carry extra
-    * build-internal columns, e.g. the round-9 `nbytes` partials feed, and
-    * cross-segment unionByName requires a stable schema).
+    * columns, e.g. the build's `nbytes` or an older writer's stored
+    * bounds, and cross-segment unionByName requires a stable schema).
     */
   val BlockCols: Seq[String] = Seq("termId", "shard", "bucket", "blockId", "firstDocId",
-    "lastDocId", "count", "docs", "tfs", "dls", "poss", "maxTf", "maxScore")
+    "lastDocId", "count", "docs", "tfs", "dls", "poss")
 
   /** Sentinel termId of tombstone-exclusion blocks in a unioned block
     * scan (real termIds are non-negative).
@@ -635,11 +635,10 @@ private[query] final case class ResolvedQuery(
   *
   * Bounds: both paths decode a term's blocks once into one
   * [[Searcher.postingList]] scored under the merged stats, and bound each
-  * block by the exact maximum of its scores — valid under any stats, and
-  * bitwise the stored per-block maxScore when one segment without
-  * tombstones is served (the stored bounds themselves are never read).
-  * Exact per-posting scores from the stored (tf, dl) streams keep
-  * results rank-identical to an exhaustive oracle.
+  * block by the exact maximum of its scores — valid under any stats (the
+  * index stores no score, only tf and dl). Exact per-posting scores from
+  * the stored (tf, dl) streams keep results rank-identical to an
+  * exhaustive oracle.
   */
 class Searcher private[query] (
     spark: SparkSession,
@@ -838,8 +837,8 @@ class Searcher private[query] (
 
   /** One segment, no tombstones: only then are the segment's build-time
     * stats the global stats, and [[avgdl]] is the segment's stored avgdl
-    * (the one its build scored under), not Σdl / N recomputed. That is
-    * all it decides: query bounds always come from the decoded scores.
+    * (what its docs phase computed), not Σdl / N recomputed. That is all
+    * it decides: query bounds always come from the decoded scores.
     */
   private[query] lazy val storedBounds: Boolean = segments.size == 1 && !hasTombstones
 
@@ -912,7 +911,7 @@ class Searcher private[query] (
               val arr = ids.toArray
               val k = arr.length
               val blk = Codec.encodeBlocks(Searcher.TombTermId, 0, bucket, arr,
-                Array.fill(k)(1), Array.fill(k)(0), Array.fill(k)(0.0),
+                Array.fill(k)(1), Array.fill(k)(0),
                 Array.fill(k)(Array.emptyByteArray), tbs).next()
               (seg, bucket, blk)
             }
@@ -1060,7 +1059,7 @@ class Searcher private[query] (
         val unioned = segDicts.zipWithIndex.map { case (d, i) =>
           d.filter(termPred)
             .select(lit(i).as("seg"), col("term"), col("termId"), col("shard"),
-              col("df"), col("cf"), col("maxScore"))
+              col("df"), col("cf"))
         }.reduce(_ unionByName _)
         val joinFrame = removedDfDF.filter(_ => removedDfSmall.isEmpty)
         val withRm = joinFrame match {
@@ -1068,17 +1067,16 @@ class Searcher private[query] (
             unioned.join(broadcast(frame.filter(col("term").isin(terms: _*))),
               Seq("term"), "left")
               .select(col("seg"), col("term"), col("termId"), col("shard"),
-                col("df"), col("cf"), col("maxScore"),
-                coalesce(col("removed"), lit(0L)).as("removed"))
+                col("df"), col("cf"), coalesce(col("removed"), lit(0L)).as("removed"))
           case None => unioned.withColumn("removed", lit(0L))
         }
         val rows = withRm
-          .as[(Int, String, Long, Int, Long, Long, Double, Long)].collect()
+          .as[(Int, String, Long, Int, Long, Long, Long)].collect()
         if (joinFrame.isDefined)
-          dfRemoved = rows.iterator.filter(_._8 > 0L).map(r => r._2 -> r._8).toMap
+          dfRemoved = rows.iterator.filter(_._7 > 0L).map(r => r._2 -> r._7).toMap
         else dfRemoved = removedDfFor(terms)
-        rows.map { case (i, t, tid, sh, df, cf, ms, _) =>
-          (i, t) -> TermStats(t, tid, sh, df, cf, ms)
+        rows.map { case (i, t, tid, sh, df, cf, _) =>
+          (i, t) -> TermStats(t, tid, sh, df, cf)
         }.toMap
       }
     val dfGlobal = perSeg.toSeq.groupBy(_._1._2)

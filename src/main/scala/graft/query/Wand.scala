@@ -95,9 +95,8 @@ object Wand {
       * scored once under (idf, avgdl) — each score the exact unboosted
       * `Bm25.scoreIdf(idf, tf, dl, avgdl)` — position offsets included, so
       * a cursor over it decodes and rescores nothing. Each block's bound
-      * is the maximum of its scores: exact under any stats (under a
-      * single segment's own stats it is bitwise the block's stored
-      * maxScore).
+      * is the maximum of its scores: exact under any stats (the index
+      * stores no score bound).
       */
     def decoded(bs: Array[PostingBlock], idf: Double, avgdl: Double): PostingList = {
       val starts = new Array[Int](bs.length + 1)

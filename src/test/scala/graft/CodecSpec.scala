@@ -37,25 +37,23 @@ class CodecSpec extends AnyFunSuite {
     }
     val ids = Array.tabulate(300)(i => i.toLong * 7 + 3)
     val dls = Array.tabulate(300)(i => 10 + (i % 50))
-    val scores = Array.tabulate(300)(i => (i % 13) * 0.37)
-    val blocks = Codec.encodeBlocks(7L, 1, 0, ids, tfs, dls, scores,
+    val blocks = Codec.encodeBlocks(7L, 1, 0, ids, tfs, dls,
       poss.map(Codec.encodePositions), 128).toArray
     val decoded = blocks.flatMap { b =>
       Codec.decodePositions(b, Codec.decodeVarInts(b.tfs, b.count)).map(_.toSeq)
     }
     assert(decoded.toSeq == poss.map(_.toSeq).toSeq)
     // empty position streams (storePositions = false) decode to null
-    val bare = Codec.encodeBlocks(7L, 1, 0, ids, tfs, dls, scores,
+    val bare = Codec.encodeBlocks(7L, 1, 0, ids, tfs, dls,
       Array.fill(300)(Array.empty[Byte]), 128).toArray
     assert(Codec.decodePositions(bare(0), Codec.decodeVarInts(bare(0).tfs, bare(0).count)) == null)
   }
 
-  test("block encode/decode round-trips and computes maxes") {
+  test("block encode/decode round-trips and compresses docId deltas") {
     val ids = Array.tabulate(300)(i => i.toLong * 7 + 3)
     val tfs = Array.tabulate(300)(i => 1 + (i % 9))
     val dls = Array.tabulate(300)(i => 10 + (i % 50))
-    val scores = Array.tabulate(300)(i => (i % 13) * 0.37)
-    val blocks = Codec.encodeBlocks(7L, 1, 0, ids, tfs, dls, scores,
+    val blocks = Codec.encodeBlocks(7L, 1, 0, ids, tfs, dls,
       Array.fill(300)(Array.empty[Byte]), 128).toArray
     assert(blocks.length == 3)
     assert(blocks.map(_.count).sum == 300)
@@ -65,8 +63,6 @@ class CodecSpec extends AnyFunSuite {
       d.docIds.zip(d.tfs).zip(d.dls).map { case ((a, t), l) => (a, t, l) }
     }
     assert(decoded.toSeq == ids.zip(tfs).zip(dls).map { case ((a, t), l) => (a, t, l) }.toSeq)
-    assert(blocks(0).maxTf == tfs.take(128).max)
-    assert(blocks(0).maxScore == scores.take(128).max)
     // compression sanity: small deltas ≈ 1 byte each
     assert(blocks(0).docs.length < 2 * 128)
   }

@@ -3,9 +3,10 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.corpus.Transcripts
-import graft.index.{DocIds, IndexBuilder, IndexConfig}
+import graft.index.{Compaction, DocIds, IndexBuilder, IndexConfig, SegmentCatalog}
 import graft.model.Scored
 import graft.query.{Expansion, Oracle, Searcher}
+import graft.streaming.StreamingIngest
 
 /** Golden end-to-end: the full engine (docIds → salted build → compressed
   * blocks → block-max WAND) must be rank-identical — docIDs AND BM25
@@ -458,7 +459,7 @@ class EngineSpec extends SparkSpec {
 
   test("blocks-phase translate map ≡ join path: stores content-identical (round-9)") {
     // one corpus, two builds per positions setting: default (vocab under
-    // the gate ⇒ broadcast translate map resolves termId/df/fieldId
+    // the gate ⇒ broadcast translate map resolves termId/df
     // inside the tokenize closure) vs a 0-byte translate budget (the
     // string join, also the over-gate fallback at 10^12-scale
     // vocabularies). Every posting generator is exercised: main text +
@@ -469,13 +470,13 @@ class EngineSpec extends SparkSpec {
     val turns = DocIds.dedup(Transcripts.generate(spark, 150L))
     val docs = DocIds.assign(turns, 4)
     def dictRows(d: String) = spark.read.parquet(s"$d/dict")
-      .select("term", "termId", "shard", "df", "cf", "maxScore")
-      .as[(String, Long, Int, Long, Long, Double)].collect().sortBy(_._1).toSeq
+      .select("term", "termId", "shard", "df", "cf")
+      .as[(String, Long, Int, Long, Long)].collect().sortBy(_._1).toSeq
     def blockRows(d: String) = spark.read.parquet(s"$d/blocks")
       .as[graft.model.PostingBlock].collect()
       .sortBy(b => (b.termId, b.bucket, b.blockId))
       .map(b => (b.termId, b.shard, b.bucket, b.blockId, b.firstDocId, b.lastDocId,
-        b.count, b.docs.toSeq, b.tfs.toSeq, b.dls.toSeq, b.poss.toSeq, b.maxTf, b.maxScore))
+        b.count, b.docs.toSeq, b.tfs.toSeq, b.dls.toSeq, b.poss.toSeq))
       .toSeq
     for (withPos <- Seq(true, false)) {
       val base = IndexConfig(numBuckets = 2, numShards = 8, blockSize = 32, partitions = 4,
@@ -661,6 +662,43 @@ class EngineSpec extends SparkSpec {
       case Seq(a, b) => assert(a.docIdHi == b.docIdLo)
       case _ =>
     }
+    // every bucket cell's metrics are its blocks' sums, and together they
+    // count the corpus postings the dict0 cell recorded
+    assertCellsMatchBlocks(indexDir)
+    assert(buckets.map(_.postingsEmitted).sum ==
+      ms.find(_.cell == "dict0").get.postingsEmitted)
+    // one compacted segment carries the same cells and schemas
+    // (`maybeCompact`'s size-tiered selection reads bytesCompressed)
+    val idx = s"${TestSpark.tmpRoot}/manifest-compacted"
+    val small = IndexConfig(numBuckets = 2, partitions = 4)
+    val all = Transcripts.generate(spark, 40L)
+    StreamingIngest.appendSegment(spark, all.filter($"conv_id" < "conv-00000020"), idx, 0L, small)
+    StreamingIngest.appendSegment(spark, all.filter($"conv_id" >= "conv-00000020"), idx, 1L, small)
+    Compaction.compactInPlace(spark, idx)
+    val live = SegmentCatalog.liveSegments(spark, idx)
+    assert(live.size == 1)
+    assertCellsMatchBlocks(live.head)
+  }
+
+  /** `dir`'s bucket cells hold the per-bucket Σ count and Σ payload bytes
+    * of its blocks; neither the blocks nor the dict store a score bound,
+    * and no term-partials dir exists.
+    */
+  private def assertCellsMatchBlocks(dir: String): Unit = {
+    val blocks = spark.read.parquet(s"$dir/blocks")
+    val fromBlocks = blocks.groupBy("bucket")
+      .agg(sum("count"), sum(length($"docs") + length($"tfs") + length($"dls") + length($"poss")))
+      .as[(Int, Long, Long)].collect().map(r => r._1 -> (r._2, r._3)).toMap
+    val cells = new IndexBuilder(spark, dir, "", IndexConfig()).allManifests
+      .filter(_.cell.startsWith("bucket="))
+    assert(cells.nonEmpty, dir)
+    for (m <- cells)
+      assert((m.postingsEmitted, m.bytesCompressed) == fromBlocks.getOrElse(m.bucket, (0L, 0L)),
+        s"$dir ${m.cell}")
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/termpartials")), dir)
+    for (cols <- Seq(blocks.columns, spark.read.parquet(s"$dir/dict").columns))
+      assert(!cols.exists(Set("maxTf", "maxScore")), s"$dir: ${cols.mkString(",")}")
   }
 
   test("compression is effective (< 6 B/posting with positions, < 4 without)") {

@@ -830,6 +830,56 @@ class StreamingSpec extends SparkSpec {
     assert(multi.search("w0x0 w0x1", 2).nonEmpty)
   }
 
+  test("a dir whose older segment stores score bounds still serves and compacts") {
+    // a segment from a writer that stored score bounds: its dict has a
+    // `maxScore` column and its blocks `maxTf` / `maxScore`; newer
+    // segments have neither. Readers bind columns by name, so hits stay
+    // the same, and compaction must not union whole dict rows.
+    val idx = s"${TestSpark.tmpRoot}/stream-idx-mixed-writer"
+    val cfg = IndexConfig(numBuckets = 2, partitions = 4, fieldCols = Seq("role"))
+    val all = Transcripts.generate(spark, 40L).cache()
+    StreamingIngest.appendSegment(spark, all.filter($"conv_id" < "conv-00000020"), idx, 0L, cfg)
+    StreamingIngest.appendSegment(spark, all.filter($"conv_id" >= "conv-00000020"), idx, 1L, cfg)
+    def hits(warm: Boolean): Seq[Seq[graft.model.Scored]] = {
+      val m = new graft.query.MultiSearcher(spark, idx)
+      if (warm) m.warm()
+      Seq("the", "zanzibar quasar lattice", "one have t999").map(m.search(_, 10).toSeq) ++ Seq(
+        m.searchPhrase("zanzibar quasar", 10).toSeq,
+        m.searchBool("the", 10, filters = Seq("role" -> "user")).toSeq)
+    }
+    val before = hits(warm = false)
+    assert(before.head.nonEmpty)
+    assert(hits(warm = true) == before)
+
+    val fs = new org.apache.hadoop.fs.Path(idx).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def replace(dir: String, write: String => Unit): Unit = {
+      val tmp = s"$dir.rewrite"
+      write(tmp)
+      fs.delete(new org.apache.hadoop.fs.Path(dir), true)
+      assert(fs.rename(new org.apache.hadoop.fs.Path(tmp), new org.apache.hadoop.fs.Path(dir)))
+    }
+    val seg = s"$idx/seg-0"
+    val oldDict = spark.read.parquet(s"$seg/dict")
+      .select($"term", $"termId", $"shard", $"df", $"cf", ($"df" * 0.5).as("maxScore"), $"len")
+    replace(s"$seg/dict", oldDict.write.parquet(_))
+    val oldBlocks = spark.read.parquet(s"$seg/blocks")
+      .select($"termId", $"shard", $"bucket", $"blockId", $"firstDocId", $"lastDocId", $"count",
+        $"docs", $"tfs", $"dls", $"poss", $"count".as("maxTf"),
+        ($"count" * 0.25).cast("double").as("maxScore"), $"nbytes")
+    replace(s"$seg/blocks", oldBlocks.write.partitionBy("bucket", "shard").parquet(_))
+    assert(spark.read.parquet(s"$seg/dict").columns.contains("maxScore"))
+    assert(Set("maxTf", "maxScore").subsetOf(spark.read.parquet(s"$seg/blocks").columns.toSet))
+    assert(!spark.read.parquet(s"$idx/seg-1/dict").columns.contains("maxScore"))
+
+    assert(hits(warm = false) == before)
+    assert(hits(warm = true) == before)
+    graft.index.Compaction.compactInPlace(spark, idx)
+    assert(graft.index.SegmentCatalog.liveSegments(spark, idx).size == 1)
+    assert(hits(warm = false) == before)
+    assert(hits(warm = true) == before)
+    all.unpersist(blocking = false)
+  }
+
   test("windowed streaming agg over the turn stream (memory sink)") {
     val src = s"${TestSpark.tmpRoot}/stream-agg-src"
     Transcripts.generate(spark, 40L).write.parquet(src)

@@ -81,7 +81,7 @@ class WandSpec extends AnyFunSuite {
         Codec.encodePositions(corpus(d).indices.filter(i => corpus(d)(i) == t).toArray)
       }.toArray
       val blocks: Array[PostingBlock] =
-        Codec.encodeBlocks(tid.toLong, GraftHash.shardOf(t, 8), 0, ids, tf, ds, scores,
+        Codec.encodeBlocks(tid.toLong, GraftHash.shardOf(t, 8), 0, ids, tf, ds,
           poss, blockSize).toArray
       val ub = if (scores.isEmpty) 0.0 else scores.max
       compressedIter(t, blocks, ub, df(t), n, avgdl, groupOrdinal = groupOrdinal)
@@ -408,7 +408,7 @@ class WandSpec extends AnyFunSuite {
     val ids = docIds.map(_.toLong).toArray
     val ones = Array.fill(docIds.length)(1)
     val blocks = Codec.encodeBlocks(9999L, 0, 0, ids, ones, ones,
-      Array.fill(docIds.length)(0.0), ids.map(_ => Array.emptyByteArray), blockSize).toArray
+      ids.map(_ => Array.emptyByteArray), blockSize).toArray
     compressedIter(name, blocks, 0.0, docIds.length.toLong, n, avgdl)
   }
 
@@ -737,28 +737,24 @@ class WandSpec extends AnyFunSuite {
     /** One list as blocks of MIXED sizes: runs over disjoint docId ranges
       * encoded with different block sizes, so a short block follows a
       * long one and runs end in partial blocks. Every other list comes
-      * unsorted. `stale` stores block maxima scored under other stats
-      * (avgdl · 3), as a segment's blocks carry once the merged stats
-      * move: the cursor must not read them.
+      * unsorted.
       */
     final class Ref(val blocks: Array[PostingBlock], val ids: Array[Long], val tfs: Array[Int],
         val dls: Array[Int], val poss: Array[Array[Int]], val blk: Array[PostingBlock])
-    def listOf(shuffle: Boolean, stale: Boolean): Ref = {
+    def listOf(shuffle: Boolean): Ref = {
       val nPost = 1 + r.nextInt(300)
       var d = r.nextInt(5).toLong
       val ids = Array.fill(nPost) { val x = d; d += 1 + r.nextInt(12); x }
       val tfs = Array.fill(nPost)(1 + r.nextInt(5))
       val dls = tfs.map(tf => tf + r.nextInt(40))
       val pos = tfs.map(tf => r.shuffle((0 until 60).toList).take(tf).sorted.toArray)
-      val storedAvgdl = if (stale) 3 * avgdl else avgdl
-      val scores = Array.tabulate(nPost)(i => Bm25.score(tfs(i), nPost, dls(i), n, storedAvgdl))
       val bs = scala.collection.mutable.ArrayBuffer[PostingBlock]()
       var lo = 0
       while (lo < nPost) {
         val hi = math.min(nPost, lo + 1 + r.nextInt(80))
         val sl = (lo until hi)
         bs ++= Codec.encodeBlocks(1L, 0, 0, sl.map(ids).toArray, sl.map(tfs).toArray,
-          sl.map(dls).toArray, sl.map(scores).toArray,
+          sl.map(dls).toArray,
           sl.map(i => Codec.encodePositions(pos(i))).toArray, Seq(1, 3, 8, 16, 128)(r.nextInt(5)))
         lo = hi
       }
@@ -772,8 +768,7 @@ class WandSpec extends AnyFunSuite {
     }
 
     for (c <- 1 to 80) {
-      val stale = c % 4 == 0
-      val refs = Array(listOf(shuffle = c % 2 == 0, stale), listOf(shuffle = c % 3 == 0, stale))
+      val refs = Array(listOf(shuffle = c % 2 == 0), listOf(shuffle = c % 3 == 0))
       val boost = if (c % 3 == 0) 1.7 else 1.0
       val its = refs.map(ref =>
         compressedIter("t", ref.blocks, 0.0, ref.ids.length.toLong, n, avgdl, boost = boost))
@@ -788,8 +783,7 @@ class WandSpec extends AnyFunSuite {
             java.lang.Double.doubleToRawLongBits(
               boost * Bm25.score(ref.tfs(i), df, ref.dls(i), n, avgdl)), what)
           val b = ref.blk(i)
-          // the exact in-block maximum under the cursor's stats, whatever
-          // the block stored
+          // the exact in-block maximum under the cursor's stats
           val inBlock = ref.ids.indices.filter(ref.blk(_) eq b)
             .map(p => Bm25.score(ref.tfs(p), df, ref.dls(p), n, avgdl)).max
           assert(java.lang.Double.doubleToRawLongBits(it.blockMax) ==
@@ -846,8 +840,7 @@ class WandSpec extends AnyFunSuite {
       val tfs0 = Array.fill(nPost)(1 + r.nextInt(4))
       val dls0 = tfs0.map(tf => tf + r.nextInt(40))
       val pos0 = tfs0.map(tf => r.shuffle((0 until 50).toList).take(tf).sorted.toArray)
-      val scores0 = Array.tabulate(nPost)(i => Bm25.score(tfs0(i), nPost, dls0(i), n, avgdl))
-      val blocks = Codec.encodeBlocks(1L, 0, 0, ids0, tfs0, dls0, scores0,
+      val blocks = Codec.encodeBlocks(1L, 0, 0, ids0, tfs0, dls0,
         pos0.map(Codec.encodePositions), bs).toArray
       // the reference: every block decoded afresh, scored with Bm25.score
       val decs = blocks.map(Codec.decodeBlock)
@@ -864,9 +857,7 @@ class WandSpec extends AnyFunSuite {
           assert(bits(it.score) == bits(boost * scores(i)), what)
           val b = blk(i)
           val inBlock = scores.indices.filter(blk(_) eq b).map(scores)
-          // the bound is the exact in-block maximum, which under the
-          // blocks' own stats is bitwise their stored maxScore
-          assert(bits(inBlock.max) == bits(b.maxScore), what)
+          // the bound is the exact in-block maximum
           assert(bits(it.blockMax) == bits(boost * inBlock.max), what)
           assert(it.blockLast == b.lastDocId, what)
           val np = it.positions()
