@@ -1,8 +1,9 @@
 package graft.index
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 import graft.analysis.Analyzer
 import graft.model.{Doc, Turn}
@@ -10,18 +11,26 @@ import graft.model.{Doc, Turn}
 /** Dense, gap-free docId assignment in stable `(conv_id, turn_idx)` order
   * — the engine's record identity (≙ reference `_id = path`,
   * BulkIndexer.java:48) without the 1-task global `row_number()`
-  * bottleneck (SURVEY.md §7.5 decision 1): range-repartition on the key,
-  * sort within partitions, count per partition, broadcast the cumulative
-  * offsets, then a second pass numbers rows per partition. Two jobs over
-  * a cached Dataset instead of one global sort on a single task — the
-  * shape that survives 1000 executors.
+  * bottleneck (SURVEY.md §7.5 decision 1).
+  *
+  * One numbering routine ([[number]]) serves every entry point:
+  * range-repartition on the key, sort within partitions, count per
+  * partition, broadcast the cumulative offsets, then a second pass
+  * numbers rows per partition. Two jobs over a cached frame instead of
+  * one global sort on a single task — the shape that survives 1000
+  * executors. With last-write-wins on, the same partition sort puts each
+  * key's winner first and both passes drop the rest, so dedup rides the
+  * one shuffle. The typed entry points ([[dedupAndAssign]], [[assign]])
+  * and the fielded one ([[dedupAndAssignFrame]]) differ only in their
+  * input and whether LWW applies.
   */
 object DocIds {
 
   /** Deterministic last-write-wins dedup on the doc key (≙ reference
     * duplicate-path semantics, CsvReader.java:361-376 + upsert-by-id):
     * keep the row with the greatest `ts` (ties: greatest text — pinned,
-    * arbitrary but deterministic).
+    * arbitrary but deterministic). The window form is the reference the
+    * fused path is tested against.
     */
   def dedup(turns: Dataset[Turn]): Dataset[Turn] = {
     import turns.sparkSession.implicits._
@@ -37,144 +46,69 @@ object DocIds {
       .as[Turn]
   }
 
-  /** Fused dedup + docId assignment: ONE range shuffle on the doc key
-    * does everything — range partitioning puts all copies of a key in
-    * one partition, the partition sort puts the winner (ts desc, text
-    * desc) first, a per-partition scan drops the rest and numbers the
-    * survivors against broadcast offsets. This is the build hot path;
-    * `dedup`+`assign` remain as the composable pieces. docIds start at
-    * `base` (a streaming segment's first free docId). The result is
-    * persisted (MEMORY_AND_DISK); the caller unpersists it.
+  /** Fused [[dedup]] + docId assignment in ONE range shuffle on the doc
+    * key — the build and streaming hot path. docIds start at `base` (a
+    * streaming segment's first free docId). The result is persisted
+    * (MEMORY_AND_DISK); the caller unpersists it.
     */
   def dedupAndAssign(turns: Dataset[Turn], partitions: Int, base: Long = 0L): Dataset[Doc] = {
-    val spark: SparkSession = turns.sparkSession
-    import spark.implicits._
-    val sorted = turns
-      .repartitionByRange(partitions, col("conv_id"), col("turn_idx"))
-      .sortWithinPartitions(col("conv_id"), col("turn_idx"), col("ts").desc, col("text").desc)
-      .cache()
-    def winners(it: Iterator[Turn]): Iterator[Turn] = new Iterator[Turn] {
-      private val in = it.buffered
-      private var last: (String, Int) = null
-      private def skipDupes(): Unit =
-        while (in.hasNext && last != null &&
-          in.head.conv_id == last._1 && in.head.turn_idx == last._2) in.next()
-      override def hasNext: Boolean = { skipDupes(); in.hasNext }
-      override def next(): Turn = {
-        skipDupes()
-        val t = in.next()
-        last = (t.conv_id, t.turn_idx)
-        t
-      }
-    }
-    val counts: Map[Int, Long] = sorted
-      .mapPartitions(it => Iterator((TaskContext.getPartitionId(), winners(it).size.toLong)))
-      .collect().toMap
-    val offsets: Map[Int, Long] = {
-      var acc = base
-      (0 until partitions).map { pid =>
-        val o = pid -> acc
-        acc += counts.getOrElse(pid, 0L)
-        o
-      }.toMap
-    }
-    val bc = spark.sparkContext.broadcast(offsets)
-    val docs = sorted.mapPartitions { it =>
-      var id = bc.value(TaskContext.getPartitionId())
-      winners(it).map { t =>
-        val d = Doc(id, t.conv_id, t.turn_idx, t.role, t.text, t.tool, t.ts,
-          Analyzer.tokenize(t.text).length)
-        id += 1
-        d
-      }
-    }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    docs.count()
-    sorted.unpersist(blocking = false)
-    docs
+    import turns.sparkSession.implicits._
+    number(turns.toDF(), partitions, base, lww = true).as[Doc]
   }
 
-  /** Frame variants of [[dedup]]/[[assign]] for corpora with EXTRA
-    * metadata columns (streaming ingest of fielded docs — the columns
-    * ride through to the doc store and become filterable /
-    * field-indexable per `IndexConfig.fieldCols` / `textFieldCols` /
-    * `numericFieldCols`). The frame must carry (conv_id, turn_idx, ts,
-    * text); `assignFrame` appends (docId, dl) with the same dense,
-    * stable, no-global-window assignment as the typed path, numbered
-    * from `base`, persisted like [[dedupAndAssign]]'s result.
+  /** [[dedupAndAssign]] for batches with EXTRA metadata columns (fielded
+    * streaming ingest — the columns ride through to the doc store and
+    * become filterable / field-indexable per `IndexConfig.fieldCols` /
+    * `textFieldCols` / `numericFieldCols`). The frame must carry
+    * (conv_id, turn_idx, ts, text); the result is `docId`, the frame's
+    * columns, `dl`, persisted like [[dedupAndAssign]]'s.
     */
-  def dedupFrame(frame: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("conv_id"), col("turn_idx"))
-      .orderBy(col("ts").desc, col("text").desc)
-    frame
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === lit(1))
-      .drop("__rn")
-  }
+  def dedupAndAssignFrame(frame: DataFrame, partitions: Int, base: Long = 0L): DataFrame =
+    number(frame, partitions, base, lww = true)
 
-  def assignFrame(frame: org.apache.spark.sql.DataFrame, partitions: Int, base: Long = 0L)
-      : org.apache.spark.sql.DataFrame = {
-    val spark = frame.sparkSession
-    val sorted = frame
-      .repartitionByRange(partitions, col("conv_id"), col("turn_idx"))
-      .sortWithinPartitions(col("conv_id"), col("turn_idx"))
-      .cache()
-    val counts: Map[Int, Long] = sorted
-      .select(spark_partition_id().as("pid"))
-      .groupBy("pid").count()
-      .collect()
-      .map(r => r.getInt(0) -> r.getLong(1))
-      .toMap
-    val offsets: Map[Int, Long] = {
-      var acc = base
-      (0 until partitions).map { pid =>
-        val o = pid -> acc
-        acc += counts.getOrElse(pid, 0L)
-        o
-      }.toMap
-    }
-    val bc = spark.sparkContext.broadcast(offsets)
-    val textIdx = sorted.schema.fieldIndex("text")
-    val outSchema = sorted.schema
-      .add("docId", org.apache.spark.sql.types.LongType, nullable = false)
-      .add("dl", org.apache.spark.sql.types.IntegerType, nullable = false)
-    val docs = sorted.mapPartitions { it =>
-      var id = bc.value(TaskContext.getPartitionId())
-      it.map { r =>
-        val dl = Analyzer.tokenize(r.getString(textIdx)).length
-        val out = org.apache.spark.sql.Row.fromSeq(r.toSeq :+ id :+ dl)
-        id += 1
-        out
-      }
-    }(org.apache.spark.sql.Encoders.row(outSchema))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    docs.count()
-    sorted.unpersist(blocking = false)
-    docs
-  }
-
+  /** docId assignment alone (no dedup), numbered from 0; persisted like
+    * [[dedupAndAssign]]'s result.
+    */
   def assign(turns: Dataset[Turn], partitions: Int): Dataset[Doc] = {
-    val spark: SparkSession = turns.sparkSession
+    import turns.sparkSession.implicits._
+    number(turns.toDF(), partitions, 0L, lww = false).as[Doc]
+  }
+
+  /** The one numbering routine: `docId` (dense from `base` in key
+    * order), the frame's columns, `dl`. With `lww`, only each key's
+    * winner (`ts` desc, `text` desc) is kept.
+    */
+  private def number(frame: DataFrame, partitions: Int, base: Long, lww: Boolean): DataFrame = {
+    val spark = frame.sparkSession
     import spark.implicits._
-    val sorted = turns
-      .repartitionByRange(partitions, col("conv_id"), col("turn_idx"))
-      .sortWithinPartitions(col("conv_id"), col("turn_idx"))
+    val key = Seq(col("conv_id"), col("turn_idx"))
+    val sorted = frame
+      .repartitionByRange(partitions, key: _*)
+      .sortWithinPartitions(key ++ (if (lww) Seq(col("ts").desc, col("text").desc) else Nil): _*)
       .cache()
+    val convIdx = sorted.schema.fieldIndex("conv_id")
+    val turnIdx = sorted.schema.fieldIndex("turn_idx")
+    val textIdx = sorted.schema.fieldIndex("text")
+    // the rows a partition numbers: all of them, or each key's first
+    def kept(it: Iterator[Row]): Iterator[Row] =
+      if (!lww) it
+      else {
+        var conv: String = null
+        var turn = 0
+        it.filter { r =>
+          val fresh = conv == null || r.getString(convIdx) != conv || r.getInt(turnIdx) != turn
+          conv = r.getString(convIdx)
+          turn = r.getInt(turnIdx)
+          fresh
+        }
+      }
     val counts: Map[Int, Long] = sorted
-      .select(spark_partition_id().as("pid"))
-      .groupBy("pid").count()
-      .collect()
-      .map(r => r.getInt(0) -> r.getLong(1))
-      .toMap
-    val offsets: Map[Int, Long] = {
-      var acc = 0L
-      (0 until partitions).map { pid =>
-        val o = pid -> acc
-        acc += counts.getOrElse(pid, 0L)
-        o
-      }.toMap
-    }
+      .mapPartitions(it => Iterator((TaskContext.getPartitionId(), kept(it).size.toLong)))
+      .collect().toMap
+    val offsets = (0 until partitions).map(counts.getOrElse(_, 0L)).scanLeft(base)(_ + _).toArray
     val bc = spark.sparkContext.broadcast(offsets)
+    val outSchema = StructType(StructField("docId", LongType, nullable = false) +:
+      sorted.schema.fields :+ StructField("dl", IntegerType, nullable = false))
     // NOTE: range-partition boundaries are re-sampled per execution (the
     // sampling seed involves the RDD id), so the numbered result is
     // materialized exactly once while `sorted` is still cached, and
@@ -182,13 +116,13 @@ object DocIds {
     // immediately persist it to parquet and re-read from there.
     val docs = sorted.mapPartitions { it =>
       var id = bc.value(TaskContext.getPartitionId())
-      it.map { t =>
-        val d = Doc(id, t.conv_id, t.turn_idx, t.role, t.text, t.tool, t.ts,
-          Analyzer.tokenize(t.text).length)
+      kept(it).map { r =>
+        val out = Row.fromSeq((id +: r.toSeq) :+ Analyzer.tokenize(r.getString(textIdx)).length)
         id += 1
-        d
+        out
       }
-    }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }(Encoders.row(outSchema))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     docs.count()
     sorted.unpersist(blocking = false)
     docs

@@ -428,8 +428,11 @@ class IndexBuilder(
 
   /** Writes the cell's props file; `extra` appends cell-specific keys
     * (the dict0 cell's gate statistics), read back by [[manifestProps]].
+    * `wallSec` is printed zero-padded at a fixed width (µs digits), so
+    * builds of one corpus write manifests of equal bytes however long
+    * each cell took.
     */
-  private[index] def writeManifest(m: BuildManifest, extra: Seq[(String, Long)] = Nil): Unit = {
+  private[graft] def writeManifest(m: BuildManifest, extra: Seq[(String, Long)] = Nil): Unit = {
     fs.mkdirs(manifestDir)
     val tmp = new Path(manifestDir, cellFile(m.cell).getName + ".tmp")
     val out = fs.create(tmp, true)
@@ -442,7 +445,7 @@ class IndexBuilder(
          |postingsEmitted=${m.postingsEmitted}
          |bytesCompressed=${m.bytesCompressed}
          |status=${m.status}
-         |wallSec=${m.wallSec}
+         |wallSec=${String.format(java.util.Locale.ROOT, "%013.6f", Double.box(m.wallSec))}
          |""".stripMargin + extra.map { case (k, v) => s"$k=$v\n" }.mkString
     out.write(body.getBytes(StandardCharsets.UTF_8))
     out.close()

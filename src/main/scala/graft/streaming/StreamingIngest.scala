@@ -1,11 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.index.{IndexBuilder, IndexConfig}
-import graft.model.{Doc, Turn}
+import graft.model.Turn
 
 /** Structured-Streaming front end for the engine (the reference's only
   * "incremental" behavior is append-to-existing-index batch runs,
@@ -17,6 +17,10 @@ import graft.model.{Doc, Turn}
   * segments). docIds for batch b start at a per-batch base offset so
   * ranges never overlap; corpus stats/dictionary are refreshed by the
   * periodic finalize (or a full rebuild compaction — out of scope here).
+  *
+  * Record identity has one path: every batch (typed or fielded) goes
+  * through one append body, and upserts and deletes share one
+  * bloom-pruned key→tombstone step.
   */
 object StreamingIngest {
 
@@ -44,24 +48,8 @@ object StreamingIngest {
   }
 
   /** One micro-batch → one segment directory under the index, with its
-    * own manifest cells (lineage = snapshotId "stream-batch-<id>").
-    *
-    * Cross-segment LAST-WRITE-WINS upsert (the reference's `_id = path`
-    * re-import semantics, BulkIndexer.java:48 — re-ingesting a
-    * (conv_id, turn_idx) key must supersede the older document, not
-    * coexist with it): after the segment build commits, every older
-    * LIVE segment's doc matching one of the batch's keys is tombstoned
-    * ([[graft.index.Tombstones]]); `MultiSearcher` skips tombstoned
-    * docs like a must_not list and `Compaction` drops them physically.
-    * The key lookup is one column-pruned (conv_id, turn_idx, docId)
-    * semi-join against ONLY the segments whose conv_id bloom might
-    * contain a batch key (per-segment blooms written at build time) —
-    * per-batch cost ∝ candidate segments, not corpus.
-    *
-    * Ordering: tombstones are written AFTER the build commits, so a
-    * crash mid-batch leaves the OLD docs authoritative (never a gap);
-    * the batch retry re-runs the superseding join idempotently
-    * (duplicate tombstones are harmless).
+    * own manifest cells (lineage = snapshotId "stream-batch-<id>"); the
+    * typed view of [[appendSegmentFrame]].
     */
   def appendSegment(
       spark: SparkSession,
@@ -69,28 +57,27 @@ object StreamingIngest {
       indexDir: String,
       batchId: Long,
       cfg: IndexConfig
-  ): Unit = {
-    if (batch.isEmpty) return
-    // numbered from `base` by the fused dedup + assign, so `docs` IS the
-    // persisted frame the build reads and the unpersist below frees it
-    val docs = graft.index.DocIds.dedupAndAssign(batch, cfg.partitions,
-      base = currentMaxDocId(spark, indexDir) + 1)
-    val segDir = s"$indexDir/seg-$batchId"
-    val report = new IndexBuilder(spark, segDir, s"stream-batch-$batchId", cfg)
-      .build(docs)
-    graft.index.Tombstones.writeKeyBloom(spark, segDir, docs.toDF(), report.n)
-    supersedeOlderSegments(spark, indexDir, segDir,
-      docs.select(col("conv_id"), col("turn_idx")).distinct())
-    docs.unpersist(blocking = false)
-  }
+  ): Unit = appendSegmentFrame(spark, batch.toDF(), indexDir, batchId, cfg)
 
-  /** Frame variant of [[appendSegment]] for batches carrying EXTRA
-    * metadata columns (must include conv_id, turn_idx, ts, text):
-    * the columns ride the doc store and are indexable per the cfg's
-    * `fieldCols` / `numericFieldCols` / `textFieldCols` — fielded
-    * streaming ingest. Same LWW upsert semantics (dedup within the
-    * batch, tombstone superseded keys in older segments AFTER the
-    * build commits).
+  /** One micro-batch → one segment (the one append body). The batch must
+    * carry (conv_id, turn_idx, ts, text); EXTRA metadata columns ride the
+    * doc store and are indexable per the cfg's `fieldCols` /
+    * `numericFieldCols` / `textFieldCols` — fielded streaming ingest.
+    *
+    * Cross-segment LAST-WRITE-WINS upsert (the reference's `_id = path`
+    * re-import semantics, BulkIndexer.java:48 — re-ingesting a
+    * (conv_id, turn_idx) key must supersede the older document, not
+    * coexist with it): the batch is deduped and numbered from the first
+    * free docId in one range shuffle ([[graft.index.DocIds]]); after the
+    * segment build commits, every older LIVE segment's doc matching one
+    * of the batch's keys is tombstoned ([[tombstoneMatching]]);
+    * `MultiSearcher` skips tombstoned docs like a must_not list and
+    * `Compaction` drops them physically.
+    *
+    * Ordering: tombstones are written AFTER the build commits, so a
+    * crash mid-batch leaves the OLD docs authoritative (never a gap);
+    * the batch retry re-runs the superseding join idempotently
+    * (duplicate tombstones are harmless).
     */
   def appendSegmentFrame(
       spark: SparkSession,
@@ -100,59 +87,17 @@ object StreamingIngest {
       cfg: IndexConfig
   ): Unit = {
     if (batch.isEmpty) return
-    val docs = graft.index.DocIds.assignFrame(graft.index.DocIds.dedupFrame(batch),
-      cfg.partitions, base = currentMaxDocId(spark, indexDir) + 1)
     val segDir = s"$indexDir/seg-$batchId"
+    val docs = graft.index.DocIds.dedupAndAssignFrame(batch, cfg.partitions,
+      base = currentMaxDocId(spark, indexDir, skip = segDir) + 1)
     val report = new IndexBuilder(spark, segDir, s"stream-batch-$batchId", cfg)
       .buildFrom(docs)
     graft.index.Tombstones.writeKeyBloom(spark, segDir, docs, report.n)
-    supersedeOlderSegments(spark, indexDir, segDir,
-      docs.select(col("conv_id"), col("turn_idx")).distinct())
+    // the LWW dedup left one row per key
+    tombstoneMatching(spark, indexDir, docs.select(col("conv_id"), col("turn_idx")),
+      docs.select(col("conv_id")).distinct().as[String](Encoders.STRING).take(MaxBloomProbes + 1),
+      skip = Some(segDir))
     docs.unpersist(blocking = false)
-  }
-
-  /** Tombstone docs in live segments OTHER than `exceptSegDir` whose
-    * (conv_id, turn_idx) appears in `keys`. Bloom-pruned; `keys` is
-    * batch-sized and broadcast into the semi-join.
-    */
-  private def supersedeOlderSegments(
-      spark: SparkSession,
-      indexDir: String,
-      exceptSegDir: String,
-      keys: org.apache.spark.sql.DataFrame
-  ): Unit = {
-    val exceptName = new org.apache.hadoop.fs.Path(exceptSegDir).getName
-    val older = graft.index.SegmentCatalog.liveSegments(spark, indexDir)
-      .filterNot(s => new org.apache.hadoop.fs.Path(s).getName == exceptName)
-    if (older.isEmpty) return
-    // bloom prune on the batch's distinct conv_ids — collected only when
-    // small (micro-batches); an oversized batch skips pruning, never
-    // correctness
-    val convIds: Option[Array[String]] = {
-      import spark.implicits._
-      val sample = keys.select(col("conv_id")).distinct().as[String].take(100001)
-      if (sample.length > 100000) None else Some(sample)
-    }
-    val candidates = older.filter { seg =>
-      (convIds, graft.index.Tombstones.readKeyBloom(spark, seg)) match {
-        case (Some(ids), Some(bloom)) => ids.exists(bloom.mightContain)
-        case _ => true // no bloom / big batch: must scan
-      }
-    }
-    if (candidates.isEmpty) return
-    val oldKeys = candidates.map { s =>
-      spark.read.parquet(s"$s/docs").select(col("docId"), col("conv_id"), col("turn_idx"))
-    }.reduce(_ unionByName _)
-    val superseded = oldKeys
-      .join(org.apache.spark.sql.functions.broadcast(keys), Seq("conv_id", "turn_idx"),
-        "left_semi")
-      .select(col("docId"))
-      .cache()
-    // append only when something was actually superseded — an empty
-    // tombstone store must stay absent (readers then skip the anti-join)
-    if (superseded.count() > 0)
-      graft.index.Tombstones.append(spark, indexDir, superseded)
-    superseded.unpersist(blocking = false)
   }
 
   /** Explicit deletes (ES DELETE-by-id parity — the reference's ES
@@ -164,8 +109,8 @@ object StreamingIngest {
       keys: Seq[(String, Int)]): Long = {
     import spark.implicits._
     if (keys.isEmpty) return 0L
-    deleteMatching(spark, indexDir,
-      keys.toDF("conv_id", "turn_idx"), byConv = false)
+    tombstoneMatching(spark, indexDir, keys.toDF("conv_id", "turn_idx"),
+      keys.map(_._1).distinct, skip = None)
   }
 
   /** Delete every turn of the given conversations (ES delete-by-query
@@ -175,49 +120,85 @@ object StreamingIngest {
       convIds: Seq[String]): Long = {
     import spark.implicits._
     if (convIds.isEmpty) return 0L
-    deleteMatching(spark, indexDir, convIds.toDF("conv_id"), byConv = true)
+    tombstoneMatching(spark, indexDir, convIds.toDF("conv_id"), convIds.distinct, skip = None)
   }
 
-  private def deleteMatching(spark: SparkSession, indexDir: String,
-      keys: org.apache.spark.sql.DataFrame, byConv: Boolean): Long = {
+  /** The most distinct conv_ids a key→tombstone step probes the
+    * segment blooms with; a larger call scans every segment.
+    */
+  private val MaxBloomProbes = 100000
+
+  /** The one key→tombstone step (upserts and deletes): tombstones every
+    * doc of a live segment other than `skip` whose key columns match a
+    * row of `keys` — (conv_id, turn_idx) or (conv_id) — and returns how
+    * many. `convIds` are the keys' distinct
+    * conv_ids (evaluated only when another live segment exists): only
+    * segments whose conv_id bloom (written at build time) might hold one
+    * of them are scanned — per-call cost ∝ candidate segments, not
+    * corpus; a segment without a bloom, or more than [[MaxBloomProbes]]
+    * conv_ids, is scanned. The scan is one column-pruned (docId,
+    * conv_id, turn_idx) semi-join against the broadcast `keys`.
+    */
+  private def tombstoneMatching(spark: SparkSession, indexDir: String, keys: DataFrame,
+      convIds: => Seq[String], skip: Option[String]): Long = {
+    val skipName = skip.map(new org.apache.hadoop.fs.Path(_).getName)
     val segs = graft.index.SegmentCatalog.liveSegments(spark, indexDir)
+      .filterNot(s => skipName.contains(new org.apache.hadoop.fs.Path(s).getName))
     if (segs.isEmpty) return 0L
-    val joinKeys = if (byConv) Seq("conv_id") else Seq("conv_id", "turn_idx")
-    val all = segs.map { s =>
+    val probes = Some(convIds).filter(_.length <= MaxBloomProbes)
+    val candidates = segs.filter { seg =>
+      (probes, graft.index.Tombstones.readKeyBloom(spark, seg)) match {
+        case (Some(ids), Some(bloom)) => ids.exists(bloom.mightContain)
+        case _ => true
+      }
+    }
+    if (candidates.isEmpty) return 0L
+    val doomed = candidates.map { s =>
       spark.read.parquet(s"$s/docs").select(col("docId"), col("conv_id"), col("turn_idx"))
     }.reduce(_ unionByName _)
-    val doomed = all
-      .join(org.apache.spark.sql.functions.broadcast(keys), joinKeys, "left_semi")
+      .join(broadcast(keys), keys.columns.toSeq, "left_semi")
       .select(col("docId"))
       .cache()
+    // append only when something matched — an empty tombstone store must
+    // stay absent (readers then skip the anti-join)
     val n = doomed.count()
     if (n > 0) graft.index.Tombstones.append(spark, indexDir, doomed)
     doomed.unpersist(blocking = false)
     n
   }
 
-  /** Max docId across segments — from each segment's `docs` manifest
-    * cell (docIdHi is the exclusive bound the build records), so this is
-    * pure filesystem metadata: ZERO Spark jobs per micro-batch (round-2
-    * review: the per-segment max(docId) job made ingest degrade
-    * O(segments)). Falls back to a scan only for a segment with a
-    * missing/corrupt manifest.
+  /** Max docId across live segments other than `skip` — from each
+    * segment's `docs` manifest cell (docIdHi is the exclusive bound the
+    * build records), so this is pure filesystem metadata: ZERO Spark jobs
+    * per micro-batch (a per-segment max(docId) job made ingest degrade
+    * O(segments)). Falls back to a scan only for a segment
+    * with a missing/corrupt manifest: an empty doc store counts as no
+    * docIds, and an unreadable one throws (guessing would let the next
+    * batch reuse that segment's docIds).
+    *
+    * `skip` is the segment the batch itself writes: a retried batch finds
+    * it half-built (a crash before its docs cell) or whole (a crash
+    * after), and either way the retry numbers from the same base as the
+    * first attempt — its docs are rewritten, or kept by the resumed build.
     */
-  private[streaming] def currentMaxDocId(spark: SparkSession, indexDir: String): Long = {
+  private[streaming] def currentMaxDocId(spark: SparkSession, indexDir: String,
+      skip: String): Long = {
     val fs = new org.apache.hadoop.fs.Path(indexDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new org.apache.hadoop.fs.Path(indexDir))) return -1L
     // live segments only (pointer-resolved): retired segments hold docIds
     // the compacted segment also covers, and a mid-compaction crash
     // resolves to the OLD set — either way the max is never understated
+    val skipName = new org.apache.hadoop.fs.Path(skip).getName
     val segs = graft.index.SegmentCatalog.liveSegments(fs, indexDir)
+      .filterNot(s => new org.apache.hadoop.fs.Path(s).getName == skipName)
     if (segs.isEmpty) -1L
     else segs.map { s =>
       new IndexBuilder(spark, s, "", IndexConfig()).readManifest("docs") match {
         case Some(m) => m.docIdHi - 1
         case None =>
-          try spark.read.parquet(s"$s/docs").agg(max(col("docId"))).head().getLong(0)
-          catch { case _: Exception => -1L }
+          val mx = spark.read.parquet(s"$s/docs").agg(max(col("docId"))).head()
+          if (mx.isNullAt(0)) -1L else mx.getLong(0)
       }
     }.max
   }

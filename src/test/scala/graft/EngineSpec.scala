@@ -616,14 +616,32 @@ class EngineSpec extends SparkSpec {
   test("fused build resumes as a unit and dedupAndAssign ≡ dedup∘assign") {
     val dir3 = s"${TestSpark.tmpRoot}/index-fused"
     val dirty = Transcripts.generateDirty(spark, 150L)
+    val persisted = spark.sparkContext.getPersistentRDDs.size
     val fused = DocIds.dedupAndAssign(dirty, 4)
     val composed = DocIds.assign(DocIds.dedup(dirty), 4)
     assert(fused.orderBy("docId").collect().toSeq == composed.orderBy("docId").collect().toSeq)
+    // the fielded entry point: same docIds and winners, and each winner
+    // keeps the extra column of its own (LWW winner) row
+    def rowHash = sha2(concat_ws("|", $"conv_id", $"turn_idx".cast("string"),
+      $"ts".cast("string"), $"text"), 256)
+    val framed = DocIds.dedupAndAssignFrame(dirty.toDF().withColumn("extra", rowHash), 4)
+    assert(framed.columns.toSeq ==
+      Seq("docId", "conv_id", "turn_idx", "role", "text", "tool", "ts", "extra", "dl"))
+    assert(framed.drop("extra").as[graft.model.Doc].orderBy("docId").collect().toSeq ==
+      fused.orderBy("docId").collect().toSeq)
+    assert(framed.filter($"extra" =!= rowHash).count() == 0)
+    assert(framed.filter($"text".endsWith("duplicated later write")).count() ==
+      dirty.count() - fused.count())
+    framed.unpersist(blocking = true)
+    composed.unpersist(blocking = true)
     val b = new IndexBuilder(spark, dir3, "snap-f", cfg.copy(numBuckets = 2))
     val r1 = b.build(fused)
     assert(r1.cellsBuilt.count(_.startsWith("bucket=")) == 2)
     val r2 = new IndexBuilder(spark, dir3, "snap-f", cfg.copy(numBuckets = 2)).build(fused)
     assert(r2.cellsBuilt.isEmpty)
+    // unpersisting the typed view frees the numbered frame it wraps
+    fused.unpersist(blocking = true)
+    assert(spark.sparkContext.getPersistentRDDs.size == persisted)
     // fused index answers identically to the oracle
     val s = new Searcher(spark, dir3, cfg.numShards)
     val want = Oracle.topK(spark.read.parquet(s"$dir3/docs"), "the zanzibar", 10)
@@ -678,6 +696,21 @@ class EngineSpec extends SparkSpec {
     val live = SegmentCatalog.liveSegments(spark, idx)
     assert(live.size == 1)
     assertCellsMatchBlocks(live.head)
+    // wall times print at a fixed width (same-corpus builds write equal
+    // manifest bytes) and read back
+    val wDir = s"${TestSpark.tmpRoot}/manifest-width"
+    val w = new IndexBuilder(spark, wDir, "snap-w", IndexConfig())
+    val wFs = new org.apache.hadoop.fs.Path(wDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def written(wall: Double): (Long, Double) = {
+      w.writeManifest(graft.model.BuildManifest("docs", -1, 0, 10, "snap-w", 10, 0, "done", wall))
+      (wFs.getFileStatus(new org.apache.hadoop.fs.Path(wDir, "manifest/docs.props")).getLen,
+        w.readManifest("docs").get.wallSec)
+    }
+    val (lenA, wallA) = written(0.68137457975)
+    val (lenB, wallB) = written(12.3)
+    assert(lenA == lenB)
+    assert(math.abs(wallA - 0.68137457975) < 1e-6, wallA)
+    assert(math.abs(wallB - 12.3) < 1e-6, wallB)
   }
 
   /** `dir`'s bucket cells hold the per-bucket Σ count and Σ payload bytes

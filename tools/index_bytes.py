@@ -10,7 +10,9 @@ parquet column of blocks/, dict/, dict0/ and docs/ with its compressed
 bytes summed over every file and row group, and one `(rest)` row per
 parquet dir: its file bytes outside the column chunks (footers, magic,
 .crc files). With a second dir, prints both sides and the difference
-(dir2 - dir), and marks rows that differ with `*`.
+(dir2 - dir), marks rows that differ with `*`, and exits 1 when any row
+differs (0 otherwise), so "two builds of one seed write the same bytes"
+is one command.
 """
 import os
 import sys
@@ -78,9 +80,13 @@ def main(argv):
         return
     a, b = sides
     print("%-*s %12s %12s %12s" % (width, "", "dir", "dir2", "diff"))
+    differs = False
     for k in keys:
         x, y = a.get(k, 0), b.get(k, 0)
+        differs |= x != y
         print("%-*s %12d %12d %+12d%s" % (width, k, x, y, y - x, "  *" if x != y else ""))
+    if differs:
+        sys.exit(1)
 
 
 if __name__ == "__main__":
