@@ -178,8 +178,8 @@ object Compaction {
     val segFieldNames: Seq[Set[String]] = segments.map { s =>
       val p = new Path(s"$s/fieldstats")
       if (!hfs.exists(p)) Set.empty[String]
-      else spark.read.parquet(s"$s/fieldstats").select(col("field"))
-        .as[String].collect().toSet
+      else spark.read.schema(IndexBuilder.FieldStatsSchema).parquet(s"$s/fieldstats")
+        .select(col("field")).as[String].collect().toSet
     }
     val fieldNames: Seq[String] = segFieldNames.flatten.distinct.sorted
 
@@ -191,7 +191,7 @@ object Compaction {
     // dropped before the write.
     val obs = org.apache.spark.sql.Observation()
     val docsUnion = segments.zipWithIndex.map { case (s, i) =>
-      spark.read.parquet(s"$s/docs").withColumn("__seg", lit(i))
+      new IndexBuilder(spark, s, snap).readDocs.withColumn("__seg", lit(i))
     }.reduce(_ unionByName _)
     val living =
       if (tomb.isEmpty) docsUnion
@@ -205,10 +205,10 @@ object Compaction {
       Seq(count(when(d > lit(0), 1)).as(s"fn_$f"),
         coalesce(sum(d.cast("long")), lit(0L)).as(s"fs_$f"))
     }
-    living
+    val survivors = living
       .observe(obs, baseAggs.head, (baseAggs.tail ++ fieldAggs): _*)
       .drop("__seg")
-      .write.mode(SaveMode.Overwrite).parquet(s"$outDir/docs")
+    survivors.write.mode(SaveMode.Overwrite).parquet(s"$outDir/docs")
     val row = obs.get
     val n = row("n").asInstanceOf[Long]
     val sumDl = row("sumdl").asInstanceOf[Long]
@@ -237,7 +237,7 @@ object Compaction {
     // selected by name: segments written by other writer revisions
     // carry other dict columns.
     val dictUnion = segments.zipWithIndex.map { case (s, i) =>
-      spark.read.parquet(s"$s/dict")
+      spark.read.schema(IndexBuilder.DictSchema).parquet(s"$s/dict")
         .select(col("term"), col("termId"), col("shard"), lit(i).as("seg"))
     }.reduce(_ unionByName _).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     dictUnion.groupBy(col("term"))
@@ -263,7 +263,8 @@ object Compaction {
       val fromManifest = new IndexBuilder(spark, s, snap).allManifests
         .filter(_.cell.startsWith("bucket=")).map(_.bucket).maxOption
       fromManifest.getOrElse(
-        spark.read.parquet(s"$s/blocks").agg(coalesce(max(col("bucket")), lit(0)))
+        spark.read.schema(IndexBuilder.BlocksSchema).parquet(s"$s/blocks")
+          .agg(coalesce(max(col("bucket")), lit(0)))
           .head().getInt(0)) + 1
     }
     val offsets = bucketCounts.scanLeft(0)(_ + _)
@@ -273,7 +274,7 @@ object Compaction {
     val rewritten = segments.zipWithIndex.map { case (s, i) =>
       val m = mapping.filter(col("seg") === lit(i)).drop("seg")
       val off = offsets(i)
-      spark.read.parquet(s"$s/blocks")
+      spark.read.schema(IndexBuilder.BlocksSchema).parquet(s"$s/blocks")
         .join(m, col("termId") === col("termIdOld"))
         .select(col("termIdNew").as("_1"), col("shardNew").as("_2"),
           (col("bucket") + lit(off)).cast("int").as("_3"), col("blockId").as("_4"),
@@ -319,14 +320,11 @@ object Compaction {
       .write.mode(SaveMode.Overwrite).parquet(s"$outDir/dict")
     val nVocab = dictObs.get("vocab").asInstanceOf[Long]
 
-    // per-bucket metrics for the manifest cells (ADVICE r3: the output
-    // segment must carry bucket cells so a later compaction round
-    // derives its bucket count correctly)
-    val perBucket = rewritten.groupBy(col("bucket"))
-      .agg(coalesce(sum(col("count")), lit(0L)).as("p"),
-        coalesce(sum(length(col("docs")) + length(col("tfs")) + length(col("dls"))
-          + length(col("poss"))), lit(0L)).as("y"))
-      .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
+    // per-bucket metrics and exact docId bounds for the manifest cells
+    // (ADVICE r3: the output segment must carry bucket cells so a later
+    // compaction round derives its bucket count correctly)
+    val perBucket = IndexBuilder.bucketMetrics(rewritten.toDF(),
+      length(col("docs")) + length(col("tfs")) + length(col("dls")) + length(col("poss")))
     rewritten.unpersist(blocking = false)
     mapping.unpersist(blocking = false)
     dictUnion.unpersist(blocking = false)
@@ -335,11 +333,15 @@ object Compaction {
     Seq(IndexStats(n, avgdl, snap)).toDS()
       .write.mode(SaveMode.Overwrite).parquet(s"$outDir/stats")
     val out = new IndexBuilder(spark, outDir, snap)
-    out.writeManifest(BuildManifest("docs", -1, 0, maxDocId + 1, snap, n, 0, "done", 0))
+    out.writeManifest(BuildManifest("docs", -1, 0, maxDocId + 1, snap, n, 0, "done", 0),
+      IndexBuilder.docsKeys(n, avgdl, survivors.schema))
+    // a bucket's cell spans exactly its blocks' docIds (buckets of
+    // different inputs are disjoint); an empty bucket spans nothing
     val nBuckets = offsets.last
-    for (b <- 0 until nBuckets) {
-      val (p, y) = perBucket.getOrElse(b, (0L, 0L))
-      out.writeManifest(BuildManifest(s"bucket=$b", b, 0, maxDocId + 1, snap, p, y, "done", 0))
+    for (b <- 0 until nBuckets) perBucket.get(b) match {
+      case Some(m) => out.writeManifest(BuildManifest(s"bucket=$b", b, m.minDocId, m.maxDocId + 1,
+        snap, m.postings, m.bytes, "done", 0), m.keys)
+      case None => out.writeManifest(BuildManifest(s"bucket=$b", b, 0, 0, snap, 0, 0, "done", 0))
     }
     out.writeManifest(BuildManifest("finalize", -1, 0, n, snap, nVocab, 0, "done", 0))
     // format flag of the merged segment = min over the inputs: postings
@@ -350,7 +352,7 @@ object Compaction {
       segments.map(s => IndexFormat.version(hfs, s)).min)
     // key bloom for the merged segment: future appends prune their
     // upsert key-lookup against it like any built segment's
-    Tombstones.writeKeyBloom(spark, outDir, spark.read.parquet(s"$outDir/docs"), n)
+    Tombstones.writeKeyBloom(spark, outDir, out.readDocs, n)
     CompactionReport(segments.size, n, nVocab, nBuckets, tombFiles, segments)
   }
 
@@ -401,7 +403,7 @@ object Compaction {
       if (!partial || report.consumedTombstones.isEmpty) None
       else {
         val mergedDocs = inputs.map(s =>
-          spark.read.parquet(s"$s/docs").select(col("docId"))).reduce(_ unionByName _)
+          new IndexBuilder(spark, s, "").readDocs.select(col("docId"))).reduce(_ unionByName _)
         val surv = Tombstones.loadDF(spark, report.consumedTombstones)
           .join(mergedDocs, Seq("docId"), "left_anti")
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -454,14 +456,13 @@ object Compaction {
       policy: CompactionPolicy = CompactionPolicy()): Option[CompactionReport] = {
     val segs = SegmentCatalog.liveSegments(spark, indexDir)
     if (segs.isEmpty) return None
-    val tombN =
-      if (!Tombstones.exists(spark, indexDir)) 0L
-      else Tombstones.loadDF(spark, indexDir).count()
+    val tombFiles = Tombstones.listDataFiles(spark, indexDir)
+    val tombN = if (tombFiles.isEmpty) 0L else Tombstones.loadDF(spark, tombFiles).count()
     if (tombN > 0) {
       val totalN = math.max(1L, segs.map { s =>
         new IndexBuilder(spark, s, "", IndexConfig()).readManifest("docs")
           .map(_.postingsEmitted)
-          .getOrElse(spark.read.parquet(s"$s/docs").count())
+          .getOrElse(spark.read.schema("docId BIGINT").parquet(s"$s/docs").count())
       }.sum)
       // an entirely-tombstoned corpus has nothing to compact INTO (the
       // merge would produce an unservable empty index): leave the

@@ -3,8 +3,9 @@ package graft.index
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.analysis.Analyzer
 import graft.model._
@@ -427,12 +428,13 @@ class IndexBuilder(
   private def cellFile(cell: String) = new Path(manifestDir, cell.replace('=', '-') + ".props")
 
   /** Writes the cell's props file; `extra` appends cell-specific keys
-    * (the dict0 cell's gate statistics), read back by [[manifestProps]].
+    * (the docs cell's corpus stats, the dict0 cell's gate statistics, a
+    * bucket cell's docId bounds), read back by [[manifestProps]].
     * `wallSec` is printed zero-padded at a fixed width (µs digits), so
     * builds of one corpus write manifests of equal bytes however long
     * each cell took.
     */
-  private[graft] def writeManifest(m: BuildManifest, extra: Seq[(String, Long)] = Nil): Unit = {
+  private[graft] def writeManifest(m: BuildManifest, extra: Seq[(String, Any)] = Nil): Unit = {
     fs.mkdirs(manifestDir)
     val tmp = new Path(manifestDir, cellFile(m.cell).getName + ".tmp")
     val out = fs.create(tmp, true)
@@ -475,10 +477,50 @@ class IndexBuilder(
     catch { case _: Exception => None }
   }
 
-  def allManifests: Seq[BuildManifest] =
+  /** The segment's corpus stats from its `docs` cell — `n` and `avgdl`
+    * (printed by `Double.toString`, which parses back to the same bits)
+    * — read with no Spark job; None for a cell without the keys (an
+    * older writer), whose reader falls back to `stats/`.
+    */
+  def manifestStats: Option[IndexStats] = {
+    val kv = manifestProps("docs")
+    for (n <- kv.get("n"); a <- kv.get("avgdl"))
+      yield IndexStats(n.toLong, a.toDouble, kv.getOrElse("sourceSnapshotId", ""))
+  }
+
+  /** (bucket, min firstDocId, max lastDocId) of every bucket holding
+    * postings, from the bucket cells' `minDocId` / `maxDocId` keys — the
+    * exact docId bounds of the bucket's blocks, read with no Spark job. A
+    * cell with no postings has no bounds. None when there is no bucket
+    * cell, or a cell with postings lacks the keys (an older writer):
+    * the reader then scans the blocks.
+    */
+  def manifestBucketRanges: Option[Seq[(Int, Long, Long)]] = {
+    val cells = cellNames.filter(_.startsWith("bucket=")).map(manifestProps)
+    val ranges = cells.filter(_.get("postingsEmitted").forall(_ != "0")).map { kv =>
+      for (b <- kv.get("bucket"); lo <- kv.get("minDocId"); hi <- kv.get("maxDocId"))
+        yield (b.toInt, lo.toLong, hi.toLong)
+    }
+    if (cells.isEmpty || ranges.exists(_.isEmpty)) None else Some(ranges.flatten)
+  }
+
+  /** The doc store, read with the schema its `docs` cell records
+    * (`schema`, a DDL string — no inference job); inferred for a cell
+    * without it. The store's columns are the batch's, so this is the one
+    * store whose schema a reader cannot declare.
+    */
+  def readDocs: DataFrame = manifestProps("docs").get("schema") match {
+    case Some(ddl) => spark.read.schema(StructType.fromDDL(ddl)).parquet(docsPath)
+    case None => spark.read.parquet(docsPath)
+  }
+
+  /** The names of the cells the manifest dir holds. */
+  private def cellNames: Seq[String] =
     if (!fs.exists(manifestDir)) Seq.empty
-    else fs.listStatus(manifestDir).toSeq.filter(_.getPath.getName.endsWith(".props"))
-      .flatMap(st => readManifest(st.getPath.getName.stripSuffix(".props").replaceFirst("^bucket-", "bucket=")))
+    else fs.listStatus(manifestDir).toSeq.map(_.getPath.getName).filter(_.endsWith(".props"))
+      .map(_.stripSuffix(".props").replaceFirst("^bucket-", "bucket="))
+
+  def allManifests: Seq[BuildManifest] = cellNames.flatMap(readManifest)
 
   /** Heap bytes the block phase's translate map may take: 1 /
     * [[IndexBuilder.TranslateHeapShare]] of the smaller of the driver
@@ -653,7 +695,7 @@ class IndexBuilder(
     // returns each cell's manifest with its extra keys; the unit's wall
     // time is split evenly over its cells.
     def phases(cells: Seq[String], label: String)(
-        body: => Seq[(BuildManifest, Seq[(String, Long)])]): Unit =
+        body: => Seq[(BuildManifest, Seq[(String, Any)])]): Unit =
       if (resume && cells.forall(isDone)) skipped ++= cells
       else {
         val t0 = System.nanoTime()
@@ -672,7 +714,7 @@ class IndexBuilder(
     // ride the write job itself via the Observation API — no second
     // job re-reading the store (fixed per-build driver cost is the term
     // that caps small-corpus scaling efficiency).
-    phase("docs") {
+    phases(Seq("docs"), "docs") {
       val obs = org.apache.spark.sql.Observation()
       docsIn.toDF()
         .observe(obs, count(lit(1)).as("n"), avg(col("dl")).as("avgdl"),
@@ -685,8 +727,10 @@ class IndexBuilder(
       Seq(IndexStats(n, avgdl, snapshotId)).toDS()
         .write.mode(SaveMode.Overwrite).parquet(statsPath)
       // docIdHi of the "docs" cell = exclusive docId bound for bucketing
-      // (docIds need not start at 0 or be dense for external corpora)
-      BuildManifest("docs", -1, 0, bound, snapshotId, n, 0, "done", 0)
+      // (docIds need not start at 0 or be dense for external corpora);
+      // n and avgdl let readers skip stats/ (manifestStats)
+      Seq(BuildManifest("docs", -1, 0, bound, snapshotId, n, 0, "done", 0) ->
+        IndexBuilder.docsKeys(n, avgdl, docsIn.schema))
     }
     // Size file splits to the build parallelism: the tokenize stage's
     // task count is bounded by input splits, and its map-side partial
@@ -703,8 +747,9 @@ class IndexBuilder(
     spark.conf.set("spark.sql.files.maxPartitionBytes", targetSplit.toString)
     try {
 
-    val docs = spark.read.parquet(docsPath)
-    val stats = spark.read.parquet(statsPath).as[IndexStats].head()
+    val docs = readDocs
+    val stats = manifestStats.getOrElse(
+      spark.read.schema(IndexBuilder.StatsSchema).parquet(statsPath).as[IndexStats].head())
     val n = stats.n
     val avgdl = stats.avgdl
     if (n == 0) {
@@ -909,20 +954,19 @@ class IndexBuilder(
           .write.partitionBy("bucket", "shard")
           .mode(SaveMode.Overwrite).parquet(blocksPath)
       } finally translate.foreach(_.unpersist(false))
-      // per-bucket manifest metrics: one groupBy over the just-written
-      // blocks' count/nbytes columns (round-2 review: an Observation
-      // with 2×numBuckets conditional sums is an 8192-expression
-      // CollectMetrics at the sized() bucket cap — evaluated per row)
-      val perBucket = spark.read.parquet(blocksPath)
-        .groupBy(col("bucket"))
-        .agg(coalesce(sum(col("count")), lit(0L)).as("p"),
-          coalesce(sum(col("nbytes")), lit(0L)).as("y"))
-        .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
+      // per-bucket manifest metrics and exact docId bounds: one groupBy
+      // over the just-written blocks' columns (round-2 review: an
+      // Observation with 2×numBuckets conditional sums is an
+      // 8192-expression CollectMetrics at the sized() bucket cap —
+      // evaluated per row)
+      val perBucket = IndexBuilder.bucketMetrics(
+        spark.read.schema(IndexBuilder.BlocksSchema).parquet(blocksPath), col("nbytes"))
       for (b <- 0 until cfg.numBuckets) yield {
         val lo = b.toLong * bucketWidth
-        val (p, y) = perBucket.getOrElse(b, (0L, 0L))
+        val m = perBucket.get(b)
         BuildManifest(s"bucket=$b", b, lo, math.min(idBound, lo + bucketWidth), snapshotId,
-          p, y, "done", 0) -> Nil
+          m.fold(0L)(_.postings), m.fold(0L)(_.bytes), "done", 0) ->
+          m.fold(Seq.empty[(String, Any)])(_.keys)
       }
     }
 
@@ -965,6 +1009,51 @@ class IndexBuilder(
 }
 
 object IndexBuilder {
+  /** Declared schemas of the stores with a fixed layout. Readers pass
+    * them to `spark.read.schema`, so opening a store infers nothing
+    * (parquet schema inference is one Spark job per store). A column an
+    * older writer did not write reads as null; a column it wrote that is
+    * not declared (the score bounds of older blocks and dicts) is not
+    * read. `bucket` and `shard` of the blocks are partition columns.
+    */
+  val StatsSchema: StructType = StructType.fromDDL(
+    "n BIGINT, avgdl DOUBLE, sourceSnapshotId STRING")
+  val FieldStatsSchema: StructType = StructType.fromDDL(
+    "field STRING, fieldId INT, ndocs BIGINT, sumdl BIGINT")
+  val DictSchema: StructType = StructType.fromDDL(
+    "term STRING, termId BIGINT, shard INT, df BIGINT, cf BIGINT, len INT")
+  val BlocksSchema: StructType = StructType.fromDDL(
+    "termId BIGINT, blockId INT, firstDocId BIGINT, lastDocId BIGINT, count INT, " +
+      "docs BINARY, tfs BINARY, dls BINARY, poss BINARY, nbytes INT, bucket INT, shard INT")
+
+  /** The `docs` cell's extra keys: corpus stats (`n`, `avgdl`,
+    * [[IndexBuilder.manifestStats]]) and the doc store's schema as DDL
+    * (`schema`, [[IndexBuilder.readDocs]]; every column nullable, as
+    * parquet reads it back).
+    */
+  def docsKeys(n: Long, avgdl: Double, docs: StructType): Seq[(String, Any)] =
+    Seq("n" -> n, "avgdl" -> avgdl,
+      "schema" -> StructType(docs.fields.map(_.copy(nullable = true))).toDDL)
+
+  /** A bucket's manifest metrics: postings, compressed bytes, and the
+    * exact docId bounds of its blocks (min firstDocId / max lastDocId).
+    */
+  final case class BucketMetrics(postings: Long, bytes: Long, minDocId: Long, maxDocId: Long) {
+    /** The bucket cell's extra keys ([[IndexBuilder.manifestBucketRanges]]). */
+    def keys: Seq[(String, Any)] = Seq("minDocId" -> minDocId, "maxDocId" -> maxDocId)
+  }
+
+  /** [[BucketMetrics]] of every bucket holding blocks, in one job;
+    * `nbytes` is a block's compressed bytes.
+    */
+  def bucketMetrics(blocks: DataFrame, nbytes: Column): Map[Int, BucketMetrics] =
+    blocks.groupBy(col("bucket"))
+      .agg(sum(col("count")).as("p"), sum(nbytes).as("y"),
+        min(col("firstDocId")).as("lo"), max(col("lastDocId")).as("hi"))
+      .collect().map(r => r.getInt(0) ->
+        BucketMetrics(r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
+      .toMap
+
   /** Broadcast dict0 translate map: term → [termId, df]
     * (see [[translateFits]]). None = use the join path.
     */

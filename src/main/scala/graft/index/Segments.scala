@@ -3,8 +3,9 @@ package graft.index
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Segment catalog of a streaming index directory: which `seg-*`
   * sub-indexes are LIVE. Normally that is every `seg-*` dir; after a
@@ -120,12 +121,15 @@ object SegmentCatalog {
   * record never coexists with its earlier version).
   *
   * Layout: parquet under `$indexDir/tombstones/`, appended per
-  * micro-batch / delete call (duplicates are fine — readers take the
-  * distinct set). Queries subtract tombstones like a `must_not` list:
-  * `MultiSearcher` derives per-(segment, bucket) delta-encoded
-  * exclusion BLOCKS that ride its pruned block scans (round-5 — no
-  * query-path structure scales with tombstone volume on the driver),
-  * and the doc-store paths anti-join the distinct frame. `Compaction`
+  * micro-batch / delete call (duplicates are fine — readers join or
+  * dedupe). "Has tombstones" means the store holds at least one data
+  * file. A searcher pins one [[listDataFiles]] snapshot when it opens,
+  * and every view it derives reads that snapshot:
+  * queries subtract tombstones like a `must_not` list through
+  * per-(segment, bucket) delta-encoded exclusion BLOCKS that ride the
+  * pruned block scans (round-5 — no query-path structure scales with
+  * tombstone volume on the driver), the removed statistics come from
+  * the snapshot's docs, and the doc-store paths anti-join it. `Compaction`
   * physically drops tombstoned docs and their postings, then removes
   * the consumed files — the one remaining driver-side sorted array
   * ([[loadSorted]]) is compaction's own postings filter, bounded by the
@@ -134,27 +138,30 @@ object SegmentCatalog {
 object Tombstones {
   def dir(indexDir: String): String = s"$indexDir/tombstones"
 
-  def exists(spark: SparkSession, indexDir: String): Boolean = {
-    val p = new Path(dir(indexDir))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p)
-  }
-
-  /** Distinct tombstoned docIds as a 1-column ("docId") frame; empty
-    * frame when none exist.
+  /** The store's one column, declared: readers never infer it (an
+    * inference is a Spark job, and it throws on a store holding no data
+    * file).
     */
-  def loadDF(spark: SparkSession, indexDir: String): DataFrame = {
-    import spark.implicits._
-    if (!exists(spark, indexDir)) Seq.empty[Long].toDF("docId")
-    else spark.read.parquet(dir(indexDir)).select(col("docId")).distinct()
-  }
+  val Schema: StructType = StructType(Seq(StructField("docId", LongType)))
 
-  /** The store's current parquet data-file paths — a compaction
-    * SNAPSHOT: every read during the compaction and the final cleanup
-    * must use this one list, so tombstones appended by ingest running
-    * concurrently with the (long) compact job are neither applied
-    * half-way (docs write vs. postings filter diverging) nor destroyed
-    * by cleanup (round-4 review).
+  /** Does the store hold at least one data file? A dir left holding only
+    * `_SUCCESS` (a crash inside [[clearFiles]]) holds no tombstone.
+    */
+  def exists(spark: SparkSession, indexDir: String): Boolean =
+    listDataFiles(spark, indexDir).nonEmpty
+
+  /** Distinct tombstoned docIds of the store's current data files as a
+    * 1-column ("docId") frame; empty when there are none.
+    */
+  def loadDF(spark: SparkSession, indexDir: String): DataFrame =
+    loadDF(spark, listDataFiles(spark, indexDir))
+
+  /** The store's current parquet data-file paths — a SNAPSHOT. Every
+    * read that must agree uses one list: a compaction (its docs write,
+    * postings filter and final cleanup — tombstones appended by ingest
+    * running concurrently are neither applied half-way nor destroyed by
+    * cleanup, round-4 review) and a searcher (its exclusion blocks,
+    * removed statistics and every doc-store anti-join).
     */
   def listDataFiles(spark: SparkSession, indexDir: String): Seq[String] = {
     val p = new Path(dir(indexDir))
@@ -165,12 +172,21 @@ object Tombstones {
       .map(_.toString).sorted
   }
 
+  /** The docIds of exactly `files` (a [[listDataFiles]] snapshot) read
+    * with [[Schema]], duplicates kept: semi- and anti-joins need no
+    * distinct set. The store dir is read as one path and filtered to the
+    * snapshot's file names: Spark lists more than 32 explicit paths with
+    * a job.
+    */
+  def read(spark: SparkSession, files: Seq[String]): DataFrame =
+    if (files.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[Row], Schema)
+    else spark.read.schema(Schema).parquet(new Path(files.head).getParent.toString)
+      .filter(col("_metadata.file_name").isin(files.map(new Path(_).getName): _*))
+      .select(col("docId"))
+
   /** Distinct docIds from exactly `files` (a [[listDataFiles]] snapshot). */
-  def loadDF(spark: SparkSession, files: Seq[String]): DataFrame = {
-    import spark.implicits._
-    if (files.isEmpty) Seq.empty[Long].toDF("docId")
-    else spark.read.parquet(files: _*).select(col("docId")).distinct()
-  }
+  def loadDF(spark: SparkSession, files: Seq[String]): DataFrame =
+    read(spark, files).distinct()
 
   def loadSorted(spark: SparkSession, files: Seq[String]): Array[Long] = {
     import spark.implicits._
@@ -196,16 +212,6 @@ object Tombstones {
   def append(spark: SparkSession, indexDir: String, docIds: DataFrame): Unit =
     docIds.select(col("docId").cast("long"))
       .write.mode(SaveMode.Append).parquet(dir(indexDir))
-
-  /** Remove tombstone files consumed by a compaction (the docIds no
-    * longer exist in any live segment, so a stale file left by a crash
-    * is harmless — exclusion of absent docIds is a no-op).
-    */
-  def clear(spark: SparkSession, indexDir: String): Unit = {
-    val p = new Path(dir(indexDir))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-  }
 
   // --- per-segment conv_id bloom (prunes the upsert key-lookup) ----------
 

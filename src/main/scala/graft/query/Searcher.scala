@@ -7,7 +7,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.analysis.Analyzer
-import graft.index.{Codec, FieldTerms, GraftHash, Tombstones}
+import graft.index.{Codec, FieldTerms, GraftHash, IndexBuilder, IndexConfig, Tombstones}
 import graft.model.{IndexStats, PostingBlock, Scored, TermStats}
 
 /** One ES bool query: the FULL bool surface, including lexicographic
@@ -657,19 +657,39 @@ class Searcher private[query] (
 
   private val fs = new Path(indexDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private lazy val segStats: Seq[IndexStats] =
-    segments.map(s => spark.read.parquet(s"$s/stats").as[IndexStats].head())
+  /** The tombstone snapshot this searcher serves: the store's data files,
+    * listed once when the searcher opens (with its segment list). The
+    * exclusion blocks, the removed statistics and every doc-store
+    * anti-join read exactly these files, so one searcher never mixes two
+    * views of the deletes; a new searcher sees later ones.
+    */
+  private val tombFiles: Seq[String] = Tombstones.listDataFiles(spark, indexDir)
+
+  /** Each segment's manifest, read by filesystem calls (no Spark job). */
+  private lazy val segManifests: Seq[IndexBuilder] =
+    segments.map(s => new IndexBuilder(spark, s, "", IndexConfig()))
+
+  /** Per-segment (N, avgdl) from the `docs` manifest cells; a segment
+    * whose cell lacks them reads its `stats/` (one job).
+    */
+  private lazy val segStats: Seq[IndexStats] = segments.zip(segManifests).map { case (s, m) =>
+    m.manifestStats.getOrElse(
+      spark.read.schema(IndexBuilder.StatsSchema).parquet(s"$s/stats").as[IndexStats].head())
+  }
 
   // ONE DataFrame per segment store, shared by every query path: a
   // `warm()`ed searcher persists these, and Spark's cache manager then
   // serves every pruned scan from the in-memory relation (plan-level
-  // cache matching on the shared analyzed plan)
+  // cache matching on the shared analyzed plan). Dict and blocks are
+  // read with their declared schemas, a doc store with the schema its
+  // manifest records: no inference job.
   private lazy val segDicts: Seq[DataFrame] =
-    segments.map(s => spark.read.parquet(s"$s/dict"))
+    segments.map(s => spark.read.schema(IndexBuilder.DictSchema).parquet(s"$s/dict"))
   private lazy val segBlocks: Seq[DataFrame] =
-    segments.map(s => spark.read.parquet(s"$s/blocks").select(Searcher.BlockCols.map(col): _*))
+    segments.map(s => spark.read.schema(IndexBuilder.BlocksSchema).parquet(s"$s/blocks")
+      .select(Searcher.BlockCols.map(col): _*))
   private lazy val segDocs: Seq[DataFrame] =
-    segments.map(s => spark.read.parquet(s"$s/docs"))
+    segManifests.map(_.readDocs)
 
   /** Every segment stores exists markers (format ≥ 2)? A legacy or
     * mixed-generation index fails `exists`/`missing` loudly — one legacy
@@ -806,14 +826,18 @@ class Searcher private[query] (
     * docs must not subtract from field stats they never contributed to
     * (round-5 ADVICE).
     */
-  private lazy val segFieldStats: Seq[Map[String, (Long, Long)]] =
-    segments.map { s =>
-      val p = new Path(s"$s/fieldstats")
-      if (!fs.exists(p)) Map.empty[String, (Long, Long)]
-      else spark.read.parquet(s"$s/fieldstats")
-        .select(col("field"), col("ndocs"), col("sumdl"))
-        .as[(String, Long, Long)].collect().map(r => r._1 -> (r._2, r._3)).toMap
-    }
+  private lazy val segFieldStats: Seq[Map[String, (Long, Long)]] = {
+    // one job for every segment that has a fieldstats/ store
+    val rows = segments.zipWithIndex.filter { case (s, _) => fs.exists(new Path(s"$s/fieldstats")) }
+      .map { case (s, i) =>
+        spark.read.schema(IndexBuilder.FieldStatsSchema).parquet(s"$s/fieldstats")
+          .select(lit(i).as("seg"), col("field"), col("ndocs"), col("sumdl"))
+      }.reduceOption(_ unionByName _)
+      .fold(Array.empty[(Int, String, Long, Long)])(_.as[(Int, String, Long, Long)].collect())
+      .groupBy(_._1)
+    segments.indices.map(i =>
+      rows.getOrElse(i, Array.empty).map(r => r._2 -> (r._3, r._4)).toMap)
+  }
 
   /** Per-field (docCount, Σdl) of the additional analyzed text fields
     * (`IndexConfig.textFieldCols`), summed over segments (sums are
@@ -828,12 +852,17 @@ class Searcher private[query] (
     }
   private lazy val fieldNames: Seq[String] = rawFieldStats.keys.toSeq.sorted
 
-  /** Tombstone store present? One filesystem check per searcher — every
-    * tombstone-dependent structure below is gated on it, so the
-    * no-tombstone case (the common one) costs nothing.
+  /** Does the snapshot hold a tombstone file? Every tombstone-dependent
+    * structure below is gated on it, so the no-tombstone case (the
+    * common one) costs nothing.
     */
-  private lazy val hasTombstones: Boolean = Tombstones.exists(spark, indexDir)
-  private def tombDF: DataFrame = Tombstones.loadDF(spark, indexDir)
+  private lazy val hasTombstones: Boolean = tombFiles.nonEmpty
+
+  /** The snapshot's docIds, read with the declared schema. Duplicates
+    * are kept: the anti- and semi-joins need no distinct set, and the
+    * exclusion-block encode drops repeats in its sorted runs.
+    */
+  private lazy val tombDF: DataFrame = Tombstones.read(spark, tombFiles)
 
   /** One segment, no tombstones: only then are the segment's build-time
     * stats the global stats, and [[avgdl]] is the segment's stored avgdl
@@ -856,28 +885,52 @@ class Searcher private[query] (
   private[graft] var maxDriverRemovedTerms: Int = 200000
 
   /** Disjoint (lo, hi, seg, bucket) docId intervals of every (segment,
-    * bucket), from the blocks themselves (min firstDocId / max
-    * lastDocId — manifest-independent, so compacted and foreign
-    * segments resolve correctly). Sorted by lo for binary search. A
-    * docId outside every interval has no postings anywhere and can
-    * never be a WAND candidate, so it needs no exclusion block.
+    * bucket) holding postings: the exact min firstDocId / max lastDocId
+    * of its blocks, which the bucket manifest cells record
+    * ([[IndexBuilder.manifestBucketRanges]]) — no Spark job. Segments
+    * whose cells lack the bounds (older writers) are scanned for them,
+    * all in one job. Sorted by lo for binary search. A docId outside
+    * every interval has no postings anywhere and can never be a WAND
+    * candidate, so it needs no exclusion block.
     */
-  private lazy val bucketRanges: Array[(Long, Long, Int, Int)] =
-    segBlocks.zipWithIndex.map { case (b, i) =>
+  private[graft] lazy val bucketRanges: Array[(Long, Long, Int, Int)] = {
+    val fromCells = segManifests.map(_.manifestBucketRanges)
+    val scanned = segBlocks.zipWithIndex.collect { case (b, i) if fromCells(i).isEmpty =>
       b.groupBy(col("bucket"))
         .agg(min(col("firstDocId")).as("lo"), max(col("lastDocId")).as("hi"))
         .select(lit(i).as("seg"), col("bucket"), col("lo"), col("hi"))
-    }.reduce(_ unionByName _)
-      .as[(Int, Int, Long, Long)].collect()
-      .map { case (seg, bucket, lo, hi) => (lo, hi, seg, bucket) }
-      .sortBy(_._1)
+    }.reduceOption(_ unionByName _)
+      .fold(Array.empty[(Int, Int, Long, Long)])(_.as[(Int, Int, Long, Long)].collect())
+    val recorded = fromCells.zipWithIndex.flatMap { case (c, i) =>
+      c.getOrElse(Nil).map { case (bucket, lo, hi) => (i, bucket, lo, hi) }
+    }
+    (recorded ++ scanned).map { case (seg, bucket, lo, hi) => (lo, hi, seg, bucket) }
+      .sortBy(_._1).toArray
+  }
+
+  /** [min, max] docId of the tombstone snapshot, observed by the
+    * [[tombBlocks]] encode job (no job of its own); (0, -1) when the
+    * snapshot's files hold no row.
+    */
+  private lazy val tombObs = org.apache.spark.sql.Observation()
+  private lazy val tombRange: (Long, Long) = {
+    tombBlocks
+    val r = tombObs.get
+    (Option(r("lo")), Option(r("hi"))) match {
+      case (Some(lo), Some(hi)) => (lo.asInstanceOf[Long], hi.asInstanceOf[Long])
+      case _ => (0L, -1L)
+    }
+  }
 
   /** Tombstoned docIds as per-(segment, bucket) delta-encoded docId
     * blocks (termId = [[Searcher.TombTermId]]) that ride the SAME pruned
     * scan as the posting blocks: each WAND group excludes via an
     * ordinary block cursor — NEVER a driver-side sorted array or a
-    * broadcast ∝ tombstone volume. Built once per searcher (one
-    * distributed encode job), persisted for reuse.
+    * broadcast ∝ tombstone volume. Built once per searcher from the
+    * snapshot and the manifest [[bucketRanges]] (one distributed encode
+    * job, which also observes [[tombRange]]) into a cached RDD that every
+    * query's scan unions in — an RDD rather than a persisted Dataset, whose
+    * first use would add a job materializing the table cache.
     */
   private lazy val tombBlocks: Option[Dataset[(Int, Int, PostingBlock)]] = {
     if (!hasTombstones) None
@@ -885,7 +938,9 @@ class Searcher private[query] (
       val ranges = bucketRanges
       val los = ranges.map(_._1)
       val tbs = TombBlockSize
-      val assigned = tombDF.as[Long]
+      val assigned = tombDF
+        .observe(tombObs, min(col("docId")).as("lo"), max(col("docId")).as("hi"))
+        .as[Long]
         .flatMap { d =>
           var a = 0
           var b = los.length
@@ -899,15 +954,22 @@ class Searcher private[query] (
         .sortWithinPartitions(col("seg"), col("bucket"), col("docId"))
         .as[(Int, Int, Long)]
         .mapPartitions { it =>
-          // run-grouped streaming encode: ≤ TombBlockSize ids in memory
+          // run-grouped streaming encode: ≤ TombBlockSize ids in memory;
+          // a docId repeated in the store (re-tombstoned) is encoded once
           val buf = it.buffered
+          var last: (Int, Int, Long) = null
           new Iterator[(Int, Int, PostingBlock)] {
-            override def hasNext: Boolean = buf.hasNext
+            private def skipRepeats(): Unit = while (buf.hasNext && buf.head == last) buf.next()
+            override def hasNext: Boolean = { skipRepeats(); buf.hasNext }
             override def next(): (Int, Int, PostingBlock) = {
+              skipRepeats()
               val (seg, bucket, _) = buf.head
               val ids = new scala.collection.mutable.ArrayBuffer[Long](256)
               while (buf.hasNext && buf.head._1 == seg && buf.head._2 == bucket &&
-                ids.length < tbs) ids += buf.next()._3
+                ids.length < tbs) {
+                last = buf.next()
+                if (ids.isEmpty || ids.last != last._3) ids += last._3
+              }
               val arr = ids.toArray
               val k = arr.length
               val blk = Codec.encodeBlocks(Searcher.TombTermId, 0, bucket, arr,
@@ -917,22 +979,22 @@ class Searcher private[query] (
             }
           }
         }
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      enc.count()
-      Some(enc)
+      // Dataset.foreachPartition runs on enc.rdd (a lazy val), so the
+      // encode runs once, fills this cache and completes the observation
+      enc.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      enc.foreachPartition((_: Iterator[(Int, Int, PostingBlock)]) => ())
+      Some(spark.createDataset(enc.rdd))
     }
   }
 
-  /** The tombstoned docs themselves (docId-range-pruned semi-join of the
-    * doc stores: pushed bounds let parquet row-group stats skip
-    * unaffected segments), with field columns normalized — shared by the
-    * scalar-stats aggregate and the removed-df frame. Persisted once per
-    * searcher; only evaluated when tombstones exist.
+  /** The tombstoned docs of the snapshot (a semi-join of the doc stores,
+    * pruned to the snapshot's [[tombRange]]: the pushed bounds let
+    * parquet row-group stats skip unaffected segments), with field
+    * columns normalized. Read by the one [[removedDfSmall]] job, which
+    * also observes [[removedStats]].
     */
   private lazy val deadDocs: DataFrame = {
-    val r = tombDF.agg(min(col("docId")), max(col("docId"))).head()
-    val lo = r.getLong(0)
-    val hi = r.getLong(1)
+    val (lo, hi) = tombRange
     val union = segDocs.zipWithIndex.map { case (d, i) =>
       // a field column counts ONLY for segments that actually indexed
       // the field (own fieldstats entry) — round-5 ADVICE
@@ -944,37 +1006,36 @@ class Searcher private[query] (
         .filter(col("docId") >= lit(lo) && col("docId") <= lit(hi))
     }.reduce(_ unionByName _)
     union.join(tombDF, Seq("docId"), "left_semi")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
   }
 
-  /** Exact statistic contributions of the tombstoned docs, re-derived
-    * from the doc stores in one range-pruned job. Subtracting them makes
-    * every stat exact over the LWW-visible corpus (StreamingSpec pins
-    * this against the exhaustive oracle AND the compacted index).
+  /** Observes [[removedStats]] on the [[removedDfSmall]] job. */
+  private lazy val removedObs = org.apache.spark.sql.Observation()
+
+  /** Exact statistic contributions of the tombstoned docs: (count, Σdl,
+    * per-field count / Σdl), observed on the range-pruned [[deadDocs]]
+    * rows by the one [[removedDfSmall]] job (forced here). Subtracting
+    * them makes every stat
+    * exact over the LWW-visible corpus (StreamingSpec pins this against
+    * the exhaustive oracle AND the compacted index).
     */
   private lazy val removedStats: Searcher.RemovedStats = {
     if (!hasTombstones) Searcher.RemovedStats(0L, 0L, Map.empty, Map.empty)
     else {
-      val aggCols = Seq(count(lit(1)).as("__c"), coalesce(sum(col("dl")), lit(0L)).as("__s")) ++
-        fieldNames.flatMap { f =>
-          val d = coalesce(Analyzer.dlCol(col(s"__f_$f")), lit(0))
-          Seq(count(when(d > lit(0), 1)).as(s"__n_$f"),
-            coalesce(sum(d.cast("long")), lit(0L)).as(s"__s_$f"))
-        }
-      val row = deadDocs.agg(aggCols.head, aggCols.tail: _*).head()
-      Searcher.RemovedStats(row.getAs[Long]("__c"), row.getAs[Long]("__s"),
-        fieldNames.map(f => f -> row.getAs[Long](s"__n_$f")).toMap,
-        fieldNames.map(f => f -> row.getAs[Long](s"__s_$f")).toMap)
+      removedDfSmall
+      val row = removedObs.get
+      Searcher.RemovedStats(row("__c").asInstanceOf[Long], row("__s").asInstanceOf[Long],
+        fieldNames.map(f => f -> row(s"__n_$f").asInstanceOf[Long]).toMap,
+        fieldNames.map(f => f -> row(s"__s_$f").asInstanceOf[Long]).toMap)
     }
   }
 
   /** Per-term df corrections of the tombstoned docs — their DISTINCT
     * terms per namespace (main-text tokens plus each field's tokens
-    * namespaced), counted. Kept as a persisted DISTRIBUTED frame: driver
-    * memory never scales with the dead docs' vocabulary;
-    * [[removedDfFor]] filters it to the query's own terms.
+    * namespaced), counted — with the aggregates of [[removedStats]]
+    * observed on the same pass. A plain plan: [[removedDfSmall]] runs it,
+    * [[removedDfDF]] persists it.
     */
-  private lazy val removedDfDF: Option[DataFrame] = {
+  private lazy val removedDfPlan: Option[DataFrame] = {
     if (!hasTombstones) None
     else {
       def toksOf(c: Column) = coalesce(Analyzer.tokensCol(c), array().cast("array<string>"))
@@ -982,25 +1043,43 @@ class Searcher private[query] (
         concat(acc, transform(array_distinct(toksOf(col(s"__f_$f"))),
           t => concat(lit(FieldTerms.textTerm(f, "")), t)))
       }
-      val frame = deadDocs
+      val statCols = Seq(count(lit(1)).as("__c"), coalesce(sum(col("dl")), lit(0L)).as("__s")) ++
+        fieldNames.flatMap { f =>
+          val d = coalesce(Analyzer.dlCol(col(s"__f_$f")), lit(0))
+          Seq(count(when(d > lit(0), 1)).as(s"__n_$f"),
+            coalesce(sum(d.cast("long")), lit(0L)).as(s"__s_$f"))
+        }
+      Some(deadDocs
+        .observe(removedObs, statCols.head, statCols.tail: _*)
         .select(explode(termsExpr).as("term"))
-        .groupBy(col("term")).agg(count(lit(1)).as("removed"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      frame.count()
-      Some(frame)
+        .groupBy(col("term")).agg(count(lit(1)).as("removed")))
     }
   }
 
-  /** Bounded driver cache of the corrections: collected only when the
-    * dead vocabulary fits [[maxDriverRemovedTerms]] (zero extra jobs per
-    * query — the common, compaction-bounded case); a heavy-churn store
-    * keeps the distributed path.
+  /** Bounded driver cache of the corrections: one bounded collect of
+    * [[removedDfPlan]] (the pass that also yields [[removedStats]]), kept
+    * only when the dead vocabulary fits [[maxDriverRemovedTerms]] (zero
+    * extra jobs per query — the common, compaction-bounded case); a
+    * heavy-churn store keeps the distributed path.
     */
   private lazy val removedDfSmall: Option[Map[String, Long]] =
-    removedDfDF.flatMap { f =>
+    removedDfPlan.flatMap { f =>
       val rows = f.limit(maxDriverRemovedTerms + 1).as[(String, Long)].collect()
       if (rows.length > maxDriverRemovedTerms) None else Some(rows.toMap)
     }
+
+  /** The corrections as a persisted DISTRIBUTED frame, for the paths that
+    * join them (heavy churn, term expansions): driver memory never scales
+    * with the dead docs' vocabulary, and [[removedDfFor]] filters it to
+    * the query's own terms. Persisted only after [[removedDfSmall]]'s
+    * collect ran on the plain plan — a cached plan would add a job
+    * materializing the cache to every refresh — so its first join runs
+    * the pass once more.
+    */
+  private lazy val removedDfDF: Option[DataFrame] = {
+    removedDfSmall
+    removedDfPlan.map(_.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+  }
 
   /** Removed-df corrections for exactly `terms` — a driver-map lookup
     * when cached, else one distributed filter returning ≤ |terms| rows.
@@ -1597,8 +1676,9 @@ class Searcher private[query] (
     val (inField, _) = fieldCols(field)
     val perSeg = segDicts.map { d =>
       val base = lenRange match {
-        case Some((lo, hi)) if d.columns.contains("len") =>
-          d.filter(col("len").between(lit(lo), lit(hi)))
+        // a legacy dict (no `len` column) reads null: skip the prune
+        case Some((lo, hi)) =>
+          d.filter(col("len").isNull || col("len").between(lit(lo), lit(hi)))
         case _ => d
       }
       base.filter(inField).select(col("term"), col("df"))
@@ -2075,8 +2155,8 @@ class Searcher private[query] (
     if (q.excludes.nonEmpty)
       decodeDocIdsRaw(perSeg, q.excludes.toSet).foreach(e =>
         m = m.join(e, Seq("docId"), "left_anti"))
-    // ONE tombstone snapshot per searcher: the WAND paths' exclusion
-    // blocks and the agg paths' anti-join see the same store state
+    // ONE tombstone snapshot per searcher (tombFiles): the WAND paths'
+    // exclusion blocks and the agg paths' anti-join see the same files
     Some(liveOnly(m))
   }
 

@@ -128,6 +128,13 @@ object StreamingIngest {
     */
   private val MaxBloomProbes = 100000
 
+  /** The doc-store key columns a key→tombstone step reads, declared
+    * (`DocIds` numbers `turn_idx` as an int): no inference job per scanned
+    * segment.
+    */
+  private val KeySchema = org.apache.spark.sql.types.StructType.fromDDL(
+    "docId BIGINT, conv_id STRING, turn_idx INT")
+
   /** The one key→tombstone step (upserts and deletes): tombstones every
     * doc of a live segment other than `skip` whose key columns match a
     * row of `keys` — (conv_id, turn_idx) or (conv_id) — and returns how
@@ -136,8 +143,8 @@ object StreamingIngest {
     * segments whose conv_id bloom (written at build time) might hold one
     * of them are scanned — per-call cost ∝ candidate segments, not
     * corpus; a segment without a bloom, or more than [[MaxBloomProbes]]
-    * conv_ids, is scanned. The scan is one column-pruned (docId,
-    * conv_id, turn_idx) semi-join against the broadcast `keys`.
+    * conv_ids, is scanned. The scan is one (docId, conv_id, turn_idx)
+    * semi-join, read with [[KeySchema]], against the broadcast `keys`.
     */
   private def tombstoneMatching(spark: SparkSession, indexDir: String, keys: DataFrame,
       convIds: => Seq[String], skip: Option[String]): Long = {
@@ -154,7 +161,7 @@ object StreamingIngest {
     }
     if (candidates.isEmpty) return 0L
     val doomed = candidates.map { s =>
-      spark.read.parquet(s"$s/docs").select(col("docId"), col("conv_id"), col("turn_idx"))
+      spark.read.schema(KeySchema).parquet(s"$s/docs")
     }.reduce(_ unionByName _)
       .join(broadcast(keys), keys.columns.toSeq, "left_semi")
       .select(col("docId"))
@@ -197,7 +204,8 @@ object StreamingIngest {
       new IndexBuilder(spark, s, "", IndexConfig()).readManifest("docs") match {
         case Some(m) => m.docIdHi - 1
         case None =>
-          val mx = spark.read.parquet(s"$s/docs").agg(max(col("docId"))).head()
+          val mx = spark.read.schema("docId BIGINT").parquet(s"$s/docs")
+            .agg(max(col("docId"))).head()
           if (mx.isNullAt(0)) -1L else mx.getLong(0)
       }
     }.max

@@ -997,4 +997,172 @@ class StreamingSpec extends SparkSpec {
     assert(gotRows.nonEmpty)
     assert(gotRows.subsetOf(batchRows))
   }
+
+  /** Spark jobs `body` starts (counted by a job group). */
+  private def jobsOf(group: String)(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      try body
+      finally sc.clearJobGroup()
+      org.apache.spark.sql.GraftSqlBridge.waitListenerBus(sc)
+      jobs.get()
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** `segments` appended batches of 8 conversations each (conv 0 re-ingested
+    * by every later batch), then a delete of one conversation per batch.
+    */
+  private def churnedDir(name: String, segments: Int): String = {
+    val idx = s"${TestSpark.tmpRoot}/$name"
+    val cfg = IndexConfig(numBuckets = 2, partitions = 4, fieldCols = Seq("role"),
+      textFieldCols = Seq("tool"))
+    val all = Transcripts.generate(spark, 8L * segments)
+    for (b <- 0 until segments) {
+      val lo = f"conv-${8 * b}%08d"
+      val hi = f"conv-${8 * (b + 1)}%08d"
+      StreamingIngest.appendSegment(spark,
+        all.filter(($"conv_id" >= lo && $"conv_id" < hi) || $"conv_id" === "conv-00000000"),
+        idx, b.toLong, cfg)
+    }
+    assert(StreamingIngest.deleteConvs(spark, idx, (0 until segments).map(b => f"conv-${8 * b + 3}%08d")) > 0)
+    idx
+  }
+
+  test("a refresh's first search runs a constant number of jobs, whatever the live segment count") {
+    // the open-time state (segment stats, bucket ranges, schemas) comes
+    // from the manifests and declared schemas; the tombstone-side values
+    // take a fixed number of passes — so the count must not grow with
+    // the segments
+    val two = churnedDir("stream-idx-open-2", 2)
+    val four = churnedDir("stream-idx-open-4", 4)
+    def firstSearch(d: String, group: String): (Int, Seq[graft.model.Scored]) = {
+      var hits: Seq[graft.model.Scored] = Nil
+      val jobs = jobsOf(group) {
+        hits = new graft.query.MultiSearcher(spark, d).search("the zanzibar", 10).toSeq
+      }
+      (jobs, hits)
+    }
+    val (j2, h2) = firstSearch(two, "open-2")
+    val (j4, h4) = firstSearch(four, "open-4")
+    assert(h2.nonEmpty && h4.nonEmpty)
+    for (d <- Seq(two, four)) {
+      val m = new graft.query.MultiSearcher(spark, d)
+      assert(m.search("the zanzibar", 10).toSeq ==
+        graft.query.Oracle.topK(m.docs, "the zanzibar", 10).as[graft.model.Scored].collect().toSeq)
+    }
+    info(s"first search: $j2 jobs over 2 live segments, $j4 over 4")
+    assert(j2 == j4, s"first search: $j2 jobs over 2 live segments, $j4 over 4")
+    val MaxOpenJobs = 12
+    assert(j4 <= MaxOpenJobs, s"first search ran $j4 jobs (> $MaxOpenJobs)")
+  }
+
+  test("one tombstone snapshot per searcher: search, count and facets ignore later deletes") {
+    val idx = churnedDir("stream-idx-snapshot", 2)
+    val m = new graft.query.MultiSearcher(spark, idx)
+    val q = "the zanzibar"
+    val hits = m.search(q, 10).toSeq
+    val count = m.matchCount(q)
+    val facets = m.facetCounts(q, "role").as[(String, Long)].collect().toSet
+    val top = hits.head.docId
+    val key = m.docs.filter($"docId" === top).select($"conv_id", $"turn_idx")
+      .as[(String, Int)].head()
+    assert(StreamingIngest.deleteTurns(spark, idx, Seq(key)) >= 1)
+    assert(m.search(q, 10).toSeq == hits)
+    assert(m.matchCount(q) == count)
+    assert(m.facetCounts(q, "role").as[(String, Long)].collect().toSet == facets)
+    assert(m.docs.filter($"docId" === top).count() == 1)
+    val fresh = new graft.query.MultiSearcher(spark, idx)
+    assert(!fresh.search(q, 10).exists(_.docId == top))
+    assert(fresh.matchCount(q) == count - 1)
+    assert(fresh.docs.filter($"docId" === top).count() == 0)
+  }
+
+  test("a tombstone store holding only _SUCCESS is no tombstone: queries and maybeCompact work") {
+    import graft.index.{Compaction, Tombstones}
+    val idx = churnedDir("stream-idx-empty-tomb", 2)
+    val fs = new org.apache.hadoop.fs.Path(idx).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // what a crash inside Tombstones.clearFiles leaves: the data files
+    // deleted, the dir and its _SUCCESS marker not yet
+    val files = Tombstones.listDataFiles(spark, idx)
+    assert(files.nonEmpty)
+    files.foreach(f => assert(fs.delete(new org.apache.hadoop.fs.Path(f), false)))
+    assert(fs.exists(new org.apache.hadoop.fs.Path(s"${Tombstones.dir(idx)}/_SUCCESS")))
+    assert(!Tombstones.exists(spark, idx))
+    assert(Tombstones.loadDF(spark, idx).count() == 0)
+    val m = new graft.query.MultiSearcher(spark, idx)
+    val want = graft.query.Oracle.topK(m.docs, "the zanzibar", 10).as[graft.model.Scored].collect().toSeq
+    assert(m.search("the zanzibar", 10).toSeq == want)
+    assert(m.matchCount("the zanzibar") > 0)
+    assert(m.facetCounts("the zanzibar", "role").count() > 0)
+    assert(m.n == m.docs.count())
+    assert(Compaction.maybeCompact(spark, idx).isEmpty) // 2 segments, no tombstone: nothing due
+  }
+
+  test("bucket cells record their blocks' exact docId bounds; a cell without them is scanned") {
+    import graft.index.{Compaction, IndexBuilder, SegmentCatalog}
+    val idx = churnedDir("stream-idx-bounds", 3)
+    def blockBounds(seg: String): Seq[(Int, Long, Long)] =
+      spark.read.parquet(s"$seg/blocks").groupBy($"bucket")
+        .agg(org.apache.spark.sql.functions.min($"firstDocId"),
+          org.apache.spark.sql.functions.max($"lastDocId"))
+        .as[(Int, Long, Long)].collect().toSeq.sorted
+    def check(seg: String): Unit = {
+      val ib = new IndexBuilder(spark, seg, "")
+      assert(ib.manifestBucketRanges.map(_.sorted).contains(blockBounds(seg)), seg)
+      // and the docs cell's stats are the stats store's, to the bit
+      val st = spark.read.parquet(s"$seg/stats").as[graft.model.IndexStats].head()
+      val ms = ib.manifestStats.get
+      assert(ms.n == st.n && java.lang.Double.doubleToRawLongBits(ms.avgdl) ==
+        java.lang.Double.doubleToRawLongBits(st.avgdl), seg)
+      // the declared schemas are the written ones (a compacted segment's
+      // blocks carry no nbytes), and the docs cell records the doc store's
+      for ((store, declared) <- Seq("stats" -> IndexBuilder.StatsSchema,
+          "fieldstats" -> IndexBuilder.FieldStatsSchema, "dict" -> IndexBuilder.DictSchema,
+          "blocks" -> IndexBuilder.BlocksSchema)) {
+        val written = spark.read.parquet(s"$seg/$store").schema.map(f => f.name -> f.dataType)
+        val missing = declared.map(f => f.name -> f.dataType).toSet -- written
+        assert(written.toSet.subsetOf(declared.map(f => f.name -> f.dataType).toSet) &&
+          missing.map(_._1).subsetOf(Set("nbytes")), s"$seg/$store: $written")
+      }
+      assert(ib.readDocs.schema == spark.read.parquet(s"$seg/docs").schema, seg)
+    }
+    val before = new graft.query.MultiSearcher(spark, idx)
+    val ranges = before.bucketRanges.toSeq
+    val hits = before.search("the zanzibar", 10).toSeq
+    SegmentCatalog.liveSegments(spark, idx).foreach(check)
+    // a partial merge of two segments: its cells span exactly its blocks,
+    // and no two of them overlap
+    Compaction.compactInPlace(spark, idx,
+      SegmentCatalog.liveSegments(spark, idx).take(2))
+    val compacted = SegmentCatalog.liveSegments(spark, idx).filter(_.contains("seg-compacted-"))
+    assert(compacted.size == 1)
+    check(compacted.head)
+    val cells = new IndexBuilder(spark, compacted.head, "").allManifests
+      .filter(m => m.cell.startsWith("bucket=") && m.postingsEmitted > 0).sortBy(_.docIdLo)
+    assert(cells.size > 1)
+    assert(cells.zip(cells.tail).forall { case (a, b) => a.docIdHi <= b.docIdLo })
+    assert(cells.map(c => (c.bucket, c.docIdLo, c.docIdHi - 1)).sorted == blockBounds(compacted.head))
+    val merged = new graft.query.MultiSearcher(spark, idx)
+    val mergedRanges = merged.bucketRanges.toSeq
+    assert(merged.search("the zanzibar", 10).toSeq == hits)
+    // an older writer's cells (no bounds): the scan gives the same ranges
+    for (seg <- SegmentCatalog.liveSegments(spark, idx)) {
+      val ib = new IndexBuilder(spark, seg, "")
+      ib.allManifests.filter(_.cell.startsWith("bucket=")).foreach(m => ib.writeManifest(m))
+      assert(ib.manifestBucketRanges.isEmpty)
+    }
+    val scanned = new graft.query.MultiSearcher(spark, idx)
+    assert(scanned.bucketRanges.toSeq == mergedRanges)
+    assert(scanned.search("the zanzibar", 10).toSeq == hits)
+    // a partial merge keeps every input bucket as its own (shifted) bucket
+    assert(ranges.nonEmpty && mergedRanges.size == ranges.size)
+  }
 }
