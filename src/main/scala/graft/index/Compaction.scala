@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.model.{BuildManifest, IndexStats, PostingBlock, TermStats}
+import graft.model.{BuildManifest, PostingBlock, TermStats}
 
 final case class CompactionReport(segments: Int, n: Long, vocab: Long, buckets: Int,
   consumedTombstones: Seq[String] = Nil, mergedSegments: Seq[String] = Nil)
@@ -62,11 +62,16 @@ final case class CompactionPolicy(
   *      Nothing is rescored: blocks store no score, and every query
   *      bounds a block by its scores under the stats it serves.
   *
-  * The output carries the full manifest set a built index has — docs,
-  * finalize AND per-bucket cells — so a LATER compaction over a dir
-  * containing this segment derives its bucket count correctly (round-3
-  * review: the missing bucket cells made a second compactInPlace round
-  * assign overlapping bucket ids).
+  * Every input must be in the current segment format
+  * ([[IndexFormat.requireCurrent]]); its manifest cells are read as
+  * written, never re-derived from a scan. The output is a segment of the
+  * same format with the manifest set a built index has — the docs cell
+  * (n, avgdl, schema), the dict0 cell (Σdf, vocabulary) and one cell per
+  * bucket with its blocks' exact docId bounds — so a LATER compaction
+  * over a dir containing it derives its bucket count from the cells.
+  * Its stores are those of a built segment: the fresh-termId table the
+  * re-map joins through is a scratch store, deleted before `compact`
+  * returns.
   */
 object Compaction {
 
@@ -154,6 +159,8 @@ object Compaction {
         only.sorted
       }
     require(segments.nonEmpty, s"no live seg-* sub-indexes under $indexDir")
+    val hfs = new Path(indexDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    segments.foreach(IndexFormat.requireCurrent(hfs, _))
     val snap = s"compact:${segments.map(_.split('/').last).mkString(",")}"
     // ONE tombstone snapshot drives the whole compaction (round-4
     // review): the sorted array (postings filter), the anti-join frame
@@ -169,7 +176,6 @@ object Compaction {
     // additional analyzed text fields present in the inputs (union of
     // the segments' fieldstats) — their merged (docCount, Σdl) must be
     // recomputed EXACTLY over the survivors, like N / Σdl
-    val hfs = new Path(indexDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     // per-SEGMENT field sets: merged field stats must only count docs of
     // segments that actually INDEXED a field — a same-named doc-store
     // column in a segment built without textFieldCols has no `%field:`
@@ -197,7 +203,7 @@ object Compaction {
       if (tomb.isEmpty) docsUnion
       else docsUnion.join(tombDF, Seq("docId"), "left_anti")
     val baseAggs = Seq(count(lit(1)).as("n"), coalesce(sum(col("dl")), lit(0L)).as("sumdl"),
-      coalesce(max(col("docId")), lit(-1L)).as("mx"))
+      coalesce(min(col("docId")), lit(0L)).as("mn"), coalesce(max(col("docId")), lit(-1L)).as("mx"))
     val fieldAggs = fieldNames.flatMap { f =>
       val segsWithF = segFieldNames.zipWithIndex.collect { case (set, i) if set.contains(f) => i }
       val d0 = coalesce(graft.analysis.Analyzer.dlCol(col(f).cast("string")), lit(0))
@@ -212,6 +218,7 @@ object Compaction {
     val row = obs.get
     val n = row("n").asInstanceOf[Long]
     val sumDl = row("sumdl").asInstanceOf[Long]
+    val minDocId = row("mn").asInstanceOf[Long]
     val maxDocId = row("mx").asInstanceOf[Long]
     val avgdl = if (n == 0) 0.0 else sumDl.toDouble / n
     // merged field stats (fieldId re-assigned in sorted field order) —
@@ -231,11 +238,11 @@ object Compaction {
 
     // merged dictionary with fresh termIds — materialized exactly once
     // (monotonically_increasing_id must not be recomputed across
-    // consumers; same rule as IndexBuilder's dict0 phase). df/cf are NOT
-    // carried from the segment dicts: they are recomputed exactly from
-    // the surviving blocks below (tombstones change them). Columns are
-    // selected by name: segments written by other writer revisions
-    // carry other dict columns.
+    // consumers; same rule as IndexBuilder's dictionary phase) into a
+    // scratch store that is deleted once the dict is written. df/cf are
+    // NOT carried from the segment dicts: they are recomputed exactly
+    // from the surviving blocks below (tombstones change them).
+    val termIdsPath = s"$outDir/termids"
     val dictUnion = segments.zipWithIndex.map { case (s, i) =>
       spark.read.schema(IndexBuilder.DictSchema).parquet(s"$s/dict")
         .select(col("term"), col("termId"), col("shard"), lit(i).as("seg"))
@@ -243,8 +250,8 @@ object Compaction {
     dictUnion.groupBy(col("term"))
       .agg(first(col("shard")).as("shard"))
       .withColumn("termId", monotonically_increasing_id())
-      .write.mode(SaveMode.Overwrite).parquet(s"$outDir/dict0")
-    val gdict = spark.read.parquet(s"$outDir/dict0")
+      .write.mode(SaveMode.Overwrite).parquet(termIdsPath)
+    val gdict = spark.read.schema("term STRING, shard INT, termId BIGINT").parquet(termIdsPath)
 
     // (seg, termIdOld) → (termIdNew, shardNew): dict-sized, no posting
     // payload rides this join's build side
@@ -256,16 +263,11 @@ object Compaction {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     mapping.count()
 
-    // per-segment bucket offsets (buckets stay disjoint docId ranges);
-    // manifest bucket cells are authoritative, max-bucket-in-blocks the
-    // fallback for foreign segments
+    // per-segment bucket offsets (buckets stay disjoint docId ranges),
+    // from the manifest bucket cells
     val bucketCounts = segments.map { s =>
-      val fromManifest = new IndexBuilder(spark, s, snap).allManifests
-        .filter(_.cell.startsWith("bucket=")).map(_.bucket).maxOption
-      fromManifest.getOrElse(
-        spark.read.schema(IndexBuilder.BlocksSchema).parquet(s"$s/blocks")
-          .agg(coalesce(max(col("bucket")), lit(0)))
-          .head().getInt(0)) + 1
+      new IndexBuilder(spark, s, snap).allManifests
+        .filter(_.cell.startsWith("bucket=")).map(_.bucket).maxOption.fold(0)(_ + 1)
     }
     val offsets = bucketCounts.scanLeft(0)(_ + _)
 
@@ -307,8 +309,8 @@ object Compaction {
       .groupBy(col("termId"))
       .agg(sum(col("dfb")).as("df"), sum(col("cfb")).as("cf"))
 
-    // finalize: dictionary df/cf from the surviving blocks; terms with
-    // no surviving posting drop out via the inner join. The vocabulary
+    // the dictionary: df/cf from the surviving blocks; terms with no
+    // surviving posting drop out via the inner join. The vocabulary
     // rides the write job (no re-read of the written dict).
     val dictObs = org.apache.spark.sql.Observation()
     gdict
@@ -325,16 +327,19 @@ object Compaction {
     // compaction round derives its bucket count correctly)
     val perBucket = IndexBuilder.bucketMetrics(rewritten.toDF(),
       length(col("docs")) + length(col("tfs")) + length(col("dls")) + length(col("poss")))
+    hfs.delete(new Path(termIdsPath), true)
     rewritten.unpersist(blocking = false)
     mapping.unpersist(blocking = false)
     dictUnion.unpersist(blocking = false)
     tombBc.destroy()
 
-    Seq(IndexStats(n, avgdl, snap)).toDS()
-      .write.mode(SaveMode.Overwrite).parquet(s"$outDir/stats")
+    IndexFormat.write(hfs, outDir)
     val out = new IndexBuilder(spark, outDir, snap)
-    out.writeManifest(BuildManifest("docs", -1, 0, maxDocId + 1, snap, n, 0, "done", 0),
+    out.writeManifest(BuildManifest("docs", -1, minDocId, maxDocId + 1, snap, n, 0, "done", 0),
       IndexBuilder.docsKeys(n, avgdl, survivors.schema))
+    out.writeManifest(BuildManifest("dict0", -1, 0, n, snap, perBucket.values.map(_.postings).sum,
+      0, "done", 0),
+      Seq("vocab" -> nVocab))
     // a bucket's cell spans exactly its blocks' docIds (buckets of
     // different inputs are disjoint); an empty bucket spans nothing
     val nBuckets = offsets.last
@@ -343,13 +348,6 @@ object Compaction {
         snap, m.postings, m.bytes, "done", 0), m.keys)
       case None => out.writeManifest(BuildManifest(s"bucket=$b", b, 0, 0, snap, 0, 0, "done", 0))
     }
-    out.writeManifest(BuildManifest("finalize", -1, 0, n, snap, nVocab, 0, "done", 0))
-    // format flag of the merged segment = min over the inputs: postings
-    // (incl. exists markers) are payload-preserved, so the merge carries
-    // markers iff EVERY input did — a legacy input keeps the output
-    // legacy so exists/missing still fails loudly instead of silently
-    IndexFormat.write(hfs, outDir,
-      segments.map(s => IndexFormat.version(hfs, s)).min)
     // key bloom for the merged segment: future appends prune their
     // upsert key-lookup against it like any built segment's
     Tombstones.writeKeyBloom(spark, outDir, out.readDocs, n)
@@ -443,43 +441,42 @@ object Compaction {
 
   /** Policy-driven incremental compaction: returns None when nothing is
     * due. Triggers and selection per [[CompactionPolicy]]: the
-    * tombstone ratio compares the tombstone count against manifest doc
-    * counts (computed only when tombstones exist — the common
-    * no-tombstone check runs zero Spark jobs), and size-tiered merge
+    * tombstone ratio compares the tombstone count against the docs
+    * cells' `n` — first the raw row count of the tombstone files (one
+    * job, an upper bound: a docId may be tombstoned twice), and only when
+    * that bound reaches the ratio the distinct count (a shuffle); the
+    * common no-tombstone check runs zero Spark jobs. Size-tiered merge
     * selection orders segments by COMPRESSED BYTES from the manifest
-    * bucket cells (the LSM-relevant size when doc sizes are skewed —
-    * round-5 review "What's missing #6"), falling back to the on-disk
-    * byte size of `blocks/` for foreign segments without cells (a
-    * filesystem walk, still zero Spark jobs).
+    * bucket cells (the LSM-relevant size when doc sizes are skewed).
+    * Throws on a live segment of another format.
     */
   def maybeCompact(spark: SparkSession, indexDir: String,
       policy: CompactionPolicy = CompactionPolicy()): Option[CompactionReport] = {
     val segs = SegmentCatalog.liveSegments(spark, indexDir)
     if (segs.isEmpty) return None
+    val fs = new Path(indexDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    segs.foreach(IndexFormat.requireCurrent(fs, _))
+    val manifests = segs.map(s => new IndexBuilder(spark, s, "", IndexConfig()))
     val tombFiles = Tombstones.listDataFiles(spark, indexDir)
-    val tombN = if (tombFiles.isEmpty) 0L else Tombstones.loadDF(spark, tombFiles).count()
-    if (tombN > 0) {
-      val totalN = math.max(1L, segs.map { s =>
-        new IndexBuilder(spark, s, "", IndexConfig()).readManifest("docs")
-          .map(_.postingsEmitted)
-          .getOrElse(spark.read.schema("docId BIGINT").parquet(s"$s/docs").count())
-      }.sum)
-      // an entirely-tombstoned corpus has nothing to compact INTO (the
-      // merge would produce an unservable empty index): leave the
-      // tombstones excluding everything rather than throw (round-5
-      // ADVICE); the caller can drop the index dir
-      if (tombN >= totalN) return None
-      if (tombN.toDouble / totalN >= policy.tombstoneRatio)
-        return Some(compactInPlace(spark, indexDir)) // full: drops every tombstone
+    val tombRows = if (tombFiles.isEmpty) 0L else Tombstones.read(spark, tombFiles).count()
+    if (tombRows > 0) {
+      val totalN = math.max(1L, manifests.map(_.manifestStats.n).sum)
+      // below both thresholds the distinct count (≤ the row count) cannot
+      // reach either: skip its shuffle
+      if (tombRows >= math.min(policy.tombstoneRatio, 1.0) * totalN) {
+        val tombN = Tombstones.loadDF(spark, tombFiles).count()
+        // an entirely-tombstoned corpus has nothing to compact INTO (the
+        // merge would produce an unservable empty index): leave the
+        // tombstones excluding everything rather than throw; the caller
+        // can drop the index dir
+        if (tombN >= totalN) return None
+        if (tombN.toDouble / totalN >= policy.tombstoneRatio)
+          return Some(compactInPlace(spark, indexDir)) // full: drops every tombstone
+      }
     }
     if (segs.size > policy.maxSegments) {
-      val fs = new Path(indexDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val sizes: Seq[(String, Long)] = segs.map { s =>
-        val cells = new IndexBuilder(spark, s, "", IndexConfig()).allManifests
-          .filter(_.cell.startsWith("bucket="))
-        val bytes = cells.map(_.bytesCompressed).sum
-        s -> (if (cells.nonEmpty) bytes
-              else fs.getContentSummary(new Path(s"$s/blocks")).getLength)
+      val sizes: Seq[(String, Long)] = segs.zip(manifests).map { case (s, m) =>
+        s -> m.allManifests.filter(_.cell.startsWith("bucket=")).map(_.bytesCompressed).sum
       }
       val smallest = sizes.sortBy(_._2).take(math.max(2, policy.mergeFactor)).map(_._1)
       Some(compactInPlace(spark, indexDir, smallest))

@@ -30,64 +30,55 @@ object GraftHash {
     java.lang.Math.floorMod(fnv1a64(term), numShards.toLong).toInt
 }
 
-/** On-disk index format version flag (`format.props` next to the
-  * stores). Version 2 = exists markers ([[FieldTerms.existsTerm]]) are
-  * emitted for every configured field column; an index WITHOUT the flag
-  * predates them — an `exists` clause against it would return ZERO hits
-  * and a `missing` clause would be silently dropped (inverted results),
-  * so both searchers fail loudly instead (round-6 review).
+/** On-disk segment format flag (`format.props` next to the stores).
+  * Version 3 is the one format every reader understands: the manifest
+  * cells carry the corpus stats, the dictionary statistics and each
+  * bucket's docId bounds, `dict/` is the only dictionary store, and
+  * exists markers ([[FieldTerms.existsTerm]]) are emitted for every
+  * configured field column. A fresh build stamps it before writing any
+  * cell; every reader checks it with [[requireCurrent]], so a segment
+  * from another writer fails at open with one message instead of being
+  * read along a second path.
   */
 object IndexFormat {
-  /** Current writer version. */
-  val Version = 2
-  /** Version implied by a missing flag file (pre-marker index). */
-  val Legacy = 1
+  /** The current and only readable format. */
+  val Version = 3
 
   private def flagPath(indexDir: String) = new Path(indexDir, "format.props")
 
-  /** Stamp `indexDir` with `version` — ATOMIC overwrite rename via
-    * FileContext (the SegmentCatalog pointer recipe): a plain
-    * delete-then-rename would have a crash window in which the flag is
-    * GONE and a marker-bearing index reads Legacy (round-7 review).
+  /** Stamp `indexDir` with [[Version]] — an atomic overwrite rename via
+    * FileContext (the SegmentCatalog pointer recipe), so the flag is
+    * never absent in between.
     */
-  def write(fs: org.apache.hadoop.fs.FileSystem, indexDir: String,
-      version: Int = Version): Unit = {
+  def write(fs: org.apache.hadoop.fs.FileSystem, indexDir: String): Unit = {
     val p = flagPath(indexDir)
     val tmp = new Path(indexDir, "format.props.tmp")
     val out = fs.create(tmp, true)
-    out.write(s"formatVersion=$version\n".getBytes(StandardCharsets.UTF_8))
+    out.write(s"formatVersion=$Version\n".getBytes(StandardCharsets.UTF_8))
     out.close()
     val fc = org.apache.hadoop.fs.FileContext.getFileContext(p.toUri, fs.getConf)
     fc.rename(fc.makeQualified(tmp), fc.makeQualified(p),
       org.apache.hadoop.fs.Options.Rename.OVERWRITE)
   }
 
-  /** The index's format version ([[Legacy]] when unflagged). */
-  def version(fs: org.apache.hadoop.fs.FileSystem, indexDir: String): Int = {
+  /** The index's recorded format version; None when unflagged. */
+  private def version(fs: org.apache.hadoop.fs.FileSystem, indexDir: String): Option[Int] = {
     val p = flagPath(indexDir)
-    if (!fs.exists(p)) return Legacy
+    if (!fs.exists(p)) return None
     val in = fs.open(p)
-    val bytes = new java.io.ByteArrayOutputStream()
-    val buf = new Array[Byte](256)
-    var r = in.read(buf)
-    while (r > 0) { bytes.write(buf, 0, r); r = in.read(buf) }
-    in.close()
-    bytes.toString("UTF-8").linesIterator
-      .collectFirst { case l if l.startsWith("formatVersion=") =>
-        l.stripPrefix("formatVersion=").trim.toInt }
-      .getOrElse(Legacy)
+    val text = try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
+    text.linesIterator.collectFirst { case l if l.startsWith("formatVersion=") =>
+      l.stripPrefix("formatVersion=").trim.toIntOption }.flatten
   }
 
-  /** Loud guard for `exists`/`missing` clauses: throws on an index whose
-    * format predates the `_field_names`-style markers.
-    */
-  def requireExistsMarkers(hasMarkers: Boolean, indexDir: String,
-      exists: Seq[String], missing: Seq[String]): Unit =
-    if ((exists.nonEmpty || missing.nonEmpty) && !hasMarkers)
-      throw new IllegalStateException(
-        s"index at $indexDir predates exists markers (formatVersion < $Version): " +
-          "an exists/missing clause would silently return wrong results — " +
-          "rebuild the index (or compact from marker-bearing segments)")
+  /** Throws unless `indexDir` was written in the current format. */
+  def requireCurrent(fs: org.apache.hadoop.fs.FileSystem, indexDir: String): Unit = {
+    val v = version(fs, indexDir)
+    if (!v.contains(Version))
+      throw new IllegalStateException(s"index at $indexDir has segment format " +
+        s"${v.fold("none (no format.props)")(_.toString)}, not $Version — rebuild it " +
+        "with the current writer")
+  }
 }
 
 /** Fielded keyword terms for ES bool-query filter context (the keyword
@@ -142,8 +133,8 @@ object FieldTerms {
   def isNamespaced(term: String): Boolean =
     term.startsWith(Prefix) || term.startsWith(TextPrefix)
 
-  /** Bare-token length of a dictionary term (the `len` dict column,
-    * format v2+): namespaced terms (`#field:v` / `%field:tok`) measure
+  /** Bare-token length of a dictionary term (the `len` dict column):
+    * namespaced terms (`#field:v` / `%field:tok`) measure
     * the part after the FIRST ':' (analyzer tokens never contain ':',
     * so that colon is always the namespace separator; exists markers
     * `#field!` have none and fall back to full length — they never
@@ -366,17 +357,25 @@ final case class BuildReport(
   * time, BulkIndexer.java:48 + mapping.json, rebuilt Spark-native).
   *
   * Layout under `indexDir`:
+  *   format.props          segment format flag ([[IndexFormat]])
   *   docs/                 docId-sorted doc store (meta + text)
-  *   stats/                IndexStats singleton
   *   fieldstats/           per-field (docCount, Σdl) of textFieldCols
-  *   dict0/                term → (df, cf, shard)  [pre-finalize dictionary]
+  *   dict/                 TermStats (termId, shard, df, cf) + bare-token len
   *   blocks/bucket=i/shard=j/   compressed PostingBlocks (Parquet)
-  *   dict/                 finalized TermStats (df, cf) + bare-token len
-  *   manifest/             one checkpoint file per cell (lineage+metrics)
+  *   manifest/             one checkpoint file per cell (lineage, metrics
+  *                         and the segment metadata every reader uses)
+  *
+  * The manifest is the only metadata: the `docs` cell holds n, avgdl,
+  * the docId bounds and the doc store's schema; the `dict0` cell (the
+  * dictionary phase, named for perfbench's per-layer attribution) holds
+  * Σdf, the vocabulary and Σ term bytes; each `bucket=<b>` cell holds
+  * its blocks' exact docId bounds. Readers trust these keys and never
+  * scan a store for them.
   *
   * Scale design: buckets are contiguous docId ranges (≙ Lucene segments)
-  * so per-term posting runs from different buckets are docId-disjoint and
-  * WAND can treat their block lists as one sorted list. Hot-term skew in
+  * counted from the corpus' lowest docId, so per-term posting runs from
+  * different buckets are docId-disjoint and WAND can treat their block
+  * lists as one sorted list. Hot-term skew in
   * block building is defused structurally: block-encode partitions are
   * fixed docId slices of a bucket (closed-form routing — docIds are dense
   * with known bounds — so no range-sampling pass over the postings), and
@@ -402,8 +401,8 @@ final case class BuildReport(
   * 1/[[IndexBuilder.TranslateHeapShare]] of the smaller of the driver
   * and executor heaps ([[IndexBuilder.translateFits]]), else a join on
   * the term string (AQE-broadcast or shuffle by size) — same rows
-  * either way. A resume needs a dict0 from this writer; an older one
-  * fails the block phase with "rebuild without resume".
+  * either way. A resume over cells of another format fails at once
+  * ([[IndexFormat.requireCurrent]]).
   */
 class IndexBuilder(
     spark: SparkSession,
@@ -417,9 +416,7 @@ class IndexBuilder(
   private val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   def docsPath = s"$indexDir/docs"
-  def statsPath = s"$indexDir/stats"
   def fieldStatsPath = s"$indexDir/fieldstats"
-  def dict0Path = s"$indexDir/dict0"
   def blocksPath = s"$indexDir/blocks"
   def dictPath = s"$indexDir/dict"
   private def manifestDir = new Path(root, "manifest")
@@ -428,7 +425,7 @@ class IndexBuilder(
   private def cellFile(cell: String) = new Path(manifestDir, cell.replace('=', '-') + ".props")
 
   /** Writes the cell's props file; `extra` appends cell-specific keys
-    * (the docs cell's corpus stats, the dict0 cell's gate statistics, a
+    * (the docs cell's corpus stats, the dict0 cell's dictionary statistics, a
     * bucket cell's docId bounds), read back by [[manifestProps]].
     * `wallSec` is printed zero-padded at a fixed width (µs digits), so
     * builds of one corpus write manifests of equal bytes however long
@@ -477,42 +474,40 @@ class IndexBuilder(
     catch { case _: Exception => None }
   }
 
+  /** A key of a cell the current writer always records; throws when it
+    * is absent (a segment the format check let through but a crash or an
+    * edit left incomplete).
+    */
+  private def required(cell: String, key: String): String =
+    manifestProps(cell).getOrElse(key, throw new IllegalStateException(
+      s"manifest cell '$cell' of $indexDir has no '$key' — rebuild the index"))
+
   /** The segment's corpus stats from its `docs` cell — `n` and `avgdl`
     * (printed by `Double.toString`, which parses back to the same bits)
-    * — read with no Spark job; None for a cell without the keys (an
-    * older writer), whose reader falls back to `stats/`.
+    * — read with no Spark job.
     */
-  def manifestStats: Option[IndexStats] = {
-    val kv = manifestProps("docs")
-    for (n <- kv.get("n"); a <- kv.get("avgdl"))
-      yield IndexStats(n.toLong, a.toDouble, kv.getOrElse("sourceSnapshotId", ""))
-  }
+  def manifestStats: IndexStats =
+    IndexStats(required("docs", "n").toLong, required("docs", "avgdl").toDouble,
+      required("docs", "sourceSnapshotId"))
 
   /** (bucket, min firstDocId, max lastDocId) of every bucket holding
     * postings, from the bucket cells' `minDocId` / `maxDocId` keys — the
     * exact docId bounds of the bucket's blocks, read with no Spark job. A
-    * cell with no postings has no bounds. None when there is no bucket
-    * cell, or a cell with postings lacks the keys (an older writer):
-    * the reader then scans the blocks.
+    * cell with no postings has no bounds.
     */
-  def manifestBucketRanges: Option[Seq[(Int, Long, Long)]] = {
-    val cells = cellNames.filter(_.startsWith("bucket=")).map(manifestProps)
-    val ranges = cells.filter(_.get("postingsEmitted").forall(_ != "0")).map { kv =>
-      for (b <- kv.get("bucket"); lo <- kv.get("minDocId"); hi <- kv.get("maxDocId"))
-        yield (b.toInt, lo.toLong, hi.toLong)
-    }
-    if (cells.isEmpty || ranges.exists(_.isEmpty)) None else Some(ranges.flatten)
-  }
+  def manifestBucketRanges: Seq[(Int, Long, Long)] =
+    cellNames.filter(_.startsWith("bucket=")).map(c => c -> manifestProps(c))
+      .filter(_._2.get("postingsEmitted").forall(_ != "0")).map { case (c, kv) =>
+        (kv("bucket").toInt, required(c, "minDocId").toLong, required(c, "maxDocId").toLong)
+      }
 
   /** The doc store, read with the schema its `docs` cell records
-    * (`schema`, a DDL string — no inference job); inferred for a cell
-    * without it. The store's columns are the batch's, so this is the one
-    * store whose schema a reader cannot declare.
+    * (`schema`, a DDL string — no inference job). The store's columns are
+    * the batch's, so this is the one store whose schema a reader cannot
+    * declare.
     */
-  def readDocs: DataFrame = manifestProps("docs").get("schema") match {
-    case Some(ddl) => spark.read.schema(StructType.fromDDL(ddl)).parquet(docsPath)
-    case None => spark.read.parquet(docsPath)
-  }
+  def readDocs: DataFrame =
+    spark.read.schema(StructType.fromDDL(required("docs", "schema"))).parquet(docsPath)
 
   /** The names of the cells the manifest dir holds. */
   private def cellNames: Seq[String] =
@@ -678,17 +673,11 @@ class IndexBuilder(
     val docsIn = docsFrame
     val built = scala.collection.mutable.ArrayBuffer[String]()
     val skipped = scala.collection.mutable.ArrayBuffer[String]()
-    // Format-flag provenance (round-7 review): the flag must record the
-    // writer of the cells that CARRY exists markers. A FRESH build (no
-    // pre-existing manifest cells) stamps this writer's version up
-    // front — the build's lineage then belongs to this writer, so any
-    // same-version crash-resume keeps it. A resume over ANOTHER
-    // writer's cells finds either that writer's flag or none (= Legacy)
-    // and the finalize stamp below takes min(existing, Version):
-    // postings an older writer emitted are never claimed as
-    // marker-bearing (the silent-inversion hole the flag exists to
-    // close).
+    // A fresh build stamps the format before it writes any cell, so the
+    // flag always describes the cells beside it; a resume continues only
+    // cells of the current format.
     if (!resume || allManifests.isEmpty) IndexFormat.write(fs, indexDir)
+    else IndexFormat.requireCurrent(fs, indexDir)
     // One unit of work writing `cells` (skipped when all are done): its
     // jobs carry the label `graft build: <label>` (guide §1.5 —
     // thread-local, cleared even when the body throws), and the body
@@ -710,26 +699,25 @@ class IndexBuilder(
     def phase(cell: String)(body: => BuildManifest): Unit =
       phases(Seq(cell), cell)(Seq(body -> Nil))
 
-    // Phase A — doc store + corpus stats. Stats (n, avgdl, max docId)
-    // ride the write job itself via the Observation API — no second
-    // job re-reading the store (fixed per-build driver cost is the term
-    // that caps small-corpus scaling efficiency).
+    // Phase A — doc store + corpus stats. Stats (n, avgdl, min and max
+    // docId) ride the write job itself via the Observation API — no
+    // second job re-reading the store (fixed per-build driver cost is
+    // the term that caps small-corpus scaling efficiency).
     phases(Seq("docs"), "docs") {
       val obs = org.apache.spark.sql.Observation()
       docsIn.toDF()
         .observe(obs, count(lit(1)).as("n"), avg(col("dl")).as("avgdl"),
-          max(col("docId")).as("mx"))
+          min(col("docId")).as("mn"), max(col("docId")).as("mx"))
         .write.mode(SaveMode.Overwrite).parquet(docsPath)
       val row = obs.get
       val n = row("n").asInstanceOf[Long]
       val avgdl = Option(row("avgdl")).map(_.asInstanceOf[Double]).getOrElse(0.0)
+      // [docIdLo, docIdHi) of the "docs" cell = the docIds' span, which
+      // the buckets divide (docIds need not start at 0 or be dense: a
+      // streaming segment's start at its batch's base)
+      val lo = Option(row("mn")).map(_.asInstanceOf[Long]).getOrElse(0L)
       val bound = Option(row("mx")).map(_.asInstanceOf[Long] + 1L).getOrElse(0L)
-      Seq(IndexStats(n, avgdl, snapshotId)).toDS()
-        .write.mode(SaveMode.Overwrite).parquet(statsPath)
-      // docIdHi of the "docs" cell = exclusive docId bound for bucketing
-      // (docIds need not start at 0 or be dense for external corpora);
-      // n and avgdl let readers skip stats/ (manifestStats)
-      Seq(BuildManifest("docs", -1, 0, bound, snapshotId, n, 0, "done", 0) ->
+      Seq(BuildManifest("docs", -1, lo, bound, snapshotId, n, 0, "done", 0) ->
         IndexBuilder.docsKeys(n, avgdl, docsIn.schema))
     }
     // Size file splits to the build parallelism: the tokenize stage's
@@ -748,20 +736,11 @@ class IndexBuilder(
     try {
 
     val docs = readDocs
-    val stats = manifestStats.getOrElse(
-      spark.read.schema(IndexBuilder.StatsSchema).parquet(statsPath).as[IndexStats].head())
-    val n = stats.n
-    val avgdl = stats.avgdl
-    if (n == 0) {
-      // even an empty index carries a format (an unflagged empty
-      // segment would mark a whole multi-segment index legacy) — but
-      // never a NEWER one than its lineage (min rule, see buildFrom top)
-      IndexFormat.write(fs, indexDir,
-        math.min(IndexFormat.version(fs, indexDir), IndexFormat.Version))
-      return BuildReport(0, 0.0, 0, 0, 0, built.toSeq, skipped.toSeq)
-    }
-    val idBound = readManifest("docs").map(_.docIdHi).getOrElse(n)
-    val bucketWidth = math.max(1L, (idBound + cfg.numBuckets - 1) / cfg.numBuckets)
+    val IndexStats(n, avgdl, _) = manifestStats
+    if (n == 0) return BuildReport(0, 0.0, 0, 0, 0, built.toSeq, skipped.toSeq)
+    val idLo = required("docs", "docIdLo").toLong
+    val idBound = required("docs", "docIdHi").toLong
+    val bucketWidth = math.max(1L, (idBound - idLo + cfg.numBuckets - 1) / cfg.numBuckets)
 
     // Phase A2 — per-field stats of the additional analyzed text fields
     // (docCount = docs with ≥1 token, Σ field dl): ONE narrow agg job
@@ -781,8 +760,9 @@ class IndexBuilder(
         .coalesce(1).write.mode(SaveMode.Overwrite).parquet(fieldStatsPath)
       BuildManifest("fieldstats", -1, 0, n, snapshotId, 0, 0, "done", 0)
     }
-    // Phase B — pre-finalize dictionary (global df/cf) via salted merge,
-    // plus termId assignment (dictionary encoding). Every later
+    // Phase B — the dictionary (global df/cf) via salted merge, plus
+    // termId assignment (dictionary encoding), written once to dict/
+    // (manifest cell and job label `dict0`). Every later
     // per-posting shuffle/sort/storage carries the 8-byte termId instead
     // of the term string — the round-1 scaling bottleneck was shuffle
     // bytes + string sort compares in the block range shuffle. Ids come
@@ -811,25 +791,22 @@ class IndexBuilder(
         // for any sane shard count.
         .withColumn("termId",
           monotonically_increasing_id() * lit(numShards.toLong) + col("shard"))
-        // `tidp`: marker that termId is shard-packed (see the block
-        // phase's format check)
-        .withColumn("tidp", lit(true))
-        .select(col("term"), col("termId"), col("shard"), col("df"), col("cf"), col("tidp"))
+        // `len` (bare-token length) serves the edit-distance scan prune
+        .select(col("term"), col("termId"), col("shard"), col("df"), col("cf"),
+          FieldTerms.bareLenCol(col("term")).as("len"))
         // Σdf (the block phase's hot-term threshold), the vocabulary and
         // Σ term bytes (the translate gate) ride the write job and the
         // manifest — zero extra jobs, on resume too
         .observe(obs, count(lit(1)).as("vocab"), coalesce(sum(col("df")), lit(0L)).as("p"),
           coalesce(sum(octet_length(col("term"))), lit(0L)).as("tb"))
-        .write.mode(SaveMode.Overwrite).parquet(dict0Path)
+        .write.mode(SaveMode.Overwrite).parquet(dictPath)
       val row = obs.get
-      // dict0 cell: postingsEmitted = Σdf (the corpus posting count);
-      // vocab is recorded again by the finalize cell
+      // postingsEmitted = Σdf (the corpus posting count)
       Seq(BuildManifest("dict0", -1, 0, n, snapshotId, row("p").asInstanceOf[Long], 0, "done", 0) ->
         Seq("vocab" -> row("vocab").asInstanceOf[Long], "termBytes" -> row("tb").asInstanceOf[Long]))
     }
-    val dict0 = spark.read.parquet(dict0Path)
-    val dict0Cell = manifestProps("dict0")
-    val totalPostings = dict0Cell.get("postingsEmitted").fold(0L)(_.toLong)
+    val dict = spark.read.schema(IndexBuilder.DictSchema).parquet(dictPath)
+    val totalPostings = required("dict0", "postingsEmitted").toLong
 
     // Phase C — compressed blocks of ALL buckets in ONE job: a single
     // closed-form shuffle on (bucket, term, docId) and a single
@@ -839,16 +816,8 @@ class IndexBuilder(
     val blockSize = cfg.blockSize
     val bucketCells = (0 until cfg.numBuckets).map(b => s"bucket=$b")
     phases(bucketCells, "blocks") {
-      // A dict0 from an older writer (no shard-packed termIds or no gate
-      // statistics in its cell) cannot feed this phase: fail before
-      // writing anything.
-      val gateStats = for (v <- dict0Cell.get("vocab"); b <- dict0Cell.get("termBytes"))
-        yield (v.toLong, b.toLong)
-      if (gateStats.isEmpty || !dict0.columns.contains("tidp"))
-        throw new IllegalStateException(s"dict0 at $dict0Path was written by an older " +
-          "build format (no shard-packed termIds or gate statistics) — rebuild " +
-          "without resume")
-      val (vocab, termBytes) = gateStats.get
+      val vocab = required("dict0", "vocab").toLong
+      val termBytes = required("dict0", "termBytes").toLong
       // term→(termId, df) TRANSLATE map when it fits the heap
       // budget (IndexBuilder.translateFits): the posting generators then
       // resolve ids inside the tokenize closure and the string join
@@ -859,7 +828,7 @@ class IndexBuilder(
       val translate: IndexBuilder.Translate =
         if (!IndexBuilder.translateFits(vocab, termBytes, translateBudget)) None
         else {
-          val rows = dict0.select(col("term"), col("termId"), col("df"))
+          val rows = dict.select(col("term"), col("termId"), col("df"))
             .as[(String, Long, Long)].collect()
           val m = new java.util.HashMap[String, Array[Long]](rows.length * 2)
           rows.foreach { case (t, tid, df) => m.put(t, Array(tid, df)) }
@@ -877,7 +846,7 @@ class IndexBuilder(
         val postings = (translate match {
           case Some(_) => allPostingsOf(docs, translate = translate)
           case None => allPostingsOf(docs).join(
-            dict0.select(col("term"), col("termId"), col("df")), Seq("term"))
+            dict.select(col("term"), col("termId"), col("df")), Seq("term"))
         }).select(col("termId"), col("docId"), col("df"), col("pay"))
         // Partition routing is CLOSED-FORM and df-AWARE — no
         // repartitionByRange sampling pass (which re-executed the whole
@@ -920,16 +889,18 @@ class IndexBuilder(
         // bucket never rides the shuffled rows: the pid expression derives
         // it from docId (closed form), every resulting partition is
         // single-bucket, and the encoder re-derives it from
-        // docId/bucketWidth.
-        val bucketExpr = least(floor(col("docId") / lit(bucketWidth)), lit(cfg.numBuckets - 1L))
+        // (docId − idLo) / bucketWidth.
+        val offset = col("docId") - lit(idLo)
+        val bucketExpr = least(floor(offset / lit(bucketWidth)), lit(cfg.numBuckets - 1L))
         val slicePid = least(
-          floor((col("docId") - bucketExpr * lit(bucketWidth)) / lit(subWidth)),
+          floor((offset - bucketExpr * lit(bucketWidth)) / lit(subWidth)),
           lit(partsPerBucket - 1L))
         val pid = bucketExpr * lit(partsPerBucket) +
           when(col("df") >= lit(hotDf), slicePid)
             .otherwise(pmod(hash(col("termId")), lit(partsPerBucket)))
         val nBuckets = cfg.numBuckets // local copy: the closure must not capture `this`
         val bw = bucketWidth
+        val lo = idLo
         // shard re-attached post-exchange (a Project above the sort — row
         // order within partitions is preserved); encoder tuple order is
         // (termId, shard, docId, pay)
@@ -939,7 +910,7 @@ class IndexBuilder(
             pmod(col("termId"), lit(cfg.numShards.toLong)).cast("int").as("shard"),
             col("docId"), col("pay"))
           .as[BlockEncoder.Row]
-          .mapPartitions(rows => BlockEncoder.encodeFused(rows, blockSize, bw, nBuckets))
+          .mapPartitions(rows => BlockEncoder.encodeFused(rows, blockSize, lo, bw, nBuckets))
         // ONE pass, no cache: the encoded blocks flow straight into the
         // parquet write, carrying a precomputed per-block byte count
         // (`nbytes`), and the manifest metrics aggregate from a
@@ -962,7 +933,7 @@ class IndexBuilder(
       val perBucket = IndexBuilder.bucketMetrics(
         spark.read.schema(IndexBuilder.BlocksSchema).parquet(blocksPath), col("nbytes"))
       for (b <- 0 until cfg.numBuckets) yield {
-        val lo = b.toLong * bucketWidth
+        val lo = idLo + b.toLong * bucketWidth
         val m = perBucket.get(b)
         BuildManifest(s"bucket=$b", b, lo, math.min(idBound, lo + bucketWidth), snapshotId,
           m.fold(0L)(_.postings), m.fold(0L)(_.bytes), "done", 0) ->
@@ -970,32 +941,10 @@ class IndexBuilder(
       }
     }
 
-    // Phase D — finalize dictionary: dict0's TermStats columns.
-    phase("finalize") {
-      val obs = org.apache.spark.sql.Observation()
-      val dict = dict0
-        .select(col("term"), col("termId"), col("shard"), col("df"), col("cf"))
-        .observe(obs, count(lit(1)).as("vocab"))
-        .as[TermStats]
-      // `len` (bare-token length) rides along for edit-distance scan
-      // pruning; TermStats readers ignore it by name-binding
-      dict.withColumn("len", FieldTerms.bareLenCol(col("term")))
-        .write.mode(SaveMode.Overwrite).parquet(dictPath)
-      // provenance stamp: min(existing lineage, this writer) — a fresh
-      // build's start-stamp makes this Version; a resume over an OLDER
-      // writer's posting cells finds no flag (Legacy) and stays Legacy,
-      // so exists/missing on those marker-less postings fails loudly
-      // instead of silently inverting (round-7 review)
-      IndexFormat.write(fs, indexDir,
-        math.min(IndexFormat.version(fs, indexDir), IndexFormat.Version))
-      BuildManifest("finalize", -1, 0, n, snapshotId,
-        obs.get("vocab").asInstanceOf[Long], 0, "done", 0)
-    }
-
     val ms = allManifests
     BuildReport(
       n, avgdl,
-      readManifest("finalize").map(_.postingsEmitted).getOrElse(0L),
+      required("dict0", "vocab").toLong,
       ms.filter(_.cell.startsWith("bucket=")).map(_.postingsEmitted).sum,
       ms.filter(_.cell.startsWith("bucket=")).map(_.bytesCompressed).sum,
       built.toSeq, skipped.toSeq
@@ -1011,13 +960,9 @@ class IndexBuilder(
 object IndexBuilder {
   /** Declared schemas of the stores with a fixed layout. Readers pass
     * them to `spark.read.schema`, so opening a store infers nothing
-    * (parquet schema inference is one Spark job per store). A column an
-    * older writer did not write reads as null; a column it wrote that is
-    * not declared (the score bounds of older blocks and dicts) is not
-    * read. `bucket` and `shard` of the blocks are partition columns.
+    * (parquet schema inference is one Spark job per store). `bucket` and
+    * `shard` of the blocks are partition columns.
     */
-  val StatsSchema: StructType = StructType.fromDDL(
-    "n BIGINT, avgdl DOUBLE, sourceSnapshotId STRING")
   val FieldStatsSchema: StructType = StructType.fromDDL(
     "field STRING, fieldId INT, ndocs BIGINT, sumdl BIGINT")
   val DictSchema: StructType = StructType.fromDDL(
@@ -1237,18 +1182,19 @@ object BlockEncoder {
 
   /** Fused-mode encoder: rows sorted by (termId, docId). The bucket is
     * NOT carried in the rows — it is re-derived from docId (buckets are
-    * fixed docId ranges). Runs are grouped on (termId, bucket);
-    * docId-sorted order makes bucket monotonic within a termId run, so
-    * both are contiguous.
+    * fixed docId ranges of `bucketWidth` from `docIdLo`). Runs are
+    * grouped on (termId, bucket); docId-sorted order makes bucket
+    * monotonic within a termId run, so both are contiguous.
     */
   def encodeFused(
       rows: Iterator[Row],
       blockSize: Int,
+      docIdLo: Long,
       bucketWidth: Long,
       numBuckets: Int
   ): Iterator[PostingBlock] = {
     def bucketOf(docId: Long): Int =
-      math.min(docId / bucketWidth, (numBuckets - 1).toLong).toInt
+      math.min((docId - docIdLo) / bucketWidth, (numBuckets - 1).toLong).toInt
     val grouped = new Iterator[Iterator[PostingBlock]] {
       private val it = rows.buffered
       override def hasNext: Boolean = it.hasNext

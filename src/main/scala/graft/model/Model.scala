@@ -86,7 +86,8 @@ final case class IndexStats(n: Long, avgdl: Double, sourceSnapshotId: String)
   * "resumable from per-partition checkpoints carrying lineage (source
   * snapshot ID, partition range, term-shard) and metrics (postings
   * emitted, bytes compressed)"). A cell is one unit of idempotent work:
-  * "docs", "dict0", "bucket=<i>" (a contiguous docId range), "finalize".
+  * "docs", "fieldstats", "dict0" (the dictionary) and "bucket=<i>" (a
+  * contiguous docId range).
   */
 final case class BuildManifest(
     cell: String,

@@ -109,13 +109,13 @@ class Indices(spark: SparkSession, root: String, numShards: Int = 8) {
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** The named indexes currently under the root: sub-directories that
-    * contain either a built index (`stats/`) or a streaming segment
+    * contain either a built index (`format.props`) or a streaming segment
     * catalog / seg-* sub-dirs.
     */
   def indexNames: Seq[String] = {
     val st = fs.listStatus(new Path(root)).filter(_.isDirectory)
     st.map(_.getPath).filter { p =>
-      fs.exists(new Path(p, "stats")) || fs.exists(new Path(p, "segments.props")) ||
+      fs.exists(new Path(p, "format.props")) || fs.exists(new Path(p, "segments.props")) ||
         fs.listStatus(p).exists(s => s.isDirectory && s.getPath.getName.startsWith("seg-"))
     }.map(_.getName).toSeq.sorted
   }
@@ -179,7 +179,7 @@ class Indices(spark: SparkSession, root: String, numShards: Int = 8) {
   private def isSegmented(name: String): Boolean = {
     val p = new Path(root, name)
     fs.exists(new Path(p, "segments.props")) ||
-      (!fs.exists(new Path(p, "stats")) &&
+      (!fs.exists(new Path(p, "format.props")) &&
         fs.listStatus(p).exists(s => s.isDirectory && s.getPath.getName.startsWith("seg-")))
   }
 

@@ -368,9 +368,9 @@ private[query] object Searcher {
   }
 
   /** The canonical PostingBlock columns, bound by name at every block
-    * read (segments built by different writer revisions may carry extra
-    * columns, e.g. the build's `nbytes` or an older writer's stored
-    * bounds, and cross-segment unionByName requires a stable schema).
+    * read (a built segment's blocks carry the build's `nbytes`, a
+    * compacted one's do not, and cross-segment unionByName requires a
+    * stable schema).
     */
   val BlockCols: Seq[String] = Seq("termId", "shard", "bucket", "blockId", "firstDocId",
     "lastDocId", "count", "docs", "tfs", "dls", "poss")
@@ -656,6 +656,9 @@ class Searcher private[query] (
     this(spark, indexDir, numShards, Seq(indexDir))
 
   private val fs = new Path(indexDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  // every segment must be of the current format: its manifest is then
+  // the whole of its metadata, read without a fallback
+  segments.foreach(graft.index.IndexFormat.requireCurrent(fs, _))
 
   /** The tombstone snapshot this searcher serves: the store's data files,
     * listed once when the searcher opens (with its segment list). The
@@ -669,13 +672,8 @@ class Searcher private[query] (
   private lazy val segManifests: Seq[IndexBuilder] =
     segments.map(s => new IndexBuilder(spark, s, "", IndexConfig()))
 
-  /** Per-segment (N, avgdl) from the `docs` manifest cells; a segment
-    * whose cell lacks them reads its `stats/` (one job).
-    */
-  private lazy val segStats: Seq[IndexStats] = segments.zip(segManifests).map { case (s, m) =>
-    m.manifestStats.getOrElse(
-      spark.read.schema(IndexBuilder.StatsSchema).parquet(s"$s/stats").as[IndexStats].head())
-  }
+  /** Per-segment (N, avgdl) from the `docs` manifest cells. */
+  private lazy val segStats: Seq[IndexStats] = segManifests.map(_.manifestStats)
 
   // ONE DataFrame per segment store, shared by every query path: a
   // `warm()`ed searcher persists these, and Spark's cache manager then
@@ -690,17 +688,6 @@ class Searcher private[query] (
       .select(Searcher.BlockCols.map(col): _*))
   private lazy val segDocs: Seq[DataFrame] =
     segManifests.map(_.readDocs)
-
-  /** Every segment stores exists markers (format ≥ 2)? A legacy or
-    * mixed-generation index fails `exists`/`missing` loudly — one legacy
-    * segment would silently invert results for its docs (round-6
-    * review).
-    */
-  private lazy val hasExistsMarkers: Boolean =
-    segments.forall(s =>
-      graft.index.IndexFormat.version(fs, s) >= graft.index.IndexFormat.Version)
-  private def guardExists(exists: Seq[String], missing: Seq[String]): Unit =
-    graft.index.IndexFormat.requireExistsMarkers(hasExistsMarkers, indexDir, exists, missing)
 
   // driver-local in-process serving state, populated by warm() ONLY when
   // the driver dictionary is loaded, every term's idf is fixed and the
@@ -864,13 +851,6 @@ class Searcher private[query] (
     */
   private lazy val tombDF: DataFrame = Tombstones.read(spark, tombFiles)
 
-  /** One segment, no tombstones: only then are the segment's build-time
-    * stats the global stats, and [[avgdl]] is the segment's stored avgdl
-    * (what its docs phase computed), not Σdl / N recomputed. That is all
-    * it decides: query bounds always come from the decoded scores.
-    */
-  private[query] lazy val storedBounds: Boolean = segments.size == 1 && !hasTombstones
-
   /** Tombstone block size: exclusion blocks carry no payload worth
     * splitting finely — bigger blocks = fewer rows through the scan.
     */
@@ -887,26 +867,15 @@ class Searcher private[query] (
   /** Disjoint (lo, hi, seg, bucket) docId intervals of every (segment,
     * bucket) holding postings: the exact min firstDocId / max lastDocId
     * of its blocks, which the bucket manifest cells record
-    * ([[IndexBuilder.manifestBucketRanges]]) — no Spark job. Segments
-    * whose cells lack the bounds (older writers) are scanned for them,
-    * all in one job. Sorted by lo for binary search. A docId outside
-    * every interval has no postings anywhere and can never be a WAND
-    * candidate, so it needs no exclusion block.
+    * ([[IndexBuilder.manifestBucketRanges]]) — no Spark job. Sorted by lo
+    * for binary search. A docId outside every interval has no postings
+    * anywhere and can never be a WAND candidate, so it needs no
+    * exclusion block.
     */
-  private[graft] lazy val bucketRanges: Array[(Long, Long, Int, Int)] = {
-    val fromCells = segManifests.map(_.manifestBucketRanges)
-    val scanned = segBlocks.zipWithIndex.collect { case (b, i) if fromCells(i).isEmpty =>
-      b.groupBy(col("bucket"))
-        .agg(min(col("firstDocId")).as("lo"), max(col("lastDocId")).as("hi"))
-        .select(lit(i).as("seg"), col("bucket"), col("lo"), col("hi"))
-    }.reduceOption(_ unionByName _)
-      .fold(Array.empty[(Int, Int, Long, Long)])(_.as[(Int, Int, Long, Long)].collect())
-    val recorded = fromCells.zipWithIndex.flatMap { case (c, i) =>
-      c.getOrElse(Nil).map { case (bucket, lo, hi) => (i, bucket, lo, hi) }
-    }
-    (recorded ++ scanned).map { case (seg, bucket, lo, hi) => (lo, hi, seg, bucket) }
-      .sortBy(_._1).toArray
-  }
+  private[graft] lazy val bucketRanges: Array[(Long, Long, Int, Int)] =
+    segManifests.zipWithIndex.flatMap { case (m, seg) =>
+      m.manifestBucketRanges.map { case (bucket, lo, hi) => (lo, hi, seg, bucket) }
+    }.sortBy(_._1).toArray
 
   /** [min, max] docId of the tombstone snapshot, observed by the
     * [[tombBlocks]] encode job (no job of its own); (0, -1) when the
@@ -1098,8 +1067,7 @@ class Searcher private[query] (
   /** Global corpus stats over the LWW-visible union of all segments. */
   lazy val n: Long = rawN - removedStats.n
   lazy val sumDl: Long = rawSumDl - removedStats.sumDl
-  lazy val avgdl: Double =
-    if (storedBounds) segStats.head.avgdl else if (n == 0) 0.0 else sumDl.toDouble / n
+  lazy val avgdl: Double = if (n == 0) 0.0 else sumDl.toDouble / n
 
   /** Merged per-field (docCount, avgdl) over the LWW-visible union —
     * the same exact-subtraction rule as N / avgdl.
@@ -1409,7 +1377,6 @@ class Searcher private[query] (
     * markers, the analyzed tokens of `mustNotText`).
     */
   private def compile(specs: Seq[BoolQuerySpec]): Seq[ResolvedQuery] = {
-    specs.foreach(sp => guardExists(sp.exists, sp.missing))
     val rangeExp = expandFieldRanges(specs.flatMap(_.rangeFilters))
     specs.map { sp =>
       val mm = sp.multiMatchFields
@@ -1667,20 +1634,14 @@ class Searcher private[query] (
     * `field`: per-segment rows summed (a single segment skips the merge),
     * minus the tombstoned docs' corrections — a term living only in
     * superseded docs vanishes. `lenRange` pushes a bare-token length
-    * prune to each dict's stored `len` column (format v2 — a plain int
-    * range the parquet reader evaluates before any levenshtein; legacy
-    * dicts skip it, the caller's predicate already implies it). Index
-    * metadata only — never a corpus scan.
+    * prune to each dict's stored `len` column (a plain int range the
+    * parquet reader evaluates before any levenshtein). Index metadata
+    * only — never a corpus scan.
     */
   private def termDfFrame(field: String, lenRange: Option[(Int, Int)] = None): DataFrame = {
     val (inField, _) = fieldCols(field)
     val perSeg = segDicts.map { d =>
-      val base = lenRange match {
-        // a legacy dict (no `len` column) reads null: skip the prune
-        case Some((lo, hi)) =>
-          d.filter(col("len").isNull || col("len").between(lit(lo), lit(hi)))
-        case _ => d
-      }
+      val base = lenRange.fold(d) { case (lo, hi) => d.filter(col("len").between(lit(lo), lit(hi))) }
       base.filter(inField).select(col("term"), col("df"))
     }
     val merged =

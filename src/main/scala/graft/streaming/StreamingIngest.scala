@@ -15,8 +15,8 @@ import graft.model.Turn
   * → each micro-batch becomes one new index bucket/segment (exactly the
   * Lucene segment model: docId-disjoint ranges, query-time merge across
   * segments). docIds for batch b start at a per-batch base offset so
-  * ranges never overlap; corpus stats/dictionary are refreshed by the
-  * periodic finalize (or a full rebuild compaction — out of scope here).
+  * ranges never overlap; statistics merge at query time and
+  * [[graft.index.Compaction]] merges the segments themselves.
   *
   * Record identity has one path: every batch (typed or fielded) goes
   * through one append body, and upserts and deletes share one

@@ -214,27 +214,20 @@ class EngineSpec extends SparkSpec {
       == searcher.search("zanzibar", 10).toSeq)
   }
 
-  test("fuzzy/suggest serve unchanged on a legacy dict WITHOUT the len column (round-7)") {
-    built
-    val fs = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val legacyDir = s"${TestSpark.tmpRoot}/index-golden-legacy-len"
-    fs.delete(new org.apache.hadoop.fs.Path(legacyDir), true)
-    org.apache.hadoop.fs.FileUtil.copy(fs, new org.apache.hadoop.fs.Path(indexDir),
-      fs, new org.apache.hadoop.fs.Path(legacyDir), false, spark.sparkContext.hadoopConfiguration)
-    // strip the len column (an index written before round 7)
-    val stripped = spark.read.parquet(s"$legacyDir/dict").drop("len")
-    stripped.write.mode("overwrite").parquet(s"$legacyDir/dict2")
-    fs.delete(new org.apache.hadoop.fs.Path(s"$legacyDir/dict"), true)
-    fs.rename(new org.apache.hadoop.fs.Path(s"$legacyDir/dict2"),
-      new org.apache.hadoop.fs.Path(s"$legacyDir/dict"))
-    val legacy = new Searcher(spark, legacyDir, cfg.numShards)
-    assert(legacy.searchFuzzy("zanzibat", 10).toSeq
-      == searcher.searchFuzzy("zanzibat", 10).toSeq)
-    assert(legacy.suggestTerms("zanzibat", 5).collect().toSeq
-      == searcher.suggestTerms("zanzibat", 5).collect().toSeq)
-    assert(legacy.searchMatchFuzzy("zanzibat quasat", 10).toSeq
-      == searcher.searchMatchFuzzy("zanzibat quasat", 10).toSeq)
+  test("a v2 segment (dict without the len column) fails loudly at every reader") {
+    // the edit-distance scans prune on `len` with no null escape: a dict
+    // written before it exists only in a segment of an older format,
+    // which no reader opens
+    val dir = s"${TestSpark.tmpRoot}/stream-legacy-len"
+    StreamingIngest.appendSegment(spark, Transcripts.generate(spark, 20L), dir, 0L,
+      IndexConfig(numBuckets = 1, partitions = 4))
+    val seg = s"$dir/seg-0"
+    val fs = new org.apache.hadoop.fs.Path(seg).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    spark.read.parquet(s"$seg/dict").drop("len").write.parquet(s"$seg/dict2")
+    fs.delete(new org.apache.hadoop.fs.Path(s"$seg/dict"), true)
+    assert(fs.rename(new org.apache.hadoop.fs.Path(s"$seg/dict2"), new org.apache.hadoop.fs.Path(s"$seg/dict")))
+    stampFormat(seg, Some(2))
+    assertRejectedEverywhere(dir, seg)
   }
 
   test("bool query: filter context + must_not ≡ global-stats oracle with semi/anti-join") {
@@ -569,29 +562,19 @@ class EngineSpec extends SparkSpec {
     assert(r4.cellsBuilt.size == r1.cellsBuilt.size)
   }
 
-  test("resume over a dict0 from an older build format fails loudly, before any block write") {
-    val dir = s"${TestSpark.tmpRoot}/index-legacy-dict0"
-    val docs = DocIds.assign(DocIds.dedup(Transcripts.generate(spark, 60L)), 4)
-    val cfg2 = cfg.copy(numBuckets = 2)
-    new IndexBuilder(spark, dir, "snap-l", cfg2).build(docs)
-    // rewrite dict0 without the shard-packed-termId marker (a dict0
-    // written before round 9) and clear the bucket cells
-    spark.read.parquet(s"$dir/dict0").drop("tidp").write.parquet(s"$dir/dict0-legacy")
-    hfs.delete(new org.apache.hadoop.fs.Path(s"$dir/dict0"), true)
-    hfs.rename(new org.apache.hadoop.fs.Path(s"$dir/dict0-legacy"),
-      new org.apache.hadoop.fs.Path(s"$dir/dict0"))
+  test("resume over cells of an older format fails loudly, before any write") {
+    // a build interrupted under an older writer (its flag says v2, its
+    // dictionary is the pre-finalize dict0 store) cannot be resumed:
+    // the current block phase reads the dict the dictionary phase writes
+    val dir = s"${TestSpark.tmpRoot}/stream-legacy-resume"
+    val small = IndexConfig(numBuckets = 2, partitions = 4)
+    StreamingIngest.appendSegment(spark, Transcripts.generate(spark, 30L), dir, 0L, small)
+    val seg = s"$dir/seg-0"
+    assert(hfs.rename(new org.apache.hadoop.fs.Path(s"$seg/dict"), new org.apache.hadoop.fs.Path(s"$seg/dict0")))
     for (b <- 0 until 2)
-      hfs.delete(new org.apache.hadoop.fs.Path(s"$dir/manifest/bucket-$b.props"), false)
-    def blockFiles() = {
-      val it = hfs.listFiles(new org.apache.hadoop.fs.Path(s"$dir/blocks"), true)
-      Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
-        .map(f => (f.getPath.toString, f.getModificationTime)).toSet
-    }
-    val before = blockFiles()
-    val e = intercept[IllegalStateException](
-      new IndexBuilder(spark, dir, "snap-l", cfg2).build(docs))
-    assert(e.getMessage.contains("rebuild without resume"), e.getMessage)
-    assert(blockFiles() == before)
+      hfs.delete(new org.apache.hadoop.fs.Path(s"$seg/manifest/bucket-$b.props"), false)
+    stampFormat(seg, Some(2))
+    assertRejectedEverywhere(dir, seg)
     assert(spark.sparkContext.getLocalProperty("spark.job.description") == null)
   }
 
@@ -603,7 +586,7 @@ class EngineSpec extends SparkSpec {
     val cfg2 = cfg.copy(numBuckets = 2)
     val small = DocIds.assign(DocIds.dedup(Transcripts.generate(spark, 40L)), 4)
     new IndexBuilder(spark, dir, "snap-x", cfg2).build(small)
-    for (c <- Seq("docs", "bucket-0", "bucket-1", "finalize"))
+    for (c <- Seq("docs", "bucket-0", "bucket-1"))
       hfs.delete(new org.apache.hadoop.fs.Path(s"$dir/manifest/$c.props"), false)
     val large = DocIds.assign(DocIds.dedup(Transcripts.generate(spark, 400L)), 4)
     val e = intercept[Exception](new IndexBuilder(spark, dir, "snap-x", cfg2).build(large))

@@ -584,49 +584,18 @@ class QuerySurfaceSpec extends SparkSpec {
     assert(warmed.searchPhrasePrefix("the th", 10).toSeq == want)
   }
 
-  test("exists/missing on a legacy (pre-marker) index fails loudly (round-6 advice)") {
+  test("a flag-less (pre-marker) segment fails loudly at every reader") {
+    // a segment written before exists markers carries no format flag: an
+    // exists/missing clause over it would silently invert its results,
+    // so no reader opens it
     val dir = s"${TestSpark.tmpRoot}/index-legacy-exists"
-    val docs = DocIds.assign(DocIds.dedup(Transcripts.generate(spark, 20L)), 4)
-    new IndexBuilder(spark, dir, "snap-legacy-1",
-      cfg.copy(numBuckets = 1, partitions = 4)).build(docs)
-    val flagged = new Searcher(spark, dir, cfg.numShards)
-    assert(flagged.searchBool("the", 5, exists = Seq("tool")).nonEmpty)
-    // simulate an index built before exists markers: strip the flag
-    val p = new org.apache.hadoop.fs.Path(s"$dir/format.props")
-    val hfs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(hfs.delete(p, false))
-    val legacy = new Searcher(spark, dir, cfg.numShards)
-    intercept[IllegalStateException] { legacy.searchBool("the", 5, exists = Seq("tool")) }
-    intercept[IllegalStateException] { legacy.searchBool("the", 5, missing = Seq("tool")) }
-    intercept[IllegalStateException] {
-      legacy.matchCount(BoolQuerySpec("the", exists = Seq("tool")))
-    }
-    intercept[IllegalStateException] {
-      legacy.searchManyBool(Seq(BoolQuerySpec("the", missing = Seq("tool"))), 5)
-    }
-    // everything WITHOUT exists/missing still serves on the legacy index
-    assert(legacy.searchBool("the", 5, filters = Seq("role" -> "user")).nonEmpty)
-
-    // format PROVENANCE under resume (round-7 review): re-running only
-    // the finalize phase over cells an older (flag-less) writer wrote
-    // must NOT upgrade the flag — the postings carry no markers
-    val finalizeCell = new org.apache.hadoop.fs.Path(s"$dir/manifest/finalize.props")
-    assert(hfs.delete(finalizeCell, false))
-    new IndexBuilder(spark, dir, "snap-legacy-1",
-      cfg.copy(numBuckets = 1, partitions = 4)).build(docs) // resume: finalize only
-    assert(graft.index.IndexFormat.version(hfs, dir) == graft.index.IndexFormat.Legacy)
-    intercept[IllegalStateException] {
-      new Searcher(spark, dir, cfg.numShards).searchBool("the", 5, exists = Seq("tool"))
-    }
-    // ...whereas a SAME-version crash-resume (start-stamp present) keeps
-    // the full format: flag restored + finalize re-run → still current
-    graft.index.IndexFormat.write(hfs, dir)
-    assert(hfs.delete(finalizeCell, false))
-    new IndexBuilder(spark, dir, "snap-legacy-1",
-      cfg.copy(numBuckets = 1, partitions = 4)).build(docs)
-    assert(graft.index.IndexFormat.version(hfs, dir) == graft.index.IndexFormat.Version)
-    assert(new Searcher(spark, dir, cfg.numShards)
+    graft.streaming.StreamingIngest.appendSegment(spark, Transcripts.generate(spark, 20L), dir, 0L,
+      cfg.copy(numBuckets = 1, partitions = 4))
+    val seg = s"$dir/seg-0"
+    assert(new Searcher(spark, seg, cfg.numShards)
       .searchBool("the", 5, exists = Seq("tool")).nonEmpty)
+    stampFormat(seg, None)
+    assertRejectedEverywhere(dir, seg)
   }
 
   test("query_string end-to-end: parsed specs ≡ structured calls; mustNotText ≡ oracle") {

@@ -137,4 +137,32 @@ class SegmentLayoutSpec extends SparkSpec {
     }
     all.unpersist()
   }
+
+  test("a built, a streamed and a compacted segment hold the same stores: no stats/, no dict0/") {
+    val lcfg = cfg.copy(textFieldCols = Seq("tool"))
+    val turns = Transcripts.generate(spark, 30L).cache()
+    val built = s"${TestSpark.tmpRoot}/layout-entries-built"
+    new IndexBuilder(spark, built, "snap-entries", lcfg)
+      .build(DocIds.assign(DocIds.dedup(turns), lcfg.partitions))
+    val stream = s"${TestSpark.tmpRoot}/layout-entries-stream"
+    StreamingIngest.appendSegment(spark, turns.filter($"conv_id" < "conv-00000015"), stream, 0L, lcfg)
+    StreamingIngest.appendSegment(spark, turns.filter($"conv_id" >= "conv-00000015"), stream, 1L, lcfg)
+    val fs = new org.apache.hadoop.fs.Path(built).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def entries(dir: String): Seq[String] =
+      fs.listStatus(new org.apache.hadoop.fs.Path(dir)).map(_.getPath.getName).toSeq.sorted
+    val stores = Seq("blocks", "dict", "docs", "fieldstats", "format.props", "manifest")
+    val segment = (stores :+ "keybloom.bin").sorted
+    assert(entries(built) == stores)
+    assert(entries(s"$stream/seg-0") == segment)
+    assert(entries(s"$built/manifest") ==
+      Seq("bucket-0.props", "bucket-1.props", "dict0.props", "docs.props", "fieldstats.props"))
+    Compaction.compactInPlace(spark, stream)
+    val compacted = new MultiSearcher(spark, stream).segments
+    assert(compacted.size == 1)
+    assert(entries(compacted.head) == segment)
+    assert(entries(s"${compacted.head}/manifest") ==
+      Seq("bucket-0.props", "bucket-1.props", "bucket-2.props", "bucket-3.props", "dict0.props",
+        "docs.props"))
+    turns.unpersist()
+  }
 }

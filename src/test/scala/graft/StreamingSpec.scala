@@ -780,12 +780,16 @@ class StreamingSpec extends SparkSpec {
     StreamingIngest.appendSegment(spark, slice(1), idx, 1L, cfg)
     val fs = new org.apache.hadoop.fs.Path(idx).getFileSystem(spark.sparkContext.hadoopConfiguration)
     // without seg-1's docs manifest cell the base comes from its doc store
-    assert(fs.delete(new org.apache.hadoop.fs.Path(s"$idx/seg-1/manifest/docs.props"), false))
+    // (the cell is set aside while batch 2 appends: readers need it)
+    val docsCell = new org.apache.hadoop.fs.Path(s"$idx/seg-1/manifest/docs.props")
+    val asideCell = new org.apache.hadoop.fs.Path(s"$idx/seg-1/docs-cell.aside")
+    assert(fs.rename(docsCell, asideCell))
     // batch 2 crashed inside its docs phase: seg-2 holds its format flag
     // and an uncommitted doc store, and the retry numbers past seg-1
     graft.index.IndexFormat.write(fs, s"$idx/seg-2")
     assert(fs.mkdirs(new org.apache.hadoop.fs.Path(s"$idx/seg-2/docs/_temporary/0")))
     StreamingIngest.appendSegment(spark, slice(2), idx, 2L, cfg)
+    assert(fs.rename(asideCell, docsCell))
     val docs = new graft.query.MultiSearcher(spark, idx).docs
     assert(docs.count() == all.count())
     assert(docs.select("docId").distinct().count() == all.count())
@@ -927,27 +931,16 @@ class StreamingSpec extends SparkSpec {
     assert(multi.search("w0x0 w0x1", 2).nonEmpty)
   }
 
-  test("a dir whose older segment stores score bounds still serves and compacts") {
-    // a segment from a writer that stored score bounds: its dict has a
-    // `maxScore` column and its blocks `maxTf` / `maxScore`; newer
-    // segments have neither. Readers bind columns by name, so hits stay
-    // the same, and compaction must not union whole dict rows.
+  test("a dir holding a v2 segment (stored score bounds) fails loudly at every reader") {
+    // a segment from a writer that stored score bounds (a `maxScore` dict
+    // column, `maxTf` / `maxScore` block columns) carries that writer's
+    // format flag: the dir it sits in no longer opens, merges or resumes,
+    // while the current segment beside it still serves on its own
     val idx = s"${TestSpark.tmpRoot}/stream-idx-mixed-writer"
     val cfg = IndexConfig(numBuckets = 2, partitions = 4, fieldCols = Seq("role"))
     val all = Transcripts.generate(spark, 40L).cache()
     StreamingIngest.appendSegment(spark, all.filter($"conv_id" < "conv-00000020"), idx, 0L, cfg)
     StreamingIngest.appendSegment(spark, all.filter($"conv_id" >= "conv-00000020"), idx, 1L, cfg)
-    def hits(warm: Boolean): Seq[Seq[graft.model.Scored]] = {
-      val m = new graft.query.MultiSearcher(spark, idx)
-      if (warm) m.warm()
-      Seq("the", "zanzibar quasar lattice", "one have t999").map(m.search(_, 10).toSeq) ++ Seq(
-        m.searchPhrase("zanzibar quasar", 10).toSeq,
-        m.searchBool("the", 10, filters = Seq("role" -> "user")).toSeq)
-    }
-    val before = hits(warm = false)
-    assert(before.head.nonEmpty)
-    assert(hits(warm = true) == before)
-
     val fs = new org.apache.hadoop.fs.Path(idx).getFileSystem(spark.sparkContext.hadoopConfiguration)
     def replace(dir: String, write: String => Unit): Unit = {
       val tmp = s"$dir.rewrite"
@@ -964,16 +957,12 @@ class StreamingSpec extends SparkSpec {
         $"docs", $"tfs", $"dls", $"poss", $"count".as("maxTf"),
         ($"count" * 0.25).cast("double").as("maxScore"), $"nbytes")
     replace(s"$seg/blocks", oldBlocks.write.partitionBy("bucket", "shard").parquet(_))
-    assert(spark.read.parquet(s"$seg/dict").columns.contains("maxScore"))
-    assert(Set("maxTf", "maxScore").subsetOf(spark.read.parquet(s"$seg/blocks").columns.toSet))
-    assert(!spark.read.parquet(s"$idx/seg-1/dict").columns.contains("maxScore"))
-
-    assert(hits(warm = false) == before)
-    assert(hits(warm = true) == before)
-    graft.index.Compaction.compactInPlace(spark, idx)
-    assert(graft.index.SegmentCatalog.liveSegments(spark, idx).size == 1)
-    assert(hits(warm = false) == before)
-    assert(hits(warm = true) == before)
+    stampFormat(seg, Some(2))
+    assertRejectedEverywhere(idx, seg)
+    val current = new Searcher(spark, s"$idx/seg-1", cfg.numShards)
+    val want = graft.query.Oracle.topK(spark.read.parquet(s"$idx/seg-1/docs"), "the", 10)
+      .as[graft.model.Scored].collect().toSeq
+    assert(want.nonEmpty && current.search("the", 10).toSeq == want)
     all.unpersist(blocking = false)
   }
 
@@ -1034,6 +1023,28 @@ class StreamingSpec extends SparkSpec {
     }
     assert(StreamingIngest.deleteConvs(spark, idx, (0 until segments).map(b => f"conv-${8 * b + 3}%08d")) > 0)
     idx
+  }
+
+  test("maybeCompact below the tombstone ratio skips the distinct tombstone count") {
+    import graft.index.{Compaction, CompactionPolicy, SegmentCatalog, Tombstones}
+    val idx = churnedDir("stream-idx-ratio-jobs", 2)
+    val files = Tombstones.listDataFiles(spark, idx)
+    val distinct = Tombstones.loadDF(spark, files).count()
+    val rows = Tombstones.read(spark, files).count()
+    val n = new graft.query.MultiSearcher(spark, idx).segments
+      .map(s => new graft.index.IndexBuilder(spark, s, "").manifestStats.n).sum
+    assert(distinct > 0 && rows < 0.9 * n)
+    // the raw row count bounds the distinct count from above: below the
+    // ratio the distinct count's shuffle never runs
+    val distinctJobs = jobsOf("tomb-distinct")(Tombstones.loadDF(spark, files).count())
+    val rowJobs = jobsOf("tomb-rows")(Tombstones.read(spark, files).count())
+    val below = jobsOf("compact-below")(
+      assert(Compaction.maybeCompact(spark, idx, CompactionPolicy(tombstoneRatio = 0.9)).isEmpty))
+    assert(below == rowJobs && rowJobs < distinctJobs, s"$below, $rowJobs, $distinctJobs")
+    // at or above the bound the distinct count decides, as before
+    assert(Compaction.maybeCompact(spark, idx,
+      CompactionPolicy(tombstoneRatio = distinct.toDouble / n)).isDefined)
+    assert(SegmentCatalog.liveSegments(spark, idx).size == 1 && !Tombstones.exists(spark, idx))
   }
 
   test("a refresh's first search runs a constant number of jobs, whatever the live segment count") {
@@ -1106,7 +1117,7 @@ class StreamingSpec extends SparkSpec {
     assert(Compaction.maybeCompact(spark, idx).isEmpty) // 2 segments, no tombstone: nothing due
   }
 
-  test("bucket cells record their blocks' exact docId bounds; a cell without them is scanned") {
+  test("bucket cells cut each segment from its lowest docId and hold its blocks' exact bounds") {
     import graft.index.{Compaction, IndexBuilder, SegmentCatalog}
     val idx = churnedDir("stream-idx-bounds", 3)
     def blockBounds(seg: String): Seq[(Int, Long, Long)] =
@@ -1116,17 +1127,18 @@ class StreamingSpec extends SparkSpec {
         .as[(Int, Long, Long)].collect().toSeq.sorted
     def check(seg: String): Unit = {
       val ib = new IndexBuilder(spark, seg, "")
-      assert(ib.manifestBucketRanges.map(_.sorted).contains(blockBounds(seg)), seg)
-      // and the docs cell's stats are the stats store's, to the bit
-      val st = spark.read.parquet(s"$seg/stats").as[graft.model.IndexStats].head()
-      val ms = ib.manifestStats.get
-      assert(ms.n == st.n && java.lang.Double.doubleToRawLongBits(ms.avgdl) ==
-        java.lang.Double.doubleToRawLongBits(st.avgdl), seg)
+      assert(ib.manifestBucketRanges.sorted == blockBounds(seg), seg)
+      // the docs cell's avgdl is Σdl / N over the doc store, to the bit
+      val (n, sumDl) = spark.read.parquet(s"$seg/docs")
+        .agg(org.apache.spark.sql.functions.count($"docId"), org.apache.spark.sql.functions.sum($"dl"))
+        .as[(Long, Long)].head()
+      val ms = ib.manifestStats
+      assert(ms.n == n && java.lang.Double.doubleToRawLongBits(ms.avgdl) ==
+        java.lang.Double.doubleToRawLongBits(sumDl.toDouble / n), seg)
       // the declared schemas are the written ones (a compacted segment's
       // blocks carry no nbytes), and the docs cell records the doc store's
-      for ((store, declared) <- Seq("stats" -> IndexBuilder.StatsSchema,
-          "fieldstats" -> IndexBuilder.FieldStatsSchema, "dict" -> IndexBuilder.DictSchema,
-          "blocks" -> IndexBuilder.BlocksSchema)) {
+      for ((store, declared) <- Seq("fieldstats" -> IndexBuilder.FieldStatsSchema,
+          "dict" -> IndexBuilder.DictSchema, "blocks" -> IndexBuilder.BlocksSchema)) {
         val written = spark.read.parquet(s"$seg/$store").schema.map(f => f.name -> f.dataType)
         val missing = declared.map(f => f.name -> f.dataType).toSet -- written
         assert(written.toSet.subsetOf(declared.map(f => f.name -> f.dataType).toSet) &&
@@ -1134,14 +1146,20 @@ class StreamingSpec extends SparkSpec {
       }
       assert(ib.readDocs.schema == spark.read.parquet(s"$seg/docs").schema, seg)
     }
+    // each batch's docIds start at its base, and both of its buckets hold
+    // postings: 3 segments × 2 buckets
+    val segs = SegmentCatalog.liveSegments(spark, idx)
+    assert(segs.size == 3 &&
+      segs.flatMap(s => new IndexBuilder(spark, s, "").manifestBucketRanges).size == 6)
     val before = new graft.query.MultiSearcher(spark, idx)
     val ranges = before.bucketRanges.toSeq
     val hits = before.search("the zanzibar", 10).toSeq
-    SegmentCatalog.liveSegments(spark, idx).foreach(check)
+    assert(hits.nonEmpty && hits == graft.query.Oracle.topK(before.docs, "the zanzibar", 10)
+      .as[graft.model.Scored].collect().toSeq)
+    segs.foreach(check)
     // a partial merge of two segments: its cells span exactly its blocks,
     // and no two of them overlap
-    Compaction.compactInPlace(spark, idx,
-      SegmentCatalog.liveSegments(spark, idx).take(2))
+    Compaction.compactInPlace(spark, idx, segs.take(2))
     val compacted = SegmentCatalog.liveSegments(spark, idx).filter(_.contains("seg-compacted-"))
     assert(compacted.size == 1)
     check(compacted.head)
@@ -1153,16 +1171,14 @@ class StreamingSpec extends SparkSpec {
     val merged = new graft.query.MultiSearcher(spark, idx)
     val mergedRanges = merged.bucketRanges.toSeq
     assert(merged.search("the zanzibar", 10).toSeq == hits)
-    // an older writer's cells (no bounds): the scan gives the same ranges
-    for (seg <- SegmentCatalog.liveSegments(spark, idx)) {
-      val ib = new IndexBuilder(spark, seg, "")
-      ib.allManifests.filter(_.cell.startsWith("bucket=")).foreach(m => ib.writeManifest(m))
-      assert(ib.manifestBucketRanges.isEmpty)
-    }
-    val scanned = new graft.query.MultiSearcher(spark, idx)
-    assert(scanned.bucketRanges.toSeq == mergedRanges)
-    assert(scanned.search("the zanzibar", 10).toSeq == hits)
     // a partial merge keeps every input bucket as its own (shifted) bucket
-    assert(ranges.nonEmpty && mergedRanges.size == ranges.size)
+    assert(ranges.size == 6 && mergedRanges.size == ranges.size)
+    // an older writer's cells (no bounds, its format flag) are refused,
+    // never scanned
+    val seg = compacted.head
+    val ib = new IndexBuilder(spark, seg, "")
+    ib.allManifests.filter(_.cell.startsWith("bucket=")).foreach(m => ib.writeManifest(m))
+    stampFormat(seg, Some(2))
+    assertRejectedEverywhere(idx, seg)
   }
 }

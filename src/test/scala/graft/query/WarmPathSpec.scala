@@ -49,7 +49,7 @@ class WarmPathSpec extends SparkSpec {
   private def assertParity(idx: String, queries: Seq[String], phrases: Seq[String]): Searcher = {
     val warm = new MultiSearcher(spark, idx).warm()
     val dist = new MultiSearcher(spark, idx).warm(maxLocalBlockBytes = 0)
-    assert(warm.servesLocally && !warm.storedBounds)
+    assert(warm.servesLocally)
     val live = dist.docs.cache()
     def same(what: String, w: Array[Scored], d: Array[Scored], oracle: DataFrame): Unit = {
       val want = hits(oracle)
@@ -172,7 +172,7 @@ class WarmPathSpec extends SparkSpec {
       convRange(all, 20, 30).unionByName(convRange(all, 0, 5).filter($"turn_idx" === 1))))
     assert(StreamingIngest.deleteConvs(spark, idx, Seq("conv-00000012")) > 0)
     val s = new MultiSearcher(spark, idx).warm()
-    assert(s.segments.size == 3 && s.servesLocally && !s.storedBounds)
+    assert(s.segments.size == 3 && s.servesLocally)
     def queries(): Seq[Array[Scored]] = Seq(
       s.search("the zanzibar", k),
       s.searchConjunctive("the one", k),
@@ -232,7 +232,7 @@ class WarmPathSpec extends SparkSpec {
     assert(queries(tight) == want)
     assert(jobsOf("warm-path-budget-tight")(assert(queries(tight) == want)) > 0)
     val fits = new MultiSearcher(spark, idx).warm(maxLocalBlockBytes = decoded)
-    assert(fits.servesLocally && fits.storedBounds)
+    assert(fits.servesLocally)
     assert(queries(fits) == want)
     val jobs = jobsOf("warm-path-budget-fits")(assert(queries(fits) == want))
     assert(jobs == 0, s"$jobs Spark job(s) ran for warm queries")
@@ -247,7 +247,7 @@ class WarmPathSpec extends SparkSpec {
     val s = new MultiSearcher(spark, idx)
     s.maxDriverRemovedTerms = 0
     s.warm()
-    assert(!s.servesLocally && s.localBytes == 0L && !s.storedBounds)
+    assert(!s.servesLocally && s.localBytes == 0L)
     val live = s.docs.cache()
     for (q <- Seq("the zanzibar", "one have", "quasar")) {
       assert(s.search(q, k).toSeq == hits(Oracle.topK(live, q, k)), s"OR '$q'")

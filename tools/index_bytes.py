@@ -6,7 +6,7 @@
 Prints one row per top-level entry under <dir> with the bytes of its
 regular files (the same count as perfbench's `bytesUnder`: parquet data,
 footers, .crc side files, _SUCCESS markers, manifests), then one row per
-parquet column of blocks/, dict/, dict0/ and docs/ with its compressed
+parquet column of blocks/, dict/ and docs/ with its compressed
 bytes summed over every file and row group, and one `(rest)` row per
 parquet dir: its file bytes outside the column chunks (footers, magic,
 .crc files). With a second dir, prints both sides and the difference
@@ -19,7 +19,7 @@ import sys
 
 import pyarrow.parquet as pq
 
-PARQUET_DIRS = ["blocks", "dict", "dict0", "docs"]
+PARQUET_DIRS = ["blocks", "dict", "docs"]
 
 
 def file_bytes(path):
