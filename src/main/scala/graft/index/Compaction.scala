@@ -214,7 +214,12 @@ object Compaction {
     val survivors = living
       .observe(obs, baseAggs.head, (baseAggs.tail ++ fieldAggs): _*)
       .drop("__seg")
-    survivors.write.mode(SaveMode.Overwrite).parquet(s"$outDir/docs")
+    // the docs and blocks writes take one partition per
+    // IndexBuilder.DocsPerPart input docs (the build's rule); the input
+    // scans' splits are the ceiling
+    val parts = IndexBuilder.partsFor(
+      segments.map(new IndexBuilder(spark, _, snap).manifestStats.n).sum, Int.MaxValue)
+    survivors.coalesce(parts).write.mode(SaveMode.Overwrite).parquet(s"$outDir/docs")
     val row = obs.get
     val n = row("n").asInstanceOf[Long]
     val sumDl = row("sumdl").asInstanceOf[Long]
@@ -292,7 +297,7 @@ object Compaction {
         filterBlock(blk, tombBc.value)
       }
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    rewritten.write.partitionBy("bucket", "shard")
+    rewritten.coalesce(parts).write.partitionBy("bucket", "shard")
       .mode(SaveMode.Overwrite).parquet(s"$outDir/blocks")
 
     // exact per-term stats over the SURVIVING postings: df needs no
@@ -336,7 +341,8 @@ object Compaction {
     IndexFormat.write(hfs, outDir)
     val out = new IndexBuilder(spark, outDir, snap)
     out.writeManifest(BuildManifest("docs", -1, minDocId, maxDocId + 1, snap, n, 0, "done", 0),
-      IndexBuilder.docsKeys(n, avgdl, survivors.schema))
+      IndexBuilder.docsKeys(n, avgdl, survivors.schema,
+        IndexBuilder.dataFiles(hfs, new Path(s"$outDir/docs")).size))
     out.writeManifest(BuildManifest("dict0", -1, 0, n, snap, perBucket.values.map(_.postings).sum,
       0, "done", 0),
       Seq("vocab" -> nVocab))
@@ -345,8 +351,9 @@ object Compaction {
     val nBuckets = offsets.last
     for (b <- 0 until nBuckets) perBucket.get(b) match {
       case Some(m) => out.writeManifest(BuildManifest(s"bucket=$b", b, m.minDocId, m.maxDocId + 1,
-        snap, m.postings, m.bytes, "done", 0), m.keys)
-      case None => out.writeManifest(BuildManifest(s"bucket=$b", b, 0, 0, snap, 0, 0, "done", 0))
+        snap, m.postings, m.bytes, "done", 0), m.keys :+ ("parts" -> parts))
+      case None => out.writeManifest(BuildManifest(s"bucket=$b", b, 0, 0, snap, 0, 0, "done", 0),
+        Seq("parts" -> parts))
     }
     // key bloom for the merged segment: future appends prune their
     // upsert key-lookup against it like any built segment's
@@ -397,7 +404,7 @@ object Compaction {
     // inputs are deleted, re-append them, then delete the snapshot
     // files (append-first: a crash in between leaves harmless
     // duplicates, never a resurrection).
-    val surviving: Option[DataFrame] =
+    val surviving: Option[(DataFrame, Long)] =
       if (!partial || report.consumedTombstones.isEmpty) None
       else {
         val mergedDocs = inputs.map(s =>
@@ -405,7 +412,8 @@ object Compaction {
         val surv = Tombstones.loadDF(spark, report.consumedTombstones)
           .join(mergedDocs, Seq("docId"), "left_anti")
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        if (surv.count() == 0) { surv.unpersist(blocking = false); None } else Some(surv)
+        val k = surv.count()
+        if (k == 0) { surv.unpersist(blocking = false); None } else Some(surv -> k)
       }
     val target = SegmentCatalog.nextCompactedName(fs, indexDir)
     // 1. retire the inputs in one atomic pointer write — ignored by
@@ -427,8 +435,8 @@ object Compaction {
     //    consumed are deleted — files appended by concurrent ingest
     //    stay (their docIds were NOT dropped by this merge and must
     //    remain excluded).
-    surviving.foreach { surv =>
-      Tombstones.append(spark, indexDir, surv)
+    surviving.foreach { case (surv, k) =>
+      Tombstones.append(spark, indexDir, surv, IndexBuilder.partsFor(k, Int.MaxValue))
       surv.unpersist(blocking = false)
     }
     inputs.foreach(s => fs.delete(new Path(s), true))

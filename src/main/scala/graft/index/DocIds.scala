@@ -1,7 +1,8 @@
 package graft.index
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
+import org.apache.spark.rdd.{PartitionCoalescer, PartitionGroup, RDD}
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
@@ -76,7 +77,12 @@ object DocIds {
 
   /** The one numbering routine: `docId` (dense from `base` in key
     * order), the frame's columns, `dl`. With `lww`, only each key's
-    * winner (`ts` desc, `text` desc) is kept.
+    * winner (`ts` desc, `text` desc) is kept. The range shuffle cuts the
+    * keys into `partitions` ranges; once their rows are counted, runs of
+    * adjacent ranges merge into [[IndexBuilder.partsFor]] partitions, so
+    * a small batch is numbered — and later stored — as one partition and
+    * a large one keeps `partitions`. Merging whole adjacent ranges keeps
+    * each partition's docIds one contiguous run.
     */
   private def number(frame: DataFrame, partitions: Int, base: Long, lww: Boolean): DataFrame = {
     val spark = frame.sparkSession
@@ -102,10 +108,11 @@ object DocIds {
           fresh
         }
       }
+    val ranges = sorted.rdd.getNumPartitions
     val counts: Map[Int, Long] = sorted
       .mapPartitions(it => Iterator((TaskContext.getPartitionId(), kept(it).size.toLong)))
       .collect().toMap
-    val offsets = (0 until partitions).map(counts.getOrElse(_, 0L)).scanLeft(base)(_ + _).toArray
+    val offsets = (0 until ranges).map(counts.getOrElse(_, 0L)).scanLeft(base)(_ + _).toArray
     val bc = spark.sparkContext.broadcast(offsets)
     val outSchema = StructType(StructField("docId", LongType, nullable = false) +:
       sorted.schema.fields :+ StructField("dl", IntegerType, nullable = false))
@@ -114,17 +121,33 @@ object DocIds {
     // materialized exactly once while `sorted` is still cached, and
     // pinned with MEMORY_AND_DISK. Durable builds (IndexBuilder phase A)
     // immediately persist it to parquet and re-read from there.
-    val docs = sorted.mapPartitions { it =>
-      var id = bc.value(TaskContext.getPartitionId())
+    val parts = IndexBuilder.partsFor(offsets.last - base, ranges)
+    val numbered = sorted.rdd.mapPartitionsWithIndex { (i, it) =>
+      var id = bc.value(i)
       kept(it).map { r =>
         val out = Row.fromSeq((id +: r.toSeq) :+ Analyzer.tokenize(r.getString(textIdx)).length)
         id += 1
         out
       }
-    }(Encoders.row(outSchema))
+    }.coalesce(parts, shuffle = false, Some(new Adjacent(parts)))
+    val docs = spark.createDataFrame(numbered, outSchema)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     docs.count()
     sorted.unpersist(blocking = false)
     docs
+  }
+
+  /** Merges runs of adjacent parent partitions into `parts` groups, in
+    * order: parent `i` of `n` goes to group `i · parts / n`, so every
+    * group is non-empty and reads its parents in index order (Spark's
+    * default coalescer groups by locality and may interleave them).
+    */
+  private final class Adjacent(parts: Int) extends PartitionCoalescer with Serializable {
+    def coalesce(maxPartitions: Int, parent: RDD[_]): Array[PartitionGroup] = {
+      val groups = Array.fill(parts)(new PartitionGroup())
+      val n = parent.partitions.length
+      parent.partitions.foreach(p => groups((p.index.toLong * parts / n).toInt).partitions += p)
+      groups
+    }
   }
 }

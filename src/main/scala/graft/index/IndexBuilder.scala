@@ -276,6 +276,13 @@ final case class IndexConfig(
     numShards: Int = 8,
     blockSize: Int = 128,
     salt: Int = 16,
+    /** The most partitions a write of this index takes — the cores it
+      * may occupy. A ceiling, not a floor: every write on the ingest
+      * path takes one partition per [[IndexBuilder.DocsPerPart]] docs
+      * ([[IndexBuilder.partsFor]]), so a small micro-batch is one
+      * partition and a large build reaches this count (its block phase
+      * goes above it only when its postings need more sort memory).
+      */
     partitions: Int = 32,
     /** Store per-posting token positions (varint gap streams) in the
       * blocks — what makes phrase queries answerable (ES analyzed fields
@@ -530,6 +537,12 @@ class IndexBuilder(
     math.min(driver, executor) / IndexBuilder.TranslateHeapShare
   }
 
+  /** Docs per partition for this builder's block phase
+    * ([[IndexBuilder.partsFor]]). Tests override it to push a small
+    * fixture up to `cfg.partitions`.
+    */
+  protected def docsPerPart: Long = IndexBuilder.DocsPerPart
+
   private def isDone(cell: String): Boolean =
     readManifest(cell).exists(m => m.status == "done" && m.sourceSnapshotId == snapshotId)
 
@@ -718,7 +731,8 @@ class IndexBuilder(
       val lo = Option(row("mn")).map(_.asInstanceOf[Long]).getOrElse(0L)
       val bound = Option(row("mx")).map(_.asInstanceOf[Long] + 1L).getOrElse(0L)
       Seq(BuildManifest("docs", -1, lo, bound, snapshotId, n, 0, "done", 0) ->
-        IndexBuilder.docsKeys(n, avgdl, docsIn.schema))
+        IndexBuilder.docsKeys(n, avgdl, docsIn.schema,
+          IndexBuilder.dataFiles(fs, new Path(docsPath)).size))
     }
     // Size file splits to the build parallelism: the tokenize stage's
     // task count is bounded by input splits, and its map-side partial
@@ -816,6 +830,26 @@ class IndexBuilder(
     val blockSize = cfg.blockSize
     val bucketCells = (0 until cfg.numBuckets).map(b => s"bucket=$b")
     phases(bucketCells, "blocks") {
+      // Partition count: the docs decide how many partitions the phase
+      // fills (IndexBuilder.partsFor, capped by cfg.partitions), and the
+      // per-task SORT memory decides how many it needs: each partition's
+      // postings are sorted in executor memory, so a partition must stay
+      // ~targetSortBytes regardless of parallelism (round-2 finding:
+      // partitions = cores made high-core runs spill — ~64 B/posting in
+      // the sorter — while low-core runs of the same corpus fit, silently
+      // skewing the N-vs-4N comparison). The larger of the two wins.
+      // Clamped to the inverse-key-table cap (DirectPartition.MaxParts);
+      // past it, partitions exceed targetSortBytes and the external sorter
+      // spills — graceful, and 64k × 128 MB already covers ~10^11
+      // postings per build.
+      val sortBytesPerPosting = 64L
+      val targetSortBytes = 128L << 20
+      val neededParts = math.min(DirectPartition.MaxParts.toLong,
+        1L + totalPostings * sortBytesPerPosting / targetSortBytes).toInt
+      val partsPerBucket = math.max(1, math.min(
+        DirectPartition.MaxParts / cfg.numBuckets,
+        math.max(IndexBuilder.partsFor(n, cfg.partitions, docsPerPart), neededParts) /
+          cfg.numBuckets))
       val vocab = required("dict0", "vocab").toLong
       val termBytes = required("dict0", "termBytes").toLong
       // term→(termId, df) TRANSLATE map when it fits the heap
@@ -864,24 +898,6 @@ class IndexBuilder(
         // Within a partition, sort on (termId, docId) restores term runs;
         // across partitions a hot term's runs are docId-disjoint slices —
         // exactly the invariant WAND needs of its block lists.
-        // Partition count is sized to per-task SORT memory, not to cores:
-        // each partition's postings are sorted in executor memory, so a
-        // partition must stay ~targetSortBytes regardless of parallelism
-        // (round-2 finding: partitions = cores made high-core runs spill
-        // — ~64 B/posting in the sorter — while low-core runs of the same
-        // corpus fit, silently skewing the N-vs-4N comparison). cores only
-        // set the FLOOR so all slots stay busy. Clamped to the
-        // inverse-key-table cap (DirectPartition.MaxParts); past it,
-        // partitions exceed targetSortBytes and the external sorter
-        // spills — graceful, and 64k × 128 MB already covers ~10^11
-        // postings per build.
-        val sortBytesPerPosting = 64L
-        val targetSortBytes = 128L << 20
-        val neededParts = math.min(DirectPartition.MaxParts.toLong,
-          1L + totalPostings * sortBytesPerPosting / targetSortBytes).toInt
-        val partsPerBucket = math.max(1, math.min(
-          DirectPartition.MaxParts / cfg.numBuckets,
-          math.max(cfg.partitions, neededParts) / cfg.numBuckets))
         val subWidth = math.max(1L, (bucketWidth + partsPerBucket - 1) / partsPerBucket)
         val numParts = cfg.numBuckets * partsPerBucket
         val hotDf = math.max(numParts.toLong * blockSize,
@@ -937,7 +953,7 @@ class IndexBuilder(
         val m = perBucket.get(b)
         BuildManifest(s"bucket=$b", b, lo, math.min(idBound, lo + bucketWidth), snapshotId,
           m.fold(0L)(_.postings), m.fold(0L)(_.bytes), "done", 0) ->
-          m.fold(Seq.empty[(String, Any)])(_.keys)
+          (m.fold(Seq.empty[(String, Any)])(_.keys) :+ ("parts" -> partsPerBucket))
       }
     }
 
@@ -972,13 +988,55 @@ object IndexBuilder {
       "docs BINARY, tfs BINARY, dls BINARY, poss BINARY, nbytes INT, bucket INT, shard INT")
 
   /** The `docs` cell's extra keys: corpus stats (`n`, `avgdl`,
-    * [[IndexBuilder.manifestStats]]) and the doc store's schema as DDL
+    * [[IndexBuilder.manifestStats]]), the doc store's schema as DDL
     * (`schema`, [[IndexBuilder.readDocs]]; every column nullable, as
-    * parquet reads it back).
+    * parquet reads it back) and its data-file count (`parts`).
     */
-  def docsKeys(n: Long, avgdl: Double, docs: StructType): Seq[(String, Any)] =
+  def docsKeys(n: Long, avgdl: Double, docs: StructType, parts: Int): Seq[(String, Any)] =
     Seq("n" -> n, "avgdl" -> avgdl,
-      "schema" -> StructType(docs.fields.map(_.copy(nullable = true))).toDDL)
+      "schema" -> StructType(docs.fields.map(_.copy(nullable = true))).toDDL, "parts" -> parts)
+
+  /** The data files directly under `dir` (no `_SUCCESS` marker, no
+    * hidden `.crc` side file); none when it is absent.
+    */
+  def dataFiles(fs: org.apache.hadoop.fs.FileSystem, dir: Path): Seq[Path] =
+    if (!fs.exists(dir)) Seq.empty
+    else fs.listStatus(dir).toSeq.filter(_.isFile).map(_.getPath)
+      .filter(p => !p.getName.startsWith("_") && !p.getName.startsWith("."))
+
+  /** Docs a partition of a write must carry before the write takes
+    * another one: the one constant of [[partsFor]]. A partition costs the
+    * same fixed work whatever it holds — a task to serialize, schedule and
+    * run, codegen lookups, a parquet writer and footer for every file it
+    * writes, and a split to plan and open for every later read of those
+    * files. Measured with perfbench on a 4-vCPU host (`--trace 1`,
+    * seed 901; numShards = 8, so a block-phase partition writes 8 block
+    * files):
+    *   - fixed: one 1,872-turn ingest segment cut into 4 partitions
+    *     wrote 32 block files and spent 1,625 ms of block-phase CPU; cut
+    *     into 1, it wrote 8 and spent 865 ms — ~32 ms per file (~35 ms
+    *     over three pairs), ~280 ms per partition;
+    *   - per doc: what is left once the files' share is taken out,
+    *     ~300 µs of block-phase CPU per doc on that segment
+    *     ((865 − 8 · 35) ms / 1,872) and ~340 µs on the 22,487-turn
+    *     search_warm fixture ((8,786 − 32 · 35) ms / 22,487).
+    * 4,096 is the power of two at which the fixed cost falls under a
+    * quarter of a partition's work (~280 ms against 4,096 · ~300 µs ≈
+    * 1.2 s); with ~1,000 docs or fewer a partition would spend more on
+    * its files than on its docs.
+    */
+  val DocsPerPart = 4096L
+
+  /** The partitions a write of `docs` documents (or of rows keyed by
+    * them — tombstoned docIds) uses: one per [[DocsPerPart]] docs, at
+    * least one, at most `ceiling` (`IndexConfig.partitions`, the cores a
+    * build may occupy). The one sizing rule of every write on the ingest
+    * path: the doc store ([[DocIds]]), the block phase (which may still
+    * go above it for sort memory), the key→tombstone appends and
+    * compaction's docs and blocks.
+    */
+  def partsFor(docs: Long, ceiling: Int, docsPerPart: Long = DocsPerPart): Int =
+    if (docs <= 0) 1 else math.max(1L, math.min(ceiling.toLong, (docs - 1) / docsPerPart + 1)).toInt
 
   /** A bucket's manifest metrics: postings, compressed bytes, and the
     * exact docId bounds of its blocks (min firstDocId / max lastDocId).

@@ -73,7 +73,8 @@ object SegmentCatalog {
       org.apache.hadoop.fs.Options.Rename.OVERWRITE)
   }
 
-  /** The LIVE `seg-*` segment dirs under `indexDir`, sorted (determinism).
+  /** The LIVE `seg-*` segment dirs under `indexDir`, sorted (determinism);
+    * a root FILE named `seg-*` is not a segment.
     * The pointer's retired set applies only while its live segment
     * exists — an interrupted compaction (pointer written, rename not yet
     * done) resolves to the pre-compaction segment set.
@@ -81,7 +82,7 @@ object SegmentCatalog {
   def liveSegments(fs: FileSystem, indexDir: String): Seq[String] = {
     val root = new Path(indexDir)
     if (!fs.exists(root)) return Seq.empty
-    val all = fs.listStatus(root).toSeq.map(_.getPath)
+    val all = fs.listStatus(root).toSeq.filter(_.isDirectory).map(_.getPath)
       .filter(_.getName.startsWith("seg-"))
     val retired = readPointer(fs, indexDir) match {
       case Some(ptr) if all.exists(_.getName == ptr.live) => ptr.retired
@@ -166,10 +167,7 @@ object Tombstones {
   def listDataFiles(spark: SparkSession, indexDir: String): Seq[String] = {
     val p = new Path(dir(indexDir))
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq.filter(_.isFile).map(_.getPath)
-      .filter(q => !q.getName.startsWith("_") && !q.getName.startsWith("."))
-      .map(_.toString).sorted
+    IndexBuilder.dataFiles(fs, p).map(_.toString).sorted
   }
 
   /** The docIds of exactly `files` (a [[listDataFiles]] snapshot) read
@@ -204,14 +202,41 @@ object Tombstones {
     files.foreach(f => fs.delete(new Path(f), false))
     // drop the dir (and its _SUCCESS marker) only when nothing new arrived
     val p = new Path(dir(indexDir))
-    if (fs.exists(p) && !fs.listStatus(p).exists(st =>
-        st.isFile && !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith(".")))
-      fs.delete(p, true)
+    if (fs.exists(p) && IndexBuilder.dataFiles(fs, p).isEmpty) fs.delete(p, true)
   }
 
-  def append(spark: SparkSession, indexDir: String, docIds: DataFrame): Unit =
+  /** Appends `docIds` as at most `parts` data files and returns how many
+    * rows it wrote, counted by the write job itself (one Spark action).
+    * The rows are written to a hidden staging dir beside the store and
+    * moved in only when there is at least one, so an append that matched
+    * nothing leaves the store exactly as it was: an absent store stays
+    * absent, and no zero-row file makes readers see tombstones. A crash
+    * mid-move leaves some of the files in the store and a stray staging
+    * dir no reader lists; the retried append writes the rows again, and
+    * duplicates are harmless.
+    */
+  def append(spark: SparkSession, indexDir: String, docIds: DataFrame, parts: Int): Long = {
+    val store = new Path(dir(indexDir))
+    val staging = new Path(indexDir, s".tombstones-${java.util.UUID.randomUUID()}")
+    val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val obs = org.apache.spark.sql.Observation()
     docIds.select(col("docId").cast("long"))
-      .write.mode(SaveMode.Append).parquet(dir(indexDir))
+      .observe(obs, count(lit(1)).as("n"))
+      .coalesce(parts)
+      .write.mode(SaveMode.Overwrite).parquet(staging.toString)
+    val n = obs.get("n").asInstanceOf[Long]
+    if (n > 0) {
+      fs.mkdirs(store)
+      // the data files and, unless an earlier append left one, _SUCCESS
+      // (a checksum side file moves with its file)
+      fs.listStatus(staging).map(_.getPath)
+        .filter(p => !p.getName.startsWith(".") && !fs.exists(new Path(store, p.getName)))
+        .foreach(p => require(fs.rename(p, new Path(store, p.getName)),
+          s"moving tombstone file $p into $store failed"))
+    }
+    fs.delete(staging, true)
+    n
+  }
 
   // --- per-segment conv_id bloom (prunes the upsert key-lookup) ----------
 

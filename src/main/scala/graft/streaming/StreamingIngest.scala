@@ -94,7 +94,7 @@ object StreamingIngest {
       .buildFrom(docs)
     graft.index.Tombstones.writeKeyBloom(spark, segDir, docs, report.n)
     // the LWW dedup left one row per key
-    tombstoneMatching(spark, indexDir, docs.select(col("conv_id"), col("turn_idx")),
+    tombstoneMatching(spark, indexDir, docs.select(col("conv_id"), col("turn_idx")), report.n,
       docs.select(col("conv_id")).distinct().as[String](Encoders.STRING).take(MaxBloomProbes + 1),
       skip = Some(segDir))
     docs.unpersist(blocking = false)
@@ -109,7 +109,7 @@ object StreamingIngest {
       keys: Seq[(String, Int)]): Long = {
     import spark.implicits._
     if (keys.isEmpty) return 0L
-    tombstoneMatching(spark, indexDir, keys.toDF("conv_id", "turn_idx"),
+    tombstoneMatching(spark, indexDir, keys.toDF("conv_id", "turn_idx"), keys.size.toLong,
       keys.map(_._1).distinct, skip = None)
   }
 
@@ -120,7 +120,8 @@ object StreamingIngest {
       convIds: Seq[String]): Long = {
     import spark.implicits._
     if (convIds.isEmpty) return 0L
-    tombstoneMatching(spark, indexDir, convIds.toDF("conv_id"), convIds.distinct, skip = None)
+    tombstoneMatching(spark, indexDir, convIds.toDF("conv_id"), Long.MaxValue, convIds.distinct,
+      skip = None)
   }
 
   /** The most distinct conv_ids a key→tombstone step probes the
@@ -144,10 +145,13 @@ object StreamingIngest {
     * of them are scanned — per-call cost ∝ candidate segments, not
     * corpus; a segment without a bloom, or more than [[MaxBloomProbes]]
     * conv_ids, is scanned. The scan is one (docId, conv_id, turn_idx)
-    * semi-join, read with [[KeySchema]], against the broadcast `keys`.
+    * semi-join, read with [[KeySchema]], against the broadcast `keys`,
+    * written by one [[graft.index.Tombstones.append]] sized to the docs
+    * it can match: at most `keyDocs` (a (conv_id, turn_idx) key names one
+    * doc; `Long.MaxValue` when unknown) and at most the candidates' docs.
     */
   private def tombstoneMatching(spark: SparkSession, indexDir: String, keys: DataFrame,
-      convIds: => Seq[String], skip: Option[String]): Long = {
+      keyDocs: Long, convIds: => Seq[String], skip: Option[String]): Long = {
     val skipName = skip.map(new org.apache.hadoop.fs.Path(_).getName)
     val segs = graft.index.SegmentCatalog.liveSegments(spark, indexDir)
       .filterNot(s => skipName.contains(new org.apache.hadoop.fs.Path(s).getName))
@@ -160,18 +164,17 @@ object StreamingIngest {
       }
     }
     if (candidates.isEmpty) return 0L
+    // from the docs cells (a segment a crash left without one adds
+    // nothing: the count only sizes the write)
+    val candidateDocs = candidates
+      .map(new IndexBuilder(spark, _, "").readManifest("docs").fold(0L)(_.postingsEmitted)).sum
     val doomed = candidates.map { s =>
       spark.read.schema(KeySchema).parquet(s"$s/docs")
     }.reduce(_ unionByName _)
       .join(broadcast(keys), keys.columns.toSeq, "left_semi")
       .select(col("docId"))
-      .cache()
-    // append only when something matched — an empty tombstone store must
-    // stay absent (readers then skip the anti-join)
-    val n = doomed.count()
-    if (n > 0) graft.index.Tombstones.append(spark, indexDir, doomed)
-    doomed.unpersist(blocking = false)
-    n
+    graft.index.Tombstones.append(spark, indexDir, doomed,
+      IndexBuilder.partsFor(math.min(keyDocs, candidateDocs), Int.MaxValue))
   }
 
   /** Max docId across live segments other than `skip` — from each

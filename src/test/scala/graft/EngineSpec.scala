@@ -23,7 +23,11 @@ class EngineSpec extends SparkSpec {
   private lazy val built: graft.index.BuildReport = {
     val turns = DocIds.dedup(Transcripts.generate(spark, nConvs))
     val docs = DocIds.assign(turns, 8)
-    new IndexBuilder(spark, indexDir, "snap-test-1", cfg).build(docs)
+    // the fixture is below one partition's docs: the seam keeps the block
+    // phase at cfg.partitions (2 docId slices per bucket)
+    new IndexBuilder(spark, indexDir, "snap-test-1", cfg) {
+      override protected def docsPerPart: Long = 1L
+    }.build(docs)
   }
   private lazy val searcher = { built; new Searcher(spark, indexDir, cfg.numShards) }
   private lazy val docsDF = { built; spark.read.parquet(s"$indexDir/docs") }
@@ -51,6 +55,23 @@ class EngineSpec extends SparkSpec {
     val ids = docsDF.select("docId", "conv_id", "turn_idx")
       .orderBy("conv_id", "turn_idx").as[(Long, String, Int)].collect()
     assert(ids.map(_._1).toSeq == ids.indices.map(_.toLong).toSeq)
+    // across range partitions: a corpus of several partitions' docs is
+    // numbered in ≥ 2 partitions, each one contiguous run of docIds,
+    // following each other in partition order
+    val many = DocIds.assign(DocIds.dedup(Transcripts.generate(spark, 1000L)), 8)
+    val runs = many.rdd.mapPartitionsWithIndex { (i, it) =>
+      val d = it.map(_.docId).toArray
+      Iterator((i, d.headOption.getOrElse(-1L), d.lastOption.getOrElse(-1L), d.length,
+        d.indices.forall(j => d(j) == d.head + j)))
+    }.collect().sortBy(_._1)
+    assert(runs.length >= 2)
+    assert(runs.forall(r => r._4 > 0 && r._5), runs.toSeq)
+    assert(runs.head._2 == 0L)
+    runs.sliding(2).foreach { case Array(a, b) => assert(b._2 == a._3 + 1, runs.toSeq) }
+    val manyIds = many.toDF().select("docId", "conv_id", "turn_idx")
+      .orderBy("conv_id", "turn_idx").as[(Long, String, Int)].collect()
+    assert(manyIds.map(_._1).toSeq == manyIds.indices.map(_.toLong).toSeq)
+    many.unpersist(blocking = true)
   }
 
   test("per-turn text equality under stable (conv_id, turn_idx) ordering") {
@@ -598,7 +619,8 @@ class EngineSpec extends SparkSpec {
 
   test("fused build resumes as a unit and dedupAndAssign ≡ dedup∘assign") {
     val dir3 = s"${TestSpark.tmpRoot}/index-fused"
-    val dirty = Transcripts.generateDirty(spark, 150L)
+    // several partitions' docs, so LWW runs across range partitions
+    val dirty = Transcripts.generateDirty(spark, 1000L)
     val persisted = spark.sparkContext.getPersistentRDDs.size
     val fused = DocIds.dedupAndAssign(dirty, 4)
     val composed = DocIds.assign(DocIds.dedup(dirty), 4)
@@ -620,6 +642,8 @@ class EngineSpec extends SparkSpec {
     val b = new IndexBuilder(spark, dir3, "snap-f", cfg.copy(numBuckets = 2))
     val r1 = b.build(fused)
     assert(r1.cellsBuilt.count(_.startsWith("bucket=")) == 2)
+    assert(cellKey(dir3, "docs", "parts").toInt >= 2)
+    assert(parquetFiles(s"$dir3/docs") == cellKey(dir3, "docs", "parts").toInt)
     val r2 = new IndexBuilder(spark, dir3, "snap-f", cfg.copy(numBuckets = 2)).build(fused)
     assert(r2.cellsBuilt.isEmpty)
     // unpersisting the typed view frees the numbered frame it wraps
@@ -656,6 +680,10 @@ class EngineSpec extends SparkSpec {
     assert(buckets.forall(m => m.status == "done" && m.sourceSnapshotId == "snap-test-1"))
     assert(buckets.map(_.postingsEmitted).sum > 0)
     assert(buckets.map(_.bytesCompressed).sum > 0)
+    // the recorded partition counts: the docs cell's data files, and the
+    // block phase's docId slices per bucket
+    assert(cellKey(indexDir, "docs", "parts").toInt == parquetFiles(s"$indexDir/docs"))
+    for (b <- 0 until cfg.numBuckets) assert(cellKey(indexDir, s"bucket-$b", "parts") == "2")
     // contiguous, non-overlapping docId ranges covering [0, N)
     val sorted = buckets.sortBy(_.docIdLo)
     assert(sorted.head.docIdLo == 0)

@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 
 import graft.analysis.Analyzer
 import graft.corpus.Transcripts
-import graft.index.{Compaction, DocIds, IndexBuilder, IndexConfig}
-import graft.model.Scored
+import graft.index.{Compaction, DocIds, IndexBuilder, IndexConfig, Tombstones}
+import graft.model.{Scored, Turn}
 import graft.query.{BoolQuerySpec, MultiSearcher, Oracle, Searcher}
 import graft.streaming.StreamingIngest
 
@@ -164,5 +164,79 @@ class SegmentLayoutSpec extends SparkSpec {
       Seq("bucket-0.props", "bucket-1.props", "bucket-2.props", "bucket-3.props", "dict0.props",
         "docs.props"))
     turns.unpersist()
+  }
+
+  test("a micro-batch is one partition: 1 docs file, ≤ numShards block files, 1 file per tombstone append") {
+    val scfg = IndexConfig(numBuckets = 1, numShards = 8, partitions = 4, fieldCols = Seq("role"))
+    val turns = Transcripts.generate(spark, 200L).cache()
+    val idx = s"${TestSpark.tmpRoot}/layout-microbatch"
+    StreamingIngest.appendSegment(spark, turns, idx, 0L, scfg)
+    val seg0 = s"$idx/seg-0"
+    assert(parquetFiles(s"$seg0/docs") == 1)
+    assert(cellKey(seg0, "docs", "parts") == "1")
+    assert(parquetFiles(s"$seg0/blocks") <= scfg.numShards)
+    assert(cellKey(seg0, "bucket-0", "parts") == "1")
+    // every 10th conversation's first turn, re-ingested: keys spread over
+    // the whole docId range of seg-0
+    val every10th = turns.filter(substring($"conv_id", 13, 1) === "0" && $"turn_idx" === 0)
+    val upserts = every10th.withColumn("text", lit("rewritten zanzibar turn")).as[Turn]
+    StreamingIngest.appendSegment(spark, upserts, idx, 1L, scfg)
+    assert(Tombstones.listDataFiles(spark, idx).size == 1)
+    val deletes = turns.filter(substring($"conv_id", 13, 1) === "5" && $"turn_idx" === 1)
+      .select($"conv_id", $"turn_idx").as[(String, Int)].collect().toSeq
+    // conv-00000010/0 matches its live copy in seg-1 and, again, its
+    // superseded one in seg-0
+    assert(StreamingIngest.deleteTurns(spark, idx, deletes :+ ("conv-00000010" -> 0)) ==
+      deletes.size + 2)
+    assert(Tombstones.listDataFiles(spark, idx).size == 2)
+    val m = new MultiSearcher(spark, idx)
+    assert(m.n == turns.count() - deletes.size - 1)
+    for (q <- Seq("rewritten zanzibar", "the zanzibar", "one have t999"))
+      assert(m.search(q, 10).toSeq == hits(Oracle.topK(m.docs, q, 10)), q)
+    // a build above the floor keeps cfg.partitions: docs files and slices
+    val big = s"${TestSpark.tmpRoot}/layout-above-floor"
+    val bcfg = scfg.copy(partitions = 2)
+    val docs = DocIds.assign(DocIds.dedup(Transcripts.generate(spark, 1000L)), bcfg.partitions)
+    assert(docs.count() > bcfg.partitions * IndexBuilder.DocsPerPart)
+    new IndexBuilder(spark, big, "snap-above", bcfg).build(docs)
+    assert(parquetFiles(s"$big/docs") == bcfg.partitions)
+    assert(cellKey(big, "docs", "parts") == bcfg.partitions.toString)
+    assert(cellKey(big, "bucket-0", "parts") == bcfg.partitions.toString)
+    docs.unpersist(blocking = false)
+    turns.unpersist()
+  }
+
+  test("a hot term is cut into docId slices, one per partition of its bucket") {
+    // 3,000 three-token docs: "omni" is in all of them, so its df reaches
+    // the hot threshold; the seam lifts the block phase to cfg.partitions
+    val hcfg = IndexConfig(numBuckets = 1, numShards = 2, blockSize = 16, partitions = 4)
+    val ts = new java.sql.Timestamp(0L)
+    val docs = DocIds.assign((0 until 3000).map(i =>
+      Turn(f"conv-$i%08d", 0, "user", s"omni w${i % 50} v${i % 7}", None, ts)).toDS(), 4)
+    val dir = s"${TestSpark.tmpRoot}/layout-hot-slices"
+    new IndexBuilder(spark, dir, "snap-hot", hcfg) {
+      override protected def docsPerPart: Long = 1L
+    }.build(docs)
+    assert(cellKey(dir, "bucket-0", "parts") == "4")
+    val termId = spark.read.parquet(s"$dir/dict").filter($"term" === "omni")
+      .select("termId").as[Long].head()
+    def slices(id: Long): Array[(Long, Long)] =
+      spark.read.parquet(s"$dir/blocks").filter($"termId" === id)
+        .groupBy(col("_metadata.file_path"))
+        .agg(min($"firstDocId"), max($"lastDocId")).select("min(firstDocId)", "max(lastDocId)")
+        .as[(Long, Long)].collect().sortBy(_._1)
+    // the hot term: one docId slice per partition, disjoint and in order
+    val hot = slices(termId)
+    assert(hot.length == 4, hot.toSeq)
+    hot.sliding(2).foreach { case Array(a, b) => assert(a._2 < b._1, hot.toSeq) }
+    // a cold term stays whole in one partition
+    val cold = spark.read.parquet(s"$dir/dict").filter($"term" === "w7").select("termId").as[Long].head()
+    assert(slices(cold).length == 1)
+    val s = new Searcher(spark, dir, hcfg.numShards)
+    val all = spark.read.parquet(s"$dir/docs")
+    for (q <- Seq("omni", "omni w7", "v3 omni w12"))
+      assert(s.search(q, 10).toSeq == hits(Oracle.topK(all, q, 10)), q)
+    assert(s.searchPhrase("omni w7", 10).toSeq == hits(Oracle.topKPhrase(all, "omni w7", 10)))
+    docs.unpersist(blocking = false)
   }
 }

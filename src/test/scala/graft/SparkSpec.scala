@@ -33,6 +33,28 @@ object TestSpark {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
 
+  /** Key `key` of manifest cell `cell` (a file name stem: `docs`,
+    * `bucket-0`) of the segment at `dir`.
+    */
+  protected def cellKey(dir: String, cell: String, key: String): String = {
+    val p = new org.apache.hadoop.fs.Path(dir, s"manifest/$cell.props")
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val in = fs.open(p)
+    try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
+      .collectFirst { case l if l.startsWith(key + "=") => l.substring(key.length + 1) }
+      .getOrElse(fail(s"$p has no '$key'"))
+    finally in.close()
+  }
+
+  /** The parquet data files under `dir`, recursively. */
+  protected def parquetFiles(dir: String): Int = {
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val it = fs.listFiles(new org.apache.hadoop.fs.Path(dir), true)
+    var n = 0
+    while (it.hasNext) if (it.next().getPath.getName.endsWith(".parquet")) n += 1
+    n
+  }
+
   /** Stamps `dir` with `formatVersion=<version>` as an older writer did,
     * or removes the flag when `version` is None (a pre-flag writer).
     */

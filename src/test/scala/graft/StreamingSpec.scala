@@ -1006,6 +1006,28 @@ class StreamingSpec extends SparkSpec {
     } finally sc.removeSparkListener(listener)
   }
 
+  /** Spark actions `body` runs: root SQL executions of a job group. */
+  private def actionsOf(group: String)(body: => Unit): Int = {
+    val actions = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+            if s.jobGroupId.contains(group) && s.rootExecutionId.forall(_ == s.executionId) =>
+          actions.incrementAndGet()
+        case _ =>
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      try body
+      finally sc.clearJobGroup()
+      org.apache.spark.sql.GraftSqlBridge.waitListenerBus(sc)
+      actions.get()
+    } finally sc.removeSparkListener(listener)
+  }
+
   /** `segments` appended batches of 8 conversations each (conv 0 re-ingested
     * by every later batch), then a delete of one conversation per batch.
     */
@@ -1180,5 +1202,64 @@ class StreamingSpec extends SparkSpec {
     ib.allManifests.filter(_.cell.startsWith("bucket=")).foreach(m => ib.writeManifest(m))
     stampFormat(seg, Some(2))
     assertRejectedEverywhere(idx, seg)
+  }
+
+  test("a key→tombstone step is one Spark action; a step matching nothing leaves the store as it was") {
+    import graft.index.Tombstones
+    val idx = s"${TestSpark.tmpRoot}/stream-idx-one-action"
+    val all = Transcripts.generate(spark, 20L)
+    StreamingIngest.appendSegment(spark, all, idx, 0L, IndexConfig(numBuckets = 1, partitions = 4))
+    val fs = new org.apache.hadoop.fs.Path(idx).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def entries = fs.listStatus(new org.apache.hadoop.fs.Path(idx)).map(_.getPath.getName).toSeq.sorted
+    var n = -1L
+    // conv-00000001 is in the segment's key bloom, so its doc store is
+    // scanned, but it has no turn 99: the absent store stays absent
+    assert(actionsOf("tomb-none") { n = StreamingIngest.deleteTurns(spark, idx,
+      Seq("conv-00000001" -> 99)) } == 1)
+    assert(n == 0 && entries == Seq("seg-0"))
+    // one write, which counts the rows it wrote
+    assert(actionsOf("tomb-two") { n = StreamingIngest.deleteTurns(spark, idx,
+      Seq("conv-00000001" -> 0, "conv-00000002" -> 1)) } == 1)
+    assert(n == 2 && entries == Seq("seg-0", "tombstones"))
+    val files = Tombstones.listDataFiles(spark, idx)
+    assert(files.size == 1)
+    // over a present store: no new file, not even an empty one
+    assert(actionsOf("tomb-none-again") { n = StreamingIngest.deleteTurns(spark, idx,
+      Seq("conv-00000001" -> 99)) } == 1)
+    assert(n == 0 && Tombstones.listDataFiles(spark, idx) == files)
+    assert(entries == Seq("seg-0", "tombstones"))
+    val m = new graft.query.MultiSearcher(spark, idx)
+    assert(m.n == all.count() - 2)
+    assert(m.search("the zanzibar", 10).toSeq ==
+      graft.query.Oracle.topK(m.docs, "the zanzibar", 10).as[graft.model.Scored].collect().toSeq)
+  }
+
+  test("a root file named seg-* is no segment: searchers, appends, deletes and compaction skip it") {
+    import graft.index.{Compaction, CompactionPolicy, SegmentCatalog}
+    val idx = s"${TestSpark.tmpRoot}/stream-idx-stray-file"
+    val cfg = IndexConfig(numBuckets = 1, partitions = 4)
+    val all = Transcripts.generate(spark, 30L)
+    StreamingIngest.appendSegment(spark, all.filter($"conv_id" < "conv-00000015"), idx, 0L, cfg)
+    val fs = new org.apache.hadoop.fs.Path(idx).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val stray = new org.apache.hadoop.fs.Path(idx, "seg-1-docs.props")
+    val out = fs.create(stray, true)
+    out.write("n=1\n".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    out.close()
+    StreamingIngest.appendSegment(spark, all.filter($"conv_id" >= "conv-00000015"), idx, 1L, cfg)
+    def live = SegmentCatalog.liveSegments(spark, idx).map(new org.apache.hadoop.fs.Path(_).getName)
+    assert(live == Seq("seg-0", "seg-1"))
+    assert(StreamingIngest.deleteTurns(spark, idx, Seq("conv-00000003" -> 0, "conv-00000020" -> 1)) == 2)
+    def assertOracle(): Unit = {
+      val m = new graft.query.MultiSearcher(spark, idx)
+      assert(m.docs.count() == all.count() - 2)
+      for (q <- Seq("the zanzibar", "one have t999", "zanzibar quasar lattice"))
+        assert(m.search(q, 10).toSeq ==
+          graft.query.Oracle.topK(m.docs, q, 10).as[graft.model.Scored].collect().toSeq, q)
+    }
+    assertOracle()
+    assert(Compaction.maybeCompact(spark, idx, CompactionPolicy(tombstoneRatio = 0.0)).isDefined)
+    assert(live == Seq("seg-compacted-0"))
+    assertOracle()
+    assert(fs.exists(stray))
   }
 }

@@ -5,11 +5,13 @@
 
 Prints one row per top-level entry under <dir> with the bytes of its
 regular files (the same count as perfbench's `bytesUnder`: parquet data,
-footers, .crc side files, _SUCCESS markers, manifests), then one row per
-parquet column of blocks/, dict/ and docs/ with its compressed
-bytes summed over every file and row group, and one `(rest)` row per
-parquet dir: its file bytes outside the column chunks (footers, magic,
-.crc files). With a second dir, prints both sides and the difference
+footers, .crc side files, _SUCCESS markers, manifests) and one with the
+number of those files, then one row per parquet column of blocks/, dict/
+and docs/ with its compressed bytes summed over every file and row group,
+one `(rest)` row per parquet dir: its file bytes outside the column chunks
+(footers, magic, .crc files), and one row per parquet dir with its number
+of parquet data files (a small write split into many partitions shows
+here: every partition writes its own files). With a second dir, prints both sides and the difference
 (dir2 - dir), marks rows that differ with `*`, and exits 1 when any row
 differs (0 otherwise), so "two builds of one seed write the same bytes"
 is one command.
@@ -22,16 +24,21 @@ import pyarrow.parquet as pq
 PARQUET_DIRS = ["blocks", "dict", "docs"]
 
 
-def file_bytes(path):
+def regular_files(path):
+    """The regular files at or under `path` (symlinks excluded)."""
     if os.path.isfile(path):
-        return os.path.getsize(path)
-    total = 0
+        return [path]
+    out = []
     for d, _, files in os.walk(path):
         for f in files:
             p = os.path.join(d, f)
             if os.path.isfile(p) and not os.path.islink(p):
-                total += os.path.getsize(p)
-    return total
+                out.append(p)
+    return out
+
+
+def file_bytes(path):
+    return sum(os.path.getsize(p) for p in regular_files(path))
 
 
 def column_bytes(path):
@@ -54,6 +61,7 @@ def rows(index_dir):
     out = {}
     for name in sorted(os.listdir(index_dir)):
         out["entry " + name] = file_bytes(os.path.join(index_dir, name))
+        out["files " + name] = len(regular_files(os.path.join(index_dir, name)))
     for cell in PARQUET_DIRS:
         path = os.path.join(index_dir, cell)
         if not os.path.isdir(path):
@@ -62,6 +70,7 @@ def rows(index_dir):
         for name in sorted(cols):
             out["column %s.%s" % (cell, name)] = cols[name]
         out["column %s.(rest)" % cell] = file_bytes(path) - sum(cols.values())
+        out["parquet files %s" % cell] = sum(p.endswith(".parquet") for p in regular_files(path))
     out["total"] = file_bytes(index_dir)
     return out
 
